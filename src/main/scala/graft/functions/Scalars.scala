@@ -2,6 +2,7 @@ package graft.functions
 
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 /** Scalar-function library: every §2.8 scalar the reference implements,
   * re-expressed as pure `Column` combinators (Catalyst-optimizable,
@@ -45,11 +46,21 @@ object Scalars {
     val byMonths = ts + make_interval(zero, n.cast("int"))
     val byYears  = ts + make_interval(zero, (n * 12).cast("int"))
     val integral = n === floor(n)
-    when(unit === "hours", bySeconds(3600L))
-      .when(unit === "days", bySeconds(86400L))
-      .when(unit === "weeks", bySeconds(604800L))
-      .when(unit === "months" && integral, byMonths)
-      .when(unit === "years" && integral, byYears)
+    // a literal unit picks its branch here: `lit(u) === u` would build
+    // (and warn about) a trivially true predicate
+    Bridge.stringLiteral(unit) match {
+      case Some("hours") => bySeconds(3600L)
+      case Some("days") => bySeconds(86400L)
+      case Some("weeks") => bySeconds(604800L)
+      case Some("months") => when(integral, byMonths)
+      case Some("years") => when(integral, byYears)
+      case _ =>
+        when(unit === "hours", bySeconds(3600L))
+          .when(unit === "days", bySeconds(86400L))
+          .when(unit === "weeks", bySeconds(604800L))
+          .when(unit === "months" && integral, byMonths)
+          .when(unit === "years" && integral, byYears)
+    }
   }
 
   /** F4 — filename-safe ISO format (ref utils.py:190-210):
@@ -150,6 +161,14 @@ object Scalars {
     */
   def blockMultihashMd5(content: Column): Column =
     concat(lit("d510"), md5(unhex(md5(content))))
+
+  /** [[blockMultihashMd5]] of bytes in hand (the sinks hash what they
+    * just wrote or read back).
+    */
+  def blockMultihashMd5(content: Array[Byte]): String = {
+    def md5(b: Array[Byte]) = java.security.MessageDigest.getInstance("MD5").digest(b)
+    "d510" + md5(md5(content)).map(b => f"${b & 0xff}%02x").mkString
+  }
 
   /** F15 — mime-type guess by extension (ref stac/utils.py:91-93, Python
     * `mimetypes.guess_type` table for the extensions the reference emits).

@@ -47,23 +47,13 @@ final case class VecStatsExpr(child: Expression) extends UnaryExpression {
 
   override def nullSafeEval(input: Any): Any = {
     val a = input.asInstanceOf[ArrayData]
-    val n = a.numElements()
-    var valid = 0
-    var mn = Double.NaN; var mx = Double.NaN
-    var s = 0.0; var s2 = 0.0
+    val f = new VecStatsExpr.LineFold
     var i = 0
-    while (i < n) {
-      if (!a.isNullAt(i)) {
-        val v = a.getDouble(i)
-        if (!java.lang.Double.isNaN(v)) {
-          if (valid == 0 || v < mn) mn = v
-          if (valid == 0 || v > mx) mx = v
-          s += v; s2 += v * v; valid += 1
-        }
-      }
+    while (i < a.numElements()) {
+      if (a.isNullAt(i)) f.skip() else f.add(a.getDouble(i))
       i += 1
     }
-    new GenericInternalRow(Array[Any](n, valid, mn, mx, s, s2))
+    new GenericInternalRow(Array[Any](f.n, f.valid, f.mn, f.mx, f.s, f.s2))
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
@@ -101,4 +91,46 @@ final case class VecStatsExpr(child: Expression) extends UnaryExpression {
 object VecStatsExpr {
   /** Column-level entry point. */
   def vecStats(a: Column): Column = Bridge.column(VecStatsExpr(Bridge.expression(a)))
+
+  /** One scanline's fold, left to right in double: the arithmetic
+    * `doGenCode` emits and `nullSafeEval` runs.
+    */
+  final class LineFold {
+    var n = 0; var valid = 0
+    var mn = Double.NaN; var mx = Double.NaN
+    var s = 0.0; var s2 = 0.0
+    def skip(): Unit = n += 1
+    def add(v: Double): Unit = {
+      n += 1
+      if (!java.lang.Double.isNaN(v)) {
+        if (valid == 0 || v < mn) mn = v
+        if (valid == 0 || v > mx) mx = v
+        s += v; s2 += v * v; valid += 1
+      }
+    }
+  }
+
+  /** A band's statistics from its scanlines, fed in y order: each
+    * scanline folds through [[LineFold]], and the partials combine the
+    * way `groupBy(...).agg(sum, min, max)` over `vec_stats` rows in that
+    * order does (sums start from 0.0; min/max range over scanlines with a
+    * valid value and keep the first of equals), so the doubles equal the
+    * aggregate's bit for bit. min/max stay NaN when nothing is valid.
+    */
+  final class BandFold {
+    var nTotal = 0L; var nValid = 0L
+    var min = Double.NaN; var max = Double.NaN
+    var sum = 0.0; var sumSq = 0.0
+    def add(values: Array[Double]): Unit = {
+      val f = new LineFold
+      var i = 0
+      while (i < values.length) { f.add(values(i)); i += 1 }
+      if (f.valid > 0) {
+        if (nValid == 0 || f.mn < min) min = f.mn
+        if (nValid == 0 || f.mx > max) max = f.mx
+      }
+      nTotal += f.n; nValid += f.valid
+      sum += f.s; sumSq += f.s2
+    }
+  }
 }

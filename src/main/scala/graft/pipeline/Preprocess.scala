@@ -1,9 +1,10 @@
 package graft.pipeline
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.Partitioner
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.functions.{Geo, Scalars}
+import graft.functions.{Geo, Scalars, VecStatsExpr}
 import graft.model.{StacCatalog, StacCollection, StacItem}
 import graft.ops.StacOps
 import graft.sink.{CogWriter, StacJsonSink}
@@ -21,19 +22,26 @@ import graft.source.{NetCdf, NetCdfSource}
   *   hemisphere + CRS + bands (P1/P2/P9)→ NetCdfSource.manifest
   *
   * The reference's per-slice loops become set-oriented grouping here:
-  * time-slice / leadtime-slice / band selection (P4/P5/P6) are the
-  * `groupBy(time_idx)` fan-out, the `leadtime_idx === 0` thumbnail
-  * filter, and the first-band election below — SURVEY §2.2's "no loop
-  * at all" mapping. Item↔catalog attachment (J7) is the
+  * time-slice / leadtime-slice / band selection (P4/P5/P6) are the output
+  * groups below (one per init, one per init × leadtime), the leadtime-0
+  * thumbnail and the first-band election — SURVEY §2.2's "no loop at
+  * all" mapping. Item↔catalog attachment (J7) is the
   * `collection`/`item_id` fk columns; the tree shape only materializes
   * in the JSON sink.
   *   bbox + geometry (A1/F11/F12)       → coord agg + Geo.projToGeo
   *   per-init item construction (F5/F6) → Scalars id/time functions
-  *   per-init netCDF slices (K1, P8)    → foreachPartition NetCdf.write
-  *   thumbnails for leadtime 0 (K3/W3)  → foreachPartition ImageIO JPEG
-  *   band statistics (A2)               → hash aggregate over tidy rows
-  *   asset rows + file info (E1/E2/E3/J6) → binaryFile manifest join
-  *   get-or-create vs existing (J1/J2)  → anti-join / extent merge
+  *   output manifest + skip (P8)        → collected targets, driver-side
+  *                                        existence check, catalog ids
+  *   netCDF slices (K1), COGs (K2),     → ONE shuffle of the tidy scan to
+  *   leadtime-0 thumbnails (K3/W3)        one task per slice / per COG
+  *                                        (the leadtime-0 COG task also
+  *                                        writes the thumbnail)
+  *   band statistics (A2)               → folded in y order inside the
+  *                                        COG task (VecStatsExpr.BandFold)
+  *   asset rows + file info (E1/E2/E3/J6) → size + multihash of the bytes
+  *                                        each task wrote or read back,
+  *                                        joined by href
+  *   get-or-create vs existing (J1/J2)  → new ids only / extent merge
   *   catalog tree (K4, F8)              → StacJsonSink
   */
 object Preprocess {
@@ -143,104 +151,71 @@ object Preprocess {
     val geometry =
       s"""{"type": "Polygon", "coordinates": [[[${geoBbox(2)}, ${geoBbox(1)}], [${geoBbox(2)}, ${geoBbox(3)}], [${geoBbox(0)}, ${geoBbox(3)}], [${geoBbox(0)}, ${geoBbox(1)}], [${geoBbox(2)}, ${geoBbox(1)}]]]}"""
 
-    // ---- per-(file, init) frame: reference time, id, leadtime count
+    // ---- per-(file, init, leadtime) frame, and per (file, init): the
+    // reference time, id and leadtime count
     val refTime = timestamp_millis(
       (col("time") * tScale).cast("long") + lit(tBase.toEpochMilli))
-    val inits = tidy
+    val leads = tidy
+      .groupBy(col("path"), col("time_idx"), col("time"), col("leadtime_idx"))
+      .agg(first(col("xs")).as("xs"), collect_set(col("variable")).as("vars"))
+    val inits = leads
       .groupBy(col("path"), col("time_idx"), col("time"))
-      .agg(countDistinct(col("leadtime_idx")).as("nleadtime"))
+      .agg(count(lit(1)).as("nleadtime"))
       .withColumn("ref_time", refTime)
       .withColumn("item_id", Scalars.itemId(col("ref_time")))
       .withColumn("end_time", Scalars.calendarAdd(col("ref_time"), lit(unit),
         (col("nleadtime") - 1) * step))
       .withColumn("date_str", Scalars.fmtDate(col("ref_time")))
       .withColumn("ts_str", Scalars.formatTime(col("ref_time")))
+      .withColumn("nc", relPath("netcdf", opts.name, col("ts_str"), ".nc"))
+      .withColumn("jpg", relPath("cogs", opts.name, col("item_id"), ".jpg"))
       .persist()
 
-    // ---- A2: band statistics per (file, init, variable, leadtime).
-    // vec_stats folds each scanline to six scalars inside codegen, so the
-    // aggregation shuffles one small row per scanline instead of one row
-    // per grid cell (the explode form multiplies shuffle rows by the grid
-    // width — ~432× on a real EASE grid; same shape as q46). stddev is
-    // reassembled from (Σv, Σv², n) with numpy's ddof=0 and a 0-clamp.
-    val st = graft.functions.VecStatsExpr.vecStats(col("values"))
-    val statPartials = tidy
-      .select(col("path"), col("time_idx"), col("variable"),
-        col("leadtime_idx"), col("leadtime"), st.as("st"))
-      .groupBy(col("path"), col("time_idx"), col("variable"), col("leadtime_idx"),
-        col("leadtime"))
-      .agg(
-        // all-NaN scanlines carry vmin/vmax = NaN; guard to null so
-        // min()/max() skip them (Spark orders NaN above every double)
-        min(when(col("st.n_valid") > 0, col("st.vmin"))).as("stat_min"),
-        max(when(col("st.n_valid") > 0, col("st.vmax"))).as("stat_max"),
-        sum(col("st.vsum")).as("sv"), sum(col("st.vsumsq")).as("sv2"),
-        sum(col("st.n_valid")).as("nv"), sum(col("st.n_total")).as("nt"))
-    val statMean = col("sv") / col("nv")
-    val stats = statPartials.select(
-      col("path"), col("time_idx"), col("variable"), col("leadtime_idx"),
-      col("leadtime"), col("stat_min"), col("stat_max"),
-      statMean.as("stat_mean"),
-      // nv=0 (fully masked slice): sv2/nv is NULL and greatest() would skip
-      // it, silently turning stddev into 0.0 next to NULL min/max/mean.
-      // Guard to NULL — the reference's nanstd yields NaN there, and None
-      // is what survives its JSON encoding (utils.py:247). valid_percent
-      // stays 0*100/nt = 0.0, matching utils.py:248 exactly.
-      when(col("nv") > 0,
-        sqrt(greatest(col("sv2") / col("nv") - statMean * statMean, lit(0.0))))
-        .as("stat_stddev"),
-      Scalars.floor2dp(col("nv") * 100.0 / col("nt")).as("valid_percent"))
+    // ---- the output manifest, collected: one row per (file, init,
+    // leadtime)
+    val targets = leads.drop("time").join(inits, Seq("path", "time_idx"))
+      .select(col("path"), col("time_idx"), col("time"), col("leadtime_idx"),
+        col("item_id"), col("xs"), col("vars"), col("nc"), col("jpg"),
+        relPath("cogs", opts.name, cogId(step, unit), ".tif").as("tif"))
+      .as[Target].collect().toSeq
 
-    // ---- K1/K2/K3 sinks (P8 existence-skip inside each): the three
-    // file fan-outs are independent — they read only the cached tidy
-    // scan and the tiny inits table — so they run as CONCURRENT Spark
-    // jobs from separate threads. Sequentially each sink's many small
-    // write jobs leave the cluster under-utilized between stages; the
-    // overlap shortens the pipeline's critical path to the slowest
-    // sink (the reference writes slice → thumbnail → COGs
-    // sequentially per leadtime, generator.py:906-921). E3 enrichment
-    // below reads the written files and stays strictly after the join.
-    val nSlices =
-      if (opts.stacOnly) 0L
-      else {
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.ExecutionContext.Implicits.global
-        import scala.concurrent.duration.Duration
-        val fSlices = Future(writeSlices(spark, tidy, inits, opts))
-        val fThumbs = Future(writeThumbnails(spark, tidy, inits, opts))
-        val fCogs = Future(
-          writeCogs(spark, tidy, inits, stats, step, unit, crs, opts))
-        Await.result(fThumbs, Duration.Inf)
-        Await.result(fCogs, Duration.Inf)
-        Await.result(fSlices, Duration.Inf)
-      }
+    // ---- J2 at the ID level: only inits whose item is not catalogued
+    // yet need their assets' statistics and file info
+    val catalogRoot = s"${opts.dataPath}/stac/${opts.catalogName}"
+    val catalogExists = Files.exists(Paths.get(catalogRoot, "catalog.json"))
+    val existing =
+      if (catalogExists) StacJsonSink.readItems(spark, catalogRoot)
+      else spark.emptyDataset[StacItem]
+    val known =
+      if (!catalogExists) Set.empty[String]
+      else existing.filter(col("collection") === lit(opts.name))
+        .select(col("id")).as[String].collect().toSet
+    val newIds = targets.map(_.item_id).toSet -- known
+
+    // ---- K1/K2/K3 + A2 + E3: one pass over the output groups
+    // K3: the thumbnail shows the first band (name order) of all inputs
+    val firstBand = targets.flatMap(_.vars).minOption.getOrElse("")
+    val groups = planGroups(targets, newIds, firstBand, opts)
+    val reports = if (groups.isEmpty) Array.empty[GroupResult]
+      else writeGroups(spark, tidy, groups, firstBand, crs, opts)
+    val nSlices = reports.count(r => r.lead < 0 && r.wrote).toLong
 
     // ---- item assembly + J2 get-or-create vs the existing catalog
-    val catalogRoot = s"${opts.dataPath}/stac/${opts.catalogName}"
-    val existing =
-      if (Files.exists(Paths.get(catalogRoot, "catalog.json")))
-        StacJsonSink.readItems(spark, catalogRoot)
-      else spark.emptyDataset[StacItem]
-    // J2 hoisted to the ID level (r21): an item's identity is
-    // (collection, item_id) and item_id is decided by `inits` alone, so
-    // only inits whose id is NOT already in the catalog pay E1/E2/E3 —
-    // asset construction and the binaryFile size+multihash enrichment
-    // scan. On the fully idempotent re-run path (every id present) the
-    // assembly is skipped outright; getOrCreateItems(existing, items) ∪
-    // existing reduces to exactly `existing` there, so the result is
-    // unchanged — this only moves the anti-join before the expensive
-    // stages instead of after them.
-    val newInits = inits.join(
-      existing.filter(col("collection") === lit(opts.name))
-        .select(col("id").as("item_id")),
-      Seq("item_id"), "left_anti").persist()
     val toWrite =
-      if (newInits.isEmpty) existing
+      if (newIds.isEmpty) existing
       else {
+        val newInits = inits.filter(col("item_id").isin(newIds.toSeq: _*))
+        val stats = reports.toSeq.flatMap(r => r.bands.map(b =>
+          (r.path, r.timeIdx, r.lead, b.variable, b.min, b.max, b.mean,
+            b.stddev, b.validPercent)))
+          .toDF("path", "time_idx", "leadtime_idx", "variable", "stat_min",
+            "stat_max", "stat_mean", "stat_stddev", "valid_percent")
+        val files = reports.toSeq.flatMap(_.files)
+          .toDF("href", "fsize", "fchecksum")
         // ---- E1/E2: asset rows (netcdf + per-leadtime cog + thumbnail)
         val assets = assetRows(newInits, stats, step, unit, opts)
-        // ---- E3/J6: size + blockwise multihash of written files
-        val enriched = enrichFileInfo(spark, assets, opts)
+        // ---- E3/J6: size + blockwise multihash of the files on disk
+        val enriched = enrichFileInfo(assets, files)
         val items = buildItems(spark, newInits, enriched, geoBbox,
           geometry, hemisphere, opts)
         // unionByName, never positional union: the two sides originate
@@ -248,9 +223,8 @@ object Preprocess {
         // orders are not guaranteed to agree.
         // persisted: THREE actions consume this relation (the thumbnail
         // promotion's ordered head, the item count, and the catalog
-        // write) and each would otherwise replay the full item assembly
-        // including the enrichment joins (measured ~0.75 s per replay
-        // at the harness fixture). Unpersisted with the other caches.
+        // write) and each would otherwise replay the item assembly.
+        // Unpersisted with the other caches.
         StacOps.getOrCreateItems(existing, items)
           .unionByName(existing)
           .persist()
@@ -282,7 +256,7 @@ object Preprocess {
       extra = if (hemisphere.nonEmpty) Map("custom:hemisphere" -> hemisphere)
               else Map.empty)
     val collections =
-      if (Files.exists(Paths.get(catalogRoot, "catalog.json")))
+      if (catalogExists)
         StacOps.mergeCollections(
           StacJsonSink.readCollections(spark, catalogRoot),
           Seq(incomingColl).toDS()).collect().toSeq
@@ -294,255 +268,288 @@ object Preprocess {
         collections.map(_.id)),
       collections, toWrite)
     man.unpersist(); tidy.unpersist(); inits.unpersist()
-    newInits.unpersist()
     toWrite.unpersist() // no-op on the fast path (toWrite eq existing)
     Result(catalogRoot, nItems, nSlices)
   }
 
-  /** Streaming group-by over a partition SORTED by the string key at
-    * `keyIdx`: yields one (key, rows) group at a time, holding exactly
-    * ONE group's rows in memory. The file sinks hash-repartition on
-    * `out_path`, and several output files can land in one partition —
-    * buffering the whole partition (`part.toSeq.groupBy`) made task
-    * memory "all slices that hashed here" instead of the documented
-    * one-slice contract. Sorting within the partition first makes each
-    * group contiguous, so this iterator restores the bound without a
-    * second shuffle.
+  /** Output file path relative to the data dir, under
+    * `<kind>/<collection>/<date>/`; the asset href is `./` + this path.
     */
-  private[graft] def groupedBySortedKey(
-      part: Iterator[org.apache.spark.sql.Row], keyIdx: Int)
-      : Iterator[(String, Seq[org.apache.spark.sql.Row])] =
-    new Iterator[(String, Seq[org.apache.spark.sql.Row])] {
-      private val it = part.buffered
-      def hasNext: Boolean = it.hasNext
-      def next(): (String, Seq[org.apache.spark.sql.Row]) = {
-        val key = it.head.getString(keyIdx)
-        val buf = scala.collection.mutable.ArrayBuffer
-          .empty[org.apache.spark.sql.Row]
-        while (it.hasNext && it.head.getString(keyIdx) == key) buf += it.next()
-        (key, buf.toSeq)
-      }
-    }
+  private def relPath(kind: String, collection: String, file: Column,
+                      ext: String) =
+    concat(lit(s"$kind/$collection/"), col("date_str"), lit("/"), file, lit(ext))
 
-  /** K1: one .nc per (file, init) holding every band's slice, written
-    * inside the tasks; existence-skip unless overwrite (P8, ref
-    * generator.py:906-909 analogue for netCDF).
-    */
-  /** P8 fast path (r21): drop targets whose output file already exists
-    * BEFORE the data join — on the idempotent re-run path every sink
-    * previously shuffled and sorted the FULL tidy relation by out_path
-    * only for each group to discover its file and skip (measured: the
-    * three sinks were ~1.4 s of q47's warm iteration doing exactly
-    * that). The existence probe runs distributed over the tiny target
-    * manifest (the sinks already assume a task-visible shared
-    * filesystem — they write to it); the per-group check downstream
-    * remains the authoritative skip. Nondeterministic so the optimizer
-    * cannot duplicate or reorder the filesystem probe.
-    */
-  private def pendingTargets(target: DataFrame, overwrite: Boolean): DataFrame =
-    if (overwrite) target
-    else {
-      val missing = org.apache.spark.sql.functions.udf(
-        (p: String) => !Files.exists(Paths.get(p))).asNondeterministic()
-      target.filter(missing(col("out_path")))
-    }
+  private def validTime(step: Double, unit: String) =
+    Scalars.calendarAdd(col("ref_time"), lit(unit), col("leadtime_idx") * step)
 
-  private def writeSlices(spark: SparkSession, tidy: DataFrame,
-                          inits: DataFrame, opts: Options): Long = {
-    import spark.implicits._
-    val target = inits.select(col("path"), col("time_idx"),
-      concat(lit(s"${opts.dataPath}/netcdf/${opts.name}/"), col("date_str"),
-        lit("/"), col("ts_str"), lit(".nc")).as("out_path"))
-    val rows = tidy
-      .join(pendingTargets(target, opts.overwrite), Seq("path", "time_idx"))
-      .select(col("out_path"), col("variable"), col("time"),
-        col("leadtime_idx"), col("leadtime"), col("y_idx"), col("y"),
-        col("xs"), col("values"))
-    val overwrite = opts.overwrite
-    val ncFormat = opts.ncFormat
-    val written = rows
-      .repartition(col("out_path"))
-      .sortWithinPartitions(col("out_path"))
-      .mapPartitions { part =>
-        groupedBySortedKey(part, 0).map { case (outPath, rs) =>
-          val p = Paths.get(outPath)
-          if (Files.exists(p) && !overwrite) 0L
-          else {
-            Files.createDirectories(p.getParent)
-            val xs = rs.head.getSeq[Double](7).toArray
-            val ys = rs.map(r => r.getInt(5) -> r.getDouble(6)).distinct
-              .sortBy(_._1).map(_._2).toArray
-            val ls = rs.map(r => r.getInt(3) -> r.getDouble(4)).distinct
-              .sortBy(_._1).map(_._2).toArray
-            val t = rs.head.getDouble(2)
-            val vars = rs.groupBy(_.getString(1)).toSeq.sortBy(_._1).map {
-              case (vname, vrows) =>
-                val grid = new Array[Double](ys.length * xs.length * ls.length)
-                vrows.foreach { r =>
-                  val (l, y) = (r.getInt(3), r.getInt(5))
-                  val vals = r.getSeq[Double](8)
-                  var x = 0
-                  while (x < xs.length) {
-                    grid((y * xs.length + x) * ls.length + l) = vals(x)
-                    x += 1
-                  }
-                }
-                NetCdf.VarSpec(vname, Seq("time", "yc", "xc", "leadtime"),
-                  Seq(), grid)
-            }
-            val coordVars = Seq(
-              NetCdf.VarSpec("time", Seq("time"), Seq(), Array(t)),
-              NetCdf.VarSpec("yc", Seq("yc"), Seq("units" -> "m"), ys),
-              NetCdf.VarSpec("xc", Seq("xc"), Seq("units" -> "m"), xs),
-              NetCdf.VarSpec("leadtime", Seq("leadtime"), Seq(), ls))
-            val dims = Seq("time" -> 1, "yc" -> ys.length, "xc" -> xs.length,
-              "leadtime" -> ls.length)
-            // K1 parity: the reference writes netCDF-4 with zlib level 9
-            // (generator.py:969-977); classic CDF-1 stays available for
-            // consumers without HDF5 readers
-            Files.write(p,
-              if (ncFormat == "netcdf4")
-                graft.source.Hdf5Write.write(dims, Seq(), coordVars ++ vars)
-              else NetCdf.write(dims, Seq(), coordVars ++ vars))
-            1L
-          }
-        }
-      }
-    // sum via agg, not reduce: the pending pre-filter legitimately
-    // leaves ZERO rows on the fully-idempotent path, and RDD reduce
-    // throws on an empty collection
-    written.toDF("n")
-      .agg(coalesce(sum(col("n")), lit(0L)).cast("long")).head.getLong(0)
+  private def cogId(step: Double, unit: String) =
+    Scalars.cogItemId(col("item_id"), validTime(step, unit))
+
+  /** One (file, init, leadtime) row of the output manifest. */
+  private[pipeline] final case class Target(
+      path: String, time_idx: Int, time: Double, leadtime_idx: Int,
+      item_id: String, xs: Seq[Double], vars: Seq[String], nc: String,
+      jpg: String, tif: String)
+
+  /** One output group = one write task: an init's netCDF slice
+    * (`lead` -1) or one (init, leadtime) COG, whose leadtime-0 group
+    * also writes the thumbnail. `withData`: the group's scanlines are
+    * shuffled to it; a group without them only reads its file back.
+    */
+  private[pipeline] final case class OutGroup(
+      path: String, timeIdx: Int, lead: Int, time: Double, xs: Array[Double],
+      file: String, thumb: Option[String], withData: Boolean)
+
+  /** One tidy row as shipped to its output groups. */
+  private[pipeline] final case class Scanline(
+      variable: String, lead: Int, leadtime: Double, yIdx: Int, y: Double,
+      values: Array[Double])
+
+  private[pipeline] final case class FileInfo(
+      href: String, size: Long, checksum: String)
+  private[pipeline] final case class BandStat(
+      variable: String, min: Option[Double], max: Option[Double],
+      mean: Option[Double], stddev: Option[Double], validPercent: Option[Double])
+  /** What a write task reports: whether it wrote its main output, the
+    * size and multihash of every output on disk, and (COG groups) the
+    * band statistics in variable order.
+    */
+  private[pipeline] final case class GroupResult(
+      path: String, timeIdx: Int, lead: Int, wrote: Boolean,
+      files: Seq[FileInfo], bands: Seq[BandStat])
+
+  /** Driver side of the pass: which output groups need a task. A group
+    * runs when its item is new (its statistics and file info are needed)
+    * or one of its outputs is missing (every group under overwrite). The
+    * existence checks run here, once, on the driver; a slice group that
+    * has nothing to write gets no scanlines.
+    */
+  private def planGroups(targets: Seq[Target], newIds: Set[String],
+                         firstBand: String, opts: Options): IndexedSeq[OutGroup] = {
+    def toWrite(rel: String) = !opts.stacOnly &&
+      (opts.overwrite || !Files.exists(Paths.get(s"${opts.dataPath}/$rel")))
+    targets.groupBy(t => (t.path, t.time_idx)).toSeq.sortBy(_._1).flatMap {
+      case ((path, timeIdx), rows) =>
+        val ls = rows.sortBy(_.leadtime_idx)
+        val isNew = newIds(ls.head.item_id)
+        val xs = ls.head.xs.toArray
+        val sliceData = toWrite(ls.head.nc)
+        val slice = OutGroup(path, timeIdx, -1, ls.head.time, xs, ls.head.nc,
+          None, sliceData)
+        val cogs = ls.map(t => OutGroup(path, timeIdx, t.leadtime_idx, t.time,
+          xs, t.tif, Option.when(t.leadtime_idx == 0 &&
+            t.vars.contains(firstBand))(t.jpg), withData = true))
+        Option.when(isNew || sliceData)(slice) ++
+          cogs.filter(g => isNew || (g.file +: g.thumb.toSeq).exists(toWrite))
+    }.toIndexedSeq
   }
 
-  /** K3/W3: leadtime-0 thumbnail per item — first band mapped through a
-    * blue→white→red diverging LUT (RdBu_r analogue) to JPEG via ImageIO.
+  /** Name of the RDD whose stage runs one task per output group. */
+  private[graft] val WriteStage = "preprocess outputs"
+
+  /** Output group i → partition i: one task per output file group, which
+    * neither a hash collision nor AQE partition coalescing can merge
+    * (AQE leaves RDD shuffles alone).
     */
-  private def writeThumbnails(spark: SparkSession, tidy: DataFrame,
-                              inits: DataFrame, opts: Options): Unit = {
-    val firstBand = tidy.select(col("variable")).distinct()
-      .orderBy(col("variable")).limit(1)
-    val target = inits.select(col("path"), col("time_idx"),
-      concat(lit(s"${opts.dataPath}/cogs/${opts.name}/"), col("date_str"),
-        lit("/"), col("item_id"), lit(".jpg")).as("out_path"))
-    val overwrite = opts.overwrite
-    tidy.filter(col("leadtime_idx") === 0)
-      .join(firstBand, Seq("variable"), "left_semi")
-      .join(pendingTargets(target, overwrite), Seq("path", "time_idx"))
-      .select(col("out_path"), col("y_idx"), col("values"))
-      .repartition(col("out_path"))
-      .sortWithinPartitions(col("out_path"))
-      .foreachPartition { part: Iterator[org.apache.spark.sql.Row] =>
-        groupedBySortedKey(part, 0).foreach { case (outPath, rs) =>
-          val p = Paths.get(outPath)
-          if (!Files.exists(p) || overwrite) {
-            Files.createDirectories(p.getParent)
-            val rows = rs.sortBy(_.getInt(1)).map(_.getSeq[Double](2).toArray)
-            Files.write(p, Thumbnail.jpeg(rows.toArray))
-          }
-        }
-      }
+  private final class GroupPartitioner(n: Int) extends Partitioner {
+    def numPartitions: Int = n
+    def getPartition(key: Any): Int = key.asInstanceOf[Int]
   }
 
-  /** K2/P8: one multiband COG per (file, init, leadtime), all bands with
+  /** The pass: ONE shuffle of the cached tidy relation sends each
+    * scanline to its init's slice group and its (init, leadtime) COG
+    * group; each task then writes its files and reports them.
+    */
+  private def writeGroups(spark: SparkSession, tidy: DataFrame,
+                          groups: IndexedSeq[OutGroup], thumbBand: String,
+                          crs: String, opts: Options): Array[GroupResult] = {
+    val route = groups.zipWithIndex.collect {
+      case (g, i) if g.withData => (g.path, g.timeIdx, g.lead) -> i
+    }.toMap
+    val bc = spark.sparkContext.broadcast(groups)
+    val epsg = "\\d+".r.findFirstIn(crs).map(_.toInt).getOrElse(0)
+    val results = tidy
+      .select(col("path"), col("time_idx"), col("leadtime_idx"),
+        col("variable"), col("leadtime"), col("y_idx"), col("y"),
+        col("values"))
+      .rdd.flatMap { r =>
+        val (path, t, l) = (r.getString(0), r.getInt(1), r.getInt(2))
+        val dests = route.get((path, t, -1)) ++ route.get((path, t, l))
+        if (dests.isEmpty) Nil
+        else {
+          val line = Scanline(r.getString(3), l, r.getDouble(4), r.getInt(5),
+            r.getDouble(6), r.getSeq[Double](7).toArray)
+          dests.map(_ -> line)
+        }
+      }
+      .partitionBy(new GroupPartitioner(groups.size))
+      .mapPartitionsWithIndex { (i, part) =>
+        Iterator(writeGroup(bc.value(i), part.map(_._2).toSeq, thumbBand,
+          epsg, opts))
+      }
+      .setName(WriteStage)
+      .collect()
+    bc.destroy()
+    results
+  }
+
+  /** Writes `rel` under the data dir unless it exists (rewrites under
+    * overwrite; never writes under stacOnly or without data), then sizes
+    * and hashes the bytes written or read back (E3/F14).
+    */
+  private def emit(rel: String, withData: Boolean, opts: Options)(
+      render: => Array[Byte]): (Boolean, Option[FileInfo]) = {
+    val p = Paths.get(s"${opts.dataPath}/$rel")
+    val write = withData && !opts.stacOnly && (opts.overwrite || !Files.exists(p))
+    val bytes =
+      if (write) {
+        Files.createDirectories(p.getParent)
+        val b = render
+        Files.write(p, b)
+        Some(b)
+      } else if (Files.exists(p)) Some(Files.readAllBytes(p))
+      else None
+    (write, bytes.map(b =>
+      FileInfo(s"./$rel", b.length.toLong, Scalars.blockMultihashMd5(b))))
+  }
+
+  private def writeGroup(g: OutGroup, lines: Seq[Scanline], thumbBand: String,
+                         epsg: Int, opts: Options): GroupResult =
+    if (g.lead < 0) {
+      val (wrote, info) = emit(g.file, g.withData, opts)(
+        sliceBytes(g, lines, opts.ncFormat))
+      GroupResult(g.path, g.timeIdx, g.lead, wrote, info.toSeq, Nil)
+    } else {
+      // A2: each band's scanlines in y order through the vec_stats fold
+      val bands = lines.groupBy(_.variable).toSeq.sortBy(_._1).map {
+        case (v, ls) => v -> ls.sortBy(_.yIdx)
+      }
+      val stats = bands.map { case (v, ls) =>
+        val f = new VecStatsExpr.BandFold
+        ls.foreach(l => f.add(l.values))
+        bandStat(v, f)
+      }
+      val (wrote, tif) = emit(g.file, g.withData, opts)(
+        cogBytes(g, bands, stats, epsg, opts))
+      // K3/W3: leadtime-0 thumbnail of the first band
+      val jpg = g.thumb.flatMap { rel =>
+        emit(rel, g.withData, opts)(Thumbnail.jpeg(
+          bands.collectFirst { case (v, ls) if v == thumbBand =>
+            ls.map(_.values).toArray }.get))._2
+      }
+      GroupResult(g.path, g.timeIdx, g.lead, wrote, (tif ++ jpg).toSeq, stats)
+    }
+
+  /** A2 finish: min/max/mean over valid cells, numpy's ddof=0 stddev from
+    * (Σv, Σv², n) with a 0-clamp, and the valid share floored to 2
+    * decimals (ref utils.py:213-259). A fully masked band has null
+    * min/max/mean/stddev — the reference's nanstd yields NaN there, and
+    * None is what survives its JSON encoding (utils.py:247); its
+    * valid_percent stays 0.0 (utils.py:248).
+    */
+  private def bandStat(v: String, f: VecStatsExpr.BandFold): BandStat = {
+    val valid = f.nValid > 0
+    val mean = f.sum / f.nValid
+    val variance = f.sumSq / f.nValid - mean * mean
+    BandStat(v, Option.when(valid)(f.min), Option.when(valid)(f.max),
+      Option.when(valid)(mean),
+      // greatest(variance, 0.0): NaN and -0.0 pass through unchanged
+      Option.when(valid)(math.sqrt(
+        if (variance.isNaN || variance >= 0.0) variance else 0.0)),
+      Option.when(f.nTotal > 0)(
+        math.floor(f.nValid * 100.0 / f.nTotal * 100).toLong / 100.0))
+  }
+
+  /** K1: one .nc per (file, init) holding every band's slice (P8 skip in
+    * [[emit]]; ref generator.py:906-909 analogue for netCDF).
+    */
+  private def sliceBytes(g: OutGroup, lines: Seq[Scanline],
+                         ncFormat: String): Array[Byte] = {
+    val xs = g.xs
+    val ys = lines.map(l => l.yIdx -> l.y).distinct.sortBy(_._1).map(_._2).toArray
+    val ls = lines.map(l => l.lead -> l.leadtime).distinct.sortBy(_._1)
+      .map(_._2).toArray
+    val vars = lines.groupBy(_.variable).toSeq.sortBy(_._1).map {
+      case (vname, vlines) =>
+        val grid = new Array[Double](ys.length * xs.length * ls.length)
+        vlines.foreach { r =>
+          var x = 0
+          while (x < xs.length) {
+            grid((r.yIdx * xs.length + x) * ls.length + r.lead) = r.values(x)
+            x += 1
+          }
+        }
+        NetCdf.VarSpec(vname, Seq("time", "yc", "xc", "leadtime"), Seq(), grid)
+    }
+    val coordVars = Seq(
+      NetCdf.VarSpec("time", Seq("time"), Seq(), Array(g.time)),
+      NetCdf.VarSpec("yc", Seq("yc"), Seq("units" -> "m"), ys),
+      NetCdf.VarSpec("xc", Seq("xc"), Seq("units" -> "m"), xs),
+      NetCdf.VarSpec("leadtime", Seq("leadtime"), Seq(), ls))
+    val dims = Seq("time" -> 1, "yc" -> ys.length, "xc" -> xs.length,
+      "leadtime" -> ls.length)
+    // K1 parity: the reference writes netCDF-4 with zlib level 9
+    // (generator.py:969-977); classic CDF-1 stays available for
+    // consumers without HDF5 readers
+    if (ncFormat == "netcdf4")
+      graft.source.Hdf5Write.write(dims, Seq(), coordVars ++ vars)
+    else NetCdf.write(dims, Seq(), coordVars ++ vars)
+  }
+
+  /** K2: one multiband COG per (file, init, leadtime), all bands with
     * their A2 statistics embedded as GDAL_METADATA STATISTICS_* items,
-    * DEFLATE tiles + overview pyramid (CogWriter). One task per COG via
-    * repartition on the output path; existence-skip unless overwrite.
-    * A slice (bands × y × x) must fit in task memory — the same contract
+    * DEFLATE tiles + overview pyramid (CogWriter). Writes the external
+    * `.ovr` sidecar first, so an existing `.tif` implies its sidecar. A
+    * slice (bands × y × x) must fit in task memory — the same contract
     * the reference's per-leadtime worker has (generator.py:811-959).
     */
-  private def writeCogs(spark: SparkSession, tidy: DataFrame, inits: DataFrame,
-                        stats: DataFrame, step: Double, unit: String,
-                        crs: String, opts: Options): Unit = {
-    val validTime = Scalars.calendarAdd(col("ref_time"), lit(unit),
-      col("leadtime_idx") * step)
-    val targets = stats.select(col("path"), col("time_idx"), col("leadtime_idx"))
-      .distinct()
-      .join(inits, Seq("path", "time_idx"))
-      .withColumn("valid_time", validTime)
-      .select(col("path"), col("time_idx"), col("leadtime_idx"),
-        concat(lit(s"${opts.dataPath}/cogs/${opts.name}/"), col("date_str"),
-          lit("/"), Scalars.cogItemId(col("item_id"), col("valid_time")),
-          lit(".tif")).as("out_path"))
-    val statsByBand = stats.select(col("path"), col("time_idx"),
-      col("leadtime_idx"), col("variable"), col("stat_min"), col("stat_max"),
-      col("stat_mean"), col("stat_stddev"), col("valid_percent"))
-    val pending = pendingTargets(targets, opts.overwrite)
-    val rows = tidy
-      .join(pending, Seq("path", "time_idx", "leadtime_idx"))
-      .select(col("out_path"), col("variable"), col("y_idx"), col("y"),
-        col("xs"), col("values"))
-      .join(statsByBand
-        .join(pending, Seq("path", "time_idx", "leadtime_idx"))
-        .select(col("out_path"), col("variable"), col("stat_min"),
-          col("stat_max"), col("stat_mean"), col("stat_stddev"),
-          col("valid_percent")),
-        Seq("out_path", "variable"))
-    val overwrite = opts.overwrite
-    val compressOn = opts.compress
-    val reprojectOn = opts.reproject
-    val epsg = "\\d+".r.findFirstIn(crs).map(_.toInt).getOrElse(0)
-    rows.repartition(col("out_path"))
-      .sortWithinPartitions(col("out_path"))
-      .foreachPartition { part: Iterator[org.apache.spark.sql.Row] =>
-        groupedBySortedKey(part, 0).foreach { case (outPath, rs) =>
-          val p = Paths.get(outPath)
-          if (!Files.exists(p) || overwrite) {
-            Files.createDirectories(p.getParent)
-            val xs = rs.head.getSeq[Double](4)
-            val ys = rs.map(r => r.getInt(2) -> r.getDouble(3)).distinct
-              .sortBy(_._1).map(_._2)
-            val pixel = if (xs.length > 1) math.abs(xs(1) - xs(0)) else 1.0
-            val bands = rs.groupBy(_.getString(1)).toSeq.sortBy(_._1).map {
-              case (vname, vrows) =>
-                val grid = Array.ofDim[Double](ys.length, xs.length)
-                vrows.foreach { r =>
-                  val y = r.getInt(2)
-                  val vals = r.getSeq[Double](5)
-                  var x = 0
-                  while (x < xs.length) { grid(y)(x) = vals(x); x += 1 }
-                }
-                val s = vrows.head
-                def stat(i: Int) = if (s.isNullAt(i)) Double.NaN else s.getDouble(i)
-                CogWriter.Band(vname, Map(
-                  "STATISTICS_MINIMUM" -> stat(6),
-                  "STATISTICS_MAXIMUM" -> stat(7),
-                  "STATISTICS_MEAN" -> stat(8),
-                  "STATISTICS_STDDEV" -> stat(9),
-                  "STATISTICS_VALID_PERCENT" -> stat(10))) -> grid
-            }
-            // optional EPSG:4326 warp before the write (ref
-            // generator.py:1006-1007; default off)
-            val (outBands, cogOpts) =
-              if (!reprojectOn)
-                (bands, CogWriter.Options(
-                  compress = compressOn, epsg = epsg,
-                  pixelScale = (pixel, pixel), origin = (xs.min, ys.max)))
-              else {
-                val warped = graft.functions.Reproject.toGeographic(
-                  bands.map { case (b, g) => b.name -> g },
-                  xs.toArray, ys.toArray, s"EPSG:$epsg")
-                val byName = bands.map { case (b, g) => b.name -> b }.toMap
-                val dLon = warped.lons(1) - warped.lons(0)
-                val dLat = warped.lats(0) - warped.lats(1)
-                (warped.bands.map { case (n, g) => byName(n) -> g },
-                  CogWriter.Options(
-                    compress = compressOn, epsg = 4326,
-                    pixelScale = (dLon, dLat),
-                    origin = (warped.lons.head - dLon / 2,
-                      warped.lats.head + dLat / 2)))
-              }
-            Files.write(p, CogWriter.write(outBands, cogOpts))
-            // gdaladdo-parity external overview sidecar alongside the
-            // COG (ref cog.py:91-104: `<name>.tif.ovr` moved next to it)
-            if (cogOpts.externalOverviews &&
-                cogOpts.overviewFactors.exists(f =>
-                  xs.length / f > 0 && ys.length / f > 0))
-              Files.write(Paths.get(outPath + ".ovr"),
-                CogWriter.writeOvr(outBands, cogOpts))
-          }
-        }
+  private def cogBytes(g: OutGroup, lines: Seq[(String, Seq[Scanline])],
+                       stats: Seq[BandStat], epsg: Int,
+                       opts: Options): Array[Byte] = {
+    val xs = g.xs
+    val ys = lines.flatMap(_._2).map(l => l.yIdx -> l.y).distinct
+      .sortBy(_._1).map(_._2)
+    val pixel = if (xs.length > 1) math.abs(xs(1) - xs(0)) else 1.0
+    val bands = lines.zip(stats).map { case ((vname, vlines), s) =>
+      val grid = Array.ofDim[Double](ys.length, xs.length)
+      vlines.foreach(l => Array.copy(l.values, 0, grid(l.yIdx), 0, xs.length))
+      def stat(o: Option[Double]) = o.getOrElse(Double.NaN)
+      CogWriter.Band(vname, Map(
+        "STATISTICS_MINIMUM" -> stat(s.min),
+        "STATISTICS_MAXIMUM" -> stat(s.max),
+        "STATISTICS_MEAN" -> stat(s.mean),
+        "STATISTICS_STDDEV" -> stat(s.stddev),
+        "STATISTICS_VALID_PERCENT" -> stat(s.validPercent))) -> grid
+    }
+    // optional EPSG:4326 warp before the write (ref
+    // generator.py:1006-1007; default off)
+    val (outBands, cogOpts) =
+      if (!opts.reproject)
+        (bands, CogWriter.Options(
+          compress = opts.compress, epsg = epsg,
+          pixelScale = (pixel, pixel), origin = (xs.min, ys.max)))
+      else {
+        val warped = graft.functions.Reproject.toGeographic(
+          bands.map { case (b, g) => b.name -> g },
+          xs, ys.toArray, s"EPSG:$epsg")
+        val byName = bands.map { case (b, g) => b.name -> b }.toMap
+        val dLon = warped.lons(1) - warped.lons(0)
+        val dLat = warped.lats(0) - warped.lats(1)
+        (warped.bands.map { case (n, g) => byName(n) -> g },
+          CogWriter.Options(
+            compress = opts.compress, epsg = 4326,
+            pixelScale = (dLon, dLat),
+            origin = (warped.lons.head - dLon / 2,
+              warped.lats.head + dLat / 2)))
       }
+    // gdaladdo-parity external overview sidecar alongside the COG (ref
+    // cog.py:91-104: `<name>.tif.ovr` moved next to it)
+    if (cogOpts.externalOverviews &&
+        cogOpts.overviewFactors.exists(f =>
+          xs.length / f > 0 && ys.length / f > 0))
+      Files.write(Paths.get(s"${opts.dataPath}/${g.file}.ovr"),
+        CogWriter.writeOvr(outBands, cogOpts))
+    CogWriter.write(outBands, cogOpts)
   }
 
   /** E1/E2: per-item asset rows as a DataFrame of (item_id, asset struct). */
@@ -551,8 +558,7 @@ object Preprocess {
     val emptyExtra = map().cast("map<string,string>")
     val ncAsset = inits.select(col("item_id"), struct(
       lit("netcdf").as("key"),
-      concat(lit("./netcdf/"), lit(opts.name), lit("/"), col("date_str"),
-        lit("/"), col("ts_str"), lit(".nc")).as("href"),
+      concat(lit("./"), col("nc")).as("href"),
       lit("application/x-netcdf").as("media_type"),
       concat(lit("Full forecast netCDF from "),
         Scalars.fmtSpace(col("ref_time"))).as("title"),
@@ -565,29 +571,24 @@ object Preprocess {
         .as("extra")).as("asset"))
     val thumbAsset = inits.select(col("item_id"), struct(
       lit("thumbnail").as("key"),
-      concat(lit("./cogs/"), lit(opts.name), lit("/"), col("date_str"),
-        lit("/"), col("item_id"), lit(".jpg")).as("href"),
+      concat(lit("./"), col("jpg")).as("href"),
       lit("image/jpeg").as("media_type"),
       lit("Thumbnail").as("title"),
       typedLit(Seq("thumbnail")).as("roles"),
       lit(null).cast("string").as("checksum"), lit(-1L).as("size"),
       emptyExtra.as("extra")).as("asset"))
     // E2: per-leadtime COG asset with embedded band statistics
-    val validTime = Scalars.calendarAdd(col("ref_time"), lit(unit),
-      col("leadtime_idx") * step)
     val perLead = stats
       .groupBy(col("path"), col("time_idx"), col("leadtime_idx"))
       .agg(sort_array(collect_list(struct(
         col("variable"), col("stat_min"), col("stat_max"), col("stat_mean"),
         col("stat_stddev"), col("valid_percent")))).as("bands"))
       .join(inits, Seq("path", "time_idx"))
-      .withColumn("valid_time", validTime)
-      .withColumn("cog_id",
-        Scalars.cogItemId(col("item_id"), col("valid_time")))
+      .withColumn("valid_time", validTime(step, unit))
     val cogAsset = perLead.select(col("item_id"), struct(
       concat(lit("cog_lead_"), col("leadtime_idx").cast("string")).as("key"),
-      concat(lit("./cogs/"), lit(opts.name), lit("/"), col("date_str"),
-        lit("/"), col("cog_id"), lit(".tif")).as("href"),
+      concat(lit("./"), relPath("cogs", opts.name, cogId(step, unit), ".tif"))
+        .as("href"),
       lit("image/tiff; application=geotiff; profile=cloud-optimized")
         .as("media_type"),
       concat(lit("Forecast for "), Scalars.fmtSpace(col("valid_time")))
@@ -601,33 +602,20 @@ object Preprocess {
     ncAsset.unionByName(thumbAsset).unionByName(cogAsset)
   }
 
-  /** E3/J6: binaryFile manifest over everything written under dataPath,
-    * joined to asset hrefs — fills size + the blockwise digest-of-digest
-    * multihash (F14). Assets whose file was not produced (stacOnly, COGs
-    * pending) keep null checksum / -1 size.
+  /** E3/J6: fills each asset's size and blockwise digest-of-digest
+    * multihash (F14) from the file info the write tasks reported, by
+    * href. Assets whose file does not exist (stacOnly) keep null
+    * checksum / -1 size.
     */
-  private def enrichFileInfo(spark: SparkSession, assets: DataFrame,
-                             opts: Options): DataFrame = {
-    val ncDir = Paths.get(s"${opts.dataPath}/netcdf")
-    val cogDir = Paths.get(s"${opts.dataPath}/cogs")
-    val globs = Seq(ncDir, cogDir).filter(Files.exists(_))
-      .map(d => s"$d/*/*/*")
-    if (globs.isEmpty) return assets
-    val manifest = spark.read.format("binaryFile").load(globs: _*)
-      .select(
-        regexp_replace(col("path"), lit(s"^file:${opts.dataPath}/"), lit("./"))
-          .as("href"),
-        col("length").as("fsize"),
-        Scalars.blockMultihashMd5(col("content")).as("fchecksum"))
+  private def enrichFileInfo(assets: DataFrame, files: DataFrame): DataFrame =
     assets
       .select(col("item_id"), col("asset.*"))
-      .join(manifest, Seq("href"), "left")
+      .join(files, Seq("href"), "left")
       .select(col("item_id"), struct(
         col("key"), col("href"), col("media_type"), col("title"), col("roles"),
         coalesce(col("fchecksum"), col("checksum")).as("checksum"),
         coalesce(col("fsize"), col("size")).as("size"),
         col("extra")).as("asset"))
-  }
 
   private def buildItems(spark: SparkSession, inits: DataFrame,
                          assets: DataFrame, geoBbox: Seq[Double],

@@ -9,9 +9,14 @@ import org.apache.spark.sql.classic.ExpressionUtils
   * Catalyst expressions still need them, so this one-file subpackage of
   * org.apache.spark.sql re-exposes exactly the two conversions — the
   * standard extension-point pattern for native expressions outside the
-  * Spark tree.
+  * Spark tree — plus a peek at a column's string literal.
   */
 object Bridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
+  /** `Some(s)` when `c` is `lit(s)` for a string `s`. */
+  def stringLiteral(c: Column): Option[String] = c.node match {
+    case org.apache.spark.sql.internal.Literal(s: String, _, _) => Some(s)
+    case _ => None
+  }
 }

@@ -1,6 +1,9 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import java.nio.file.attribute.FileTime
+import java.security.MessageDigest
+import scala.jdk.CollectionConverters._
 import graft.pipeline.{ConfigMismatchException, Preprocess}
 import graft.sink.StacJsonSink
 import graft.source.{NetCdf, NetCdfFixture}
@@ -12,8 +15,8 @@ import graft.source.{NetCdf, NetCdfFixture}
   */
 class PreprocessSpec extends SparkSpec {
 
-  private def freshRun(stacOnly: Boolean = false) = {
-    val work = Files.createTempDirectory("graft-pre")
+  private def freshRun(stacOnly: Boolean = false, prefix: String = "graft-pre") = {
+    val work = Files.createTempDirectory(prefix)
     val glob = NetCdfFixture.writeFiles(work.resolve("input"), n = 2)
     val opts = Preprocess.Options(
       name = "sic_north", dataPath = work.resolve("data").toString,
@@ -142,17 +145,6 @@ class PreprocessSpec extends SparkSpec {
     assert(secondItems === firstItems)
   }
 
-  test("groupedBySortedKey streams one contiguous group at a time") {
-    import org.apache.spark.sql.Row
-    val rows = Seq(Row("a", 1), Row("a", 2), Row("b", 3), Row("c", 4),
-      Row("c", 5))
-    val groups = Preprocess.groupedBySortedKey(rows.iterator, 0).toSeq
-    assert(groups.map(_._1) === Seq("a", "b", "c"))
-    assert(groups.map(_._2.map(_.getInt(1))) ===
-      Seq(Seq(1, 2), Seq(3), Seq(4, 5)))
-    assert(Preprocess.groupedBySortedKey(Iterator.empty, 0).isEmpty)
-  }
-
   test("config drift aborts the run before any work (J5)") {
     val (_, glob, opts) = freshRun()
     Preprocess.run(spark, glob, opts)
@@ -169,5 +161,97 @@ class PreprocessSpec extends SparkSpec {
     val items = StacJsonSink.readItems(spark, res.catalogRoot).collect()
     val nc = items.head.assets.find(_.key == "netcdf").get
     assert(nc.size === -1 && nc.checksum == null)
+  }
+
+  private def dataFiles(opts: Preprocess.Options): Seq[java.nio.file.Path] =
+    Seq("netcdf", "cogs").map(Paths.get(opts.dataPath, _)).filter(Files.exists(_))
+      .flatMap(d => Files.walk(d).iterator().asScala.filter(Files.isRegularFile(_)))
+      .sorted
+
+  /** Back-dates every data file, so a rewrite shows as a changed mtime. */
+  private def backdate(files: Seq[java.nio.file.Path]): Unit =
+    files.foreach(Files.setLastModifiedTime(_, FileTime.fromMillis(0)))
+
+  private def multihash(b: Array[Byte]): String = {
+    def md5(x: Array[Byte]) = MessageDigest.getInstance("MD5").digest(x)
+    "d510" + md5(md5(b)).map("%02x".format(_)).mkString
+  }
+
+  /** Every asset of every item names a file whose size and multihash it
+    * carries.
+    */
+  private def assertAssetsMatchFiles(catalogRoot: String,
+                                     opts: Preprocess.Options): Unit = {
+    val assets = StacJsonSink.readItems(spark, catalogRoot).collect()
+      .flatMap(_.assets)
+    assert(assets.length === 2 * 5)
+    assets.foreach { a =>
+      val bytes = Files.readAllBytes(Paths.get(opts.dataPath, a.href.stripPrefix("./")))
+      assert(a.size === bytes.length.toLong, a.href)
+      assert(a.checksum === multihash(bytes), a.href)
+    }
+  }
+
+  test("E3: assets are sized and checksummed under a data path holding " +
+    "regex characters") {
+    val (_, glob, opts) = freshRun(prefix = "graft+pre(1)")
+    assert(opts.dataPath.contains("+"))
+    val res = Preprocess.run(spark, glob, opts)
+    assertAssetsMatchFiles(res.catalogRoot, opts)
+  }
+
+  test("repair: a deleted COG of a catalogued item comes back alone, " +
+    "byte-identical, and the item is untouched") {
+    val (_, glob, opts) = freshRun()
+    val first = Preprocess.run(spark, glob, opts)
+    val itemBytes = Files.walk(Paths.get(first.catalogRoot)).iterator().asScala
+      .filter(p => Files.isRegularFile(p) &&
+        p.getFileName.toString.startsWith("forecast_init_"))
+      .map(p => p -> Files.readAllBytes(p)).toMap
+    assert(itemBytes.size === 2)
+    val tif = dataFiles(opts).filter(_.toString.endsWith(".tif"))(1)
+    val ovr = Paths.get(s"$tif.ovr")
+    val (tifBytes, ovrBytes) = (Files.readAllBytes(tif), Files.readAllBytes(ovr))
+    Files.delete(tif); Files.delete(ovr)
+    val others = dataFiles(opts)
+    backdate(others)
+    val second = Preprocess.run(spark, glob, opts)
+    assert(second.nSlices === 0 && second.nItems === first.nItems)
+    assert(Files.readAllBytes(tif) sameElements tifBytes)
+    assert(Files.readAllBytes(ovr) sameElements ovrBytes)
+    others.foreach(p =>
+      assert(Files.getLastModifiedTime(p).toMillis === 0L, s"$p rewritten"))
+    itemBytes.foreach { case (p, b) => assert(Files.readAllBytes(p) sameElements b, p) }
+  }
+
+  test("re-catalogue: a deleted stac/ tree is rebuilt over the existing " +
+    "files without rewriting them") {
+    val (_, glob, opts) = freshRun()
+    val first = Preprocess.run(spark, glob, opts)
+    val stac = Paths.get(opts.dataPath, "stac")
+    Files.walk(stac).iterator().asScala.toSeq.reverse.foreach(Files.delete)
+    val files = dataFiles(opts)
+    backdate(files)
+    val second = Preprocess.run(spark, glob, opts)
+    assert(second.nItems === first.nItems && second.nSlices === 0)
+    files.foreach(p =>
+      assert(Files.getLastModifiedTime(p).toMillis === 0L, s"$p rewritten"))
+    assertAssetsMatchFiles(second.catalogRoot, opts)
+  }
+
+  test("A2: a fully masked band gets null statistics and valid_percent 0") {
+    val work = Files.createTempDirectory("graft-pre-masked")
+    val (dims, gatts, vars) = NetCdfFixture.spec()
+    val masked = vars.map(v =>
+      if (v.name == "sic_stddev") v.copy(data = v.data.map(_ => Double.NaN)) else v)
+    Files.createDirectories(work.resolve("input"))
+    Files.write(work.resolve("input/m.nc"), NetCdf.write(dims, gatts, masked))
+    val opts = Preprocess.Options(
+      name = "sic_north", dataPath = work.resolve("data").toString)
+    val res = Preprocess.run(spark, s"${work.resolve("input")}/*.nc", opts)
+    val cog = StacJsonSink.readItems(spark, res.catalogRoot).collect().head
+      .assets.find(_.key == "cog_lead_0").get
+    assert(cog.extra("forecast:bands").contains(
+      """{"variable":"sic_stddev","valid_percent":0.0}"""))
   }
 }
