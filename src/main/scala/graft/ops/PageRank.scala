@@ -17,11 +17,12 @@ import org.apache.spark.sql.functions._
   *
   * Scale shape: contributions are edges ⋈ ranks ⋈ degrees on `src` —
   * three relations pre-partitioned by the same key, one shuffle per
-  * iteration for the dst-side re-aggregation. Only the FINAL ranks are
-  * cached (see the note at the return); for hundreds of iterations the
-  * accumulated lineage needs `localCheckpoint` every ~20 steps. Nodes
-  * without in-edges keep the bare teleport term via the left join
-  * against the node set.
+  * iteration for the dst-side re-aggregation. Nothing is cached or
+  * checkpointed: the result is a lazy plan, and callers are expected to
+  * run ONE action on it (each further action recomputes every
+  * iteration). For hundreds of iterations the accumulated lineage needs
+  * `localCheckpoint` every ~20 steps. Nodes without in-edges keep the
+  * bare teleport term via the left join against the node set.
   */
 object PageRank {
 
@@ -58,9 +59,8 @@ object PageRank {
         .select(col("v"),
           (lit(base) + expr(s"($num * coalesce(s, 0L)) div $den")).as("pr"))
     }
-    // the final ranks are already localCheckpoint-backed (materialized,
-    // lineage-free), so repeated actions on the result re-read the
-    // checkpointed blocks — no extra cache() needed
+    // a lazy plan, not materialized ranks: callers run one action on
+    // it; one that needs several should persist or checkpoint it first
     ranks
   }
 }

@@ -1,6 +1,7 @@
 package graft.queries
 
 import graft.{QueryDef, Tables, Work}
+import graft.source.v2.ScanMetrics, ScanMetrics.Files
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1771,7 +1772,6 @@ object Relational {
     (s, d) =>
     import graft.ops.SnapshotTable
     import graft.ops.SnapshotTable.PartSpec
-    import graft.source.v2.GraftTableSource
     val path = Work.oracleDumpPath("q186_table")
     clusterLayouts.compute("q186", (_, prev) => {
       if (prev != d) {
@@ -1798,18 +1798,15 @@ object Relational {
     val key = "spark.sql.optimizer.dynamicPartitionPruning.useStats"
     val prior = s.conf.getOption(key)
     s.conf.set(key, "false")
-    val r = try {
-      GraftTableSource.lastPlan.set((-1, -1))
-      fact.join(dim, col("ship_day") === col("order_day"))
+    val (Array(r), Seq(Files(planned, total))) = try {
+      ScanMetrics.collect(fact.join(dim, col("ship_day") === col("order_day"))
         .agg(count(lit(1)).as("n"),
           sum("qty_u").cast("long").as("qty_u"),
-          countDistinct("ship_day").as("n_days"))
-        .collect().head
+          countDistinct("ship_day").as("n_days")))
     } finally prior match {
       case Some(v) => s.conf.set(key, v)
       case None => s.conf.unset(key)
     }
-    val (planned, total) = GraftTableSource.lastPlan.get()
     require(planned > 0 && planned < total,
       s"runtime filter did not prune: planned $planned of $total files")
     import s.implicits._
@@ -1845,7 +1842,6 @@ object Relational {
       |    WHERE l_shipdate >= TIMESTAMP '1996-01-01'
       |      AND l_shipdate < TIMESTAMP '1997-01-01') AS n_v3,
       |  TRUE AS files_pruned""".stripMargin) { (s, d) =>
-    import graft.source.v2.GraftTableSource
     val path = Work.oracleDumpPath("q187_table")
     val day96 = java.time.LocalDate.of(1996, 1, 1).toEpochDay
     val day97 = java.time.LocalDate.of(1997, 1, 1).toEpochDay
@@ -1877,13 +1873,10 @@ object Relational {
       .option("path", path).option("version", v.toString).load()
     val plo = java.time.LocalDate.of(1995, 3, 1).toEpochDay
     val phi = java.time.LocalDate.of(1995, 9, 1).toEpochDay
-    GraftTableSource.lastPlan.set((-1, -1))
     val all = at(2).agg(count(lit(1)).as("n"),
       sum("qty_u").cast("long").as("q")).collect().head
-    val probe = at(2)
-      .filter(col("ship_day") >= plo && col("ship_day") < phi)
-      .count()
-    val (planned, total) = GraftTableSource.lastPlan.get()
+    val (probe, Files(planned, total)) = ScanMetrics.rowCount(at(2)
+      .filter(col("ship_day") >= plo && col("ship_day") < phi))
     require(planned > 0 && planned < total,
       s"inherited stats did not prune: planned $planned of $total files")
     val nV1 = at(1).count()
@@ -1917,7 +1910,6 @@ object Relational {
       |      AND l_shipdate < TIMESTAMP '1997-01-01') AS n_filtered,
       |  TRUE AS manifest_served""".stripMargin) { (s, d) =>
     import graft.ops.SnapshotTable
-    import graft.source.v2.GraftTableSource
     val path = Work.oracleDumpPath("q188_table")
     clusterLayouts.compute("q188", (_, prev) => {
       if (prev != d) {
@@ -1932,16 +1924,16 @@ object Relational {
       d
     })
     val t = s.read.format("graft_table").option("path", path).load()
-    GraftTableSource.lastAggPush.set(false)
-    val r = t.agg(count(lit(1)).as("n"), min("ship_day").as("d_min"),
-      max("ship_day").as("d_max")).collect().head
-    require(GraftTableSource.lastAggPush.get(),
+    val (Array(r), Seq(sa)) = ScanMetrics.collect(t.agg(
+      count(lit(1)).as("n"), min("ship_day").as("d_min"),
+      max("ship_day").as("d_max")))
+    require(sa.manifestAgg,
       "count/min/max were not manifest-served")
     val lo = java.time.LocalDate.of(1996, 1, 1).toEpochDay
     val hi = java.time.LocalDate.of(1997, 1, 1).toEpochDay
-    GraftTableSource.lastAggPush.set(false)
-    val nf = t.filter(col("ship_day") >= lo && col("ship_day") < hi).count()
-    require(!GraftTableSource.lastAggPush.get(),
+    val (nf, sf) = ScanMetrics.rowCount(
+      t.filter(col("ship_day") >= lo && col("ship_day") < hi))
+    require(!sf.manifestAgg,
       "a FILTERED count must not be served from manifest bounds")
     import s.implicits._
     Seq((r.getLong(0), r.getLong(1), r.getLong(2), nf, true))
@@ -2042,7 +2034,6 @@ object Relational {
       |  (SELECT CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT)) AS BIGINT)
       |    FROM lineitem) AS qty_renamed,
       |  TRUE AS files_pruned""".stripMargin) { (s, d) =>
-    import graft.source.v2.GraftTableSource
     // one catalog name per query: Spark caches catalog instances by
     // name after first initialization, so a shared name would pin the
     // first query's root for everyone
@@ -2070,13 +2061,10 @@ object Relational {
     })
     val plo = java.time.LocalDate.of(1996, 3, 15).toEpochDay
     val phi = java.time.LocalDate.of(1996, 9, 15).toEpochDay
-    GraftTableSource.lastPlan.set((-1, -1))
-    val probe = s.sql(
+    val (Array(probe), Seq(Files(planned, total))) = ScanMetrics.collect(s.sql(
       s"""SELECT count(*) AS n, CAST(sum(qty) AS BIGINT) AS q
          |FROM graft_q190.q190.li
-         |WHERE ship_day >= $plo AND ship_day <= $phi""".stripMargin)
-      .collect().head
-    val (planned, total) = GraftTableSource.lastPlan.get()
+         |WHERE ship_day >= $plo AND ship_day <= $phi""".stripMargin))
     require(planned > 0 && planned < total,
       s"SQL partition pruning failed: planned $planned of $total files")
     val nV1 = s.sql(
@@ -2391,7 +2379,6 @@ object Relational {
       |  (SELECT count(*) FROM lineitem WHERE l_orderkey = 7) AS n_probe,
       |  TRUE AS pruned""".stripMargin) { (s, d) =>
     import graft.ops.SnapshotTable
-    import graft.source.v2.GraftTableSource
     val wh = Work.oracleDumpPath("q195_warehouse")
     s.conf.set("spark.sql.catalog.graft_q195",
       "graft.source.v2.GraftCatalog")
@@ -2430,11 +2417,8 @@ object Relational {
       s"scan/manifest row drift: ${after.getLong(0)} != ${ver.rows}")
     // post-merge pruning stays EXACT: a key probe plans a strict
     // subset of the rewritten table's files
-    GraftTableSource.lastPlan.set((-1, -1))
-    val nProbe = s.sql(
-      "SELECT count(*) FROM graft_q195.q195.li WHERE okey = 7")
-      .head.getLong(0)
-    val (planned, total) = GraftTableSource.lastPlan.get()
+    val (nProbe, Files(planned, total)) = ScanMetrics.rowCount(
+      s.sql("SELECT * FROM graft_q195.q195.li WHERE okey = 7"))
     require(planned > 0 && planned < total,
       s"post-merge bucket pruning failed: $planned of $total files")
     import s.implicits._
@@ -2465,7 +2449,6 @@ object Relational {
       |     AS BIGINT) FROM lineitem) AS qty_all,
       |  TRUE AS exactly_once""".stripMargin) { (s, d) =>
     import graft.ops.SnapshotTable
-    import graft.source.v2.GraftTableSource
     val src = Work.oracleDumpPath("q196_src")
     val dst = Work.oracleDumpPath("q196_dst")
     val ckpt = Work.oracleDumpPath("q196_ckpt")
@@ -3738,7 +3721,6 @@ object Relational {
       |  TRUE AS files_pruned, TRUE AS agg_from_manifest""".stripMargin
   ) { (s, d) =>
     import graft.ops.SnapshotTable
-    import graft.source.v2.GraftTableSource
     val path = Work.oracleDumpPath("q198_table")
     clusterLayouts.compute("q198", (_, prev) => {
       if (prev != d) {
@@ -3757,27 +3739,22 @@ object Relational {
     })
     val t = s.read.format("graft_table").option("path", path).load()
     val nAll = t.count()
-    GraftTableSource.lastPlan.set((-1, -1))
-    val rd = t.filter(col("ship_d").between(
-        to_date(lit("1996-03-15")), to_date(lit("1996-09-15"))))
-      .agg(count(lit(1)).as("n"), sum("qty_u").cast("long").as("q"))
-      .collect().head
-    val (p1, t1) = GraftTableSource.lastPlan.get()
+    val (Array(rd), Seq(Files(p1, t1))) = ScanMetrics.collect(
+      t.filter(col("ship_d").between(
+          to_date(lit("1996-03-15")), to_date(lit("1996-09-15"))))
+        .agg(count(lit(1)).as("n"), sum("qty_u").cast("long").as("q")))
     require(p1 > 0 && p1 < t1,
       s"DATE range pruning failed: planned $p1 of $t1 files")
-    GraftTableSource.lastPlan.set((-1, -1))
-    GraftTableSource.rowsRead.set(0L)
-    val nMonth = t.filter(col("ship_m") === "1996-03").count()
-    val (p2, t2) = GraftTableSource.lastPlan.get()
+    val (nMonth, s2 @ Files(p2, t2)) =
+      ScanMetrics.rowCount(t.filter(col("ship_m") === "1996-03"))
     require(p2 > 0 && p2 < t2,
       s"STRING equality pruning failed: planned $p2 of $t2 files")
-    require(GraftTableSource.rowsRead.get() < nAll,
-      s"month probe delivered ${GraftTableSource.rowsRead.get()} of " +
+    require(s2.rowsDelivered < nAll,
+      s"month probe delivered ${s2.rowsDelivered} of " +
         s"$nAll rows — row-group statistics did not bound the read")
-    GraftTableSource.lastAggPush.set(false)
-    val ag = t.agg(min("ship_d").as("d_min"), max("ship_d").as("d_max"))
-      .collect().head
-    require(GraftTableSource.lastAggPush.get(),
+    val (Array(ag), Seq(s3)) = ScanMetrics.collect(
+      t.agg(min("ship_d").as("d_min"), max("ship_d").as("d_max")))
+    require(s3.manifestAgg,
       "MIN/MAX over the DATE stats column must serve from the manifest")
     import s.implicits._
     // java8API session: DATE collects as java.time.LocalDate
@@ -3910,7 +3887,6 @@ object Relational {
       |  TRUE AS atomic_abort, TRUE AS files_pruned""".stripMargin
   ) { (s, d) =>
     import graft.ops.SnapshotTable
-    import graft.source.v2.GraftTableSource
     val wh = Work.oracleDumpPath("q200_warehouse")
     s.conf.set("spark.sql.catalog.graft_q200",
       "graft.source.v2.GraftCatalog")
@@ -3962,11 +3938,10 @@ object Relational {
     })
     val base = s.sql("SELECT count(*) AS n, CAST(sum(qty_u) AS BIGINT)" +
       " AS q FROM graft_q200.q200.li").collect().head
-    GraftTableSource.lastPlan.set((-1, -1))
-    val nProbe = s.sql("""SELECT count(*) FROM graft_q200.q200.li
+    val (nProbe, Files(p1, t1)) = ScanMetrics.rowCount(
+      s.sql("""SELECT * FROM graft_q200.q200.li
       WHERE ship_d >= DATE '1996-03-15'
-        AND ship_d <= DATE '1996-09-15'""").head.getLong(0)
-    val (p1, t1) = GraftTableSource.lastPlan.get()
+        AND ship_d <= DATE '1996-09-15'"""))
     require(p1 > 0 && p1 < t1,
       s"CTAS-born stats did not prune: planned $p1 of $t1 files")
     val nRtas = s.sql("SELECT count(*) FROM graft_q200.q200.o")
@@ -4112,7 +4087,6 @@ object Relational {
       |    AS n_moved,
       |  TRUE AS pruned_date, TRUE AS pruned_bucket""".stripMargin
   ) { (s, d) =>
-    import graft.source.v2.GraftTableSource
     val wh = Work.oracleDumpPath("q202_warehouse")
     s.conf.set("spark.sql.catalog.graft_q202",
       "graft.source.v2.GraftCatalog")
@@ -4156,22 +4130,16 @@ object Relational {
     val t = s.table("graft_q202.q202.li")
     val all = t.agg(count(lit(1)).as("n"),
       sum("qty_u").cast("long").as("q")).collect().head
-    GraftTableSource.lastPlan.set((-1, -1))
-    val nDay = s.sql("""SELECT count(*) FROM graft_q202.q202.li
-      WHERE d = DATE '1996-03-20'""").head.getLong(0)
-    val (p1, t1) = GraftTableSource.lastPlan.get()
+    def probe(where: String) =
+      ScanMetrics.rowCount(s.sql(s"SELECT * FROM graft_q202.q202.li WHERE $where"))
+    val (nDay, Files(p1, t1)) = probe("d = DATE '1996-03-20'")
     require(p1 < t1,
       s"days() pruning failed: planned $p1 of $t1 files")
-    GraftTableSource.lastPlan.set((-1, -1))
-    val nFlag = s.sql("""SELECT count(*) FROM graft_q202.q202.li
-      WHERE flag = 'g1'""").head.getLong(0)
-    val (p2, t2) = GraftTableSource.lastPlan.get()
+    val (nFlag, Files(p2, t2)) = probe("flag = 'g1'")
     require(p2 > 0 && p2 < t2,
       s"bucket(flag) pruning failed: planned $p2 of $t2 files")
-    GraftTableSource.lastPlan.set((-1, -1))
-    val nBoth = s.sql("""SELECT count(*) FROM graft_q202.q202.li
-      WHERE d >= DATE '1996-04-01' AND flag = 'g2'""").head.getLong(0)
-    val (p3, _) = GraftTableSource.lastPlan.get()
+    val (nBoth, Files(p3, _)) =
+      probe("d >= DATE '1996-04-01' AND flag = 'g2'")
     require(p3 <= p2, s"combined two-dimension pruning kept $p3 files")
     val nMoved = s.sql("""SELECT count(*) FROM graft_q202.q202.li
       WHERE d = DATE '1996-04-20'""").head.getLong(0)
@@ -4227,7 +4195,6 @@ object Relational {
       |  TRUE AS pruned_okey, TRUE AS pruned_luid""".stripMargin
   ) { (s, d) =>
     import graft.ops.SnapshotTable
-    import graft.source.v2.GraftTableSource
     val path = Work.oracleDumpPath("q203_table")
     clusterLayouts.compute("q203", (_, prev) => {
       if (prev != d) {
@@ -4250,22 +4217,18 @@ object Relational {
     require(ver.bloomConfs.map(_.col) == Seq("okey", "luid"),
       s"expected two bloom indexes, manifest has ${ver.bloomConfs}")
     val t = s.read.format("graft_table").option("path", path).load()
-    GraftTableSource.lastPlan.set((-1, -1))
-    val ok = t.filter(col("okey").isin(1L, 2L, 3L))
-      .agg(count(lit(1)).as("n"), sum("qty_u").cast("long").as("q"))
-      .collect().head
-    val (p1, t1) = GraftTableSource.lastPlan.get()
+    val (Array(ok), Seq(Files(p1, t1))) = ScanMetrics.collect(
+      t.filter(col("okey").isin(1L, 2L, 3L))
+        .agg(count(lit(1)).as("n"), sum("qty_u").cast("long").as("q")))
     require(p1 > 0 && p1 < t1,
       s"okey bloom did not prune: planned $p1 of $t1 files")
     // probe the domain's extreme luids (data-derived — linenumbers
     // per order are generator-arbitrary, so fixed keys are fragile):
     // two exact keys land in ≤2 files however the dates scatter
     val mm = t.agg(min("luid"), max("luid")).collect().head
-    GraftTableSource.lastPlan.set((-1, -1))
-    val lu = t.filter(col("luid").isin(mm.getLong(0), mm.getLong(1)))
-      .agg(count(lit(1)).as("n"), sum("qty_u").cast("long").as("q"))
-      .collect().head
-    val (p2, t2) = GraftTableSource.lastPlan.get()
+    val (Array(lu), Seq(Files(p2, t2))) = ScanMetrics.collect(
+      t.filter(col("luid").isin(mm.getLong(0), mm.getLong(1)))
+        .agg(count(lit(1)).as("n"), sum("qty_u").cast("long").as("q")))
     require(p2 > 0 && p2 < t2,
       s"luid bloom did not prune: planned $p2 of $t2 files")
     import s.implicits._
@@ -4305,7 +4268,6 @@ object Relational {
       |  TRUE AS pruned_url""".stripMargin
   ) { (s, d) =>
     import graft.ops.SnapshotTable
-    import graft.source.v2.GraftTableSource
     val path = Work.oracleDumpPath("q204_table")
     clusterLayouts.compute("q204", (_, prev) => {
       if (prev != d) {
@@ -4326,12 +4288,10 @@ object Relational {
     val mm = t.agg(min("doc_id"), max("doc_id")).collect().head
     val urls = t.filter(col("doc_id").isin(mm.getLong(0), mm.getLong(1)))
       .select("url").as[String].collect().toSeq.sorted
-    GraftTableSource.lastPlan.set((-1, -1))
-    val hit = t.filter(col("url").isin(urls: _*))
-      .agg(count(lit(1)).as("n"),
-        sum("n_chars").cast("long").as("c"))
-      .collect().head
-    val (p, tot) = GraftTableSource.lastPlan.get()
+    val (Array(hit), Seq(Files(p, tot))) = ScanMetrics.collect(
+      t.filter(col("url").isin(urls: _*))
+        .agg(count(lit(1)).as("n"),
+          sum("n_chars").cast("long").as("c")))
     require(p > 0 && p < tot,
       s"string bloom did not prune: planned $p of $tot files")
     Seq((hit.getLong(0), hit.getLong(1), true))
@@ -4449,7 +4409,6 @@ object Relational {
   ) { (s, d) =>
     import graft.ops.SnapshotTable
     import graft.ops.SnapshotTable.{PartField, PartSpec}
-    import graft.source.v2.GraftTableSource
     val p = Work.oracleDumpPath("q206_table")
     clusterLayouts.compute("q206", (_, prev) => {
       if (prev != d) {
@@ -4489,11 +4448,9 @@ object Relational {
     val t = s.read.format("graft_table").option("path", p).load()
     val all = t.agg(count(lit(1)).as("n"),
       sum("qty_u").cast("long").as("q")).collect().head
-    GraftTableSource.lastPlan.set((-1, -1))
-    val g1 = t.filter(col("g") === "g1")
-      .agg(count(lit(1)).as("n"), sum("qty_u").cast("long").as("q"))
-      .collect().head
-    val (pl, tot) = GraftTableSource.lastPlan.get()
+    val (Array(g1), Seq(Files(pl, tot))) = ScanMetrics.collect(
+      t.filter(col("g") === "g1")
+        .agg(count(lit(1)).as("n"), sum("qty_u").cast("long").as("q")))
     require(pl > 0 && pl < tot,
       s"identity pruning lost through typed compaction: $pl of $tot")
     import s.implicits._
@@ -4622,7 +4579,6 @@ object Relational {
   ) { (s, d) =>
     import graft.ops.SnapshotTable
     import graft.ops.SnapshotTable.{PartField, PartSpec}
-    import graft.source.v2.GraftTableSource
     val path = Work.oracleDumpPath("q208_table")
     clusterLayouts.compute("q208", (_, prev) => {
       if (prev != d) {
@@ -4654,24 +4610,17 @@ object Relational {
     val t = s.read.format("graft_table").option("path", path).load()
     val nAll = t.count()
     val day = java.time.LocalDate.parse("1996-01-02")
-    GraftTableSource.lastPlan.set((-1, -1))
-    val nDay = t.filter(col("d") === lit(day)).count()
-    val (pd, tot) = GraftTableSource.lastPlan.get()
+    val (nDay, Files(pd, tot)) = ScanMetrics.rowCount(t.filter(col("d") === lit(day)))
     require(pd > 0 && pd < tot,
       s"days() pruning failed post-recluster: planned $pd of $tot")
     val zHi = graft.functions.ZOrderExpr.interleave(63, 63, 8)
-    GraftTableSource.lastPlan.set((-1, -1))
-    val rect = t.filter(col("z") <= zHi &&
-        col("px") <= 63 && col("py") <= 63)
-      .agg(count(lit(1)).as("n"), sum("qty_u").cast("long").as("q"))
-      .collect().head
-    val (pz, _) = GraftTableSource.lastPlan.get()
+    val (Array(rect), Seq(Files(pz, _))) = ScanMetrics.collect(
+      t.filter(col("z") <= zHi && col("px") <= 63 && col("py") <= 63)
+        .agg(count(lit(1)).as("n"), sum("qty_u").cast("long").as("q")))
     require(pz > 0 && pz < tot,
       s"curve rectangle pruning failed: planned $pz of $tot")
-    GraftTableSource.lastPlan.set((-1, -1))
-    val nBoth = t.filter(col("d") === lit(day) && col("z") <= zHi &&
-      col("px") <= 63 && col("py") <= 63).count()
-    val (pb, _) = GraftTableSource.lastPlan.get()
+    val (nBoth, Files(pb, _)) = ScanMetrics.rowCount(t.filter(col("d") === lit(day) &&
+      col("z") <= zHi && col("px") <= 63 && col("py") <= 63))
     require(pb <= math.min(pd, pz),
       s"composed pruning ($pb) looser than either dimension ($pd, $pz)")
     import s.implicits._
@@ -5029,7 +4978,6 @@ object Relational {
   ) { (s, d) =>
     import graft.ops.SnapshotTable
     import graft.ops.SnapshotTable.{PartField, PartSpec}
-    import graft.source.v2.GraftTableSource
     val path = Work.oracleDumpPath("q212_table")
     clusterLayouts.compute("q212", (_, prev) => {
       if (prev != d) {
@@ -5074,17 +5022,14 @@ object Relational {
     val nDel = Tables.lineitem(s, d)
       .filter(pmod(col("l_partkey"), lit(256)) === 0).count()
     val day = java.time.LocalDate.parse("1996-01-02")
-    GraftTableSource.lastPlan.set((-1, -1))
-    val nDay = t.filter(col("d") === lit(day)).count()
-    val (pd, tot) = GraftTableSource.lastPlan.get()
+    val (nDay, Files(pd, tot)) = ScanMetrics.rowCount(t.filter(col("d") === lit(day)))
     require(pd > 0 && pd < tot,
       s"days() pruning failed post-recluster: planned $pd of $tot")
     val zHi = graft.functions.ZOrderExpr.interleave(63, 63, 8)
-    GraftTableSource.lastPlan.set((-1, -1))
-    val qtyRect = t.filter(col("z") <= zHi &&
-        col("px") <= 63 && col("py") <= 63)
-      .agg(sum("qty_u").cast("long")).collect().head.getLong(0)
-    val (pz, _) = GraftTableSource.lastPlan.get()
+    val (Array(qr), Seq(Files(pz, _))) = ScanMetrics.collect(
+      t.filter(col("z") <= zHi && col("px") <= 63 && col("py") <= 63)
+        .agg(sum("qty_u").cast("long")))
+    val qtyRect = qr.getLong(0)
     require(pz > 0 && pz < tot,
       s"curve rectangle pruning failed: planned $pz of $tot")
     import s.implicits._
@@ -5247,7 +5192,6 @@ object Relational {
   ) { (s, d) =>
     import graft.ops.SnapshotTable
     import graft.ops.SnapshotTable.{PartField, PartSpec}
-    import graft.source.v2.GraftTableSource
     val path = Work.oracleDumpPath("q214_table")
     clusterLayouts.compute("q214", (_, prev) => {
       if (prev != d) {
@@ -5274,28 +5218,22 @@ object Relational {
     val rngLo = new java.math.BigDecimal(maxPk / 4).setScale(2)
     val rngHi = new java.math.BigDecimal(maxPk / 2).setScale(2)
     val t = s.read.format("graft_table").option("path", path).load()
-    GraftTableSource.lastPlan.set((-1, -1))
-    val eq = t.filter(col("money") === lit(probe))
-      .agg(count(lit(1)).as("n"), sum("qty_u").cast("long").as("q"))
-      .collect().head
-    val (rEq, total) = GraftTableSource.lastPlan.get()
+    val (Array(eq), Seq(Files(rEq, total))) = ScanMetrics.collect(
+      t.filter(col("money") === lit(probe))
+        .agg(count(lit(1)).as("n"), sum("qty_u").cast("long").as("q")))
     require(rEq > 0 && rEq < total,
       s"decimal equality probe did not prune: $rEq/$total")
     // a value INSIDE the kept bin's bounds that never occurs (.26
     // cents — every real value ends .25): partition and stats keep
     // the bin, only the bloom proves it empty → zero files planned
-    GraftTableSource.lastPlan.set((-1, -1))
-    val nAbsent = t.filter(col("money") ===
-      lit(probe.add(new java.math.BigDecimal("0.01")))).count()
-    val (rAb, _) = GraftTableSource.lastPlan.get()
+    val (nAbsent, Files(rAb, _)) = ScanMetrics.rowCount(t.filter(col("money") ===
+      lit(probe.add(new java.math.BigDecimal("0.01")))))
     require(nAbsent == 0 && rAb == 0,
       s"bloom did not prove the absent value away: $rAb files planned")
-    GraftTableSource.lastPlan.set((-1, -1))
-    val rng = t.filter(col("money") >= lit(rngLo) &&
-        col("money") < lit(rngHi))
-      .agg(count(lit(1)).as("n"),
-        (sum("money") * 100).cast("long").as("c")).collect().head
-    val (rRng, _) = GraftTableSource.lastPlan.get()
+    val (Array(rng), Seq(Files(rRng, _))) = ScanMetrics.collect(
+      t.filter(col("money") >= lit(rngLo) && col("money") < lit(rngHi))
+        .agg(count(lit(1)).as("n"),
+          (sum("money") * 100).cast("long").as("c")))
     require(rRng > 0 && rRng < total,
       s"decimal range probe did not prune: $rRng/$total")
     import s.implicits._

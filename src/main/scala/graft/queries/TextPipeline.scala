@@ -544,6 +544,17 @@ object TextPipeline {
         sum(col("lp_u")).cast("long").as("score_u"))
   }
 
+  /** q132's hash-level prefilter: J = i / (na + nb − i) ≥ 1/2 on the
+    * hash-level intersection `ih`. Collisions only inflate `ih`, and the
+    * test is monotone in it; clamping `ih` to na + nb − 1 keeps the
+    * divisor ≥ 1, so any collision count keeps the pair (a superset of
+    * the exact result) instead of dividing by zero or a negative.
+    */
+  def hashJaccardKeeps(ih: Column, na: Column, nb: Column): Column = {
+    val i = least(ih, na + nb - 1)
+    call_function("div", i * 10000, na + nb - i) >= 5000
+  }
+
   /** q132 — exact set-similarity JOIN: every pair of documents whose
     * distinct 3-gram shingle Jaccard clears τ = 1/2, as an equi-join on
     * HASHED tokens with a count aggregation and an exact verification of
@@ -610,6 +621,7 @@ object TextPipeline {
     // hash-level intersection counts: i_h ≥ the true i for every pair
     // (collisions only merge), so filtering on the hash-level Jaccard
     // keeps a SUPERSET of the true result for the exact verify below
+    // (see [[hashJaccardKeeps]])
     val cand = a.hint("shuffle_merge").join(b.hint("shuffle_merge"),
         col("ha") === col("hb") && col("id_a") < col("id_b") &&
         // length filter: J ≥ 1/2 needs 2·min(na,nb) ≥ max(na,nb)
@@ -618,7 +630,7 @@ object TextPipeline {
       .groupBy(col("id_a"), col("id_b"))
       .agg(count(lit(1)).as("ih"), first(col("na")).as("na"),
         first(col("nb")).as("nb"))
-      .filter(expr("(ih * 10000) div (na + nb - ih)") >= 5000)
+      .filter(hashJaccardKeeps(col("ih"), col("na"), col("nb")))
       .select(col("id_a"), col("id_b"))
     val verify = cand
       .join(docs.select(col("doc_id").as("id_a"), col("toks").as("ta"),

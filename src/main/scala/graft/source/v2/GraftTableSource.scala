@@ -50,6 +50,10 @@ import graft.ops.{BloomIndex, SnapshotTable}
   * reject loudly (the DV anti-join is a plan-level operation this
   * row-level reader cannot express — materializeDeletes first).
   *
+  * Metrics: each scan reports `filesPlanned`, `filesTotal` and
+  * `rowsDelivered` on its own `BatchScanExec` ([[ScanMetrics]]);
+  * pruning checks read them per execution via [[ScanMetrics.collect]].
+  *
   * Supported column types: BOOLEAN, INT, BIGINT, FLOAT, DOUBLE,
   * STRING, BINARY — the snapshot-table surface. Nested/temporal
   * columns reject at schema inference.
@@ -83,25 +87,6 @@ object GraftTableSource {
     * file, the physical name of every visible column (field-id
     * resolution applied).
     */
-  /** (filesPlanned, filesTotal) of the most recent planInputPartitions
-    * in this JVM — the spec-facing pruning probe.
-    */
-  val lastPlan = new java.util.concurrent.atomic.AtomicReference[(Int, Int)]((-1, -1))
-
-  /** Rows DELIVERED by graft_table partition readers in this JVM since
-    * the last reset — the spec-facing ROW-GROUP skipping probe: with a
-    * selective pushed filter on the stats column, parquet's
-    * statistics-based row-group filtering bounds delivered rows well
-    * below the kept files' row counts (single-JVM local mode only, by
-    * construction).
-    */
-  val rowsRead = new java.util.concurrent.atomic.AtomicLong(0L)
-
-  /** True when the most recent scan in this JVM served a completely
-    * pushed aggregate from the manifest — the spec-facing probe.
-    */
-  val lastAggPush = new java.util.concurrent.atomic.AtomicBoolean(false)
-
   final case class Resolved(path: String, version: Long,
                             ver: SnapshotTable.Version,
                             schema: StructType,
@@ -1370,19 +1355,18 @@ private[v2] class GraftScanBuilder(res: GraftTableSource.Resolved)
 /** One-row scan serving a completely-pushed aggregate straight from
   * the manifest (see [[GraftScanBuilder.translate]]).
   */
-private[v2] final class GraftAggScan(res: GraftTableSource.Resolved,
+private[v2] final class GraftAggScan(val res: GraftTableSource.Resolved,
                                      schema: StructType, vals: Seq[Any])
-    extends Scan with Batch {
+    extends Scan with Batch with ScanMetrics.Reporting {
   override def readSchema(): StructType = schema
   override def toBatch: Batch = this
   override def description(): String =
     s"graft_table ${res.path}@v${res.version} MANIFEST-AGGREGATE " +
       s"[${schema.fieldNames.mkString(",")}]"
 
-  override def planInputPartitions(): Array[InputPartition] = {
-    GraftTableSource.lastAggPush.set(true)
+  override def plannedFileNames: Seq[String] = Nil
+  override def planInputPartitions(): Array[InputPartition] =
     Array(GraftAggPartition(vals))
-  }
 
   override def createReaderFactory(): PartitionReaderFactory =
     new PartitionReaderFactory {
@@ -1424,12 +1408,13 @@ private[v2] final class GraftEmptyScanBuilder(schema: StructType)
   }
 }
 
-private[v2] final class GraftScan(res: GraftTableSource.Resolved,
+private[v2] final class GraftScan(val res: GraftTableSource.Resolved,
                                   required: StructType,
                                   pushed: Array[org.apache.spark.sql.sources.Filter],
                                   limit: Option[Int] = None)
     extends Scan with Batch with SupportsReportStatistics
-    with SupportsRuntimeFiltering with SupportsReportPartitioning {
+    with SupportsRuntimeFiltering with SupportsReportPartitioning
+    with ScanMetrics.Reporting {
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
 
@@ -1636,12 +1621,6 @@ private[v2] final class GraftScan(res: GraftTableSource.Resolved,
       : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
     new GraftMicroBatchStream(res, required)
 
-  /** Surviving files of the latest plan — exposed so specs can
-    * require-assert the pruning payoff without parsing explain text.
-    */
-  @volatile var plannedFiles: Int = -1
-  @volatile var totalFiles: Int = res.ver.files.length
-
   /** The exact files the latest plan served — the GROUP set a
     * row-level rewrite replaces.
     */
@@ -1671,9 +1650,7 @@ private[v2] final class GraftScan(res: GraftTableSource.Resolved,
         }
       case _ => pruned
     }
-    plannedFiles = kept.length
     plannedFileNames = kept.map(res.ver.files)
-    GraftTableSource.lastPlan.set((kept.length, res.ver.files.length))
     // key the input partitions whenever outputPartitioning reports
     // KeyGroupedPartitioning (all partition sources projected)
     val keyed = limit.isEmpty && res.ver.part.exists(p =>
@@ -1785,8 +1762,7 @@ private[v2] final class GraftReaderFactory(
     val vec = GraftReaderFactory.openVectorized(p, bconf.value.value)
     vec.initBatch(new StructType(), InternalRow.empty)
     vec.enableReturningBatches()
-    new PartitionReader[org.apache.spark.sql.vectorized.ColumnarBatch] {
-      private var delivered = 0L
+    new ScanMetrics.CountsRows[org.apache.spark.sql.vectorized.ColumnarBatch] {
       override def next(): Boolean = vec.nextKeyValue()
       override def get(): org.apache.spark.sql.vectorized.ColumnarBatch = {
         val b = vec.getCurrentValue
@@ -1794,10 +1770,7 @@ private[v2] final class GraftReaderFactory(
         delivered += b.numRows()
         b
       }
-      override def close(): Unit = {
-        GraftTableSource.rowsRead.addAndGet(delivered)
-        vec.close()
-      }
+      override def close(): Unit = vec.close()
     }
   }
 }
@@ -2011,9 +1984,6 @@ private[v2] object GraftReaderFactory {
   private val probeMemo = new java.util.concurrent.ConcurrentHashMap[
     (String, Seq[(String, String)]), java.lang.Boolean]()
 
-  /** Footer probes actually performed (cache misses) — spec-facing. */
-  val probeCount = new java.util.concurrent.atomic.AtomicLong(0L)
-
   /** True when the predicate may apply to this file: every referenced
     * column is physically present WITH the parquet shape the
     * predicate was built for — primitive type per dtype, and for
@@ -2025,7 +1995,6 @@ private[v2] object GraftReaderFactory {
       : Boolean = {
     if (probeMemo.size > 4096) probeMemo.clear()
     probeMemo.computeIfAbsent((p.file, p.predicateCols), _ => {
-      probeCount.incrementAndGet()
       val footer = org.apache.parquet.hadoop.ParquetFileReader.readFooter(
         conf, new HPath(p.file),
         org.apache.parquet.format.converter.ParquetMetadataConverter
@@ -2102,10 +2071,9 @@ private[v2] object GraftReaderFactory {
   */
 private[v2] final class GraftPartitionReader(
     p: GraftFilePartition, base: org.apache.hadoop.conf.Configuration)
-    extends PartitionReader[InternalRow] {
+    extends ScanMetrics.CountsRows[InternalRow] {
 
   private val vec = GraftReaderFactory.openVectorized(p, base)
-  private var delivered = 0L
 
   private val fileRow: InternalRow =
     if (!p.wantsFileCol) null
@@ -2121,10 +2089,7 @@ private[v2] final class GraftPartitionReader(
       .JoinedRow(row, fileRow)
   }
 
-  override def close(): Unit = {
-    GraftTableSource.rowsRead.addAndGet(delivered)
-    vec.close()
-  }
+  override def close(): Unit = vec.close()
 }
 
 /** DYNAMIC partition overwrite — replace exactly the partitions the

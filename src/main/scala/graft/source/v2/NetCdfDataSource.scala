@@ -191,7 +191,9 @@ private[v2] final class NetCdfScan(props: Map[String, String],
   }
 
   override def createReaderFactory(): PartitionReaderFactory =
-    new NetCdfReaderFactory(required.fieldNames, filters)
+    new NetCdfReaderFactory(required.fieldNames, filters,
+      GraftWriteUtil.broadcastSessionConf(
+        org.apache.spark.sql.SparkSession.active))
 }
 
 /** One scan task: a whole file, or — for split oversized files — one
@@ -201,8 +203,14 @@ private[v2] final case class NetCdfInputPartition(
     path: String, variable: Option[String] = None,
     leadtimeIdx: Option[Int] = None) extends InputPartition
 
-private[v2] final class NetCdfReaderFactory(requiredCols: Array[String],
-                                            filters: NetCdfFilters)
+/** Carries the SESSION's Hadoop configuration as a broadcast, so
+  * `spark.hadoop.*` settings (FileSystem impls, object-store
+  * credentials) reach the executor-side opens as they reach planning.
+  */
+private[v2] final class NetCdfReaderFactory(
+    requiredCols: Array[String], filters: NetCdfFilters,
+    bconf: org.apache.spark.broadcast.Broadcast[
+      org.apache.spark.util.SerializableConfiguration])
     extends PartitionReaderFactory {
   override def createReader(partition: InputPartition): PartitionReader[InternalRow] = {
     val p = partition.asInstanceOf[NetCdfInputPartition]
@@ -211,13 +219,13 @@ private[v2] final class NetCdfReaderFactory(requiredCols: Array[String],
       p.variable.map(Set(_)).orElse(filters.variables),
       filters.timeIdx,
       p.leadtimeIdx.orElse(filters.leadtimeIdx))
-    new NetCdfPartitionReader(p.path, requiredCols, eff)
+    new NetCdfPartitionReader(p.path, requiredCols, eff, bconf.value.value)
   }
 }
 
-private[v2] final class NetCdfPartitionReader(path: String,
-                                              requiredCols: Array[String],
-                                              filters: NetCdfFilters)
+private[v2] final class NetCdfPartitionReader(
+    path: String, requiredCols: Array[String], filters: NetCdfFilters,
+    conf: org.apache.hadoop.conf.Configuration)
     extends PartitionReader[InternalRow] {
 
   private val needPayload =
@@ -227,9 +235,8 @@ private[v2] final class NetCdfPartitionReader(path: String,
   private var source: graft.source.FsByteSource = _
 
   private val rows: Iterator[InternalRow] = {
-    val conf = new org.apache.hadoop.conf.Configuration()
     val hp = new HPath(path)
-    val fs = FileSystem.get(hp.toUri, conf)
+    val fs = hp.getFileSystem(conf)
     // positioned-read source: HDF5 inputs of ANY size stream header
     // ranges + chunk byte-ranges (no whole-file buffer, no 2 GiB
     // ceiling); classic CDF buffers inside GridFile.open with its own

@@ -95,7 +95,6 @@ class BloomIndexSpec extends SparkSpec {
       "maintains both, and ALTER RENAME follows an extra column") {
     import org.apache.spark.sql.functions._
     import graft.ops.SnapshotTable
-    import graft.source.v2.GraftTableSource
     val r = java.nio.file.Files.createTempDirectory("mbloom").toString
     spark.conf.set("spark.sql.catalog.graft_mb",
       "graft.source.v2.GraftCatalog")
@@ -114,12 +113,9 @@ class BloomIndexSpec extends SparkSpec {
     assert(v1.bloomConfs.map(_.col) === Seq("okey", "pkey"))
 
     def prunedCount(cond: String): (Long, Int, Int) = {
-      GraftTableSource.lastPlan.set((-1, -1))
-      val n = spark.sql(
-        s"SELECT count(*) FROM graft_mb.db.t WHERE $cond")
-        .head.getLong(0)
-      val (pl, tot) = GraftTableSource.lastPlan.get()
-      (n, pl, tot)
+      val (r, sc) = withScan(spark.sql(
+        s"SELECT count(*) FROM graft_mb.db.t WHERE $cond"))
+      (r.getLong(0), sc.filesPlanned.toInt, sc.filesTotal.toInt)
     }
     val (n1, p1, t1) = prunedCount("okey = 7")
     assert(n1 === 1)

@@ -4,6 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import graft.ops.{BloomIndex, SnapshotTable}
+import graft.source.v2.ScanMetrics
 
 /** Typed bloom keys (r19): the per-file bloom index accepts STRING /
   * DATE / TIMESTAMP key columns natively — no 64-bit surrogate — with
@@ -176,20 +177,19 @@ class BloomTypedSpec extends SparkSpec {
   test("DSv2 pushdown: string equality and IN probes prune files " +
     "through the graft_table scan") {
     import spark.implicits._
-    import graft.source.v2.GraftTableSource
     val path = freshPath()
     val df = (0 until 800).map(i => (i.toLong, s"u${i / 100}"))
       .toDF("s", "url")
     SnapshotTable.append(df, path, 8, statsCol = Some("s"),
       bloomCol = Some("url"), bloomExpectedPerFile = 4096)
     val t = spark.read.format("graft_table").option("path", path).load()
-    GraftTableSource.lastPlan.set((-1, -1))
-    assert(t.filter(col("url") === "u3").count() === 100)
-    val (p1, t1) = GraftTableSource.lastPlan.get()
+    val (n1, s1) = ScanMetrics.rowCount(t.filter(col("url") === "u3"))
+    assert(n1 === 100)
+    val (p1, t1) = (s1.filesPlanned, s1.filesTotal)
     assert(p1 > 0 && p1 < t1, s"EqualTo(string) planned $p1 of $t1")
-    GraftTableSource.lastPlan.set((-1, -1))
-    assert(t.filter(col("url").isin("u0", "u7")).count() === 200)
-    val (p2, t2) = GraftTableSource.lastPlan.get()
+    val (n2, s2) = ScanMetrics.rowCount(t.filter(col("url").isin("u0", "u7")))
+    assert(n2 === 200)
+    val (p2, t2) = (s2.filesPlanned, s2.filesTotal)
     assert(p2 > 0 && p2 < t2, s"In(string) planned $p2 of $t2")
   }
 }

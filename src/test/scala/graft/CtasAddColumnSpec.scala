@@ -5,7 +5,7 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 import graft.ops.SnapshotTable
-import graft.source.v2.GraftTableSource
+import graft.source.v2.ScanMetrics
 
 /** Atomic CTAS/RTAS through the staging catalog, and metadata-only
   * ALTER TABLE ADD COLUMN.
@@ -92,10 +92,10 @@ class CtasAddColumnSpec extends SparkSpec {
     val ver = SnapshotTable.readVersion(spark, p,
       SnapshotTable.latestVersion(p))
     assert(ver.part.exists(_.transform == "bucket"))
-    GraftTableSource.lastPlan.set((-1, -1))
-    assert(spark.sql("SELECT * FROM graft_ctas.db.pc WHERE k = 17")
-      .count() === 1)
-    val (planned, total) = GraftTableSource.lastPlan.get()
+    val (n, sc) = ScanMetrics.rowCount(
+      spark.sql("SELECT * FROM graft_ctas.db.pc WHERE k = 17"))
+    assert(n === 1)
+    val (planned, total) = (sc.filesPlanned, sc.filesTotal)
     assert(planned < total, s"bucket pruning failed: $planned of $total")
     spark.sql("DROP TABLE graft_ctas.db.pc")
   }

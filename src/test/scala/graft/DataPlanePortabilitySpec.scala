@@ -5,7 +5,6 @@ import java.nio.file.Files
 import org.apache.spark.sql.functions._
 
 import graft.ops.SnapshotTable
-import graft.source.v2.GraftTableSource
 
 /** Two portability/staleness pins:
   *
@@ -46,10 +45,10 @@ class DataPlanePortabilitySpec extends SparkSpec {
       .head.getLong(0) === (0L until 2000L).map(_ * 2).sum)
     // predicated read: manifest pruning + row-group predicate, both
     // opening files through fs.graftmock.impl
-    GraftTableSource.lastPlan.set((-1, -1))
-    assert(spark.sql("SELECT count(*) FROM gmock.db.t WHERE k < 100")
-      .head.getLong(0) === 100)
-    val (planned, total) = GraftTableSource.lastPlan.get()
+    val (r, sc) = withScan(
+      spark.sql("SELECT count(*) FROM gmock.db.t WHERE k < 100"))
+    assert(r.getLong(0) === 100)
+    val (planned, total) = (sc.filesPlanned, sc.filesTotal)
     assert(planned > 0 && planned < total,
       s"stats pruning failed over the mock scheme: $planned of $total")
     // SQL MERGE: the row-level rewrite's executor parquet WRITERS

@@ -7,7 +7,7 @@ import org.apache.spark.sql.types.{DataTypes, DecimalType}
 
 import graft.ops.{BloomIndex, SnapshotTable, TypedBounds}
 import graft.ops.SnapshotTable.{PartField, PartSpec}
-import graft.source.v2.GraftTableSource
+import graft.source.v2.ScanMetrics
 
 /** The DECIMAL plane (r20): money-typed columns through every typed
   * surface — per-file bounds, hidden partitions (identity / truncate /
@@ -65,12 +65,11 @@ class DecimalPlaneSpec extends SparkSpec {
       "table max must be 399.25")
     assert(cs.ndvOf(ver.files.indices).exists(_ > 300L),
       "decimal NDV sketch must ride the same aggregate")
-    GraftTableSource.lastPlan.set((-1, -1))
     val t = spark.read.format("graft_table").option("path", path).load()
     assert(t.schema("price").dataType === DecimalType(18, 2))
-    val n = t.filter(col("price") <
-      lit(new java.math.BigDecimal("100.00"))).count()
-    val (read, total) = GraftTableSource.lastPlan.get()
+    val (n, sc) = ScanMetrics.rowCount(t.filter(col("price") <
+      lit(new java.math.BigDecimal("100.00"))))
+    val (read, total) = (sc.filesPlanned, sc.filesTotal)
     assert(n === 100)
     assert(read < total, s"decimal stats pruning failed: $read/$total")
   }
@@ -82,11 +81,11 @@ class DecimalPlaneSpec extends SparkSpec {
     SnapshotTable.appendPartitioned(moneyDf(200),
       p1, PartSpec(Seq(PartField("price", "truncate", 100L,
         "decimal(18,2)"))), statsCol = Some("k"))
-    GraftTableSource.lastPlan.set((-1, -1))
     val t1 = spark.read.format("graft_table").option("path", p1).load()
-    assert(t1.filter(col("price") ===
-      lit(new java.math.BigDecimal("7.25"))).count() === 1)
-    val (r1, tot1) = GraftTableSource.lastPlan.get()
+    val (n1, s1) = ScanMetrics.rowCount(t1.filter(col("price") ===
+      lit(new java.math.BigDecimal("7.25"))))
+    assert(n1 === 1)
+    val (r1, tot1) = (s1.filesPlanned, s1.filesTotal)
     assert(r1 < tot1, s"truncate partition pruning failed: $r1/$tot1")
     // bucket(8): the driver's unscaled-long hash and the executor's
     // derived-column hash must route/probe identically
@@ -94,11 +93,11 @@ class DecimalPlaneSpec extends SparkSpec {
     SnapshotTable.appendPartitioned(moneyDf(200),
       p2, PartSpec(Seq(PartField("price", "bucket", 8L,
         "decimal(18,2)"))), statsCol = Some("k"))
-    GraftTableSource.lastPlan.set((-1, -1))
     val t2 = spark.read.format("graft_table").option("path", p2).load()
-    assert(t2.filter(col("price") ===
-      lit(new java.math.BigDecimal("123.25"))).count() === 1)
-    val (r2, tot2) = GraftTableSource.lastPlan.get()
+    val (n2, s2) = ScanMetrics.rowCount(t2.filter(col("price") ===
+      lit(new java.math.BigDecimal("123.25"))))
+    assert(n2 === 1)
+    val (r2, tot2) = (s2.filesPlanned, s2.filesTotal)
     assert(r2 < tot2, s"bucket partition pruning failed: $r2/$tot2")
     // routing really was value-pure: every partition tuple holds one
     // bucket value per file
@@ -121,11 +120,11 @@ class DecimalPlaneSpec extends SparkSpec {
       Seq(new java.math.BigDecimal("123.25")))
     assert(hit < total, s"decimal bloom probe failed: $hit/$total")
     assert(scan.count() === 1)
-    GraftTableSource.lastPlan.set((-1, -1))
     val t = spark.read.format("graft_table").option("path", path).load()
-    assert(t.filter(col("price") ===
-      lit(new java.math.BigDecimal("123.25"))).count() === 1)
-    val (read, tot) = GraftTableSource.lastPlan.get()
+    val (n, sc) = ScanMetrics.rowCount(t.filter(col("price") ===
+      lit(new java.math.BigDecimal("123.25"))))
+    assert(n === 1)
+    val (read, tot) = (sc.filesPlanned, sc.filesTotal)
     assert(read < tot, s"DSv2 decimal bloom pruning failed: $read/$tot")
   }
 
@@ -184,10 +183,10 @@ class DecimalPlaneSpec extends SparkSpec {
       "'stats_col'='k', 'stats_cols'='price')")
     spark.sql("INSERT INTO graft_dec.db.t " +
       "SELECT id, CAST(id AS DECIMAL(18,2)) + 0.25 FROM range(400)")
-    GraftTableSource.lastPlan.set((-1, -1))
-    assert(spark.sql("SELECT count(*) FROM graft_dec.db.t " +
-      "WHERE price < 100.00").head.getLong(0) === 100)
-    val (read, total) = GraftTableSource.lastPlan.get()
+    val (cr, sc) = withScan(spark.sql("SELECT count(*) FROM graft_dec.db.t " +
+      "WHERE price < 100.00"))
+    assert(cr.getLong(0) === 100)
+    val (read, total) = (sc.filesPlanned, sc.filesTotal)
     assert(read < total,
       s"writer-tracked decimal stats did not prune: $read/$total")
     spark.sql("DROP TABLE graft_dec.db.t")

@@ -5,7 +5,7 @@ import java.nio.file.Files
 import scala.jdk.CollectionConverters._
 
 import graft.ops.SnapshotTable
-import graft.source.v2.GraftTableSource
+import graft.source.v2.ScanMetrics
 
 /** The snapshot table as a Spark SQL catalog: CREATE TABLE (with
   * partition transforms + layout TBLPROPERTIES), INSERT INTO routed
@@ -48,9 +48,10 @@ class GraftCatalogSpec extends SparkSpec {
       p, SnapshotTable.latestVersion(p))
     assert(ver.part.exists(_.transform == "bucket"))
     assert(ver.stats.exists(_.col == "v"))
-    GraftTableSource.lastPlan.set((-1, -1))
-    assert(spark.sql("SELECT * FROM graft.db.t WHERE k = 7").count() === 1)
-    val (planned, total) = GraftTableSource.lastPlan.get()
+    val (n, sc) = ScanMetrics.rowCount(
+      spark.sql("SELECT * FROM graft.db.t WHERE k = 7"))
+    assert(n === 1)
+    val (planned, total) = (sc.filesPlanned, sc.filesTotal)
     assert(planned < total, s"bucket pruning failed: $planned of $total")
 
     // time travel: version and wall clock
@@ -373,10 +374,9 @@ class GraftCatalogSpec extends SparkSpec {
     assert(v2.op === "MERGE" && v2.part.contains(spec))
     assertPurity()
     // partition pruning still exact after the rewrite
-    GraftTableSource.lastPlan.set((-1, -1))
-    assert(spark.sql("SELECT v FROM graft.db.pm WHERE k = 15")
-      .head.getLong(0) === 1015)
-    val (planned, total) = GraftTableSource.lastPlan.get()
+    val (r, sc) = withScan(spark.sql("SELECT v FROM graft.db.pm WHERE k = 15"))
+    assert(r.getLong(0) === 1015)
+    val (planned, total) = (sc.filesPlanned, sc.filesTotal)
     assert(planned < total, s"post-merge pruning failed: $planned/$total")
 
     // a MERGE that UPDATES THE PARTITION SOURCE moves rows between
@@ -570,12 +570,11 @@ class GraftCatalogSpec extends SparkSpec {
       SnapshotTable.latestVersion(p))
     assert(v3.op === "OVERWRITE" && v3.part.isDefined &&
       v3.partValues.exists(_.length == v3.files.length))
-    GraftTableSource.lastPlan.set((-1, -1))
-    assert(spark.sql("SELECT count(*) FROM graft.db.dyn WHERE d < 10")
-      .head.getLong(0) === 10)
-    assert(GraftTableSource.lastPlan.get() match {
-      case (planned, total) => planned < total
-    }, "post-overwrite partition pruning failed")
+    val (dr, ds) = withScan(
+      spark.sql("SELECT count(*) FROM graft.db.dyn WHERE d < 10"))
+    assert(dr.getLong(0) === 10)
+    assert(ds.filesPlanned < ds.filesTotal,
+      "post-overwrite partition pruning failed")
 
     // bucket transform: the replaced set is exact values, no range
     spark.sql("""CREATE TABLE graft.db.dynb (k BIGINT, v BIGINT)
@@ -638,12 +637,10 @@ class GraftCatalogSpec extends SparkSpec {
         s"streamed file $f not partition-pure")
     }
     // pruning works on the streamed table
-    GraftTableSource.lastPlan.set((-1, -1))
-    assert(spark.sql("SELECT v FROM graft.db.psink WHERE k = 42")
-      .head.getLong(0) === 84)
-    assert(GraftTableSource.lastPlan.get() match {
-      case (planned, total) => planned > 0 && planned < total
-    })
+    val (pr, ps) = withScan(
+      spark.sql("SELECT v FROM graft.db.psink WHERE k = 42"))
+    assert(pr.getLong(0) === 84)
+    assert(ps.filesPlanned > 0 && ps.filesPlanned < ps.filesTotal)
     // delta arrives exactly once; idle restart commits nothing
     SnapshotTable.append(
       (201L to 230L).map(k => (k, k * 2)).toDF("k", "v"), src, 1)

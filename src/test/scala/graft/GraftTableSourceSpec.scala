@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.ops.SnapshotTable
 import graft.ops.SnapshotTable.PartSpec
-import graft.source.v2.GraftTableSource
+import graft.source.v2.{GraftTableSource, ScanMetrics}
 
 /** The snapshot table as a DSv2 format: `spark.read.format
   * ("graft_table")` with manifest-driven filter pushdown — stats
@@ -54,18 +54,18 @@ class GraftTableSourceSpec extends SparkSpec {
       statsCol = Some("k"))
     val df = spark.read.format("graft_table").option("path", path).load()
       .filter(col("k").between(301, 400))
-    GraftTableSource.lastPlan.set((-1, -1))
-    assert(df.count() === 100)
-    val (planned, total) = GraftTableSource.lastPlan.get()
+    val (n, sc) = ScanMetrics.rowCount(df)
+    assert(n === 100)
+    val (planned, total) = (sc.filesPlanned, sc.filesTotal)
     assert(total === 10 && planned >= 1 && planned <= 2,
       s"stats pushdown did not prune: $planned of $total")
     assert(df.agg(sum("k")).head.getLong(0) === (301L to 400L).sum)
     // IN-list pruning
-    GraftTableSource.lastPlan.set((-1, -1))
     val in = spark.read.format("graft_table").option("path", path).load()
       .filter(col("k").isin(7L, 907L))
-    assert(in.count() === 2)
-    assert(GraftTableSource.lastPlan.get()._1 <= 2)
+    val (nIn, sIn) = ScanMetrics.rowCount(in)
+    assert(nIn === 2)
+    assert(sIn.filesPlanned <= 2)
   }
 
   test("hidden-partition predicates prune through the transform — " +
@@ -74,22 +74,22 @@ class GraftTableSourceSpec extends SparkSpec {
     val path = freshPath()
     SnapshotTable.appendPartitioned(
       (1L to 400L).toDF("id"), path, PartSpec("id", "bucket", 8))
-    GraftTableSource.lastPlan.set((-1, -1))
     val one = spark.read.format("graft_table").option("path", path).load()
       .filter(col("id") === 133L)
-    assert(one.count() === 1)
-    val (planned, total) = GraftTableSource.lastPlan.get()
+    val (n1, s1) = ScanMetrics.rowCount(one)
+    assert(n1 === 1)
+    val (planned, total) = (s1.filesPlanned, s1.filesTotal)
     assert(total === 8 && planned === 1,
       s"bucket pushdown did not prune: $planned of $total")
     // truncate range pruning
     val p2 = freshPath()
     SnapshotTable.appendPartitioned(
       (0L until 1000L).toDF("x"), p2, PartSpec("x", "truncate", 100))
-    GraftTableSource.lastPlan.set((-1, -1))
     val r = spark.read.format("graft_table").option("path", p2).load()
       .filter(col("x") >= 250L && col("x") <= 449L)
-    assert(r.count() === 200)
-    assert(GraftTableSource.lastPlan.get() === ((3, 10)))
+    val (n2, s2) = ScanMetrics.rowCount(r)
+    assert(n2 === 200)
+    assert((s2.filesPlanned, s2.filesTotal) === ((3L, 10L)))
   }
 
   test("bloom equality refines the surviving set") {
@@ -98,11 +98,11 @@ class GraftTableSourceSpec extends SparkSpec {
     SnapshotTable.append(
       (1L to 400L).map(k => (k, k)).toDF("k", "v"), path, 8,
       bloomCol = Some("k"))
-    GraftTableSource.lastPlan.set((-1, -1))
     val df = spark.read.format("graft_table").option("path", path).load()
       .filter(col("k") === 97L)
-    assert(df.count() === 1)
-    val (planned, total) = GraftTableSource.lastPlan.get()
+    val (n, sc) = ScanMetrics.rowCount(df)
+    assert(n === 1)
+    val (planned, total) = (sc.filesPlanned, sc.filesTotal)
     assert(total === 8 && planned < total,
       s"bloom pushdown did not prune: $planned of $total")
   }
@@ -211,10 +211,10 @@ class GraftTableSourceSpec extends SparkSpec {
     withSQLConf(
       "spark.sql.optimizer.dynamicPartitionPruning.useStats" -> "false",
       "spark.sql.autoBroadcastJoinThreshold" -> "1048576") {
-      GraftTableSource.lastPlan.set((-1, -1))
       val joined = fact.join(dim, col("x") === col("x2"))
-      assert(joined.count() === 2)
-      val (planned, total) = GraftTableSource.lastPlan.get()
+      val (n, sc) = ScanMetrics.rowCount(joined)
+      assert(n === 2)
+      val (planned, total) = (sc.filesPlanned, sc.filesTotal)
       assert(total === 10 && planned === 1,
         s"runtime filter did not prune: $planned of $total")
     }
@@ -228,25 +228,22 @@ class GraftTableSourceSpec extends SparkSpec {
       (1L to 1000L).map(k => (k, k * 2)).toDF("k", "v"), path, 10,
       statsCol = Some("k"))
     val t = spark.read.format("graft_table").option("path", path).load()
-    GraftTableSource.lastAggPush.set(false)
-    val r = t.agg(count(lit(1)), min("k"), max("k")).collect().head
+    val (r, sr) = withScan(t.agg(count(lit(1)), min("k"), max("k")))
     assert((r.getLong(0), r.getLong(1), r.getLong(2)) === ((1000L, 1L, 1000L)))
-    assert(GraftTableSource.lastAggPush.get(),
-      "aggregate was not manifest-served")
+    assert(sr.manifestAgg, "aggregate was not manifest-served")
     // a residual predicate declines the pushdown and stays correct
-    GraftTableSource.lastAggPush.set(false)
-    assert(t.filter(col("k") > 500L).agg(count(lit(1)))
-      .head.getLong(0) === 500L)
-    assert(!GraftTableSource.lastAggPush.get())
+    val (nf, sf) = ScanMetrics.rowCount(t.filter(col("k") > 500L))
+    assert(nf === 500L)
+    assert(!sf.manifestAgg)
     // min/max on a non-stats column declines
-    GraftTableSource.lastAggPush.set(false)
-    assert(t.agg(max("v")).head.getLong(0) === 2000L)
-    assert(!GraftTableSource.lastAggPush.get())
+    val (mv, sv) = withScan(t.agg(max("v")))
+    assert(mv.getLong(0) === 2000L)
+    assert(!sv.manifestAgg)
     // grouped aggregates decline
-    GraftTableSource.lastAggPush.set(false)
-    assert(t.groupBy((col("k") % 2).as("g")).agg(count(lit(1)))
-      .count() === 2)
-    assert(!GraftTableSource.lastAggPush.get())
+    val (groups, sg) = ScanMetrics.collect(
+      t.groupBy((col("k") % 2).as("g")).agg(count(lit(1))))
+    assert(groups.length === 2)
+    assert(!sg.exists(_.manifestAgg))
   }
 
   test("DSv2 write: a first append CREATES the table, later appends " +
@@ -269,9 +266,9 @@ class GraftTableSourceSpec extends SparkSpec {
     assert(df.count() === 150)
     assert(df.agg(sum("v")).head.getLong(0) === (1L to 150L).map(_ * 2).sum)
     // the inherited stats still prune through the read path
-    GraftTableSource.lastPlan.set((-1, -1))
-    assert(df.filter(col("k").between(120L, 140L)).count() === 21)
-    assert(GraftTableSource.lastPlan.get()._1 < 6)
+    val (n, sc) = ScanMetrics.rowCount(df.filter(col("k").between(120L, 140L)))
+    assert(n === 21)
+    assert(sc.filesPlanned < 6)
   }
 
   test("DSv2 write into a hidden-partitioned table routes through " +
@@ -285,9 +282,9 @@ class GraftTableSourceSpec extends SparkSpec {
       .option("path", path).save()
     val df = spark.read.format("graft_table").option("path", path).load()
     assert(df.count() === 800)
-    GraftTableSource.lastPlan.set((-1, -1))
-    assert(df.filter(col("x") === 650L).count() === 1)
-    val (planned, total) = GraftTableSource.lastPlan.get()
+    val (n, sc) = ScanMetrics.rowCount(df.filter(col("x") === 650L))
+    assert(n === 1)
+    val (planned, total) = (sc.filesPlanned, sc.filesTotal)
     assert(total === 8 && planned === 1,
       s"partition purity lost through DSv2 write: $planned of $total")
   }
@@ -398,14 +395,14 @@ class GraftTableSourceSpec extends SparkSpec {
       (1L to 1000L).map(k => (k, k * 2)).toDF("k", "v"), path, 10,
       statsCol = Some("k"))
     val t = spark.read.format("graft_table").option("path", path).load()
-    GraftTableSource.lastPlan.set((-1, -1))
-    assert(t.limit(7).collect().length === 7)
-    assert(GraftTableSource.lastPlan.get()._1 === 1,
-      s"LIMIT 7 planned ${GraftTableSource.lastPlan.get()._1} files")
-    GraftTableSource.lastPlan.set((-1, -1))
-    assert(t.limit(150).collect().length === 150)
-    assert(GraftTableSource.lastPlan.get()._1 === 2,
-      s"LIMIT 150 planned ${GraftTableSource.lastPlan.get()._1} files")
+    val (r7, Seq(s7)) = ScanMetrics.collect(t.limit(7))
+    assert(r7.length === 7)
+    assert(s7.filesPlanned === 1,
+      s"LIMIT 7 planned ${s7.filesPlanned} files")
+    val (r150, Seq(s150)) = ScanMetrics.collect(t.limit(150))
+    assert(r150.length === 150)
+    assert(s150.filesPlanned === 2,
+      s"LIMIT 150 planned ${s150.filesPlanned} files")
   }
 
   test("a file: URI table root serves end-to-end THROUGH the Hadoop " +
@@ -427,9 +424,9 @@ class GraftTableSourceSpec extends SparkSpec {
     assert(t.count() === 600)
     assert(t.agg(sum("v")).head.getLong(0) === (1L to 600L).map(_ * 2).sum)
     // pruning arithmetic works on URI manifests too
-    GraftTableSource.lastPlan.set((-1, -1))
-    assert(t.filter(col("k").between(101, 200)).count() === 100)
-    val (planned, total) = GraftTableSource.lastPlan.get()
+    val (n, sc) = ScanMetrics.rowCount(t.filter(col("k").between(101, 200)))
+    assert(n === 100)
+    val (planned, total) = (sc.filesPlanned, sc.filesTotal)
     assert(total === 6 && planned < total,
       s"URI-rooted stats pushdown did not prune: $planned of $total")
     // the row-level path (SQL-equivalent surface) commits there too
@@ -474,21 +471,72 @@ class GraftTableSourceSpec extends SparkSpec {
     }
     val t = spark.read.format("graft_table").option("path", path).load()
     // one file — file-level pruning cannot help; row-group stats must
-    GraftTableSource.rowsRead.set(0L)
-    assert(t.filter(col("k").between(1000, 1999)).count() === 1000)
-    val delivered = GraftTableSource.rowsRead.get()
+    val (nk, sk) = ScanMetrics.rowCount(t.filter(col("k").between(1000, 1999)))
+    assert(nk === 1000)
+    val delivered = sk.rowsDelivered
     assert(delivered >= 1000 && delivered < 100000,
       s"row-group skipping did not bound the read: $delivered of 200000")
     // an unindexed-but-integral column's predicate skips too (files
     // are sorted by k, and v = 2k is correlated)
-    GraftTableSource.rowsRead.set(0L)
-    assert(t.filter(col("v") <= 2000).count() === 1000)
-    val dv = GraftTableSource.rowsRead.get()
+    val (nv, sv) = ScanMetrics.rowCount(t.filter(col("v") <= 2000))
+    assert(nv === 1000)
+    val dv = sv.rowsDelivered
     assert(dv < 100000,
       s"non-stats integral predicate did not reach row groups: $dv")
     // correctness unchanged with the filter present
     assert(t.filter(col("k").between(1000, 1999)).agg(sum("v"))
       .head.getLong(0) === (1000L to 1999L).map(_ * 2).sum)
+  }
+
+  test("scan counts are per execution: two threads probing two tables " +
+      "on one session each read exactly their own counts, every round") {
+    import spark.implicits._
+    import scala.concurrent.{Await, ExecutionContext, Future}
+    import scala.concurrent.duration._
+    val pa = freshPath()
+    SnapshotTable.appendPartitioned(
+      (0L until 1000L).toDF("x"), pa, PartSpec("x", "truncate", 100))
+    val pb = freshPath()
+    SnapshotTable.appendPartitioned(
+      (1L to 400L).toDF("id"), pb, PartSpec("id", "bucket", 8))
+    def read(p: String) = spark.read.format("graft_table").option("path", p)
+      .load()
+    // 3 of 10 truncate(100) files, 100 rows each; 1 of 8 bucket files
+    def probeA() = ScanMetrics.rowCount(read(pa)
+      .filter(col("x") >= 250L && col("x") <= 449L))
+    def probeB() = ScanMetrics.rowCount(read(pb).filter(col("id") === 133L))
+    // B's one file holds whatever rows hash to 133's bucket: pin that
+    // count once, alone, against the manifest's per-file row counts
+    val soloRows = probeB()._2.rowsDelivered
+    assert(SnapshotTable.readVersion(spark, pb, 1).fileRows.get
+      .contains(soloRows))
+    // the metric names ride the executed plan's scan node
+    val q = read(pa).filter(col("x") < 50L)
+    q.collect()
+    val scanNode = q.queryExecution.executedPlan.collectFirst {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => b
+    }.get
+    assert(Set(ScanMetrics.FilesPlanned, ScanMetrics.FilesTotal,
+      ScanMetrics.RowsDelivered).subsetOf(scanNode.metrics.keySet))
+    assert(scanNode.metrics(ScanMetrics.FilesPlanned).value === 1L)
+    // a DataFrame that already ran an action still reads its counts
+    assert(ScanMetrics.collect(q)._2.map(_.filesPlanned) === Seq(1L))
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
+    implicit val ec: ExecutionContext = ExecutionContext.fromExecutor(pool)
+    try (1 to 20).foreach { round =>
+      val start = new java.util.concurrent.CountDownLatch(1)
+      val fa = Future { start.await(); probeA() }
+      val fb = Future { start.await(); probeB() }
+      start.countDown()
+      val (na, sa) = Await.result(fa, 2.minutes)
+      val (nb, sb) = Await.result(fb, 2.minutes)
+      assert(na === 200 && sa.path === pa && sa.filesPlanned === 3 &&
+        sa.filesTotal === 10 && sa.rowsDelivered === 300,
+        s"round $round, table A: $sa")
+      assert(nb === 1 && sb.path === pb && sb.filesPlanned === 1 &&
+        sb.filesTotal === 8 && sb.rowsDelivered === soloRows,
+        s"round $round, table B: $sb")
+    } finally pool.shutdown()
   }
 
   test("native streaming sink: writeStream into a graft_table, " +

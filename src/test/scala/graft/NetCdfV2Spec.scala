@@ -111,4 +111,29 @@ class NetCdfV2Spec extends SparkSpec {
       .agg(sum(when(!isnan(col("v")), col("v")))).head().getDouble(0)
     assert(math.abs(vSum - naive) < 1e-9)
   }
+
+  test("executor-side reads go through the session's Hadoop conf: a " +
+    "FileSystem scheme registered only there serves the scan") {
+    // a scheme no other suite opens, with its FileSystem cache off, so
+    // no instance cached by an earlier open can stand in for the conf
+    withSQLConf(
+      "fs.graftnc.impl" -> classOf[NetCdfSchemeFs].getName,
+      "fs.graftnc.impl.disable.cache" -> "true") {
+      val viaScheme = spark.read.format("netcdf").load(s"graftnc:$glob")
+        .select(explode(col("values")).as("v"))
+        .agg(count(lit(1)), sum(when(!isnan(col("v")), col("v")))).head()
+      val local = spark.read.format("netcdf").load(glob)
+        .select(explode(col("values")).as("v"))
+        .agg(count(lit(1)), sum(when(!isnan(col("v")), col("v")))).head()
+      assert(viaScheme === local)
+    }
+  }
+}
+
+/** The local filesystem under the `graftnc` scheme (see
+  * [[MockObjectStoreFs]]), registered by [[NetCdfV2Spec]] only.
+  */
+class NetCdfSchemeFs extends MockObjectStoreFs {
+  override def getScheme: String = "graftnc"
+  override def getUri: java.net.URI = java.net.URI.create("graftnc:///")
 }

@@ -68,6 +68,18 @@ class R21OptimizationSpec extends SparkSpec {
     }
   }
 
+  test("q132 prefilter keeps every pair however far collisions inflate " +
+      "the hash-level intersection (ih = na + nb included)") {
+    import spark.implicits._
+    val kept = Seq(3L, 4L, 9L, 10L, 11L).map(ih => (ih, 5, 5))
+      .toDF("ih", "na", "nb")
+      .filter(queries.TextPipeline.hashJaccardKeeps(
+        col("ih"), col("na"), col("nb")))
+      .select("ih").as[Long].collect().toSet
+    // 3/7 < 1/2 drops; 4/6 keeps; 9, 10 and 11 clamp to 9/1
+    assert(kept === Set(4L, 9L, 10L, 11L))
+  }
+
   test("q136 basket-pattern pairs match the brute-force gram self-join") {
     val SubL = 40
     for (sf <- sfs) {

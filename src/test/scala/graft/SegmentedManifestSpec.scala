@@ -5,6 +5,7 @@ import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 
 import graft.ops.SnapshotTable
+import graft.source.v2.ScanMetrics
 
 /** SEGMENTED manifests: above a file-count threshold, a commit writes
   * an O(Δ) header referencing immutable file-list segments instead of
@@ -327,12 +328,10 @@ class SegmentedManifestSpec extends SparkSpec {
       val v3 = SnapshotTable.readVersion(spark, path, 3)
       assert(v3.colStats.map(_.col) === Seq("score"))
       assert(v3.colStats.head.mins.length === v3.files.length)
-      import graft.source.v2.GraftTableSource
-      GraftTableSource.lastPlan.set((-1, -1))
-      assert(spark.sql(
-        "SELECT count(*) FROM graft_segq.db.t WHERE score >= 54.0")
-        .head.getLong(0) === 14L)
-      val (p, tot) = GraftTableSource.lastPlan.get()
+      val (cr, sc) = withScan(spark.sql(
+        "SELECT count(*) FROM graft_segq.db.t WHERE score >= 54.0"))
+      assert(cr.getLong(0) === 14L)
+      val (p, tot) = (sc.filesPlanned, sc.filesTotal)
       assert(p > 0 && p < tot,
         s"SQL-declared stats must prune: planned $p of $tot")
     }
@@ -341,7 +340,6 @@ class SegmentedManifestSpec extends SparkSpec {
   test("typed stats survive segmentation end to end: pruning, " +
       "manifest-served aggregates, ANALYZE re-declaration") {
     withSegConf(3) {
-      import graft.source.v2.GraftTableSource
       import spark.implicits._
       val path = freshPath()
       val data = (0 until 400).map(i =>
@@ -351,14 +349,14 @@ class SegmentedManifestSpec extends SparkSpec {
       val v1 = SnapshotTable.readVersion(spark, path, 1)
       assert(v1.segRefs.exists(_.nonEmpty))
       val t = spark.read.format("graft_table").option("path", path).load()
-      GraftTableSource.lastPlan.set((-1, -1))
-      assert(t.filter(col("name") < "n-0050").count() === 50)
-      val (p, tot) = GraftTableSource.lastPlan.get()
+      val (n, sc) = ScanMetrics.rowCount(t.filter(col("name") < "n-0050"))
+      assert(n === 50)
+      val (p, tot) = (sc.filesPlanned, sc.filesTotal)
       assert(p > 0 && p < tot, s"typed pruning failed: $p of $tot")
-      GraftTableSource.lastAggPush.set(false)
-      val mx = t.agg(max("name")).collect().head.getString(0)
+      val (mr, sm) = withScan(t.agg(max("name")))
+      val mx = mr.getString(0)
       assert(mx === "n-0399")
-      assert(GraftTableSource.lastAggPush.get(),
+      assert(sm.manifestAgg,
         "typed MAX must serve from the segmented manifest")
       // ANALYZE re-declaration cannot carry (bounds change shape):
       // self-verification falls back to a fresh full segment

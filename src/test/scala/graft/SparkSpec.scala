@@ -1,7 +1,9 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
+
+import graft.source.v2.ScanMetrics
 
 /** Base for specs needing a SparkSession — one shared local session per
   * JVM (GraftSession.getOrCreate semantics), small core count to keep
@@ -20,5 +22,13 @@ trait SparkSpec extends AnyFunSuite {
       case (k, Some(v)) => conf.set(k, v)
       case (k, None) => conf.unset(k)
     }
+  }
+
+  /** The one row `df` collects and the counts of its one graft_table
+    * scan, read from that execution's plan.
+    */
+  def withScan(df: DataFrame): (Row, ScanMetrics.ScanCounts) = {
+    val (Array(r), Seq(sc)) = ScanMetrics.collect(df)
+    (r, sc)
   }
 }

@@ -2,10 +2,11 @@ package graft
 
 import java.nio.file.Files
 
+import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import graft.ops.SnapshotTable
 import graft.ops.SnapshotTable.{PartField, PartSpec}
-import graft.source.v2.GraftTableSource
+import graft.source.v2.ScanMetrics
 
 /** TYPED, MULTI-COLUMN hidden partitioning: DATE/TIMESTAMP sources
   * under days()/months()/years()/hours(), STRING identity/truncate/
@@ -31,8 +32,13 @@ class TypedPartitionSpec extends SparkSpec {
     r
   }
 
-  private def resetPlan(): Unit = GraftTableSource.lastPlan.set((-1, -1))
-  private def lastPlan(): (Int, Int) = GraftTableSource.lastPlan.get()
+  /** (files planned, files total) of `sql`'s one graft_table scan,
+    * with its one result row.
+    */
+  private def sqlScan(sql: String): (Row, Long, Long) = {
+    val (r, sc) = withScan(spark.sql(sql))
+    (r, sc.filesPlanned, sc.filesTotal)
+  }
 
   private def scanPath(path: String) =
     spark.read.format("graft_table").option("path", path).load()
@@ -74,41 +80,39 @@ class TypedPartitionSpec extends SparkSpec {
     }
 
     // prune on the DATE dimension (equality through days())
-    resetPlan()
     val d1 = scanPath(path).filter(col("d") === lit("2024-03-11").cast("date"))
-    assert(d1.count() === 100)
-    val (p1, t1) = lastPlan()
+    val (n1, s1) = ScanMetrics.rowCount(d1)
+    assert(n1 === 100)
+    val (p1, t1) = (s1.filesPlanned, s1.filesTotal)
     assert(p1 > 0 && p1 < t1, s"date pruning failed: $p1 of $t1")
 
     // prune on the STRING dimension (equality through bucket)
-    resetPlan()
     val d2 = scanPath(path).filter(col("tag") === "tag-3")
-    assert(d2.count() === (0L until 400L).count(_ % 7 == 3))
-    val (p2, t2) = lastPlan()
+    val (n2, s2) = ScanMetrics.rowCount(d2)
+    assert(n2 === (0L until 400L).count(_ % 7 == 3))
+    val (p2, t2) = (s2.filesPlanned, s2.filesTotal)
     assert(p2 > 0 && p2 < t2, s"bucket pruning failed: $p2 of $t2")
 
     // both together prune to (at most) one partition tuple's file(s)
-    resetPlan()
     val d3 = scanPath(path)
       .filter(col("d") === lit("2024-03-11").cast("date") &&
         col("tag") === "tag-3")
-    assert(d3.count() ===
-      (0L until 400L).count(i => i % 4 == 1 && i % 7 == 3))
-    val (p3, _) = lastPlan()
+    val (n3, s3) = ScanMetrics.rowCount(d3)
+    assert(n3 === (0L until 400L).count(i => i % 4 == 1 && i % 7 == 3))
+    val p3 = s3.filesPlanned
     assert(p3 <= math.min(p1, p2), s"combined pruning kept $p3 files")
 
     // DATE range prunes through the monotone days() transform
-    resetPlan()
-    assert(scanPath(path)
-      .filter(col("d") >= lit("2024-03-12").cast("date"))
-      .count() === 200)
-    assert(lastPlan()._1 < t1, "date range pruning failed")
+    val (n4, s4) = ScanMetrics.rowCount(scanPath(path)
+      .filter(col("d") >= lit("2024-03-12").cast("date")))
+    assert(n4 === 200)
+    assert(s4.filesPlanned < t1, "date range pruning failed")
 
     // IS NULL on a partition source prunes EVERY file (writes reject
     // NULL sources)
-    resetPlan()
-    assert(scanPath(path).filter(col("d").isNull).count() === 0)
-    assert(lastPlan()._1 === 0, "IS NULL must prune everything")
+    val (n5, s5) = ScanMetrics.rowCount(scanPath(path).filter(col("d").isNull))
+    assert(n5 === 0)
+    assert(s5.filesPlanned === 0, "IS NULL must prune everything")
   }
 
   test("driver↔executor transform agreement, per transform × dtype: " +
@@ -177,12 +181,11 @@ class TypedPartitionSpec extends SparkSpec {
       assert(ver.partKeys.exists(_.nFiles == ver.files.length),
         s"${field.transform}/${field.dtype}: no typed keys recorded")
       val expected = df.filter(col("c") === probe).count()
-      resetPlan()
-      val got = scanPath(path).filter(col("c") === probe).count()
+      val (got, sc) = ScanMetrics.rowCount(scanPath(path).filter(col("c") === probe))
       assert(got === expected,
         s"${field.transform}/${field.dtype}: pruned scan lost rows " +
           s"($got vs $expected) — driver/executor transform disagree")
-      val (planned, total) = lastPlan()
+      val (planned, total) = (sc.filesPlanned, sc.filesTotal)
       assert(planned < total,
         s"${field.transform}/${field.dtype}: no pruning ($planned/$total)")
     }
@@ -218,11 +221,10 @@ class TypedPartitionSpec extends SparkSpec {
       v2.partKeys.get.row(i) == v1.partKeys.get.row(i)))
 
     // prune on both dimensions through SQL
-    resetPlan()
-    assert(spark.sql("""SELECT sum(v) FROM graft_tp.db.tp
-      WHERE d = DATE'2024-01-11' AND flag = 'f2'""").head.getLong(0)
+    val (sr, pl, tot) = sqlScan("""SELECT sum(v) FROM graft_tp.db.tp
+      WHERE d = DATE'2024-01-11' AND flag = 'f2'""")
+    assert(sr.getLong(0)
       === (0L until 400L).filter(i => i % 3 == 1 && i % 5 == 2).sum)
-    val (pl, tot) = lastPlan()
     assert(pl > 0 && pl < tot, s"SQL two-dim pruning failed: $pl/$tot")
 
     // MERGE through the row-level path: update moves a row's DATE —
@@ -239,10 +241,10 @@ class TypedPartitionSpec extends SparkSpec {
       "SELECT d FROM graft_tp.db.tp WHERE v = 5").head.get(0)
       .toString === "2024-02-01")
     // the moved row's new partition serves it under pruning
-    resetPlan()
-    assert(spark.sql("""SELECT count(*) FROM graft_tp.db.tp
-      WHERE d = DATE'2024-02-01'""").head.getLong(0) === 1)
-    assert(lastPlan()._1 < lastPlan()._2)
+    val (mr, mp, mt) = sqlScan("""SELECT count(*) FROM graft_tp.db.tp
+      WHERE d = DATE'2024-02-01'""")
+    assert(mr.getLong(0) === 1)
+    assert(mp < mt)
     // purity survived the rewrite, every file, both dimensions
     val spec3 = v3.part.get
     v3.files.zipWithIndex.foreach { case (f, i) =>
@@ -293,10 +295,10 @@ class TypedPartitionSpec extends SparkSpec {
       SnapshotTable.latestVersion(p))
     assert(v5.op === "OVERWRITE" &&
       v5.partKeys.exists(_.nFiles == v5.files.length))
-    resetPlan()
-    assert(spark.sql("""SELECT count(*) FROM graft_tp.db.tp
-      WHERE d = DATE'2024-05-02'""").head.getLong(0) === 30)
-    assert(lastPlan()._1 < lastPlan()._2,
+    val (wr, wp, wt) = sqlScan("""SELECT count(*) FROM graft_tp.db.tp
+      WHERE d = DATE'2024-05-02'""")
+    assert(wr.getLong(0) === 30)
+    assert(wp < wt,
       "post-overwrite typed pruning failed")
 
     // t.partitions renders the tuples; t.files carries partition_key
@@ -357,11 +359,11 @@ class TypedPartitionSpec extends SparkSpec {
       assert(tuples.length === 1 && tuples.head === pk.row(i),
         s"streamed file $f not tuple-pure")
     }
-    resetPlan()
-    assert(spark.sql("""SELECT sum(v) FROM graft_tp.db.tsink
-      WHERE u = 'u1' AND d = DATE'2024-07-11'""").head.getLong(0)
+    val (kr, kp, kt) = sqlScan("""SELECT sum(v) FROM graft_tp.db.tsink
+      WHERE u = 'u1' AND d = DATE'2024-07-11'""")
+    assert(kr.getLong(0)
       === (0L until 90L).filter(i => i % 4 == 1 && i % 3 == 1).sum)
-    assert(lastPlan()._1 < lastPlan()._2)
+    assert(kp < kt)
     // idle restart commits nothing (exactly-once)
     val vb = SnapshotTable.latestVersion(p)
     run()
@@ -386,10 +388,9 @@ class TypedPartitionSpec extends SparkSpec {
       val ver = SnapshotTable.readVersion(spark, path, 2)
       assert(ver.segRefs.exists(_.nonEmpty), "manifest not segmented")
       assert(ver.partKeys.get.nFiles === ver.files.length)
-      resetPlan()
-      assert(scanPath(path).filter(col("g") === "g1").count()
-        === (0L until 120L).count(_ % 3 == 1))
-      assert(lastPlan()._1 < lastPlan()._2,
+      val (n, sc) = ScanMetrics.rowCount(scanPath(path).filter(col("g") === "g1"))
+      assert(n === (0L until 120L).count(_ % 3 == 1))
+      assert(sc.filesPlanned < sc.filesTotal,
         "string identity pruning failed on a segmented manifest")
       // identity partitioning records the RAW string — exact, no hash
       assert(ver.partKeys.get.flat.exists(_ == "g1"))
@@ -533,9 +534,9 @@ class TypedPartitionSpec extends SparkSpec {
     val t = scanPath(path)
     assert(t.count() === 200)
     assert(t.agg(sum("v")).head.getLong(0) === (0L until 200L).sum)
-    resetPlan()
-    assert(t.filter(col("g") === "g1").count() === 100)
-    assert(lastPlan()._1 < lastPlan()._2,
+    val (n, sc) = ScanMetrics.rowCount(t.filter(col("g") === "g1"))
+    assert(n === 100)
+    assert(sc.filesPlanned < sc.filesTotal,
       "identity pruning lost through compaction")
   }
 
@@ -600,15 +601,14 @@ class TypedPartitionSpec extends SparkSpec {
     val key = "spark.sql.optimizer.dynamicPartitionPruning.useStats"
     val prior = spark.conf.getOption(key)
     spark.conf.set(key, "false")
-    val n = try {
-      resetPlan()
-      fact.join(dim, col("d") === col("dim_d")).count()
+    val (n, sc) = try {
+      ScanMetrics.rowCount(fact.join(dim, col("d") === col("dim_d")))
     } finally prior match {
       case Some(v) => spark.conf.set(key, v)
       case None => spark.conf.unset(key)
     }
     assert(n === (0L until 300L).count(i => i % 10 == 2 || i % 10 == 3))
-    val (planned, total) = lastPlan()
+    val (planned, total) = (sc.filesPlanned, sc.filesTotal)
     assert(planned > 0 && planned < total,
       s"runtime DATE keys did not prune typed partitions " +
         s"($planned/$total)")
@@ -631,11 +631,10 @@ class TypedPartitionSpec extends SparkSpec {
     assert(v2.files === v1.files, "rename must not rewrite data")
     assert(v2.part.exists(_.fields.head.source == "event_d"))
     assert(v2.partKeys.get.flat === v1.partKeys.get.flat)
-    resetPlan()
-    assert(spark.sql("""SELECT count(*) FROM graft_tp.db.rn
-      WHERE event_d >= DATE'2024-03-01'""").head.getLong(0)
-      === (0L until 80L).count(_ % 4 >= 2))
-    assert(lastPlan()._1 < lastPlan()._2,
+    val (rr, rp, rt) = sqlScan("""SELECT count(*) FROM graft_tp.db.rn
+      WHERE event_d >= DATE'2024-03-01'""")
+    assert(rr.getLong(0) === (0L until 80L).count(_ % 4 >= 2))
+    assert(rp < rt,
       "months() range pruning failed after rename")
     spark.sql("DROP TABLE graft_tp.db.rn")
   }
@@ -681,18 +680,15 @@ class TypedPartitionSpec extends SparkSpec {
     assert(SnapshotTable.changes(spark, path, 1, 2).count() === 0,
       "recluster must be row-preserving (empty change feed)")
     // pruning composition: partition alone, curve range alone, both
-    resetPlan()
-    t.filter(col("g") === "g1").count()
-    val (pg, tot) = lastPlan()
+    val (_, sg) = ScanMetrics.rowCount(t.filter(col("g") === "g1"))
+    val (pg, tot) = (sg.filesPlanned, sg.filesTotal)
     assert(pg > 0 && pg < tot, s"partition pruning lost: $pg/$tot")
     val zHi = graft.functions.ZOrderExpr.interleave(63, 63, 8)
-    resetPlan()
-    val nz = t.filter(col("z") <= zHi).count()
-    val (pz, _) = lastPlan()
+    val (nz, sz) = ScanMetrics.rowCount(t.filter(col("z") <= zHi))
+    val pz = sz.filesPlanned
     assert(pz > 0 && pz < tot, s"curve-range pruning absent: $pz/$tot")
-    resetPlan()
-    t.filter(col("g") === "g1" && col("z") <= zHi).count()
-    val (pb, _) = lastPlan()
+    val (_, sb) = ScanMetrics.rowCount(t.filter(col("g") === "g1" && col("z") <= zHi))
+    val pb = sb.filesPlanned
     assert(pb <= math.min(pg, pz),
       s"composed pruning ($pb) looser than either dimension ($pg, $pz)")
     // and the curve slice is exact: corner interval [0, z(63,63)] over
@@ -748,11 +744,10 @@ class TypedPartitionSpec extends SparkSpec {
     // opens only its tuple's files
     val ver = SnapshotTable.readVersion(spark, path, res.version)
     assert(ver.partKeys.get.nFiles === ver.files.length)
-    resetPlan()
-    assert(scanPath(path)
-      .filter(col("d") === lit(java.sql.Date.valueOf("2024-02-01")))
-      .count() === 1)
-    val (read, total) = lastPlan()
+    val (n, sc) = ScanMetrics.rowCount(scanPath(path)
+      .filter(col("d") === lit(java.sql.Date.valueOf("2024-02-01"))))
+    assert(n === 1)
+    val (read, total) = (sc.filesPlanned, sc.filesTotal)
     assert(read > 0 && read < total,
       s"days() pruning broke after the typed merge: $read/$total")
   }

@@ -6,7 +6,7 @@ import java.sql.{Date, Timestamp}
 import org.apache.spark.sql.functions._
 
 import graft.ops.{SnapshotTable, TypedBounds}
-import graft.source.v2.GraftTableSource
+import graft.source.v2.ScanMetrics
 
 /** TYPED multi-column file statistics: declared column LISTS with
   * DATE/TIMESTAMP/DOUBLE/STRING bounds collected by every write path,
@@ -88,11 +88,10 @@ class TypedStatsSpec extends SparkSpec {
     val t = spark.read.format("graft_table").option("path", path).load()
     // the corrupt-bound file is KEPT, so the answer is exact
     assert(t.filter(col("v") < 20L).count() === 10)
-    graft.source.v2.GraftTableSource.lastAggPush.set(false)
-    val r = t.agg(min("v"), max("v")).collect().head
+    val (r, sc) = withScan(t.agg(min("v"), max("v")))
     assert(r.getLong(0) === 0L && r.getLong(1) === 198L,
       "a declined serve must still compute the exact answer")
-    assert(!graft.source.v2.GraftTableSource.lastAggPush.get(),
+    assert(!sc.manifestAgg,
       "an undecodable bound must decline the manifest serve")
   }
 
@@ -137,10 +136,8 @@ class TypedStatsSpec extends SparkSpec {
       statsCols = Seq("d", "t", "score", "name"))
     val t = spark.read.format("graft_table").option("path", path).load()
     def pruned(q: org.apache.spark.sql.DataFrame): (Long, Int, Int) = {
-      GraftTableSource.lastPlan.set((-1, -1))
-      val n = q.count()
-      val (p, tot) = GraftTableSource.lastPlan.get()
-      (n, p, tot)
+      val (n, sc) = ScanMetrics.rowCount(q)
+      (n, sc.filesPlanned.toInt, sc.filesTotal.toInt)
     }
     // DATE range
     val (n1, p1, t1) = pruned(t.filter(col("d")
@@ -164,9 +161,9 @@ class TypedStatsSpec extends SparkSpec {
     val (n5, p5, t5) = pruned(t.filter(col("d") === lit(day("2024-01-10"))))
     assert(n5 === 100 && p5 < t5)
     // row-group skipping: delivered rows bounded inside kept files
-    GraftTableSource.rowsRead.set(0L)
-    assert(t.filter(col("d") === lit(day("2024-01-10"))).count() === 100)
-    val delivered = GraftTableSource.rowsRead.get()
+    val (n6, s6) = ScanMetrics.rowCount(t.filter(col("d") === lit(day("2024-01-10"))))
+    assert(n6 === 100)
+    val delivered = s6.rowsDelivered
     assert(delivered < 2800,
       s"date row-group predicate did not bound the read: $delivered")
   }
@@ -177,10 +174,9 @@ class TypedStatsSpec extends SparkSpec {
     SnapshotTable.append(mkDf(0, 280), path, 4,
       statsCols = Seq("d", "t", "score", "name"))
     val t = spark.read.format("graft_table").option("path", path).load()
-    GraftTableSource.lastAggPush.set(false)
-    val r = t.agg(min("d"), max("d"), min("t"), max("score"),
-      min("name"), count(lit(1))).collect().head
-    assert(GraftTableSource.lastAggPush.get(),
+    val (r, sc) = withScan(t.agg(min("d"), max("d"), min("t"),
+      max("score"), min("name"), count(lit(1))))
+    assert(sc.manifestAgg,
       "typed min/max must serve from the manifest")
     // java8API session: date/timestamp collect as LocalDate/Instant
     assert(r.getAs[java.time.LocalDate](0)
@@ -200,10 +196,10 @@ class TypedStatsSpec extends SparkSpec {
     SnapshotTable.append(Seq((1L, "z" * 100), (2L, "a"))
       .toDF("k", "name"), p2, 1, statsCols = Seq("name"))
     val t2 = spark.read.format("graft_table").option("path", p2).load()
-    GraftTableSource.lastAggPush.set(false)
-    val mx = t2.agg(max("name")).collect().head.getString(0)
+    val (mr, s2) = withScan(t2.agg(max("name")))
+    val mx = mr.getString(0)
     assert(mx === "z" * 100)
-    assert(!GraftTableSource.lastAggPush.get(),
+    assert(!s2.manifestAgg,
       "truncated string bounds must not serve MAX")
   }
 
@@ -338,24 +334,24 @@ class TypedStatsSpec extends SparkSpec {
 
     val t = spark.read.format("graft_table").option("path", path).load()
     // IS NULL keeps only the two files holding a NULL
-    GraftTableSource.lastPlan.set((-1, -1))
-    assert(t.filter(col("tag").isNull).count() === 25)
-    assert(GraftTableSource.lastPlan.get() === ((2, 3)),
+    val (nn, sn) = ScanMetrics.rowCount(t.filter(col("tag").isNull))
+    assert(nn === 25)
+    assert((sn.filesPlanned, sn.filesTotal) === ((2L, 3L)),
       "IS NULL must prune the no-NULL file")
     // IS NOT NULL drops the all-NULL file
-    GraftTableSource.lastPlan.set((-1, -1))
-    assert(t.filter(col("tag").isNotNull).count() === 35)
-    assert(GraftTableSource.lastPlan.get() === ((2, 3)),
+    val (nv, sv) = ScanMetrics.rowCount(t.filter(col("tag").isNotNull))
+    assert(nv === 35)
+    assert((sv.filesPlanned, sv.filesTotal) === ((2L, 3L)),
       "IS NOT NULL must prune the all-NULL file")
     // COUNT(col) answers from the manifest: rows − NULLs, no files
-    GraftTableSource.lastAggPush.set(false)
-    assert(t.agg(count(col("tag"))).head.getLong(0) === 35)
-    assert(GraftTableSource.lastAggPush.get(),
+    val (cr, sc) = withScan(t.agg(count(col("tag"))))
+    assert(cr.getLong(0) === 35)
+    assert(sc.manifestAgg,
       "COUNT(col) must serve from the manifest's null counts")
     // count(*) still serves too
-    GraftTableSource.lastAggPush.set(false)
-    assert(t.agg(count(lit(1))).head.getLong(0) === 60)
-    assert(GraftTableSource.lastAggPush.get())
+    val (nAll, sAll) = ScanMetrics.rowCount(t)
+    assert(nAll === 60)
+    assert(sAll.manifestAgg)
 
     // counts survive a carry (MOR delete commits a new version that
     // slices/keeps the vectors) and segmentation
@@ -366,11 +362,11 @@ class TypedStatsSpec extends SparkSpec {
       assert(v4.segRefs.exists(_.nonEmpty), "expected a segmented header")
       assert(v4.colStats.head.nulls === Seq(0L, 5L, 20L, 0L),
         "null counts lost through the segment render/read")
-      GraftTableSource.lastAggPush.set(false)
       val t4 = spark.read.format("graft_table").option("path", path)
         .load()
-      assert(t4.agg(count(col("tag"))).head.getLong(0) === 45)
-      assert(GraftTableSource.lastAggPush.get())
+      val (r4, s4) = withScan(t4.agg(count(col("tag"))))
+      assert(r4.getLong(0) === 45)
+      assert(s4.manifestAgg)
     }
   }
 }

@@ -56,7 +56,6 @@ class WidenSpec extends SparkSpec {
 
   test("DSv2 + SQL: ALTER TABLE ... TYPE BIGINT through the catalog, " +
       "typed-stats pruning keeps working across the dtype flip") {
-    import graft.source.v2.GraftTableSource
     val r = Files.createTempDirectory("widencat").toString
     spark.conf.set("spark.sql.catalog.graft_wd",
       "graft.source.v2.GraftCatalog")
@@ -74,11 +73,10 @@ class WidenSpec extends SparkSpec {
       .head.getLong(1) === (0L until 1000L).sum + (10000L until 11000L).sum)
     // typed stats on `a` survive the flip: the int and long encodings
     // are both decimal longs, so pruning composes across populations
-    GraftTableSource.lastPlan.set((-1, -1))
-    assert(spark.sql(
-      "SELECT count(*) FROM graft_wd.db.t WHERE a >= 10000")
-      .head.getLong(0) === 1000)
-    val (p1, t1) = GraftTableSource.lastPlan.get()
+    val (cr, sc) = withScan(spark.sql(
+      "SELECT count(*) FROM graft_wd.db.t WHERE a >= 10000"))
+    assert(cr.getLong(0) === 1000)
+    val (p1, t1) = (sc.filesPlanned, sc.filesTotal)
     assert(p1 > 0 && p1 < t1,
       s"typed-stats pruning lost across the widen: $p1 of $t1")
     spark.sql("DROP TABLE graft_wd.db.t")

@@ -4,7 +4,7 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 import graft.ops.SnapshotTable
-import graft.source.v2.{GraftTableSource, GraftWriteUtil}
+import graft.source.v2.{GraftWriteUtil, ScanMetrics}
 
 /** Typed multi-column bounds are tracked INSIDE the write tasks and
   * carried back in the commit messages — the commit never launches a
@@ -77,11 +77,11 @@ class WriterTrackedStatsSpec extends SparkSpec {
     // the committed bounds are exactly the re-read's and they prune
     val ver = SnapshotTable.readVersion(spark, path, 2)
     assert(ver.colStats.map(_.col) === Seq("d", "w"))
-    GraftTableSource.lastPlan.set((-1, -1))
-    val n = spark.read.format("graft_table").option("path", path).load()
-      .filter(col("d") >= lit("2024-02-01").cast("date")).count()
+    val (n, sc) = ScanMetrics.rowCount(
+      spark.read.format("graft_table").option("path", path).load()
+        .filter(col("d") >= lit("2024-02-01").cast("date")))
     assert(n === 40)
-    val (p1, t1) = GraftTableSource.lastPlan.get()
+    val (p1, t1) = (sc.filesPlanned, sc.filesTotal)
     assert(p1 > 0 && p1 < t1, s"tracked bounds did not prune: $p1/$t1")
   }
 
@@ -140,16 +140,13 @@ class WriterTrackedStatsSpec extends SparkSpec {
         s"writer-tracked bounds for ${got.col} diverge from re-read")
     }
     // and they prune / serve aggregates like re-read bounds do
-    GraftTableSource.lastPlan.set((-1, -1))
     val t = spark.read.format("graft_table").option("path", sink).load()
-    assert(t.filter(col("d") >= lit("2024-04-01").cast("date")).count()
-      === 30)
-    assert(GraftTableSource.lastPlan.get() match {
-      case (p, tot) => p > 0 && p < tot
-    })
-    GraftTableSource.lastAggPush.set(false)
-    val mm = t.agg(min("score"), max("tag")).collect().head
-    assert(GraftTableSource.lastAggPush.get(),
+    val (n, sc) = ScanMetrics.rowCount(
+      t.filter(col("d") >= lit("2024-04-01").cast("date")))
+    assert(n === 30)
+    assert(sc.filesPlanned > 0 && sc.filesPlanned < sc.filesTotal)
+    val (mm, sa) = withScan(t.agg(min("score"), max("tag")))
+    assert(sa.manifestAgg,
       "streamed tracked bounds must serve MIN/MAX from the manifest")
     assert(mm.getDouble(0) === 0.0 && mm.getString(1) === "doc-9")
   }
