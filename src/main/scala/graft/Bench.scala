@@ -1,7 +1,8 @@
 package graft
 
 /** Benchmark entry point (A8 — the grand-totals harness).
-  * One warmup pass (JVM/codegen startup absorbed)
+  * Each query's `setup` runs once, untimed (its seconds go to stderr
+  * only), then one warmup pass (JVM/codegen startup absorbed)
   * then THREE timed passes per query, reporting the per-query MEDIAN —
   * round-2 numbers showed multi-second environmental stalls (GC/disk/JIT)
   * landing on arbitrary queries in a single pass (a 25-row scan "taking"
@@ -120,11 +121,12 @@ object Bench {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val iterations = sys.env.getOrElse("SPARK_GRAFT_BENCH_ITERS", "3").toInt
     val spark = GraftSession.build(cpus)
+    val defs = SparkEntry.defs
 
     def runOnce(name: String): Either[String, Double] = {
       val t0 = System.nanoTime()
       try {
-        SparkEntry.queries(name)(spark, sfDir)
+        defs(name).fn(spark, sfDir)
           .write.format("noop").mode("overwrite").save()
         val took = (System.nanoTime() - t0) / 1e9
         System.err.println(f"[bench] $name%-24s ${took}%8.2f s")
@@ -153,16 +155,37 @@ object Bench {
     val qArgs = args.toSeq.filterNot(_ == "--rebaseline")
     val names =
       if (qArgs.nonEmpty) qArgs.sorted
-      else SparkEntry.queries.keys.toSeq.sorted
-    names.foreach(runOnce) // warmup: absorb JVM/codegen/IO-cache startup
+      else defs.keys.toSeq.sorted
+
+    // untimed fixture build, swept like a query; a setup that throws
+    // fails its query alone. Setup seconds never enter the JSON line:
+    // parsePrevTimes would read any "q…":number pair as a timing.
+    def setUp(name: String): Option[String] = {
+      val t0 = System.nanoTime()
+      try {
+        defs(name).setup(spark, sfDir)
+        val took = (System.nanoTime() - t0) / 1e9
+        System.err.println(f"[bench] $name%-24s ${took}%8.2f s setup")
+        None
+      } catch {
+        case e: Throwable =>
+          System.err.println(s"[bench] $name SETUP FAILED: ${e.getMessage}")
+          Some(Option(e.getMessage).getOrElse(e.getClass.getName).take(200))
+      } finally GraftSession.sweepCaches(spark)
+    }
+    val setupFailed: Map[String, String] =
+      names.flatMap(n => setUp(n).map(n -> _)).toMap
+    val runnable = names.filterNot(setupFailed.contains)
+    runnable.foreach(runOnce) // warmup: absorb JVM/codegen/IO-cache startup
 
     // Interleave iterations (pass 1 of all queries, then pass 2, ...) so a
     // multi-minute environmental stall cannot poison all samples of one
     // query; the median then discards it.
     val samples: Seq[Seq[(String, Either[String, Double])]] =
-      (1 to iterations).map(_ => names.map(n => n -> runOnce(n)))
+      (1 to iterations).map(_ => runnable.map(n => n -> runOnce(n)))
     val results: Seq[(String, Either[String, Double])] = names.map { n =>
-      val runs = samples.map(_.find(_._1 == n).get._2)
+      val runs = setupFailed.get(n).map(Left(_)).toSeq ++
+        samples.flatMap(_.find(_._1 == n).map(_._2))
       val errs = runs.collect { case Left(e) => e }
       if (errs.nonEmpty) n -> Left(errs.head)
       else {

@@ -11,12 +11,15 @@ object Explain {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
     val names =
       if (args.length > 1) args.drop(1).toSeq
-      else SparkEntry.queries.keys.toSeq.sorted
+      else SparkEntry.defs.keys.toSeq.sorted
     val spark = GraftSession.build(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
     names.foreach { n =>
       println(s"\n========== $n ==========")
-      try SparkEntry.queries(n)(spark, sfDir).explain("formatted")
-      catch { case e: Throwable => println(s"EXPLAIN FAILED: ${e.getMessage}") }
+      try {
+        val q = SparkEntry.defs(n)
+        try q.setup(spark, sfDir) finally GraftSession.sweepCaches(spark)
+        q.fn(spark, sfDir).explain("formatted")
+      } catch { case e: Throwable => println(s"EXPLAIN FAILED: ${e.getMessage}") }
     }
     spark.stop()
   }

@@ -13,6 +13,12 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 object SparkEntry {
   private def registry: Seq[QueryDef] = _root_.graft.queries.Registry.all
 
+  /** Every query by name with its untimed `setup` — what the harness
+    * mains (Bench, Verify, Explain) run.
+    */
+  private[graft] def defs: Map[String, QueryDef] =
+    registry.map(q => q.name -> q).toMap
+
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     _root_.graft.queries.Relational.bandStats.fn(spark, "/root/testdata/sf0.001")

@@ -2,7 +2,8 @@ package graft
 import java.nio.file.{Files, Paths}
 
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare.
+  * plus oracle_sql.json, for the driver's DuckDB compare. Each query's
+  * `setup` runs first (its fixtures), then its body is dumped.
   *
   * Failures are surfaced, not swallowed: a throwing query gets a
   * `<name>/_FAILED` marker file (so a missing parquet dir cannot silently
@@ -19,12 +20,14 @@ object Verify {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = GraftSession.build(cpus)
     new java.io.File(outDir).mkdirs()
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
+    val selected = SparkEntry.defs.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.isEmpty || only(n) }
     val failures = selected.flatMap {
-      case (name, fn) =>
+      case (name, q) =>
         try {
-          fn(spark, sfDir).coalesce(1).write.mode("overwrite")
+          // untimed fixture build first; a throw fails only this query
+          try q.setup(spark, sfDir) finally GraftSession.sweepCaches(spark)
+          q.fn(spark, sfDir).coalesce(1).write.mode("overwrite")
             .parquet(s"$outDir/$name")
           None
         } catch {

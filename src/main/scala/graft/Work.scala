@@ -73,8 +73,16 @@ object Work {
     */
   def oracleDumpPath(tag: String): String = s"/tmp/graft-oracle/$tag"
 
-  def wipe(dir: Path): Unit = if (Files.exists(dir)) {
-    walkAll(dir).reverse.foreach(Files.deleteIfExists(_))
+  /** Delete `dir` recursively and forget the cached metadata of every
+    * snapshot table at or under it: a table rebuilt at the same path
+    * reuses its version numbers, so a cached (path, version) would
+    * serve the dead table's file list.
+    */
+  def wipe(dir: Path): Unit = {
+    if (Files.exists(dir))
+      walkAll(dir).reverse.foreach(Files.deleteIfExists(_))
+    graft.ops.SnapshotTable.invalidateSegments(dir.toString)
+    graft.source.v2.GraftTableSource.invalidate(dir.toString)
   }
 
   /** Materialize a recursive directory walk AND close the stream —

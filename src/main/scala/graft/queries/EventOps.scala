@@ -3,7 +3,8 @@ package graft.queries
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
-import graft.ops.SkewJoin
+import graft.ops.{SkewJoin, SnapshotTable}
+import graft.ops.SnapshotTable.PartSpec
 
 /** Event-stream batch operators over `events.parquet` + the salted-join
   * skew recipe — the batch twins of the streaming surface, each with a
@@ -590,17 +591,15 @@ object EventOps {
     * recomputes the aggregate from the raw events table, catching
     * row-level duplication the count alone might balance out.
     */
-  val streamTableIngest = QueryDef("q158_stream_table_ingest",
-    """SELECT count(*) AS n,
-      |  CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value,
-      |  count(DISTINCT user_id) AS n_users,
-      |  TRUE AS replay_skipped
-      |FROM events""".stripMargin) { (s, d) =>
-    import graft.ops.SnapshotTable
+  val streamTableIngest: QueryDef = {
     val path = graft.Work.oracleDumpPath("q158_table")
-    val ingestLayouts = streamTableLayouts
-    ingestLayouts.compute("q158", (_, prev) => {
-      if (prev != d) {
+    QueryDef("q158_stream_table_ingest",
+      """SELECT count(*) AS n,
+        |  CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value,
+        |  count(DISTINCT user_id) AS n_users,
+        |  TRUE AS replay_skipped
+        |FROM events""".stripMargin,
+      setup = { (s, d) =>
         graft.Work.wipe(java.nio.file.Paths.get(path))
         // stage the events table as FOUR files so maxFilesPerTrigger=1
         // yields four real micro-batches (the raw table is one file)
@@ -648,19 +647,18 @@ object EventOps {
         val srcRows = s.read.parquet(srcDir).count()
         require(ver.rows == srcRows,
           s"ingest landed ${ver.rows} rows, source has $srcRows")
-      }
-      d
-    })
-    val (scan, _, rowsExp) =
-      SnapshotTable.scanAt(s, path, SnapshotTable.latestVersion(path))
-    val a = scan.agg(count(lit(1)).as("n"),
-      sum(col("value").cast("decimal(18,6)")).cast("double")
-        .as("sum_value"),
-      count_distinct(col("user_id")).as("n_users")).collect().head
-    require(a.getLong(0) == rowsExp, "scan/manifest drift after ingest")
-    import s.implicits._
-    Seq((a.getLong(0), a.getDouble(1), a.getLong(2), true))
-      .toDF("n", "sum_value", "n_users", "replay_skipped")
+      }) { (s, d) =>
+      val (scan, _, rowsExp) =
+        SnapshotTable.scanAt(s, path, SnapshotTable.latestVersion(path))
+      val a = scan.agg(count(lit(1)).as("n"),
+        sum(col("value").cast("decimal(18,6)")).cast("double")
+          .as("sum_value"),
+        count_distinct(col("user_id")).as("n_users")).collect().head
+      require(a.getLong(0) == rowsExp, "scan/manifest drift after ingest")
+      import s.implicits._
+      Seq((a.getLong(0), a.getDouble(1), a.getLong(2), true))
+        .toDF("n", "sum_value", "n_users", "replay_skipped")
+    }
   }
 
   /** q161 — STREAMING CDC APPLY, exactly-once: the composition a
@@ -678,21 +676,20 @@ object EventOps {
     * duplicated apply inflates it; upsert semantics keep one row per
     * key however many batches touch it).
     */
-  val streamCdcApply = QueryDef("q161_stream_cdc_apply",
-    """WITH w AS (
-      |  SELECT user_id, arg_max(value, event_id) AS value,
-      |    max(event_id) AS last_event_id
-      |  FROM events GROUP BY 1)
-      |SELECT count(*) AS n_users,
-      |  CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE)
-      |    AS sum_last_value,
-      |  CAST(sum(last_event_id) AS BIGINT) AS sum_last_event,
-      |  TRUE AS replay_skipped
-      |FROM w""".stripMargin) { (s, d) =>
-    import graft.ops.SnapshotTable
+  val streamCdcApply: QueryDef = {
     val path = graft.Work.oracleDumpPath("q161_table")
-    streamTableLayouts.compute("q161", (_, prev) => {
-      if (prev != d) {
+    QueryDef("q161_stream_cdc_apply",
+      """WITH w AS (
+        |  SELECT user_id, arg_max(value, event_id) AS value,
+        |    max(event_id) AS last_event_id
+        |  FROM events GROUP BY 1)
+        |SELECT count(*) AS n_users,
+        |  CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE)
+        |    AS sum_last_value,
+        |  CAST(sum(last_event_id) AS BIGINT) AS sum_last_event,
+        |  TRUE AS replay_skipped
+        |FROM w""".stripMargin,
+      setup = { (s, d) =>
         graft.Work.wipe(java.nio.file.Paths.get(path))
         val ev = Tables.load(s, d, "events")
           .select(col("event_id").cast("long").as("event_id"),
@@ -758,27 +755,26 @@ object EventOps {
         require(res.version == v && res.rowsMatched == 0 &&
             res.rowsInserted == 0,
           s"replayed CDC batch ${ver.txns(writer)} applied changes")
-      }
-      d
-    })
-    val (scan, _, rowsExp) =
-      SnapshotTable.scanAt(s, path, SnapshotTable.latestVersion(path))
-    // upsert discipline: exactly one state row per user
-    val nUsers = Tables.load(s, d, "events")
-      .select(col("user_id")).distinct().count()
-    require(rowsExp == nUsers,
-      s"CDC state holds $rowsExp rows for $nUsers users")
-    // no sentinel survived: every user was reached by some batch
-    val a = scan.agg(count(lit(1)).as("n_users"),
-      sum(col("value").cast("decimal(18,6)")).cast("double")
-        .as("sum_last_value"),
-      sum("last_event_id").cast("long").as("sum_last_event"),
-      min("last_event_id").as("min_last")).collect().head
-    require(a.getLong(3) >= 0, "a seed sentinel row survived the stream")
-    import s.implicits._
-    Seq((a.getLong(0), a.getDouble(1), a.getLong(2), true))
-      .toDF("n_users", "sum_last_value", "sum_last_event",
-        "replay_skipped")
+      }) { (s, d) =>
+      val (scan, _, rowsExp) =
+        SnapshotTable.scanAt(s, path, SnapshotTable.latestVersion(path))
+      // upsert discipline: exactly one state row per user
+      val nUsers = Tables.load(s, d, "events")
+        .select(col("user_id")).distinct().count()
+      require(rowsExp == nUsers,
+        s"CDC state holds $rowsExp rows for $nUsers users")
+      // no sentinel survived: every user was reached by some batch
+      val a = scan.agg(count(lit(1)).as("n_users"),
+        sum(col("value").cast("decimal(18,6)")).cast("double")
+          .as("sum_last_value"),
+        sum("last_event_id").cast("long").as("sum_last_event"),
+        min("last_event_id").as("min_last")).collect().head
+      require(a.getLong(3) >= 0, "a seed sentinel row survived the stream")
+      import s.implicits._
+      Seq((a.getLong(0), a.getDouble(1), a.getLong(2), true))
+        .toDF("n_users", "sum_last_value", "sum_last_event",
+          "replay_skipped")
+    }
   }
 
   /** q180 — STREAMING INGESTION into a HIDDEN-PARTITIONED snapshot
@@ -796,18 +792,16 @@ object EventOps {
     * dropped micro-batch, or a bucket-routing drift between executor
     * and driver hashes, hash-mismatches.
     */
-  val streamPartitionedIngest = QueryDef("q180_stream_partitioned_ingest",
-    """SELECT count(*) AS n,
-      |  CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value,
-      |  (SELECT count(*) FROM events
-      |    WHERE CAST(user_id AS BIGINT) IN (1, 2, 3)) AS n_probe,
-      |  TRUE AS replay_skipped
-      |FROM events""".stripMargin) { (s, d) =>
-    import graft.ops.SnapshotTable
-    import graft.ops.SnapshotTable.PartSpec
+  val streamPartitionedIngest: QueryDef = {
     val path = graft.Work.oracleDumpPath("q180_table")
-    streamTableLayouts.compute("q180", (_, prev) => {
-      if (prev != d) {
+    QueryDef("q180_stream_partitioned_ingest",
+      """SELECT count(*) AS n,
+        |  CAST(sum(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value,
+        |  (SELECT count(*) FROM events
+        |    WHERE CAST(user_id AS BIGINT) IN (1, 2, 3)) AS n_probe,
+        |  TRUE AS replay_skipped
+        |FROM events""".stripMargin,
+      setup = { (s, d) =>
         graft.Work.wipe(java.nio.file.Paths.get(path))
         val srcDir = graft.Work.stableDir(
           s"q180-src-${math.abs(d.hashCode)}").toString
@@ -851,25 +845,24 @@ object EventOps {
         val srcRows = s.read.parquet(srcDir).count()
         require(ver.rows == srcRows,
           s"ingest landed ${ver.rows} rows, source has $srcRows")
-      }
-      d
-    })
-    val latest = SnapshotTable.latestVersion(path)
-    val (scan, _, rowsExp) = SnapshotTable.scanAt(s, path, latest)
-    val a = scan.agg(count(lit(1)).as("n"),
-      sum(col("value").cast("decimal(18,6)")).cast("double")
-        .as("sum_value")).collect().head
-    require(a.getLong(0) == rowsExp, "scan/manifest drift after ingest")
-    // the partition payoff: a 3-user probe opens at most the keys' 3
-    // buckets — per micro-batch, so ≤ 3/8 of the files
-    val (probe, read, total) =
-      SnapshotTable.scanPartitionKeys(s, path, latest, Seq(1L, 2L, 3L))
-    require(read < total,
-      s"bucket pruning died: read $read of $total partition files")
-    val nProbe = probe.count()
-    import s.implicits._
-    Seq((a.getLong(0), a.getDouble(1), nProbe, true))
-      .toDF("n", "sum_value", "n_probe", "replay_skipped")
+      }) { (s, d) =>
+      val latest = SnapshotTable.latestVersion(path)
+      val (scan, _, rowsExp) = SnapshotTable.scanAt(s, path, latest)
+      val a = scan.agg(count(lit(1)).as("n"),
+        sum(col("value").cast("decimal(18,6)")).cast("double")
+          .as("sum_value")).collect().head
+      require(a.getLong(0) == rowsExp, "scan/manifest drift after ingest")
+      // the partition payoff: a 3-user probe opens at most the keys' 3
+      // buckets — per micro-batch, so ≤ 3/8 of the files
+      val (probe, read, total) =
+        SnapshotTable.scanPartitionKeys(s, path, latest, Seq(1L, 2L, 3L))
+      require(read < total,
+        s"bucket pruning died: read $read of $total partition files")
+      val nProbe = probe.count()
+      import s.implicits._
+      Seq((a.getLong(0), a.getDouble(1), nProbe, true))
+        .toDF("n", "sum_value", "n_probe", "replay_skipped")
+    }
   }
 
   /** q185 — THE SNAPSHOT TABLE AS A STREAMING SOURCE
@@ -889,18 +882,17 @@ object EventOps {
     * skipped one loses), then DuckDB recomputes the aggregate from
     * raw lineitem, catching row-level duplication counts can balance.
     */
-  val tableStream = QueryDef("q185_table_stream",
-    """SELECT count(*) AS n,
-      |  CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT)) AS BIGINT)
-      |    AS qty_u,
-      |  min(l_orderkey) AS k_min, max(l_orderkey) AS k_max,
-      |  TRUE AS exactly_once
-      |FROM lineitem WHERE l_linenumber <= 4""".stripMargin) { (s, d) =>
-    import graft.ops.SnapshotTable
+  val tableStream: QueryDef = {
     val table = graft.Work.oracleDumpPath("q185_table")
     val sink = graft.Work.oracleDumpPath("q185_sink")
-    streamTableLayouts.compute("q185", (_, prev) => {
-      if (prev != d) {
+    QueryDef("q185_table_stream",
+      """SELECT count(*) AS n,
+        |  CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT)) AS BIGINT)
+        |    AS qty_u,
+        |  min(l_orderkey) AS k_min, max(l_orderkey) AS k_max,
+        |  TRUE AS exactly_once
+        |FROM lineitem WHERE l_linenumber <= 4""".stripMargin,
+      setup = { (s, d) =>
         graft.Work.wipe(java.nio.file.Paths.get(table))
         graft.Work.wipe(java.nio.file.Paths.get(sink))
         val ckpt = graft.Work.stableDir(
@@ -927,24 +919,20 @@ object EventOps {
         SnapshotTable.append(slice(3), table, 2, statsCol = Some("k"))
         SnapshotTable.append(slice(4), table, 2, statsCol = Some("k"))
         runStream() // tail: versions (2, 4] only
-      }
-      d
-    })
-    val sunk = s.read.parquet(sink)
-    val (scan, _, tableRows) =
-      SnapshotTable.scanAt(s, table, SnapshotTable.latestVersion(table))
-    val nSunk = sunk.count()
-    require(nSunk == tableRows && nSunk == scan.count(),
-      s"streamed sink holds $nSunk rows, table holds $tableRows — " +
-        "the version tail was duplicated or dropped")
-    sunk.agg(count(lit(1)).as("n"),
-        sum("qty_u").cast("long").as("qty_u"),
-        min("k").as("k_min"), max("k").as("k_max"))
-      .withColumn("exactly_once", lit(true))
+      }) { (s, d) =>
+      val sunk = s.read.parquet(sink)
+      val (scan, _, tableRows) =
+        SnapshotTable.scanAt(s, table, SnapshotTable.latestVersion(table))
+      val nSunk = sunk.count()
+      require(nSunk == tableRows && nSunk == scan.count(),
+        s"streamed sink holds $nSunk rows, table holds $tableRows — " +
+          "the version tail was duplicated or dropped")
+      sunk.agg(count(lit(1)).as("n"),
+          sum("qty_u").cast("long").as("qty_u"),
+          min("k").as("k_min"), max("k").as("k_max"))
+        .withColumn("exactly_once", lit(true))
+    }
   }
-
-  private val streamTableLayouts =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   val all: Seq[QueryDef] =
     Seq(eventWindows, sessionize, saltedJoin, bucketedJoin,

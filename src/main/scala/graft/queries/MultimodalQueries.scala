@@ -29,7 +29,7 @@ object MultimodalQueries {
       |FROM read_parquet('/tmp/graft-oracle/q49_audio/*.parquet')
       |ORDER BY kind, media_id""".stripMargin) { (s, d) =>
     import s.implicits._
-    val n = math.min(graft.Tables.cachedCount(s, d, "documents"), 64L).toInt
+    val n = math.min(graft.Tables.rowCount(s, d, "documents"), 64L).toInt
     val rows = (0 until n).map { i =>
       val kind = i % 3 match {
         case 0 => "image"; case 1 => "video"; case 2 => "audio"

@@ -4,17 +4,13 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import graft.QueryDef
 import graft.functions.Scalars.floor2dp
-import graft.source.{NetCdfFixture, NetCdfSource}
+import graft.source.{Kerchunk, NetCdfFixture, NetCdfSource}
 
 /** S1/P1/P2/P3 + A2 through the NetCDF source (rows-only: inputs are
   * generated .nc fixtures, not the shared parquet tables, so DuckDB has
   * no oracle path — exact values are pinned by NetCdfSpec instead).
   */
 object NetCdfQueries {
-
-  // q121: parquet-ref store written once per JVM (see the note there)
-  private val pqWritten =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   import graft.Work.{stableDir => stableWork, retryingFresh, oracleDump}
 
@@ -728,73 +724,72 @@ object NetCdfQueries {
     * metadata touched at read time, which is the format's entire
     * point at 100 TB (the header walk is paid once at index time).
     */
-  val kerchunkScan = QueryDef("q121_kerchunk_scan",
-    """SELECT variable, count(*) AS n_cells,
-      |  count(CASE WHEN NOT isnan(v) THEN 1 END) AS n_valid,
-      |  CAST(sum(CASE WHEN isnan(v) THEN 0
-      |           ELSE CAST(floor(v * 1e6) AS BIGINT) END) AS BIGINT) AS sum_u
-      |FROM (SELECT variable, unnest(values) AS v
-      |      FROM read_parquet('/tmp/graft-oracle/q121_cells/*.parquet'))
-      |GROUP BY 1 ORDER BY 1""".stripMargin) { (s, _) =>
-    import graft.source.Kerchunk
-    val dir = stableWork("fixtures").resolve("kerchunk")
-    java.nio.file.Files.createDirectories(dir)
-    // a two-file archive combined into ONE virtual store along time
-    // (MultiZarrToZarr): the scan below never knows there were files
-    val parts = Seq(0.0, 2.0).zipWithIndex.map { case (t0, i) =>
-      val f = dir.resolve(f"archive_$i%d.nc")
-      val (dims, gatts, vars) = NetCdfFixture.spec(nt = 2, ny = 16,
-        nx = 12, nl = 3, tStart = t0)
-      java.nio.file.Files.write(f,
-        graft.source.Hdf5Write.write(dims, gatts, vars, maxChunkElems = 96))
-      f
+  val kerchunkScan: QueryDef = {
+    lazy val dir = stableWork("fixtures").resolve("kerchunk")
+    lazy val pqDir = dir.resolve("refs_parquet")
+    QueryDef("q121_kerchunk_scan",
+      """SELECT variable, count(*) AS n_cells,
+        |  count(CASE WHEN NOT isnan(v) THEN 1 END) AS n_valid,
+        |  CAST(sum(CASE WHEN isnan(v) THEN 0
+        |           ELSE CAST(floor(v * 1e6) AS BIGINT) END) AS BIGINT) AS sum_u
+        |FROM (SELECT variable, unnest(values) AS v
+        |      FROM read_parquet('/tmp/graft-oracle/q121_cells/*.parquet'))
+        |GROUP BY 1 ORDER BY 1""".stripMargin,
+      setup = { (_, _) =>
+        java.nio.file.Files.createDirectories(dir)
+        // a two-file archive combined into ONE virtual store along time
+        // (MultiZarrToZarr): the scan below never knows there were files
+        val parts = Seq(0.0, 2.0).zipWithIndex.map { case (t0, i) =>
+          val f = dir.resolve(f"archive_$i%d.nc")
+          val (dims, gatts, vars) = NetCdfFixture.spec(nt = 2, ny = 16,
+            nx = 12, nl = 3, tStart = t0)
+          java.nio.file.Files.write(f,
+            graft.source.Hdf5Write.write(dims, gatts, vars, maxChunkElems = 96))
+          f
+        }
+        val refPaths = parts.zipWithIndex.map { case (f, i) =>
+          val rp = dir.resolve(s"refs_$i.json")
+          java.nio.file.Files.writeString(rp, Kerchunk.build(f))
+          rp
+        }
+        val combined = Kerchunk.combine(
+          refPaths.map(rp =>
+            Kerchunk.parse(java.nio.file.Files.readString(rp))),
+          concatDim = "time")
+        // persist the combined virtual store in BOTH formats and SCAN THE
+        // PARQUET ONE: at archive scale the JSON document is a single-node
+        // parse bottleneck; the parquet refs (one row per chunk,
+        // record-blocked per array) are what fsspec reads there. Any
+        // divergence between the parquet round-trip and the JSON store
+        // hash-mismatches the oracle below.
+        Kerchunk.writeParquetRefs(combined, pqDir, recordSize = 4)
+        val back = Kerchunk.readParquetRefs(pqDir)
+        require(back.metas.map(_.name).sorted ==
+            combined.metas.map(_.name).sorted &&
+            back.refs.keySet == combined.refs.keySet,
+          "parquet reference round-trip lost arrays or chunk refs")
+      }) { (s, _) =>
+      val st = Kerchunk.readParquetRefs(pqDir)
+      // one task per (array, chunk ref): the index IS the split plan
+      val tasks = st.metas.flatMap(m =>
+        Kerchunk.chunkRefs(st, m).map { case (k, r) => (m, k, r) })
+      import s.implicits._
+      val cells = s.createDataset(s.sparkContext
+        .parallelize(tasks, math.min(tasks.size, 16))
+        .map { case (m, key, ref) =>
+          val (_, _, values) = Kerchunk.decodeRef(m, key, ref)
+          (m.name, values)
+        })
+        .toDF("variable", "values")
+      oracleDump(s, "q121_cells", cells, dir.toString)
+      cells.select(col("variable"), explode(col("values")).as("v"))
+        .groupBy(col("variable"))
+        .agg(count(lit(1)).as("n_cells"),
+          count(when(!isnan(col("v")), 1)).as("n_valid"),
+          sum(when(isnan(col("v")), 0L)
+            .otherwise(floor(col("v") * 1e6).cast("long"))).as("sum_u"))
+        .orderBy("variable")
     }
-    val refPaths = parts.zipWithIndex.map { case (f, i) =>
-      val rp = dir.resolve(s"refs_$i.json")
-      java.nio.file.Files.writeString(rp, Kerchunk.build(f))
-      rp
-    }
-    val combined = Kerchunk.combine(
-      refPaths.map(rp =>
-        Kerchunk.parse(java.nio.file.Files.readString(rp))),
-      concatDim = "time")
-    // persist the combined virtual store in BOTH formats and SCAN THE
-    // PARQUET ONE: at archive scale the JSON document is a single-node
-    // parse bottleneck; the parquet refs (one row per chunk,
-    // record-blocked per array) are what fsspec reads there. Any
-    // divergence between the parquet round-trip and the JSON store
-    // hash-mismatches the oracle below. The write runs once per JVM
-    // (index-build cost, the Work.oracleDump discipline) — timed bench
-    // passes read the already-written store, as a production scan would.
-    val pqDir = dir.resolve("refs_parquet")
-    if (pqWritten.putIfAbsent(pqDir.toString, "") == null) {
-      Kerchunk.writeParquetRefs(combined, pqDir, recordSize = 4)
-      val back = Kerchunk.readParquetRefs(pqDir)
-      require(back.metas.map(_.name).sorted ==
-          combined.metas.map(_.name).sorted &&
-          back.refs.keySet == combined.refs.keySet,
-        "parquet reference round-trip lost arrays or chunk refs")
-    }
-    val st = Kerchunk.readParquetRefs(pqDir)
-    // one task per (array, chunk ref): the index IS the split plan
-    val tasks = st.metas.flatMap(m =>
-      Kerchunk.chunkRefs(st, m).map { case (k, r) => (m, k, r) })
-    import s.implicits._
-    val cells = s.createDataset(s.sparkContext
-      .parallelize(tasks, math.min(tasks.size, 16))
-      .map { case (m, key, ref) =>
-        val (_, _, values) = Kerchunk.decodeRef(m, key, ref)
-        (m.name, values)
-      })
-      .toDF("variable", "values")
-    oracleDump(s, "q121_cells", cells, dir.toString)
-    cells.select(col("variable"), explode(col("values")).as("v"))
-      .groupBy(col("variable"))
-      .agg(count(lit(1)).as("n_cells"),
-        count(when(!isnan(col("v")), 1)).as("n_valid"),
-        sum(when(isnan(col("v")), 0L)
-          .otherwise(floor(col("v") * 1e6).cast("long"))).as("sum_u"))
-      .orderBy("variable")
   }
 
   /** R5 — CONSERVATIVE (area-weighted) regridding between MISALIGNED

@@ -1,8 +1,11 @@
 package graft.queries
 
 import graft.{QueryDef, Tables, Work}
+import graft.functions.ZOrderExpr
+import graft.ops.{BloomIndex, IncrementalView, SnapshotTable, ZOrderCluster}
+import graft.ops.SnapshotTable.{Constraint, PartField, PartSpec}
 import graft.source.v2.ScanMetrics, ScanMetrics.Files
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -448,11 +451,15 @@ object Relational {
       .orderBy("cluster")
   }
 
-  // one clustered layout per (sf dir, JVM): bench warmup pays the write,
-  // timed passes and verify read the already-laid-out files (the
-  // Work.oracleDump discipline)
-  private val clusterLayouts =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  /** Register catalog `graft_<q>` rooted at `wh`. One catalog name per
+    * query: Spark caches catalog instances by name after first
+    * initialization, so a shared name would pin the first query's root
+    * for everyone.
+    */
+  private def useCatalog(s: SparkSession, q: String, wh: String): Unit = {
+    s.conf.set(s"spark.sql.catalog.graft_$q", "graft.source.v2.GraftCatalog")
+    s.conf.set(s"spark.sql.catalog.graft_$q.root", wh)
+  }
 
   /** q131 — the data-skipping PAYOFF of the clustered layout (q113
     * proved locality; this proves pruning): lineitem laid out by
@@ -471,43 +478,39 @@ object Relational {
     * cover [zorder(128,128), zorder(191,191)] is exact — at 16 files
     * over a 2^20 key space the scan touches ~1-2 of them.
     */
-  val clusterSkip = QueryDef("q131_cluster_skip",
-    """SELECT count(*) AS n,
-      |  CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT)) AS BIGINT)
-      |    AS qty_u,
-      |  min(px) AS px_min, max(px) AS px_max,
-      |  min(py) AS py_min, max(py) AS py_max,
-      |  TRUE AS files_pruned
-      |FROM (SELECT l_partkey % 1024 AS px, l_orderkey % 1024 AS py,
-      |        l_quantity FROM lineitem)
-      |WHERE px BETWEEN 128 AND 191 AND py BETWEEN 128 AND 191""".stripMargin) {
-    (s, d) =>
-    import graft.functions.ZOrderExpr
-    import graft.ops.ZOrderCluster
+  val clusterSkip: QueryDef = {
     val path = Work.oracleDumpPath("q131_layout")
-    clusterLayouts.compute("q131", (_, prev) => {
-      if (prev != d) {
+    QueryDef("q131_cluster_skip",
+      """SELECT count(*) AS n,
+        |  CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT)) AS BIGINT)
+        |    AS qty_u,
+        |  min(px) AS px_min, max(px) AS px_max,
+        |  min(py) AS py_min, max(py) AS py_max,
+        |  TRUE AS files_pruned
+        |FROM (SELECT l_partkey % 1024 AS px, l_orderkey % 1024 AS py,
+        |        l_quantity FROM lineitem)
+        |WHERE px BETWEEN 128 AND 191 AND py BETWEEN 128 AND 191""".stripMargin,
+      setup = { (s, d) =>
         val base = Tables.lineitem(s, d).select(
           pmod(col("l_partkey"), lit(1024)).cast("long").as("px"),
           pmod(col("l_orderkey"), lit(1024)).cast("long").as("py"),
           floor(col("l_quantity") * 100).cast("long").as("qty_u"))
         ZOrderCluster.write(base, path, col("px"), col("py"), bits = 10,
           numPartitions = 16)
-      }
-      d
-    })
-    val lo = ZOrderExpr.interleave(128, 128, 10)
-    val hi = ZOrderExpr.interleave(191, 191, 10)
-    val (scan, filesRead, filesTotal) = ZOrderCluster.scanRange(s, path, lo, hi)
-    require(filesRead > 0 && filesRead < filesTotal,
-      s"clustered layout did not prune: read $filesRead of $filesTotal " +
-        "files — the manifest ranges or the layout are broken")
-    scan
-      .filter(col("px").between(128, 191) && col("py").between(128, 191))
-      .agg(count(lit(1)).as("n"), sum("qty_u").cast("long").as("qty_u"),
-        min("px").as("px_min"), max("px").as("px_max"),
-        min("py").as("py_min"), max("py").as("py_max"))
-      .withColumn("files_pruned", lit(filesRead < filesTotal))
+      }) { (s, d) =>
+      val lo = ZOrderExpr.interleave(128, 128, 10)
+      val hi = ZOrderExpr.interleave(191, 191, 10)
+      val (scan, filesRead, filesTotal) = ZOrderCluster.scanRange(s, path, lo, hi)
+      require(filesRead > 0 && filesRead < filesTotal,
+        s"clustered layout did not prune: read $filesRead of $filesTotal " +
+          "files — the manifest ranges or the layout are broken")
+      scan
+        .filter(col("px").between(128, 191) && col("py").between(128, 191))
+        .agg(count(lit(1)).as("n"), sum("qty_u").cast("long").as("qty_u"),
+          min("px").as("px_min"), max("px").as("px_max"),
+          min("py").as("py_min"), max("py").as("py_max"))
+        .withColumn("files_pruned", lit(filesRead < filesTotal))
+    }
   }
 
   /** q135 — multi-interval curve-cover pruning on a NON-ALIGNED
@@ -524,22 +527,20 @@ object Relational {
     * recompute from the raw table, so a wrong cover (dropped interval,
     * mis-decomposed Hilbert block) hash-mismatches.
     */
-  val curveCoverSkip = QueryDef("q135_curve_cover_skip",
-    """SELECT count(*) AS n,
-      |  CAST(sum(qty_u) AS BIGINT) AS qty_u,
-      |  count(*) AS n_h,
-      |  CAST(sum(qty_u) AS BIGINT) AS qty_u_h,
-      |  TRUE AS files_pruned_z, TRUE AS files_pruned_h
-      |FROM (SELECT l_partkey % 1024 AS px, l_orderkey % 1024 AS py,
-      |        CAST(floor(l_quantity * 100) AS BIGINT) AS qty_u
-      |      FROM lineitem)
-      |WHERE px BETWEEN 100 AND 300 AND py BETWEEN 50 AND 137""".stripMargin) {
-    (s, d) =>
-    import graft.ops.ZOrderCluster
+  val curveCoverSkip: QueryDef = {
     val zPath = Work.oracleDumpPath("q135_layout_z")
     val hPath = Work.oracleDumpPath("q135_layout_h")
-    clusterLayouts.compute("q135", (_, prev) => {
-      if (prev != d) {
+    QueryDef("q135_curve_cover_skip",
+      """SELECT count(*) AS n,
+        |  CAST(sum(qty_u) AS BIGINT) AS qty_u,
+        |  count(*) AS n_h,
+        |  CAST(sum(qty_u) AS BIGINT) AS qty_u_h,
+        |  TRUE AS files_pruned_z, TRUE AS files_pruned_h
+        |FROM (SELECT l_partkey % 1024 AS px, l_orderkey % 1024 AS py,
+        |        CAST(floor(l_quantity * 100) AS BIGINT) AS qty_u
+        |      FROM lineitem)
+        |WHERE px BETWEEN 100 AND 300 AND py BETWEEN 50 AND 137""".stripMargin,
+      setup = { (s, d) =>
         val base = Tables.lineitem(s, d).select(
           pmod(col("l_partkey"), lit(1024)).cast("long").as("px"),
           pmod(col("l_orderkey"), lit(1024)).cast("long").as("py"),
@@ -548,22 +549,21 @@ object Relational {
           numPartitions = 16, curve = "zorder")
         ZOrderCluster.write(base, hPath, col("px"), col("py"), bits = 10,
           numPartitions = 16, curve = "hilbert")
+      }) { (s, d) =>
+      def scanOne(path: String, curve: String): DataFrame = {
+        val (scan, filesRead, filesTotal) = ZOrderCluster.scanRectangle(
+          s, path, 100, 300, 50, 137, bits = 10, curve = curve)
+        require(filesRead > 0 && filesRead < filesTotal,
+          s"$curve cover did not prune: read $filesRead of $filesTotal files")
+        scan.filter(col("px").between(100, 300) && col("py").between(50, 137))
+          .agg(count(lit(1)).as("n"), sum("qty_u").cast("long").as("qty_u"))
       }
-      d
-    })
-    def scanOne(path: String, curve: String): DataFrame = {
-      val (scan, filesRead, filesTotal) = ZOrderCluster.scanRectangle(
-        s, path, 100, 300, 50, 137, bits = 10, curve = curve)
-      require(filesRead > 0 && filesRead < filesTotal,
-        s"$curve cover did not prune: read $filesRead of $filesTotal files")
-      scan.filter(col("px").between(100, 300) && col("py").between(50, 137))
-        .agg(count(lit(1)).as("n"), sum("qty_u").cast("long").as("qty_u"))
+      scanOne(zPath, "zorder")
+        .crossJoin(scanOne(hPath, "hilbert")
+          .withColumnRenamed("n", "n_h").withColumnRenamed("qty_u", "qty_u_h"))
+        .withColumn("files_pruned_z", lit(true))
+        .withColumn("files_pruned_h", lit(true))
     }
-    scanOne(zPath, "zorder")
-      .crossJoin(scanOne(hPath, "hilbert")
-        .withColumnRenamed("n", "n_h").withColumnRenamed("qty_u", "qty_u_h"))
-      .withColumn("files_pruned_z", lit(true))
-      .withColumn("files_pruned_h", lit(true))
   }
 
   /** q140 — 3-D curve-cover pruning: lineitem laid out by the Morton-3
@@ -579,20 +579,19 @@ object Relational {
     * level), which is why the 3-D layout ships WITH the multi-interval
     * cover rather than gaining it later.
     */
-  val curveCover3Skip = QueryDef("q140_curve_cover3_skip",
-    """SELECT count(*) AS n,
-      |  CAST(sum(qty_u) AS BIGINT) AS qty_u,
-      |  TRUE AS files_pruned
-      |FROM (SELECT l_partkey % 256 AS px, l_orderkey % 256 AS py,
-      |        l_suppkey % 256 AS pt,
-      |        CAST(floor(l_quantity * 100) AS BIGINT) AS qty_u
-      |      FROM lineitem)
-      |WHERE px BETWEEN 30 AND 97 AND py BETWEEN 100 AND 201
-      |  AND pt BETWEEN 10 AND 40""".stripMargin) { (s, d) =>
-    import graft.ops.ZOrderCluster
+  val curveCover3Skip: QueryDef = {
     val path = Work.oracleDumpPath("q140_layout")
-    clusterLayouts.compute("q140", (_, prev) => {
-      if (prev != d) {
+    QueryDef("q140_curve_cover3_skip",
+      """SELECT count(*) AS n,
+        |  CAST(sum(qty_u) AS BIGINT) AS qty_u,
+        |  TRUE AS files_pruned
+        |FROM (SELECT l_partkey % 256 AS px, l_orderkey % 256 AS py,
+        |        l_suppkey % 256 AS pt,
+        |        CAST(floor(l_quantity * 100) AS BIGINT) AS qty_u
+        |      FROM lineitem)
+        |WHERE px BETWEEN 30 AND 97 AND py BETWEEN 100 AND 201
+        |  AND pt BETWEEN 10 AND 40""".stripMargin,
+      setup = { (s, d) =>
         val base = Tables.lineitem(s, d).select(
           pmod(col("l_partkey"), lit(256)).cast("long").as("px"),
           pmod(col("l_orderkey"), lit(256)).cast("long").as("py"),
@@ -600,18 +599,17 @@ object Relational {
           floor(col("l_quantity") * 100).cast("long").as("qty_u"))
         ZOrderCluster.write3(base, path, col("px"), col("py"), col("pt"),
           bits = 8, numPartitions = 24)
-      }
-      d
-    })
-    val (scan, filesRead, filesTotal) = ZOrderCluster.scanBox3(
-      s, path, 30, 97, 100, 201, 10, 40, bits = 8)
-    require(filesRead > 0 && filesRead < filesTotal,
-      s"3-D cover did not prune: read $filesRead of $filesTotal files")
-    scan
-      .filter(col("px").between(30, 97) && col("py").between(100, 201) &&
-        col("pt").between(10, 40))
-      .agg(count(lit(1)).as("n"), sum("qty_u").cast("long").as("qty_u"))
-      .withColumn("files_pruned", lit(true))
+      }) { (s, d) =>
+      val (scan, filesRead, filesTotal) = ZOrderCluster.scanBox3(
+        s, path, 30, 97, 100, 201, 10, 40, bits = 8)
+      require(filesRead > 0 && filesRead < filesTotal,
+        s"3-D cover did not prune: read $filesRead of $filesTotal files")
+      scan
+        .filter(col("px").between(30, 97) && col("py").between(100, 201) &&
+          col("pt").between(10, 40))
+        .agg(count(lit(1)).as("n"), sum("qty_u").cast("long").as("qty_u"))
+        .withColumn("files_pruned", lit(true))
+    }
   }
 
   /** q141 — the q140 box scan over a 3-D HILBERT layout: identical box,
@@ -623,12 +621,11 @@ object Relational {
     * recompute). Mirrors the q68/q78 twin pattern: one contract, both
     * layout strategies gated.
     */
-  val curveCover3HilbertSkip = QueryDef("q141_curve_cover3_hilbert",
-    curveCover3Skip.oracle.get) { (s, d) =>
-    import graft.ops.ZOrderCluster
+  val curveCover3HilbertSkip: QueryDef = {
     val path = Work.oracleDumpPath("q141_layout")
-    clusterLayouts.compute("q141", (_, prev) => {
-      if (prev != d) {
+    QueryDef("q141_curve_cover3_hilbert",
+      curveCover3Skip.oracle.get,
+      setup = { (s, d) =>
         val base = Tables.lineitem(s, d).select(
           pmod(col("l_partkey"), lit(256)).cast("long").as("px"),
           pmod(col("l_orderkey"), lit(256)).cast("long").as("py"),
@@ -636,18 +633,17 @@ object Relational {
           floor(col("l_quantity") * 100).cast("long").as("qty_u"))
         ZOrderCluster.write3(base, path, col("px"), col("py"), col("pt"),
           bits = 8, numPartitions = 24, curve = "hilbert")
-      }
-      d
-    })
-    val (scan, filesRead, filesTotal) = ZOrderCluster.scanBox3(
-      s, path, 30, 97, 100, 201, 10, 40, bits = 8, curve = "hilbert")
-    require(filesRead > 0 && filesRead < filesTotal,
-      s"hilbert-3 cover did not prune: read $filesRead of $filesTotal files")
-    scan
-      .filter(col("px").between(30, 97) && col("py").between(100, 201) &&
-        col("pt").between(10, 40))
-      .agg(count(lit(1)).as("n"), sum("qty_u").cast("long").as("qty_u"))
-      .withColumn("files_pruned", lit(true))
+      }) { (s, d) =>
+      val (scan, filesRead, filesTotal) = ZOrderCluster.scanBox3(
+        s, path, 30, 97, 100, 201, 10, 40, bits = 8, curve = "hilbert")
+      require(filesRead > 0 && filesRead < filesTotal,
+        s"hilbert-3 cover did not prune: read $filesRead of $filesTotal files")
+      scan
+        .filter(col("px").between(30, 97) && col("py").between(100, 201) &&
+          col("pt").between(10, 40))
+        .agg(count(lit(1)).as("n"), sum("qty_u").cast("long").as("qty_u"))
+        .withColumn("files_pruned", lit(true))
+    }
   }
 
   /** q142 — per-file BLOOM index point lookup: the skipping complement
@@ -665,18 +661,16 @@ object Relational {
     * dropped file (a bloom false NEGATIVE, which must never happen)
     * loses rows and hash-mismatches.
     */
-  val bloomSkip = QueryDef("q142_bloom_index_skip",
-    """SELECT count(*) AS n,
-      |  CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT)) AS BIGINT)
-      |    AS qty_u,
-      |  count(DISTINCT l_orderkey) AS n_orders,
-      |  TRUE AS files_pruned
-      |FROM lineitem WHERE l_orderkey IN (1, 2, 3)""".stripMargin) {
-    (s, d) =>
-    import graft.ops.BloomIndex
+  val bloomSkip: QueryDef = {
     val path = Work.oracleDumpPath("q142_layout")
-    clusterLayouts.compute("q142", (_, prev) => {
-      if (prev != d) {
+    QueryDef("q142_bloom_index_skip",
+      """SELECT count(*) AS n,
+        |  CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT)) AS BIGINT)
+        |    AS qty_u,
+        |  count(DISTINCT l_orderkey) AS n_orders,
+        |  TRUE AS files_pruned
+        |FROM lineitem WHERE l_orderkey IN (1, 2, 3)""".stripMargin,
+      setup = { (s, d) =>
         val base = Tables.lineitem(s, d).select(
           col("l_orderkey"), col("l_shipdate"),
           floor(col("l_quantity") * 100).cast("long").as("qty_u"))
@@ -685,18 +679,17 @@ object Relational {
         // at the 10× table, where 65536 stopped pruning entirely
         BloomIndex.write(base, path, col("l_shipdate"), "l_orderkey",
           numPartitions = 16)
-      }
-      d
-    })
-    val (scan, filesRead, filesTotal) =
-      BloomIndex.scanKeys(s, path, "l_orderkey", Seq(1L, 2L, 3L))
-    require(filesRead > 0 && filesRead < filesTotal,
-      s"bloom index did not prune: read $filesRead of $filesTotal files — " +
-        "the per-file blooms or the date layout are broken")
-    scan
-      .agg(count(lit(1)).as("n"), sum("qty_u").cast("long").as("qty_u"),
-        count_distinct(col("l_orderkey")).as("n_orders"))
-      .withColumn("files_pruned", lit(filesRead < filesTotal))
+      }) { (s, d) =>
+      val (scan, filesRead, filesTotal) =
+        BloomIndex.scanKeys(s, path, "l_orderkey", Seq(1L, 2L, 3L))
+      require(filesRead > 0 && filesRead < filesTotal,
+        s"bloom index did not prune: read $filesRead of $filesTotal files — " +
+          "the per-file blooms or the date layout are broken")
+      scan
+        .agg(count(lit(1)).as("n"), sum("qty_u").cast("long").as("qty_u"),
+          count_distinct(col("l_orderkey")).as("n_orders"))
+        .withColumn("files_pruned", lit(filesRead < filesTotal))
+    }
   }
 
   /** q144 — small-file compaction PLAN ([[graft.ops.Compaction]]):
@@ -756,21 +749,20 @@ object Relational {
     * the raw table with the same date predicates — a manifest that
     * drops or duplicates a file hash-mismatches.
     */
-  val timeTravel = QueryDef("q148_time_travel",
-    """SELECT
-      |  (SELECT count(*) FROM lineitem
-      |    WHERE l_shipdate < TIMESTAMP '1998-01-01') AS n_v1,
-      |  (SELECT CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT)) AS BIGINT)
-      |    FROM lineitem
-      |    WHERE l_shipdate < TIMESTAMP '1998-01-01') AS qty_v1,
-      |  (SELECT count(*) FROM lineitem) AS n_v2,
-      |  (SELECT CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT)) AS BIGINT)
-      |    FROM lineitem) AS qty_v2,
-      |  TRUE AS isolated""".stripMargin) { (s, d) =>
-    import graft.ops.SnapshotTable
+  val timeTravel: QueryDef = {
     val path = Work.oracleDumpPath("q148_table")
-    clusterLayouts.compute("q148", (_, prev) => {
-      if (prev != d) {
+    QueryDef("q148_time_travel",
+      """SELECT
+        |  (SELECT count(*) FROM lineitem
+        |    WHERE l_shipdate < TIMESTAMP '1998-01-01') AS n_v1,
+        |  (SELECT CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT)) AS BIGINT)
+        |    FROM lineitem
+        |    WHERE l_shipdate < TIMESTAMP '1998-01-01') AS qty_v1,
+        |  (SELECT count(*) FROM lineitem) AS n_v2,
+        |  (SELECT CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT)) AS BIGINT)
+        |    FROM lineitem) AS qty_v2,
+        |  TRUE AS isolated""".stripMargin,
+      setup = { (s, d) =>
         Work.wipe(java.nio.file.Paths.get(path))
         val base = Tables.lineitem(s, d).select(
           col("l_orderkey"), col("l_shipdate"),
@@ -781,26 +773,25 @@ object Relational {
         SnapshotTable.append(
           base.filter(col("l_shipdate") >= lit("1998-01-01")), path,
           numPartitions = 4)
-      }
-      d
-    })
-    val (scan1, files1, rows1) = SnapshotTable.scanAt(s, path, 1)
-    val (scan2, files2, rows2) = SnapshotTable.scanAt(s, path, 2)
-    require(files1 < files2,
-      s"time travel leaked: v1 sees $files1 files, v2 lists $files2")
-    val a1 = scan1.agg(count(lit(1)).as("n_v1"),
-      sum("qty_u").cast("long").as("qty_v1"))
-    val a2 = scan2.agg(count(lit(1)).as("n_v2"),
-      sum("qty_u").cast("long").as("qty_v2"))
-    // one execution: the collected row both feeds the drift assertion
-    // and becomes the (1-row) result
-    val r = a1.crossJoin(a2).collect().head
-    require(r.getLong(0) == rows1 && r.getLong(2) == rows2,
-      s"scan/manifest row drift: v1 ${r.getLong(0)}!=$rows1 or " +
-        s"v2 ${r.getLong(2)}!=$rows2")
-    import s.implicits._
-    Seq((r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), true))
-      .toDF("n_v1", "qty_v1", "n_v2", "qty_v2", "isolated")
+      }) { (s, d) =>
+      val (scan1, files1, rows1) = SnapshotTable.scanAt(s, path, 1)
+      val (scan2, files2, rows2) = SnapshotTable.scanAt(s, path, 2)
+      require(files1 < files2,
+        s"time travel leaked: v1 sees $files1 files, v2 lists $files2")
+      val a1 = scan1.agg(count(lit(1)).as("n_v1"),
+        sum("qty_u").cast("long").as("qty_v1"))
+      val a2 = scan2.agg(count(lit(1)).as("n_v2"),
+        sum("qty_u").cast("long").as("qty_v2"))
+      // one execution: the collected row both feeds the drift assertion
+      // and becomes the (1-row) result
+      val r = a1.crossJoin(a2).collect().head
+      require(r.getLong(0) == rows1 && r.getLong(2) == rows2,
+        s"scan/manifest row drift: v1 ${r.getLong(0)}!=$rows1 or " +
+          s"v2 ${r.getLong(2)}!=$rows2")
+      import s.implicits._
+      Seq((r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3), true))
+        .toDF("n_v1", "qty_v1", "n_v2", "qty_v2", "isolated")
+    }
   }
 
   /** q149 — COLUMN-STATS file skipping on the snapshot table: the
@@ -816,19 +807,18 @@ object Relational {
     * same calendar predicate — a stats row off by one day admits or
     * drops a file's rows and hash-mismatches.
     */
-  val statsSkip = QueryDef("q149_stats_skip",
-    """SELECT count(*) AS n,
-      |  CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT)) AS BIGINT)
-      |    AS qty_u,
-      |  min(l_orderkey) AS k_min, max(l_orderkey) AS k_max,
-      |  TRUE AS files_pruned
-      |FROM lineitem
-      |WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-      |  AND l_shipdate < TIMESTAMP '1997-01-01'""".stripMargin) { (s, d) =>
-    import graft.ops.SnapshotTable
+  val statsSkip: QueryDef = {
     val path = Work.oracleDumpPath("q149_table")
-    clusterLayouts.compute("q149", (_, prev) => {
-      if (prev != d) {
+    QueryDef("q149_stats_skip",
+      """SELECT count(*) AS n,
+        |  CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT)) AS BIGINT)
+        |    AS qty_u,
+        |  min(l_orderkey) AS k_min, max(l_orderkey) AS k_max,
+        |  TRUE AS files_pruned
+        |FROM lineitem
+        |WHERE l_shipdate >= TIMESTAMP '1996-01-01'
+        |  AND l_shipdate < TIMESTAMP '1997-01-01'""".stripMargin,
+      setup = { (s, d) =>
         Work.wipe(java.nio.file.Paths.get(path))
         val base = Tables.lineitem(s, d).select(
           col("l_orderkey"),
@@ -837,30 +827,29 @@ object Relational {
           floor(col("l_quantity") * 100).cast("long").as("qty_u"))
         SnapshotTable.append(base, path, numPartitions = 16,
           statsCol = Some("ship_day"))
-      }
-      d
-    })
-    val lo = java.time.LocalDate.of(1996, 1, 1).toEpochDay
-    val hi = java.time.LocalDate.of(1996, 12, 31).toEpochDay
-    // re-routed through the DSv2 provider: the SAME manifest pruning,
-    // but driven by an ORDINARY Catalyst filter pushdown instead of
-    // the bespoke scanStatsRange entry point — any SQL predicate on
-    // the stats column prunes files at planning time
-    import graft.source.v2.GraftTableSource
-    import org.apache.spark.sql.sources.{GreaterThanOrEqual, LessThanOrEqual}
-    val res = GraftTableSource.resolve(Map("path" -> path, "version" -> "1"))
-    val kept = GraftTableSource.pruneFiles(res, Array(
-      GreaterThanOrEqual("ship_day", lo), LessThanOrEqual("ship_day", hi)))
-    require(kept.nonEmpty && kept.length < res.ver.files.length,
-      s"column stats did not prune: planned ${kept.length} of " +
-        s"${res.ver.files.length} files")
-    s.read.format("graft_table")
-      .option("path", path).option("version", "1").load()
-      .filter(col("ship_day").between(lo, hi))
-      .agg(count(lit(1)).as("n"), sum("qty_u").cast("long").as("qty_u"),
-        min("l_orderkey").as("k_min"), max("l_orderkey").as("k_max"))
-      .withColumn("files_pruned",
-        lit(kept.length < res.ver.files.length))
+      }) { (s, d) =>
+      val lo = java.time.LocalDate.of(1996, 1, 1).toEpochDay
+      val hi = java.time.LocalDate.of(1996, 12, 31).toEpochDay
+      // re-routed through the DSv2 provider: the SAME manifest pruning,
+      // but driven by an ORDINARY Catalyst filter pushdown instead of
+      // the bespoke scanStatsRange entry point — any SQL predicate on
+      // the stats column prunes files at planning time
+      import graft.source.v2.GraftTableSource
+      import org.apache.spark.sql.sources.{GreaterThanOrEqual, LessThanOrEqual}
+      val res = GraftTableSource.resolve(Map("path" -> path, "version" -> "1"))
+      val kept = GraftTableSource.pruneFiles(res, Array(
+        GreaterThanOrEqual("ship_day", lo), LessThanOrEqual("ship_day", hi)))
+      require(kept.nonEmpty && kept.length < res.ver.files.length,
+        s"column stats did not prune: planned ${kept.length} of " +
+          s"${res.ver.files.length} files")
+      s.read.format("graft_table")
+        .option("path", path).option("version", "1").load()
+        .filter(col("ship_day").between(lo, hi))
+        .agg(count(lit(1)).as("n"), sum("qty_u").cast("long").as("qty_u"),
+          min("l_orderkey").as("k_min"), max("l_orderkey").as("k_max"))
+        .withColumn("files_pruned",
+          lit(kept.length < res.ver.files.length))
+    }
   }
 
   /** q150 — COPY-ON-WRITE DELETE on the snapshot table: dropping one
@@ -874,23 +863,22 @@ object Relational {
     * versions' aggregates are recomputed by DuckDB from the raw table
     * with and without the deleted range.
     */
-  val cowDelete = QueryDef("q150_cow_delete",
-    """SELECT
-      |  (SELECT count(*) FROM lineitem) AS n_v1,
-      |  (SELECT count(*) FROM lineitem
-      |    WHERE l_shipdate < TIMESTAMP '1996-01-01'
-      |       OR l_shipdate >= TIMESTAMP '1997-01-01') AS n_v2,
-      |  (SELECT CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT)) AS BIGINT)
-      |    FROM lineitem
-      |    WHERE l_shipdate < TIMESTAMP '1996-01-01'
-      |       OR l_shipdate >= TIMESTAMP '1997-01-01') AS qty_v2,
-      |  TRUE AS partial_rewrite""".stripMargin) { (s, d) =>
-    import graft.ops.SnapshotTable
+  val cowDelete: QueryDef = {
     val path = Work.oracleDumpPath("q150_table")
     val lo = java.time.LocalDate.of(1996, 1, 1).toEpochDay
     val hi = java.time.LocalDate.of(1996, 12, 31).toEpochDay
-    clusterLayouts.compute("q150", (_, prev) => {
-      if (prev != d) {
+    QueryDef("q150_cow_delete",
+      """SELECT
+        |  (SELECT count(*) FROM lineitem) AS n_v1,
+        |  (SELECT count(*) FROM lineitem
+        |    WHERE l_shipdate < TIMESTAMP '1996-01-01'
+        |       OR l_shipdate >= TIMESTAMP '1997-01-01') AS n_v2,
+        |  (SELECT CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT)) AS BIGINT)
+        |    FROM lineitem
+        |    WHERE l_shipdate < TIMESTAMP '1996-01-01'
+        |       OR l_shipdate >= TIMESTAMP '1997-01-01') AS qty_v2,
+        |  TRUE AS partial_rewrite""".stripMargin,
+      setup = { (s, d) =>
         Work.wipe(java.nio.file.Paths.get(path))
         val base = Tables.lineitem(s, d).select(
           col("l_orderkey"),
@@ -904,22 +892,21 @@ object Relational {
         require(rewritten > 0 && rewritten < total,
           s"copy-on-write delete rewrote $rewritten of $total files — " +
             "stats pruning of the rewrite scope is broken")
-      }
-      d
-    })
-    val (scan1, _, rows1) = SnapshotTable.scanAt(s, path, 1)
-    val (scan2, _, rows2) = SnapshotTable.scanAt(s, path, 2)
-    val r1 = scan1.agg(count(lit(1))).collect().head.getLong(0)
-    val a2 = scan2.agg(count(lit(1)).as("n"),
-      sum("qty_u").cast("long").as("q")).collect().head
-    require(r1 == rows1 && a2.getLong(0) == rows2,
-      "scan/manifest row drift across the delete")
-    // deleted rows must actually be GONE from v2
-    require(scan2.filter(col("ship_day").between(lo, hi)).isEmpty,
-      "deleted range still present at v2")
-    import s.implicits._
-    Seq((r1, a2.getLong(0), a2.getLong(1), true))
-      .toDF("n_v1", "n_v2", "qty_v2", "partial_rewrite")
+      }) { (s, d) =>
+      val (scan1, _, rows1) = SnapshotTable.scanAt(s, path, 1)
+      val (scan2, _, rows2) = SnapshotTable.scanAt(s, path, 2)
+      val r1 = scan1.agg(count(lit(1))).collect().head.getLong(0)
+      val a2 = scan2.agg(count(lit(1)).as("n"),
+        sum("qty_u").cast("long").as("q")).collect().head
+      require(r1 == rows1 && a2.getLong(0) == rows2,
+        "scan/manifest row drift across the delete")
+      // deleted rows must actually be GONE from v2
+      require(scan2.filter(col("ship_day").between(lo, hi)).isEmpty,
+        "deleted range still present at v2")
+      import s.implicits._
+      Seq((r1, a2.getLong(0), a2.getLong(1), true))
+        .toDF("n_v1", "n_v2", "qty_v2", "partial_rewrite")
+    }
   }
 
   /** q151 — SCHEMA EVOLUTION on the snapshot table: v2 appends a
@@ -931,26 +918,25 @@ object Relational {
     * that drops old files, fails to merge schemas, or defaults the
     * missing column to anything but NULL hash-mismatches.
     */
-  val schemaEvolution = QueryDef("q151_schema_evolution",
-    """WITH v1 AS (
-      |  SELECT l_orderkey AS k,
-      |    CAST(floor(l_quantity * 100) AS BIGINT) AS a,
-      |    CAST(NULL AS BIGINT) AS b
-      |  FROM lineitem WHERE l_linenumber = 1),
-      |v2 AS (
-      |  SELECT l_orderkey AS k,
-      |    CAST(floor(l_quantity * 100) AS BIGINT) AS a,
-      |    CAST(floor(l_extendedprice * 100) AS BIGINT) AS b
-      |  FROM lineitem WHERE l_linenumber = 2),
-      |t AS (SELECT * FROM v1 UNION ALL SELECT * FROM v2)
-      |SELECT count(*) AS n, CAST(sum(a) AS BIGINT) AS sum_a,
-      |  CAST(sum(b) AS BIGINT) AS sum_b,
-      |  count(b) AS n_with_b
-      |FROM t""".stripMargin) { (s, d) =>
-    import graft.ops.SnapshotTable
+  val schemaEvolution: QueryDef = {
     val path = Work.oracleDumpPath("q151_table")
-    clusterLayouts.compute("q151", (_, prev) => {
-      if (prev != d) {
+    QueryDef("q151_schema_evolution",
+      """WITH v1 AS (
+        |  SELECT l_orderkey AS k,
+        |    CAST(floor(l_quantity * 100) AS BIGINT) AS a,
+        |    CAST(NULL AS BIGINT) AS b
+        |  FROM lineitem WHERE l_linenumber = 1),
+        |v2 AS (
+        |  SELECT l_orderkey AS k,
+        |    CAST(floor(l_quantity * 100) AS BIGINT) AS a,
+        |    CAST(floor(l_extendedprice * 100) AS BIGINT) AS b
+        |  FROM lineitem WHERE l_linenumber = 2),
+        |t AS (SELECT * FROM v1 UNION ALL SELECT * FROM v2)
+        |SELECT count(*) AS n, CAST(sum(a) AS BIGINT) AS sum_a,
+        |  CAST(sum(b) AS BIGINT) AS sum_b,
+        |  count(b) AS n_with_b
+        |FROM t""".stripMargin,
+      setup = { (s, d) =>
         Work.wipe(java.nio.file.Paths.get(path))
         val li = Tables.lineitem(s, d)
         SnapshotTable.append(
@@ -964,13 +950,12 @@ object Relational {
             floor(col("l_quantity") * 100).cast("long").as("a"),
             floor(col("l_extendedprice") * 100).cast("long").as("b")),
           path, numPartitions = 4)
-      }
-      d
-    })
-    val (scan, _, _) = SnapshotTable.scanAt(s, path, 2)
-    scan.agg(count(lit(1)).as("n"), sum("a").cast("long").as("sum_a"),
-      sum("b").cast("long").as("sum_b"),
-      count(col("b")).as("n_with_b"))
+      }) { (s, d) =>
+      val (scan, _, _) = SnapshotTable.scanAt(s, path, 2)
+      scan.agg(count(lit(1)).as("n"), sum("a").cast("long").as("sum_a"),
+        sum("b").cast("long").as("sum_b"),
+        count(col("b")).as("n_with_b"))
+    }
   }
 
   /** q152 — OPTIMIZE: compaction EXECUTED through the snapshot table
@@ -989,19 +974,18 @@ object Relational {
     * table, so a compaction that drops, duplicates, or mis-ranges a
     * single row hash-mismatches.
     */
-  val optimizeCompact = QueryDef("q152_optimize_compact",
-    """SELECT
-      |  (SELECT count(*) FROM lineitem) AS n,
-      |  (SELECT CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT)) AS BIGINT)
-      |    FROM lineitem) AS qty_u,
-      |  (SELECT count(*) FROM lineitem
-      |    WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-      |      AND l_shipdate < TIMESTAMP '1997-01-01') AS n_slice,
-      |  TRUE AS compacted, TRUE AS pruned""".stripMargin) { (s, d) =>
-    import graft.ops.SnapshotTable
+  val optimizeCompact: QueryDef = {
     val path = Work.oracleDumpPath("q152_table")
-    clusterLayouts.compute("q152", (_, prev) => {
-      if (prev != d) {
+    QueryDef("q152_optimize_compact",
+      """SELECT
+        |  (SELECT count(*) FROM lineitem) AS n,
+        |  (SELECT CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT)) AS BIGINT)
+        |    FROM lineitem) AS qty_u,
+        |  (SELECT count(*) FROM lineitem
+        |    WHERE l_shipdate >= TIMESTAMP '1996-01-01'
+        |      AND l_shipdate < TIMESTAMP '1997-01-01') AS n_slice,
+        |  TRUE AS compacted, TRUE AS pruned""".stripMargin,
+      setup = { (s, d) =>
         Work.wipe(java.nio.file.Paths.get(path))
         val base = Tables.lineitem(s, d).select(
           col("l_orderkey"),
@@ -1025,28 +1009,27 @@ object Relational {
             res.filesAfter < res.filesBefore,
           s"OPTIMIZE did not shrink the table: ${res.filesAfter} of " +
             s"${res.filesBefore} files after, ${res.rewritten} rewritten")
-      }
-      d
-    })
-    val v = SnapshotTable.latestVersion(path)
-    val (scan, _, rowsExp) = SnapshotTable.scanAt(s, path, v)
-    // (c) the fragmented pre-OPTIMIZE version still reads whole
-    val (pre, _, rowsPre) = SnapshotTable.scanAt(s, path, v - 1)
-    require(rowsPre == rowsExp && pre.count() == rowsExp,
-      "pre-compaction version lost rows")
-    // (b) pruning survives: one year out of seven skips most files
-    val lo = java.time.LocalDate.of(1996, 1, 1).toEpochDay
-    val hi = java.time.LocalDate.of(1996, 12, 31).toEpochDay
-    val (slice, read, total) = SnapshotTable.scanStatsRange(s, path, v, lo, hi)
-    require(read > 0 && read < total,
-      s"stats pruning did not survive OPTIMIZE: read $read of $total")
-    val a = scan.agg(count(lit(1)).as("n"),
-      sum("qty_u").cast("long").as("qty_u")).collect().head
-    require(a.getLong(0) == rowsExp, "scan/manifest row drift after OPTIMIZE")
-    val nSlice = slice.count()
-    import s.implicits._
-    Seq((a.getLong(0), a.getLong(1), nSlice, true, true))
-      .toDF("n", "qty_u", "n_slice", "compacted", "pruned")
+      }) { (s, d) =>
+      val v = SnapshotTable.latestVersion(path)
+      val (scan, _, rowsExp) = SnapshotTable.scanAt(s, path, v)
+      // (c) the fragmented pre-OPTIMIZE version still reads whole
+      val (pre, _, rowsPre) = SnapshotTable.scanAt(s, path, v - 1)
+      require(rowsPre == rowsExp && pre.count() == rowsExp,
+        "pre-compaction version lost rows")
+      // (b) pruning survives: one year out of seven skips most files
+      val lo = java.time.LocalDate.of(1996, 1, 1).toEpochDay
+      val hi = java.time.LocalDate.of(1996, 12, 31).toEpochDay
+      val (slice, read, total) = SnapshotTable.scanStatsRange(s, path, v, lo, hi)
+      require(read > 0 && read < total,
+        s"stats pruning did not survive OPTIMIZE: read $read of $total")
+      val a = scan.agg(count(lit(1)).as("n"),
+        sum("qty_u").cast("long").as("qty_u")).collect().head
+      require(a.getLong(0) == rowsExp, "scan/manifest row drift after OPTIMIZE")
+      val nSlice = slice.count()
+      import s.implicits._
+      Seq((a.getLong(0), a.getLong(1), nSlice, true, true))
+        .toDF("n", "qty_u", "n_slice", "compacted", "pruned")
+    }
   }
 
   /** q153 — VERSIONED bloom probe: q142's equality skipping composed
@@ -1063,20 +1046,19 @@ object Relational {
     * probe that opens the other version's files (or drops a
     * false-negative file) hash-mismatches.
     */
-  val versionedBloom = QueryDef("q153_versioned_bloom_probe",
-    """SELECT
-      |  (SELECT count(*) FROM lineitem
-      |    WHERE l_orderkey IN (1, 2, 3) AND l_linenumber <= 3) AS n_v1,
-      |  (SELECT CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT)) AS BIGINT)
-      |    FROM lineitem
-      |    WHERE l_orderkey IN (1, 2, 3) AND l_linenumber <= 3) AS qty_v1,
-      |  (SELECT count(*) FROM lineitem
-      |    WHERE l_orderkey IN (1, 2, 3)) AS n_v2,
-      |  TRUE AS isolated, TRUE AS files_pruned""".stripMargin) { (s, d) =>
-    import graft.ops.SnapshotTable
+  val versionedBloom: QueryDef = {
     val path = Work.oracleDumpPath("q153_table")
-    clusterLayouts.compute("q153", (_, prev) => {
-      if (prev != d) {
+    QueryDef("q153_versioned_bloom_probe",
+      """SELECT
+        |  (SELECT count(*) FROM lineitem
+        |    WHERE l_orderkey IN (1, 2, 3) AND l_linenumber <= 3) AS n_v1,
+        |  (SELECT CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT)) AS BIGINT)
+        |    FROM lineitem
+        |    WHERE l_orderkey IN (1, 2, 3) AND l_linenumber <= 3) AS qty_v1,
+        |  (SELECT count(*) FROM lineitem
+        |    WHERE l_orderkey IN (1, 2, 3)) AS n_v2,
+        |  TRUE AS isolated, TRUE AS files_pruned""".stripMargin,
+      setup = { (s, d) =>
         Work.wipe(java.nio.file.Paths.get(path))
         val base = Tables.lineitem(s, d).select(
           col("l_orderkey"), col("l_linenumber"),
@@ -1089,22 +1071,21 @@ object Relational {
         SnapshotTable.append(base.filter(col("l_linenumber") > 3), path,
           numPartitions = 8, statsCol = Some("ship_day"),
           bloomCol = Some("l_orderkey"))
-      }
-      d
-    })
-    val keys = Seq(1L, 2L, 3L)
-    val (s1, read1, total1) = SnapshotTable.scanKeysAt(s, path, 1, keys)
-    val (s2, read2, total2) = SnapshotTable.scanKeysAt(s, path, 2, keys)
-    require(total1 < total2,
-      s"versioned probe leaked: v1 tests $total1 files, v2 lists $total2")
-    require(read1 > 0 && read2 > 0 && read2 < total2,
-      s"versioned bloom did not prune: v1 $read1/$total1, v2 $read2/$total2")
-    val a1 = s1.agg(count(lit(1)).as("n_v1"),
-      sum("qty_u").cast("long").as("qty_v1")).collect().head
-    val n2 = s2.count()
-    import s.implicits._
-    Seq((a1.getLong(0), a1.getLong(1), n2, true, true))
-      .toDF("n_v1", "qty_v1", "n_v2", "isolated", "files_pruned")
+      }) { (s, d) =>
+      val keys = Seq(1L, 2L, 3L)
+      val (s1, read1, total1) = SnapshotTable.scanKeysAt(s, path, 1, keys)
+      val (s2, read2, total2) = SnapshotTable.scanKeysAt(s, path, 2, keys)
+      require(total1 < total2,
+        s"versioned probe leaked: v1 tests $total1 files, v2 lists $total2")
+      require(read1 > 0 && read2 > 0 && read2 < total2,
+        s"versioned bloom did not prune: v1 $read1/$total1, v2 $read2/$total2")
+      val a1 = s1.agg(count(lit(1)).as("n_v1"),
+        sum("qty_u").cast("long").as("qty_v1")).collect().head
+      val n2 = s2.count()
+      import s.implicits._
+      Seq((a1.getLong(0), a1.getLong(1), n2, true, true))
+        .toDF("n_v1", "qty_v1", "n_v2", "isolated", "files_pruned")
+    }
   }
 
   /** q155 — MERGE INTO (copy-on-write upsert) on the snapshot table
@@ -1121,30 +1102,29 @@ object Relational {
     * survivor row, a duplicated key, or a dropped insert all
     * hash-mismatch.
     */
-  val mergeUpsert = QueryDef("q155_merge_upsert",
-    """SELECT
-      |  (SELECT count(*) FROM orders) +
-      |  (SELECT count(*) FROM orders
-      |    WHERE o_orderdate >= TIMESTAMP '1999-01-01'
-      |      AND o_orderdate < TIMESTAMP '2000-01-01') AS n,
-      |  (SELECT CAST(sum(CAST(floor(o_totalprice * 100) AS BIGINT))
-      |     AS BIGINT) FROM orders) +
-      |  (SELECT 1000007 * count(*) FROM orders
-      |    WHERE o_orderdate >= TIMESTAMP '1999-01-01'
-      |      AND o_orderdate < TIMESTAMP '2000-01-01') AS price_u,
-      |  (SELECT count(*) FROM orders) AS n_v1,
-      |  TRUE AS partial_rewrite""".stripMargin) { (s, d) =>
-    import graft.ops.SnapshotTable
+  val mergeUpsert: QueryDef = {
     val path = Work.oracleDumpPath("q155_table")
-    val lo99 = java.time.LocalDate.of(1999, 1, 1).toEpochDay
-    val hi99 = java.time.LocalDate.of(1999, 12, 31).toEpochDay
-    def keyed(df: DataFrame) = df.select(
-      col("o_orderkey").cast("long").as("k"),
-      expr("CAST(datediff(o_orderdate, DATE '1970-01-01') AS BIGINT)")
-        .as("order_day"),
-      floor(col("o_totalprice") * 100).cast("long").as("price_u"))
-    clusterLayouts.compute("q155", (_, prev) => {
-      if (prev != d) {
+    QueryDef("q155_merge_upsert",
+      """SELECT
+        |  (SELECT count(*) FROM orders) +
+        |  (SELECT count(*) FROM orders
+        |    WHERE o_orderdate >= TIMESTAMP '1999-01-01'
+        |      AND o_orderdate < TIMESTAMP '2000-01-01') AS n,
+        |  (SELECT CAST(sum(CAST(floor(o_totalprice * 100) AS BIGINT))
+        |     AS BIGINT) FROM orders) +
+        |  (SELECT 1000007 * count(*) FROM orders
+        |    WHERE o_orderdate >= TIMESTAMP '1999-01-01'
+        |      AND o_orderdate < TIMESTAMP '2000-01-01') AS price_u,
+        |  (SELECT count(*) FROM orders) AS n_v1,
+        |  TRUE AS partial_rewrite""".stripMargin,
+      setup = { (s, d) =>
+        val lo99 = java.time.LocalDate.of(1999, 1, 1).toEpochDay
+        val hi99 = java.time.LocalDate.of(1999, 12, 31).toEpochDay
+        def keyed(df: DataFrame) = df.select(
+          col("o_orderkey").cast("long").as("k"),
+          expr("CAST(datediff(o_orderdate, DATE '1970-01-01') AS BIGINT)")
+            .as("order_day"),
+          floor(col("o_totalprice") * 100).cast("long").as("price_u"))
         Work.wipe(java.nio.file.Paths.get(path))
         val base = keyed(Tables.load(s, d, "orders"))
         SnapshotTable.append(base, path, numPartitions = 16,
@@ -1163,19 +1143,18 @@ object Relational {
         require(res.rowsMatched == nHit && res.rowsInserted == nHit,
           s"merge accounting drift: matched ${res.rowsMatched}, " +
             s"inserted ${res.rowsInserted}, expected $nHit each")
-      }
-      d
-    })
-    val (s2, _, rows2) = SnapshotTable.scanAt(s, path, 2)
-    val (s1, _, rows1) = SnapshotTable.scanAt(s, path, 1)
-    val a = s2.agg(count(lit(1)).as("n"),
-      sum("price_u").cast("long").as("price_u")).collect().head
-    require(a.getLong(0) == rows2, "scan/manifest row drift after merge")
-    val n1 = s1.count()
-    require(n1 == rows1, "pre-merge version lost rows")
-    import s.implicits._
-    Seq((a.getLong(0), a.getLong(1), n1, true))
-      .toDF("n", "price_u", "n_v1", "partial_rewrite")
+      }) { (s, d) =>
+      val (s2, _, rows2) = SnapshotTable.scanAt(s, path, 2)
+      val (s1, _, rows1) = SnapshotTable.scanAt(s, path, 1)
+      val a = s2.agg(count(lit(1)).as("n"),
+        sum("price_u").cast("long").as("price_u")).collect().head
+      require(a.getLong(0) == rows2, "scan/manifest row drift after merge")
+      val n1 = s1.count()
+      require(n1 == rows1, "pre-merge version lost rows")
+      import s.implicits._
+      Seq((a.getLong(0), a.getLong(1), n1, true))
+        .toDF("n", "price_u", "n_v1", "partial_rewrite")
+    }
   }
 
   /** q156 — SNAPSHOT EXPIRATION (retention sweep,
@@ -1189,20 +1168,19 @@ object Relational {
     * version's aggregate — recomputed by DuckDB from the raw table
     * with the delete predicate — is untouched by the sweep.
     */
-  val expireSnapshots = QueryDef("q156_expire_snapshots",
-    """SELECT count(*) AS n,
-      |  CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT)) AS BIGINT)
-      |    AS qty_u,
-      |  TRUE AS expired_loud, TRUE AS files_swept
-      |FROM lineitem
-      |WHERE l_shipdate < TIMESTAMP '1996-01-01'
-      |   OR l_shipdate >= TIMESTAMP '1997-01-01'""".stripMargin) { (s, d) =>
-    import graft.ops.SnapshotTable
+  val expireSnapshots: QueryDef = {
     val path = Work.oracleDumpPath("q156_table")
-    val lo = java.time.LocalDate.of(1996, 1, 1).toEpochDay
-    val hi = java.time.LocalDate.of(1996, 12, 31).toEpochDay
-    clusterLayouts.compute("q156", (_, prev) => {
-      if (prev != d) {
+    QueryDef("q156_expire_snapshots",
+      """SELECT count(*) AS n,
+        |  CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT)) AS BIGINT)
+        |    AS qty_u,
+        |  TRUE AS expired_loud, TRUE AS files_swept
+        |FROM lineitem
+        |WHERE l_shipdate < TIMESTAMP '1996-01-01'
+        |   OR l_shipdate >= TIMESTAMP '1997-01-01'""".stripMargin,
+      setup = { (s, d) =>
+        val lo = java.time.LocalDate.of(1996, 1, 1).toEpochDay
+        val hi = java.time.LocalDate.of(1996, 12, 31).toEpochDay
         Work.wipe(java.nio.file.Paths.get(path))
         val base = Tables.lineitem(s, d).select(
           expr("CAST(datediff(l_shipdate, DATE '1970-01-01') AS BIGINT)")
@@ -1215,25 +1193,24 @@ object Relational {
         require(res.manifestsDeleted == 1 && res.filesDeleted > 0,
           s"expire swept ${res.manifestsDeleted} manifests, " +
             s"${res.filesDeleted} files — nothing was dead?")
-      }
-      d
-    })
-    // the expired version is loud, per run
-    require(scala.util.Try(SnapshotTable.scanAt(s, path, 1)).isFailure,
-      "expired version 1 still readable")
-    val ver = SnapshotTable.readVersion(s, path, 2)
-    // on-disk population == the retained manifest, exactly
-    val onDisk = Work.walkAll(java.nio.file.Paths.get(path, "files"))
-      .count(_.getFileName.toString.endsWith(".parquet"))
-    require(onDisk == ver.files.length,
-      s"$onDisk parquet files on disk, manifest lists ${ver.files.length}")
-    val (s2, _, rows2) = SnapshotTable.scanAt(s, path, 2)
-    val a = s2.agg(count(lit(1)).as("n"),
-      sum("qty_u").cast("long").as("qty_u")).collect().head
-    require(a.getLong(0) == rows2, "retained version lost rows")
-    import s.implicits._
-    Seq((a.getLong(0), a.getLong(1), true, true))
-      .toDF("n", "qty_u", "expired_loud", "files_swept")
+      }) { (s, d) =>
+      // the expired version is loud, per run
+      require(scala.util.Try(SnapshotTable.scanAt(s, path, 1)).isFailure,
+        "expired version 1 still readable")
+      val ver = SnapshotTable.readVersion(s, path, 2)
+      // on-disk population == the retained manifest, exactly
+      val onDisk = Work.walkAll(java.nio.file.Paths.get(path, "files"))
+        .count(_.getFileName.toString.endsWith(".parquet"))
+      require(onDisk == ver.files.length,
+        s"$onDisk parquet files on disk, manifest lists ${ver.files.length}")
+      val (s2, _, rows2) = SnapshotTable.scanAt(s, path, 2)
+      val a = s2.agg(count(lit(1)).as("n"),
+        sum("qty_u").cast("long").as("qty_u")).collect().head
+      require(a.getLong(0) == rows2, "retained version lost rows")
+      import s.implicits._
+      Seq((a.getLong(0), a.getLong(1), true, true))
+        .toDF("n", "qty_u", "expired_loud", "files_swept")
+    }
   }
 
   /** q157 — CHANGE DATA FEED ([[graft.ops.SnapshotTable.changes]]):
@@ -1246,28 +1223,27 @@ object Relational {
     * the hash); the v2→v3 diff of an append is pure inserts. DuckDB
     * recomputes both sides from the raw table with the same predicates.
     */
-  val changeDataFeed = QueryDef("q157_change_data_feed",
-    """SELECT
-      |  (SELECT count(*) FROM lineitem
-      |    WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-      |      AND l_shipdate < TIMESTAMP '1997-01-01') AS n_del,
-      |  (SELECT CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT))
-      |     AS BIGINT) FROM lineitem
-      |    WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-      |      AND l_shipdate < TIMESTAMP '1997-01-01') AS qty_del,
-      |  CAST(0 AS BIGINT) AS n_ins_12,
-      |  (SELECT count(*) FROM lineitem
-      |    WHERE l_shipdate >= TIMESTAMP '1997-01-01'
-      |      AND l_shipdate < TIMESTAMP '1998-01-01'
-      |      AND l_linenumber = 1) AS n_ins_23""".stripMargin) { (s, d) =>
-    import graft.ops.SnapshotTable
+  val changeDataFeed: QueryDef = {
     val path = Work.oracleDumpPath("q157_table")
-    val lo96 = java.time.LocalDate.of(1996, 1, 1).toEpochDay
-    val hi96 = java.time.LocalDate.of(1996, 12, 31).toEpochDay
-    val lo97 = java.time.LocalDate.of(1997, 1, 1).toEpochDay
-    val hi97 = java.time.LocalDate.of(1997, 12, 31).toEpochDay
-    clusterLayouts.compute("q157", (_, prev) => {
-      if (prev != d) {
+    QueryDef("q157_change_data_feed",
+      """SELECT
+        |  (SELECT count(*) FROM lineitem
+        |    WHERE l_shipdate >= TIMESTAMP '1996-01-01'
+        |      AND l_shipdate < TIMESTAMP '1997-01-01') AS n_del,
+        |  (SELECT CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT))
+        |     AS BIGINT) FROM lineitem
+        |    WHERE l_shipdate >= TIMESTAMP '1996-01-01'
+        |      AND l_shipdate < TIMESTAMP '1997-01-01') AS qty_del,
+        |  CAST(0 AS BIGINT) AS n_ins_12,
+        |  (SELECT count(*) FROM lineitem
+        |    WHERE l_shipdate >= TIMESTAMP '1997-01-01'
+        |      AND l_shipdate < TIMESTAMP '1998-01-01'
+        |      AND l_linenumber = 1) AS n_ins_23""".stripMargin,
+      setup = { (s, d) =>
+        val lo96 = java.time.LocalDate.of(1996, 1, 1).toEpochDay
+        val hi96 = java.time.LocalDate.of(1996, 12, 31).toEpochDay
+        val lo97 = java.time.LocalDate.of(1997, 1, 1).toEpochDay
+        val hi97 = java.time.LocalDate.of(1997, 12, 31).toEpochDay
         Work.wipe(java.nio.file.Paths.get(path))
         val base = Tables.lineitem(s, d).select(
           expr("CAST(datediff(l_shipdate, DATE '1970-01-01') AS BIGINT)")
@@ -1285,26 +1261,25 @@ object Relational {
               floor(col("l_quantity") * 100).cast("long").as("qty_u"))
             .filter(col("ship_day").between(lo97, hi97)),
           path, numPartitions = 2, statsCol = Some("ship_day"))
-      }
-      d
-    })
-    val d12 = SnapshotTable.changes(s, path, 1, 2)
-    val d23 = SnapshotTable.changes(s, path, 2, 3)
-    val a = d12.groupBy("_change")
-      .agg(count(lit(1)).as("n"), sum("qty_u").cast("long").as("q"))
-      .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2)))
-      .toMap
-    val (nDel, qtyDel) = a.getOrElse("delete", (0L, 0L))
-    val nIns12 = a.get("insert").map(_._1).getOrElse(0L)
-    require(nIns12 == 0,
-      s"COW-delete CDF leaked $nIns12 phantom inserts — survivor " +
-        "rewrites must cancel")
-    val nIns23 = d23.filter(col("_change") === "insert").count()
-    require(d23.filter(col("_change") === "delete").isEmpty,
-      "append CDF emitted deletes")
-    import s.implicits._
-    Seq((nDel, qtyDel, nIns12, nIns23))
-      .toDF("n_del", "qty_del", "n_ins_12", "n_ins_23")
+      }) { (s, d) =>
+      val d12 = SnapshotTable.changes(s, path, 1, 2)
+      val d23 = SnapshotTable.changes(s, path, 2, 3)
+      val a = d12.groupBy("_change")
+        .agg(count(lit(1)).as("n"), sum("qty_u").cast("long").as("q"))
+        .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2)))
+        .toMap
+      val (nDel, qtyDel) = a.getOrElse("delete", (0L, 0L))
+      val nIns12 = a.get("insert").map(_._1).getOrElse(0L)
+      require(nIns12 == 0,
+        s"COW-delete CDF leaked $nIns12 phantom inserts — survivor " +
+          "rewrites must cancel")
+      val nIns23 = d23.filter(col("_change") === "insert").count()
+      require(d23.filter(col("_change") === "delete").isEmpty,
+        "append CDF emitted deletes")
+      import s.implicits._
+      Seq((nDel, qtyDel, nIns12, nIns23))
+        .toDF("n_del", "qty_del", "n_ins_12", "n_ins_23")
+    }
   }
 
   /** q159 — VERSIONED curve-key rectangle probe: q131's Z-order
@@ -1320,27 +1295,26 @@ object Relational {
     * batch-defining predicate — a wrong cover interval or a leaked
     * v2 file changes the v1 numbers and hash-mismatches.
     */
-  val versionedCurveSkip = QueryDef("q159_versioned_curve_skip",
-    """WITH pts AS (
-      |  SELECT l_partkey % 1024 AS px, l_orderkey % 1024 AS py,
-      |    l_linenumber AS ln,
-      |    CAST(floor(l_quantity * 100) AS BIGINT) AS qty_u
-      |  FROM lineitem)
-      |SELECT
-      |  (SELECT count(*) FROM pts
-      |    WHERE px BETWEEN 128 AND 191 AND py BETWEEN 128 AND 191
-      |      AND ln <= 3) AS n_v1,
-      |  (SELECT CAST(sum(qty_u) AS BIGINT) FROM pts
-      |    WHERE px BETWEEN 128 AND 191 AND py BETWEEN 128 AND 191
-      |      AND ln <= 3) AS qty_v1,
-      |  (SELECT count(*) FROM pts
-      |    WHERE px BETWEEN 128 AND 191 AND py BETWEEN 128 AND 191)
-      |    AS n_v2,
-      |  TRUE AS isolated, TRUE AS files_pruned""".stripMargin) { (s, d) =>
-    import graft.ops.SnapshotTable
+  val versionedCurveSkip: QueryDef = {
     val path = Work.oracleDumpPath("q159_table")
-    clusterLayouts.compute("q159", (_, prev) => {
-      if (prev != d) {
+    QueryDef("q159_versioned_curve_skip",
+      """WITH pts AS (
+        |  SELECT l_partkey % 1024 AS px, l_orderkey % 1024 AS py,
+        |    l_linenumber AS ln,
+        |    CAST(floor(l_quantity * 100) AS BIGINT) AS qty_u
+        |  FROM lineitem)
+        |SELECT
+        |  (SELECT count(*) FROM pts
+        |    WHERE px BETWEEN 128 AND 191 AND py BETWEEN 128 AND 191
+        |      AND ln <= 3) AS n_v1,
+        |  (SELECT CAST(sum(qty_u) AS BIGINT) FROM pts
+        |    WHERE px BETWEEN 128 AND 191 AND py BETWEEN 128 AND 191
+        |      AND ln <= 3) AS qty_v1,
+        |  (SELECT count(*) FROM pts
+        |    WHERE px BETWEEN 128 AND 191 AND py BETWEEN 128 AND 191)
+        |    AS n_v2,
+        |  TRUE AS isolated, TRUE AS files_pruned""".stripMargin,
+      setup = { (s, d) =>
         Work.wipe(java.nio.file.Paths.get(path))
         val base = Tables.lineitem(s, d).select(
           pmod(col("l_partkey"), lit(1024)).cast("long").as("px"),
@@ -1353,28 +1327,27 @@ object Relational {
           numPartitions = 16, statsCol = Some("z"))
         SnapshotTable.append(base.filter(col("ln") > 3), path,
           numPartitions = 16, statsCol = Some("z"))
+      }) { (s, d) =>
+      def probe(version: Long) = {
+        val (scan, read, total) = SnapshotTable.scanRectangleAt(
+          s, path, version, 128, 191, 128, 191, bits = 10)
+        require(read > 0 && read < total,
+          s"versioned curve cover did not prune at v$version: " +
+            s"read $read of $total files")
+        (scan.filter(col("px").between(128, 191) &&
+          col("py").between(128, 191)), total)
       }
-      d
-    })
-    def probe(version: Long) = {
-      val (scan, read, total) = SnapshotTable.scanRectangleAt(
-        s, path, version, 128, 191, 128, 191, bits = 10)
-      require(read > 0 && read < total,
-        s"versioned curve cover did not prune at v$version: " +
-          s"read $read of $total files")
-      (scan.filter(col("px").between(128, 191) &&
-        col("py").between(128, 191)), total)
+      val (s1, total1) = probe(1)
+      val (s2, total2) = probe(2)
+      require(total1 < total2,
+        s"versioned probe leaked: v1 plans over $total1 files, v2 $total2")
+      val a1 = s1.agg(count(lit(1)).as("n_v1"),
+        sum("qty_u").cast("long").as("qty_v1")).collect().head
+      val n2 = s2.count()
+      import s.implicits._
+      Seq((a1.getLong(0), a1.getLong(1), n2, true, true))
+        .toDF("n_v1", "qty_v1", "n_v2", "isolated", "files_pruned")
     }
-    val (s1, total1) = probe(1)
-    val (s2, total2) = probe(2)
-    require(total1 < total2,
-      s"versioned probe leaked: v1 plans over $total1 files, v2 $total2")
-    val a1 = s1.agg(count(lit(1)).as("n_v1"),
-      sum("qty_u").cast("long").as("qty_v1")).collect().head
-    val n2 = s2.count()
-    import s.implicits._
-    Seq((a1.getLong(0), a1.getLong(1), n2, true, true))
-      .toDF("n_v1", "qty_v1", "n_v2", "isolated", "files_pruned")
   }
 
   /** q164 — INCREMENTAL VIEW MAINTENANCE over the change feed
@@ -1391,38 +1364,37 @@ object Relational {
     * group, or mis-signs a delete changes some group's (cnt, sum) and
     * hash-mismatches.
     */
-  val incrementalView = QueryDef("q164_incremental_view",
-    """WITH fin AS (
-      |  -- v1 survivors of the 1996 delete ...
-      |  SELECT CAST(datediff('day', DATE '1970-01-01',
-      |      CAST(l_shipdate AS DATE)) AS BIGINT) AS ship_day,
-      |    CAST(floor(l_quantity * 100) AS BIGINT) AS qty_u
-      |  FROM lineitem
-      |  WHERE l_linenumber <= 3
-      |    AND (l_shipdate < TIMESTAMP '1996-01-01'
-      |         OR l_shipdate >= TIMESTAMP '1997-01-01')
-      |  UNION ALL
-      |  -- ... plus the v3 append, WITH multiplicity: line-1 1997 rows
-      |  -- exist twice in the final table (once from each commit)
-      |  SELECT CAST(datediff('day', DATE '1970-01-01',
-      |      CAST(l_shipdate AS DATE)) AS BIGINT) AS ship_day,
-      |    CAST(floor(l_quantity * 100) AS BIGINT) AS qty_u
-      |  FROM lineitem
-      |  WHERE l_linenumber = 1
-      |    AND l_shipdate >= TIMESTAMP '1997-01-01'
-      |    AND l_shipdate < TIMESTAMP '1998-01-01')
-      |SELECT ship_day % 32 AS wk, count(*) AS cnt,
-      |  CAST(sum(qty_u) AS BIGINT) AS s_qty
-      |FROM fin GROUP BY 1 ORDER BY 1""".stripMargin) { (s, d) =>
-    import graft.ops.{IncrementalView, SnapshotTable}
-    val path = Work.oracleDumpPath("q164_table")
+  val incrementalView: QueryDef = {
     val view = Work.oracleDumpPath("q164_view")
-    val lo96 = java.time.LocalDate.of(1996, 1, 1).toEpochDay
-    val hi96 = java.time.LocalDate.of(1996, 12, 31).toEpochDay
-    val lo97 = java.time.LocalDate.of(1997, 1, 1).toEpochDay
-    val hi97 = java.time.LocalDate.of(1997, 12, 31).toEpochDay
-    clusterLayouts.compute("q164", (_, prev) => {
-      if (prev != d) {
+    QueryDef("q164_incremental_view",
+      """WITH fin AS (
+        |  -- v1 survivors of the 1996 delete ...
+        |  SELECT CAST(datediff('day', DATE '1970-01-01',
+        |      CAST(l_shipdate AS DATE)) AS BIGINT) AS ship_day,
+        |    CAST(floor(l_quantity * 100) AS BIGINT) AS qty_u
+        |  FROM lineitem
+        |  WHERE l_linenumber <= 3
+        |    AND (l_shipdate < TIMESTAMP '1996-01-01'
+        |         OR l_shipdate >= TIMESTAMP '1997-01-01')
+        |  UNION ALL
+        |  -- ... plus the v3 append, WITH multiplicity: line-1 1997 rows
+        |  -- exist twice in the final table (once from each commit)
+        |  SELECT CAST(datediff('day', DATE '1970-01-01',
+        |      CAST(l_shipdate AS DATE)) AS BIGINT) AS ship_day,
+        |    CAST(floor(l_quantity * 100) AS BIGINT) AS qty_u
+        |  FROM lineitem
+        |  WHERE l_linenumber = 1
+        |    AND l_shipdate >= TIMESTAMP '1997-01-01'
+        |    AND l_shipdate < TIMESTAMP '1998-01-01')
+        |SELECT ship_day % 32 AS wk, count(*) AS cnt,
+        |  CAST(sum(qty_u) AS BIGINT) AS s_qty
+        |FROM fin GROUP BY 1 ORDER BY 1""".stripMargin,
+      setup = { (s, d) =>
+        val path = Work.oracleDumpPath("q164_table")
+        val lo96 = java.time.LocalDate.of(1996, 1, 1).toEpochDay
+        val hi96 = java.time.LocalDate.of(1996, 12, 31).toEpochDay
+        val lo97 = java.time.LocalDate.of(1997, 1, 1).toEpochDay
+        val hi97 = java.time.LocalDate.of(1997, 12, 31).toEpochDay
         Work.wipe(java.nio.file.Paths.get(path))
         Work.wipe(java.nio.file.Paths.get(view))
         def rows(pred: Column) = Tables.lineitem(s, d).filter(pred)
@@ -1447,11 +1419,10 @@ object Relational {
         require(r2.mode == "incremental" && r2.tableVersion == 3,
           s"catch-up refresh was ${r2.mode} at v${r2.tableVersion} — " +
             "the delta path did not run")
-      }
-      d
-    })
-    IncrementalView.read(s, view)
-      .select(col("wk"), col("cnt"), col("s_qty"))
+      }) { (s, d) =>
+      IncrementalView.read(s, view)
+        .select(col("wk"), col("cnt"), col("s_qty"))
+    }
   }
 
   /** q163 — OPTIMIZE ZORDER BY: [[graft.ops.SnapshotTable.recluster]]
@@ -1470,27 +1441,26 @@ object Relational {
     * row (rather than purely reordering) hash-mismatches, and the
     * rectangle residual catches a wrong curve cover.
     */
-  val optimizeZorder = QueryDef("q163_optimize_zorder",
-    """WITH pts AS (
-      |  SELECT l_partkey % 1024 AS px, l_orderkey % 1024 AS py,
-      |    CAST(floor(l_quantity * 100) AS BIGINT) AS qty_u,
-      |    l_shipdate AS sd
-      |  FROM lineitem)
-      |SELECT
-      |  (SELECT count(*) FROM pts
-      |    WHERE px BETWEEN 128 AND 191 AND py BETWEEN 128 AND 191)
-      |    AS n_rect,
-      |  (SELECT CAST(sum(qty_u) AS BIGINT) FROM pts
-      |    WHERE px BETWEEN 128 AND 191 AND py BETWEEN 128 AND 191)
-      |    AS qty_rect,
-      |  (SELECT count(*) FROM pts
-      |    WHERE sd >= TIMESTAMP '1996-01-01'
-      |      AND sd < TIMESTAMP '1997-01-01') AS n_1996,
-      |  TRUE AS reclustered, TRUE AS pruned""".stripMargin) { (s, d) =>
-    import graft.ops.SnapshotTable
+  val optimizeZorder: QueryDef = {
     val path = Work.oracleDumpPath("q163_table")
-    clusterLayouts.compute("q163", (_, prev) => {
-      if (prev != d) {
+    QueryDef("q163_optimize_zorder",
+      """WITH pts AS (
+        |  SELECT l_partkey % 1024 AS px, l_orderkey % 1024 AS py,
+        |    CAST(floor(l_quantity * 100) AS BIGINT) AS qty_u,
+        |    l_shipdate AS sd
+        |  FROM lineitem)
+        |SELECT
+        |  (SELECT count(*) FROM pts
+        |    WHERE px BETWEEN 128 AND 191 AND py BETWEEN 128 AND 191)
+        |    AS n_rect,
+        |  (SELECT CAST(sum(qty_u) AS BIGINT) FROM pts
+        |    WHERE px BETWEEN 128 AND 191 AND py BETWEEN 128 AND 191)
+        |    AS qty_rect,
+        |  (SELECT count(*) FROM pts
+        |    WHERE sd >= TIMESTAMP '1996-01-01'
+        |      AND sd < TIMESTAMP '1997-01-01') AS n_1996,
+        |  TRUE AS reclustered, TRUE AS pruned""".stripMargin,
+      setup = { (s, d) =>
         Work.wipe(java.nio.file.Paths.get(path))
         val base = Tables.lineitem(s, d).select(
           pmod(col("l_partkey"), lit(1024)).cast("long").as("px"),
@@ -1505,29 +1475,28 @@ object Relational {
         val r = SnapshotTable.recluster(s, path, "z", 16)
         require(r.version == 2 && r.filesAfter == 16,
           s"recluster committed v${r.version} with ${r.filesAfter} files")
-      }
-      d
-    })
-    // v2 prunes the rectangle via the curve cover over the NEW stats
-    val (rect, read2, total2) = SnapshotTable.scanRectangleAt(
-      s, path, 2, 128, 191, 128, 191, bits = 10)
-    require(read2 > 0 && read2 < total2,
-      s"rectangle did not prune after ZORDER: read $read2 of $total2")
-    // v1 still prunes a calendar year via the OLD stats
-    val lo = java.time.LocalDate.of(1996, 1, 1).toEpochDay
-    val hi = java.time.LocalDate.of(1996, 12, 31).toEpochDay
-    val (slice, read1, total1) =
-      SnapshotTable.scanStatsRange(s, path, 1, lo, hi)
-    require(read1 > 0 && read1 < total1,
-      s"ship_day pruning lost at v1: read $read1 of $total1")
-    val a = rect.filter(col("px").between(128, 191) &&
-        col("py").between(128, 191))
-      .agg(count(lit(1)).as("n_rect"),
-        sum("qty_u").cast("long").as("qty_rect")).collect().head
-    val n96 = slice.count()
-    import s.implicits._
-    Seq((a.getLong(0), a.getLong(1), n96, true, true))
-      .toDF("n_rect", "qty_rect", "n_1996", "reclustered", "pruned")
+      }) { (s, d) =>
+      // v2 prunes the rectangle via the curve cover over the NEW stats
+      val (rect, read2, total2) = SnapshotTable.scanRectangleAt(
+        s, path, 2, 128, 191, 128, 191, bits = 10)
+      require(read2 > 0 && read2 < total2,
+        s"rectangle did not prune after ZORDER: read $read2 of $total2")
+      // v1 still prunes a calendar year via the OLD stats
+      val lo = java.time.LocalDate.of(1996, 1, 1).toEpochDay
+      val hi = java.time.LocalDate.of(1996, 12, 31).toEpochDay
+      val (slice, read1, total1) =
+        SnapshotTable.scanStatsRange(s, path, 1, lo, hi)
+      require(read1 > 0 && read1 < total1,
+        s"ship_day pruning lost at v1: read $read1 of $total1")
+      val a = rect.filter(col("px").between(128, 191) &&
+          col("py").between(128, 191))
+        .agg(count(lit(1)).as("n_rect"),
+          sum("qty_u").cast("long").as("qty_rect")).collect().head
+      val n96 = slice.count()
+      import s.implicits._
+      Seq((a.getLong(0), a.getLong(1), n96, true, true))
+        .toDF("n_rect", "qty_rect", "n_1996", "reclustered", "pruned")
+    }
   }
 
   /** q165 — VACUUM: physical GC of the snapshot table
@@ -1546,26 +1515,25 @@ object Relational {
     * that drops a live index row breaks the probe's completeness
     * require.
     */
-  val vacuumSweep = QueryDef("q165_vacuum",
-    """SELECT
-      |  (SELECT count(*) FROM lineitem
-      |    WHERE l_shipdate < TIMESTAMP '1996-01-01'
-      |       OR l_shipdate >= TIMESTAMP '1997-01-01') AS n,
-      |  (SELECT CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT)) AS BIGINT)
-      |    FROM lineitem
-      |    WHERE l_shipdate < TIMESTAMP '1996-01-01'
-      |       OR l_shipdate >= TIMESTAMP '1997-01-01') AS qty_u,
-      |  (SELECT count(*) FROM lineitem
-      |    WHERE l_orderkey IN (1, 2, 3)
-      |      AND (l_shipdate < TIMESTAMP '1996-01-01'
-      |           OR l_shipdate >= TIMESTAMP '1997-01-01')) AS n_probe,
-      |  TRUE AS swept, TRUE AS index_gcd""".stripMargin) { (s, d) =>
-    import graft.ops.SnapshotTable
+  val vacuumSweep: QueryDef = {
     val path = Work.oracleDumpPath("q165_table")
-    val lo96 = java.time.LocalDate.of(1996, 1, 1).toEpochDay
-    val hi96 = java.time.LocalDate.of(1996, 12, 31).toEpochDay
-    clusterLayouts.compute("q165", (_, prev) => {
-      if (prev != d) {
+    QueryDef("q165_vacuum",
+      """SELECT
+        |  (SELECT count(*) FROM lineitem
+        |    WHERE l_shipdate < TIMESTAMP '1996-01-01'
+        |       OR l_shipdate >= TIMESTAMP '1997-01-01') AS n,
+        |  (SELECT CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT)) AS BIGINT)
+        |    FROM lineitem
+        |    WHERE l_shipdate < TIMESTAMP '1996-01-01'
+        |       OR l_shipdate >= TIMESTAMP '1997-01-01') AS qty_u,
+        |  (SELECT count(*) FROM lineitem
+        |    WHERE l_orderkey IN (1, 2, 3)
+        |      AND (l_shipdate < TIMESTAMP '1996-01-01'
+        |           OR l_shipdate >= TIMESTAMP '1997-01-01')) AS n_probe,
+        |  TRUE AS swept, TRUE AS index_gcd""".stripMargin,
+      setup = { (s, d) =>
+        val lo96 = java.time.LocalDate.of(1996, 1, 1).toEpochDay
+        val hi96 = java.time.LocalDate.of(1996, 12, 31).toEpochDay
         Work.wipe(java.nio.file.Paths.get(path))
         val base = Tables.lineitem(s, d).select(
           col("l_orderkey").as("k"),
@@ -1588,23 +1556,22 @@ object Relational {
             "the 2-file aborted batch")
         require(r.indexRowsDropped > 0,
           "dead files' bloom-index rows survived the GC")
-      }
-      d
-    })
-    val (scan, _, rowsExp) = SnapshotTable.scanAt(s, path, 2)
-    val a = scan.agg(count(lit(1)).as("n"),
-      sum("qty_u").cast("long").as("qty_u")).collect().head
-    require(a.getLong(0) == rowsExp,
-      s"post-vacuum scan (${a.getLong(0)} rows) drifted from the " +
-        s"manifest ($rowsExp) — a live file was swept")
-    val (probe, read, total) =
-      SnapshotTable.scanKeysAt(s, path, 2, Seq(1L, 2L, 3L))
-    require(read > 0 && read < total,
-      s"bloom probe stopped pruning after vacuum: read $read of $total")
-    val nProbe = probe.count()
-    import s.implicits._
-    Seq((a.getLong(0), a.getLong(1), nProbe, true, true))
-      .toDF("n", "qty_u", "n_probe", "swept", "index_gcd")
+      }) { (s, d) =>
+      val (scan, _, rowsExp) = SnapshotTable.scanAt(s, path, 2)
+      val a = scan.agg(count(lit(1)).as("n"),
+        sum("qty_u").cast("long").as("qty_u")).collect().head
+      require(a.getLong(0) == rowsExp,
+        s"post-vacuum scan (${a.getLong(0)} rows) drifted from the " +
+          s"manifest ($rowsExp) — a live file was swept")
+      val (probe, read, total) =
+        SnapshotTable.scanKeysAt(s, path, 2, Seq(1L, 2L, 3L))
+      require(read > 0 && read < total,
+        s"bloom probe stopped pruning after vacuum: read $read of $total")
+      val nProbe = probe.count()
+      import s.implicits._
+      Seq((a.getLong(0), a.getLong(1), nProbe, true, true))
+        .toDF("n", "qty_u", "n_probe", "swept", "index_gcd")
+    }
   }
 
   /** q166 — SQL TIME TRAVEL: the snapshot table surfaced as a
@@ -1623,28 +1590,26 @@ object Relational {
     * table with the version-defining predicates — a TVF that resolves
     * the wrong version's file list hash-mismatches.
     */
-  val sqlTimeTravel = QueryDef("q166_sql_time_travel",
-    """SELECT
-      |  (SELECT count(*) FROM lineitem WHERE l_linenumber <= 3) AS n_v1,
-      |  (SELECT CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT)) AS BIGINT)
-      |    FROM lineitem WHERE l_linenumber <= 3) AS qty_v1,
-      |  (SELECT count(*) FROM lineitem WHERE l_linenumber <= 3
-      |    AND (l_shipdate < TIMESTAMP '1996-01-01'
-      |         OR l_shipdate >= TIMESTAMP '1997-01-01')) AS n_v2,
-      |  (SELECT count(*) FROM lineitem a WHERE a.l_linenumber <= 3
-      |    AND NOT EXISTS (SELECT 1 FROM lineitem b
-      |      WHERE b.l_linenumber <= 3
-      |      AND (b.l_shipdate < TIMESTAMP '1996-01-01'
-      |           OR b.l_shipdate >= TIMESTAMP '1997-01-01')
-      |      AND b.l_orderkey = a.l_orderkey
-      |      AND b.l_linenumber = a.l_linenumber)) AS n_removed""".stripMargin) {
-    (s, d) =>
-    import graft.ops.SnapshotTable
+  val sqlTimeTravel: QueryDef = {
     val path = Work.oracleDumpPath("q166_table")
-    val lo96 = java.time.LocalDate.of(1996, 1, 1).toEpochDay
-    val hi96 = java.time.LocalDate.of(1996, 12, 31).toEpochDay
-    clusterLayouts.compute("q166", (_, prev) => {
-      if (prev != d) {
+    QueryDef("q166_sql_time_travel",
+      """SELECT
+        |  (SELECT count(*) FROM lineitem WHERE l_linenumber <= 3) AS n_v1,
+        |  (SELECT CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT)) AS BIGINT)
+        |    FROM lineitem WHERE l_linenumber <= 3) AS qty_v1,
+        |  (SELECT count(*) FROM lineitem WHERE l_linenumber <= 3
+        |    AND (l_shipdate < TIMESTAMP '1996-01-01'
+        |         OR l_shipdate >= TIMESTAMP '1997-01-01')) AS n_v2,
+        |  (SELECT count(*) FROM lineitem a WHERE a.l_linenumber <= 3
+        |    AND NOT EXISTS (SELECT 1 FROM lineitem b
+        |      WHERE b.l_linenumber <= 3
+        |      AND (b.l_shipdate < TIMESTAMP '1996-01-01'
+        |           OR b.l_shipdate >= TIMESTAMP '1997-01-01')
+        |      AND b.l_orderkey = a.l_orderkey
+        |      AND b.l_linenumber = a.l_linenumber)) AS n_removed""".stripMargin,
+      setup = { (s, d) =>
+        val lo96 = java.time.LocalDate.of(1996, 1, 1).toEpochDay
+        val hi96 = java.time.LocalDate.of(1996, 12, 31).toEpochDay
         Work.wipe(java.nio.file.Paths.get(path))
         SnapshotTable.append(
           Tables.lineitem(s, d).filter(col("l_linenumber") <= 3).select(
@@ -1655,18 +1620,17 @@ object Relational {
             floor(col("l_quantity") * 100).cast("long").as("qty_u")),
           path, numPartitions = 8, statsCol = Some("ship_day"))
         SnapshotTable.deleteStatsRange(s, path, lo96, hi96) // v2
-      }
-      d
-    })
-    s.sql(
-      s"""SELECT
-         |  (SELECT count(*) FROM graft_snapshot('$path', 1)) AS n_v1,
-         |  (SELECT CAST(sum(qty_u) AS BIGINT)
-         |     FROM graft_snapshot('$path', 1)) AS qty_v1,
-         |  (SELECT count(*) FROM graft_snapshot('$path')) AS n_v2,
-         |  (SELECT count(*) FROM graft_snapshot('$path', 1) a
-         |     ANTI JOIN graft_snapshot('$path', 2) b
-         |     ON a.k = b.k AND a.ln = b.ln) AS n_removed""".stripMargin)
+      }) { (s, d) =>
+      s.sql(
+        s"""SELECT
+           |  (SELECT count(*) FROM graft_snapshot('$path', 1)) AS n_v1,
+           |  (SELECT CAST(sum(qty_u) AS BIGINT)
+           |     FROM graft_snapshot('$path', 1)) AS qty_v1,
+           |  (SELECT count(*) FROM graft_snapshot('$path')) AS n_v2,
+           |  (SELECT count(*) FROM graft_snapshot('$path', 1) a
+           |     ANTI JOIN graft_snapshot('$path', 2) b
+           |     ON a.k = b.k AND a.ln = b.ln) AS n_removed""".stripMargin)
+    }
   }
 
   /** q167 — HIDDEN PARTITIONING with a metadata-only partition drop
@@ -1687,25 +1651,22 @@ object Relational {
     * lineitem — a wrong transform floor, an off-by-one partition
     * boundary, or a leaked/dropped row hash-mismatches.
     */
-  val hiddenPartitionPrune = QueryDef("q167_hidden_partition_prune",
-    """SELECT
-      |  (SELECT count(*) FROM lineitem
-      |    WHERE l_shipdate >= TIMESTAMP '1996-03-15'
-      |      AND l_shipdate < TIMESTAMP '1996-09-16') AS n_probe,
-      |  (SELECT CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT)) AS BIGINT)
-      |    FROM lineitem
-      |    WHERE l_shipdate >= TIMESTAMP '1996-03-15'
-      |      AND l_shipdate < TIMESTAMP '1996-09-16') AS qty_probe,
-      |  (SELECT count(*) FROM lineitem) AS n_v1,
-      |  (SELECT count(*) FROM lineitem
-      |    WHERE l_shipdate < TIMESTAMP '1997-05-03'
-      |       OR l_shipdate >= TIMESTAMP '1998-05-22') AS n_v2""".stripMargin) {
-    (s, d) =>
-    import graft.ops.SnapshotTable
-    import graft.ops.SnapshotTable.PartSpec
+  val hiddenPartitionPrune: QueryDef = {
     val path = Work.oracleDumpPath("q167_table")
-    clusterLayouts.compute("q167", (_, prev) => {
-      if (prev != d) {
+    QueryDef("q167_hidden_partition_prune",
+      """SELECT
+        |  (SELECT count(*) FROM lineitem
+        |    WHERE l_shipdate >= TIMESTAMP '1996-03-15'
+        |      AND l_shipdate < TIMESTAMP '1996-09-16') AS n_probe,
+        |  (SELECT CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT)) AS BIGINT)
+        |    FROM lineitem
+        |    WHERE l_shipdate >= TIMESTAMP '1996-03-15'
+        |      AND l_shipdate < TIMESTAMP '1996-09-16') AS qty_probe,
+        |  (SELECT count(*) FROM lineitem) AS n_v1,
+        |  (SELECT count(*) FROM lineitem
+        |    WHERE l_shipdate < TIMESTAMP '1997-05-03'
+        |       OR l_shipdate >= TIMESTAMP '1998-05-22') AS n_v2""".stripMargin,
+      setup = { (s, d) =>
         Work.wipe(java.nio.file.Paths.get(path))
         SnapshotTable.appendPartitioned(
           Tables.lineitem(s, d).select(
@@ -1718,27 +1679,26 @@ object Relational {
           SnapshotTable.deletePartitionRange(s, path, 9984L, 10367L)
         require(dropped > 0 && dropped < total,
           s"metadata-only delete dropped $dropped of $total files")
-      }
-      d
-    })
-    val plo = java.time.LocalDate.of(1996, 3, 15).toEpochDay
-    val phi = java.time.LocalDate.of(1996, 9, 15).toEpochDay
-    val (probe, read, total) =
-      SnapshotTable.scanPartitionRange(s, path, 1, plo, phi)
-    require(read > 0 && read < total,
-      s"hidden partitioning did not prune: read $read of $total files")
-    require(!probe.columns.contains("__p"),
-      "partition value leaked into the scan schema")
-    val p = probe.agg(count(lit(1)).as("n"),
-      sum("qty_u").cast("long").as("q")).collect().head
-    val (s1, _, rows1) = SnapshotTable.scanAt(s, path, 1)
-    val (s2, _, rows2) = SnapshotTable.scanAt(s, path, 2)
-    val n1 = s1.count(); val n2 = s2.count()
-    require(n1 == rows1 && n2 == rows2,
-      "scan/manifest row drift across the partition drop")
-    import s.implicits._
-    Seq((p.getLong(0), p.getLong(1), n1, n2))
-      .toDF("n_probe", "qty_probe", "n_v1", "n_v2")
+      }) { (s, d) =>
+      val plo = java.time.LocalDate.of(1996, 3, 15).toEpochDay
+      val phi = java.time.LocalDate.of(1996, 9, 15).toEpochDay
+      val (probe, read, total) =
+        SnapshotTable.scanPartitionRange(s, path, 1, plo, phi)
+      require(read > 0 && read < total,
+        s"hidden partitioning did not prune: read $read of $total files")
+      require(!probe.columns.contains("__p"),
+        "partition value leaked into the scan schema")
+      val p = probe.agg(count(lit(1)).as("n"),
+        sum("qty_u").cast("long").as("q")).collect().head
+      val (s1, _, rows1) = SnapshotTable.scanAt(s, path, 1)
+      val (s2, _, rows2) = SnapshotTable.scanAt(s, path, 2)
+      val n1 = s1.count(); val n2 = s2.count()
+      require(n1 == rows1 && n2 == rows2,
+        "scan/manifest row drift across the partition drop")
+      import s.implicits._
+      Seq((p.getLong(0), p.getLong(1), n1, n2))
+        .toDF("n_probe", "qty_probe", "n_v1", "n_v2")
+    }
   }
 
   /** q186 — RUNTIME (DPP-style) file pruning through the DSv2
@@ -1758,23 +1718,20 @@ object Relational {
     * over- or under-pruned at runtime changes (n, qty_u, n_days) and
     * hash-mismatches.
     */
-  val runtimePrune = QueryDef("q186_runtime_prune",
-    """SELECT count(*) AS n,
-      |  CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT)) AS BIGINT)
-      |    AS qty_u,
-      |  count(DISTINCT CAST(l_shipdate AS DATE)) AS n_days,
-      |  TRUE AS files_pruned
-      |FROM lineitem
-      |WHERE CAST(l_shipdate AS DATE) IN (
-      |  SELECT DISTINCT CAST(o_orderdate AS DATE) FROM orders
-      |  WHERE o_orderdate >= TIMESTAMP '1996-03-01'
-      |    AND o_orderdate < TIMESTAMP '1996-04-01')""".stripMargin) {
-    (s, d) =>
-    import graft.ops.SnapshotTable
-    import graft.ops.SnapshotTable.PartSpec
+  val runtimePrune: QueryDef = {
     val path = Work.oracleDumpPath("q186_table")
-    clusterLayouts.compute("q186", (_, prev) => {
-      if (prev != d) {
+    QueryDef("q186_runtime_prune",
+      """SELECT count(*) AS n,
+        |  CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT)) AS BIGINT)
+        |    AS qty_u,
+        |  count(DISTINCT CAST(l_shipdate AS DATE)) AS n_days,
+        |  TRUE AS files_pruned
+        |FROM lineitem
+        |WHERE CAST(l_shipdate AS DATE) IN (
+        |  SELECT DISTINCT CAST(o_orderdate AS DATE) FROM orders
+        |  WHERE o_orderdate >= TIMESTAMP '1996-03-01'
+        |    AND o_orderdate < TIMESTAMP '1996-04-01')""".stripMargin,
+      setup = { (s, d) =>
         Work.wipe(java.nio.file.Paths.get(path))
         SnapshotTable.appendPartitioned(
           Tables.lineitem(s, d).select(
@@ -1782,36 +1739,35 @@ object Relational {
               .as("ship_day"),
             floor(col("l_quantity") * 100).cast("long").as("qty_u")),
           path, PartSpec("ship_day", "truncate", 32))
+      }) { (s, d) =>
+      val fact = s.read.format("graft_table").option("path", path).load()
+      val dim = Tables.orders(s, d)
+        .filter(col("o_orderdate") >= lit("1996-03-01").cast("timestamp")
+          && col("o_orderdate") < lit("1996-04-01").cast("timestamp"))
+        .select(
+          expr("CAST(datediff(o_orderdate, DATE '1970-01-01') AS BIGINT)")
+            .as("order_day"))
+        .distinct()
+      // deterministic DPP benefit check (stats-free plan cost estimates
+      // vary with sf); restored after the EAGER aggregate below
+      val key = "spark.sql.optimizer.dynamicPartitionPruning.useStats"
+      val prior = s.conf.getOption(key)
+      s.conf.set(key, "false")
+      val (Array(r), Seq(Files(planned, total))) = try {
+        ScanMetrics.collect(fact.join(dim, col("ship_day") === col("order_day"))
+          .agg(count(lit(1)).as("n"),
+            sum("qty_u").cast("long").as("qty_u"),
+            countDistinct("ship_day").as("n_days")))
+      } finally prior match {
+        case Some(v) => s.conf.set(key, v)
+        case None => s.conf.unset(key)
       }
-      d
-    })
-    val fact = s.read.format("graft_table").option("path", path).load()
-    val dim = Tables.orders(s, d)
-      .filter(col("o_orderdate") >= lit("1996-03-01").cast("timestamp")
-        && col("o_orderdate") < lit("1996-04-01").cast("timestamp"))
-      .select(
-        expr("CAST(datediff(o_orderdate, DATE '1970-01-01') AS BIGINT)")
-          .as("order_day"))
-      .distinct()
-    // deterministic DPP benefit check (stats-free plan cost estimates
-    // vary with sf); restored after the EAGER aggregate below
-    val key = "spark.sql.optimizer.dynamicPartitionPruning.useStats"
-    val prior = s.conf.getOption(key)
-    s.conf.set(key, "false")
-    val (Array(r), Seq(Files(planned, total))) = try {
-      ScanMetrics.collect(fact.join(dim, col("ship_day") === col("order_day"))
-        .agg(count(lit(1)).as("n"),
-          sum("qty_u").cast("long").as("qty_u"),
-          countDistinct("ship_day").as("n_days")))
-    } finally prior match {
-      case Some(v) => s.conf.set(key, v)
-      case None => s.conf.unset(key)
+      require(planned > 0 && planned < total,
+        s"runtime filter did not prune: planned $planned of $total files")
+      import s.implicits._
+      Seq((r.getLong(0), r.getLong(1), r.getLong(2), true))
+        .toDF("n", "qty_u", "n_days", "files_pruned")
     }
-    require(planned > 0 && planned < total,
-      s"runtime filter did not prune: planned $planned of $total files")
-    import s.implicits._
-    Seq((r.getLong(0), r.getLong(1), r.getLong(2), true))
-      .toDF("n", "qty_u", "n_days", "files_pruned")
   }
 
   /** q187 — the DSv2 WRITE front door: the snapshot table's full
@@ -1828,25 +1784,25 @@ object Relational {
     * leaked old rows, or a broken travel changes some branch and
     * hash-mismatches.
     */
-  val dsv2Write = QueryDef("q187_dsv2_write",
-    """SELECT
-      |  (SELECT count(*) FROM lineitem) AS n_all,
-      |  (SELECT CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT)) AS BIGINT)
-      |    FROM lineitem) AS qty_all,
-      |  (SELECT count(*) FROM lineitem
-      |    WHERE l_shipdate >= TIMESTAMP '1995-03-01'
-      |      AND l_shipdate < TIMESTAMP '1995-09-01') AS n_probe,
-      |  (SELECT count(*) FROM lineitem
-      |    WHERE l_shipdate < TIMESTAMP '1997-01-01') AS n_v1,
-      |  (SELECT count(*) FROM lineitem
-      |    WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-      |      AND l_shipdate < TIMESTAMP '1997-01-01') AS n_v3,
-      |  TRUE AS files_pruned""".stripMargin) { (s, d) =>
+  val dsv2Write: QueryDef = {
     val path = Work.oracleDumpPath("q187_table")
-    val day96 = java.time.LocalDate.of(1996, 1, 1).toEpochDay
-    val day97 = java.time.LocalDate.of(1997, 1, 1).toEpochDay
-    clusterLayouts.compute("q187", (_, prev) => {
-      if (prev != d) {
+    QueryDef("q187_dsv2_write",
+      """SELECT
+        |  (SELECT count(*) FROM lineitem) AS n_all,
+        |  (SELECT CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT)) AS BIGINT)
+        |    FROM lineitem) AS qty_all,
+        |  (SELECT count(*) FROM lineitem
+        |    WHERE l_shipdate >= TIMESTAMP '1995-03-01'
+        |      AND l_shipdate < TIMESTAMP '1995-09-01') AS n_probe,
+        |  (SELECT count(*) FROM lineitem
+        |    WHERE l_shipdate < TIMESTAMP '1997-01-01') AS n_v1,
+        |  (SELECT count(*) FROM lineitem
+        |    WHERE l_shipdate >= TIMESTAMP '1996-01-01'
+        |      AND l_shipdate < TIMESTAMP '1997-01-01') AS n_v3,
+        |  TRUE AS files_pruned""".stripMargin,
+      setup = { (s, d) =>
+        val day96 = java.time.LocalDate.of(1996, 1, 1).toEpochDay
+        val day97 = java.time.LocalDate.of(1997, 1, 1).toEpochDay
         Work.wipe(java.nio.file.Paths.get(path))
         val li = Tables.lineitem(s, d).select(
           expr("CAST(datediff(l_shipdate, DATE '1970-01-01') AS BIGINT)")
@@ -1866,24 +1822,23 @@ object Relational {
           .write.format("graft_table").mode("overwrite")
           .option("path", path).option("write_partitions", "4")
           .option("stats_col", "ship_day").save()
-      }
-      d
-    })
-    def at(v: Int) = s.read.format("graft_table")
-      .option("path", path).option("version", v.toString).load()
-    val plo = java.time.LocalDate.of(1995, 3, 1).toEpochDay
-    val phi = java.time.LocalDate.of(1995, 9, 1).toEpochDay
-    val all = at(2).agg(count(lit(1)).as("n"),
-      sum("qty_u").cast("long").as("q")).collect().head
-    val (probe, Files(planned, total)) = ScanMetrics.rowCount(at(2)
-      .filter(col("ship_day") >= plo && col("ship_day") < phi))
-    require(planned > 0 && planned < total,
-      s"inherited stats did not prune: planned $planned of $total files")
-    val nV1 = at(1).count()
-    val nV3 = at(3).count()
-    import s.implicits._
-    Seq((all.getLong(0), all.getLong(1), probe, nV1, nV3, true))
-      .toDF("n_all", "qty_all", "n_probe", "n_v1", "n_v3", "files_pruned")
+      }) { (s, d) =>
+      def at(v: Int) = s.read.format("graft_table")
+        .option("path", path).option("version", v.toString).load()
+      val plo = java.time.LocalDate.of(1995, 3, 1).toEpochDay
+      val phi = java.time.LocalDate.of(1995, 9, 1).toEpochDay
+      val all = at(2).agg(count(lit(1)).as("n"),
+        sum("qty_u").cast("long").as("q")).collect().head
+      val (probe, Files(planned, total)) = ScanMetrics.rowCount(at(2)
+        .filter(col("ship_day") >= plo && col("ship_day") < phi))
+      require(planned > 0 && planned < total,
+        s"inherited stats did not prune: planned $planned of $total files")
+      val nV1 = at(1).count()
+      val nV3 = at(3).count()
+      import s.implicits._
+      Seq((all.getLong(0), all.getLong(1), probe, nV1, nV3, true))
+        .toDF("n_all", "qty_all", "n_probe", "n_v1", "n_v3", "files_pruned")
+    }
   }
 
   /** q188 — MANIFEST-ANSWERED AGGREGATES through the DSv2 provider:
@@ -1898,21 +1853,20 @@ object Relational {
     * residual predicate) and still agree with DuckDB, which recomputes
     * every branch from raw lineitem.
     */
-  val manifestAgg = QueryDef("q188_manifest_agg",
-    """SELECT
-      |  (SELECT count(*) FROM lineitem) AS n,
-      |  (SELECT CAST(min(datediff('day', DATE '1970-01-01',
-      |      CAST(l_shipdate AS DATE))) AS BIGINT) FROM lineitem) AS d_min,
-      |  (SELECT CAST(max(datediff('day', DATE '1970-01-01',
-      |      CAST(l_shipdate AS DATE))) AS BIGINT) FROM lineitem) AS d_max,
-      |  (SELECT count(*) FROM lineitem
-      |    WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-      |      AND l_shipdate < TIMESTAMP '1997-01-01') AS n_filtered,
-      |  TRUE AS manifest_served""".stripMargin) { (s, d) =>
-    import graft.ops.SnapshotTable
+  val manifestAgg: QueryDef = {
     val path = Work.oracleDumpPath("q188_table")
-    clusterLayouts.compute("q188", (_, prev) => {
-      if (prev != d) {
+    QueryDef("q188_manifest_agg",
+      """SELECT
+        |  (SELECT count(*) FROM lineitem) AS n,
+        |  (SELECT CAST(min(datediff('day', DATE '1970-01-01',
+        |      CAST(l_shipdate AS DATE))) AS BIGINT) FROM lineitem) AS d_min,
+        |  (SELECT CAST(max(datediff('day', DATE '1970-01-01',
+        |      CAST(l_shipdate AS DATE))) AS BIGINT) FROM lineitem) AS d_max,
+        |  (SELECT count(*) FROM lineitem
+        |    WHERE l_shipdate >= TIMESTAMP '1996-01-01'
+        |      AND l_shipdate < TIMESTAMP '1997-01-01') AS n_filtered,
+        |  TRUE AS manifest_served""".stripMargin,
+      setup = { (s, d) =>
         Work.wipe(java.nio.file.Paths.get(path))
         SnapshotTable.append(
           Tables.lineitem(s, d).select(
@@ -1920,24 +1874,23 @@ object Relational {
               .as("ship_day"),
             floor(col("l_quantity") * 100).cast("long").as("qty_u")),
           path, numPartitions = 8, statsCol = Some("ship_day"))
-      }
-      d
-    })
-    val t = s.read.format("graft_table").option("path", path).load()
-    val (Array(r), Seq(sa)) = ScanMetrics.collect(t.agg(
-      count(lit(1)).as("n"), min("ship_day").as("d_min"),
-      max("ship_day").as("d_max")))
-    require(sa.manifestAgg,
-      "count/min/max were not manifest-served")
-    val lo = java.time.LocalDate.of(1996, 1, 1).toEpochDay
-    val hi = java.time.LocalDate.of(1997, 1, 1).toEpochDay
-    val (nf, sf) = ScanMetrics.rowCount(
-      t.filter(col("ship_day") >= lo && col("ship_day") < hi))
-    require(!sf.manifestAgg,
-      "a FILTERED count must not be served from manifest bounds")
-    import s.implicits._
-    Seq((r.getLong(0), r.getLong(1), r.getLong(2), nf, true))
-      .toDF("n", "d_min", "d_max", "n_filtered", "manifest_served")
+      }) { (s, d) =>
+      val t = s.read.format("graft_table").option("path", path).load()
+      val (Array(r), Seq(sa)) = ScanMetrics.collect(t.agg(
+        count(lit(1)).as("n"), min("ship_day").as("d_min"),
+        max("ship_day").as("d_max")))
+      require(sa.manifestAgg,
+        "count/min/max were not manifest-served")
+      val lo = java.time.LocalDate.of(1996, 1, 1).toEpochDay
+      val hi = java.time.LocalDate.of(1997, 1, 1).toEpochDay
+      val (nf, sf) = ScanMetrics.rowCount(
+        t.filter(col("ship_day") >= lo && col("ship_day") < hi))
+      require(!sf.manifestAgg,
+        "a FILTERED count must not be served from manifest bounds")
+      import s.implicits._
+      Seq((r.getLong(0), r.getLong(1), r.getLong(2), nf, true))
+        .toDF("n", "d_min", "d_max", "n_filtered", "manifest_served")
+    }
   }
 
   /** q189 — STORAGE-PARTITIONED JOIN: customer and supplier live as
@@ -1953,21 +1906,19 @@ object Relational {
     * wrong key would join against the wrong files) changes n or a
     * sum and hash-mismatches.
     */
-  val spjJoin = QueryDef("q189_spj_join",
-    """SELECT count(*) AS n,
-      |  CAST(sum(CAST(floor(c.c_acctbal * 100) AS BIGINT)) AS BIGINT)
-      |    AS c_sum,
-      |  CAST(sum(CAST(floor(s.s_acctbal * 100) AS BIGINT)) AS BIGINT)
-      |    AS s_sum,
-      |  TRUE AS no_shuffle
-      |FROM customer c JOIN supplier s
-      |  ON c.c_nationkey = s.s_nationkey""".stripMargin) { (s, d) =>
-    import graft.ops.SnapshotTable
-    import graft.ops.SnapshotTable.PartSpec
+  val spjJoin: QueryDef = {
     val p1 = Work.oracleDumpPath("q189_cust")
     val p2 = Work.oracleDumpPath("q189_supp")
-    clusterLayouts.compute("q189", (_, prev) => {
-      if (prev != d) {
+    QueryDef("q189_spj_join",
+      """SELECT count(*) AS n,
+        |  CAST(sum(CAST(floor(c.c_acctbal * 100) AS BIGINT)) AS BIGINT)
+        |    AS c_sum,
+        |  CAST(sum(CAST(floor(s.s_acctbal * 100) AS BIGINT)) AS BIGINT)
+        |    AS s_sum,
+        |  TRUE AS no_shuffle
+        |FROM customer c JOIN supplier s
+        |  ON c.c_nationkey = s.s_nationkey""".stripMargin,
+      setup = { (s, d) =>
         Work.wipe(java.nio.file.Paths.get(p1))
         Work.wipe(java.nio.file.Paths.get(p2))
         SnapshotTable.appendPartitioned(
@@ -1980,31 +1931,30 @@ object Relational {
             col("s_nationkey").cast("long").as("nkey"),
             floor(col("s_acctbal") * 100).cast("long").as("s_acct")),
           p2, PartSpec("nkey", "identity", 0))
+      }) { (s, d) =>
+      val t1 = s.read.format("graft_table").option("path", p1).load()
+      val t2 = s.read.format("graft_table").option("path", p2).load()
+      val keys = Seq(
+        "spark.sql.sources.v2.bucketing.enabled" -> "true",
+        "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1")
+      val prior = keys.map { case (k, _) => k -> s.conf.getOption(k) }
+      keys.foreach { case (k, v) => s.conf.set(k, v) }
+      val (r, plan) = try {
+        val j = t1.join(t2, "nkey")
+          .agg(count(lit(1)).as("n"), sum("c_acct").as("c_sum"),
+            sum("s_acct").as("s_sum"))
+        (j.collect().head, j.queryExecution.executedPlan.toString)
+      } finally prior.foreach {
+        case (k, Some(v)) => s.conf.set(k, v)
+        case (k, None) => s.conf.unset(k)
       }
-      d
-    })
-    val t1 = s.read.format("graft_table").option("path", p1).load()
-    val t2 = s.read.format("graft_table").option("path", p2).load()
-    val keys = Seq(
-      "spark.sql.sources.v2.bucketing.enabled" -> "true",
-      "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val prior = keys.map { case (k, _) => k -> s.conf.getOption(k) }
-    keys.foreach { case (k, v) => s.conf.set(k, v) }
-    val (r, plan) = try {
-      val j = t1.join(t2, "nkey")
-        .agg(count(lit(1)).as("n"), sum("c_acct").as("c_sum"),
-          sum("s_acct").as("s_sum"))
-      (j.collect().head, j.queryExecution.executedPlan.toString)
-    } finally prior.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
+      require(!plan.contains("Exchange hashpartitioning"),
+        s"storage-partitioned join still shuffles:\n$plan")
+      import s.implicits._
+      Seq((r.getLong(0), r.getLong(1), r.getLong(2), true))
+        .toDF("n", "c_sum", "s_sum", "no_shuffle")
     }
-    require(!plan.contains("Exchange hashpartitioning"),
-      s"storage-partitioned join still shuffles:\n$plan")
-    import s.implicits._
-    Seq((r.getLong(0), r.getLong(1), r.getLong(2), true))
-      .toDF("n", "c_sum", "s_sum", "no_shuffle")
   }
 
   /** q190 — the SQL CATALOG lifecycle: everything q187 does through
@@ -2020,29 +1970,24 @@ object Relational {
     * lineitem; nothing here touches a bespoke API — a Delta/Iceberg
     * user's day-one workflow, answered by the same manifests.
     */
-  val sqlCatalog = QueryDef("q190_sql_catalog",
-    """SELECT
-      |  (SELECT count(*) FROM lineitem
-      |    WHERE l_shipdate >= TIMESTAMP '1996-03-15'
-      |      AND l_shipdate < TIMESTAMP '1996-09-16') AS n_probe,
-      |  (SELECT CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT)) AS BIGINT)
-      |    FROM lineitem
-      |    WHERE l_shipdate >= TIMESTAMP '1996-03-15'
-      |      AND l_shipdate < TIMESTAMP '1996-09-16') AS qty_probe,
-      |  (SELECT count(*) FROM lineitem
-      |    WHERE l_shipdate < TIMESTAMP '1997-01-01') AS n_v1,
-      |  (SELECT CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT)) AS BIGINT)
-      |    FROM lineitem) AS qty_renamed,
-      |  TRUE AS files_pruned""".stripMargin) { (s, d) =>
-    // one catalog name per query: Spark caches catalog instances by
-    // name after first initialization, so a shared name would pin the
-    // first query's root for everyone
+  val sqlCatalog: QueryDef = {
     val wh = Work.oracleDumpPath("q190_warehouse")
-    s.conf.set("spark.sql.catalog.graft_q190",
-      "graft.source.v2.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft_q190.root", wh)
-    clusterLayouts.compute("q190", (_, prev) => {
-      if (prev != d) {
+    QueryDef("q190_sql_catalog",
+      """SELECT
+        |  (SELECT count(*) FROM lineitem
+        |    WHERE l_shipdate >= TIMESTAMP '1996-03-15'
+        |      AND l_shipdate < TIMESTAMP '1996-09-16') AS n_probe,
+        |  (SELECT CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT)) AS BIGINT)
+        |    FROM lineitem
+        |    WHERE l_shipdate >= TIMESTAMP '1996-03-15'
+        |      AND l_shipdate < TIMESTAMP '1996-09-16') AS qty_probe,
+        |  (SELECT count(*) FROM lineitem
+        |    WHERE l_shipdate < TIMESTAMP '1997-01-01') AS n_v1,
+        |  (SELECT CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT)) AS BIGINT)
+        |    FROM lineitem) AS qty_renamed,
+        |  TRUE AS files_pruned""".stripMargin,
+      setup = { (s, d) =>
+        useCatalog(s, "q190", wh)
         Work.wipe(java.nio.file.Paths.get(wh))
         Tables.lineitem(s, d).select(
           expr("CAST(datediff(l_shipdate, DATE '1970-01-01') AS BIGINT)")
@@ -2056,26 +2001,26 @@ object Relational {
         s.sql("INSERT INTO graft_q190.q190.li " +
           "SELECT ship_day, qty_u FROM q190_src WHERE ship_day >= 9862")
         s.sql("ALTER TABLE graft_q190.q190.li RENAME COLUMN qty_u TO qty")
-      }
-      d
-    })
-    val plo = java.time.LocalDate.of(1996, 3, 15).toEpochDay
-    val phi = java.time.LocalDate.of(1996, 9, 15).toEpochDay
-    val (Array(probe), Seq(Files(planned, total))) = ScanMetrics.collect(s.sql(
-      s"""SELECT count(*) AS n, CAST(sum(qty) AS BIGINT) AS q
-         |FROM graft_q190.q190.li
-         |WHERE ship_day >= $plo AND ship_day <= $phi""".stripMargin))
-    require(planned > 0 && planned < total,
-      s"SQL partition pruning failed: planned $planned of $total files")
-    val nV1 = s.sql(
-      "SELECT count(*) FROM graft_q190.q190.li VERSION AS OF 1")
-      .head.getLong(0)
-    val qtyAll = s.sql(
-      "SELECT CAST(sum(qty) AS BIGINT) FROM graft_q190.q190.li")
-      .head.getLong(0)
-    import s.implicits._
-    Seq((probe.getLong(0), probe.getLong(1), nV1, qtyAll, true))
-      .toDF("n_probe", "qty_probe", "n_v1", "qty_renamed", "files_pruned")
+      }) { (s, d) =>
+      useCatalog(s, "q190", wh)
+      val plo = java.time.LocalDate.of(1996, 3, 15).toEpochDay
+      val phi = java.time.LocalDate.of(1996, 9, 15).toEpochDay
+      val (Array(probe), Seq(Files(planned, total))) = ScanMetrics.collect(s.sql(
+        s"""SELECT count(*) AS n, CAST(sum(qty) AS BIGINT) AS q
+           |FROM graft_q190.q190.li
+           |WHERE ship_day >= $plo AND ship_day <= $phi""".stripMargin))
+      require(planned > 0 && planned < total,
+        s"SQL partition pruning failed: planned $planned of $total files")
+      val nV1 = s.sql(
+        "SELECT count(*) FROM graft_q190.q190.li VERSION AS OF 1")
+        .head.getLong(0)
+      val qtyAll = s.sql(
+        "SELECT CAST(sum(qty) AS BIGINT) FROM graft_q190.q190.li")
+        .head.getLong(0)
+      import s.implicits._
+      Seq((probe.getLong(0), probe.getLong(1), nV1, qtyAll, true))
+        .toDF("n_probe", "qty_probe", "n_v1", "qty_renamed", "files_pruned")
+    }
   }
 
   /** q191 — SQL DELETE: `DELETE FROM ... WHERE` through the catalog —
@@ -2088,26 +2033,23 @@ object Relational {
     * lineitem — an over- or under-deleted row changes n/qty and
     * hash-mismatches.
     */
-  val sqlDelete = QueryDef("q191_sql_delete",
-    """SELECT
-      |  (SELECT count(*) FROM lineitem
-      |    WHERE l_shipdate < TIMESTAMP '1996-01-01'
-      |       OR l_shipdate >= TIMESTAMP '1997-01-01') AS n_after,
-      |  (SELECT CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT)) AS BIGINT)
-      |    FROM lineitem
-      |    WHERE l_shipdate < TIMESTAMP '1996-01-01'
-      |       OR l_shipdate >= TIMESTAMP '1997-01-01') AS qty_after,
-      |  (SELECT count(*) FROM lineitem) AS n_v1,
-      |  TRUE AS folded""".stripMargin) { (s, d) =>
-    import graft.ops.SnapshotTable
+  val sqlDelete: QueryDef = {
     val wh = Work.oracleDumpPath("q191_warehouse")
-    s.conf.set("spark.sql.catalog.graft_q191",
-      "graft.source.v2.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft_q191.root", wh)
-    val lo = java.time.LocalDate.of(1996, 1, 1).toEpochDay
-    val hi = java.time.LocalDate.of(1997, 1, 1).toEpochDay
-    clusterLayouts.compute("q191", (_, prev) => {
-      if (prev != d) {
+    QueryDef("q191_sql_delete",
+      """SELECT
+        |  (SELECT count(*) FROM lineitem
+        |    WHERE l_shipdate < TIMESTAMP '1996-01-01'
+        |       OR l_shipdate >= TIMESTAMP '1997-01-01') AS n_after,
+        |  (SELECT CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT)) AS BIGINT)
+        |    FROM lineitem
+        |    WHERE l_shipdate < TIMESTAMP '1996-01-01'
+        |       OR l_shipdate >= TIMESTAMP '1997-01-01') AS qty_after,
+        |  (SELECT count(*) FROM lineitem) AS n_v1,
+        |  TRUE AS folded""".stripMargin,
+      setup = { (s, d) =>
+        useCatalog(s, "q191", wh)
+        val lo = java.time.LocalDate.of(1996, 1, 1).toEpochDay
+        val hi = java.time.LocalDate.of(1997, 1, 1).toEpochDay
         Work.wipe(java.nio.file.Paths.get(wh))
         Tables.lineitem(s, d).select(
           expr("CAST(datediff(l_shipdate, DATE '1970-01-01') AS BIGINT)")
@@ -2119,21 +2061,21 @@ object Relational {
         s.sql("INSERT INTO graft_q191.q191.li SELECT * FROM q191_src")
         s.sql("DELETE FROM graft_q191.q191.li " +
           s"WHERE ship_day >= $lo AND ship_day < $hi")
-      }
-      d
-    })
-    val path = s"$wh/q191/li"
-    val ver = SnapshotTable.readVersion(s, path,
-      SnapshotTable.latestVersion(path))
-    require(ver.dvFiles.isEmpty && ver.op == "OPTIMIZE",
-      s"DELETE did not fold: op=${ver.op}, dvFiles=${ver.dvFiles.length}")
-    val after = s.sql("SELECT count(*) AS n, CAST(sum(qty_u) AS BIGINT)" +
-      " AS q FROM graft_q191.q191.li").collect().head
-    val nV1 = s.sql("SELECT count(*) FROM graft_q191.q191.li VERSION AS OF 1")
-      .head.getLong(0)
-    import s.implicits._
-    Seq((after.getLong(0), after.getLong(1), nV1, true))
-      .toDF("n_after", "qty_after", "n_v1", "folded")
+      }) { (s, d) =>
+      useCatalog(s, "q191", wh)
+      val path = s"$wh/q191/li"
+      val ver = SnapshotTable.readVersion(s, path,
+        SnapshotTable.latestVersion(path))
+      require(ver.dvFiles.isEmpty && ver.op == "OPTIMIZE",
+        s"DELETE did not fold: op=${ver.op}, dvFiles=${ver.dvFiles.length}")
+      val after = s.sql("SELECT count(*) AS n, CAST(sum(qty_u) AS BIGINT)" +
+        " AS q FROM graft_q191.q191.li").collect().head
+      val nV1 = s.sql("SELECT count(*) FROM graft_q191.q191.li VERSION AS OF 1")
+        .head.getLong(0)
+      import s.implicits._
+      Seq((after.getLong(0), after.getLong(1), nV1, true))
+        .toDF("n_after", "qty_after", "n_v1", "folded")
+    }
   }
 
   /** q192 — BUCKET storage-partitioned join in pure SQL: lineitem and
@@ -2149,21 +2091,19 @@ object Relational {
     * lineitem×orders; a row mis-bucketed on either side joins against
     * the wrong files and changes (n, qty_u, total_u).
     */
-  val bucketSpj = QueryDef("q192_bucket_spj",
-    """SELECT count(*) AS n,
-      |  CAST(sum(CAST(floor(l.l_quantity * 100) AS BIGINT)) AS BIGINT)
-      |    AS qty_u,
-      |  CAST(sum(CAST(floor(o.o_totalprice * 100) AS BIGINT)) AS BIGINT)
-      |    AS total_u,
-      |  TRUE AS no_shuffle
-      |FROM lineitem l JOIN orders o
-      |  ON l.l_orderkey = o.o_orderkey""".stripMargin) { (s, d) =>
+  val bucketSpj: QueryDef = {
     val wh = Work.oracleDumpPath("q192_warehouse")
-    s.conf.set("spark.sql.catalog.graft_q192",
-      "graft.source.v2.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft_q192.root", wh)
-    clusterLayouts.compute("q192", (_, prev) => {
-      if (prev != d) {
+    QueryDef("q192_bucket_spj",
+      """SELECT count(*) AS n,
+        |  CAST(sum(CAST(floor(l.l_quantity * 100) AS BIGINT)) AS BIGINT)
+        |    AS qty_u,
+        |  CAST(sum(CAST(floor(o.o_totalprice * 100) AS BIGINT)) AS BIGINT)
+        |    AS total_u,
+        |  TRUE AS no_shuffle
+        |FROM lineitem l JOIN orders o
+        |  ON l.l_orderkey = o.o_orderkey""".stripMargin,
+      setup = { (s, d) =>
+        useCatalog(s, "q192", wh)
         Work.wipe(java.nio.file.Paths.get(wh))
         Tables.lineitem(s, d).select(
           col("l_orderkey").cast("long").as("okey"),
@@ -2179,39 +2119,39 @@ object Relational {
           PARTITIONED BY (bucket(16, okey))""")
         s.sql("INSERT INTO graft_q192.q192.li SELECT * FROM q192_li")
         s.sql("INSERT INTO graft_q192.q192.ord SELECT * FROM q192_ord")
+      }) { (s, d) =>
+      useCatalog(s, "q192", wh)
+      val keys = Seq(
+        "spark.sql.sources.v2.bucketing.enabled" -> "true",
+        "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1")
+      val prior = keys.map { case (k, _) => k -> s.conf.getOption(k) }
+      keys.foreach { case (k, v) => s.conf.set(k, v) }
+      val (r, plan) = try {
+        val j = s.sql("""SELECT count(*) AS n,
+          CAST(sum(l.qty_u) AS BIGINT) AS qty_u,
+          CAST(sum(o.total_u) AS BIGINT) AS total_u
+          FROM graft_q192.q192.li l JOIN graft_q192.q192.ord o
+          ON l.okey = o.okey""")
+        val row = j.collect().head
+        val phys = j.queryExecution.executedPlan match {
+          case a: org.apache.spark.sql.execution.adaptive
+              .AdaptiveSparkPlanExec => a.executedPlan
+          case p => p
+        }
+        (row, phys.toString)
+      } finally prior.foreach {
+        case (k, Some(v)) => s.conf.set(k, v)
+        case (k, None) => s.conf.unset(k)
       }
-      d
-    })
-    val keys = Seq(
-      "spark.sql.sources.v2.bucketing.enabled" -> "true",
-      "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val prior = keys.map { case (k, _) => k -> s.conf.getOption(k) }
-    keys.foreach { case (k, v) => s.conf.set(k, v) }
-    val (r, plan) = try {
-      val j = s.sql("""SELECT count(*) AS n,
-        CAST(sum(l.qty_u) AS BIGINT) AS qty_u,
-        CAST(sum(o.total_u) AS BIGINT) AS total_u
-        FROM graft_q192.q192.li l JOIN graft_q192.q192.ord o
-        ON l.okey = o.okey""")
-      val row = j.collect().head
-      val phys = j.queryExecution.executedPlan match {
-        case a: org.apache.spark.sql.execution.adaptive
-            .AdaptiveSparkPlanExec => a.executedPlan
-        case p => p
-      }
-      (row, phys.toString)
-    } finally prior.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
+      require(!plan.contains("Exchange hashpartitioning"),
+        s"bucket SPJ still shuffles:\n$plan")
+      require("BatchScan graft_table".r.findAllIn(plan).length == 2,
+        s"expected two graft_table scans in the join:\n$plan")
+      import s.implicits._
+      Seq((r.getLong(0), r.getLong(1), r.getLong(2), true))
+        .toDF("n", "qty_u", "total_u", "no_shuffle")
     }
-    require(!plan.contains("Exchange hashpartitioning"),
-      s"bucket SPJ still shuffles:\n$plan")
-    require("BatchScan graft_table".r.findAllIn(plan).length == 2,
-      s"expected two graft_table scans in the join:\n$plan")
-    import s.implicits._
-    Seq((r.getLong(0), r.getLong(1), r.getLong(2), true))
-      .toDF("n", "qty_u", "total_u", "no_shuffle")
   }
 
   /** q193 — SQL MERGE INTO: Spark's group-based copy-on-write
@@ -2226,25 +2166,22 @@ object Relational {
     * the pre-merge travel; a lost row, double-applied bump, or
     * resurrected group hash-mismatches.
     */
-  val sqlMerge = QueryDef("q193_sql_merge",
-    """SELECT
-      |  (SELECT count(*) FROM lineitem) AS n,
-      |  (SELECT CAST(sum(CAST(floor(l.l_quantity * 100) AS BIGINT)
-      |     + CASE WHEN o.o_orderdate >= TIMESTAMP '1996-03-01'
-      |             AND o.o_orderdate < TIMESTAMP '1996-04-01'
-      |        THEN 100 ELSE 0 END) AS BIGINT)
-      |    FROM lineitem l JOIN orders o
-      |      ON l.l_orderkey = o.o_orderkey) AS qty_after,
-      |  (SELECT CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT))
-      |     AS BIGINT) FROM lineitem) AS qty_v1,
-      |  TRUE AS merged""".stripMargin) { (s, d) =>
-    import graft.ops.SnapshotTable
+  val sqlMerge: QueryDef = {
     val wh = Work.oracleDumpPath("q193_warehouse")
-    s.conf.set("spark.sql.catalog.graft_q193",
-      "graft.source.v2.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft_q193.root", wh)
-    clusterLayouts.compute("q193", (_, prev) => {
-      if (prev != d) {
+    QueryDef("q193_sql_merge",
+      """SELECT
+        |  (SELECT count(*) FROM lineitem) AS n,
+        |  (SELECT CAST(sum(CAST(floor(l.l_quantity * 100) AS BIGINT)
+        |     + CASE WHEN o.o_orderdate >= TIMESTAMP '1996-03-01'
+        |             AND o.o_orderdate < TIMESTAMP '1996-04-01'
+        |        THEN 100 ELSE 0 END) AS BIGINT)
+        |    FROM lineitem l JOIN orders o
+        |      ON l.l_orderkey = o.o_orderkey) AS qty_after,
+        |  (SELECT CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT))
+        |     AS BIGINT) FROM lineitem) AS qty_v1,
+        |  TRUE AS merged""".stripMargin,
+      setup = { (s, d) =>
+        useCatalog(s, "q193", wh)
         Work.wipe(java.nio.file.Paths.get(wh))
         Tables.lineitem(s, d).select(
           col("l_orderkey").cast("long").as("okey"),
@@ -2261,23 +2198,23 @@ object Relational {
         s.sql("""MERGE INTO graft_q193.q193.li t USING q193_src s
           ON t.okey = s.okey
           WHEN MATCHED THEN UPDATE SET qty_u = t.qty_u + 100""")
-      }
-      d
-    })
-    val path = s"$wh/q193/li"
-    val ver = SnapshotTable.readVersion(s, path,
-      SnapshotTable.latestVersion(path))
-    require(ver.op == "MERGE", s"expected MERGE commit, got ${ver.op}")
-    val after = s.sql("SELECT count(*) AS n, CAST(sum(qty_u) AS BIGINT)" +
-      " AS q FROM graft_q193.q193.li").collect().head
-    require(after.getLong(0) == ver.rows,
-      s"scan/manifest row drift: ${after.getLong(0)} != ${ver.rows}")
-    val qtyV1 = s.sql(
-      "SELECT CAST(sum(qty_u) AS BIGINT) FROM graft_q193.q193.li " +
-        "VERSION AS OF 1").head.getLong(0)
-    import s.implicits._
-    Seq((after.getLong(0), after.getLong(1), qtyV1, true))
-      .toDF("n", "qty_after", "qty_v1", "merged")
+      }) { (s, d) =>
+      useCatalog(s, "q193", wh)
+      val path = s"$wh/q193/li"
+      val ver = SnapshotTable.readVersion(s, path,
+        SnapshotTable.latestVersion(path))
+      require(ver.op == "MERGE", s"expected MERGE commit, got ${ver.op}")
+      val after = s.sql("SELECT count(*) AS n, CAST(sum(qty_u) AS BIGINT)" +
+        " AS q FROM graft_q193.q193.li").collect().head
+      require(after.getLong(0) == ver.rows,
+        s"scan/manifest row drift: ${after.getLong(0)} != ${ver.rows}")
+      val qtyV1 = s.sql(
+        "SELECT CAST(sum(qty_u) AS BIGINT) FROM graft_q193.q193.li " +
+          "VERSION AS OF 1").head.getLong(0)
+      import s.implicits._
+      Seq((after.getLong(0), after.getLong(1), qtyV1, true))
+        .toDF("n", "qty_after", "qty_v1", "merged")
+    }
   }
 
   /** q194 — SQL `INSERT INTO ... REPLACE WHERE`: the idempotent
@@ -2294,26 +2231,23 @@ object Relational {
     * DuckDB states the post-replace aggregates in closed form from
     * raw lineitem, and time travel still reads the pre-replace table.
     */
-  val replaceWhere = QueryDef("q194_replace_where",
-    """SELECT
-      |  (SELECT count(*) FROM lineitem) AS n_after,
-      |  (SELECT CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT)
-      |     + CASE WHEN datediff('day', DATE '1970-01-01',
-      |              CAST(l_shipdate AS DATE)) BETWEEN 9632 AND 9759
-      |        THEN 7 ELSE 0 END) AS BIGINT) FROM lineitem) AS qty_after,
-      |  (SELECT count(*) FROM lineitem
-      |    WHERE datediff('day', DATE '1970-01-01',
-      |      CAST(l_shipdate AS DATE)) BETWEEN 9632 AND 9759) AS n_window,
-      |  (SELECT CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT))
-      |     AS BIGINT) FROM lineitem) AS qty_v1,
-      |  TRUE AS zero_copy""".stripMargin) { (s, d) =>
-    import graft.ops.SnapshotTable
+  val replaceWhere: QueryDef = {
     val wh = Work.oracleDumpPath("q194_warehouse")
-    s.conf.set("spark.sql.catalog.graft_q194",
-      "graft.source.v2.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft_q194.root", wh)
-    clusterLayouts.compute("q194", (_, prev) => {
-      if (prev != d) {
+    QueryDef("q194_replace_where",
+      """SELECT
+        |  (SELECT count(*) FROM lineitem) AS n_after,
+        |  (SELECT CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT)
+        |     + CASE WHEN datediff('day', DATE '1970-01-01',
+        |              CAST(l_shipdate AS DATE)) BETWEEN 9632 AND 9759
+        |        THEN 7 ELSE 0 END) AS BIGINT) FROM lineitem) AS qty_after,
+        |  (SELECT count(*) FROM lineitem
+        |    WHERE datediff('day', DATE '1970-01-01',
+        |      CAST(l_shipdate AS DATE)) BETWEEN 9632 AND 9759) AS n_window,
+        |  (SELECT CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT))
+        |     AS BIGINT) FROM lineitem) AS qty_v1,
+        |  TRUE AS zero_copy""".stripMargin,
+      setup = { (s, d) =>
+        useCatalog(s, "q194", wh)
         Work.wipe(java.nio.file.Paths.get(wh))
         Tables.lineitem(s, d).select(
           expr("CAST(datediff(l_shipdate, DATE '1970-01-01') AS BIGINT)")
@@ -2341,18 +2275,18 @@ object Relational {
             s"replace moved bytes it should not have: file ${v1.files(i)}" +
               s" (partition ${pv1(i)}, inRange=$inRange)")
         }
-      }
-      d
-    })
-    val after = s.sql("SELECT count(*) AS n, CAST(sum(qty_u) AS BIGINT)" +
-      " AS q FROM graft_q194.q194.li").collect().head
-    val nWindow = s.sql("SELECT count(*) FROM graft_q194.q194.li " +
-      "WHERE ship_day BETWEEN 9632 AND 9759").head.getLong(0)
-    val qtyV1 = s.sql("SELECT CAST(sum(qty_u) AS BIGINT) FROM " +
-      "graft_q194.q194.li VERSION AS OF 1").head.getLong(0)
-    import s.implicits._
-    Seq((after.getLong(0), after.getLong(1), nWindow, qtyV1, true))
-      .toDF("n_after", "qty_after", "n_window", "qty_v1", "zero_copy")
+      }) { (s, d) =>
+      useCatalog(s, "q194", wh)
+      val after = s.sql("SELECT count(*) AS n, CAST(sum(qty_u) AS BIGINT)" +
+        " AS q FROM graft_q194.q194.li").collect().head
+      val nWindow = s.sql("SELECT count(*) FROM graft_q194.q194.li " +
+        "WHERE ship_day BETWEEN 9632 AND 9759").head.getLong(0)
+      val qtyV1 = s.sql("SELECT CAST(sum(qty_u) AS BIGINT) FROM " +
+        "graft_q194.q194.li VERSION AS OF 1").head.getLong(0)
+      import s.implicits._
+      Seq((after.getLong(0), after.getLong(1), nWindow, qtyV1, true))
+        .toDF("n_after", "qty_after", "n_window", "qty_v1", "zero_copy")
+    }
   }
 
   /** q195 — SQL MERGE INTO a BUCKET-PARTITIONED catalog table: q193's
@@ -2367,24 +2301,21 @@ object Relational {
     * recomputes the post-merge aggregate and the probe key's rows
     * from raw lineitem×orders.
     */
-  val partitionedSqlMerge = QueryDef("q195_partitioned_sql_merge",
-    """SELECT
-      |  (SELECT count(*) FROM lineitem) AS n,
-      |  (SELECT CAST(sum(CAST(floor(l.l_quantity * 100) AS BIGINT)
-      |     + CASE WHEN o.o_orderdate >= TIMESTAMP '1996-03-01'
-      |             AND o.o_orderdate < TIMESTAMP '1996-04-01'
-      |        THEN 100 ELSE 0 END) AS BIGINT)
-      |    FROM lineitem l JOIN orders o
-      |      ON l.l_orderkey = o.o_orderkey) AS qty_after,
-      |  (SELECT count(*) FROM lineitem WHERE l_orderkey = 7) AS n_probe,
-      |  TRUE AS pruned""".stripMargin) { (s, d) =>
-    import graft.ops.SnapshotTable
+  val partitionedSqlMerge: QueryDef = {
     val wh = Work.oracleDumpPath("q195_warehouse")
-    s.conf.set("spark.sql.catalog.graft_q195",
-      "graft.source.v2.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft_q195.root", wh)
-    clusterLayouts.compute("q195", (_, prev) => {
-      if (prev != d) {
+    QueryDef("q195_partitioned_sql_merge",
+      """SELECT
+        |  (SELECT count(*) FROM lineitem) AS n,
+        |  (SELECT CAST(sum(CAST(floor(l.l_quantity * 100) AS BIGINT)
+        |     + CASE WHEN o.o_orderdate >= TIMESTAMP '1996-03-01'
+        |             AND o.o_orderdate < TIMESTAMP '1996-04-01'
+        |        THEN 100 ELSE 0 END) AS BIGINT)
+        |    FROM lineitem l JOIN orders o
+        |      ON l.l_orderkey = o.o_orderkey) AS qty_after,
+        |  (SELECT count(*) FROM lineitem WHERE l_orderkey = 7) AS n_probe,
+        |  TRUE AS pruned""".stripMargin,
+      setup = { (s, d) =>
+        useCatalog(s, "q195", wh)
         Work.wipe(java.nio.file.Paths.get(wh))
         Tables.lineitem(s, d).select(
           col("l_orderkey").cast("long").as("okey"),
@@ -2401,29 +2332,29 @@ object Relational {
         s.sql("""MERGE INTO graft_q195.q195.li t USING q195_src s
           ON t.okey = s.okey
           WHEN MATCHED THEN UPDATE SET qty_u = t.qty_u + 100""")
-      }
-      d
-    })
-    val path = s"$wh/q195/li"
-    val ver = SnapshotTable.readVersion(s, path,
-      SnapshotTable.latestVersion(path))
-    require(ver.op == "MERGE" && ver.part.exists(_.transform == "bucket"),
-      s"expected a MERGE on the bucket layout, got ${ver.op}/${ver.part}")
-    require(ver.partValues.exists(_.length == ver.files.length),
-      "rewritten files must carry their partition values")
-    val after = s.sql("SELECT count(*) AS n, CAST(sum(qty_u) AS BIGINT)" +
-      " AS q FROM graft_q195.q195.li").collect().head
-    require(after.getLong(0) == ver.rows,
-      s"scan/manifest row drift: ${after.getLong(0)} != ${ver.rows}")
-    // post-merge pruning stays EXACT: a key probe plans a strict
-    // subset of the rewritten table's files
-    val (nProbe, Files(planned, total)) = ScanMetrics.rowCount(
-      s.sql("SELECT * FROM graft_q195.q195.li WHERE okey = 7"))
-    require(planned > 0 && planned < total,
-      s"post-merge bucket pruning failed: $planned of $total files")
-    import s.implicits._
-    Seq((after.getLong(0), after.getLong(1), nProbe, true))
-      .toDF("n", "qty_after", "n_probe", "pruned")
+      }) { (s, d) =>
+      useCatalog(s, "q195", wh)
+      val path = s"$wh/q195/li"
+      val ver = SnapshotTable.readVersion(s, path,
+        SnapshotTable.latestVersion(path))
+      require(ver.op == "MERGE" && ver.part.exists(_.transform == "bucket"),
+        s"expected a MERGE on the bucket layout, got ${ver.op}/${ver.part}")
+      require(ver.partValues.exists(_.length == ver.files.length),
+        "rewritten files must carry their partition values")
+      val after = s.sql("SELECT count(*) AS n, CAST(sum(qty_u) AS BIGINT)" +
+        " AS q FROM graft_q195.q195.li").collect().head
+      require(after.getLong(0) == ver.rows,
+        s"scan/manifest row drift: ${after.getLong(0)} != ${ver.rows}")
+      // post-merge pruning stays EXACT: a key probe plans a strict
+      // subset of the rewritten table's files
+      val (nProbe, Files(planned, total)) = ScanMetrics.rowCount(
+        s.sql("SELECT * FROM graft_q195.q195.li WHERE okey = 7"))
+      require(planned > 0 && planned < total,
+        s"post-merge bucket pruning failed: $planned of $total files")
+      import s.implicits._
+      Seq((after.getLong(0), after.getLong(1), nProbe, true))
+        .toDF("n", "qty_after", "n_probe", "pruned")
+    }
   }
 
   /** q196 — the NATIVE exactly-once streaming sink:
@@ -2440,21 +2371,20 @@ object Relational {
     * (require-asserted). DuckDB recomputes both watermarks from raw
     * lineitem.
     */
-  val streamSink = QueryDef("q196_stream_sink",
-    """SELECT
-      |  (SELECT count(*) FROM lineitem
-      |    WHERE l_shipdate < TIMESTAMP '1997-01-01') AS n_first,
-      |  (SELECT count(*) FROM lineitem) AS n_all,
-      |  (SELECT CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT))
-      |     AS BIGINT) FROM lineitem) AS qty_all,
-      |  TRUE AS exactly_once""".stripMargin) { (s, d) =>
-    import graft.ops.SnapshotTable
-    val src = Work.oracleDumpPath("q196_src")
+  val streamSink: QueryDef = {
     val dst = Work.oracleDumpPath("q196_dst")
-    val ckpt = Work.oracleDumpPath("q196_ckpt")
-    val day97 = java.time.LocalDate.of(1997, 1, 1).toEpochDay
-    clusterLayouts.compute("q196", (_, prev) => {
-      if (prev != d) {
+    QueryDef("q196_stream_sink",
+      """SELECT
+        |  (SELECT count(*) FROM lineitem
+        |    WHERE l_shipdate < TIMESTAMP '1997-01-01') AS n_first,
+        |  (SELECT count(*) FROM lineitem) AS n_all,
+        |  (SELECT CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT))
+        |     AS BIGINT) FROM lineitem) AS qty_all,
+        |  TRUE AS exactly_once""".stripMargin,
+      setup = { (s, d) =>
+        val src = Work.oracleDumpPath("q196_src")
+        val ckpt = Work.oracleDumpPath("q196_ckpt")
+        val day97 = java.time.LocalDate.of(1997, 1, 1).toEpochDay
         Seq(src, dst, ckpt).foreach(p =>
           Work.wipe(java.nio.file.Paths.get(p)))
         val li = Tables.lineitem(s, d).select(
@@ -2489,18 +2419,17 @@ object Relational {
           "streamed commits must be txn-keyed by (queryId, epochId)")
         require(ver.stats.exists(_.col == "ship_day"),
           "the sink must inherit the stats layout")
-      }
-      d
-    })
-    // AvailableNow + the version-offset source = ONE commit per
-    // non-idle run, so dst's v1 IS the first watermark
-    val nFirst = SnapshotTable.readVersion(s, dst, 1).rows
-    val t = s.read.format("graft_table").option("path", dst).load()
-    val r = t.agg(count(lit(1)).as("n"),
-      sum("qty_u").cast("long").as("q")).collect().head
-    import s.implicits._
-    Seq((nFirst, r.getLong(0), r.getLong(1), true))
-      .toDF("n_first", "n_all", "qty_all", "exactly_once")
+      }) { (s, d) =>
+      // AvailableNow + the version-offset source = ONE commit per
+      // non-idle run, so dst's v1 IS the first watermark
+      val nFirst = SnapshotTable.readVersion(s, dst, 1).rows
+      val t = s.read.format("graft_table").option("path", dst).load()
+      val r = t.agg(count(lit(1)).as("n"),
+        sum("qty_u").cast("long").as("q")).collect().head
+      import s.implicits._
+      Seq((nFirst, r.getLong(0), r.getLong(1), true))
+        .toDF("n_first", "n_all", "qty_all", "exactly_once")
+    }
   }
 
   /** q197 — DAY-TWO MAINTENANCE from pure SQL: Spark 4's procedure
@@ -2514,21 +2443,18 @@ object Relational {
     * which is the whole point: maintenance must never change answers.
     * DuckDB recomputes the aggregates from raw lineitem.
     */
-  val sqlMaintenance = QueryDef("q197_sql_maintenance",
-    """SELECT count(*) AS n,
-      |  CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT)) AS BIGINT)
-      |    AS qty_u,
-      |  CAST(min(CAST(floor(l_quantity * 100) AS BIGINT)) AS BIGINT)
-      |    AS qty_min,
-      |  TRUE AS compacted
-      |FROM lineitem""".stripMargin) { (s, d) =>
-    import graft.ops.SnapshotTable
+  val sqlMaintenance: QueryDef = {
     val wh = Work.oracleDumpPath("q197_warehouse")
-    s.conf.set("spark.sql.catalog.graft_q197",
-      "graft.source.v2.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft_q197.root", wh)
-    clusterLayouts.compute("q197", (_, prev) => {
-      if (prev != d) {
+    QueryDef("q197_sql_maintenance",
+      """SELECT count(*) AS n,
+        |  CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT)) AS BIGINT)
+        |    AS qty_u,
+        |  CAST(min(CAST(floor(l_quantity * 100) AS BIGINT)) AS BIGINT)
+        |    AS qty_min,
+        |  TRUE AS compacted
+        |FROM lineitem""".stripMargin,
+      setup = { (s, d) =>
+        useCatalog(s, "q197", wh)
         Work.wipe(java.nio.file.Paths.get(wh))
         Tables.lineitem(s, d).select(
           expr("CAST(datediff(l_shipdate, DATE '1970-01-01') AS BIGINT)")
@@ -2556,15 +2482,15 @@ object Relational {
           .collect().head
         require(ex.getInt(0) > 0, "expire dropped no manifests")
         s.sql("CALL graft_q197.system.vacuum('q197.li', 0)")
-      }
-      d
-    })
-    val r = s.sql("SELECT count(*) AS n, CAST(sum(qty_u) AS BIGINT) AS q," +
-      " CAST(min(qty_u) AS BIGINT) AS mn FROM graft_q197.q197.li")
-      .collect().head
-    import s.implicits._
-    Seq((r.getLong(0), r.getLong(1), r.getLong(2), true))
-      .toDF("n", "qty_u", "qty_min", "compacted")
+      }) { (s, d) =>
+      useCatalog(s, "q197", wh)
+      val r = s.sql("SELECT count(*) AS n, CAST(sum(qty_u) AS BIGINT) AS q," +
+        " CAST(min(qty_u) AS BIGINT) AS mn FROM graft_q197.q197.li")
+        .collect().head
+      import s.implicits._
+      Seq((r.getLong(0), r.getLong(1), r.getLong(2), true))
+        .toDF("n", "qty_u", "qty_min", "compacted")
+    }
   }
 
   /** q169 — SQL CHANGE FEED: [[graft.ops.SnapshotTable.changes]]
@@ -2581,29 +2507,27 @@ object Relational {
     * any survivor leaking through the exceptAll shows up as a phantom
     * insert+delete pair and hash-mismatches.
     */
-  val sqlChangeFeed = QueryDef("q169_sql_change_feed",
-    """SELECT 'delete' AS _change, count(*) AS n,
-      |  CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT)) AS BIGINT)
-      |    AS qty_u
-      |FROM lineitem
-      |WHERE l_linenumber % 2 = 1
-      |  AND l_shipdate >= TIMESTAMP '1996-01-01'
-      |  AND l_shipdate < TIMESTAMP '1997-01-01'
-      |UNION ALL
-      |SELECT 'insert' AS _change, count(*) AS n,
-      |  CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT)) AS BIGINT)
-      |    AS qty_u
-      |FROM lineitem
-      |WHERE l_linenumber % 2 = 0
-      |  AND (l_shipdate < TIMESTAMP '1996-01-01'
-      |       OR l_shipdate >= TIMESTAMP '1997-01-01')""".stripMargin) {
-    (s, d) =>
-    import graft.ops.SnapshotTable
+  val sqlChangeFeed: QueryDef = {
     val path = Work.oracleDumpPath("q169_table")
-    val lo96 = java.time.LocalDate.of(1996, 1, 1).toEpochDay
-    val hi96 = java.time.LocalDate.of(1996, 12, 31).toEpochDay
-    clusterLayouts.compute("q169", (_, prev) => {
-      if (prev != d) {
+    QueryDef("q169_sql_change_feed",
+      """SELECT 'delete' AS _change, count(*) AS n,
+        |  CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT)) AS BIGINT)
+        |    AS qty_u
+        |FROM lineitem
+        |WHERE l_linenumber % 2 = 1
+        |  AND l_shipdate >= TIMESTAMP '1996-01-01'
+        |  AND l_shipdate < TIMESTAMP '1997-01-01'
+        |UNION ALL
+        |SELECT 'insert' AS _change, count(*) AS n,
+        |  CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT)) AS BIGINT)
+        |    AS qty_u
+        |FROM lineitem
+        |WHERE l_linenumber % 2 = 0
+        |  AND (l_shipdate < TIMESTAMP '1996-01-01'
+        |       OR l_shipdate >= TIMESTAMP '1997-01-01')""".stripMargin,
+      setup = { (s, d) =>
+        val lo96 = java.time.LocalDate.of(1996, 1, 1).toEpochDay
+        val hi96 = java.time.LocalDate.of(1996, 12, 31).toEpochDay
         Work.wipe(java.nio.file.Paths.get(path))
         def half(parity: Int) = Tables.lineitem(s, d)
           .filter(col("l_linenumber") % 2 === parity).select(
@@ -2616,14 +2540,13 @@ object Relational {
         SnapshotTable.append(half(0), path, numPartitions = 8,
           statsCol = Some("ship_day"))
         SnapshotTable.deleteStatsRange(s, path, lo96, hi96) // v3
-      }
-      d
-    })
-    s.sql(
-      s"""SELECT _change, count(*) AS n,
-         |  CAST(sum(qty_u) AS BIGINT) AS qty_u
-         |FROM graft_changes('$path', 1, 3)
-         |GROUP BY _change""".stripMargin)
+      }) { (s, d) =>
+      s.sql(
+        s"""SELECT _change, count(*) AS n,
+           |  CAST(sum(qty_u) AS BIGINT) AS qty_u
+           |FROM graft_changes('$path', 1, 3)
+           |GROUP BY _change""".stripMargin)
+    }
   }
 
   /** q170 — EXACTLY-ONCE TABLE→TABLE TAIL
@@ -2640,26 +2563,25 @@ object Relational {
     * recomputed by DuckDB from raw lineitem, so a lost batch, a
     * double-applied replay, or a wrong delta each hash-mismatch.
     */
-  val exactlyOnceTail = QueryDef("q170_exactly_once_tail",
-    """SELECT 'delete' AS _change, count(*) AS n,
-      |  CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT)) AS BIGINT)
-      |    AS qty_u
-      |FROM lineitem
-      |WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-      |  AND l_shipdate < TIMESTAMP '1997-01-01'
-      |UNION ALL
-      |SELECT 'insert' AS _change, count(*) AS n,
-      |  CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT)) AS BIGINT)
-      |    AS qty_u
-      |FROM lineitem""".stripMargin) { (s, d) =>
-    import graft.ops.SnapshotTable
-    val src = Work.oracleDumpPath("q170_src")
+  val exactlyOnceTail: QueryDef = {
     val down = Work.oracleDumpPath("q170_down")
-    val ckpt = Work.oracleDumpPath("q170_ckpt")
-    val lo96 = java.time.LocalDate.of(1996, 1, 1).toEpochDay
-    val hi96 = java.time.LocalDate.of(1996, 12, 31).toEpochDay
-    clusterLayouts.compute("q170", (_, prev) => {
-      if (prev != d) {
+    QueryDef("q170_exactly_once_tail",
+      """SELECT 'delete' AS _change, count(*) AS n,
+        |  CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT)) AS BIGINT)
+        |    AS qty_u
+        |FROM lineitem
+        |WHERE l_shipdate >= TIMESTAMP '1996-01-01'
+        |  AND l_shipdate < TIMESTAMP '1997-01-01'
+        |UNION ALL
+        |SELECT 'insert' AS _change, count(*) AS n,
+        |  CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT)) AS BIGINT)
+        |    AS qty_u
+        |FROM lineitem""".stripMargin,
+      setup = { (s, d) =>
+        val src = Work.oracleDumpPath("q170_src")
+        val ckpt = Work.oracleDumpPath("q170_ckpt")
+        val lo96 = java.time.LocalDate.of(1996, 1, 1).toEpochDay
+        val hi96 = java.time.LocalDate.of(1996, 12, 31).toEpochDay
         Seq(src, down, ckpt).foreach(p =>
           Work.wipe(java.nio.file.Paths.get(p)))
         def half(parity: Int) = Tables.lineitem(s, d)
@@ -2693,13 +2615,12 @@ object Relational {
           s"expected a replayed (2,3] batch, got $replay")
         require(SnapshotTable.latestVersion(down) == vDown,
           "replayed batch was applied twice — txn dedupe failed")
-      }
-      d
-    })
-    val (scan, _, _) =
-      SnapshotTable.scanAt(s, down, SnapshotTable.latestVersion(down))
-    scan.groupBy("_change").agg(count(lit(1)).as("n"),
-      sum("qty_u").cast("long").as("qty_u"))
+      }) { (s, d) =>
+      val (scan, _, _) =
+        SnapshotTable.scanAt(s, down, SnapshotTable.latestVersion(down))
+      scan.groupBy("_change").agg(count(lit(1)).as("n"),
+        sum("qty_u").cast("long").as("qty_u"))
+    }
   }
 
   /** q173 — PARTITION-AWARE OPTIMIZE
@@ -2715,22 +2636,20 @@ object Relational {
     * lineitem; a partition-crossing merge would break the pruned
     * probe's arithmetic and hash-mismatch.
     */
-  val partitionCompact = QueryDef("q173_partition_compact",
-    """SELECT
-      |  (SELECT count(*) FROM lineitem) AS n_total,
-      |  (SELECT count(*) FROM lineitem
-      |    WHERE l_shipdate >= TIMESTAMP '1996-03-15'
-      |      AND l_shipdate < TIMESTAMP '1996-09-16') AS n_probe,
-      |  (SELECT CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT)) AS BIGINT)
-      |    FROM lineitem
-      |    WHERE l_shipdate >= TIMESTAMP '1996-03-15'
-      |      AND l_shipdate < TIMESTAMP '1996-09-16') AS qty_probe,
-      |  TRUE AS compacted""".stripMargin) { (s, d) =>
-    import graft.ops.SnapshotTable
-    import graft.ops.SnapshotTable.PartSpec
+  val partitionCompact: QueryDef = {
     val path = Work.oracleDumpPath("q173_table")
-    clusterLayouts.compute("q173", (_, prev) => {
-      if (prev != d) {
+    QueryDef("q173_partition_compact",
+      """SELECT
+        |  (SELECT count(*) FROM lineitem) AS n_total,
+        |  (SELECT count(*) FROM lineitem
+        |    WHERE l_shipdate >= TIMESTAMP '1996-03-15'
+        |      AND l_shipdate < TIMESTAMP '1996-09-16') AS n_probe,
+        |  (SELECT CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT)) AS BIGINT)
+        |    FROM lineitem
+        |    WHERE l_shipdate >= TIMESTAMP '1996-03-15'
+        |      AND l_shipdate < TIMESTAMP '1996-09-16') AS qty_probe,
+        |  TRUE AS compacted""".stripMargin,
+      setup = { (s, d) =>
         Work.wipe(java.nio.file.Paths.get(path))
         def wave(pred: org.apache.spark.sql.Column) =
           Tables.lineitem(s, d).filter(pred).select(
@@ -2752,23 +2671,22 @@ object Relational {
           s"compaction did not shrink the layout: $res")
         require(SnapshotTable.changes(s, path, 3, 4).isEmpty,
           "OPTIMIZE must be row-preserving — change feed not empty")
-      }
-      d
-    })
-    val plo = java.time.LocalDate.of(1996, 3, 15).toEpochDay
-    val phi = java.time.LocalDate.of(1996, 9, 15).toEpochDay
-    val (probe, read, total) =
-      SnapshotTable.scanPartitionRange(s, path, 4, plo, phi)
-    require(read > 0 && read < total,
-      s"pruning died across compaction: read $read of $total files")
-    val p = probe.agg(count(lit(1)).as("n"),
-      sum("qty_u").cast("long").as("q")).collect().head
-    val (all4, _, rows4) = SnapshotTable.scanAt(s, path, 4)
-    val n4 = all4.count()
-    require(n4 == rows4, "scan/manifest row drift after compaction")
-    import s.implicits._
-    Seq((n4, p.getLong(0), p.getLong(1), true))
-      .toDF("n_total", "n_probe", "qty_probe", "compacted")
+      }) { (s, d) =>
+      val plo = java.time.LocalDate.of(1996, 3, 15).toEpochDay
+      val phi = java.time.LocalDate.of(1996, 9, 15).toEpochDay
+      val (probe, read, total) =
+        SnapshotTable.scanPartitionRange(s, path, 4, plo, phi)
+      require(read > 0 && read < total,
+        s"pruning died across compaction: read $read of $total files")
+      val p = probe.agg(count(lit(1)).as("n"),
+        sum("qty_u").cast("long").as("q")).collect().head
+      val (all4, _, rows4) = SnapshotTable.scanAt(s, path, 4)
+      val n4 = all4.count()
+      require(n4 == rows4, "scan/manifest row drift after compaction")
+      import s.implicits._
+      Seq((n4, p.getLong(0), p.getLong(1), true))
+        .toDF("n_total", "n_probe", "qty_probe", "compacted")
+    }
   }
 
   /** q174 — TIMESTAMP time travel (`AS OF TIMESTAMP`,
@@ -2787,24 +2705,22 @@ object Relational {
     * recomputes all three states from raw lineitem with the
     * version-defining predicates.
     */
-  val timestampTravel = QueryDef("q174_timestamp_travel",
-    """SELECT
-      |  (SELECT count(*) FROM lineitem WHERE l_linenumber = 1) AS n_t1,
-      |  (SELECT count(*) FROM lineitem WHERE l_linenumber <= 2) AS n_t2,
-      |  (SELECT count(*) FROM lineitem WHERE l_linenumber <= 2
-      |    AND (l_shipdate < TIMESTAMP '1996-01-01'
-      |         OR l_shipdate >= TIMESTAMP '1997-01-01')) AS n_t3,
-      |  (SELECT CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT)) AS BIGINT)
-      |    FROM lineitem WHERE l_linenumber <= 2
-      |    AND (l_shipdate < TIMESTAMP '1996-01-01'
-      |         OR l_shipdate >= TIMESTAMP '1997-01-01')) AS qty_t3""".stripMargin) {
-    (s, d) =>
-    import graft.ops.SnapshotTable
+  val timestampTravel: QueryDef = {
     val path = Work.oracleDumpPath("q174_table")
-    val lo96 = java.time.LocalDate.of(1996, 1, 1).toEpochDay
-    val hi96 = java.time.LocalDate.of(1996, 12, 31).toEpochDay
-    clusterLayouts.compute("q174", (_, prev) => {
-      if (prev != d) {
+    QueryDef("q174_timestamp_travel",
+      """SELECT
+        |  (SELECT count(*) FROM lineitem WHERE l_linenumber = 1) AS n_t1,
+        |  (SELECT count(*) FROM lineitem WHERE l_linenumber <= 2) AS n_t2,
+        |  (SELECT count(*) FROM lineitem WHERE l_linenumber <= 2
+        |    AND (l_shipdate < TIMESTAMP '1996-01-01'
+        |         OR l_shipdate >= TIMESTAMP '1997-01-01')) AS n_t3,
+        |  (SELECT CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT)) AS BIGINT)
+        |    FROM lineitem WHERE l_linenumber <= 2
+        |    AND (l_shipdate < TIMESTAMP '1996-01-01'
+        |         OR l_shipdate >= TIMESTAMP '1997-01-01')) AS qty_t3""".stripMargin,
+      setup = { (s, d) =>
+        val lo96 = java.time.LocalDate.of(1996, 1, 1).toEpochDay
+        val hi96 = java.time.LocalDate.of(1996, 12, 31).toEpochDay
         Work.wipe(java.nio.file.Paths.get(path))
         def wave(pred: org.apache.spark.sql.Column) =
           Tables.lineitem(s, d).filter(pred).select(
@@ -2818,31 +2734,30 @@ object Relational {
           numPartitions = 4, statsCol = Some("ship_day"))
         Thread.sleep(25)
         SnapshotTable.deleteStatsRange(s, path, lo96, hi96) // v3
+      }) { (s, d) =>
+      val t1 = SnapshotTable.readVersion(s, path, 1).committedMs
+      val t2 = SnapshotTable.readVersion(s, path, 2).committedMs
+      val t3 = SnapshotTable.readVersion(s, path, 3).committedMs
+      require(t1 > 0 && t1 < t2 && t2 < t3,
+        s"commit times not strictly ordered: $t1 $t2 $t3")
+      val rv = Seq(SnapshotTable.versionAsOf(s, path, t1),
+        SnapshotTable.versionAsOf(s, path, t3 - 1),
+        SnapshotTable.versionAsOf(s, path, t3))
+      require(rv == Seq(1L, 2L, 3L), s"AS OF resolution drifted: $rv")
+      def aggAt(v: Long) = {
+        val (scan, _, rows) = SnapshotTable.scanAt(s, path, v)
+        val r = scan.agg(count(lit(1)), sum("qty_u").cast("long"))
+          .collect().head
+        require(r.getLong(0) == rows,
+          s"scan/manifest row drift at v$v: ${r.getLong(0)} != $rows")
+        (r.getLong(0), r.getLong(1))
       }
-      d
-    })
-    val t1 = SnapshotTable.readVersion(s, path, 1).committedMs
-    val t2 = SnapshotTable.readVersion(s, path, 2).committedMs
-    val t3 = SnapshotTable.readVersion(s, path, 3).committedMs
-    require(t1 > 0 && t1 < t2 && t2 < t3,
-      s"commit times not strictly ordered: $t1 $t2 $t3")
-    val rv = Seq(SnapshotTable.versionAsOf(s, path, t1),
-      SnapshotTable.versionAsOf(s, path, t3 - 1),
-      SnapshotTable.versionAsOf(s, path, t3))
-    require(rv == Seq(1L, 2L, 3L), s"AS OF resolution drifted: $rv")
-    def aggAt(v: Long) = {
-      val (scan, _, rows) = SnapshotTable.scanAt(s, path, v)
-      val r = scan.agg(count(lit(1)), sum("qty_u").cast("long"))
-        .collect().head
-      require(r.getLong(0) == rows,
-        s"scan/manifest row drift at v$v: ${r.getLong(0)} != $rows")
-      (r.getLong(0), r.getLong(1))
+      val (n1, _) = aggAt(rv(0))
+      val (n2, _) = aggAt(rv(1))
+      val (n3, q3) = aggAt(rv(2))
+      import s.implicits._
+      Seq((n1, n2, n3, q3)).toDF("n_t1", "n_t2", "n_t3", "qty_t3")
     }
-    val (n1, _) = aggAt(rv(0))
-    val (n2, _) = aggAt(rv(1))
-    val (n3, q3) = aggAt(rv(2))
-    import s.implicits._
-    Seq((n1, n2, n3, q3)).toDF("n_t1", "n_t2", "n_t3", "qty_t3")
   }
 
   /** q175 — RESTORE TO VERSION ([[graft.ops.SnapshotTable.restore]]):
@@ -2857,24 +2772,22 @@ object Relational {
     * from raw lineitem; a restore that revived the wrong version or
     * leaked the deleted rows into the feed hash-mismatches.
     */
-  val restoreVersion = QueryDef("q175_restore_version",
-    """SELECT
-      |  (SELECT count(*) FROM lineitem WHERE l_linenumber <= 2
-      |    AND (l_shipdate < TIMESTAMP '1996-01-01'
-      |         OR l_shipdate >= TIMESTAMP '1997-01-01')) AS n_deleted_state,
-      |  (SELECT count(*) FROM lineitem WHERE l_linenumber <= 2) AS n_restored,
-      |  (SELECT count(*) FROM lineitem WHERE l_linenumber <= 2
-      |    AND l_shipdate >= TIMESTAMP '1996-01-01'
-      |    AND l_shipdate < TIMESTAMP '1997-01-01') AS n_readded,
-      |  (SELECT CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT)) AS BIGINT)
-      |    FROM lineitem WHERE l_linenumber <= 2) AS qty_restored""".stripMargin) {
-    (s, d) =>
-    import graft.ops.SnapshotTable
+  val restoreVersion: QueryDef = {
     val path = Work.oracleDumpPath("q175_table")
-    val lo96 = java.time.LocalDate.of(1996, 1, 1).toEpochDay
-    val hi96 = java.time.LocalDate.of(1996, 12, 31).toEpochDay
-    clusterLayouts.compute("q175", (_, prev) => {
-      if (prev != d) {
+    QueryDef("q175_restore_version",
+      """SELECT
+        |  (SELECT count(*) FROM lineitem WHERE l_linenumber <= 2
+        |    AND (l_shipdate < TIMESTAMP '1996-01-01'
+        |         OR l_shipdate >= TIMESTAMP '1997-01-01')) AS n_deleted_state,
+        |  (SELECT count(*) FROM lineitem WHERE l_linenumber <= 2) AS n_restored,
+        |  (SELECT count(*) FROM lineitem WHERE l_linenumber <= 2
+        |    AND l_shipdate >= TIMESTAMP '1996-01-01'
+        |    AND l_shipdate < TIMESTAMP '1997-01-01') AS n_readded,
+        |  (SELECT CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT)) AS BIGINT)
+        |    FROM lineitem WHERE l_linenumber <= 2) AS qty_restored""".stripMargin,
+      setup = { (s, d) =>
+        val lo96 = java.time.LocalDate.of(1996, 1, 1).toEpochDay
+        val hi96 = java.time.LocalDate.of(1996, 12, 31).toEpochDay
         Work.wipe(java.nio.file.Paths.get(path))
         def wave(pred: org.apache.spark.sql.Column) =
           Tables.lineitem(s, d).filter(pred).select(
@@ -2888,28 +2801,27 @@ object Relational {
         SnapshotTable.deleteStatsRange(s, path, lo96, hi96) // v3: the mistake
         val v4 = SnapshotTable.restore(s, path, 2)
         require(v4 == 4, s"restore committed v$v4, expected v4")
-      }
-      d
-    })
-    val v2 = SnapshotTable.readVersion(s, path, 2)
-    val v4 = SnapshotTable.readVersion(s, path, 4)
-    require(v4.files == v2.files,
-      "restore was not metadata-only: v4's file list differs from v2's")
-    val feed = SnapshotTable.changes(s, path, 3, 4)
-      .groupBy("_change").agg(count(lit(1)).as("n")).collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    require(!feed.contains("delete"),
-      s"restore change feed reported deletes: $feed")
-    val (scan3, _, rows3) = SnapshotTable.scanAt(s, path, 3)
-    val (scan4, _, rows4) = SnapshotTable.scanAt(s, path, 4)
-    val n3 = scan3.count()
-    val r4 = scan4.agg(count(lit(1)), sum("qty_u").cast("long"))
-      .collect().head
-    require(n3 == rows3 && r4.getLong(0) == rows4,
-      "scan/manifest row drift across restore")
-    import s.implicits._
-    Seq((n3, r4.getLong(0), feed.getOrElse("insert", 0L), r4.getLong(1)))
-      .toDF("n_deleted_state", "n_restored", "n_readded", "qty_restored")
+      }) { (s, d) =>
+      val v2 = SnapshotTable.readVersion(s, path, 2)
+      val v4 = SnapshotTable.readVersion(s, path, 4)
+      require(v4.files == v2.files,
+        "restore was not metadata-only: v4's file list differs from v2's")
+      val feed = SnapshotTable.changes(s, path, 3, 4)
+        .groupBy("_change").agg(count(lit(1)).as("n")).collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+      require(!feed.contains("delete"),
+        s"restore change feed reported deletes: $feed")
+      val (scan3, _, rows3) = SnapshotTable.scanAt(s, path, 3)
+      val (scan4, _, rows4) = SnapshotTable.scanAt(s, path, 4)
+      val n3 = scan3.count()
+      val r4 = scan4.agg(count(lit(1)), sum("qty_u").cast("long"))
+        .collect().head
+      require(n3 == rows3 && r4.getLong(0) == rows4,
+        "scan/manifest row drift across restore")
+      import s.implicits._
+      Seq((n3, r4.getLong(0), feed.getOrElse("insert", 0L), r4.getLong(1)))
+        .toDF("n_deleted_state", "n_restored", "n_readded", "qty_restored")
+    }
   }
 
   /** q176 — DESCRIBE HISTORY ([[graft.ops.SnapshotTable.history]],
@@ -2925,29 +2837,28 @@ object Relational {
     * (not SQL-recomputable) are require-asserted in-query: OPTIMIZE
     * shrinks the layout, RESTORE revives exactly v2's.
     */
-  val tableHistory = QueryDef("q176_table_history",
-    """SELECT * FROM (
-      |  SELECT CAST(1 AS BIGINT) AS version, 'APPEND' AS op,
-      |    (SELECT count(*) FROM lineitem WHERE l_linenumber = 1) AS n_rows
-      |  UNION ALL SELECT 2, 'APPEND',
-      |    (SELECT count(*) FROM lineitem WHERE l_linenumber <= 2)
-      |  UNION ALL SELECT 3, 'DELETE',
-      |    (SELECT count(*) FROM lineitem WHERE l_linenumber <= 2
-      |      AND (l_shipdate < TIMESTAMP '1996-01-01'
-      |           OR l_shipdate >= TIMESTAMP '1997-01-01'))
-      |  UNION ALL SELECT 4, 'OPTIMIZE',
-      |    (SELECT count(*) FROM lineitem WHERE l_linenumber <= 2
-      |      AND (l_shipdate < TIMESTAMP '1996-01-01'
-      |           OR l_shipdate >= TIMESTAMP '1997-01-01'))
-      |  UNION ALL SELECT 5, 'RESTORE',
-      |    (SELECT count(*) FROM lineitem WHERE l_linenumber <= 2)
-      |) ORDER BY version""".stripMargin) { (s, d) =>
-    import graft.ops.SnapshotTable
+  val tableHistory: QueryDef = {
     val path = Work.oracleDumpPath("q176_table")
-    val lo96 = java.time.LocalDate.of(1996, 1, 1).toEpochDay
-    val hi96 = java.time.LocalDate.of(1996, 12, 31).toEpochDay
-    clusterLayouts.compute("q176", (_, prev) => {
-      if (prev != d) {
+    QueryDef("q176_table_history",
+      """SELECT * FROM (
+        |  SELECT CAST(1 AS BIGINT) AS version, 'APPEND' AS op,
+        |    (SELECT count(*) FROM lineitem WHERE l_linenumber = 1) AS n_rows
+        |  UNION ALL SELECT 2, 'APPEND',
+        |    (SELECT count(*) FROM lineitem WHERE l_linenumber <= 2)
+        |  UNION ALL SELECT 3, 'DELETE',
+        |    (SELECT count(*) FROM lineitem WHERE l_linenumber <= 2
+        |      AND (l_shipdate < TIMESTAMP '1996-01-01'
+        |           OR l_shipdate >= TIMESTAMP '1997-01-01'))
+        |  UNION ALL SELECT 4, 'OPTIMIZE',
+        |    (SELECT count(*) FROM lineitem WHERE l_linenumber <= 2
+        |      AND (l_shipdate < TIMESTAMP '1996-01-01'
+        |           OR l_shipdate >= TIMESTAMP '1997-01-01'))
+        |  UNION ALL SELECT 5, 'RESTORE',
+        |    (SELECT count(*) FROM lineitem WHERE l_linenumber <= 2)
+        |) ORDER BY version""".stripMargin,
+      setup = { (s, d) =>
+        val lo96 = java.time.LocalDate.of(1996, 1, 1).toEpochDay
+        val hi96 = java.time.LocalDate.of(1996, 12, 31).toEpochDay
         Work.wipe(java.nio.file.Paths.get(path))
         def wave(pred: org.apache.spark.sql.Column) =
           Tables.lineitem(s, d).filter(pred).select(
@@ -2961,18 +2872,17 @@ object Relational {
         SnapshotTable.deleteStatsRange(s, path, lo96, hi96)  // v3
         SnapshotTable.compact(s, path, 1L << 30)             // v4
         SnapshotTable.restore(s, path, 2)                    // v5
-      }
-      d
-    })
-    val h = SnapshotTable.history(s, path).orderBy("version").collect()
-    require(h.length == 5, s"expected 5 versions, history has ${h.length}")
-    val nf = h.map(r => r.getAs[Long]("n_files"))
-    require(nf(3) < nf(2),
-      s"OPTIMIZE did not shrink the layout: ${nf.toSeq}")
-    require(nf(4) == nf(1),
-      s"RESTORE did not revive v2's file count: ${nf.toSeq}")
-    s.sql(s"""SELECT version, op, rows AS n_rows
-             |FROM graft_history('$path') ORDER BY version""".stripMargin)
+      }) { (s, d) =>
+      val h = SnapshotTable.history(s, path).orderBy("version").collect()
+      require(h.length == 5, s"expected 5 versions, history has ${h.length}")
+      val nf = h.map(r => r.getAs[Long]("n_files"))
+      require(nf(3) < nf(2),
+        s"OPTIMIZE did not shrink the layout: ${nf.toSeq}")
+      require(nf(4) == nf(1),
+        s"RESTORE did not revive v2's file count: ${nf.toSeq}")
+      s.sql(s"""SELECT version, op, rows AS n_rows
+               |FROM graft_history('$path') ORDER BY version""".stripMargin)
+    }
   }
 
   /** q177 — CHECK-constraint gated ingest
@@ -2991,36 +2901,35 @@ object Relational {
     * predicate — an enforcement leak (dirty rows committed) or an
     * over-rejection (clean rows lost) hash-mismatches.
     */
-  val constraintGate = QueryDef("q177_constraint_gate",
-    """SELECT
-      |  (SELECT count(*) FROM lineitem WHERE l_linenumber = 1
-      |    AND l_shipdate < TIMESTAMP '2000-01-01') AS n_clean,
-      |  (SELECT CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT)) AS BIGINT)
-      |    FROM lineitem WHERE l_linenumber = 1
-      |    AND l_shipdate < TIMESTAMP '2000-01-01') AS qty_clean,
-      |  (SELECT count(*) FROM lineitem WHERE l_linenumber = 2
-      |    AND l_shipdate >= TIMESTAMP '2000-01-01') AS n_rejected_cause,
-      |  CAST(1 AS BIGINT) AS n_versions""".stripMargin) { (s, d) =>
-    import graft.ops.SnapshotTable
-    import graft.ops.SnapshotTable.Constraint
+  val constraintGate: QueryDef = {
     val path = Work.oracleDumpPath("q177_table")
     val y2k = java.time.LocalDate.of(2000, 1, 1).toEpochDay
-    def wave(pred: org.apache.spark.sql.Column) =
+    def wave(s: SparkSession, d: String, pred: Column) =
       Tables.lineitem(s, d).filter(pred).select(
         expr("CAST(datediff(l_shipdate, DATE '1970-01-01') AS BIGINT)")
           .as("ship_day"),
         floor(col("l_quantity") * 100).cast("long").as("qty_u"))
-    clusterLayouts.compute("q177", (_, prev) => {
-      if (prev != d) {
+    QueryDef("q177_constraint_gate",
+      """SELECT
+        |  (SELECT count(*) FROM lineitem WHERE l_linenumber = 1
+        |    AND l_shipdate < TIMESTAMP '2000-01-01') AS n_clean,
+        |  (SELECT CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT)) AS BIGINT)
+        |    FROM lineitem WHERE l_linenumber = 1
+        |    AND l_shipdate < TIMESTAMP '2000-01-01') AS qty_clean,
+        |  (SELECT count(*) FROM lineitem WHERE l_linenumber = 2
+        |    AND l_shipdate >= TIMESTAMP '2000-01-01') AS n_rejected_cause,
+        |  CAST(1 AS BIGINT) AS n_versions""".stripMargin,
+      setup = { (s, d) =>
         Work.wipe(java.nio.file.Paths.get(path))
         SnapshotTable.setConstraints(path, Seq(
           Constraint("qty_nonneg", "qty_u >= 0"),
           Constraint("ship_pre_y2k", s"ship_day < $y2k"),
           Constraint("ship_known", "ship_day IS NOT NULL")))
         SnapshotTable.append(
-          wave(col("l_linenumber") === 1).filter(col("ship_day") < y2k),
+          wave(s, d, col("l_linenumber") === 1)
+            .filter(col("ship_day") < y2k),
           path, numPartitions = 4, statsCol = Some("ship_day"))
-        val dirty = wave(col("l_linenumber") === 2)
+        val dirty = wave(s, d, col("l_linenumber") === 2)
         require(dirty.filter(col("ship_day") >= y2k).limit(1).count() > 0,
           "fixture drift: the dirty wave has no violating rows")
         val e = try {
@@ -3048,19 +2957,18 @@ object Relational {
         }
         require(onDisk == live,
           s"aborted batch left garbage: ${onDisk -- live}")
-      }
-      d
-    })
-    val (scan, _, rows) = SnapshotTable.scanAt(s, path, 1)
-    val r = scan.agg(count(lit(1)), sum("qty_u").cast("long"))
-      .collect().head
-    require(r.getLong(0) == rows, "scan/manifest row drift")
-    val nCause = wave(col("l_linenumber") === 2)
-      .filter(col("ship_day") >= y2k).count()
-    import s.implicits._
-    Seq((r.getLong(0), r.getLong(1), nCause,
-        SnapshotTable.history(s, path).count()))
-      .toDF("n_clean", "qty_clean", "n_rejected_cause", "n_versions")
+      }) { (s, d) =>
+      val (scan, _, rows) = SnapshotTable.scanAt(s, path, 1)
+      val r = scan.agg(count(lit(1)), sum("qty_u").cast("long"))
+        .collect().head
+      require(r.getLong(0) == rows, "scan/manifest row drift")
+      val nCause = wave(s, d, col("l_linenumber") === 2)
+        .filter(col("ship_day") >= y2k).count()
+      import s.implicits._
+      Seq((r.getLong(0), r.getLong(1), nCause,
+          SnapshotTable.history(s, path).count()))
+        .toDF("n_clean", "qty_clean", "n_rejected_cause", "n_versions")
+    }
   }
 
   /** q178 — DELETION VECTORS (merge-on-read delete,
@@ -3080,29 +2988,28 @@ object Relational {
     * lineitem — a DV that misses rows, double-deletes, or a
     * materialize that loses survivors hash-mismatches.
     */
-  val deletionVectors = QueryDef("q178_deletion_vectors",
-    """SELECT
-      |  (SELECT count(*) FROM lineitem WHERE l_linenumber <= 2) AS n_v1,
-      |  (SELECT count(*) FROM lineitem WHERE l_linenumber <= 2
-      |    AND (l_shipdate < TIMESTAMP '1996-01-01'
-      |         OR l_shipdate >= TIMESTAMP '1997-01-01')) AS n_mor,
-      |  (SELECT CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT)) AS BIGINT)
-      |    FROM lineitem WHERE l_linenumber <= 2
-      |    AND (l_shipdate < TIMESTAMP '1996-01-01'
-      |         OR l_shipdate >= TIMESTAMP '1997-01-01')) AS qty_mor,
-      |  (SELECT count(*) FROM lineitem WHERE l_linenumber <= 2
-      |    AND l_shipdate >= TIMESTAMP '1996-01-01'
-      |    AND l_shipdate < TIMESTAMP '1997-01-01') AS n_feed_del,
-      |  (SELECT count(*) FROM lineitem WHERE l_linenumber <= 2
-      |    AND (l_shipdate < TIMESTAMP '1996-01-01'
-      |         OR l_shipdate >= TIMESTAMP '1997-01-01'))
-      |    AS n_materialized""".stripMargin) { (s, d) =>
-    import graft.ops.SnapshotTable
+  val deletionVectors: QueryDef = {
     val path = Work.oracleDumpPath("q178_table")
-    val lo96 = java.time.LocalDate.of(1996, 1, 1).toEpochDay
-    val hi96 = java.time.LocalDate.of(1996, 12, 31).toEpochDay
-    clusterLayouts.compute("q178", (_, prev) => {
-      if (prev != d) {
+    QueryDef("q178_deletion_vectors",
+      """SELECT
+        |  (SELECT count(*) FROM lineitem WHERE l_linenumber <= 2) AS n_v1,
+        |  (SELECT count(*) FROM lineitem WHERE l_linenumber <= 2
+        |    AND (l_shipdate < TIMESTAMP '1996-01-01'
+        |         OR l_shipdate >= TIMESTAMP '1997-01-01')) AS n_mor,
+        |  (SELECT CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT)) AS BIGINT)
+        |    FROM lineitem WHERE l_linenumber <= 2
+        |    AND (l_shipdate < TIMESTAMP '1996-01-01'
+        |         OR l_shipdate >= TIMESTAMP '1997-01-01')) AS qty_mor,
+        |  (SELECT count(*) FROM lineitem WHERE l_linenumber <= 2
+        |    AND l_shipdate >= TIMESTAMP '1996-01-01'
+        |    AND l_shipdate < TIMESTAMP '1997-01-01') AS n_feed_del,
+        |  (SELECT count(*) FROM lineitem WHERE l_linenumber <= 2
+        |    AND (l_shipdate < TIMESTAMP '1996-01-01'
+        |         OR l_shipdate >= TIMESTAMP '1997-01-01'))
+        |    AS n_materialized""".stripMargin,
+      setup = { (s, d) =>
+        val lo96 = java.time.LocalDate.of(1996, 1, 1).toEpochDay
+        val hi96 = java.time.LocalDate.of(1996, 12, 31).toEpochDay
         Work.wipe(java.nio.file.Paths.get(path))
         SnapshotTable.append(
           Tables.lineitem(s, d).filter(col("l_linenumber") <= 2).select(
@@ -3123,23 +3030,22 @@ object Relational {
           "materialize left DVs behind")
         require(SnapshotTable.changes(s, path, 2, 3).isEmpty,
           "materialize must be row-preserving — change feed not empty")
-      }
-      d
-    })
-    val (scan1, _, rows1) = SnapshotTable.scanAt(s, path, 1)
-    val (scan2, _, rows2) = SnapshotTable.scanAt(s, path, 2)
-    val (scan3, _, rows3) = SnapshotTable.scanAt(s, path, 3)
-    val feedDel = SnapshotTable.changes(s, path, 1, 2)
-      .filter(col("_change") === "delete").count()
-    val n1 = scan1.count()
-    val r2 = scan2.agg(count(lit(1)), sum("qty_u").cast("long"))
-      .collect().head
-    val n3 = scan3.count()
-    require(n1 == rows1 && r2.getLong(0) == rows2 && n3 == rows3,
-      "scan/manifest row drift across the DV lifecycle")
-    import s.implicits._
-    Seq((n1, r2.getLong(0), r2.getLong(1), feedDel, n3))
-      .toDF("n_v1", "n_mor", "qty_mor", "n_feed_del", "n_materialized")
+      }) { (s, d) =>
+      val (scan1, _, rows1) = SnapshotTable.scanAt(s, path, 1)
+      val (scan2, _, rows2) = SnapshotTable.scanAt(s, path, 2)
+      val (scan3, _, rows3) = SnapshotTable.scanAt(s, path, 3)
+      val feedDel = SnapshotTable.changes(s, path, 1, 2)
+        .filter(col("_change") === "delete").count()
+      val n1 = scan1.count()
+      val r2 = scan2.agg(count(lit(1)), sum("qty_u").cast("long"))
+        .collect().head
+      val n3 = scan3.count()
+      require(n1 == rows1 && r2.getLong(0) == rows2 && n3 == rows3,
+        "scan/manifest row drift across the DV lifecycle")
+      import s.implicits._
+      Seq((n1, r2.getLong(0), r2.getLong(1), feedDel, n3))
+        .toDF("n_v1", "n_mor", "qty_mor", "n_feed_del", "n_materialized")
+    }
   }
 
   /** q179 — PARTITIONED MERGE
@@ -3160,54 +3066,52 @@ object Relational {
     * moved key, a lost insert, or partition-impure output
     * hash-mismatches.
     */
-  val partitionMerge = QueryDef("q179_partition_merge",
-    """WITH base AS (
-      |  SELECT l_orderkey * 10 + l_linenumber AS k,
-      |         min(l_shipdate) AS sd,
-      |         CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT))
-      |           AS BIGINT) AS qty_u
-      |  FROM lineitem WHERE l_linenumber <= 2 GROUP BY 1),
-      |upd AS (
-      |  SELECT k, sd + INTERVAL 40 DAY AS sd, qty_u + 1000000 AS qty_u
-      |  FROM base WHERE k >= 10000 AND k < 14000
-      |    AND sd >= TIMESTAMP '1996-01-01'
-      |    AND sd < TIMESTAMP '1997-01-01'),
-      |ins AS (
-      |  SELECT l_orderkey * 10 + l_linenumber AS k,
-      |         min(l_shipdate) AS sd,
-      |         CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT))
-      |           AS BIGINT) AS qty_u
-      |  FROM lineitem WHERE l_linenumber = 3
-      |    AND l_orderkey >= 1000 AND l_orderkey < 1400
-      |    AND l_shipdate >= TIMESTAMP '1996-01-01'
-      |    AND l_shipdate < TIMESTAMP '1997-01-01' GROUP BY 1),
-      |final AS (
-      |  SELECT * FROM base WHERE k NOT IN (SELECT k FROM upd)
-      |  UNION ALL SELECT * FROM upd
-      |  UNION ALL SELECT * FROM ins)
-      |SELECT CAST(count(*) AS BIGINT) AS n_total,
-      |  CAST(sum(qty_u) AS BIGINT) AS qty_total,
-      |  (SELECT count(*) FROM final
-      |    WHERE sd >= TIMESTAMP '1996-03-15'
-      |      AND sd < TIMESTAMP '1996-09-16') AS n_probe
-      |FROM final""".stripMargin) { (s, d) =>
-    import graft.ops.SnapshotTable
-    import graft.ops.SnapshotTable.PartSpec
+  val partitionMerge: QueryDef = {
     val path = Work.oracleDumpPath("q179_table")
-    // (l_orderkey, l_linenumber) is NOT unique in the synthetic data
-    // (see q166) — group to a unique merge key, deterministically
-    def rowsOf(pred: org.apache.spark.sql.Column) =
-      Tables.lineitem(s, d).filter(pred).select(
-        (col("l_orderkey") * 10 + col("l_linenumber")).cast("long")
-          .as("k"),
-        expr("CAST(datediff(l_shipdate, DATE '1970-01-01') AS BIGINT)")
-          .as("sd"),
-        floor(col("l_quantity") * 100).cast("long").as("q"))
-        .groupBy("k")
-        .agg(min(col("sd")).as("ship_day"),
-          sum(col("q")).cast("long").as("qty_u"))
-    clusterLayouts.compute("q179", (_, prev) => {
-      if (prev != d) {
+    QueryDef("q179_partition_merge",
+      """WITH base AS (
+        |  SELECT l_orderkey * 10 + l_linenumber AS k,
+        |         min(l_shipdate) AS sd,
+        |         CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT))
+        |           AS BIGINT) AS qty_u
+        |  FROM lineitem WHERE l_linenumber <= 2 GROUP BY 1),
+        |upd AS (
+        |  SELECT k, sd + INTERVAL 40 DAY AS sd, qty_u + 1000000 AS qty_u
+        |  FROM base WHERE k >= 10000 AND k < 14000
+        |    AND sd >= TIMESTAMP '1996-01-01'
+        |    AND sd < TIMESTAMP '1997-01-01'),
+        |ins AS (
+        |  SELECT l_orderkey * 10 + l_linenumber AS k,
+        |         min(l_shipdate) AS sd,
+        |         CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT))
+        |           AS BIGINT) AS qty_u
+        |  FROM lineitem WHERE l_linenumber = 3
+        |    AND l_orderkey >= 1000 AND l_orderkey < 1400
+        |    AND l_shipdate >= TIMESTAMP '1996-01-01'
+        |    AND l_shipdate < TIMESTAMP '1997-01-01' GROUP BY 1),
+        |final AS (
+        |  SELECT * FROM base WHERE k NOT IN (SELECT k FROM upd)
+        |  UNION ALL SELECT * FROM upd
+        |  UNION ALL SELECT * FROM ins)
+        |SELECT CAST(count(*) AS BIGINT) AS n_total,
+        |  CAST(sum(qty_u) AS BIGINT) AS qty_total,
+        |  (SELECT count(*) FROM final
+        |    WHERE sd >= TIMESTAMP '1996-03-15'
+        |      AND sd < TIMESTAMP '1996-09-16') AS n_probe
+        |FROM final""".stripMargin,
+      setup = { (s, d) =>
+        // (l_orderkey, l_linenumber) is NOT unique in the synthetic data
+        // (see q166) — group to a unique merge key, deterministically
+        def rowsOf(pred: org.apache.spark.sql.Column) =
+          Tables.lineitem(s, d).filter(pred).select(
+            (col("l_orderkey") * 10 + col("l_linenumber")).cast("long")
+              .as("k"),
+            expr("CAST(datediff(l_shipdate, DATE '1970-01-01') AS BIGINT)")
+              .as("sd"),
+            floor(col("l_quantity") * 100).cast("long").as("q"))
+            .groupBy("k")
+            .agg(min(col("sd")).as("ship_day"),
+              sum(col("q")).cast("long").as("qty_u"))
         Work.wipe(java.nio.file.Paths.get(path))
         val spec = PartSpec("ship_day", "truncate", 32)
         // CDC-shaped micro-batch: a fixed orderkey window keeps the
@@ -3243,23 +3147,22 @@ object Relational {
           s"merge accounting drifted: $res vs upd=$nUpd ins=$nIns")
         require(res.filesRewritten < res.filesTotal,
           s"partition+bloom pruning rewrote everything: $res")
-      }
-      d
-    })
-    val plo = java.time.LocalDate.of(1996, 3, 15).toEpochDay
-    val phi = java.time.LocalDate.of(1996, 9, 15).toEpochDay
-    val (probe, read, total) =
-      SnapshotTable.scanPartitionRange(s, path, 2, plo, phi)
-    require(read > 0 && read < total,
-      s"pruning died across the merge: read $read of $total files")
-    val nProbe = probe.count()
-    val (all2, _, rows2) = SnapshotTable.scanAt(s, path, 2)
-    val r = all2.agg(count(lit(1)), sum("qty_u").cast("long"))
-      .collect().head
-    require(r.getLong(0) == rows2, "scan/manifest row drift after merge")
-    import s.implicits._
-    Seq((r.getLong(0), r.getLong(1), nProbe))
-      .toDF("n_total", "qty_total", "n_probe")
+      }) { (s, d) =>
+      val plo = java.time.LocalDate.of(1996, 3, 15).toEpochDay
+      val phi = java.time.LocalDate.of(1996, 9, 15).toEpochDay
+      val (probe, read, total) =
+        SnapshotTable.scanPartitionRange(s, path, 2, plo, phi)
+      require(read > 0 && read < total,
+        s"pruning died across the merge: read $read of $total files")
+      val nProbe = probe.count()
+      val (all2, _, rows2) = SnapshotTable.scanAt(s, path, 2)
+      val r = all2.agg(count(lit(1)), sum("qty_u").cast("long"))
+        .collect().head
+      require(r.getLong(0) == rows2, "scan/manifest row drift after merge")
+      import s.implicits._
+      Seq((r.getLong(0), r.getLong(1), nProbe))
+        .toDF("n_total", "qty_total", "n_probe")
+    }
   }
 
   /** q182 — SHALLOW CLONE ([[graft.ops.SnapshotTable.cloneAt]]): fork
@@ -3277,26 +3180,25 @@ object Relational {
     * the wrong version, leaked a mutation across lineages, or lost
     * source files to the clone's GC hash-mismatches.
     */
-  val shallowClone = QueryDef("q182_shallow_clone",
-    """SELECT
-      |  (SELECT count(*) FROM lineitem WHERE l_linenumber <= 2) AS n_base,
-      |  (SELECT count(*) FROM lineitem WHERE l_linenumber <= 2
-      |    AND (l_shipdate < TIMESTAMP '1996-01-01'
-      |         OR l_shipdate >= TIMESTAMP '1997-01-01')) AS n_src,
-      |  (SELECT count(*) FROM lineitem WHERE l_linenumber <= 2
-      |    AND (l_shipdate < TIMESTAMP '1997-01-01'
-      |         OR l_shipdate >= TIMESTAMP '1998-01-01')) AS n_clone,
-      |  (SELECT CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT)) AS BIGINT)
-      |    FROM lineitem WHERE l_linenumber <= 2
-      |    AND (l_shipdate < TIMESTAMP '1997-01-01'
-      |         OR l_shipdate >= TIMESTAMP '1998-01-01'))
-      |    AS qty_clone""".stripMargin) { (s, d) =>
-    import graft.ops.SnapshotTable
+  val shallowClone: QueryDef = {
     val src = Work.oracleDumpPath("q182_src")
     val dst = Work.oracleDumpPath("q182_clone")
-    def day(y: Int) = java.time.LocalDate.of(y, 1, 1).toEpochDay
-    clusterLayouts.compute("q182", (_, prev) => {
-      if (prev != d) {
+    QueryDef("q182_shallow_clone",
+      """SELECT
+        |  (SELECT count(*) FROM lineitem WHERE l_linenumber <= 2) AS n_base,
+        |  (SELECT count(*) FROM lineitem WHERE l_linenumber <= 2
+        |    AND (l_shipdate < TIMESTAMP '1996-01-01'
+        |         OR l_shipdate >= TIMESTAMP '1997-01-01')) AS n_src,
+        |  (SELECT count(*) FROM lineitem WHERE l_linenumber <= 2
+        |    AND (l_shipdate < TIMESTAMP '1997-01-01'
+        |         OR l_shipdate >= TIMESTAMP '1998-01-01')) AS n_clone,
+        |  (SELECT CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT)) AS BIGINT)
+        |    FROM lineitem WHERE l_linenumber <= 2
+        |    AND (l_shipdate < TIMESTAMP '1997-01-01'
+        |         OR l_shipdate >= TIMESTAMP '1998-01-01'))
+        |    AS qty_clone""".stripMargin,
+      setup = { (s, d) =>
+        def day(y: Int) = java.time.LocalDate.of(y, 1, 1).toEpochDay
         Work.wipe(java.nio.file.Paths.get(src))
         Work.wipe(java.nio.file.Paths.get(dst))
         SnapshotTable.append(
@@ -3319,24 +3221,23 @@ object Relational {
           .select("op").collect().map(_.getString(0)).toSeq
         require(ops == Seq("DELETE"), // v1 CLONE expired, v2 remains
           s"clone history drifted: $ops")
-      }
-      d
-    })
-    val (srcScan, _, srcRows) =
-      SnapshotTable.scanAt(s, src, SnapshotTable.latestVersion(src))
-    val (srcBase, _, baseRows) = SnapshotTable.scanAt(s, src, 1)
-    val (cScan, _, cRows) =
-      SnapshotTable.scanAt(s, dst, SnapshotTable.latestVersion(dst))
-    val nBase = srcBase.count()
-    val nSrc = srcScan.count()
-    val c = cScan.agg(count(lit(1)), sum("qty_u").cast("long"))
-      .collect().head
-    require(nBase == baseRows && nSrc == srcRows &&
-        c.getLong(0) == cRows,
-      "scan/manifest drift across the clone lineages")
-    import s.implicits._
-    Seq((nBase, nSrc, c.getLong(0), c.getLong(1)))
-      .toDF("n_base", "n_src", "n_clone", "qty_clone")
+      }) { (s, d) =>
+      val (srcScan, _, srcRows) =
+        SnapshotTable.scanAt(s, src, SnapshotTable.latestVersion(src))
+      val (srcBase, _, baseRows) = SnapshotTable.scanAt(s, src, 1)
+      val (cScan, _, cRows) =
+        SnapshotTable.scanAt(s, dst, SnapshotTable.latestVersion(dst))
+      val nBase = srcBase.count()
+      val nSrc = srcScan.count()
+      val c = cScan.agg(count(lit(1)), sum("qty_u").cast("long"))
+        .collect().head
+      require(nBase == baseRows && nSrc == srcRows &&
+          c.getLong(0) == cRows,
+        "scan/manifest drift across the clone lineages")
+      import s.implicits._
+      Seq((nBase, nSrc, c.getLong(0), c.getLong(1)))
+        .toDF("n_base", "n_src", "n_clone", "qty_clone")
+    }
   }
 
   /** q183 — SCHEMA EVOLUTION BY FIELD ID
@@ -3361,38 +3262,36 @@ object Relational {
     * version's aggregate from raw lineitem, so a forked, leaked, or
     * resurrected column hash-mismatches.
     */
-  val renameDropEvolution = QueryDef("q183_rename_drop",
-    """SELECT
-      |  (SELECT count(*) FROM lineitem WHERE l_linenumber <= 2) AS n_v2,
-      |  (SELECT CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT))
-      |    AS BIGINT) FROM lineitem WHERE l_linenumber <= 2) AS sum_a_v2,
-      |  (SELECT count(*) FROM lineitem WHERE l_linenumber = 2) AS n_b_v2,
-      |  (SELECT CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT))
-      |    AS BIGINT) FROM lineitem WHERE l_linenumber <= 2) AS sum_qc_v3,
-      |  CAST(0 AS BIGINT) AS null_qc_v3,
-      |  (SELECT count(*) FROM lineitem WHERE l_linenumber <= 3) AS n_v5,
-      |  (SELECT CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT))
-      |    AS BIGINT) FROM lineitem WHERE l_linenumber <= 3) AS sum_qc_v5,
-      |  (SELECT count(*) FROM lineitem WHERE l_linenumber <= 4) AS n_v7,
-      |  (SELECT CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT))
-      |    AS BIGINT) FROM lineitem WHERE l_linenumber <= 4) AS sum_qc_v7,
-      |  (SELECT count(*) FROM lineitem WHERE l_linenumber = 4)
-      |    AS notes_nonnull,
-      |  (SELECT count(*) FROM lineitem WHERE l_linenumber <= 6)
-      |    AS n_v10,
-      |  (SELECT CAST(sum(CASE
-      |      WHEN l_linenumber = 5 THEN CAST(floor(l_extendedprice) AS BIGINT)
-      |      WHEN l_linenumber = 6 THEN CAST(floor(l_extendedprice) AS BIGINT)
-      |        + 3000000000
-      |      ELSE 0 END) AS BIGINT) FROM lineitem
-      |    WHERE l_linenumber <= 6) AS sum_score_v10,
-      |  TRUE AS alters_metadata_only, TRUE AS drop_hidden,
-      |  TRUE AS add_metadata_only, TRUE AS widen_metadata_only""".stripMargin
-  ) { (s, d) =>
-    import graft.ops.SnapshotTable
+  val renameDropEvolution: QueryDef = {
     val path = Work.oracleDumpPath("q183_table")
-    clusterLayouts.compute("q183", (_, prev) => {
-      if (prev != d) {
+    QueryDef("q183_rename_drop",
+      """SELECT
+        |  (SELECT count(*) FROM lineitem WHERE l_linenumber <= 2) AS n_v2,
+        |  (SELECT CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT))
+        |    AS BIGINT) FROM lineitem WHERE l_linenumber <= 2) AS sum_a_v2,
+        |  (SELECT count(*) FROM lineitem WHERE l_linenumber = 2) AS n_b_v2,
+        |  (SELECT CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT))
+        |    AS BIGINT) FROM lineitem WHERE l_linenumber <= 2) AS sum_qc_v3,
+        |  CAST(0 AS BIGINT) AS null_qc_v3,
+        |  (SELECT count(*) FROM lineitem WHERE l_linenumber <= 3) AS n_v5,
+        |  (SELECT CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT))
+        |    AS BIGINT) FROM lineitem WHERE l_linenumber <= 3) AS sum_qc_v5,
+        |  (SELECT count(*) FROM lineitem WHERE l_linenumber <= 4) AS n_v7,
+        |  (SELECT CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT))
+        |    AS BIGINT) FROM lineitem WHERE l_linenumber <= 4) AS sum_qc_v7,
+        |  (SELECT count(*) FROM lineitem WHERE l_linenumber = 4)
+        |    AS notes_nonnull,
+        |  (SELECT count(*) FROM lineitem WHERE l_linenumber <= 6)
+        |    AS n_v10,
+        |  (SELECT CAST(sum(CASE
+        |      WHEN l_linenumber = 5 THEN CAST(floor(l_extendedprice) AS BIGINT)
+        |      WHEN l_linenumber = 6 THEN CAST(floor(l_extendedprice) AS BIGINT)
+        |        + 3000000000
+        |      ELSE 0 END) AS BIGINT) FROM lineitem
+        |    WHERE l_linenumber <= 6) AS sum_score_v10,
+        |  TRUE AS alters_metadata_only, TRUE AS drop_hidden,
+        |  TRUE AS add_metadata_only, TRUE AS widen_metadata_only""".stripMargin,
+      setup = { (s, d) =>
         Work.wipe(java.nio.file.Paths.get(path))
         val li = Tables.lineitem(s, d)
         def qc = floor(col("l_quantity") * 100).cast("long")
@@ -3450,93 +3349,92 @@ object Relational {
               (floor(col("l_extendedprice")).cast("long") +
                 3000000000L).as("score")),
           path, numPartitions = 4)
+      }) { (s, d) =>
+      // the per-version scans and aggregates are INDEPENDENT — and a
+      // scanAt CONSTRUCTION is itself a driver job (mergeSchema footer
+      // read), so r21 moves the whole per-version unit (scan + schema
+      // requires + aggregate) into one Future per version instead of
+      // constructing the eight scans serially and only overlapping the
+      // aggregates (the r20 shape). Result values and output ordering
+      // are unchanged; requires rethrow through Await.
+      import scala.concurrent.{Await, Future}
+      import scala.concurrent.duration.Duration
+      import scala.concurrent.ExecutionContext.Implicits.global
+      val fR2 = Future {
+        val (s2, _, _) = SnapshotTable.scanAt(s, path, 2)
+        require(s2.columns.toSeq == Seq("k", "a", "b"),
+          s"v2 schema drifted: ${s2.columns.toSeq}")
+        s2.agg(count(lit(1)), sum("a").cast("long"),
+          count(col("b"))).collect().head
       }
-      d
-    })
-    // the per-version scans and aggregates are INDEPENDENT — and a
-    // scanAt CONSTRUCTION is itself a driver job (mergeSchema footer
-    // read), so r21 moves the whole per-version unit (scan + schema
-    // requires + aggregate) into one Future per version instead of
-    // constructing the eight scans serially and only overlapping the
-    // aggregates (the r20 shape). Result values and output ordering
-    // are unchanged; requires rethrow through Await.
-    import scala.concurrent.{Await, Future}
-    import scala.concurrent.duration.Duration
-    import scala.concurrent.ExecutionContext.Implicits.global
-    val fR2 = Future {
-      val (s2, _, _) = SnapshotTable.scanAt(s, path, 2)
-      require(s2.columns.toSeq == Seq("k", "a", "b"),
-        s"v2 schema drifted: ${s2.columns.toSeq}")
-      s2.agg(count(lit(1)), sum("a").cast("long"),
-        count(col("b"))).collect().head
+      val fR3 = Future {
+        val (s3, _, _) = SnapshotTable.scanAt(s, path, 3)
+        require(s3.columns.toSeq == Seq("k", "qty_c", "b"),
+          s"v3 schema drifted: ${s3.columns.toSeq}")
+        s3.agg(sum("qty_c").cast("long"),
+          sum(when(col("qty_c").isNull, 1L).otherwise(0L)).cast("long"))
+          .collect().head
+      }
+      val fS4 = Future {
+        val (s4, _, _) = SnapshotTable.scanAt(s, path, 4)
+        require(s4.columns.toSeq == Seq("k", "qty_c"),
+          "drop did not hide the column")
+      }
+      val fR5 = Future {
+        val (s5, _, _) = SnapshotTable.scanAt(s, path, 5)
+        s5.agg(count(lit(1)), sum("qty_c").cast("long")).collect().head
+      }
+      val fNote = Future {
+        val (s6, _, _) = SnapshotTable.scanAt(s, path, 6)
+        require(s6.columns.toSeq == Seq("k", "qty_c", "note"),
+          s"ADD COLUMN not visible at v6: ${s6.columns.toSeq}")
+        require(s6.schema("note").dataType
+          == org.apache.spark.sql.types.StringType,
+          "added column must read with its DECLARED type")
+        s6.agg(count(col("note"))).head.getLong(0)
+      }
+      val fR7 = Future {
+        val (s7, _, _) = SnapshotTable.scanAt(s, path, 7)
+        s7.agg(count(lit(1)), sum("qty_c").cast("long"),
+          count(col("note"))).collect().head
+      }
+      // the widened column: INT pages (v8's files) and BIGINT pages
+      // (v10's) serve one BIGINT column; values past the int range
+      // prove the width is real, not a display cast
+      val fS8 = Future {
+        val (s8, _, _) = SnapshotTable.scanAt(s, path, 8)
+        require(s8.schema("score").dataType
+          == org.apache.spark.sql.types.IntegerType,
+          "pre-widen time travel must serve the narrow type")
+      }
+      val fR10 = Future {
+        val (s10, _, _) = SnapshotTable.scanAt(s, path, 10)
+        require(s10.schema("score").dataType
+          == org.apache.spark.sql.types.LongType,
+          "widen did not flip the visible type")
+        s10.agg(count(lit(1)),
+          sum(coalesce(col("score"), lit(0L))).cast("long")).collect().head
+      }
+      Await.result(fS4, Duration.Inf)
+      Await.result(fS8, Duration.Inf)
+      require(Await.result(fNote, Duration.Inf) == 0L,
+        "pre-ADD rows must read the new column as NULL")
+      val r2 = Await.result(fR2, Duration.Inf)
+      val r3 = Await.result(fR3, Duration.Inf)
+      val r5 = Await.result(fR5, Duration.Inf)
+      val r7 = Await.result(fR7, Duration.Inf)
+      val r10 = Await.result(fR10, Duration.Inf)
+      import s.implicits._
+      Seq((r2.getLong(0), r2.getLong(1), r2.getLong(2), r3.getLong(0),
+        r3.getLong(1), r5.getLong(0), r5.getLong(1), r7.getLong(0),
+        r7.getLong(1), r7.getLong(2), r10.getLong(0), r10.getLong(1),
+        true, true, true, true))
+        .toDF("n_v2", "sum_a_v2", "n_b_v2", "sum_qc_v3", "null_qc_v3",
+          "n_v5", "sum_qc_v5", "n_v7", "sum_qc_v7", "notes_nonnull",
+          "n_v10", "sum_score_v10",
+          "alters_metadata_only", "drop_hidden", "add_metadata_only",
+          "widen_metadata_only")
     }
-    val fR3 = Future {
-      val (s3, _, _) = SnapshotTable.scanAt(s, path, 3)
-      require(s3.columns.toSeq == Seq("k", "qty_c", "b"),
-        s"v3 schema drifted: ${s3.columns.toSeq}")
-      s3.agg(sum("qty_c").cast("long"),
-        sum(when(col("qty_c").isNull, 1L).otherwise(0L)).cast("long"))
-        .collect().head
-    }
-    val fS4 = Future {
-      val (s4, _, _) = SnapshotTable.scanAt(s, path, 4)
-      require(s4.columns.toSeq == Seq("k", "qty_c"),
-        "drop did not hide the column")
-    }
-    val fR5 = Future {
-      val (s5, _, _) = SnapshotTable.scanAt(s, path, 5)
-      s5.agg(count(lit(1)), sum("qty_c").cast("long")).collect().head
-    }
-    val fNote = Future {
-      val (s6, _, _) = SnapshotTable.scanAt(s, path, 6)
-      require(s6.columns.toSeq == Seq("k", "qty_c", "note"),
-        s"ADD COLUMN not visible at v6: ${s6.columns.toSeq}")
-      require(s6.schema("note").dataType
-        == org.apache.spark.sql.types.StringType,
-        "added column must read with its DECLARED type")
-      s6.agg(count(col("note"))).head.getLong(0)
-    }
-    val fR7 = Future {
-      val (s7, _, _) = SnapshotTable.scanAt(s, path, 7)
-      s7.agg(count(lit(1)), sum("qty_c").cast("long"),
-        count(col("note"))).collect().head
-    }
-    // the widened column: INT pages (v8's files) and BIGINT pages
-    // (v10's) serve one BIGINT column; values past the int range
-    // prove the width is real, not a display cast
-    val fS8 = Future {
-      val (s8, _, _) = SnapshotTable.scanAt(s, path, 8)
-      require(s8.schema("score").dataType
-        == org.apache.spark.sql.types.IntegerType,
-        "pre-widen time travel must serve the narrow type")
-    }
-    val fR10 = Future {
-      val (s10, _, _) = SnapshotTable.scanAt(s, path, 10)
-      require(s10.schema("score").dataType
-        == org.apache.spark.sql.types.LongType,
-        "widen did not flip the visible type")
-      s10.agg(count(lit(1)),
-        sum(coalesce(col("score"), lit(0L))).cast("long")).collect().head
-    }
-    Await.result(fS4, Duration.Inf)
-    Await.result(fS8, Duration.Inf)
-    require(Await.result(fNote, Duration.Inf) == 0L,
-      "pre-ADD rows must read the new column as NULL")
-    val r2 = Await.result(fR2, Duration.Inf)
-    val r3 = Await.result(fR3, Duration.Inf)
-    val r5 = Await.result(fR5, Duration.Inf)
-    val r7 = Await.result(fR7, Duration.Inf)
-    val r10 = Await.result(fR10, Duration.Inf)
-    import s.implicits._
-    Seq((r2.getLong(0), r2.getLong(1), r2.getLong(2), r3.getLong(0),
-      r3.getLong(1), r5.getLong(0), r5.getLong(1), r7.getLong(0),
-      r7.getLong(1), r7.getLong(2), r10.getLong(0), r10.getLong(1),
-      true, true, true, true))
-      .toDF("n_v2", "sum_a_v2", "n_b_v2", "sum_qc_v3", "null_qc_v3",
-        "n_v5", "sum_qc_v5", "n_v7", "sum_qc_v7", "notes_nonnull",
-        "n_v10", "sum_score_v10",
-        "alters_metadata_only", "drop_hidden", "add_metadata_only",
-        "widen_metadata_only")
   }
 
   /** q168 — BUCKET partitioning point probe: lineitem hashed into 16
@@ -3550,37 +3448,34 @@ object Relational {
     * disagreement would route a key to the wrong bucket and lose its
     * rows — exactly what the hash-compare catches.
     */
-  val bucketPartitionProbe = QueryDef("q168_bucket_partition_probe",
-    """SELECT count(*) AS n,
-      |  CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT)) AS BIGINT)
-      |    AS qty_u,
-      |  count(DISTINCT l_orderkey) AS k_seen,
-      |  TRUE AS files_pruned
-      |FROM lineitem
-      |WHERE l_orderkey IN (1, 7, 34, 39, 70)""".stripMargin) { (s, d) =>
-    import graft.ops.SnapshotTable
-    import graft.ops.SnapshotTable.PartSpec
+  val bucketPartitionProbe: QueryDef = {
     val path = Work.oracleDumpPath("q168_table")
-    clusterLayouts.compute("q168", (_, prev) => {
-      if (prev != d) {
+    QueryDef("q168_bucket_partition_probe",
+      """SELECT count(*) AS n,
+        |  CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT)) AS BIGINT)
+        |    AS qty_u,
+        |  count(DISTINCT l_orderkey) AS k_seen,
+        |  TRUE AS files_pruned
+        |FROM lineitem
+        |WHERE l_orderkey IN (1, 7, 34, 39, 70)""".stripMargin,
+      setup = { (s, d) =>
         Work.wipe(java.nio.file.Paths.get(path))
         SnapshotTable.appendPartitioned(
           Tables.lineitem(s, d).select(
             col("l_orderkey").as("k"),
             floor(col("l_quantity") * 100).cast("long").as("qty_u")),
           path, PartSpec("k", "bucket", 16))
-      }
-      d
-    })
-    val keys = Seq(1L, 7L, 34L, 39L, 70L)
-    val (probe, read, total) =
-      SnapshotTable.scanPartitionKeys(s, path, 1, keys)
-    require(read <= keys.length && read < total,
-      s"bucket pruning failed: read $read of $total files")
-    probe.agg(count(lit(1)).as("n"),
-        sum("qty_u").cast("long").as("qty_u"),
-        count_distinct(col("k")).as("k_seen"))
-      .withColumn("files_pruned", lit(read < total))
+      }) { (s, d) =>
+      val keys = Seq(1L, 7L, 34L, 39L, 70L)
+      val (probe, read, total) =
+        SnapshotTable.scanPartitionKeys(s, path, 1, keys)
+      require(read <= keys.length && read < total,
+        s"bucket pruning failed: read $read of $total files")
+      probe.agg(count(lit(1)).as("n"),
+          sum("qty_u").cast("long").as("qty_u"),
+          count_distinct(col("k")).as("k_seen"))
+        .withColumn("files_pruned", lit(read < total))
+    }
   }
 
   /** q162 — DATA-QUALITY CONSTRAINT SUITE (the Deequ-style validation
@@ -3704,26 +3599,24 @@ object Relational {
     * recomputes everything from raw lineitem — a pruning bug that
     * drops a boundary file changes n/qty and hash-mismatches.
     */
-  val typedStatsPrune = QueryDef("q198_typed_stats_prune",
-    """SELECT
-      |  (SELECT count(*) FROM lineitem
-      |    WHERE CAST(l_shipdate AS DATE) >= DATE '1996-03-15'
-      |      AND CAST(l_shipdate AS DATE) <= DATE '1996-09-15') AS n_date,
-      |  (SELECT CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT))
-      |     AS BIGINT) FROM lineitem
-      |    WHERE CAST(l_shipdate AS DATE) >= DATE '1996-03-15'
-      |      AND CAST(l_shipdate AS DATE) <= DATE '1996-09-15') AS qty_date,
-      |  (SELECT count(*) FROM lineitem
-      |    WHERE strftime(CAST(l_shipdate AS TIMESTAMP), '%Y-%m')
-      |      = '1996-03') AS n_month,
-      |  (SELECT min(CAST(l_shipdate AS DATE)) FROM lineitem) AS d_min,
-      |  (SELECT max(CAST(l_shipdate AS DATE)) FROM lineitem) AS d_max,
-      |  TRUE AS files_pruned, TRUE AS agg_from_manifest""".stripMargin
-  ) { (s, d) =>
-    import graft.ops.SnapshotTable
+  val typedStatsPrune: QueryDef = {
     val path = Work.oracleDumpPath("q198_table")
-    clusterLayouts.compute("q198", (_, prev) => {
-      if (prev != d) {
+    QueryDef("q198_typed_stats_prune",
+      """SELECT
+        |  (SELECT count(*) FROM lineitem
+        |    WHERE CAST(l_shipdate AS DATE) >= DATE '1996-03-15'
+        |      AND CAST(l_shipdate AS DATE) <= DATE '1996-09-15') AS n_date,
+        |  (SELECT CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT))
+        |     AS BIGINT) FROM lineitem
+        |    WHERE CAST(l_shipdate AS DATE) >= DATE '1996-03-15'
+        |      AND CAST(l_shipdate AS DATE) <= DATE '1996-09-15') AS qty_date,
+        |  (SELECT count(*) FROM lineitem
+        |    WHERE strftime(CAST(l_shipdate AS TIMESTAMP), '%Y-%m')
+        |      = '1996-03') AS n_month,
+        |  (SELECT min(CAST(l_shipdate AS DATE)) FROM lineitem) AS d_min,
+        |  (SELECT max(CAST(l_shipdate AS DATE)) FROM lineitem) AS d_max,
+        |  TRUE AS files_pruned, TRUE AS agg_from_manifest""".stripMargin,
+      setup = { (s, d) =>
         Work.wipe(java.nio.file.Paths.get(path))
         SnapshotTable.append(
           Tables.lineitem(s, d).select(
@@ -3734,35 +3627,34 @@ object Relational {
             floor(col("l_quantity") * 100).cast("long").as("qty_u")),
           path, numPartitions = 8, statsCol = Some("ship_day"),
           statsCols = Seq("ship_d", "ship_m"))
-      }
-      d
-    })
-    val t = s.read.format("graft_table").option("path", path).load()
-    val nAll = t.count()
-    val (Array(rd), Seq(Files(p1, t1))) = ScanMetrics.collect(
-      t.filter(col("ship_d").between(
-          to_date(lit("1996-03-15")), to_date(lit("1996-09-15"))))
-        .agg(count(lit(1)).as("n"), sum("qty_u").cast("long").as("q")))
-    require(p1 > 0 && p1 < t1,
-      s"DATE range pruning failed: planned $p1 of $t1 files")
-    val (nMonth, s2 @ Files(p2, t2)) =
-      ScanMetrics.rowCount(t.filter(col("ship_m") === "1996-03"))
-    require(p2 > 0 && p2 < t2,
-      s"STRING equality pruning failed: planned $p2 of $t2 files")
-    require(s2.rowsDelivered < nAll,
-      s"month probe delivered ${s2.rowsDelivered} of " +
-        s"$nAll rows — row-group statistics did not bound the read")
-    val (Array(ag), Seq(s3)) = ScanMetrics.collect(
-      t.agg(min("ship_d").as("d_min"), max("ship_d").as("d_max")))
-    require(s3.manifestAgg,
-      "MIN/MAX over the DATE stats column must serve from the manifest")
-    import s.implicits._
-    // java8API session: DATE collects as java.time.LocalDate
-    Seq((rd.getLong(0), rd.getLong(1), nMonth,
-      ag.getAs[java.time.LocalDate](0), ag.getAs[java.time.LocalDate](1),
-      true, true))
-      .toDF("n_date", "qty_date", "n_month", "d_min", "d_max",
-        "files_pruned", "agg_from_manifest")
+      }) { (s, d) =>
+      val t = s.read.format("graft_table").option("path", path).load()
+      val nAll = t.count()
+      val (Array(rd), Seq(Files(p1, t1))) = ScanMetrics.collect(
+        t.filter(col("ship_d").between(
+            to_date(lit("1996-03-15")), to_date(lit("1996-09-15"))))
+          .agg(count(lit(1)).as("n"), sum("qty_u").cast("long").as("q")))
+      require(p1 > 0 && p1 < t1,
+        s"DATE range pruning failed: planned $p1 of $t1 files")
+      val (nMonth, s2 @ Files(p2, t2)) =
+        ScanMetrics.rowCount(t.filter(col("ship_m") === "1996-03"))
+      require(p2 > 0 && p2 < t2,
+        s"STRING equality pruning failed: planned $p2 of $t2 files")
+      require(s2.rowsDelivered < nAll,
+        s"month probe delivered ${s2.rowsDelivered} of " +
+          s"$nAll rows — row-group statistics did not bound the read")
+      val (Array(ag), Seq(s3)) = ScanMetrics.collect(
+        t.agg(min("ship_d").as("d_min"), max("ship_d").as("d_max")))
+      require(s3.manifestAgg,
+        "MIN/MAX over the DATE stats column must serve from the manifest")
+      import s.implicits._
+      // java8API session: DATE collects as java.time.LocalDate
+      Seq((rd.getLong(0), rd.getLong(1), nMonth,
+        ag.getAs[java.time.LocalDate](0), ag.getAs[java.time.LocalDate](1),
+        true, true))
+        .toDF("n_date", "qty_date", "n_month", "d_min", "d_max",
+          "files_pruned", "agg_from_manifest")
+    }
   }
 
   /** q199 — OPTIMISTIC CONCURRENCY with auto-rebase
@@ -3784,25 +3676,24 @@ object Relational {
     * test is the manifest's create-exclusive commit, which is
     * process-agnostic.)
     */
-  val occRebase = QueryDef("q199_occ_rebase",
-    """SELECT count(*) AS n_after,
-      |  CAST(sum(tp) AS BIGINT) AS tp_after,
-      |  CAST(sum(CASE WHEN touched THEN 1 ELSE 0 END) AS BIGINT)
-      |    AS n_touched,
-      |  TRUE AS rebased
-      |FROM (
-      |  SELECT CAST(floor(o_totalprice * 100) AS BIGINT)
-      |      + CASE WHEN o_orderkey % 1000 = 7 THEN 5 ELSE 0 END AS tp,
-      |    o_orderkey % 1000 = 7 AS touched
-      |  FROM orders
-      |  UNION ALL
-      |  SELECT 55 AS tp, FALSE AS touched FROM orders
-      |  WHERE o_orderkey % 997 = 1
-      |)""".stripMargin) { (s, d) =>
-    import graft.ops.SnapshotTable
+  val occRebase: QueryDef = {
     val path = Work.oracleDumpPath("q199_table")
-    clusterLayouts.compute("q199", (_, prev) => {
-      if (prev != d) {
+    QueryDef("q199_occ_rebase",
+      """SELECT count(*) AS n_after,
+        |  CAST(sum(tp) AS BIGINT) AS tp_after,
+        |  CAST(sum(CASE WHEN touched THEN 1 ELSE 0 END) AS BIGINT)
+        |    AS n_touched,
+        |  TRUE AS rebased
+        |FROM (
+        |  SELECT CAST(floor(o_totalprice * 100) AS BIGINT)
+        |      + CASE WHEN o_orderkey % 1000 = 7 THEN 5 ELSE 0 END AS tp,
+        |    o_orderkey % 1000 = 7 AS touched
+        |  FROM orders
+        |  UNION ALL
+        |  SELECT 55 AS tp, FALSE AS touched FROM orders
+        |  WHERE o_orderkey % 997 = 1
+        |)""".stripMargin,
+      setup = { (s, d) =>
         Work.wipe(java.nio.file.Paths.get(path))
         val base = Tables.orders(s, d).select(
           col("o_orderkey").cast("long").as("k"),
@@ -3845,19 +3736,18 @@ object Relational {
             s"v${res.get().version}")
         require(res.get().rowsInserted == 0L,
           s"every update key exists — ${res.get().rowsInserted} inserts")
-      }
-      d
-    })
-    val (scan, _, _) = SnapshotTable.scanAt(s, path,
-      SnapshotTable.latestVersion(path))
-    val r = scan.agg(count(lit(1)).as("n"),
-        sum("tp").cast("long").as("tp"),
-        sum(when(col("k") % 1000 === 7 && col("k") < 1000000000L, 1L)
-          .otherwise(0L)).cast("long").as("nt"))
-      .collect().head
-    import s.implicits._
-    Seq((r.getLong(0), r.getLong(1), r.getLong(2), true))
-      .toDF("n_after", "tp_after", "n_touched", "rebased")
+      }) { (s, d) =>
+      val (scan, _, _) = SnapshotTable.scanAt(s, path,
+        SnapshotTable.latestVersion(path))
+      val r = scan.agg(count(lit(1)).as("n"),
+          sum("tp").cast("long").as("tp"),
+          sum(when(col("k") % 1000 === 7 && col("k") < 1000000000L, 1L)
+            .otherwise(0L)).cast("long").as("nt"))
+        .collect().head
+      import s.implicits._
+      Seq((r.getLong(0), r.getLong(1), r.getLong(2), true))
+        .toDF("n_after", "tp_after", "n_touched", "rebased")
+    }
   }
 
   /** q200 — ATOMIC CTAS/RTAS through the staging catalog
@@ -3875,24 +3765,20 @@ object Relational {
     * and schema atomically. DuckDB recomputes every aggregate from
     * raw lineitem/orders.
     */
-  val ctasAtomic = QueryDef("q200_ctas",
-    """SELECT
-      |  (SELECT count(*) FROM lineitem) AS n_ctas,
-      |  (SELECT CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT))
-      |     AS BIGINT) FROM lineitem) AS qty_ctas,
-      |  (SELECT count(*) FROM lineitem
-      |    WHERE CAST(l_shipdate AS DATE) >= DATE '1996-03-15'
-      |      AND CAST(l_shipdate AS DATE) <= DATE '1996-09-15') AS n_probe,
-      |  (SELECT count(*) FROM orders) AS n_rtas,
-      |  TRUE AS atomic_abort, TRUE AS files_pruned""".stripMargin
-  ) { (s, d) =>
-    import graft.ops.SnapshotTable
+  val ctasAtomic: QueryDef = {
     val wh = Work.oracleDumpPath("q200_warehouse")
-    s.conf.set("spark.sql.catalog.graft_q200",
-      "graft.source.v2.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft_q200.root", wh)
-    clusterLayouts.compute("q200", (_, prev) => {
-      if (prev != d) {
+    QueryDef("q200_ctas",
+      """SELECT
+        |  (SELECT count(*) FROM lineitem) AS n_ctas,
+        |  (SELECT CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT))
+        |     AS BIGINT) FROM lineitem) AS qty_ctas,
+        |  (SELECT count(*) FROM lineitem
+        |    WHERE CAST(l_shipdate AS DATE) >= DATE '1996-03-15'
+        |      AND CAST(l_shipdate AS DATE) <= DATE '1996-09-15') AS n_probe,
+        |  (SELECT count(*) FROM orders) AS n_rtas,
+        |  TRUE AS atomic_abort, TRUE AS files_pruned""".stripMargin,
+      setup = { (s, d) =>
+        useCatalog(s, "q200", wh)
         Work.wipe(java.nio.file.Paths.get(wh))
         Tables.lineitem(s, d).select(
           expr("CAST(datediff(l_shipdate, DATE '1970-01-01') AS BIGINT)")
@@ -3933,23 +3819,23 @@ object Relational {
           AS SELECT okey, tp FROM q200_orders""")
         require(s.table("graft_q200.q200.o").columns.toSeq
           == Seq("okey", "tp"), "RTAS must swap the schema")
-      }
-      d
-    })
-    val base = s.sql("SELECT count(*) AS n, CAST(sum(qty_u) AS BIGINT)" +
-      " AS q FROM graft_q200.q200.li").collect().head
-    val (nProbe, Files(p1, t1)) = ScanMetrics.rowCount(
-      s.sql("""SELECT * FROM graft_q200.q200.li
-      WHERE ship_d >= DATE '1996-03-15'
-        AND ship_d <= DATE '1996-09-15'"""))
-    require(p1 > 0 && p1 < t1,
-      s"CTAS-born stats did not prune: planned $p1 of $t1 files")
-    val nRtas = s.sql("SELECT count(*) FROM graft_q200.q200.o")
-      .head.getLong(0)
-    import s.implicits._
-    Seq((base.getLong(0), base.getLong(1), nProbe, nRtas, true, true))
-      .toDF("n_ctas", "qty_ctas", "n_probe", "n_rtas",
-        "atomic_abort", "files_pruned")
+      }) { (s, d) =>
+      useCatalog(s, "q200", wh)
+      val base = s.sql("SELECT count(*) AS n, CAST(sum(qty_u) AS BIGINT)" +
+        " AS q FROM graft_q200.q200.li").collect().head
+      val (nProbe, Files(p1, t1)) = ScanMetrics.rowCount(
+        s.sql("""SELECT * FROM graft_q200.q200.li
+        WHERE ship_d >= DATE '1996-03-15'
+          AND ship_d <= DATE '1996-09-15'"""))
+      require(p1 > 0 && p1 < t1,
+        s"CTAS-born stats did not prune: planned $p1 of $t1 files")
+      val nRtas = s.sql("SELECT count(*) FROM graft_q200.q200.o")
+        .head.getLong(0)
+      import s.implicits._
+      Seq((base.getLong(0), base.getLong(1), nProbe, nRtas, true, true))
+        .toDF("n_ctas", "qty_ctas", "n_probe", "n_rtas",
+          "atomic_abort", "files_pruned")
+    }
   }
 
   /** q201 — SEGMENTED MANIFESTS ([[graft.ops.SnapshotTable]] O(Δ)
@@ -3967,24 +3853,22 @@ object Relational {
     * raw lineitem — a drop-list bug that loses or resurrects a file's
     * rows hash-mismatches.
     */
-  val segmentedManifest = QueryDef("q201_segmented_manifest",
-    """SELECT
-      |  (SELECT count(*) FROM lineitem
-      |    WHERE datediff('day', DATE '1970-01-01',
-      |      CAST(l_shipdate AS DATE)) NOT BETWEEN 9131 AND 9495)
-      |    AS n_after,
-      |  (SELECT CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT))
-      |     AS BIGINT) FROM lineitem
-      |    WHERE datediff('day', DATE '1970-01-01',
-      |      CAST(l_shipdate AS DATE)) NOT BETWEEN 9131 AND 9495)
-      |    AS qty_after,
-      |  (SELECT count(*) FROM lineitem) AS n_v7,
-      |  TRUE AS odelta_commits, TRUE AS segments_shared""".stripMargin
-  ) { (s, d) =>
-    import graft.ops.SnapshotTable
+  val segmentedManifest: QueryDef = {
     val path = Work.oracleDumpPath("q201_table")
-    clusterLayouts.compute("q201", (_, prev) => {
-      if (prev != d) {
+    QueryDef("q201_segmented_manifest",
+      """SELECT
+        |  (SELECT count(*) FROM lineitem
+        |    WHERE datediff('day', DATE '1970-01-01',
+        |      CAST(l_shipdate AS DATE)) NOT BETWEEN 9131 AND 9495)
+        |    AS n_after,
+        |  (SELECT CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT))
+        |     AS BIGINT) FROM lineitem
+        |    WHERE datediff('day', DATE '1970-01-01',
+        |      CAST(l_shipdate AS DATE)) NOT BETWEEN 9131 AND 9495)
+        |    AS qty_after,
+        |  (SELECT count(*) FROM lineitem) AS n_v7,
+        |  TRUE AS odelta_commits, TRUE AS segments_shared""".stripMargin,
+      setup = { (s, d) =>
         Work.wipe(java.nio.file.Paths.get(path))
         s.conf.set("spark.graft.manifest.segmentThreshold", "8")
         try {
@@ -4014,20 +3898,19 @@ object Relational {
             "delete must re-reference untouched segments")
         } finally
           s.conf.unset("spark.graft.manifest.segmentThreshold")
-      }
-      d
-    })
-    val (scan, _, _) = SnapshotTable.scanAt(s, path,
-      SnapshotTable.latestVersion(path))
-    val r = scan.agg(count(lit(1)).as("n"),
-      sum("qty_u").cast("long").as("q")).collect().head
-    // v7 (pre-delete) still materializes through the shared segments
-    val (s7, _, _) = SnapshotTable.scanAt(s, path, 7)
-    val n7 = s7.count()
-    import s.implicits._
-    Seq((r.getLong(0), r.getLong(1), n7, true, true))
-      .toDF("n_after", "qty_after", "n_v7", "odelta_commits",
-        "segments_shared")
+      }) { (s, d) =>
+      val (scan, _, _) = SnapshotTable.scanAt(s, path,
+        SnapshotTable.latestVersion(path))
+      val r = scan.agg(count(lit(1)).as("n"),
+        sum("qty_u").cast("long").as("q")).collect().head
+      // v7 (pre-delete) still materializes through the shared segments
+      val (s7, _, _) = SnapshotTable.scanAt(s, path, 7)
+      val n7 = s7.count()
+      import s.implicits._
+      Seq((r.getLong(0), r.getLong(1), n7, true, true))
+        .toDF("n_after", "qty_after", "n_v7", "odelta_commits",
+          "segments_shared")
+    }
   }
 
   /** q202 — TYPED, MULTI-COLUMN hidden partitioning
@@ -4049,50 +3932,47 @@ object Relational {
     * pruning bug that drops a file all change the counts and
     * hash-mismatch.
     */
-  val typedPartitions = QueryDef("q202_typed_partitions",
-    """WITH src AS (
-      |  SELECT l_orderkey * 10 + l_linenumber AS k,
-      |    CAST(l_shipdate AS DATE) AS d0,
-      |    concat('g', CAST(l_orderkey % 5 AS VARCHAR)) AS flag,
-      |    CAST(floor(l_quantity * 100) AS BIGINT) AS qty_u
-      |  FROM lineitem
-      |  WHERE CAST(l_shipdate AS DATE) >= DATE '1996-03-01'
-      |    AND CAST(l_shipdate AS DATE) <= DATE '1996-04-30'
-      |), merged AS (
-      |  SELECT k,
-      |    CASE WHEN k % 97 = 3 THEN DATE '1996-04-20' ELSE d0 END AS d,
-      |    flag, qty_u
-      |  FROM src
-      |), finalt AS (
-      |  SELECT k, d, flag, qty_u FROM merged
-      |  WHERE d <> DATE '1996-03-15'
-      |  UNION ALL
-      |  SELECT * FROM (VALUES
-      |    (CAST(1 AS BIGINT), DATE '1996-03-15', 'g0', CAST(111 AS BIGINT)),
-      |    (CAST(2 AS BIGINT), DATE '1996-03-15', 'g1', CAST(222 AS BIGINT)),
-      |    (CAST(3 AS BIGINT), DATE '1996-03-15', 'g2', CAST(333 AS BIGINT)),
-      |    (CAST(4 AS BIGINT), DATE '1996-03-15', 'g3', CAST(444 AS BIGINT)),
-      |    (CAST(5 AS BIGINT), DATE '1996-03-15', 'g4', CAST(555 AS BIGINT)))
-      |    AS t(k, d, flag, qty_u)
-      |)
-      |SELECT
-      |  (SELECT count(*) FROM finalt) AS n_all,
-      |  (SELECT CAST(sum(qty_u) AS BIGINT) FROM finalt) AS qty_all,
-      |  (SELECT count(*) FROM finalt WHERE d = DATE '1996-03-20')
-      |    AS n_day,
-      |  (SELECT count(*) FROM finalt WHERE flag = 'g1') AS n_flag,
-      |  (SELECT count(*) FROM finalt
-      |    WHERE d >= DATE '1996-04-01' AND flag = 'g2') AS n_both,
-      |  (SELECT count(*) FROM finalt WHERE d = DATE '1996-04-20')
-      |    AS n_moved,
-      |  TRUE AS pruned_date, TRUE AS pruned_bucket""".stripMargin
-  ) { (s, d) =>
+  val typedPartitions: QueryDef = {
     val wh = Work.oracleDumpPath("q202_warehouse")
-    s.conf.set("spark.sql.catalog.graft_q202",
-      "graft.source.v2.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft_q202.root", wh)
-    clusterLayouts.compute("q202", (_, prev) => {
-      if (prev != d) {
+    QueryDef("q202_typed_partitions",
+      """WITH src AS (
+        |  SELECT l_orderkey * 10 + l_linenumber AS k,
+        |    CAST(l_shipdate AS DATE) AS d0,
+        |    concat('g', CAST(l_orderkey % 5 AS VARCHAR)) AS flag,
+        |    CAST(floor(l_quantity * 100) AS BIGINT) AS qty_u
+        |  FROM lineitem
+        |  WHERE CAST(l_shipdate AS DATE) >= DATE '1996-03-01'
+        |    AND CAST(l_shipdate AS DATE) <= DATE '1996-04-30'
+        |), merged AS (
+        |  SELECT k,
+        |    CASE WHEN k % 97 = 3 THEN DATE '1996-04-20' ELSE d0 END AS d,
+        |    flag, qty_u
+        |  FROM src
+        |), finalt AS (
+        |  SELECT k, d, flag, qty_u FROM merged
+        |  WHERE d <> DATE '1996-03-15'
+        |  UNION ALL
+        |  SELECT * FROM (VALUES
+        |    (CAST(1 AS BIGINT), DATE '1996-03-15', 'g0', CAST(111 AS BIGINT)),
+        |    (CAST(2 AS BIGINT), DATE '1996-03-15', 'g1', CAST(222 AS BIGINT)),
+        |    (CAST(3 AS BIGINT), DATE '1996-03-15', 'g2', CAST(333 AS BIGINT)),
+        |    (CAST(4 AS BIGINT), DATE '1996-03-15', 'g3', CAST(444 AS BIGINT)),
+        |    (CAST(5 AS BIGINT), DATE '1996-03-15', 'g4', CAST(555 AS BIGINT)))
+        |    AS t(k, d, flag, qty_u)
+        |)
+        |SELECT
+        |  (SELECT count(*) FROM finalt) AS n_all,
+        |  (SELECT CAST(sum(qty_u) AS BIGINT) FROM finalt) AS qty_all,
+        |  (SELECT count(*) FROM finalt WHERE d = DATE '1996-03-20')
+        |    AS n_day,
+        |  (SELECT count(*) FROM finalt WHERE flag = 'g1') AS n_flag,
+        |  (SELECT count(*) FROM finalt
+        |    WHERE d >= DATE '1996-04-01' AND flag = 'g2') AS n_both,
+        |  (SELECT count(*) FROM finalt WHERE d = DATE '1996-04-20')
+        |    AS n_moved,
+        |  TRUE AS pruned_date, TRUE AS pruned_bucket""".stripMargin,
+      setup = { (s, d) =>
+        useCatalog(s, "q202", wh)
         Work.wipe(java.nio.file.Paths.get(wh))
         Tables.lineitem(s, d).createOrReplaceTempView("q202_lineitem")
         s.sql("""CREATE TABLE graft_q202.q202.li
@@ -4124,40 +4004,40 @@ object Relational {
           .select(col("k"), to_date(col("ds")).as("d"), col("flag"),
             col("qty_u"))
           .writeTo("graft_q202.q202.li").overwritePartitions()
-      }
-      d
-    })
-    val t = s.table("graft_q202.q202.li")
-    val all = t.agg(count(lit(1)).as("n"),
-      sum("qty_u").cast("long").as("q")).collect().head
-    def probe(where: String) =
-      ScanMetrics.rowCount(s.sql(s"SELECT * FROM graft_q202.q202.li WHERE $where"))
-    val (nDay, Files(p1, t1)) = probe("d = DATE '1996-03-20'")
-    require(p1 < t1,
-      s"days() pruning failed: planned $p1 of $t1 files")
-    val (nFlag, Files(p2, t2)) = probe("flag = 'g1'")
-    require(p2 > 0 && p2 < t2,
-      s"bucket(flag) pruning failed: planned $p2 of $t2 files")
-    val (nBoth, Files(p3, _)) =
-      probe("d >= DATE '1996-04-01' AND flag = 'g2'")
-    require(p3 <= p2, s"combined two-dimension pruning kept $p3 files")
-    val nMoved = s.sql("""SELECT count(*) FROM graft_q202.q202.li
-      WHERE d = DATE '1996-04-20'""").head.getLong(0)
-    // SHOW PARTITIONS-style typed rollup: one row per (day × bucket)
-    // tuple with per-tuple counts — operators read skew here before
-    // choosing bucket counts; it must reconcile with the table
-    val parts = s.sql("""SELECT partition_key, n_files, rows
-      FROM graft_q202.q202.li.partitions""").collect()
-    require(parts.length > 1 && parts.forall(_.getString(0) != null),
-      "typed partitions rollup missing tuples")
-    require(parts.map(_.getLong(2)).sum == all.getLong(0),
-      s"rollup rows ${parts.map(_.getLong(2)).sum} != table " +
-        s"${all.getLong(0)}")
-    import s.implicits._
-    Seq((all.getLong(0), all.getLong(1), nDay, nFlag, nBoth, nMoved,
-      true, true))
-      .toDF("n_all", "qty_all", "n_day", "n_flag", "n_both", "n_moved",
-        "pruned_date", "pruned_bucket")
+      }) { (s, d) =>
+      useCatalog(s, "q202", wh)
+      val t = s.table("graft_q202.q202.li")
+      val all = t.agg(count(lit(1)).as("n"),
+        sum("qty_u").cast("long").as("q")).collect().head
+      def probe(where: String) =
+        ScanMetrics.rowCount(s.sql(s"SELECT * FROM graft_q202.q202.li WHERE $where"))
+      val (nDay, Files(p1, t1)) = probe("d = DATE '1996-03-20'")
+      require(p1 < t1,
+        s"days() pruning failed: planned $p1 of $t1 files")
+      val (nFlag, Files(p2, t2)) = probe("flag = 'g1'")
+      require(p2 > 0 && p2 < t2,
+        s"bucket(flag) pruning failed: planned $p2 of $t2 files")
+      val (nBoth, Files(p3, _)) =
+        probe("d >= DATE '1996-04-01' AND flag = 'g2'")
+      require(p3 <= p2, s"combined two-dimension pruning kept $p3 files")
+      val nMoved = s.sql("""SELECT count(*) FROM graft_q202.q202.li
+        WHERE d = DATE '1996-04-20'""").head.getLong(0)
+      // SHOW PARTITIONS-style typed rollup: one row per (day × bucket)
+      // tuple with per-tuple counts — operators read skew here before
+      // choosing bucket counts; it must reconcile with the table
+      val parts = s.sql("""SELECT partition_key, n_files, rows
+        FROM graft_q202.q202.li.partitions""").collect()
+      require(parts.length > 1 && parts.forall(_.getString(0) != null),
+        "typed partitions rollup missing tuples")
+      require(parts.map(_.getLong(2)).sum == all.getLong(0),
+        s"rollup rows ${parts.map(_.getLong(2)).sum} != table " +
+          s"${all.getLong(0)}")
+      import s.implicits._
+      Seq((all.getLong(0), all.getLong(1), nDay, nFlag, nBoth, nMoved,
+        true, true))
+        .toDF("n_all", "qty_all", "n_day", "n_flag", "n_both", "n_moved",
+          "pruned_date", "pruned_bucket")
+    }
   }
 
   /** q203 — MULTI-COLUMN bloom indexes on the snapshot table: the
@@ -4174,30 +4054,28 @@ object Relational {
     * aggregates from raw lineitem — a bloom false negative (a
     * dropped file) loses rows and hash-mismatches.
     */
-  val multiBloom = QueryDef("q203_multi_bloom",
-    """SELECT
-      |  (SELECT count(*) FROM lineitem
-      |    WHERE l_orderkey IN (1, 2, 3)) AS n_ok,
-      |  (SELECT CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT))
-      |     AS BIGINT) FROM lineitem
-      |    WHERE l_orderkey IN (1, 2, 3)) AS qty_ok,
-      |  (SELECT count(*) FROM lineitem
-      |    WHERE l_orderkey * 1000 + l_linenumber IN (
-      |      (SELECT min(l_orderkey * 1000 + l_linenumber) FROM lineitem),
-      |      (SELECT max(l_orderkey * 1000 + l_linenumber) FROM lineitem)))
-      |    AS n_luid,
-      |  (SELECT CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT))
-      |     AS BIGINT) FROM lineitem
-      |    WHERE l_orderkey * 1000 + l_linenumber IN (
-      |      (SELECT min(l_orderkey * 1000 + l_linenumber) FROM lineitem),
-      |      (SELECT max(l_orderkey * 1000 + l_linenumber) FROM lineitem)))
-      |    AS qty_luid,
-      |  TRUE AS pruned_okey, TRUE AS pruned_luid""".stripMargin
-  ) { (s, d) =>
-    import graft.ops.SnapshotTable
+  val multiBloom: QueryDef = {
     val path = Work.oracleDumpPath("q203_table")
-    clusterLayouts.compute("q203", (_, prev) => {
-      if (prev != d) {
+    QueryDef("q203_multi_bloom",
+      """SELECT
+        |  (SELECT count(*) FROM lineitem
+        |    WHERE l_orderkey IN (1, 2, 3)) AS n_ok,
+        |  (SELECT CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT))
+        |     AS BIGINT) FROM lineitem
+        |    WHERE l_orderkey IN (1, 2, 3)) AS qty_ok,
+        |  (SELECT count(*) FROM lineitem
+        |    WHERE l_orderkey * 1000 + l_linenumber IN (
+        |      (SELECT min(l_orderkey * 1000 + l_linenumber) FROM lineitem),
+        |      (SELECT max(l_orderkey * 1000 + l_linenumber) FROM lineitem)))
+        |    AS n_luid,
+        |  (SELECT CAST(sum(CAST(floor(l_quantity * 100) AS BIGINT))
+        |     AS BIGINT) FROM lineitem
+        |    WHERE l_orderkey * 1000 + l_linenumber IN (
+        |      (SELECT min(l_orderkey * 1000 + l_linenumber) FROM lineitem),
+        |      (SELECT max(l_orderkey * 1000 + l_linenumber) FROM lineitem)))
+        |    AS qty_luid,
+        |  TRUE AS pruned_okey, TRUE AS pruned_luid""".stripMargin,
+      setup = { (s, d) =>
         Work.wipe(java.nio.file.Paths.get(path))
         SnapshotTable.append(
           Tables.lineitem(s, d).select(
@@ -4209,33 +4087,32 @@ object Relational {
             floor(col("l_quantity") * 100).cast("long").as("qty_u")),
           path, numPartitions = 16, statsCol = Some("ship_day"),
           bloomCol = Some("okey,luid"))
-      }
-      d
-    })
-    val ver = SnapshotTable.readVersion(s, path,
-      SnapshotTable.latestVersion(path))
-    require(ver.bloomConfs.map(_.col) == Seq("okey", "luid"),
-      s"expected two bloom indexes, manifest has ${ver.bloomConfs}")
-    val t = s.read.format("graft_table").option("path", path).load()
-    val (Array(ok), Seq(Files(p1, t1))) = ScanMetrics.collect(
-      t.filter(col("okey").isin(1L, 2L, 3L))
-        .agg(count(lit(1)).as("n"), sum("qty_u").cast("long").as("q")))
-    require(p1 > 0 && p1 < t1,
-      s"okey bloom did not prune: planned $p1 of $t1 files")
-    // probe the domain's extreme luids (data-derived — linenumbers
-    // per order are generator-arbitrary, so fixed keys are fragile):
-    // two exact keys land in ≤2 files however the dates scatter
-    val mm = t.agg(min("luid"), max("luid")).collect().head
-    val (Array(lu), Seq(Files(p2, t2))) = ScanMetrics.collect(
-      t.filter(col("luid").isin(mm.getLong(0), mm.getLong(1)))
-        .agg(count(lit(1)).as("n"), sum("qty_u").cast("long").as("q")))
-    require(p2 > 0 && p2 < t2,
-      s"luid bloom did not prune: planned $p2 of $t2 files")
-    import s.implicits._
-    Seq((ok.getLong(0), ok.getLong(1), lu.getLong(0), lu.getLong(1),
-      true, true))
-      .toDF("n_ok", "qty_ok", "n_luid", "qty_luid",
-        "pruned_okey", "pruned_luid")
+      }) { (s, d) =>
+      val ver = SnapshotTable.readVersion(s, path,
+        SnapshotTable.latestVersion(path))
+      require(ver.bloomConfs.map(_.col) == Seq("okey", "luid"),
+        s"expected two bloom indexes, manifest has ${ver.bloomConfs}")
+      val t = s.read.format("graft_table").option("path", path).load()
+      val (Array(ok), Seq(Files(p1, t1))) = ScanMetrics.collect(
+        t.filter(col("okey").isin(1L, 2L, 3L))
+          .agg(count(lit(1)).as("n"), sum("qty_u").cast("long").as("q")))
+      require(p1 > 0 && p1 < t1,
+        s"okey bloom did not prune: planned $p1 of $t1 files")
+      // probe the domain's extreme luids (data-derived — linenumbers
+      // per order are generator-arbitrary, so fixed keys are fragile):
+      // two exact keys land in ≤2 files however the dates scatter
+      val mm = t.agg(min("luid"), max("luid")).collect().head
+      val (Array(lu), Seq(Files(p2, t2))) = ScanMetrics.collect(
+        t.filter(col("luid").isin(mm.getLong(0), mm.getLong(1)))
+          .agg(count(lit(1)).as("n"), sum("qty_u").cast("long").as("q")))
+      require(p2 > 0 && p2 < t2,
+        s"luid bloom did not prune: planned $p2 of $t2 files")
+      import s.implicits._
+      Seq((ok.getLong(0), ok.getLong(1), lu.getLong(0), lu.getLong(1),
+        true, true))
+        .toDF("n_ok", "qty_ok", "n_luid", "qty_luid",
+          "pruned_okey", "pruned_luid")
+    }
   }
 
   /** q204 — TYPED (STRING) bloom keys: the per-file bloom index on a
@@ -4255,22 +4132,20 @@ object Relational {
     * doc_id probe (url is injective in doc_id) — a bloom false
     * negative loses a row and hash-mismatches.
     */
-  val stringBloom = QueryDef("q204_string_bloom",
-    """SELECT
-      |  (SELECT count(*) FROM documents
-      |    WHERE doc_id IN ((SELECT min(doc_id) FROM documents),
-      |                     (SELECT max(doc_id) FROM documents)))
-      |    AS n_hit,
-      |  (SELECT CAST(sum(n_chars) AS BIGINT) FROM documents
-      |    WHERE doc_id IN ((SELECT min(doc_id) FROM documents),
-      |                     (SELECT max(doc_id) FROM documents)))
-      |    AS sum_chars,
-      |  TRUE AS pruned_url""".stripMargin
-  ) { (s, d) =>
-    import graft.ops.SnapshotTable
+  val stringBloom: QueryDef = {
     val path = Work.oracleDumpPath("q204_table")
-    clusterLayouts.compute("q204", (_, prev) => {
-      if (prev != d) {
+    QueryDef("q204_string_bloom",
+      """SELECT
+        |  (SELECT count(*) FROM documents
+        |    WHERE doc_id IN ((SELECT min(doc_id) FROM documents),
+        |                     (SELECT max(doc_id) FROM documents)))
+        |    AS n_hit,
+        |  (SELECT CAST(sum(n_chars) AS BIGINT) FROM documents
+        |    WHERE doc_id IN ((SELECT min(doc_id) FROM documents),
+        |                     (SELECT max(doc_id) FROM documents)))
+        |    AS sum_chars,
+        |  TRUE AS pruned_url""".stripMargin,
+      setup = { (s, d) =>
         Work.wipe(java.nio.file.Paths.get(path))
         SnapshotTable.append(
           Tables.documents(s, d).select(
@@ -4280,22 +4155,21 @@ object Relational {
             col("n_chars")),
           path, numPartitions = 8, statsCol = Some("doc_id"),
           bloomCol = Some("url"))
-      }
-      d
-    })
-    val t = s.read.format("graft_table").option("path", path).load()
-    import s.implicits._
-    val mm = t.agg(min("doc_id"), max("doc_id")).collect().head
-    val urls = t.filter(col("doc_id").isin(mm.getLong(0), mm.getLong(1)))
-      .select("url").as[String].collect().toSeq.sorted
-    val (Array(hit), Seq(Files(p, tot))) = ScanMetrics.collect(
-      t.filter(col("url").isin(urls: _*))
-        .agg(count(lit(1)).as("n"),
-          sum("n_chars").cast("long").as("c")))
-    require(p > 0 && p < tot,
-      s"string bloom did not prune: planned $p of $tot files")
-    Seq((hit.getLong(0), hit.getLong(1), true))
-      .toDF("n_hit", "sum_chars", "pruned_url")
+      }) { (s, d) =>
+      val t = s.read.format("graft_table").option("path", path).load()
+      import s.implicits._
+      val mm = t.agg(min("doc_id"), max("doc_id")).collect().head
+      val urls = t.filter(col("doc_id").isin(mm.getLong(0), mm.getLong(1)))
+        .select("url").as[String].collect().toSeq.sorted
+      val (Array(hit), Seq(Files(p, tot))) = ScanMetrics.collect(
+        t.filter(col("url").isin(urls: _*))
+          .agg(count(lit(1)).as("n"),
+            sum("n_chars").cast("long").as("c")))
+      require(p > 0 && p < tot,
+        s"string bloom did not prune: planned $p of $tot files")
+      Seq((hit.getLong(0), hit.getLong(1), true))
+        .toDF("n_hit", "sum_chars", "pruned_url")
+    }
   }
 
   /** q205 — METADATA-ONLY typed partition DELETE, oracle-gated (the
@@ -4312,33 +4186,29 @@ object Relational {
     * fast path) or an under-deleted file changes the counts and
     * hash-mismatches.
     */
-  val metaDelete = QueryDef("q205_meta_delete",
-    """WITH src AS (
-      |  SELECT l_orderkey * 10 + l_linenumber AS k,
-      |    CAST(l_shipdate AS DATE) AS d,
-      |    concat('g', CAST(l_orderkey % 4 AS VARCHAR)) AS g,
-      |    CAST(floor(l_quantity * 100) AS BIGINT) AS qty_u
-      |  FROM lineitem
-      |  WHERE CAST(l_shipdate AS DATE) >= DATE '1995-06-01'
-      |    AND CAST(l_shipdate AS DATE) <= DATE '1995-06-30'
-      |), kept AS (
-      |  SELECT * FROM src
-      |  WHERE d NOT IN (DATE '1995-06-10', DATE '1995-06-15')
-      |)
-      |SELECT
-      |  (SELECT count(*) FROM kept) AS n_after,
-      |  (SELECT CAST(sum(qty_u) AS BIGINT) FROM kept) AS qty_after,
-      |  (SELECT count(DISTINCT d) FROM kept) AS n_days,
-      |  TRUE AS meta_only""".stripMargin
-  ) { (s, d) =>
-    import graft.ops.SnapshotTable
+  val metaDelete: QueryDef = {
     val wh = Work.oracleDumpPath("q205_warehouse")
-    s.conf.set("spark.sql.catalog.graft_q205",
-      "graft.source.v2.GraftCatalog")
-    s.conf.set("spark.sql.catalog.graft_q205.root", wh)
-    val p = s"$wh/q205/li"
-    clusterLayouts.compute("q205", (_, prev) => {
-      if (prev != d) {
+    QueryDef("q205_meta_delete",
+      """WITH src AS (
+        |  SELECT l_orderkey * 10 + l_linenumber AS k,
+        |    CAST(l_shipdate AS DATE) AS d,
+        |    concat('g', CAST(l_orderkey % 4 AS VARCHAR)) AS g,
+        |    CAST(floor(l_quantity * 100) AS BIGINT) AS qty_u
+        |  FROM lineitem
+        |  WHERE CAST(l_shipdate AS DATE) >= DATE '1995-06-01'
+        |    AND CAST(l_shipdate AS DATE) <= DATE '1995-06-30'
+        |), kept AS (
+        |  SELECT * FROM src
+        |  WHERE d NOT IN (DATE '1995-06-10', DATE '1995-06-15')
+        |)
+        |SELECT
+        |  (SELECT count(*) FROM kept) AS n_after,
+        |  (SELECT CAST(sum(qty_u) AS BIGINT) FROM kept) AS qty_after,
+        |  (SELECT count(DISTINCT d) FROM kept) AS n_days,
+        |  TRUE AS meta_only""".stripMargin,
+      setup = { (s, d) =>
+        useCatalog(s, "q205", wh)
+        val p = s"$wh/q205/li"
         Work.wipe(java.nio.file.Paths.get(wh))
         Tables.lineitem(s, d).createOrReplaceTempView("q205_lineitem")
         s.sql("""CREATE TABLE graft_q205.q205.li
@@ -4365,16 +4235,16 @@ object Relational {
             "regressed to a rewrite")
         require(v2.files.length < v1.files.length,
           s"delete dropped no files (${v1.files.length} before/after)")
-      }
-      d
-    })
-    val r = s.sql("""SELECT count(*) AS n,
-        CAST(sum(qty_u) AS BIGINT) AS q,
-        count(DISTINCT d) AS nd
-      FROM graft_q205.q205.li""").collect().head
-    import s.implicits._
-    Seq((r.getLong(0), r.getLong(1), r.getLong(2), true))
-      .toDF("n_after", "qty_after", "n_days", "meta_only")
+      }) { (s, d) =>
+      useCatalog(s, "q205", wh)
+      val r = s.sql("""SELECT count(*) AS n,
+          CAST(sum(qty_u) AS BIGINT) AS q,
+          count(DISTINCT d) AS nd
+        FROM graft_q205.q205.li""").collect().head
+      import s.implicits._
+      Seq((r.getLong(0), r.getLong(1), r.getLong(2), true))
+        .toDF("n_after", "qty_after", "n_days", "meta_only")
+    }
   }
 
   /** q206 — TYPED `compactPartitioned`, oracle-gated (spec-only in
@@ -4389,29 +4259,26 @@ object Relational {
     * lost, duplicated, or moved across a tuple by the rewrite
     * hash-mismatches.
     */
-  val typedCompaction = QueryDef("q206_typed_compaction",
-    """WITH src AS (
-      |  SELECT l_orderkey * 10 + l_linenumber AS k,
-      |    CAST(l_shipdate AS DATE) AS d,
-      |    concat('g', CAST(l_orderkey % 3 AS VARCHAR)) AS g,
-      |    CAST(floor(l_quantity * 100) AS BIGINT) AS qty_u
-      |  FROM lineitem
-      |  WHERE CAST(l_shipdate AS DATE) >= DATE '1995-02-01'
-      |    AND CAST(l_shipdate AS DATE) <= DATE '1995-02-14'
-      |)
-      |SELECT
-      |  (SELECT count(*) FROM src) AS n_all,
-      |  (SELECT CAST(sum(qty_u) AS BIGINT) FROM src) AS qty_all,
-      |  (SELECT count(*) FROM src WHERE g = 'g1') AS n_g1,
-      |  (SELECT CAST(sum(qty_u) AS BIGINT) FROM src WHERE g = 'g1')
-      |    AS qty_g1,
-      |  TRUE AS compacted, TRUE AS pruned""".stripMargin
-  ) { (s, d) =>
-    import graft.ops.SnapshotTable
-    import graft.ops.SnapshotTable.{PartField, PartSpec}
+  val typedCompaction: QueryDef = {
     val p = Work.oracleDumpPath("q206_table")
-    clusterLayouts.compute("q206", (_, prev) => {
-      if (prev != d) {
+    QueryDef("q206_typed_compaction",
+      """WITH src AS (
+        |  SELECT l_orderkey * 10 + l_linenumber AS k,
+        |    CAST(l_shipdate AS DATE) AS d,
+        |    concat('g', CAST(l_orderkey % 3 AS VARCHAR)) AS g,
+        |    CAST(floor(l_quantity * 100) AS BIGINT) AS qty_u
+        |  FROM lineitem
+        |  WHERE CAST(l_shipdate AS DATE) >= DATE '1995-02-01'
+        |    AND CAST(l_shipdate AS DATE) <= DATE '1995-02-14'
+        |)
+        |SELECT
+        |  (SELECT count(*) FROM src) AS n_all,
+        |  (SELECT CAST(sum(qty_u) AS BIGINT) FROM src) AS qty_all,
+        |  (SELECT count(*) FROM src WHERE g = 'g1') AS n_g1,
+        |  (SELECT CAST(sum(qty_u) AS BIGINT) FROM src WHERE g = 'g1')
+        |    AS qty_g1,
+        |  TRUE AS compacted, TRUE AS pruned""".stripMargin,
+      setup = { (s, d) =>
         Work.wipe(java.nio.file.Paths.get(p))
         val spec = PartSpec(Seq(
           PartField("d", "days", 0L, "date"),
@@ -4442,21 +4309,20 @@ object Relational {
         val after = SnapshotTable.readVersion(s, p, r.version)
         require(after.op == "OPTIMIZE",
           s"expected an OPTIMIZE commit, got ${after.op}")
-      }
-      d
-    })
-    val t = s.read.format("graft_table").option("path", p).load()
-    val all = t.agg(count(lit(1)).as("n"),
-      sum("qty_u").cast("long").as("q")).collect().head
-    val (Array(g1), Seq(Files(pl, tot))) = ScanMetrics.collect(
-      t.filter(col("g") === "g1")
-        .agg(count(lit(1)).as("n"), sum("qty_u").cast("long").as("q")))
-    require(pl > 0 && pl < tot,
-      s"identity pruning lost through typed compaction: $pl of $tot")
-    import s.implicits._
-    Seq((all.getLong(0), all.getLong(1), g1.getLong(0), g1.getLong(1),
-      true, true))
-      .toDF("n_all", "qty_all", "n_g1", "qty_g1", "compacted", "pruned")
+      }) { (s, d) =>
+      val t = s.read.format("graft_table").option("path", p).load()
+      val all = t.agg(count(lit(1)).as("n"),
+        sum("qty_u").cast("long").as("q")).collect().head
+      val (Array(g1), Seq(Files(pl, tot))) = ScanMetrics.collect(
+        t.filter(col("g") === "g1")
+          .agg(count(lit(1)).as("n"), sum("qty_u").cast("long").as("q")))
+      require(pl > 0 && pl < tot,
+        s"identity pruning lost through typed compaction: $pl of $tot")
+      import s.implicits._
+      Seq((all.getLong(0), all.getLong(1), g1.getLong(0), g1.getLong(1),
+        true, true))
+        .toDF("n_all", "qty_all", "n_g1", "qty_g1", "compacted", "pruned")
+    }
   }
 
   /** q207 — typed-TUPLE storage-partitioned join, oracle-gated
@@ -4471,30 +4337,27 @@ object Relational {
     * file grouped under the wrong tuple (rows silently missing from
     * the join) hash-mismatches.
     */
-  val typedSpj = QueryDef("q207_typed_spj",
-    """WITH c AS (
-      |  SELECT concat('g', CAST(c_nationkey % 5 AS VARCHAR)) AS g,
-      |    CAST(c_custkey % 3 AS BIGINT) AS m,
-      |    CAST(floor(c_acctbal * 100) AS BIGINT) AS c_acct
-      |  FROM customer
-      |), s AS (
-      |  SELECT concat('g', CAST(s_nationkey % 5 AS VARCHAR)) AS g,
-      |    CAST(s_suppkey % 3 AS BIGINT) AS m,
-      |    CAST(floor(s_acctbal * 100) AS BIGINT) AS s_acct
-      |  FROM supplier
-      |)
-      |SELECT count(*) AS n,
-      |  CAST(sum(c.c_acct) AS BIGINT) AS c_sum,
-      |  CAST(sum(s.s_acct) AS BIGINT) AS s_sum,
-      |  TRUE AS no_shuffle
-      |FROM c JOIN s ON c.g = s.g AND c.m = s.m""".stripMargin
-  ) { (s, d) =>
-    import graft.ops.SnapshotTable
-    import graft.ops.SnapshotTable.{PartField, PartSpec}
+  val typedSpj: QueryDef = {
     val p1 = Work.oracleDumpPath("q207_cust")
     val p2 = Work.oracleDumpPath("q207_supp")
-    clusterLayouts.compute("q207", (_, prev) => {
-      if (prev != d) {
+    QueryDef("q207_typed_spj",
+      """WITH c AS (
+        |  SELECT concat('g', CAST(c_nationkey % 5 AS VARCHAR)) AS g,
+        |    CAST(c_custkey % 3 AS BIGINT) AS m,
+        |    CAST(floor(c_acctbal * 100) AS BIGINT) AS c_acct
+        |  FROM customer
+        |), s AS (
+        |  SELECT concat('g', CAST(s_nationkey % 5 AS VARCHAR)) AS g,
+        |    CAST(s_suppkey % 3 AS BIGINT) AS m,
+        |    CAST(floor(s_acctbal * 100) AS BIGINT) AS s_acct
+        |  FROM supplier
+        |)
+        |SELECT count(*) AS n,
+        |  CAST(sum(c.c_acct) AS BIGINT) AS c_sum,
+        |  CAST(sum(s.s_acct) AS BIGINT) AS s_sum,
+        |  TRUE AS no_shuffle
+        |FROM c JOIN s ON c.g = s.g AND c.m = s.m""".stripMargin,
+      setup = { (s, d) =>
         Work.wipe(java.nio.file.Paths.get(p1))
         Work.wipe(java.nio.file.Paths.get(p2))
         val spec = PartSpec(Seq(
@@ -4514,31 +4377,30 @@ object Relational {
             (col("s_suppkey") % 3).cast("long").as("m"),
             floor(col("s_acctbal") * 100).cast("long").as("s_acct")),
           p2, spec)
+      }) { (s, d) =>
+      val t1 = s.read.format("graft_table").option("path", p1).load()
+      val t2 = s.read.format("graft_table").option("path", p2).load()
+      val keys = Seq(
+        "spark.sql.sources.v2.bucketing.enabled" -> "true",
+        "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1")
+      val prior = keys.map { case (k, _) => k -> s.conf.getOption(k) }
+      keys.foreach { case (k, v) => s.conf.set(k, v) }
+      val (r, plan) = try {
+        val j = t1.join(t2, Seq("g", "m"))
+          .agg(count(lit(1)).as("n"), sum("c_acct").as("c_sum"),
+            sum("s_acct").as("s_sum"))
+        (j.collect().head, j.queryExecution.executedPlan.toString)
+      } finally prior.foreach {
+        case (k, Some(v)) => s.conf.set(k, v)
+        case (k, None) => s.conf.unset(k)
       }
-      d
-    })
-    val t1 = s.read.format("graft_table").option("path", p1).load()
-    val t2 = s.read.format("graft_table").option("path", p2).load()
-    val keys = Seq(
-      "spark.sql.sources.v2.bucketing.enabled" -> "true",
-      "spark.sql.sources.v2.bucketing.pushPartValues.enabled" -> "true",
-      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
-    val prior = keys.map { case (k, _) => k -> s.conf.getOption(k) }
-    keys.foreach { case (k, v) => s.conf.set(k, v) }
-    val (r, plan) = try {
-      val j = t1.join(t2, Seq("g", "m"))
-        .agg(count(lit(1)).as("n"), sum("c_acct").as("c_sum"),
-          sum("s_acct").as("s_sum"))
-      (j.collect().head, j.queryExecution.executedPlan.toString)
-    } finally prior.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
+      require(!plan.contains("Exchange hashpartitioning"),
+        s"typed-tuple SPJ still shuffles:\n${plan.take(1500)}")
+      import s.implicits._
+      Seq((r.getLong(0), r.getLong(1), r.getLong(2), true))
+        .toDF("n", "c_sum", "s_sum", "no_shuffle")
     }
-    require(!plan.contains("Exchange hashpartitioning"),
-      s"typed-tuple SPJ still shuffles:\n${plan.take(1500)}")
-    import s.implicits._
-    Seq((r.getLong(0), r.getLong(1), r.getLong(2), true))
-      .toDF("n", "c_sum", "s_sum", "no_shuffle")
   }
 
   /** q208 — PARTITION-AWARE OPTIMIZE ZORDER
@@ -4557,31 +4419,28 @@ object Relational {
     * duplicated, or moved across a tuple by the rewrite, or a wrong
     * corner interval, hash-mismatches.
     */
-  val partitionedZorder = QueryDef("q208_partitioned_zorder",
-    """WITH pts AS (
-      |  SELECT DATE '1996-01-01' + CAST(l_suppkey % 4 AS INT) AS d,
-      |    concat('g', CAST(l_orderkey % 2 AS VARCHAR)) AS g,
-      |    l_partkey % 256 AS px, l_orderkey % 256 AS py,
-      |    CAST(floor(l_quantity * 100) AS BIGINT) AS qty_u
-      |  FROM lineitem)
-      |SELECT
-      |  (SELECT count(*) FROM pts) AS n_all,
-      |  (SELECT count(*) FROM pts WHERE d = DATE '1996-01-02') AS n_day,
-      |  (SELECT count(*) FROM pts WHERE px <= 63 AND py <= 63)
-      |    AS n_rect,
-      |  (SELECT CAST(sum(qty_u) AS BIGINT) FROM pts
-      |    WHERE px <= 63 AND py <= 63) AS qty_rect,
-      |  (SELECT count(*) FROM pts
-      |    WHERE d = DATE '1996-01-02' AND px <= 63 AND py <= 63)
-      |    AS n_both,
-      |  TRUE AS pruned_day, TRUE AS pruned_curve,
-      |  TRUE AS feed_empty""".stripMargin
-  ) { (s, d) =>
-    import graft.ops.SnapshotTable
-    import graft.ops.SnapshotTable.{PartField, PartSpec}
+  val partitionedZorder: QueryDef = {
     val path = Work.oracleDumpPath("q208_table")
-    clusterLayouts.compute("q208", (_, prev) => {
-      if (prev != d) {
+    QueryDef("q208_partitioned_zorder",
+      """WITH pts AS (
+        |  SELECT DATE '1996-01-01' + CAST(l_suppkey % 4 AS INT) AS d,
+        |    concat('g', CAST(l_orderkey % 2 AS VARCHAR)) AS g,
+        |    l_partkey % 256 AS px, l_orderkey % 256 AS py,
+        |    CAST(floor(l_quantity * 100) AS BIGINT) AS qty_u
+        |  FROM lineitem)
+        |SELECT
+        |  (SELECT count(*) FROM pts) AS n_all,
+        |  (SELECT count(*) FROM pts WHERE d = DATE '1996-01-02') AS n_day,
+        |  (SELECT count(*) FROM pts WHERE px <= 63 AND py <= 63)
+        |    AS n_rect,
+        |  (SELECT CAST(sum(qty_u) AS BIGINT) FROM pts
+        |    WHERE px <= 63 AND py <= 63) AS qty_rect,
+        |  (SELECT count(*) FROM pts
+        |    WHERE d = DATE '1996-01-02' AND px <= 63 AND py <= 63)
+        |    AS n_both,
+        |  TRUE AS pruned_day, TRUE AS pruned_curve,
+        |  TRUE AS feed_empty""".stripMargin,
+      setup = { (s, d) =>
         Work.wipe(java.nio.file.Paths.get(path))
         val spec = PartSpec(Seq(
           PartField("d", "days", 0L, "date"),
@@ -4604,30 +4463,29 @@ object Relational {
           s"recluster committed v${r.version}, expected 2")
         require(SnapshotTable.changes(s, path, 1, 2).count() == 0,
           "recluster must be row-preserving (empty change feed)")
-      }
-      d
-    })
-    val t = s.read.format("graft_table").option("path", path).load()
-    val nAll = t.count()
-    val day = java.time.LocalDate.parse("1996-01-02")
-    val (nDay, Files(pd, tot)) = ScanMetrics.rowCount(t.filter(col("d") === lit(day)))
-    require(pd > 0 && pd < tot,
-      s"days() pruning failed post-recluster: planned $pd of $tot")
-    val zHi = graft.functions.ZOrderExpr.interleave(63, 63, 8)
-    val (Array(rect), Seq(Files(pz, _))) = ScanMetrics.collect(
-      t.filter(col("z") <= zHi && col("px") <= 63 && col("py") <= 63)
-        .agg(count(lit(1)).as("n"), sum("qty_u").cast("long").as("q")))
-    require(pz > 0 && pz < tot,
-      s"curve rectangle pruning failed: planned $pz of $tot")
-    val (nBoth, Files(pb, _)) = ScanMetrics.rowCount(t.filter(col("d") === lit(day) &&
-      col("z") <= zHi && col("px") <= 63 && col("py") <= 63))
-    require(pb <= math.min(pd, pz),
-      s"composed pruning ($pb) looser than either dimension ($pd, $pz)")
-    import s.implicits._
-    Seq((nAll, nDay, rect.getLong(0), rect.getLong(1), nBoth,
-      true, true, true))
-      .toDF("n_all", "n_day", "n_rect", "qty_rect", "n_both",
-        "pruned_day", "pruned_curve", "feed_empty")
+      }) { (s, d) =>
+      val t = s.read.format("graft_table").option("path", path).load()
+      val nAll = t.count()
+      val day = java.time.LocalDate.parse("1996-01-02")
+      val (nDay, Files(pd, tot)) = ScanMetrics.rowCount(t.filter(col("d") === lit(day)))
+      require(pd > 0 && pd < tot,
+        s"days() pruning failed post-recluster: planned $pd of $tot")
+      val zHi = graft.functions.ZOrderExpr.interleave(63, 63, 8)
+      val (Array(rect), Seq(Files(pz, _))) = ScanMetrics.collect(
+        t.filter(col("z") <= zHi && col("px") <= 63 && col("py") <= 63)
+          .agg(count(lit(1)).as("n"), sum("qty_u").cast("long").as("q")))
+      require(pz > 0 && pz < tot,
+        s"curve rectangle pruning failed: planned $pz of $tot")
+      val (nBoth, Files(pb, _)) = ScanMetrics.rowCount(t.filter(col("d") === lit(day) &&
+        col("z") <= zHi && col("px") <= 63 && col("py") <= 63))
+      require(pb <= math.min(pd, pz),
+        s"composed pruning ($pb) looser than either dimension ($pd, $pz)")
+      import s.implicits._
+      Seq((nAll, nDay, rect.getLong(0), rect.getLong(1), nBoth,
+        true, true, true))
+        .toDF("n_all", "n_day", "n_rect", "qty_rect", "n_both",
+          "pruned_day", "pruned_curve", "feed_empty")
+    }
   }
 
   /** q209 — WRITE-AUDIT-PUBLISH via branches
@@ -4647,44 +4505,42 @@ object Relational {
     * ref that moved on the failed audit, or a publish that rewrote
     * data, changes the counts and hash-mismatches.
     */
-  val writeAuditPublish = QueryDef("q209_write_audit_publish",
-    """WITH a AS (
-      |  SELECT l_orderkey * 10 + l_linenumber AS k,
-      |    CAST(floor(l_quantity * 100) AS BIGINT) AS qty_u
-      |  FROM lineitem
-      |  WHERE l_shipdate >= TIMESTAMP '1996-01-01'
-      |    AND l_shipdate < TIMESTAMP '1996-02-01'
-      |), b AS (
-      |  SELECT l_orderkey * 10 + l_linenumber AS k,
-      |    CAST(floor(l_quantity * 100) AS BIGINT) AS qty_u
-      |  FROM lineitem
-      |  WHERE l_shipdate >= TIMESTAMP '1996-02-01'
-      |    AND l_shipdate < TIMESTAMP '1996-03-01'
-      |), c AS (
-      |  SELECT l_orderkey * 10 + l_linenumber AS k,
-      |    CAST(floor(l_quantity * 100) AS BIGINT) AS qty_u
-      |  FROM lineitem
-      |  WHERE l_shipdate >= TIMESTAMP '1996-03-01'
-      |    AND l_shipdate < TIMESTAMP '1996-04-01'
-      |  UNION ALL SELECT CAST(-1 AS BIGINT), CAST(-999 AS BIGINT)
-      |), pub AS (SELECT * FROM a UNION ALL SELECT * FROM b)
-      |SELECT
-      |  (SELECT count(*) FROM pub) AS n_pub,
-      |  (SELECT CAST(sum(qty_u) AS BIGINT) FROM pub) AS qty_pub,
-      |  (SELECT count(*) FROM pub) + (SELECT count(*) FROM c)
-      |    AS n_head,
-      |  CAST(1 AS BIGINT) AS n_violations,
-      |  TRUE AS audit_blocked""".stripMargin
-  ) { (s, d) =>
-    import graft.ops.SnapshotTable
+  val writeAuditPublish: QueryDef = {
     val path = Work.oracleDumpPath("q209_table")
-    def slice(lo: String, hi: String) = Tables.lineitem(s, d)
-      .filter(col("l_shipdate") >= lit(lo).cast("timestamp") &&
-        col("l_shipdate") < lit(hi).cast("timestamp"))
-      .select((col("l_orderkey") * 10 + col("l_linenumber")).as("k"),
-        floor(col("l_quantity") * 100).cast("long").as("qty_u"))
-    clusterLayouts.compute("q209", (_, prev) => {
-      if (prev != d) {
+    QueryDef("q209_write_audit_publish",
+      """WITH a AS (
+        |  SELECT l_orderkey * 10 + l_linenumber AS k,
+        |    CAST(floor(l_quantity * 100) AS BIGINT) AS qty_u
+        |  FROM lineitem
+        |  WHERE l_shipdate >= TIMESTAMP '1996-01-01'
+        |    AND l_shipdate < TIMESTAMP '1996-02-01'
+        |), b AS (
+        |  SELECT l_orderkey * 10 + l_linenumber AS k,
+        |    CAST(floor(l_quantity * 100) AS BIGINT) AS qty_u
+        |  FROM lineitem
+        |  WHERE l_shipdate >= TIMESTAMP '1996-02-01'
+        |    AND l_shipdate < TIMESTAMP '1996-03-01'
+        |), c AS (
+        |  SELECT l_orderkey * 10 + l_linenumber AS k,
+        |    CAST(floor(l_quantity * 100) AS BIGINT) AS qty_u
+        |  FROM lineitem
+        |  WHERE l_shipdate >= TIMESTAMP '1996-03-01'
+        |    AND l_shipdate < TIMESTAMP '1996-04-01'
+        |  UNION ALL SELECT CAST(-1 AS BIGINT), CAST(-999 AS BIGINT)
+        |), pub AS (SELECT * FROM a UNION ALL SELECT * FROM b)
+        |SELECT
+        |  (SELECT count(*) FROM pub) AS n_pub,
+        |  (SELECT CAST(sum(qty_u) AS BIGINT) FROM pub) AS qty_pub,
+        |  (SELECT count(*) FROM pub) + (SELECT count(*) FROM c)
+        |    AS n_head,
+        |  CAST(1 AS BIGINT) AS n_violations,
+        |  TRUE AS audit_blocked""".stripMargin,
+      setup = { (s, d) =>
+        def slice(lo: String, hi: String) = Tables.lineitem(s, d)
+          .filter(col("l_shipdate") >= lit(lo).cast("timestamp") &&
+            col("l_shipdate") < lit(hi).cast("timestamp"))
+          .select((col("l_orderkey") * 10 + col("l_linenumber")).as("k"),
+            floor(col("l_quantity") * 100).cast("long").as("qty_u"))
         Work.wipe(java.nio.file.Paths.get(path))
         import s.implicits._
         SnapshotTable.append(slice("1996-01-01", "1996-02-01"),
@@ -4704,28 +4560,27 @@ object Relational {
             .union(Seq((-1L, -999L)).toDF("k", "qty_u")),
           path, 4, statsCol = Some("k"))
         SnapshotTable.advanceBranch(path, "staging", 3)
-      }
-      d
-    })
-    val (staged, _, _) = SnapshotTable.scanRef(s, path, "staging")
-    val nViol = staged.filter(col("qty_u") < 0).count()
-    require(nViol > 0, "the audit should flag the poisoned batch")
-    // the failed audit left main at the PUBLISHED version
-    require(SnapshotTable.resolveRef(path, "main").version == 2,
-      s"main moved without a publish: " +
-        s"v${SnapshotTable.resolveRef(path, "main").version}")
-    val t = s.read.format("graft_table").option("path", path)
-      .option("ref", "main").load()
-    val pub = t.agg(count(lit(1)).as("n"),
-      sum("qty_u").cast("long").as("q")).collect().head
-    require(t.filter(col("qty_u") < 0).count() == 0,
-      "published state leaked the poisoned row")
-    val nHead = s.read.format("graft_table").option("path", path)
-      .load().count()
-    import s.implicits._
-    Seq((pub.getLong(0), pub.getLong(1), nHead, nViol, true))
-      .toDF("n_pub", "qty_pub", "n_head", "n_violations",
-        "audit_blocked")
+      }) { (s, d) =>
+      val (staged, _, _) = SnapshotTable.scanRef(s, path, "staging")
+      val nViol = staged.filter(col("qty_u") < 0).count()
+      require(nViol > 0, "the audit should flag the poisoned batch")
+      // the failed audit left main at the PUBLISHED version
+      require(SnapshotTable.resolveRef(path, "main").version == 2,
+        s"main moved without a publish: " +
+          s"v${SnapshotTable.resolveRef(path, "main").version}")
+      val t = s.read.format("graft_table").option("path", path)
+        .option("ref", "main").load()
+      val pub = t.agg(count(lit(1)).as("n"),
+        sum("qty_u").cast("long").as("q")).collect().head
+      require(t.filter(col("qty_u") < 0).count() == 0,
+        "published state leaked the poisoned row")
+      val nHead = s.read.format("graft_table").option("path", path)
+        .load().count()
+      import s.implicits._
+      Seq((pub.getLong(0), pub.getLong(1), nHead, nViol, true))
+        .toDF("n_pub", "qty_pub", "n_head", "n_violations",
+          "audit_blocked")
+    }
   }
 
   /** q210 — NDV statistics drive the optimizer, oracle-gated (the
@@ -4744,20 +4599,18 @@ object Relational {
     * can only change the PLAN, never the answer — and a broken scan
     * under either plan hash-mismatches.
     */
-  val ndvBroadcast = QueryDef("q210_ndv_broadcast",
-    """WITH probe AS (SELECT min(o_custkey) AS c FROM orders)
-      |SELECT count(*) AS n,
-      |  CAST(sum(CAST(floor(l.l_quantity * 100) AS BIGINT)) AS BIGINT)
-      |    AS qty_u,
-      |  TRUE AS cbo_broadcast, TRUE AS sizeonly_smj
-      |FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-      |WHERE o.o_custkey = (SELECT c FROM probe)""".stripMargin
-  ) { (s, d) =>
-    import graft.ops.SnapshotTable
+  val ndvBroadcast: QueryDef = {
     val p1 = Work.oracleDumpPath("q210_fact")
     val p2 = Work.oracleDumpPath("q210_dim")
-    clusterLayouts.compute("q210", (_, prev) => {
-      if (prev != d) {
+    QueryDef("q210_ndv_broadcast",
+      """WITH probe AS (SELECT min(o_custkey) AS c FROM orders)
+        |SELECT count(*) AS n,
+        |  CAST(sum(CAST(floor(l.l_quantity * 100) AS BIGINT)) AS BIGINT)
+        |    AS qty_u,
+        |  TRUE AS cbo_broadcast, TRUE AS sizeonly_smj
+        |FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
+        |WHERE o.o_custkey = (SELECT c FROM probe)""".stripMargin,
+      setup = { (s, d) =>
         Work.wipe(java.nio.file.Paths.get(p1))
         Work.wipe(java.nio.file.Paths.get(p2))
         SnapshotTable.append(
@@ -4774,51 +4627,50 @@ object Relational {
             concat(lit("y" * 48), col("o_orderkey").cast("string"))
               .as("pad2")),
           p2, 4, statsCol = Some("u"), statsCols = Seq("cust"))
+      }) { (s, d) =>
+      val dim0 = s.read.format("graft_table").option("path", p2).load()
+      val minCust = dim0.agg(min("cust")).collect().head.getLong(0)
+      // SF-independent threshold: a quarter of the dim's REAL bytes —
+      // the unfiltered scan always reports 4x the threshold (control
+      // stays sort-merge), while the CBO estimate rows/NDV(cust) is
+      // ~rows/150 of it (flip fires) at every scale factor
+      val dimBytes = SnapshotTable.readVersion(s, p2, 1)
+        .fileBytes.get.sum
+      def plan(cbo: Boolean): (String, org.apache.spark.sql.Row) = {
+        val keys = Seq(
+          "spark.sql.cbo.enabled" -> cbo.toString,
+          "spark.sql.autoBroadcastJoinThreshold" -> (dimBytes / 4).toString,
+          "spark.sql.adaptive.enabled" -> "false")
+        val prior = keys.map { case (k, _) => k -> s.conf.getOption(k) }
+        keys.foreach { case (k, v) => s.conf.set(k, v) }
+        try {
+          val fact = s.read.format("graft_table").option("path", p1).load()
+          val dim = s.read.format("graft_table").option("path", p2).load()
+            .filter(col("cust") === minCust)
+          val j = fact.join(dim, col("k") === col("u"))
+            .agg(count(lit(1)).as("n"),
+              sum("qty_u").cast("long").as("q"),
+              max(length(col("pad1"))), max(length(col("pad2"))))
+          (j.queryExecution.executedPlan.toString, j.collect().head)
+        } finally prior.foreach {
+          case (k, Some(v)) => s.conf.set(k, v)
+          case (k, None) => s.conf.unset(k)
+        }
       }
-      d
-    })
-    val dim0 = s.read.format("graft_table").option("path", p2).load()
-    val minCust = dim0.agg(min("cust")).collect().head.getLong(0)
-    // SF-independent threshold: a quarter of the dim's REAL bytes —
-    // the unfiltered scan always reports 4x the threshold (control
-    // stays sort-merge), while the CBO estimate rows/NDV(cust) is
-    // ~rows/150 of it (flip fires) at every scale factor
-    val dimBytes = SnapshotTable.readVersion(s, p2, 1)
-      .fileBytes.get.sum
-    def plan(cbo: Boolean): (String, org.apache.spark.sql.Row) = {
-      val keys = Seq(
-        "spark.sql.cbo.enabled" -> cbo.toString,
-        "spark.sql.autoBroadcastJoinThreshold" -> (dimBytes / 4).toString,
-        "spark.sql.adaptive.enabled" -> "false")
-      val prior = keys.map { case (k, _) => k -> s.conf.getOption(k) }
-      keys.foreach { case (k, v) => s.conf.set(k, v) }
-      try {
-        val fact = s.read.format("graft_table").option("path", p1).load()
-        val dim = s.read.format("graft_table").option("path", p2).load()
-          .filter(col("cust") === minCust)
-        val j = fact.join(dim, col("k") === col("u"))
-          .agg(count(lit(1)).as("n"),
-            sum("qty_u").cast("long").as("q"),
-            max(length(col("pad1"))), max(length(col("pad2"))))
-        (j.queryExecution.executedPlan.toString, j.collect().head)
-      } finally prior.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None) => s.conf.unset(k)
-      }
+      val (withCbo, r) = plan(cbo = true)
+      require(withCbo.contains("BroadcastHashJoin"),
+        s"NDV stats did not flip the join to broadcast:\n" +
+          withCbo.take(1200))
+      val (withoutCbo, r2) = plan(cbo = false)
+      require(!withoutCbo.contains("BroadcastHashJoin"),
+        "control broken: size-only estimation already broadcasts — " +
+          "the flip proves nothing\n" + withoutCbo.take(1200))
+      require(r.getLong(0) == r2.getLong(0) && r.getLong(1) == r2.getLong(1),
+        "the two plans disagree on the answer")
+      import s.implicits._
+      Seq((r.getLong(0), r.getLong(1), true, true))
+        .toDF("n", "qty_u", "cbo_broadcast", "sizeonly_smj")
     }
-    val (withCbo, r) = plan(cbo = true)
-    require(withCbo.contains("BroadcastHashJoin"),
-      s"NDV stats did not flip the join to broadcast:\n" +
-        withCbo.take(1200))
-    val (withoutCbo, r2) = plan(cbo = false)
-    require(!withoutCbo.contains("BroadcastHashJoin"),
-      "control broken: size-only estimation already broadcasts — " +
-        "the flip proves nothing\n" + withoutCbo.take(1200))
-    require(r.getLong(0) == r2.getLong(0) && r.getLong(1) == r2.getLong(1),
-      "the two plans disagree on the answer")
-    import s.implicits._
-    Seq((r.getLong(0), r.getLong(1), true, true))
-      .toDF("n", "qty_u", "cbo_broadcast", "sizeonly_smj")
   }
 
   /** q211 — publish-as-CHERRY-PICK
@@ -4840,44 +4692,42 @@ object Relational {
     * (A+C+poison), and the published violation count (0): a publish
     * that carried C, or one that rewrote data, hash-mismatches.
     */
-  val publishCherryPick = QueryDef("q211_publish_cherry_pick",
-    """WITH a AS (
-      |  SELECT l_orderkey * 10 + l_linenumber AS k,
-      |    CAST(floor(l_quantity * 100) AS BIGINT) AS qty_u
-      |  FROM lineitem
-      |  WHERE l_shipdate >= TIMESTAMP '1997-01-01'
-      |    AND l_shipdate < TIMESTAMP '1997-02-01'
-      |), c AS (
-      |  SELECT l_orderkey * 10 + l_linenumber AS k,
-      |    CAST(floor(l_quantity * 100) AS BIGINT) AS qty_u
-      |  FROM lineitem
-      |  WHERE l_shipdate >= TIMESTAMP '1997-02-01'
-      |    AND l_shipdate < TIMESTAMP '1997-03-01'
-      |  UNION ALL SELECT CAST(-1 AS BIGINT), CAST(-999 AS BIGINT)
-      |), d AS (
-      |  SELECT l_orderkey * 10 + l_linenumber AS k,
-      |    CAST(floor(l_quantity * 100) AS BIGINT) AS qty_u
-      |  FROM lineitem
-      |  WHERE l_shipdate >= TIMESTAMP '1997-03-01'
-      |    AND l_shipdate < TIMESTAMP '1997-04-01'
-      |), pub AS (SELECT * FROM a UNION ALL SELECT * FROM d)
-      |SELECT
-      |  (SELECT count(*) FROM pub) AS n_pub,
-      |  (SELECT CAST(sum(qty_u) AS BIGINT) FROM pub) AS qty_pub,
-      |  (SELECT count(*) FROM a) + (SELECT count(*) FROM c)
-      |    AS n_stage,
-      |  CAST(0 AS BIGINT) AS n_violations,
-      |  TRUE AS cherry_picked, TRUE AS conflict_rejected""".stripMargin
-  ) { (s, d) =>
-    import graft.ops.SnapshotTable
+  val publishCherryPick: QueryDef = {
     val path = Work.oracleDumpPath("q211_table")
-    def slice(lo: String, hi: String) = Tables.lineitem(s, d)
-      .filter(col("l_shipdate") >= lit(lo).cast("timestamp") &&
-        col("l_shipdate") < lit(hi).cast("timestamp"))
-      .select((col("l_orderkey") * 10 + col("l_linenumber")).as("k"),
-        floor(col("l_quantity") * 100).cast("long").as("qty_u"))
-    clusterLayouts.compute("q211", (_, prev) => {
-      if (prev != d) {
+    QueryDef("q211_publish_cherry_pick",
+      """WITH a AS (
+        |  SELECT l_orderkey * 10 + l_linenumber AS k,
+        |    CAST(floor(l_quantity * 100) AS BIGINT) AS qty_u
+        |  FROM lineitem
+        |  WHERE l_shipdate >= TIMESTAMP '1997-01-01'
+        |    AND l_shipdate < TIMESTAMP '1997-02-01'
+        |), c AS (
+        |  SELECT l_orderkey * 10 + l_linenumber AS k,
+        |    CAST(floor(l_quantity * 100) AS BIGINT) AS qty_u
+        |  FROM lineitem
+        |  WHERE l_shipdate >= TIMESTAMP '1997-02-01'
+        |    AND l_shipdate < TIMESTAMP '1997-03-01'
+        |  UNION ALL SELECT CAST(-1 AS BIGINT), CAST(-999 AS BIGINT)
+        |), d AS (
+        |  SELECT l_orderkey * 10 + l_linenumber AS k,
+        |    CAST(floor(l_quantity * 100) AS BIGINT) AS qty_u
+        |  FROM lineitem
+        |  WHERE l_shipdate >= TIMESTAMP '1997-03-01'
+        |    AND l_shipdate < TIMESTAMP '1997-04-01'
+        |), pub AS (SELECT * FROM a UNION ALL SELECT * FROM d)
+        |SELECT
+        |  (SELECT count(*) FROM pub) AS n_pub,
+        |  (SELECT CAST(sum(qty_u) AS BIGINT) FROM pub) AS qty_pub,
+        |  (SELECT count(*) FROM a) + (SELECT count(*) FROM c)
+        |    AS n_stage,
+        |  CAST(0 AS BIGINT) AS n_violations,
+        |  TRUE AS cherry_picked, TRUE AS conflict_rejected""".stripMargin,
+      setup = { (s, d) =>
+        def slice(lo: String, hi: String) = Tables.lineitem(s, d)
+          .filter(col("l_shipdate") >= lit(lo).cast("timestamp") &&
+            col("l_shipdate") < lit(hi).cast("timestamp"))
+          .select((col("l_orderkey") * 10 + col("l_linenumber")).as("k"),
+            floor(col("l_quantity") * 100).cast("long").as("qty_u"))
         Work.wipe(java.nio.file.Paths.get(path))
         import s.implicits._
         SnapshotTable.append(slice("1997-01-01", "1997-02-01"),
@@ -4898,47 +4748,48 @@ object Relational {
         // batch D: clean
         SnapshotTable.append(slice("1997-03-01", "1997-04-01"),
           path, 4, statsCol = Some("k"))          // D = v4
-      }
-      d
-    })
-    // audit C at its staged version: the poison is there
-    val nViol = SnapshotTable.scanAt(s, path, 2)._1
-      .filter(col("qty_u") < 0).count()
-    require(nViol == 1, s"staged poison count $nViol")
-    // E cannot publish: it rewrote an UNPUBLISHED batch's file
-    val stBefore = SnapshotTable.resolveRef(path, "staging")
-    val conflictRejected =
-      if (stBefore.version == 3 && stBefore.base == 2)
+      }) { (s, d) =>
+      // put the refs back where setup left them (metadata-only ref
+      // writes), so every run does the rejection and the cherry-pick
+      // publish; each publish commits one more log version
+      SnapshotTable.dropRef(path, "main")
+      SnapshotTable.createBranch(path, "main", 1)
+      SnapshotTable.dropRef(path, "staging")
+      SnapshotTable.createBranch(path, "staging", 3)
+      SnapshotTable.stageBranch(path, "staging", 3, 2)
+      // audit C at its staged version: the poison is there
+      val nViol = SnapshotTable.scanAt(s, path, 2)._1
+        .filter(col("qty_u") < 0).count()
+      require(nViol == 1, s"staged poison count $nViol")
+      // E cannot publish: it rewrote an UNPUBLISHED batch's file
+      val conflictRejected =
         try { SnapshotTable.publish(s, path, "main", "staging"); false }
         catch { case _: java.util.ConcurrentModificationException =>
           true }
-      else true // already advanced to D on a warm re-run
-    require(conflictRejected,
-      "publish accepted a batch that rewrote unpublished data")
-    require(SnapshotTable.resolveRef(path, "main").version == 1 ||
-      SnapshotTable.resolveRef(path, "main").kind != "branch" ||
-      SnapshotTable.resolveRef(path, "main").version >= 4,
-      "rejected publish moved the published ref")
-    // D passes its audit and publishes by cherry-pick (an idempotent
-    // warm re-run sees main already advanced and skips)
-    if (SnapshotTable.resolveRef(path, "main").version == 1) {
+      require(conflictRejected,
+        "publish accepted a batch that rewrote unpublished data")
+      require(SnapshotTable.resolveRef(path, "main").version == 1 ||
+        SnapshotTable.resolveRef(path, "main").kind != "branch" ||
+        SnapshotTable.resolveRef(path, "main").version >= 4,
+        "rejected publish moved the published ref")
+      // D passes its audit and publishes by cherry-pick
       SnapshotTable.stageBranch(path, "staging", 4, 3)
       val pr = SnapshotTable.publish(s, path, "main", "staging")
       require(pr.mode == "cherry-pick",
         s"expected cherry-pick, got ${pr.mode}")
+      val t = s.read.format("graft_table").option("path", path)
+        .option("ref", "main").load()
+      val pubViol = t.filter(col("qty_u") < 0).count()
+      require(pubViol == 0,
+        "published state leaked the poisoned batch via fast-forward")
+      val pub = t.agg(count(lit(1)).as("n"),
+        sum("qty_u").cast("long").as("q")).collect().head
+      val nStage = SnapshotTable.scanAt(s, path, 2)._3
+      import s.implicits._
+      Seq((pub.getLong(0), pub.getLong(1), nStage, pubViol, true, true))
+        .toDF("n_pub", "qty_pub", "n_stage", "n_violations",
+          "cherry_picked", "conflict_rejected")
     }
-    val t = s.read.format("graft_table").option("path", path)
-      .option("ref", "main").load()
-    val pubViol = t.filter(col("qty_u") < 0).count()
-    require(pubViol == 0,
-      "published state leaked the poisoned batch via fast-forward")
-    val pub = t.agg(count(lit(1)).as("n"),
-      sum("qty_u").cast("long").as("q")).collect().head
-    val nStage = SnapshotTable.scanAt(s, path, 2)._3
-    import s.implicits._
-    Seq((pub.getLong(0), pub.getLong(1), nStage, pubViol, true, true))
-      .toDF("n_pub", "qty_pub", "n_stage", "n_violations",
-        "cherry_picked", "conflict_rejected")
   }
 
   /** q212 — DV-AWARE OPTIMIZE ZORDER on a typed-partitioned table
@@ -4956,31 +4807,28 @@ object Relational {
     * day and rectangle pruning are require-asserted on the scan
     * planner's file counts.
     */
-  val dvZorder = QueryDef("q212_dv_zorder",
-    """WITH pts AS (
-      |  SELECT DATE '1996-01-01' + CAST(l_suppkey % 4 AS INT) AS d,
-      |    concat('g', CAST(l_orderkey % 2 AS VARCHAR)) AS g,
-      |    l_partkey % 256 AS px, l_orderkey % 256 AS py,
-      |    CAST(floor(l_quantity * 100) AS BIGINT) AS qty_u
-      |  FROM lineitem),
-      |live AS (SELECT * FROM pts WHERE px <> 0)
-      |SELECT
-      |  (SELECT count(*) FROM live) AS n_live,
-      |  (SELECT count(*) FROM pts) - (SELECT count(*) FROM live)
-      |    AS n_deleted,
-      |  (SELECT count(*) FROM live WHERE d = DATE '1996-01-02')
-      |    AS n_day,
-      |  (SELECT CAST(sum(qty_u) AS BIGINT) FROM live
-      |    WHERE px <= 63 AND py <= 63) AS qty_rect,
-      |  CAST(0 AS BIGINT) AS n_resurrected,
-      |  TRUE AS dv_folded, TRUE AS pruned_day,
-      |  TRUE AS pruned_curve""".stripMargin
-  ) { (s, d) =>
-    import graft.ops.SnapshotTable
-    import graft.ops.SnapshotTable.{PartField, PartSpec}
+  val dvZorder: QueryDef = {
     val path = Work.oracleDumpPath("q212_table")
-    clusterLayouts.compute("q212", (_, prev) => {
-      if (prev != d) {
+    QueryDef("q212_dv_zorder",
+      """WITH pts AS (
+        |  SELECT DATE '1996-01-01' + CAST(l_suppkey % 4 AS INT) AS d,
+        |    concat('g', CAST(l_orderkey % 2 AS VARCHAR)) AS g,
+        |    l_partkey % 256 AS px, l_orderkey % 256 AS py,
+        |    CAST(floor(l_quantity * 100) AS BIGINT) AS qty_u
+        |  FROM lineitem),
+        |live AS (SELECT * FROM pts WHERE px <> 0)
+        |SELECT
+        |  (SELECT count(*) FROM live) AS n_live,
+        |  (SELECT count(*) FROM pts) - (SELECT count(*) FROM live)
+        |    AS n_deleted,
+        |  (SELECT count(*) FROM live WHERE d = DATE '1996-01-02')
+        |    AS n_day,
+        |  (SELECT CAST(sum(qty_u) AS BIGINT) FROM live
+        |    WHERE px <= 63 AND py <= 63) AS qty_rect,
+        |  CAST(0 AS BIGINT) AS n_resurrected,
+        |  TRUE AS dv_folded, TRUE AS pruned_day,
+        |  TRUE AS pruned_curve""".stripMargin,
+      setup = { (s, d) =>
         Work.wipe(java.nio.file.Paths.get(path))
         val spec = PartSpec(Seq(
           PartField("d", "days", 0L, "date"),
@@ -5012,30 +4860,29 @@ object Relational {
         require(SnapshotTable.changes(s, path, v2, r.version)
           .count() == 0,
           "DV-aware recluster must preserve logical content")
-      }
-      d
-    })
-    val t = s.read.format("graft_table").option("path", path).load()
-    val nLive = t.count()
-    val nDeleted = t.filter(col("px") === 0).count() // must be 0 live
-    require(nDeleted == 0, "MOR-deleted rows resurrected")
-    val nDel = Tables.lineitem(s, d)
-      .filter(pmod(col("l_partkey"), lit(256)) === 0).count()
-    val day = java.time.LocalDate.parse("1996-01-02")
-    val (nDay, Files(pd, tot)) = ScanMetrics.rowCount(t.filter(col("d") === lit(day)))
-    require(pd > 0 && pd < tot,
-      s"days() pruning failed post-recluster: planned $pd of $tot")
-    val zHi = graft.functions.ZOrderExpr.interleave(63, 63, 8)
-    val (Array(qr), Seq(Files(pz, _))) = ScanMetrics.collect(
-      t.filter(col("z") <= zHi && col("px") <= 63 && col("py") <= 63)
-        .agg(sum("qty_u").cast("long")))
-    val qtyRect = qr.getLong(0)
-    require(pz > 0 && pz < tot,
-      s"curve rectangle pruning failed: planned $pz of $tot")
-    import s.implicits._
-    Seq((nLive, nDel, nDay, qtyRect, nDeleted, true, true, true))
-      .toDF("n_live", "n_deleted", "n_day", "qty_rect",
-        "n_resurrected", "dv_folded", "pruned_day", "pruned_curve")
+      }) { (s, d) =>
+      val t = s.read.format("graft_table").option("path", path).load()
+      val nLive = t.count()
+      val nDeleted = t.filter(col("px") === 0).count() // must be 0 live
+      require(nDeleted == 0, "MOR-deleted rows resurrected")
+      val nDel = Tables.lineitem(s, d)
+        .filter(pmod(col("l_partkey"), lit(256)) === 0).count()
+      val day = java.time.LocalDate.parse("1996-01-02")
+      val (nDay, Files(pd, tot)) = ScanMetrics.rowCount(t.filter(col("d") === lit(day)))
+      require(pd > 0 && pd < tot,
+        s"days() pruning failed post-recluster: planned $pd of $tot")
+      val zHi = graft.functions.ZOrderExpr.interleave(63, 63, 8)
+      val (Array(qr), Seq(Files(pz, _))) = ScanMetrics.collect(
+        t.filter(col("z") <= zHi && col("px") <= 63 && col("py") <= 63)
+          .agg(sum("qty_u").cast("long")))
+      val qtyRect = qr.getLong(0)
+      require(pz > 0 && pz < tot,
+        s"curve rectangle pruning failed: planned $pz of $tot")
+      import s.implicits._
+      Seq((nLive, nDel, nDay, qtyRect, nDeleted, true, true, true))
+        .toDF("n_live", "n_deleted", "n_day", "qty_rect",
+          "n_resurrected", "dv_folded", "pruned_day", "pruned_curve")
+    }
   }
 
   /** q213 — NDV statistics drive MULTI-JOIN REORDER, oracle-gated
@@ -5054,23 +4901,21 @@ object Relational {
     * lineitem ⋈ orders ⋈ part, so a wrong NDV can only change the
     * PLAN, never the answer.
     */
-  val ndvJoinReorder = QueryDef("q213_ndv_join_reorder",
-    """WITH probe AS (SELECT min(o_custkey) AS c FROM orders)
-      |SELECT count(*) AS n,
-      |  CAST(sum(CAST(floor(l.l_quantity * 100) AS BIGINT)) AS BIGINT)
-      |    AS qty_u,
-      |  TRUE AS cbo_reordered, TRUE AS sizeonly_syntactic
-      |FROM lineitem l
-      |JOIN part p ON l.l_partkey = p.p_partkey
-      |JOIN orders o ON l.l_orderkey = o.o_orderkey
-      |WHERE o.o_custkey = (SELECT c FROM probe)""".stripMargin
-  ) { (s, d) =>
-    import graft.ops.SnapshotTable
+  val ndvJoinReorder: QueryDef = {
     val pf = Work.oracleDumpPath("q213_fact")
     val pa = Work.oracleDumpPath("q213_dima")
     val pb = Work.oracleDumpPath("q213_dimb")
-    clusterLayouts.compute("q213", (_, prev) => {
-      if (prev != d) {
+    QueryDef("q213_ndv_join_reorder",
+      """WITH probe AS (SELECT min(o_custkey) AS c FROM orders)
+        |SELECT count(*) AS n,
+        |  CAST(sum(CAST(floor(l.l_quantity * 100) AS BIGINT)) AS BIGINT)
+        |    AS qty_u,
+        |  TRUE AS cbo_reordered, TRUE AS sizeonly_syntactic
+        |FROM lineitem l
+        |JOIN part p ON l.l_partkey = p.p_partkey
+        |JOIN orders o ON l.l_orderkey = o.o_orderkey
+        |WHERE o.o_custkey = (SELECT c FROM probe)""".stripMargin,
+      setup = { (s, d) =>
         Seq(pf, pa, pb).foreach(p =>
           Work.wipe(java.nio.file.Paths.get(p)))
         SnapshotTable.append(
@@ -5093,59 +4938,58 @@ object Relational {
             concat(lit("b" * 48), col("p_partkey").cast("string"))
               .as("padb")),
           pb, 4, statsCol = Some("w"))
+      }) { (s, d) =>
+      val minCust = s.read.format("graft_table").option("path", pa)
+        .load().agg(min("cust")).collect().head.getLong(0)
+      def plan(cbo: Boolean): (String, org.apache.spark.sql.Row) = {
+        val keys = Seq(
+          "spark.sql.cbo.enabled" -> cbo.toString,
+          "spark.sql.cbo.joinReorder.enabled" -> cbo.toString,
+          "spark.sql.adaptive.enabled" -> "false")
+        val prior = keys.map { case (k, _) => k -> s.conf.getOption(k) }
+        keys.foreach { case (k, v) => s.conf.set(k, v) }
+        try {
+          val fact = s.read.format("graft_table").option("path", pf).load()
+          val dimA = s.read.format("graft_table").option("path", pa)
+            .load().filter(col("cust") === minCust)
+          val dimB = s.read.format("graft_table").option("path", pb).load()
+          // WRITTEN order: wide dim first — the trap a size-only
+          // planner walks into
+          val j = fact.join(dimB, col("kp") === col("w"))
+            .join(dimA, col("ko") === col("u"))
+            .agg(count(lit(1)).as("n"),
+              sum("qty_u").cast("long").as("q"),
+              max(length(col("pada"))), max(length(col("padb"))))
+          (j.queryExecution.executedPlan.toString, j.collect().head)
+        } finally prior.foreach {
+          case (k, Some(v)) => s.conf.set(k, v)
+          case (k, None) => s.conf.unset(k)
+        }
       }
-      d
-    })
-    val minCust = s.read.format("graft_table").option("path", pa)
-      .load().agg(min("cust")).collect().head.getLong(0)
-    def plan(cbo: Boolean): (String, org.apache.spark.sql.Row) = {
-      val keys = Seq(
-        "spark.sql.cbo.enabled" -> cbo.toString,
-        "spark.sql.cbo.joinReorder.enabled" -> cbo.toString,
-        "spark.sql.adaptive.enabled" -> "false")
-      val prior = keys.map { case (k, _) => k -> s.conf.getOption(k) }
-      keys.foreach { case (k, v) => s.conf.set(k, v) }
-      try {
-        val fact = s.read.format("graft_table").option("path", pf).load()
-        val dimA = s.read.format("graft_table").option("path", pa)
-          .load().filter(col("cust") === minCust)
-        val dimB = s.read.format("graft_table").option("path", pb).load()
-        // WRITTEN order: wide dim first — the trap a size-only
-        // planner walks into
-        val j = fact.join(dimB, col("kp") === col("w"))
-          .join(dimA, col("ko") === col("u"))
-          .agg(count(lit(1)).as("n"),
-            sum("qty_u").cast("long").as("q"),
-            max(length(col("pada"))), max(length(col("padb"))))
-        (j.queryExecution.executedPlan.toString, j.collect().head)
-      } finally prior.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None) => s.conf.unset(k)
-      }
+      // the OUTER join prints first in the tree: syntactic order makes
+      // the kp⋈w (wide dim) join the INNER one, the reordered plan
+      // makes ko⋈u (selective dim) inner. Match the join nodes' own
+      // condition text — scan paths are unreliable markers because the
+      // runtime-pruning subquery nests a dim scan inside the fact scan
+      def joinOrder(p: String): (Int, Int) =
+        (p.indexOf("Join [ko"), p.indexOf("Join [kp"))
+      val (withCbo, r) = plan(cbo = true)
+      val (ko1, kp1) = joinOrder(withCbo)
+      require(ko1 >= 0 && kp1 >= 0 && kp1 < ko1,
+        s"NDV stats did not reorder the star (selective dim still " +
+          s"joins last: ko@$ko1 kp@$kp1):\n" + withCbo.take(1500))
+      val (noCbo, r2) = plan(cbo = false)
+      val (ko2, kp2) = joinOrder(noCbo)
+      require(ko2 >= 0 && kp2 >= 0 && ko2 < kp2,
+        "control broken: the size-only plan already joins the " +
+          "selective dim first — the reorder proves nothing\n" +
+          noCbo.take(1500))
+      require(r.getLong(0) == r2.getLong(0) && r.getLong(1) == r2.getLong(1),
+        "the two join orders disagree on the answer")
+      import s.implicits._
+      Seq((r.getLong(0), r.getLong(1), true, true))
+        .toDF("n", "qty_u", "cbo_reordered", "sizeonly_syntactic")
     }
-    // the OUTER join prints first in the tree: syntactic order makes
-    // the kp⋈w (wide dim) join the INNER one, the reordered plan
-    // makes ko⋈u (selective dim) inner. Match the join nodes' own
-    // condition text — scan paths are unreliable markers because the
-    // runtime-pruning subquery nests a dim scan inside the fact scan
-    def joinOrder(p: String): (Int, Int) =
-      (p.indexOf("Join [ko"), p.indexOf("Join [kp"))
-    val (withCbo, r) = plan(cbo = true)
-    val (ko1, kp1) = joinOrder(withCbo)
-    require(ko1 >= 0 && kp1 >= 0 && kp1 < ko1,
-      s"NDV stats did not reorder the star (selective dim still " +
-        s"joins last: ko@$ko1 kp@$kp1):\n" + withCbo.take(1500))
-    val (noCbo, r2) = plan(cbo = false)
-    val (ko2, kp2) = joinOrder(noCbo)
-    require(ko2 >= 0 && kp2 >= 0 && ko2 < kp2,
-      "control broken: the size-only plan already joins the " +
-        "selective dim first — the reorder proves nothing\n" +
-        noCbo.take(1500))
-    require(r.getLong(0) == r2.getLong(0) && r.getLong(1) == r2.getLong(1),
-      "the two join orders disagree on the answer")
-    import s.implicits._
-    Seq((r.getLong(0), r.getLong(1), true, true))
-      .toDF("n", "qty_u", "cbo_reordered", "sizeonly_syntactic")
   }
 
   /** q214 — the DECIMAL plane, oracle-gated: a DECIMAL(18,2) money
@@ -5161,40 +5005,37 @@ object Relational {
     * file away, so the scan must plan ZERO files. DuckDB recomputes
     * every aggregate in exact decimal arithmetic.
     */
-  val decimalMoney = QueryDef("q214_decimal_money",
-    """WITH t AS (
-      |  SELECT CAST(CAST(l_partkey AS DECIMAL(15,2)) + 0.25
-      |      AS DECIMAL(18,2)) AS money,
-      |    CAST(floor(l_quantity * 100) AS BIGINT) AS qty_u
-      |  FROM lineitem),
-      |probe AS (
-      |  SELECT CAST(CAST(min(l_partkey) AS DECIMAL(15,2)) + 0.25
-      |      AS DECIMAL(18,2)) AS m FROM lineitem),
-      |rngb AS (
-      |  SELECT CAST(CAST(CAST(floor(max(l_partkey) / 4.0) AS BIGINT)
-      |      AS DECIMAL(15,2)) AS DECIMAL(18,2)) AS lo,
-      |    CAST(CAST(CAST(floor(max(l_partkey) / 2.0) AS BIGINT)
-      |      AS DECIMAL(15,2)) AS DECIMAL(18,2)) AS hi FROM lineitem)
-      |SELECT
-      |  (SELECT count(*) FROM t WHERE money = (SELECT m FROM probe))
-      |    AS n_eq,
-      |  (SELECT CAST(sum(qty_u) AS BIGINT) FROM t
-      |    WHERE money = (SELECT m FROM probe)) AS qty_eq,
-      |  (SELECT count(*) FROM t
-      |    WHERE money >= (SELECT lo FROM rngb)
-      |      AND money < (SELECT hi FROM rngb)) AS n_rng,
-      |  (SELECT CAST(sum(money) * 100 AS BIGINT) FROM t
-      |    WHERE money >= (SELECT lo FROM rngb)
-      |      AND money < (SELECT hi FROM rngb)) AS cents_rng,
-      |  CAST(0 AS BIGINT) AS n_absent,
-      |  TRUE AS pruned_eq, TRUE AS bloom_zero, TRUE AS pruned_rng"""
-      .stripMargin
-  ) { (s, d) =>
-    import graft.ops.SnapshotTable
-    import graft.ops.SnapshotTable.{PartField, PartSpec}
+  val decimalMoney: QueryDef = {
     val path = Work.oracleDumpPath("q214_table")
-    clusterLayouts.compute("q214", (_, prev) => {
-      if (prev != d) {
+    QueryDef("q214_decimal_money",
+      """WITH t AS (
+        |  SELECT CAST(CAST(l_partkey AS DECIMAL(15,2)) + 0.25
+        |      AS DECIMAL(18,2)) AS money,
+        |    CAST(floor(l_quantity * 100) AS BIGINT) AS qty_u
+        |  FROM lineitem),
+        |probe AS (
+        |  SELECT CAST(CAST(min(l_partkey) AS DECIMAL(15,2)) + 0.25
+        |      AS DECIMAL(18,2)) AS m FROM lineitem),
+        |rngb AS (
+        |  SELECT CAST(CAST(CAST(floor(max(l_partkey) / 4.0) AS BIGINT)
+        |      AS DECIMAL(15,2)) AS DECIMAL(18,2)) AS lo,
+        |    CAST(CAST(CAST(floor(max(l_partkey) / 2.0) AS BIGINT)
+        |      AS DECIMAL(15,2)) AS DECIMAL(18,2)) AS hi FROM lineitem)
+        |SELECT
+        |  (SELECT count(*) FROM t WHERE money = (SELECT m FROM probe))
+        |    AS n_eq,
+        |  (SELECT CAST(sum(qty_u) AS BIGINT) FROM t
+        |    WHERE money = (SELECT m FROM probe)) AS qty_eq,
+        |  (SELECT count(*) FROM t
+        |    WHERE money >= (SELECT lo FROM rngb)
+        |      AND money < (SELECT hi FROM rngb)) AS n_rng,
+        |  (SELECT CAST(sum(money) * 100 AS BIGINT) FROM t
+        |    WHERE money >= (SELECT lo FROM rngb)
+        |      AND money < (SELECT hi FROM rngb)) AS cents_rng,
+        |  CAST(0 AS BIGINT) AS n_absent,
+        |  TRUE AS pruned_eq, TRUE AS bloom_zero, TRUE AS pruned_rng"""
+        .stripMargin,
+      setup = { (s, d) =>
         Work.wipe(java.nio.file.Paths.get(path))
         val df = Tables.lineitem(s, d).select(
           col("l_partkey").cast("decimal(15,2)")
@@ -5205,42 +5046,41 @@ object Relational {
           PartSpec(Seq(PartField("money", "truncate", 10000L,
             "decimal(18,2)"))),
           statsCols = Seq("money"), bloomCol = Some("money"))
-      }
-      d
-    })
-    val pkr = Tables.lineitem(s, d)
-      .agg(min("l_partkey"), max("l_partkey")).collect().head
-    val (minPk, maxPk) = (pkr.getLong(0), pkr.getLong(1))
-    val probe = new java.math.BigDecimal(minPk).setScale(2)
-      .add(new java.math.BigDecimal("0.25"))
-    // SF-independent range: [maxPk/4, maxPk/2) whole units — always
-    // populated and always a strict subset of the bins
-    val rngLo = new java.math.BigDecimal(maxPk / 4).setScale(2)
-    val rngHi = new java.math.BigDecimal(maxPk / 2).setScale(2)
-    val t = s.read.format("graft_table").option("path", path).load()
-    val (Array(eq), Seq(Files(rEq, total))) = ScanMetrics.collect(
-      t.filter(col("money") === lit(probe))
-        .agg(count(lit(1)).as("n"), sum("qty_u").cast("long").as("q")))
-    require(rEq > 0 && rEq < total,
-      s"decimal equality probe did not prune: $rEq/$total")
-    // a value INSIDE the kept bin's bounds that never occurs (.26
-    // cents — every real value ends .25): partition and stats keep
-    // the bin, only the bloom proves it empty → zero files planned
-    val (nAbsent, Files(rAb, _)) = ScanMetrics.rowCount(t.filter(col("money") ===
-      lit(probe.add(new java.math.BigDecimal("0.01")))))
-    require(nAbsent == 0 && rAb == 0,
-      s"bloom did not prove the absent value away: $rAb files planned")
-    val (Array(rng), Seq(Files(rRng, _))) = ScanMetrics.collect(
-      t.filter(col("money") >= lit(rngLo) && col("money") < lit(rngHi))
-        .agg(count(lit(1)).as("n"),
-          (sum("money") * 100).cast("long").as("c")))
-    require(rRng > 0 && rRng < total,
-      s"decimal range probe did not prune: $rRng/$total")
-    import s.implicits._
-    Seq((eq.getLong(0), eq.getLong(1), rng.getLong(0), rng.getLong(1),
-      nAbsent, true, true, true))
-      .toDF("n_eq", "qty_eq", "n_rng", "cents_rng", "n_absent",
-        "pruned_eq", "bloom_zero", "pruned_rng")
+      }) { (s, d) =>
+      val pkr = Tables.lineitem(s, d)
+        .agg(min("l_partkey"), max("l_partkey")).collect().head
+      val (minPk, maxPk) = (pkr.getLong(0), pkr.getLong(1))
+      val probe = new java.math.BigDecimal(minPk).setScale(2)
+        .add(new java.math.BigDecimal("0.25"))
+      // SF-independent range: [maxPk/4, maxPk/2) whole units — always
+      // populated and always a strict subset of the bins
+      val rngLo = new java.math.BigDecimal(maxPk / 4).setScale(2)
+      val rngHi = new java.math.BigDecimal(maxPk / 2).setScale(2)
+      val t = s.read.format("graft_table").option("path", path).load()
+      val (Array(eq), Seq(Files(rEq, total))) = ScanMetrics.collect(
+        t.filter(col("money") === lit(probe))
+          .agg(count(lit(1)).as("n"), sum("qty_u").cast("long").as("q")))
+      require(rEq > 0 && rEq < total,
+        s"decimal equality probe did not prune: $rEq/$total")
+      // a value INSIDE the kept bin's bounds that never occurs (.26
+      // cents — every real value ends .25): partition and stats keep
+      // the bin, only the bloom proves it empty → zero files planned
+      val (nAbsent, Files(rAb, _)) = ScanMetrics.rowCount(t.filter(col("money") ===
+        lit(probe.add(new java.math.BigDecimal("0.01")))))
+      require(nAbsent == 0 && rAb == 0,
+        s"bloom did not prove the absent value away: $rAb files planned")
+      val (Array(rng), Seq(Files(rRng, _))) = ScanMetrics.collect(
+        t.filter(col("money") >= lit(rngLo) && col("money") < lit(rngHi))
+          .agg(count(lit(1)).as("n"),
+            (sum("money") * 100).cast("long").as("c")))
+      require(rRng > 0 && rRng < total,
+        s"decimal range probe did not prune: $rRng/$total")
+      import s.implicits._
+      Seq((eq.getLong(0), eq.getLong(1), rng.getLong(0), rng.getLong(1),
+        nAbsent, true, true, true))
+        .toDF("n_eq", "qty_eq", "n_rng", "cents_rng", "n_absent",
+          "pruned_eq", "bloom_zero", "pruned_rng")
+    }
   }
 
   /** q215 — STREAM INTO A BRANCH, oracle-gated (r20): a streaming
@@ -5258,36 +5098,34 @@ object Relational {
     * DuckDB recomputes the published aggregates (A + the streamed
     * slices) and the staged-lineage count.
     */
-  val streamToBranch = QueryDef("q215_stream_to_branch",
-    """WITH a AS (
-      |  SELECT l_orderkey * 10 + l_linenumber AS k,
-      |    CAST(floor(l_quantity * 100) AS BIGINT) AS qty_u
-      |  FROM lineitem
-      |  WHERE l_shipdate >= TIMESTAMP '1995-01-01'
-      |    AND l_shipdate < TIMESTAMP '1995-02-01'
-      |), strm AS (
-      |  SELECT l_orderkey * 10 + l_linenumber AS k,
-      |    CAST(floor(l_quantity * 100) AS BIGINT) AS qty_u
-      |  FROM lineitem
-      |  WHERE l_shipdate >= TIMESTAMP '1995-02-01'
-      |    AND l_shipdate < TIMESTAMP '1995-04-01'
-      |), pub AS (SELECT * FROM a UNION ALL SELECT * FROM strm)
-      |SELECT
-      |  (SELECT count(*) FROM pub) AS n_pub,
-      |  (SELECT CAST(sum(qty_u) AS BIGINT) FROM pub) AS qty_pub,
-      |  (SELECT count(*) FROM a) AS n_main_mid,
-      |  CAST(0 AS BIGINT) AS n_violations,
-      |  TRUE AS staged_base, TRUE AS cherry_picked""".stripMargin
-  ) { (s, d) =>
-    import graft.ops.SnapshotTable
+  val streamToBranch: QueryDef = {
     val path = Work.oracleDumpPath("q215_table")
-    def slice(lo: String, hi: String) = Tables.lineitem(s, d)
-      .filter(col("l_shipdate") >= lit(lo).cast("timestamp") &&
-        col("l_shipdate") < lit(hi).cast("timestamp"))
-      .select((col("l_orderkey") * 10 + col("l_linenumber")).as("k"),
-        floor(col("l_quantity") * 100).cast("long").as("qty_u"))
-    clusterLayouts.compute("q215", (_, prev) => {
-      if (prev != d) {
+    QueryDef("q215_stream_to_branch",
+      """WITH a AS (
+        |  SELECT l_orderkey * 10 + l_linenumber AS k,
+        |    CAST(floor(l_quantity * 100) AS BIGINT) AS qty_u
+        |  FROM lineitem
+        |  WHERE l_shipdate >= TIMESTAMP '1995-01-01'
+        |    AND l_shipdate < TIMESTAMP '1995-02-01'
+        |), strm AS (
+        |  SELECT l_orderkey * 10 + l_linenumber AS k,
+        |    CAST(floor(l_quantity * 100) AS BIGINT) AS qty_u
+        |  FROM lineitem
+        |  WHERE l_shipdate >= TIMESTAMP '1995-02-01'
+        |    AND l_shipdate < TIMESTAMP '1995-04-01'
+        |), pub AS (SELECT * FROM a UNION ALL SELECT * FROM strm)
+        |SELECT
+        |  (SELECT count(*) FROM pub) AS n_pub,
+        |  (SELECT CAST(sum(qty_u) AS BIGINT) FROM pub) AS qty_pub,
+        |  (SELECT count(*) FROM a) AS n_main_mid,
+        |  CAST(0 AS BIGINT) AS n_violations,
+        |  TRUE AS staged_base, TRUE AS cherry_picked""".stripMargin,
+      setup = { (s, d) =>
+        def slice(lo: String, hi: String) = Tables.lineitem(s, d)
+          .filter(col("l_shipdate") >= lit(lo).cast("timestamp") &&
+            col("l_shipdate") < lit(hi).cast("timestamp"))
+          .select((col("l_orderkey") * 10 + col("l_linenumber")).as("k"),
+            floor(col("l_quantity") * 100).cast("long").as("qty_u"))
         Work.wipe(java.nio.file.Paths.get(path))
         import s.implicits._
         SnapshotTable.append(slice("1995-01-01", "1995-02-01"),
@@ -5332,22 +5170,21 @@ object Relational {
         val pr = SnapshotTable.publish(s, path, "main", "staging")
         require(pr.mode == "cherry-pick",
           s"expected cherry-pick past the poisoned ancestor: $pr")
-      }
-      d
-    })
-    val nMainMid = Tables.lineitem(s, d)
-      .filter(col("l_shipdate") >= lit("1995-01-01").cast("timestamp") &&
-        col("l_shipdate") < lit("1995-02-01").cast("timestamp")).count()
-    val t = s.read.format("graft_table").option("path", path)
-      .option("ref", "main").load()
-    val nViol = t.filter(col("qty_u") < 0).count()
-    require(nViol == 0, "published state leaked the poisoned batch")
-    val pub = t.agg(count(lit(1)).as("n"),
-      sum("qty_u").cast("long").as("q")).collect().head
-    import s.implicits._
-    Seq((pub.getLong(0), pub.getLong(1), nMainMid, nViol, true, true))
-      .toDF("n_pub", "qty_pub", "n_main_mid", "n_violations",
-        "staged_base", "cherry_picked")
+      }) { (s, d) =>
+      val nMainMid = Tables.lineitem(s, d)
+        .filter(col("l_shipdate") >= lit("1995-01-01").cast("timestamp") &&
+          col("l_shipdate") < lit("1995-02-01").cast("timestamp")).count()
+      val t = s.read.format("graft_table").option("path", path)
+        .option("ref", "main").load()
+      val nViol = t.filter(col("qty_u") < 0).count()
+      require(nViol == 0, "published state leaked the poisoned batch")
+      val pub = t.agg(count(lit(1)).as("n"),
+        sum("qty_u").cast("long").as("q")).collect().head
+      import s.implicits._
+      Seq((pub.getLong(0), pub.getLong(1), nMainMid, nViol, true, true))
+        .toDF("n_pub", "qty_pub", "n_main_mid", "n_violations",
+          "staged_base", "cherry_picked")
+    }
   }
 
   val all: Seq[QueryDef] = Seq(

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
+import graft.ops.{IvfIndex, SnapshotTable}
 
 /** Similarity search over `embeddings.parquet` (vec_id, embedding:
   * array<float> ×64, label).
@@ -33,11 +34,6 @@ object Similarity {
 
   private def toDouble(emb: Column): Column =
     transform(emb, x => x.cast("double"))
-
-  // per-dataset fixture memo (the Relational.clusterLayouts pattern):
-  // build the q184 versioned table + indexes once per sf dir
-  private val fixtureFor =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** Embedding dimensionality, read once at plan-construction from a
     * single row — lets the hyperplane matrix be a precomputed literal
@@ -197,7 +193,7 @@ object Similarity {
     // fraction of the corpus SHRINKS as the corpus grows, instead of the
     // fixed k=16 that probed ~25% of a corpus of any size
     val k = graft.ops.IvfIndex.deriveK(
-      graft.Tables.cachedCount(s, d, "embeddings"))
+      graft.Tables.rowCount(s, d, "embeddings"))
     val nprobe = graft.ops.IvfIndex.deriveNprobe(k)
     val centroids = trainCodebook(sample, k, iters = 8)
     val corpus = e
@@ -439,11 +435,11 @@ object Similarity {
     val qv = Tables.embeddings(s, d).select(col("vec_id"),
       transform(col("embedding"),
         x => floor(x.cast("double") * 1000).cast("long")).as("v"))
-    // k tracks the corpus (see [[KmeansCtes]]): the cached table
+    // k tracks the corpus (see [[KmeansCtes]]): the table
     // cardinality (footer metadata, no extra job), then k and the
     // seed stride are plan-time literals — the scale-safe plan IS
     // the committed plan
-    val n = graft.Tables.cachedCount(s, d, "embeddings")
+    val n = graft.Tables.rowCount(s, d, "embeddings")
     val k = math.max(4L, n / 125)
     val stride = math.min(100L, n / k)
     val c0 = qv.filter(col("vec_id") % stride === 0 &&
@@ -775,19 +771,20 @@ object Similarity {
     * pairs per version, so a probe that answered from the wrong
     * version's index hash-mismatches.
     */
-  val versionedAnn = QueryDef("q184_versioned_ann",
-    """SELECT version, q_id, CAST(rn AS INT) AS rank, neighbor_id,
-      |  cos_r AS cos
-      |FROM (SELECT *, row_number() OVER (PARTITION BY version, q_id
-      |        ORDER BY cos DESC, neighbor_id) AS rn
-      |      FROM read_parquet('/tmp/graft-oracle/q184_pairs/*.parquet'))
-      |WHERE rn <= 3 ORDER BY version, q_id, rank""".stripMargin) { (s, d) =>
-    import graft.ops.{IvfIndex, SnapshotTable}
+  val versionedAnn: QueryDef = {
     val path = graft.Work.oracleDumpPath("q184_table")
-    val n = graft.Tables.cachedCount(s, d, "embeddings")
-    val cut = n / 4 - 1 // the COW delete drops vec_id in [0, cut]
-    fixtureFor.compute("q184", (_, prev) => {
-      if (prev != d) {
+    // the COW delete drops vec_id in [0, cut]
+    def cutOf(s: SparkSession, d: String) =
+      graft.Tables.rowCount(s, d, "embeddings") / 4 - 1
+    QueryDef("q184_versioned_ann",
+      """SELECT version, q_id, CAST(rn AS INT) AS rank, neighbor_id,
+        |  cos_r AS cos
+        |FROM (SELECT *, row_number() OVER (PARTITION BY version, q_id
+        |        ORDER BY cos DESC, neighbor_id) AS rn
+        |      FROM read_parquet('/tmp/graft-oracle/q184_pairs/*.parquet'))
+        |WHERE rn <= 3 ORDER BY version, q_id, rank""".stripMargin,
+      setup = { (s, d) =>
+        val cut = cutOf(s, d)
         graft.Work.wipe(java.nio.file.Paths.get(path))
         val e = Tables.embeddings(s, d)
           .select(col("vec_id"), toDouble(col("embedding")).as("emb"))
@@ -796,52 +793,52 @@ object Similarity {
         IvfIndex.buildAt(s, path, 1)
         SnapshotTable.deleteStatsRange(s, path, 0, cut)
         IvfIndex.buildAt(s, path, 2)
+      }) { (s, d) =>
+      val cut = cutOf(s, d)
+      // a version without an index refuses — never a silent answer from
+      // another version's index
+      val stale =
+        try { IvfIndex.openAt(s, path, 3); false }
+        catch { case _: IllegalArgumentException => true }
+      require(stale, "openAt served a version that has no index")
+      def probePairs(version: Long) = {
+        val idx = IvfIndex.openAt(s, path, version)
+        val nprobe = IvfIndex.deriveNprobe(idx.centroids.length)
+        // survivor queries only, so both versions answer the same batch
+        val q = idx.corpus
+          .filter(col("vec_id") % 100 === 0 && col("vec_id") > cut)
+          .select(col("vec_id").as("q_id"), col("emb").as("qe"))
+          .withColumn("qn", sqrt(dot(col("qe"), col("qe"))))
+          .withColumn("probe_cell",
+            explode(transform(
+              IvfIndex.nearestCells(col("qe"), idx.centroids, nprobe),
+              _.getField("cid"))))
+        idx.corpus.join(broadcast(q),
+            col("cell") === col("probe_cell") &&
+              col("vec_id") =!= col("q_id"))
+          .select(lit(version).as("version"), col("q_id"),
+            col("vec_id").as("neighbor_id"),
+            (dot(col("qe"), col("emb")) / (col("qn") * col("nrm")))
+              .as("cos"))
+          .withColumn("cos_r", round(col("cos"), 6))
       }
-      d
-    })
-    // a version without an index refuses — never a silent answer from
-    // another version's index
-    val stale =
-      try { IvfIndex.openAt(s, path, 3); false }
-      catch { case _: IllegalArgumentException => true }
-    require(stale, "openAt served a version that has no index")
-    def probePairs(version: Long) = {
-      val idx = IvfIndex.openAt(s, path, version)
-      val nprobe = IvfIndex.deriveNprobe(idx.centroids.length)
-      // survivor queries only, so both versions answer the same batch
-      val q = idx.corpus
-        .filter(col("vec_id") % 100 === 0 && col("vec_id") > cut)
-        .select(col("vec_id").as("q_id"), col("emb").as("qe"))
-        .withColumn("qn", sqrt(dot(col("qe"), col("qe"))))
-        .withColumn("probe_cell",
-          explode(transform(
-            IvfIndex.nearestCells(col("qe"), idx.centroids, nprobe),
-            _.getField("cid"))))
-      idx.corpus.join(broadcast(q),
-          col("cell") === col("probe_cell") &&
-            col("vec_id") =!= col("q_id"))
-        .select(lit(version).as("version"), col("q_id"),
-          col("vec_id").as("neighbor_id"),
-          (dot(col("qe"), col("emb")) / (col("qn") * col("nrm")))
-            .as("cos"))
-        .withColumn("cos_r", round(col("cos"), 6))
+      val p1 = probePairs(1L)
+      val p2 = probePairs(2L)
+      // lineage is live, not decorative: v1's index still reaches the
+      // deleted quarter, v2's cannot
+      require(p1.filter(col("neighbor_id") <= cut).limit(1).count() == 1L,
+        "v1 probe lost the pre-delete corpus")
+      require(p2.filter(col("neighbor_id") <= cut).limit(1).count() == 0L,
+        "v2 probe resurrected deleted vectors — wrong version's index")
+      val dumped = graft.Work.oracleDump(s, "q184_pairs",
+        p1.unionByName(p2), d)
+      val rn = row_number().over(Window.partitionBy(col("version"),
+        col("q_id")).orderBy(col("cos").desc, col("neighbor_id")))
+      dumped.withColumn("rank", rn).filter(col("rank") <= 3)
+        .select(col("version"), col("q_id"), col("rank"),
+          col("neighbor_id"), col("cos_r").as("cos"))
+        .orderBy("version", "q_id", "rank")
     }
-    val p1 = probePairs(1L)
-    val p2 = probePairs(2L)
-    // lineage is live, not decorative: v1's index still reaches the
-    // deleted quarter, v2's cannot
-    require(p1.filter(col("neighbor_id") <= cut).limit(1).count() == 1L,
-      "v1 probe lost the pre-delete corpus")
-    require(p2.filter(col("neighbor_id") <= cut).limit(1).count() == 0L,
-      "v2 probe resurrected deleted vectors — wrong version's index")
-    val dumped = graft.Work.oracleDump(s, "q184_pairs",
-      p1.unionByName(p2), d)
-    val rn = row_number().over(Window.partitionBy(col("version"),
-      col("q_id")).orderBy(col("cos").desc, col("neighbor_id")))
-    dumped.withColumn("rank", rn).filter(col("rank") <= 3)
-      .select(col("version"), col("q_id"), col("rank"),
-        col("neighbor_id"), col("cos_r").as("cos"))
-      .orderBy("version", "q_id", "rank")
   }
 
   val all: Seq[QueryDef] = Seq(cosineTopK, lshBuckets, annBucketed, sqlVecFunctions, ivfAnn,

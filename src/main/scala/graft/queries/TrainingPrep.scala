@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
+import graft.ops.SnapshotTable
 
 /** Training-data preparation operators — the corpus-assembly stage that sits
   * between the dedup/quality layer (TextPipeline) and the trainer:
@@ -145,9 +146,9 @@ object TrainingPrep {
     val filterBytes = {
       // filter sizing needs only an order of magnitude (fpp shapes the
       // survivor-set size, never correctness): docs/50 bench docs at a
-      // generous 256 distinct grams each, from the cached table count
+      // generous 256 distinct grams each, from the footer row count
       val expected =
-        math.max(1000L, Tables.cachedCount(s, d, "documents") / 50 * 256)
+        math.max(1000L, Tables.rowCount(s, d, "documents") / 50 * 256)
       import s.implicits._
       val bf = benchGrams.select(xxhash64(col("g")).as("h")).as[Long].rdd
         .aggregate(org.apache.spark.util.sketch.BloomFilter.create(expected, 0.01))(
@@ -750,40 +751,38 @@ object TrainingPrep {
     * duplicate, re-kills an already-dead row, or loses a survivor
     * hash-mismatches.
     */
-  val corpusGovernance = QueryDef("q181_corpus_governance",
-    """WITH docs AS (SELECT doc_id, text, n_chars FROM documents),
-      |keep1 AS (SELECT min(doc_id) AS doc_id FROM docs
-      |  GROUP BY array_to_string(string_split(trim(text), ' ')[1:8], ' ')),
-      |sp AS (
-      |  SELECT doc_id, doc_id % 50 = 0 AS is_bench,
-      |    string_split(trim(text), ' ') AS ts
-      |  FROM docs),
-      |grams AS (
-      |  SELECT doc_id, is_bench,
-      |    unnest(list_distinct(list_transform(generate_series(1, len(ts) - 4),
-      |      i -> array_to_string(ts[i:i+4], ' ')))) AS g
-      |  FROM sp),
-      |contaminated AS (
-      |  SELECT DISTINCT c.doc_id
-      |  FROM grams c JOIN (SELECT DISTINCT g FROM grams WHERE is_bench) b
-      |    ON c.g = b.g
-      |  WHERE NOT c.is_bench),
-      |final AS (
-      |  SELECT * FROM docs
-      |  WHERE doc_id IN (SELECT doc_id FROM keep1)
-      |    AND doc_id NOT IN (SELECT doc_id FROM contaminated))
-      |SELECT
-      |  (SELECT count(*) FROM docs) AS n_v1,
-      |  (SELECT count(*) FROM docs
-      |    WHERE doc_id IN (SELECT doc_id FROM keep1)) AS n_dedup,
-      |  (SELECT count(*) FROM final) AS n_final,
-      |  (SELECT CAST(sum(n_chars) AS BIGINT) FROM final) AS chars_final,
-      |  TRUE AS segments_shared""".stripMargin) {
-    (s, d) =>
-    import graft.ops.SnapshotTable
+  val corpusGovernance: QueryDef = {
     val path = graft.Work.oracleDumpPath("q181_table")
-    corpusTables.compute("q181", (_, prev) => {
-      if (prev != d) {
+    QueryDef("q181_corpus_governance",
+      """WITH docs AS (SELECT doc_id, text, n_chars FROM documents),
+        |keep1 AS (SELECT min(doc_id) AS doc_id FROM docs
+        |  GROUP BY array_to_string(string_split(trim(text), ' ')[1:8], ' ')),
+        |sp AS (
+        |  SELECT doc_id, doc_id % 50 = 0 AS is_bench,
+        |    string_split(trim(text), ' ') AS ts
+        |  FROM docs),
+        |grams AS (
+        |  SELECT doc_id, is_bench,
+        |    unnest(list_distinct(list_transform(generate_series(1, len(ts) - 4),
+        |      i -> array_to_string(ts[i:i+4], ' ')))) AS g
+        |  FROM sp),
+        |contaminated AS (
+        |  SELECT DISTINCT c.doc_id
+        |  FROM grams c JOIN (SELECT DISTINCT g FROM grams WHERE is_bench) b
+        |    ON c.g = b.g
+        |  WHERE NOT c.is_bench),
+        |final AS (
+        |  SELECT * FROM docs
+        |  WHERE doc_id IN (SELECT doc_id FROM keep1)
+        |    AND doc_id NOT IN (SELECT doc_id FROM contaminated))
+        |SELECT
+        |  (SELECT count(*) FROM docs) AS n_v1,
+        |  (SELECT count(*) FROM docs
+        |    WHERE doc_id IN (SELECT doc_id FROM keep1)) AS n_dedup,
+        |  (SELECT count(*) FROM final) AS n_final,
+        |  (SELECT CAST(sum(n_chars) AS BIGINT) FROM final) AS chars_final,
+        |  TRUE AS segments_shared""".stripMargin,
+      setup = { (s, d) =>
         graft.Work.wipe(java.nio.file.Paths.get(path))
         // the curation table runs SEGMENTED (threshold 1): the
         // metadata plane must be O(Δ) — a curation commit re-
@@ -861,25 +860,21 @@ object TrainingPrep {
               s.conf.unset("spark.graft.manifest.segmentThreshold")
           }
         }
-      }
-      d
-    })
-    val (s1, _, r1) = SnapshotTable.scanAt(s, path, 1)
-    val (s2, _, r2) = SnapshotTable.scanAt(s, path, 2)
-    val (s3, _, r3) = SnapshotTable.scanAt(s, path, 3)
-    val n1 = s1.count(); val n2 = s2.count()
-    val f = s3.agg(count(lit(1)), sum("n_chars").cast("long"))
-      .collect().head
-    require(n1 == r1 && n2 == r2 && f.getLong(0) == r3,
-      "scan/manifest drift across the governance pipeline")
-    import s.implicits._
-    Seq((n1, n2, f.getLong(0), f.getLong(1), true))
-      .toDF("n_v1", "n_dedup", "n_final", "chars_final",
-        "segments_shared")
+      }) { (s, d) =>
+      val (s1, _, r1) = SnapshotTable.scanAt(s, path, 1)
+      val (s2, _, r2) = SnapshotTable.scanAt(s, path, 2)
+      val (s3, _, r3) = SnapshotTable.scanAt(s, path, 3)
+      val n1 = s1.count(); val n2 = s2.count()
+      val f = s3.agg(count(lit(1)), sum("n_chars").cast("long"))
+        .collect().head
+      require(n1 == r1 && n2 == r2 && f.getLong(0) == r3,
+        "scan/manifest drift across the governance pipeline")
+      import s.implicits._
+      Seq((n1, n2, f.getLong(0), f.getLong(1), true))
+        .toDF("n_v1", "n_dedup", "n_final", "chars_final",
+          "segments_shared")
+    }
   }
-
-  private val corpusTables =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   val all: Seq[QueryDef] =
     Seq(decontaminate, bloomDecontaminate, repetition, stratifiedSample,

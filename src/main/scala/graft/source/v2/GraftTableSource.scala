@@ -96,8 +96,16 @@ object GraftTableSource {
   // is cacheable — load() resolves twice (inferSchema + getTable) and
   // bench iterations re-plan; without the memo every plan pays the
   // manifest + footer schema reads again. Bounded, cleared wholesale.
-  private val resolved =
-    new java.util.concurrent.ConcurrentHashMap[(String, Long), Resolved]()
+  // Keyed (path, canonical dir, version): [[invalidate]] matches the
+  // canonical dir, so it needs no filesystem call per cached key.
+  private val resolved = new java.util.concurrent.ConcurrentHashMap[
+    (String, String, Long), Resolved]()
+
+  // canonical form with a trailing separator (the
+  // [[SnapshotTable.invalidateSegments]] rule): `file:/x` and `/x`
+  // match, and a prefix test on `/wh/t1/` spares `/wh/t10`
+  private def canonDir(p: String): String =
+    graft.ops.TableIo.forPath(p).canon(p).stripSuffix("/") + "/"
 
   /** CREATE TABLE intent for a table with no committed versions yet:
     * the declared schema (types included — nothing else can know them
@@ -179,12 +187,15 @@ object GraftTableSource {
     graft.ops.TableIo.forPath(path)
       .writeAtomic(markerPath(path), renderMarker(m))
 
-  /** Forget every cached resolution for `path` — REQUIRED after DROP
-    * TABLE: a re-created table reuses version numbers, so the
-    * (path, version) key would serve the dropped table's metadata.
+  /** Forget every cached resolution for a table at or under `path` —
+    * REQUIRED after DROP TABLE or a wipe: a re-created table reuses
+    * version numbers, so the (path, version) key would serve the
+    * dropped table's metadata.
     */
-  def invalidate(path: String): Unit =
-    resolved.keySet.removeIf(_._1 == path)
+  def invalidate(path: String): Unit = {
+    val prefix = canonDir(path)
+    resolved.keySet.removeIf(_._2.startsWith(prefix))
+  }
 
   def resolve(props: Map[String, String]): Resolved = {
     val spark = SparkSession.active
@@ -204,7 +215,7 @@ object GraftTableSource {
       .getOrElse(SnapshotTable.latestVersion(path))
     require(version > 0, s"graft_table: snapshot table $path does not exist")
     if (resolved.size > 256) resolved.clear()
-    resolved.computeIfAbsent((path, version),
+    resolved.computeIfAbsent((path, canonDir(path), version),
       _ => resolveUncached(spark, path, version))
   }
 
