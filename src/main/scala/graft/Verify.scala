@@ -2,8 +2,9 @@ package graft
 import java.nio.file.{Files, Paths}
 
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
-  * plus oracle_sql.json, for the driver's DuckDB compare. Each query's
-  * `setup` runs first (its fixtures), then its body is dumped.
+  * plus oracle_sql.json, for the driver's DuckDB compare. The oracle
+  * dump dir starts empty; each query's `setup` runs first (its fixtures
+  * and oracle dumps), then its body is dumped.
   *
   * Failures are surfaced, not swallowed: a throwing query gets a
   * `<name>/_FAILED` marker file (so a missing parquet dir cannot silently
@@ -20,6 +21,10 @@ object Verify {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = GraftSession.build(cpus)
     new java.io.File(outDir).mkdirs()
+    // every dump the oracle reads must come from this run's setups: a
+    // dump left by an earlier run would pass a query whose setup no
+    // longer writes it
+    Work.wipe(Paths.get(Work.oracleDir))
     val selected = SparkEntry.defs.toSeq.sortBy(_._1)
       .filter { case (n, _) => only.isEmpty || only(n) }
     val failures = selected.flatMap {

@@ -203,11 +203,12 @@ object Functions {
       |FROM documents d
       |JOIN read_parquet('/tmp/graft-oracle/q28_chain/*.parquet') o
       |  ON d.doc_id = o.doc_id
-      |ORDER BY d.doc_id""".stripMargin) { (s, d) =>
-    graft.Work.oracleDump(s, "q28_chain", Tables.documents(s, d)
-      .select(col("doc_id"), md5(col("text")).as("inner_hex"),
-        blockMultihashMd5(col("text")).as("checksum_block")), d)
-  }
+      |ORDER BY d.doc_id""".stripMargin,
+    setup = { (s, d) =>
+      graft.Work.oracleDump(s, "q28_chain", Tables.documents(s, d)
+        .select(col("doc_id"), md5(col("text")).as("inner_hex"),
+          blockMultihashMd5(col("text")).as("checksum_block")))
+    }) { (s, _) => s.read.parquet(graft.Work.oracleDumpPath("q28_chain")) }
 
   /** F15/F16 — mime-type guess + static bit-depth/byte-order by extension
     * over a six-way extension mix (tif/tiff/jpg/png/nc/json).

@@ -1,6 +1,6 @@
 package graft.queries
 
-import org.apache.spark.sql.Row
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.QueryDef
 import graft.multimodal.Multimodal
@@ -27,41 +27,41 @@ object MultimodalQueries {
       |UNION ALL
       |SELECT media_id, 'audio' AS kind, zero_crossings AS metric
       |FROM read_parquet('/tmp/graft-oracle/q49_audio/*.parquet')
-      |ORDER BY kind, media_id""".stripMargin) { (s, d) =>
-    import s.implicits._
-    val n = math.min(graft.Tables.rowCount(s, d, "documents"), 64L).toInt
-    val rows = (0 until n).map { i =>
-      val kind = i % 3 match {
-        case 0 => "image"; case 1 => "video"; case 2 => "audio"
+      |ORDER BY kind, media_id""".stripMargin,
+    setup = { (s, d) =>
+      val n = math.min(graft.Tables.rowCount(s, d, "documents"), 64L).toInt
+      val rows = (0 until n).map { i =>
+        val kind = i % 3 match {
+          case 0 => "image"; case 1 => "video"; case 2 => "audio"
+        }
+        val content = kind match {
+          case "image" => Thumbnail.jpeg(
+            Array.tabulate(16, 16)((y, x) => (y * 16 + x + i).toDouble))
+          case "video" =>
+            // real MJPEG/AVI payload — the stub path is gated off by default
+            graft.multimodal.Avi.write((0 until 4).map(fr => Thumbnail.jpeg(
+              Array.tabulate(12, 12)((y, x) => (y * 12 + x + i + fr).toDouble))),
+              12, 12, fps = 4)
+          case _ => Array.tabulate[Byte](64)(b => ((b * (i + 3)) % 127).toByte)
+        }
+        Row(i.toLong, kind, s"$kind/x", content,
+          Map("duration_ms" -> ((i + 1) * 500).toString))
       }
-      val content = kind match {
-        case "image" => Thumbnail.jpeg(
-          Array.tabulate(16, 16)((y, x) => (y * 16 + x + i).toDouble))
-        case "video" =>
-          // real MJPEG/AVI payload — the stub path is gated off by default
-          graft.multimodal.Avi.write((0 until 4).map(fr => Thumbnail.jpeg(
-            Array.tabulate(12, 12)((y, x) => (y * 12 + x + i + fr).toDouble))),
-            12, 12, fps = 4)
-        case _ => Array.tabulate[Byte](64)(b => ((b * (i + 3)) % 127).toByte)
-      }
-      Row(i.toLong, kind, s"$kind/x", content,
-        Map("duration_ms" -> ((i + 1) * 500).toString))
-    }
-    val media = s.createDataFrame(
-      s.sparkContext.parallelize(rows, 4), Multimodal.mediaSchema)
-    val imgFeats = graft.Work.oracleDump(s, "q49_img",
-      Multimodal.imageFeatures(media), d)
-    val frames = graft.Work.oracleDump(s, "q49_frames",
-      Multimodal.sampleFrames(media, 3).select("media_id", "frame_idx"), d)
-    val audFeats = graft.Work.oracleDump(s, "q49_audio",
-      Multimodal.audioFeatures(media), d)
-    val img = imgFeats
+      val media = s.createDataFrame(
+        s.sparkContext.parallelize(rows, 4), Multimodal.mediaSchema)
+      graft.Work.oracleDump(s, "q49_img", Multimodal.imageFeatures(media))
+      graft.Work.oracleDump(s, "q49_frames",
+        Multimodal.sampleFrames(media, 3).select("media_id", "frame_idx"))
+      graft.Work.oracleDump(s, "q49_audio", Multimodal.audioFeatures(media))
+    }) { (s, _) =>
+    def dumped(tag: String) = s.read.parquet(graft.Work.oracleDumpPath(tag))
+    val img = dumped("q49_img")
       .select(col("media_id"), lit("image").as("kind"),
         (col("width") * col("height")).cast("long").as("metric"))
-    val vid = frames
+    val vid = dumped("q49_frames")
       .groupBy(col("media_id")).agg(count(lit(1)).as("metric"))
       .select(col("media_id"), lit("video").as("kind"), col("metric"))
-    val aud = audFeats
+    val aud = dumped("q49_audio")
       .select(col("media_id"), lit("audio").as("kind"),
         col("zero_crossings").as("metric"))
     img.unionByName(vid).unionByName(aud)
@@ -76,45 +76,53 @@ object MultimodalQueries {
     * aggregation cross-engine-checked. A WAV/FLAC pair of the same
     * signal must produce identical features (lossless round-trip).
     */
-  val audioPipeline = QueryDef("q79_audio_features",
-    """SELECT media_id, codec,
-      |  CAST(len(vals) AS BIGINT) * 1000 // sample_rate AS duration_ms,
-      |  round(sqrt(list_sum(list_transform(vals, x -> x * x)) / len(vals)), 6)
-      |    AS rms,
-      |  CAST(list_sum(list_transform(generate_series(2, len(vals)),
-      |    i -> CASE WHEN (vals[i] < 0) <> (vals[i-1] < 0) THEN 1 ELSE 0 END))
-      |    AS BIGINT) AS zero_crossings
-      |FROM read_parquet('/tmp/graft-oracle/q79_samples/*.parquet')
-      |ORDER BY media_id""".stripMargin) { (s, d) =>
-    import s.implicits._
+  val audioPipeline: QueryDef = {
     import graft.multimodal.{Flac, Wav}
-    val n = 24
-    val rows = (0 until n).map { i =>
-      val len = 1200 + (i % 3) * 100
-      val sig = Array.tabulate(len)(t => math.sin(t * (0.01 + i * 0.001)) * 0.7)
-      val codec = if (i % 2 == 0) "wav" else "flac"
-      val content =
-        if (codec == "wav") Wav.write(sig, 8000) else Flac.write(sig, 8000)
-      Row(i.toLong, "audio", s"audio/$codec", content,
-        Map("duration_ms" -> "0"))
+    def media(s: SparkSession) = {
+      val n = 24
+      val rows = (0 until n).map { i =>
+        val len = 1200 + (i % 3) * 100
+        val sig =
+          Array.tabulate(len)(t => math.sin(t * (0.01 + i * 0.001)) * 0.7)
+        val codec = if (i % 2 == 0) "wav" else "flac"
+        val content =
+          if (codec == "wav") Wav.write(sig, 8000) else Flac.write(sig, 8000)
+        Row(i.toLong, "audio", s"audio/$codec", content,
+          Map("duration_ms" -> "0"))
+      }
+      s.createDataFrame(
+        s.sparkContext.parallelize(rows, 4), Multimodal.mediaSchema)
     }
-    val media = s.createDataFrame(
-      s.sparkContext.parallelize(rows, 4), Multimodal.mediaSchema)
-    // decoded samples dumped once (memoized) so the oracle starts from
-    // the raw PCM, not from our own feature values
-    val samples = media.select(col("media_id"), col("media_type"), col("content"))
-      .as[(Long, String, Array[Byte])]
-      .map { case (id, mt, bytes) =>
-        val pcm = Wav.decode(bytes).orElse(Flac.decode(bytes)).get
-        (id, mt.stripPrefix("audio/"), pcm.sampleRate, pcm.samples)
-      }.toDF("media_id", "codec", "sample_rate", "vals")
-    graft.Work.oracleDump(s, "q79_samples", samples, d)
-    val codecs = media.select(col("media_id"),
-      regexp_replace(col("media_type"), "audio/", "").as("codec"))
-    Multimodal.audioFeatures(media)
-      .join(codecs, Seq("media_id"))
-      .select(col("media_id"), col("codec"), col("duration_ms"),
-        round(col("rms"), 6).as("rms"), col("zero_crossings"))
+    QueryDef("q79_audio_features",
+      """SELECT media_id, codec,
+        |  CAST(len(vals) AS BIGINT) * 1000 // sample_rate AS duration_ms,
+        |  round(sqrt(list_sum(list_transform(vals, x -> x * x)) / len(vals)), 6)
+        |    AS rms,
+        |  CAST(list_sum(list_transform(generate_series(2, len(vals)),
+        |    i -> CASE WHEN (vals[i] < 0) <> (vals[i-1] < 0) THEN 1 ELSE 0 END))
+        |    AS BIGINT) AS zero_crossings
+        |FROM read_parquet('/tmp/graft-oracle/q79_samples/*.parquet')
+        |ORDER BY media_id""".stripMargin,
+      setup = { (s, _) =>
+        import s.implicits._
+        // the oracle starts from the decoded PCM, not from our own
+        // feature values
+        graft.Work.oracleDump(s, "q79_samples", media(s)
+          .select(col("media_id"), col("media_type"), col("content"))
+          .as[(Long, String, Array[Byte])]
+          .map { case (id, mt, bytes) =>
+            val pcm = Wav.decode(bytes).orElse(Flac.decode(bytes)).get
+            (id, mt.stripPrefix("audio/"), pcm.sampleRate, pcm.samples)
+          }.toDF("media_id", "codec", "sample_rate", "vals"))
+      }) { (s, _) =>
+      val m = media(s)
+      val codecs = m.select(col("media_id"),
+        regexp_replace(col("media_type"), "audio/", "").as("codec"))
+      Multimodal.audioFeatures(m)
+        .join(codecs, Seq("media_id"))
+        .select(col("media_id"), col("codec"), col("duration_ms"),
+          round(col("rms"), 6).as("rms"), col("zero_crossings"))
+    }
   }
 
   /** Spectral audio features from REAL samples ([[graft.multimodal
@@ -141,40 +149,42 @@ object MultimodalQueries {
       |    AS n_active
       |FROM (SELECT *, max(p) OVER (PARTITION BY media_id) AS mp,
       |        sum(p) OVER (PARTITION BY media_id) AS tp FROM b)
-      |GROUP BY media_id ORDER BY media_id""".stripMargin) { (s, d) =>
-    import s.implicits._
-    import graft.multimodal.{Dsp, Flac, Wav}
-    val n = 16
-    val fftN = 1024
-    val rows = (0 until n).map { i =>
-      val rate = 8000
-      // bin-centered sine (k = 40 + 7i) + for odd ids a second tone
-      val k1 = 40 + 7 * i
-      val sig = Array.tabulate(1536) { t =>
-        val w1 = math.sin(2 * math.Pi * k1 * t / fftN.toDouble) * 0.7
-        val w2 = if (i % 2 == 1)
-          math.sin(2 * math.Pi * (k1 + 100) * t / fftN.toDouble) * 0.3
-        else 0.0
-        w1 + w2
+      |GROUP BY media_id ORDER BY media_id""".stripMargin,
+    setup = { (s, _) =>
+      import s.implicits._
+      import graft.multimodal.{Dsp, Flac, Wav}
+      val n = 16
+      val fftN = 1024
+      val rows = (0 until n).map { i =>
+        val rate = 8000
+        // bin-centered sine (k = 40 + 7i) + for odd ids a second tone
+        val k1 = 40 + 7 * i
+        val sig = Array.tabulate(1536) { t =>
+          val w1 = math.sin(2 * math.Pi * k1 * t / fftN.toDouble) * 0.7
+          val w2 = if (i % 2 == 1)
+            math.sin(2 * math.Pi * (k1 + 100) * t / fftN.toDouble) * 0.3
+          else 0.0
+          w1 + w2
+        }
+        val codec = if (i % 2 == 0) "wav" else "flac"
+        val content =
+          if (codec == "wav") Wav.write(sig, rate) else Flac.write(sig, rate)
+        Row(i.toLong, "audio", s"audio/$codec", content,
+          Map("duration_ms" -> "0"))
       }
-      val codec = if (i % 2 == 0) "wav" else "flac"
-      val content =
-        if (codec == "wav") Wav.write(sig, rate) else Flac.write(sig, rate)
-      Row(i.toLong, "audio", s"audio/$codec", content,
-        Map("duration_ms" -> "0"))
-    }
-    val media = s.createDataFrame(
-      s.sparkContext.parallelize(rows, 4), Multimodal.mediaSchema)
-    val bins = media.select(col("media_id"), col("content"))
-      .as[(Long, Array[Byte])]
-      .map { case (id, bytes) =>
-        val pcm = Wav.decode(bytes).orElse(Flac.decode(bytes)).get
-        val p = Dsp.powerSpectrum(pcm.samples, fftN)
-        (id, pcm.sampleRate, p.map(v => math.floor(v * 1e6).toLong))
-      }.toDF("media_id", "sample_rate", "bins")
-    val dumped = graft.Work.oracleDump(s, "q124_bins", bins, d)
-    val withK = dumped.select(col("media_id"),
-      posexplode(col("bins")).as(Seq("k", "p")))
+      val media = s.createDataFrame(
+        s.sparkContext.parallelize(rows, 4), Multimodal.mediaSchema)
+      val bins = media.select(col("media_id"), col("content"))
+        .as[(Long, Array[Byte])]
+        .map { case (id, bytes) =>
+          val pcm = Wav.decode(bytes).orElse(Flac.decode(bytes)).get
+          val p = Dsp.powerSpectrum(pcm.samples, fftN)
+          (id, pcm.sampleRate, p.map(v => math.floor(v * 1e6).toLong))
+        }.toDF("media_id", "sample_rate", "bins")
+      graft.Work.oracleDump(s, "q124_bins", bins)
+    }) { (s, _) =>
+    val withK = s.read.parquet(graft.Work.oracleDumpPath("q124_bins"))
+      .select(col("media_id"), posexplode(col("bins")).as(Seq("k", "p")))
     val w = org.apache.spark.sql.expressions.Window.partitionBy("media_id")
     withK
       .withColumn("mp", max(col("p")).over(w))
@@ -199,67 +209,78 @@ object MultimodalQueries {
     * means the operator picked the wrong frame; the decodes are pinned
     * by MultimodalSpec/Mp4Spec.
     */
-  val videoPipeline = QueryDef("q81_video_frames",
-    """WITH f AS (SELECT * FROM read_parquet('/tmp/graft-oracle/q81_facts/*.parquet')),
-      |a AS (SELECT * FROM read_parquet('/tmp/graft-oracle/q81_all/*.parquet')),
-      |s AS (SELECT * FROM read_parquet('/tmp/graft-oracle/q81_sampled/*.parquet'))
-      |SELECT s.media_id, s.frame_idx,
-      |  CAST(s.frame_idx * (f.n_frames - 1) // 2 AS INT) AS src_idx,
-      |  CAST(s.frame_idx * (f.n_frames - 1) // 2 * f.us_per_frame // 1000
-      |    AS BIGINT) AS ts_ms,
-      |  a.frame_md5
-      |FROM s JOIN f USING (media_id)
-      |JOIN a ON a.media_id = s.media_id
-      |  AND a.src_idx = s.frame_idx * (f.n_frames - 1) // 2
-      |ORDER BY s.media_id, s.frame_idx""".stripMargin) { (s, d) =>
-    import s.implicits._
+  val videoPipeline: QueryDef = {
     import graft.multimodal.{Avi, Mp4}
-    val nVideos = 12
-    val rows = (0 until nVideos).map { i =>
-      val frames = (0 until 4 + i % 5).map(fr => Thumbnail.jpeg(
-        Array.tabulate(12, 12)((y, x) => (y * 12 + x + i * 100 + fr * 7).toDouble)))
-      if (i % 2 == 0)
-        Row(i.toLong, "video", "video/x-msvideo",
-          Avi.write(frames, 12, 12, fps = 5 + i % 3),
-          Map.empty[String, String])
-      else
-        Row(i.toLong, "video", "video/mp4",
-          Mp4.write(frames, 12, 12, fps = 5 + i % 3,
-            samplesPerChunk = 2 + i % 3,
-            // every third MP4 carries the >4 GiB shapes (co64 chunk
-            // offsets + largesize mdat) the reader must accept
-            use64 = i % 3 == 0),
-          Map.empty[String, String])
+    def media(s: SparkSession) = {
+      val nVideos = 12
+      val rows = (0 until nVideos).map { i =>
+        val frames = (0 until 4 + i % 5).map(fr => Thumbnail.jpeg(
+          Array.tabulate(12, 12)((y, x) =>
+            (y * 12 + x + i * 100 + fr * 7).toDouble)))
+        if (i % 2 == 0)
+          Row(i.toLong, "video", "video/x-msvideo",
+            Avi.write(frames, 12, 12, fps = 5 + i % 3),
+            Map.empty[String, String])
+        else
+          Row(i.toLong, "video", "video/mp4",
+            Mp4.write(frames, 12, 12, fps = 5 + i % 3,
+              samplesPerChunk = 2 + i % 3,
+              // every third MP4 carries the >4 GiB shapes (co64 chunk
+              // offsets + largesize mdat) the reader must accept
+              use64 = i % 3 == 0),
+            Map.empty[String, String])
+      }
+      s.createDataFrame(
+        s.sparkContext.parallelize(rows, 4), Multimodal.mediaSchema)
     }
-    val media = s.createDataFrame(
-      s.sparkContext.parallelize(rows, 4), Multimodal.mediaSchema)
     // container facts + a digest of every source frame, decoded honestly
     // from the AVI/MP4 payloads inside tasks
-    val perVideo = media.select(col("media_id"), col("content"))
-      .as[(Long, Array[Byte])]
-      .flatMap { case (id, bytes) =>
-        val v = Multimodal.decodeVideo(bytes).get
-        (0 until v.nFrames).map { i =>
-          (id, v.nFrames, v.usPerFrame, i,
-            java.security.MessageDigest.getInstance("MD5").digest(v.frame(i))
-              .map("%02x".format(_)).mkString)
-        }
-      }.toDF("media_id", "n_frames", "us_per_frame", "src_idx", "frame_md5")
-    graft.Work.oracleDump(s, "q81_facts",
-      perVideo.select("media_id", "n_frames", "us_per_frame").distinct(), d)
-    graft.Work.oracleDump(s, "q81_all",
-      perVideo.select("media_id", "src_idx", "frame_md5"), d)
-    val sampled = Multimodal.sampleFrames(media, 3)
-      .select(col("media_id"), col("frame_idx"), col("ts_ms"),
-        md5(col("frame")).as("frame_md5"))
-    val dumped = graft.Work.oracleDump(s, "q81_sampled", sampled, d)
-    dumped.join(
-        perVideo.select("media_id", "n_frames", "us_per_frame").distinct(),
-        Seq("media_id"))
-      .select(col("media_id"), col("frame_idx"),
-        floor(col("frame_idx") * (col("n_frames") - 1) / 2).cast("int")
-          .as("src_idx"),
-        col("ts_ms"), col("frame_md5"))
+    def perVideo(s: SparkSession, media: DataFrame) = {
+      import s.implicits._
+      media.select(col("media_id"), col("content"))
+        .as[(Long, Array[Byte])]
+        .flatMap { case (id, bytes) =>
+          val v = Multimodal.decodeVideo(bytes).get
+          (0 until v.nFrames).map { i =>
+            (id, v.nFrames, v.usPerFrame, i,
+              java.security.MessageDigest.getInstance("MD5").digest(v.frame(i))
+                .map("%02x".format(_)).mkString)
+          }
+        }.toDF("media_id", "n_frames", "us_per_frame", "src_idx", "frame_md5")
+    }
+    QueryDef("q81_video_frames",
+      """WITH f AS (SELECT * FROM read_parquet('/tmp/graft-oracle/q81_facts/*.parquet')),
+        |a AS (SELECT * FROM read_parquet('/tmp/graft-oracle/q81_all/*.parquet')),
+        |s AS (SELECT * FROM read_parquet('/tmp/graft-oracle/q81_sampled/*.parquet'))
+        |SELECT s.media_id, s.frame_idx,
+        |  CAST(s.frame_idx * (f.n_frames - 1) // 2 AS INT) AS src_idx,
+        |  CAST(s.frame_idx * (f.n_frames - 1) // 2 * f.us_per_frame // 1000
+        |    AS BIGINT) AS ts_ms,
+        |  a.frame_md5
+        |FROM s JOIN f USING (media_id)
+        |JOIN a ON a.media_id = s.media_id
+        |  AND a.src_idx = s.frame_idx * (f.n_frames - 1) // 2
+        |ORDER BY s.media_id, s.frame_idx""".stripMargin,
+      setup = { (s, _) =>
+        val m = media(s)
+        val pv = perVideo(s, m)
+        graft.Work.oracleDump(s, "q81_facts",
+          pv.select("media_id", "n_frames", "us_per_frame").distinct())
+        graft.Work.oracleDump(s, "q81_all",
+          pv.select("media_id", "src_idx", "frame_md5"))
+        graft.Work.oracleDump(s, "q81_sampled", Multimodal.sampleFrames(m, 3)
+          .select(col("media_id"), col("frame_idx"), col("ts_ms"),
+            md5(col("frame")).as("frame_md5")))
+      }) { (s, _) =>
+      s.read.parquet(graft.Work.oracleDumpPath("q81_sampled")).join(
+          perVideo(s, media(s))
+            .select("media_id", "n_frames", "us_per_frame").distinct(),
+          Seq("media_id"))
+        .select(col("media_id"), col("frame_idx"),
+          floor(col("frame_idx") * (col("n_frames") - 1) / 2).cast("int")
+            .as("src_idx"),
+          col("ts_ms"), col("frame_md5"))
+    }
   }
 
   /** Lossy-audio header walks as parameter recovery: the generation
@@ -272,20 +293,13 @@ object MultimodalQueries {
     * a probe that miscounts frames, misreads the rate table, or walks
     * side-info bits at the wrong offset hash-mismatches.
     */
-  val codecProbe = QueryDef("q87_codec_probe",
-    """SELECT media_id, codec, n_frames,
-      |  CAST(n_frames * spf * 1000 // rate AS BIGINT) AS duration_ms,
-      |  round(gain, 3) AS mean_gain, round(sfc, 3) AS mean_sfc,
-      |  round(short_frac, 3) AS short_frac
-      |FROM read_parquet('/tmp/graft-oracle/q87_params/*.parquet')
-      |ORDER BY media_id""".stripMargin) { (s, d) =>
-    import s.implicits._
+  val codecProbe: QueryDef = {
     import graft.multimodal.{Aac, Mp3}
     val aacRateIdx = Array(4 -> 44100, 3 -> 48000, 8 -> 16000, 11 -> 8000)
     // mp3 rows vary every recoverable side-info parameter: global_gain,
     // scalefac_compress, and the short-block granule count (0..4 of the
     // 4 per stereo frame → fraction in quarters)
-    val params = (0 until 24).map { i =>
+    def params = (0 until 24).map { i =>
       if (i % 2 == 0)
         (i.toLong, "mp3", 20 + i, 1152, 44100, (100 + i).toDouble,
           (i % 16).toDouble, (i / 2 % 5) / 4.0)
@@ -294,38 +308,49 @@ object MultimodalQueries {
         (i.toLong, "aac", 30 + i, 1024, rate, 0.0, 0.0, 0.0)
       }
     }
-    val paramsDf = params
-      .toDF("media_id", "codec", "n_frames", "spf", "rate", "gain", "sfc",
-        "short_frac")
-    graft.Work.oracleDump(s, "q87_params", paramsDf, d)
-    val payloads = params.map { case (id, codec, nFrames, _, _, gain, sfc, sf) =>
-      val i = id.toInt
-      val content =
-        if (codec == "mp3") Mp3.fixture(nFrames, gain.toInt, id3 = i % 4 == 0,
-          scalefacCompress = sfc.toInt, shortGranules = (sf * 4).toInt)
-        else Aac.fixture(nFrames, sampleRateIdx = aacRateIdx((i / 2) % 4)._1,
-          channels = 1 + i % 2, id3 = i % 3 == 0,
-          // every fifth AAC stream carries CRC-protected (9-byte)
-          // headers; duration math is unchanged, the walk must be
-          withCrc = i % 5 == 0)
-      (id, codec, content)
+    QueryDef("q87_codec_probe",
+      """SELECT media_id, codec, n_frames,
+        |  CAST(n_frames * spf * 1000 // rate AS BIGINT) AS duration_ms,
+        |  round(gain, 3) AS mean_gain, round(sfc, 3) AS mean_sfc,
+        |  round(short_frac, 3) AS short_frac
+        |FROM read_parquet('/tmp/graft-oracle/q87_params/*.parquet')
+        |ORDER BY media_id""".stripMargin,
+      setup = { (s, _) =>
+        import s.implicits._
+        graft.Work.oracleDump(s, "q87_params", params
+          .toDF("media_id", "codec", "n_frames", "spf", "rate", "gain", "sfc",
+            "short_frac"))
+      }) { (s, _) =>
+      import s.implicits._
+      val payloads = params.map { case (id, codec, nFrames, _, _, gain, sfc, sf) =>
+        val i = id.toInt
+        val content =
+          if (codec == "mp3") Mp3.fixture(nFrames, gain.toInt, id3 = i % 4 == 0,
+            scalefacCompress = sfc.toInt, shortGranules = (sf * 4).toInt)
+          else Aac.fixture(nFrames, sampleRateIdx = aacRateIdx((i / 2) % 4)._1,
+            channels = 1 + i % 2, id3 = i % 3 == 0,
+            // every fifth AAC stream carries CRC-protected (9-byte)
+            // headers; duration math is unchanged, the walk must be
+            withCrc = i % 5 == 0)
+        (id, codec, content)
+      }
+      s.sparkContext.parallelize(payloads, 4).toDF("media_id", "codec", "content")
+        .as[(Long, String, Array[Byte])]
+        .map { case (id, codec, bytes) =>
+          if (codec == "mp3") {
+            val p = Mp3.probe(bytes).get
+            (id, codec, p.nFrames, p.durationMs, p.meanGlobalGain,
+              p.meanScalefacCompress, p.shortBlockFrac)
+          } else {
+            val p = Aac.probe(bytes).get
+            (id, codec, p.nFrames, p.durationMs, 0.0, 0.0, 0.0)
+          }
+        }.toDF("media_id", "codec", "n_frames", "duration_ms", "mean_gain",
+          "mean_sfc", "short_frac")
+        .withColumn("mean_gain", round(col("mean_gain"), 3))
+        .withColumn("mean_sfc", round(col("mean_sfc"), 3))
+        .withColumn("short_frac", round(col("short_frac"), 3))
     }
-    s.sparkContext.parallelize(payloads, 4).toDF("media_id", "codec", "content")
-      .as[(Long, String, Array[Byte])]
-      .map { case (id, codec, bytes) =>
-        if (codec == "mp3") {
-          val p = Mp3.probe(bytes).get
-          (id, codec, p.nFrames, p.durationMs, p.meanGlobalGain,
-            p.meanScalefacCompress, p.shortBlockFrac)
-        } else {
-          val p = Aac.probe(bytes).get
-          (id, codec, p.nFrames, p.durationMs, 0.0, 0.0, 0.0)
-        }
-      }.toDF("media_id", "codec", "n_frames", "duration_ms", "mean_gain",
-        "mean_sfc", "short_frac")
-      .withColumn("mean_gain", round(col("mean_gain"), 3))
-      .withColumn("mean_sfc", round(col("mean_sfc"), 3))
-      .withColumn("short_frac", round(col("short_frac"), 3))
   }
 
   /** q145 — H.264 bitstream probe + subset decode as parameter
@@ -344,17 +369,12 @@ object MultimodalQueries {
     * entropy mode) are literals on the oracle side — a misparse breaks
     * the join columns, not just the sums.
     */
-  val avcProbe = QueryDef("q145_avc_probe",
-    """SELECT media_id, width, height, 66 AS profile, FALSE AS cabac,
-      |  n_frames, n_idr, n_pskip, y_total
-      |FROM read_parquet('/tmp/graft-oracle/q145_params/*.parquet')
-      |ORDER BY media_id""".stripMargin) { (s, d) =>
-    import s.implicits._
+  val avcProbe: QueryDef = {
     import graft.multimodal.Avc
     val nVideos = 10
     // generation parameters first: geometry, GOP run lengths, per-frame
     // luma mass (unsigned-byte sum over the generated plane)
-    val specs = (0 until nVideos).map { i =>
+    def specs = (0 until nVideos).map { i =>
       val w = 16 * (1 + i % 3)
       val h = 16 * (1 + (i / 2) % 2)
       val nFrames = 3 + i % 4
@@ -370,25 +390,35 @@ object MultimodalQueries {
       val nIdr = (0 until nFrames).count(j => j % runLen == 0)
       (i.toLong, w, h, nFrames, nIdr, nFrames - nIdr, ySum, frames)
     }
-    graft.Work.oracleDump(s, "q145_params",
-      specs.map { case (id, w, h, nf, ni, np, ys, _) =>
-        (id, w, h, nf.toLong, ni.toLong, np.toLong, ys)
-      }.toDF("media_id", "width", "height", "n_frames", "n_idr",
-        "n_pskip", "y_total"), d)
-    // now the payloads: real Annex B streams, probed + decoded in tasks
-    val media = specs.map { case (id, _, _, _, _, _, _, frames) =>
-      (id, Avc.encode(frames))
-    }.toDF("media_id", "content").repartition(4)
-    media.as[(Long, Array[Byte])].map { case (id, bytes) =>
-      val p = Avc.probe(bytes).getOrElse(
-        throw new IllegalArgumentException(s"media $id: not H.264"))
-      val frames = Avc.decode(bytes)
-      val ySum = frames.map(_.y.map(b => (b & 0xFF).toLong).sum).sum
-      (id, p.width, p.height, p.profile, p.entropyCabac,
-        (p.nI + p.nP).toLong, p.nIdr.toLong, p.nP.toLong, ySum)
-    }.toDF("media_id", "width", "height", "profile", "cabac",
-      "n_frames", "n_idr", "n_pskip", "y_total")
-      .orderBy("media_id")
+    QueryDef("q145_avc_probe",
+      """SELECT media_id, width, height, 66 AS profile, FALSE AS cabac,
+        |  n_frames, n_idr, n_pskip, y_total
+        |FROM read_parquet('/tmp/graft-oracle/q145_params/*.parquet')
+        |ORDER BY media_id""".stripMargin,
+      setup = { (s, _) =>
+        import s.implicits._
+        graft.Work.oracleDump(s, "q145_params",
+          specs.map { case (id, w, h, nf, ni, np, ys, _) =>
+            (id, w, h, nf.toLong, ni.toLong, np.toLong, ys)
+          }.toDF("media_id", "width", "height", "n_frames", "n_idr",
+            "n_pskip", "y_total"))
+      }) { (s, _) =>
+      import s.implicits._
+      // now the payloads: real Annex B streams, probed + decoded in tasks
+      val media = specs.map { case (id, _, _, _, _, _, _, frames) =>
+        (id, Avc.encode(frames))
+      }.toDF("media_id", "content").repartition(4)
+      media.as[(Long, Array[Byte])].map { case (id, bytes) =>
+        val p = Avc.probe(bytes).getOrElse(
+          throw new IllegalArgumentException(s"media $id: not H.264"))
+        val frames = Avc.decode(bytes)
+        val ySum = frames.map(_.y.map(b => (b & 0xFF).toLong).sum).sum
+        (id, p.width, p.height, p.profile, p.entropyCabac,
+          (p.nI + p.nP).toLong, p.nIdr.toLong, p.nP.toLong, ySum)
+      }.toDF("media_id", "width", "height", "profile", "cabac",
+        "n_frames", "n_idr", "n_pskip", "y_total")
+        .orderBy("media_id")
+    }
   }
 
   /** q154 — MP4/avcC H.264 probe: q145's bitstream layer reaching the
@@ -406,15 +436,10 @@ object MultimodalQueries {
     * de-mux must feed the subset decoder to the exact luma sum. The
     * oracle recomputes everything from the params dump.
     */
-  val mp4AvcProbe = QueryDef("q154_mp4_avc_probe",
-    """SELECT media_id, width, height, 66 AS profile, FALSE AS cabac,
-      |  n_frames, n_idr, n_pskip, duration_ms, y_total
-      |FROM read_parquet('/tmp/graft-oracle/q154_params/*.parquet')
-      |ORDER BY media_id""".stripMargin) { (s, d) =>
-    import s.implicits._
+  val mp4AvcProbe: QueryDef = {
     import graft.multimodal.{Avc, Mp4}
     val nVideos = 10
-    val specs = (0 until nVideos).map { i =>
+    def specs = (0 until nVideos).map { i =>
       val w = 16 * (1 + i % 3)
       val h = 16 * (1 + (i / 2) % 2)
       val nFrames = 3 + i % 4
@@ -431,33 +456,43 @@ object MultimodalQueries {
       val nIdr = (0 until nFrames).count(j => j % runLen == 0)
       (i.toLong, w, h, nFrames, nIdr, fps, ySum, frames)
     }
-    graft.Work.oracleDump(s, "q154_params",
-      specs.map { case (id, w, h, nf, ni, fps, ys, _) =>
-        (id, w, h, nf.toLong, ni.toLong, (nf - ni).toLong,
-          nf.toLong * 1000L / fps, ys)
-      }.toDF("media_id", "width", "height", "n_frames", "n_idr",
-        "n_pskip", "duration_ms", "y_total"), d)
-    // mux AFTER the dump: varying fps, chunk splits, and one 64-bit
-    // shape so the sample-map walk is exercised, not just one layout
-    val media = specs.map { case (id, _, _, _, _, fps, _, frames) =>
-      (id, Mp4.writeAvc(Avc.encode(frames), fps = fps,
-        samplesPerChunk = 1 + (id % 3).toInt, use64 = id == 7))
-    }.toDF("media_id", "content").repartition(4)
-    media.as[(Long, Array[Byte])].map { case (id, bytes) =>
-      val info = Mp4.probeAvc(bytes).getOrElse(
-        throw new IllegalArgumentException(s"media $id: not an avc1 MP4"))
-      val p = info.probe
-      require(info.nSync == p.nIdr,
-        s"media $id: stss lists ${info.nSync} sync samples, " +
-          s"probe found ${p.nIdr} IDRs")
-      val frames = Avc.decode(Mp4.avcToAnnexB(bytes).get)
-      val ySum = frames.map(_.y.map(b => (b & 0xFF).toLong).sum).sum
-      (id, p.width, p.height, p.profile, p.entropyCabac,
-        (p.nI + p.nP).toLong, p.nIdr.toLong, p.nP.toLong,
-        info.durationMs, ySum)
-    }.toDF("media_id", "width", "height", "profile", "cabac",
-      "n_frames", "n_idr", "n_pskip", "duration_ms", "y_total")
-      .orderBy("media_id")
+    QueryDef("q154_mp4_avc_probe",
+      """SELECT media_id, width, height, 66 AS profile, FALSE AS cabac,
+        |  n_frames, n_idr, n_pskip, duration_ms, y_total
+        |FROM read_parquet('/tmp/graft-oracle/q154_params/*.parquet')
+        |ORDER BY media_id""".stripMargin,
+      setup = { (s, _) =>
+        import s.implicits._
+        graft.Work.oracleDump(s, "q154_params",
+          specs.map { case (id, w, h, nf, ni, fps, ys, _) =>
+            (id, w, h, nf.toLong, ni.toLong, (nf - ni).toLong,
+              nf.toLong * 1000L / fps, ys)
+          }.toDF("media_id", "width", "height", "n_frames", "n_idr",
+            "n_pskip", "duration_ms", "y_total"))
+      }) { (s, _) =>
+      import s.implicits._
+      // mux AFTER the dump: varying fps, chunk splits, and one 64-bit
+      // shape so the sample-map walk is exercised, not just one layout
+      val media = specs.map { case (id, _, _, _, _, fps, _, frames) =>
+        (id, Mp4.writeAvc(Avc.encode(frames), fps = fps,
+          samplesPerChunk = 1 + (id % 3).toInt, use64 = id == 7))
+      }.toDF("media_id", "content").repartition(4)
+      media.as[(Long, Array[Byte])].map { case (id, bytes) =>
+        val info = Mp4.probeAvc(bytes).getOrElse(
+          throw new IllegalArgumentException(s"media $id: not an avc1 MP4"))
+        val p = info.probe
+        require(info.nSync == p.nIdr,
+          s"media $id: stss lists ${info.nSync} sync samples, " +
+            s"probe found ${p.nIdr} IDRs")
+        val frames = Avc.decode(Mp4.avcToAnnexB(bytes).get)
+        val ySum = frames.map(_.y.map(b => (b & 0xFF).toLong).sum).sum
+        (id, p.width, p.height, p.profile, p.entropyCabac,
+          (p.nI + p.nP).toLong, p.nIdr.toLong, p.nP.toLong,
+          info.durationMs, ySum)
+      }.toDF("media_id", "width", "height", "profile", "cabac",
+        "n_frames", "n_idr", "n_pskip", "duration_ms", "y_total")
+        .orderBy("media_id")
+    }
   }
 
   val all: Seq[QueryDef] =

@@ -127,26 +127,35 @@ object Similarity {
       |FROM (SELECT *, row_number() OVER (PARTITION BY q_id
       |        ORDER BY cos DESC, neighbor_id) AS rn
       |      FROM read_parquet('/tmp/graft-oracle/q42_pairs/*.parquet'))
-      |WHERE rn <= 3 ORDER BY q_id, rank""".stripMargin) { (s, d) =>
-    val e = Tables.embeddings(s, d)
-      .select(col("vec_id"), toDouble(col("embedding")).as("emb"))
-      .withColumn("nrm", sqrt(dot(col("emb"), col("emb"))))
-      .withColumn("bucket", lshBucket(col("emb"), planeMatrix(8, embeddingDim(s, d))))
-    val q = e.filter(col("vec_id") % 100 === 0)
-      .select(col("vec_id").as("q_id"), col("emb").as("qe"),
-        col("nrm").as("qn"), col("bucket").as("q_bucket"))
-    // cos_r is rounded ONCE here: both engines rank the identical dumped
-    // full-precision doubles and emit the identical pre-rounded value, so
-    // no half-ulp Spark-BigDecimal-vs-DuckDB-float rounding seam remains
-    val pairs = e.join(broadcast(q),
-        col("bucket") === col("q_bucket") && col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id").as("neighbor_id"),
-        (dot(col("qe"), col("emb")) / (col("qn") * col("nrm"))).as("cos"))
-      .withColumn("cos_r", round(col("cos"), 6))
-    val dumped = graft.Work.oracleDump(s, "q42_pairs", pairs, d)
+      |WHERE rn <= 3 ORDER BY q_id, rank""".stripMargin,
+    setup = { (s, d) =>
+      val e = Tables.embeddings(s, d)
+        .select(col("vec_id"), toDouble(col("embedding")).as("emb"))
+        .withColumn("nrm", sqrt(dot(col("emb"), col("emb"))))
+        .withColumn("bucket",
+          lshBucket(col("emb"), planeMatrix(8, embeddingDim(s, d))))
+      val q = e.filter(col("vec_id") % 100 === 0)
+        .select(col("vec_id").as("q_id"), col("emb").as("qe"),
+          col("nrm").as("qn"), col("bucket").as("q_bucket"))
+      // cos_r is rounded ONCE here: both engines rank the identical dumped
+      // full-precision doubles and emit the identical pre-rounded value, so
+      // no half-ulp Spark-BigDecimal-vs-DuckDB-float rounding seam remains
+      val pairs = e.join(broadcast(q),
+          col("bucket") === col("q_bucket") && col("vec_id") =!= col("q_id"))
+        .select(col("q_id"), col("vec_id").as("neighbor_id"),
+          (dot(col("qe"), col("emb")) / (col("qn") * col("nrm"))).as("cos"))
+        .withColumn("cos_r", round(col("cos"), 6))
+      graft.Work.oracleDump(s, "q42_pairs", pairs)
+    }) { (s, _) => topThree(s, "q42_pairs") }
+
+  /** Top-3 neighbors per query from a dumped (q_id, neighbor_id, cos,
+    * cos_r) pair relation — the ranking both engines recompute.
+    */
+  private def topThree(s: SparkSession, tag: String): DataFrame = {
     val rn = row_number()
       .over(Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("neighbor_id")))
-    dumped.withColumn("rank", rn).filter(col("rank") <= 3)
+    s.read.parquet(graft.Work.oracleDumpPath(tag))
+      .withColumn("rank", rn).filter(col("rank") <= 3)
       .select(col("q_id"), col("rank"), col("neighbor_id"),
         col("cos_r").as("cos"))
   }
@@ -178,46 +187,42 @@ object Similarity {
       |FROM (SELECT *, row_number() OVER (PARTITION BY q_id
       |        ORDER BY cos DESC, neighbor_id) AS rn
       |      FROM read_parquet('/tmp/graft-oracle/q56_pairs/*.parquet'))
-      |WHERE rn <= 3 ORDER BY q_id, rank""".stripMargin) { (s, d) =>
-    val e = Tables.embeddings(s, d)
-      .select(col("vec_id"), toDouble(col("embedding")).as("emb"))
-    // hash-thin, then CAP: the driver-side training collect is bounded by
-    // a constant (100k vectors) regardless of corpus size — a bare
-    // fraction is still a driver OOM at 100 TB. orderBy+limit keeps the
-    // sample (and so the codebook and every answer) deterministic.
-    val sample = e.filter(col("vec_id") % 7 === 0).orderBy(col("vec_id"))
-      .limit(100000)
-      .collect()
-      .map(_.getSeq[Double](1).toArray)
-    // k ≈ √n, nprobe ≈ √k (IvfIndex.deriveK/deriveNprobe): the probed
-    // fraction of the corpus SHRINKS as the corpus grows, instead of the
-    // fixed k=16 that probed ~25% of a corpus of any size
-    val k = graft.ops.IvfIndex.deriveK(
-      graft.Tables.rowCount(s, d, "embeddings"))
-    val nprobe = graft.ops.IvfIndex.deriveNprobe(k)
-    val centroids = trainCodebook(sample, k, iters = 8)
-    val corpus = e
-      .withColumn("nrm", sqrt(dot(col("emb"), col("emb"))))
-      .withColumn("cell",
-        nearestCells(col("emb"), centroids, 1)(0).getField("cid"))
-    val q = corpus.filter(col("vec_id") % 100 === 0)
-      .select(col("vec_id").as("q_id"), col("emb").as("qe"),
-        col("nrm").as("qn"),
-        explode(transform(nearestCells(col("emb"), centroids, nprobe),
-          _.getField("cid"))).as("probe_cell"))
-    // cos_r rounded once Spark-side — see q42 for the rounding-seam note
-    val pairs = corpus.join(broadcast(q),
-        col("cell") === col("probe_cell") && col("vec_id") =!= col("q_id"))
-      .select(col("q_id"), col("vec_id").as("neighbor_id"),
-        (dot(col("qe"), col("emb")) / (col("qn") * col("nrm"))).as("cos"))
-      .withColumn("cos_r", round(col("cos"), 6))
-    val dumped = graft.Work.oracleDump(s, "q56_pairs", pairs, d)
-    val rn = row_number()
-      .over(Window.partitionBy(col("q_id")).orderBy(col("cos").desc, col("neighbor_id")))
-    dumped.withColumn("rank", rn).filter(col("rank") <= 3)
-      .select(col("q_id"), col("rank"), col("neighbor_id"),
-        col("cos_r").as("cos"))
-  }
+      |WHERE rn <= 3 ORDER BY q_id, rank""".stripMargin,
+    setup = { (s, d) =>
+      val e = Tables.embeddings(s, d)
+        .select(col("vec_id"), toDouble(col("embedding")).as("emb"))
+      // hash-thin, then CAP: the driver-side training collect is bounded by
+      // a constant (100k vectors) regardless of corpus size — a bare
+      // fraction is still a driver OOM at 100 TB. orderBy+limit keeps the
+      // sample (and so the codebook and every answer) deterministic.
+      val sample = e.filter(col("vec_id") % 7 === 0).orderBy(col("vec_id"))
+        .limit(100000)
+        .collect()
+        .map(_.getSeq[Double](1).toArray)
+      // k ≈ √n, nprobe ≈ √k (IvfIndex.deriveK/deriveNprobe): the probed
+      // fraction of the corpus SHRINKS as the corpus grows, instead of the
+      // fixed k=16 that probed ~25% of a corpus of any size
+      val k = graft.ops.IvfIndex.deriveK(
+        graft.Tables.rowCount(s, d, "embeddings"))
+      val nprobe = graft.ops.IvfIndex.deriveNprobe(k)
+      val centroids = trainCodebook(sample, k, iters = 8)
+      val corpus = e
+        .withColumn("nrm", sqrt(dot(col("emb"), col("emb"))))
+        .withColumn("cell",
+          nearestCells(col("emb"), centroids, 1)(0).getField("cid"))
+      val q = corpus.filter(col("vec_id") % 100 === 0)
+        .select(col("vec_id").as("q_id"), col("emb").as("qe"),
+          col("nrm").as("qn"),
+          explode(transform(nearestCells(col("emb"), centroids, nprobe),
+            _.getField("cid"))).as("probe_cell"))
+      // cos_r rounded once Spark-side — see q42 for the rounding-seam note
+      val pairs = corpus.join(broadcast(q),
+          col("cell") === col("probe_cell") && col("vec_id") =!= col("q_id"))
+        .select(col("q_id"), col("vec_id").as("neighbor_id"),
+          (dot(col("qe"), col("emb")) / (col("qn") * col("nrm"))).as("cos"))
+        .withColumn("cos_r", round(col("cos"), 6))
+      graft.Work.oracleDump(s, "q56_pairs", pairs)
+    }) { (s, _) => topThree(s, "q56_pairs") }
 
   /** Embedding-cosine near-dup (the fifth dedup flavor beside exact /
     * minhash / simhash / n-gram Jaccard): candidates come ONLY from
@@ -776,6 +781,27 @@ object Similarity {
     // the COW delete drops vec_id in [0, cut]
     def cutOf(s: SparkSession, d: String) =
       graft.Tables.rowCount(s, d, "embeddings") / 4 - 1
+    def probePairs(s: SparkSession, cut: Long, version: Long) = {
+      val idx = IvfIndex.openAt(s, path, version)
+      val nprobe = IvfIndex.deriveNprobe(idx.centroids.length)
+      // survivor queries only, so both versions answer the same batch
+      val q = idx.corpus
+        .filter(col("vec_id") % 100 === 0 && col("vec_id") > cut)
+        .select(col("vec_id").as("q_id"), col("emb").as("qe"))
+        .withColumn("qn", sqrt(dot(col("qe"), col("qe"))))
+        .withColumn("probe_cell",
+          explode(transform(
+            IvfIndex.nearestCells(col("qe"), idx.centroids, nprobe),
+            _.getField("cid"))))
+      idx.corpus.join(broadcast(q),
+          col("cell") === col("probe_cell") &&
+            col("vec_id") =!= col("q_id"))
+        .select(lit(version).as("version"), col("q_id"),
+          col("vec_id").as("neighbor_id"),
+          (dot(col("qe"), col("emb")) / (col("qn") * col("nrm")))
+            .as("cos"))
+        .withColumn("cos_r", round(col("cos"), 6))
+    }
     QueryDef("q184_versioned_ann",
       """SELECT version, q_id, CAST(rn AS INT) AS rank, neighbor_id,
         |  cos_r AS cos
@@ -793,6 +819,8 @@ object Similarity {
         IvfIndex.buildAt(s, path, 1)
         SnapshotTable.deleteStatsRange(s, path, 0, cut)
         IvfIndex.buildAt(s, path, 2)
+        graft.Work.oracleDump(s, "q184_pairs",
+          probePairs(s, cut, 1L).unionByName(probePairs(s, cut, 2L)))
       }) { (s, d) =>
       val cut = cutOf(s, d)
       // a version without an index refuses — never a silent answer from
@@ -801,40 +829,18 @@ object Similarity {
         try { IvfIndex.openAt(s, path, 3); false }
         catch { case _: IllegalArgumentException => true }
       require(stale, "openAt served a version that has no index")
-      def probePairs(version: Long) = {
-        val idx = IvfIndex.openAt(s, path, version)
-        val nprobe = IvfIndex.deriveNprobe(idx.centroids.length)
-        // survivor queries only, so both versions answer the same batch
-        val q = idx.corpus
-          .filter(col("vec_id") % 100 === 0 && col("vec_id") > cut)
-          .select(col("vec_id").as("q_id"), col("emb").as("qe"))
-          .withColumn("qn", sqrt(dot(col("qe"), col("qe"))))
-          .withColumn("probe_cell",
-            explode(transform(
-              IvfIndex.nearestCells(col("qe"), idx.centroids, nprobe),
-              _.getField("cid"))))
-        idx.corpus.join(broadcast(q),
-            col("cell") === col("probe_cell") &&
-              col("vec_id") =!= col("q_id"))
-          .select(lit(version).as("version"), col("q_id"),
-            col("vec_id").as("neighbor_id"),
-            (dot(col("qe"), col("emb")) / (col("qn") * col("nrm")))
-              .as("cos"))
-          .withColumn("cos_r", round(col("cos"), 6))
-      }
-      val p1 = probePairs(1L)
-      val p2 = probePairs(2L)
+      val p1 = probePairs(s, cut, 1L)
+      val p2 = probePairs(s, cut, 2L)
       // lineage is live, not decorative: v1's index still reaches the
       // deleted quarter, v2's cannot
       require(p1.filter(col("neighbor_id") <= cut).limit(1).count() == 1L,
         "v1 probe lost the pre-delete corpus")
       require(p2.filter(col("neighbor_id") <= cut).limit(1).count() == 0L,
         "v2 probe resurrected deleted vectors — wrong version's index")
-      val dumped = graft.Work.oracleDump(s, "q184_pairs",
-        p1.unionByName(p2), d)
       val rn = row_number().over(Window.partitionBy(col("version"),
         col("q_id")).orderBy(col("cos").desc, col("neighbor_id")))
-      dumped.withColumn("rank", rn).filter(col("rank") <= 3)
+      s.read.parquet(graft.Work.oracleDumpPath("q184_pairs"))
+        .withColumn("rank", rn).filter(col("rank") <= 3)
         .select(col("version"), col("q_id"), col("rank"),
           col("neighbor_id"), col("cos_r").as("cos"))
         .orderBy("version", "q_id", "rank")

@@ -1,5 +1,6 @@
 package graft.queries
 
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
 import graft.functions.Scalars._
@@ -55,60 +56,66 @@ object StacQueries {
     * JSON tree — hash equality proves write→scan loses and invents
     * nothing; byte-level determinism of the tree is pinned by StacSpec.
     */
-  val roundTrip = QueryDef("q44_stac_roundtrip",
-    """SELECT collection, count(*) AS n_items,
-      |  count(DISTINCT id) AS n_distinct_ids
-      |FROM read_parquet('/tmp/graft-oracle/q44_created/*.parquet')
-      |GROUP BY collection ORDER BY collection""".stripMargin) { (s, d) =>
-    import s.implicits._
-    val items = Tables.orders(s, d).filter(col("o_orderkey") % 100 === 0)
-      .select(
-        itemId(col("o_orderdate")).as("id"),
-        concat(lit("model_"), (col("o_custkey") % 2).cast("string")).as("collection"),
-        lit("""{"type": "Polygon", "coordinates": [[[30, 40], [30, 60], [10, 60], [10, 40], [30, 40]]]}""").as("geometry"),
-        typedLit(Seq(10.0, 40.0, 30.0, 60.0)).as("bbox"),
-        datetimeToStr(col("o_orderdate")).as("datetime"),
-        map(lit("forecast:leadtime_length"), lit("93")).as("properties"),
-        array(struct(
-          lit("data").as("key"),
-          concat(lit("./"), netcdfPath(
-            concat(lit("model_"), (col("o_custkey") % 2).cast("string")),
-            col("o_orderdate"))).as("href"),
-          lit("application/x-netcdf").as("media_type"),
-          lit("Forecast data").as("title"),
-          typedLit(Seq("data")).as("roles"),
-          lit(null).cast("string").as("checksum"),
-          lit(-1L).as("size"),
-          map().cast("map<string,string>").as("extra"))).as("assets"))
-      .dropDuplicates("collection", "id")
-      .as[StacItem]
-    // "existing catalog": every other item already present → must be skipped
-    val existing = items.filter(abs(hash(col("id"))) % 2 === 0)
-    val created = StacOps.getOrCreateItems(existing, items)
-    graft.Work.oracleDump(s, "q44_created",
-      created.select(col("collection"), col("id")), d)
-    // sf-keyed stable dir: repeat invocations overwrite the same item
-    // files in place instead of allocating a fresh ~1500-inode tree per
-    // call (fresh trees accumulated by the hundred across bench/verify
-    // passes and made this query I/O-bound on loaded filesystems); the
-    // sf key keeps sf0.01 verify and sf0.1 bench trees separate, since a
-    // stale larger item set under the same root would pollute the rescan
-    val root = graft.Work.stableDir(
-      "q44-sf" + math.abs(d.hashCode).toString).toString
-    StacJsonSink.write(root,
-      StacCatalog("cat", "roundtrip", Seq("model_0", "model_1")),
-      Seq(
-        StacCollection("model_0", "model_0", "Model 0 collection", "CC-BY-4.0",
-          Seq(10.0, 40.0, 30.0, 60.0), "2025-01-01T00:00:00Z",
-          "2025-12-31T00:00:00Z", Map.empty),
-        StacCollection("model_1", "model_1", "Model 1 collection", "CC-BY-4.0",
-          Seq(10.0, 40.0, 30.0, 60.0), "2025-01-01T00:00:00Z",
-          "2025-12-31T00:00:00Z", Map.empty)),
-      created)
-    StacJsonSink.readItems(s, root)
-      .groupBy(col("collection"))
-      .agg(count(lit(1)).as("n_items"),
-        countDistinct(col("id")).as("n_distinct_ids"))
+  val roundTrip: QueryDef = {
+    def created(s: SparkSession, d: String) = {
+      import s.implicits._
+      val items = Tables.orders(s, d).filter(col("o_orderkey") % 100 === 0)
+        .select(
+          itemId(col("o_orderdate")).as("id"),
+          concat(lit("model_"), (col("o_custkey") % 2).cast("string")).as("collection"),
+          lit("""{"type": "Polygon", "coordinates": [[[30, 40], [30, 60], [10, 60], [10, 40], [30, 40]]]}""").as("geometry"),
+          typedLit(Seq(10.0, 40.0, 30.0, 60.0)).as("bbox"),
+          datetimeToStr(col("o_orderdate")).as("datetime"),
+          map(lit("forecast:leadtime_length"), lit("93")).as("properties"),
+          array(struct(
+            lit("data").as("key"),
+            concat(lit("./"), netcdfPath(
+              concat(lit("model_"), (col("o_custkey") % 2).cast("string")),
+              col("o_orderdate"))).as("href"),
+            lit("application/x-netcdf").as("media_type"),
+            lit("Forecast data").as("title"),
+            typedLit(Seq("data")).as("roles"),
+            lit(null).cast("string").as("checksum"),
+            lit(-1L).as("size"),
+            map().cast("map<string,string>").as("extra"))).as("assets"))
+        .dropDuplicates("collection", "id")
+        .as[StacItem]
+      // "existing catalog": every other item already present → must be skipped
+      val existing = items.filter(abs(hash(col("id"))) % 2 === 0)
+      StacOps.getOrCreateItems(existing, items)
+    }
+    QueryDef("q44_stac_roundtrip",
+      """SELECT collection, count(*) AS n_items,
+        |  count(DISTINCT id) AS n_distinct_ids
+        |FROM read_parquet('/tmp/graft-oracle/q44_created/*.parquet')
+        |GROUP BY collection ORDER BY collection""".stripMargin,
+      setup = { (s, d) =>
+        graft.Work.oracleDump(s, "q44_created",
+          created(s, d).select(col("collection"), col("id")))
+      }) { (s, d) =>
+      // sf-keyed stable dir: repeat invocations overwrite the same item
+      // files in place instead of allocating a fresh ~1500-inode tree per
+      // call (fresh trees accumulated by the hundred across bench/verify
+      // passes and made this query I/O-bound on loaded filesystems); the
+      // sf key keeps sf0.01 verify and sf0.1 bench trees separate, since a
+      // stale larger item set under the same root would pollute the rescan
+      val root = graft.Work.stableDir(
+        "q44-sf" + math.abs(d.hashCode).toString).toString
+      StacJsonSink.write(root,
+        StacCatalog("cat", "roundtrip", Seq("model_0", "model_1")),
+        Seq(
+          StacCollection("model_0", "model_0", "Model 0 collection", "CC-BY-4.0",
+            Seq(10.0, 40.0, 30.0, 60.0), "2025-01-01T00:00:00Z",
+            "2025-12-31T00:00:00Z", Map.empty),
+          StacCollection("model_1", "model_1", "Model 1 collection", "CC-BY-4.0",
+            Seq(10.0, 40.0, 30.0, 60.0), "2025-01-01T00:00:00Z",
+            "2025-12-31T00:00:00Z", Map.empty)),
+        created(s, d))
+      StacJsonSink.readItems(s, root)
+        .groupBy(col("collection"))
+        .agg(count(lit(1)).as("n_items"),
+          countDistinct(col("id")).as("n_distinct_ids"))
+    }
   }
 
   val all: Seq[QueryDef] = Seq(assetRows, roundTrip)

@@ -10,6 +10,7 @@ class BucketedJoinSpec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
 
   test("bucketed join plan has no shuffle exchange") {
+    EventOps.bucketedJoin.setup(spark, sf)
     val plan = EventOps.joinBucketed(spark, sf)
       .queryExecution.executedPlan.toString
     assert(plan.contains("SortMergeJoin"), plan.take(800))
@@ -19,6 +20,7 @@ class BucketedJoinSpec extends SparkSpec {
 
   test("bucketed join equals the plain join") {
     import org.apache.spark.sql.functions._
+    EventOps.bucketedJoin.setup(spark, sf)
     val bucketed = EventOps.bucketedJoin.fn(spark, sf)
       .orderBy("o_orderpriority").collect().map(_.toString)
     val plain = Tables.lineitem(spark, sf)

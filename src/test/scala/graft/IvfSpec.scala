@@ -11,6 +11,7 @@ class IvfSpec extends SparkSpec {
     val exact = Similarity.cosineTopK.fn(spark, sf)
       .filter("rank <= 3")
       .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
+    Similarity.ivfAnn.setup(spark, sf)
     val ivf = Similarity.ivfAnn.fn(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
     val recall = (exact & ivf).size.toDouble / exact.size
@@ -19,8 +20,11 @@ class IvfSpec extends SparkSpec {
   }
 
   test("q56 is deterministic across runs") {
-    def run() = Similarity.ivfAnn.fn(spark, sf)
-      .collect().map(_.toString).sorted.toSeq
+    // each run trains its own codebook and probes afresh in setup
+    def run() = {
+      Similarity.ivfAnn.setup(spark, sf)
+      Similarity.ivfAnn.fn(spark, sf).collect().map(_.toString).sorted.toSeq
+    }
     assert(run() === run())
   }
 }

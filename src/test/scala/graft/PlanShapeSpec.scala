@@ -10,6 +10,12 @@ class PlanShapeSpec extends SparkSpec {
 
   private val sf = "/root/testdata/sf0.001"
 
+  /** The body's DataFrame after its setup wrote the fixtures it reads. */
+  private def afterSetup(q: QueryDef) = {
+    q.setup(spark, sf)
+    q.fn(spark, sf)
+  }
+
   test("q73: survivor election is a digest agg+join — no Window, no Sort " +
     "feeding it") {
     val plan = TrainingPrep.corpusAssembly.fn(spark, sf)
@@ -33,26 +39,11 @@ class PlanShapeSpec extends SparkSpec {
     // (q42 2.07× vs r6); the file count is the task count
     import spark.implicits._
     Work.oracleDump(spark, "planspec_parts",
-      spark.range(0, 1000, 1, 8).toDF("v"), "k1")
+      spark.range(0, 1000, 1, 8).toDF("v"))
     val parts = new java.io.File(Work.oracleDumpPath("planspec_parts"))
       .listFiles().count(f => f.getName.endsWith(".parquet"))
     assert(parts >= 8,
       s"dump collapsed to $parts file(s) — upstream stage was serialized")
-  }
-
-  test("oracleDump writes once per (tag, inputKey): repeat invocations " +
-    "(bench timed passes) skip the oracle-support I/O") {
-    import spark.implicits._
-    val first = Seq(1, 2, 3).toDF("v")
-    val second = Seq(9, 9, 9).toDF("v")
-    Work.oracleDump(spark, "planspec_skip", first, "kA")
-    // same key with DIFFERENT data: the write must be skipped, so the
-    // read-back still carries the first relation's content
-    val again = Work.oracleDump(spark, "planspec_skip", second, "kA")
-    assert(again.as[Int].collect().sorted.toSeq === Seq(1, 2, 3))
-    // a new inputKey (different sf dir) re-dumps
-    val fresh = Work.oracleDump(spark, "planspec_skip", second, "kB")
-    assert(fresh.as[Int].collect().toSeq === Seq(9, 9, 9))
   }
 
   test("ingest skip anti-join consumes a relation (plan has the anti-join)") {
@@ -68,7 +59,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("q97: the enum vocabulary join is a BROADCAST hash join — the " +
     "exploded cell stream must not shuffle") {
-    val plan = graft.queries.NetCdfQueries.enumMaskCounts.fn(spark, sf)
+    val plan = afterSetup(graft.queries.NetCdfQueries.enumMaskCounts)
       .queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"),
       "q97 label join must broadcast the vocabulary")
@@ -78,7 +69,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("q98: compound-record aggregation is a partial+final hash agg " +
     "over the per-file scan (no sort, no window)") {
-    val plan = graft.queries.NetCdfQueries.compoundBounds.fn(spark, sf)
+    val plan = afterSetup(graft.queries.NetCdfQueries.compoundBounds)
       .queryExecution.executedPlan.toString
     assert(plan.contains("HashAggregate"), "q98 should hash-aggregate")
     assert(!plan.contains("Window"), "q98 must not window")
@@ -97,7 +88,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("q104: bilinear gather never shuffles the cell relation — " +
     "broadcast joins only, no sort-merge") {
-    val plan = graft.queries.NetCdfQueries.regridBilinear.fn(spark, sf)
+    val plan = afterSetup(graft.queries.NetCdfQueries.regridBilinear)
       .queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"),
       "q104 must broadcast the point set")
@@ -108,7 +99,7 @@ class PlanShapeSpec extends SparkSpec {
   test("q109: the zone assignment is a BROADCAST nested-loop over the " +
     "four-row zone table — the cell relation must not shuffle into " +
     "the join") {
-    val plan = graft.queries.NetCdfQueries.zonalStats.fn(spark, sf)
+    val plan = afterSetup(graft.queries.NetCdfQueries.zonalStats)
       .queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastNestedLoopJoin"),
       "q109 must broadcast the zone table into a nested-loop join")
@@ -119,8 +110,8 @@ class PlanShapeSpec extends SparkSpec {
 
   test("q110: the climatology re-join shuffles BOTH sides on the cell " +
     "key (sort-merge, co-partitioned) — no broadcast of the big side") {
-    val plan = graft.queries.NetCdfQueries.climatologyAnomaly
-      .fn(spark, sf).queryExecution.executedPlan.toString
+    val plan = afterSetup(graft.queries.NetCdfQueries.climatologyAnomaly)
+      .queryExecution.executedPlan.toString
     assert(plan.contains("SortMergeJoin"),
       "q110 must co-partition cells with their climatology, not " +
         "broadcast a relation that scales with the grid:\n" +
@@ -140,7 +131,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("q103: block-mean regrid is partial+final hash agg — the " +
     "exploded cells collapse map-side before the exchange") {
-    val df = graft.queries.NetCdfQueries.regridBlockMean.fn(spark, sf)
+    val df = afterSetup(graft.queries.NetCdfQueries.regridBlockMean)
     val plan = df.queryExecution.executedPlan.toString
     assert(plan.contains("HashAggregate"), "q103 should hash-aggregate")
     // partial agg appears below the exchange: two HashAggregate levels
@@ -150,7 +141,7 @@ class PlanShapeSpec extends SparkSpec {
 
   test("q118: conservative regrid is join-free (arithmetic fan-out, " +
     "no weight-matrix join) and CONSERVES mass per scanline") {
-    val df = graft.queries.NetCdfQueries.regridConservative.fn(spark, sf)
+    val df = afterSetup(graft.queries.NetCdfQueries.regridConservative)
     val plan = df.queryExecution.executedPlan.toString
     assert(!plan.contains("Join"),
       "q118 must fan out targets arithmetically, not join a weight matrix")
