@@ -45,82 +45,86 @@ object Ingest {
                           collectionsSkipped: Long, itemsSkipped: Long)
 
   def run(spark: SparkSession, catalogRoot: String, client: PgStacClient,
-          overwrite: Boolean = false): Result = {
-    val collections = StacJsonSink.readCollections(spark, catalogRoot).collect()
-    val items = StacJsonSink.readItems(spark, catalogRoot)
+          overwrite: Boolean = false): Result =
+    Preprocess.restoringJobDescription(spark) {
+      val sc = spark.sparkContext
+      sc.setJobDescription("ingest: catalog read")
+      val collections = StacJsonSink.readCollections(spark, catalogRoot).collect()
+      val items = StacJsonSink.readItems(spark, catalogRoot)
 
-    // J3 — skip-existing unless overwrite (dataloader.py:138-154).
-    // Legacy API mode probes per entity (dataloader.py:66-69); DB mode
-    // fetches the id set once.
-    val (collsToLoad, collsSkipped) =
-      if (overwrite) (collections.toSeq, Seq.empty)
-      else {
-        val exists: String => Boolean = client match {
-          case api: ApiModeClient => api.collectionExists
-          case _ =>
-            val ids = client.existingCollectionIds(); ids.contains
+      // J3 — skip-existing unless overwrite (dataloader.py:138-154).
+      // Legacy API mode probes per entity (dataloader.py:66-69); DB mode
+      // fetches the id set once.
+      val (collsToLoad, collsSkipped) =
+        if (overwrite) (collections.toSeq, Seq.empty)
+        else {
+          val exists: String => Boolean = client match {
+            case api: ApiModeClient => api.collectionExists
+            case _ =>
+              val ids = client.existingCollectionIds(); ids.contains
+          }
+          collections.toSeq.partition(c => !exists(c.id))
         }
-        collections.toSeq.partition(c => !exists(c.id))
-      }
 
-    // FK order: collections first (dataloader.py:173)
-    client.execBatch(collsToLoad.map(collectionSql(_, overwrite)))
+      // FK order: collections first (dataloader.py:173)
+      sc.setJobDescription("ingest: load")
+      client.execBatch(collsToLoad.map(collectionSql(_, overwrite)))
 
-    val ow = overwrite
-    val loaded = spark.sparkContext.longAccumulator("items_loaded")
-    val skipped = spark.sparkContext.longAccumulator("items_skipped")
-    if (overwrite) {
-      items.foreachPartition { part: Iterator[StacItem] =>
-        val stmts = part.map(itemSql(_, ow)).toSeq
-        if (stmts.nonEmpty) client.execBatch(stmts)
-        loaded.add(stmts.size)
-      }
-    } else client match {
-      case api: ApiModeClient =>
-        // Legacy API mode: the reference's per-item GET probe
-        // (dataloader.py:88-91, its own docstring calls it "much
-        // slower") — kept for drop-in parity, but the N+1 requests run
-        // from executor tasks in parallel rather than one driver loop,
-        // and each partition still batches its writes.
+      val ow = overwrite
+      val loaded = sc.longAccumulator("items_loaded")
+      val skipped = sc.longAccumulator("items_skipped")
+      if (overwrite) {
         items.foreachPartition { part: Iterator[StacItem] =>
-          val stmts = scala.collection.mutable.ArrayBuffer.empty[String]
-          part.foreach { it =>
-            if (api.itemExists(it.collection, it.id)) skipped.add(1)
-            else stmts += itemSql(it, ow)
-          }
-          if (stmts.nonEmpty) api.execBatch(stmts.toSeq)
+          val stmts = part.map(itemSql(_, ow)).toSeq
+          if (stmts.nonEmpty) client.execBatch(stmts)
           loaded.add(stmts.size)
         }
-      case _ =>
-      // J3 as a distributed join: existing keys come in as a relation
-      // (JDBC partitioned read for a real pgSTAC), never a collected
-      // Set. No broadcast hint — AQE broadcasts when the key side turns
-      // out small and shuffles when it doesn't, which is exactly the
-      // scale behavior wanted at 10⁹ existing items. A MARKED left-outer
-      // join (null right = not yet in pgSTAC) instead of an anti-join
-      // lets ONE action both write the new items and count the skipped
-      // ones — the previous shape re-ran the catalog scan and the join
-      // twice more just for `items.count() - toLoad.count()`. Key
-      // uniqueness ((collection, id) is the pgSTAC primary key) means
-      // the join cannot fan out.
-      val existing = client.existingItemKeysDF(spark)
-        .select("collection", "id")
-      val marked = items.joinWith(existing,
-        items("collection") === existing("collection") &&
-          items("id") === existing("id"), "left_outer")
-      marked.foreachPartition {
-        part: Iterator[(StacItem, org.apache.spark.sql.Row)] =>
-          val stmts = scala.collection.mutable.ArrayBuffer.empty[String]
-          part.foreach { case (it, ex) =>
-            if (ex == null) stmts += itemSql(it, ow) else skipped.add(1)
+      } else client match {
+        case api: ApiModeClient =>
+          // Legacy API mode: the reference's per-item GET probe
+          // (dataloader.py:88-91, its own docstring calls it "much
+          // slower") — kept for drop-in parity, but the N+1 requests run
+          // from executor tasks in parallel rather than one driver loop,
+          // and each partition still batches its writes.
+          items.foreachPartition { part: Iterator[StacItem] =>
+            val stmts = scala.collection.mutable.ArrayBuffer.empty[String]
+            part.foreach { it =>
+              if (api.itemExists(it.collection, it.id)) skipped.add(1)
+              else stmts += itemSql(it, ow)
+            }
+            if (stmts.nonEmpty) api.execBatch(stmts.toSeq)
+            loaded.add(stmts.size)
           }
-          if (stmts.nonEmpty) client.execBatch(stmts.toSeq)
-          loaded.add(stmts.size)
+        case _ =>
+        // J3 as a distributed join: existing keys come in as a relation
+        // (JDBC partitioned read for a real pgSTAC), never a collected
+        // Set. No broadcast hint — AQE broadcasts when the key side turns
+        // out small and shuffles when it doesn't, which is exactly the
+        // scale behavior wanted at 10⁹ existing items. A MARKED left-outer
+        // join (null right = not yet in pgSTAC) instead of an anti-join
+        // lets ONE action both write the new items and count the skipped
+        // ones — the previous shape re-ran the catalog scan and the join
+        // twice more just for `items.count() - toLoad.count()`. Key
+        // uniqueness ((collection, id) is the pgSTAC primary key) means
+        // the join cannot fan out.
+        val existing = client.existingItemKeysDF(spark)
+          .select("collection", "id")
+        val marked = items.joinWith(existing,
+          items("collection") === existing("collection") &&
+            items("id") === existing("id"), "left_outer")
+        marked.foreachPartition {
+          part: Iterator[(StacItem, org.apache.spark.sql.Row)] =>
+            val stmts = scala.collection.mutable.ArrayBuffer.empty[String]
+            part.foreach { case (it, ex) =>
+              if (ex == null) stmts += itemSql(it, ow) else skipped.add(1)
+            }
+            if (stmts.nonEmpty) client.execBatch(stmts.toSeq)
+            loaded.add(stmts.size)
+        }
       }
+      Result(collsToLoad.size.toLong, loaded.value,
+        collsSkipped.size.toLong, skipped.value)
     }
-    Result(collsToLoad.size.toLong, loaded.value,
-      collsSkipped.size.toLong, skipped.value)
-  }
 
   /** pgSTAC collection load: insert, or upsert when overwrite —
     * `Methods.upsert` vs `Methods.insert` (dataloader.py:171).

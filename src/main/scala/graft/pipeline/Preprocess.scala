@@ -2,10 +2,10 @@ package graft.pipeline
 
 import java.nio.file.{Files, Paths}
 import org.apache.spark.Partitioner
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.{Geo, Scalars, VecStatsExpr}
-import graft.model.{StacCatalog, StacCollection, StacItem}
+import graft.model.{StacAsset, StacCatalog, StacCollection, StacItem}
 import graft.ops.StacOps
 import graft.sink.{CogWriter, StacJsonSink}
 import graft.source.{NetCdf, NetCdfSource}
@@ -28,10 +28,13 @@ import graft.source.{NetCdf, NetCdfSource}
   * all" mapping. Item↔catalog attachment (J7) is the
   * `collection`/`item_id` fk columns; the tree shape only materializes
   * in the JSON sink.
-  *   bbox + geometry (A1/F11/F12)       → coord agg + Geo.projToGeo
-  *   per-init item construction (F5/F6) → Scalars id/time functions
-  *   output manifest + skip (P8)        → collected targets, driver-side
-  *                                        existence check, catalog ids
+  *   bbox + geometry (A1/F11/F12)       → coord min/max in the output
+  *                                        manifest + Geo.projToGeo
+  *   per-init item construction (F5/F6) → Scalars id/time functions,
+  *                                        evaluated in the output manifest
+  *   output manifest + skip (P8)        → ONE collected aggregate of the
+  *                                        tidy scan, driver-side existence
+  *                                        check, catalog ids
   *   netCDF slices (K1), COGs (K2),     → ONE shuffle of the tidy scan to
   *   leadtime-0 thumbnails (K3/W3)        one task per slice / per COG
   *                                        (the leadtime-0 COG task also
@@ -40,7 +43,8 @@ import graft.source.{NetCdf, NetCdfSource}
   *                                        COG task (VecStatsExpr.BandFold)
   *   asset rows + file info (E1/E2/E3/J6) → size + multihash of the bytes
   *                                        each task wrote or read back,
-  *                                        joined by href
+  *                                        assembled on the driver from
+  *                                        the task reports
   *   get-or-create vs existing (J1/J2)  → new ids only / extent merge
   *   catalog tree (K4, F8)              → StacJsonSink
   */
@@ -113,163 +117,128 @@ object Preprocess {
     if (isZarrStore(input)) graft.source.ZarrSource.tidy(spark, input)
     else NetCdfSource.tidy(spark, input)
 
-  def run(spark: SparkSession, inputGlob: String, opts: Options): Result = {
-    import spark.implicits._
+  def run(spark: SparkSession, inputGlob: String, opts: Options): Result =
+    restoringJobDescription(spark) {
+      import spark.implicits._
+      val sc = spark.sparkContext
 
-    // ---- S5/J5: config pinning before any work (ref generator.py:627)
-    new ConfigRegistry(s"${opts.dataPath}/config.json")
-      .storeOrValidate(opts.name,
-        Map("forecast_frequency" -> opts.forecastFrequency))
-    val (step, unit) = parseFrequency(opts.forecastFrequency)
+      // ---- S5/J5: config pinning before any work (ref generator.py:627)
+      new ConfigRegistry(s"${opts.dataPath}/config.json")
+        .storeOrValidate(opts.name,
+          Map("forecast_frequency" -> opts.forecastFrequency))
+      val (step, unit) = parseFrequency(opts.forecastFrequency)
 
-    // ---- metadata pass: P1/P2/P9 + CRS + time units (header-only decode)
-    val man = sourceManifest(spark, inputGlob).persist()
-    val fileMeta = man.filter(col("is_band"))
-      .select(col("path"), col("crs"), col("lat_min")).distinct()
-    val timeUnits = man
-      .filter(col("variable").isin(NetCdfSource.TimeCandidates: _*))
-      .select(col("units")).distinct().as[String].collect()
-    require(timeUnits.length == 1, s"mixed time units: ${timeUnits.toSeq}")
-    val (tScale, tBase) = parseTimeUnits(timeUnits.head)
-    // one driver action for both scalars instead of two tiny jobs
-    val metaRows = fileMeta
-      .select(col("crs"), Scalars.hemisphere(col("lat_min")).as("h"))
-      .distinct().as[(String, String)].collect()
-    val hemisphere = metaRows.map(_._2).distinct.headOption.getOrElse("")
-    val crs = metaRows.map(_._1).distinct.head
+      // ---- metadata pass: P1/P2/P9 + CRS + time units, one collect of the
+      // header-only manifest
+      sc.setJobDescription("preprocess: manifest")
+      val isTime = col("variable").isin(NetCdfSource.TimeCandidates: _*)
+      val meta = sourceManifest(spark, inputGlob)
+        .filter(col("is_band") || isTime)
+        .select(col("is_band"), isTime, col("units"), col("crs"),
+          when(col("is_band"), Scalars.hemisphere(col("lat_min"))))
+        .as[(Boolean, Boolean, String, String, String)].collect()
+      val timeUnits = meta.collect { case (_, true, u, _, _) => u }.distinct
+      require(timeUnits.length == 1, s"mixed time units: ${timeUnits.toSeq}")
+      val (tScale, tBase) = parseTimeUnits(timeUnits.head)
+      val (crs, hemisphere) =
+        meta.collectFirst { case (true, _, _, c, h) => (c, h) }.get
 
-    // ---- one cached tidy scan replaces the reference's three opens
-    val tidy = sourceTidy(spark, inputGlob).persist()
+      // ---- one cached tidy scan replaces the reference's three opens
+      val tidy = sourceTidy(spark, inputGlob).persist()
 
-    // ---- A1/F11/F12: bbox in projected meters → geographic via LAEA
-    val bboxRow = tidy.agg(
-      min(array_min(col("xs"))), max(array_max(col("xs"))),
-      min(col("y")), max(col("y"))).head()
-    val projBbox = Seq(bboxRow.getDouble(0), bboxRow.getDouble(2),
-      bboxRow.getDouble(1), bboxRow.getDouble(3))
-    val geoBbox = Geo.projToGeo(projBbox, crs)
-    val geometry =
-      s"""{"type": "Polygon", "coordinates": [[[${geoBbox(2)}, ${geoBbox(1)}], [${geoBbox(2)}, ${geoBbox(3)}], [${geoBbox(0)}, ${geoBbox(3)}], [${geoBbox(0)}, ${geoBbox(1)}], [${geoBbox(2)}, ${geoBbox(1)}]]]}"""
+      // ---- the output manifest, collected: one row per (file, init,
+      // leadtime)
+      sc.setJobDescription("preprocess: output manifest")
+      val targets = outputManifest(tidy, tScale, tBase, step, unit, opts)
+        .as[Target].collect().toSeq
 
-    // ---- per-(file, init, leadtime) frame, and per (file, init): the
-    // reference time, id and leadtime count
-    val refTime = timestamp_millis(
-      (col("time") * tScale).cast("long") + lit(tBase.toEpochMilli))
-    val leads = tidy
-      .groupBy(col("path"), col("time_idx"), col("time"), col("leadtime_idx"))
-      .agg(first(col("xs")).as("xs"), collect_set(col("variable")).as("vars"))
-    val inits = leads
-      .groupBy(col("path"), col("time_idx"), col("time"))
-      .agg(count(lit(1)).as("nleadtime"))
-      .withColumn("ref_time", refTime)
-      .withColumn("item_id", Scalars.itemId(col("ref_time")))
-      .withColumn("end_time", Scalars.calendarAdd(col("ref_time"), lit(unit),
-        (col("nleadtime") - 1) * step))
-      .withColumn("date_str", Scalars.fmtDate(col("ref_time")))
-      .withColumn("ts_str", Scalars.formatTime(col("ref_time")))
-      .withColumn("nc", relPath("netcdf", opts.name, col("ts_str"), ".nc"))
-      .withColumn("jpg", relPath("cogs", opts.name, col("item_id"), ".jpg"))
-      .persist()
+      // ---- A1/F11/F12: bbox in projected meters → geographic via LAEA
+      val projBbox = Seq(targets.map(_.x_min).min, targets.map(_.y_min).min,
+        targets.map(_.x_max).max, targets.map(_.y_max).max)
+      val geoBbox = Geo.projToGeo(projBbox, crs)
+      val geometry =
+        s"""{"type": "Polygon", "coordinates": [[[${geoBbox(2)}, ${geoBbox(1)}], [${geoBbox(2)}, ${geoBbox(3)}], [${geoBbox(0)}, ${geoBbox(3)}], [${geoBbox(0)}, ${geoBbox(1)}], [${geoBbox(2)}, ${geoBbox(1)}]]]}"""
 
-    // ---- the output manifest, collected: one row per (file, init,
-    // leadtime)
-    val targets = leads.drop("time").join(inits, Seq("path", "time_idx"))
-      .select(col("path"), col("time_idx"), col("time"), col("leadtime_idx"),
-        col("item_id"), col("xs"), col("vars"), col("nc"), col("jpg"),
-        relPath("cogs", opts.name, cogId(step, unit), ".tif").as("tif"))
-      .as[Target].collect().toSeq
+      // ---- J2 at the ID level: only inits whose item is not catalogued
+      // yet need their assets' statistics and file info
+      val catalogRoot = s"${opts.dataPath}/stac/${opts.catalogName}"
+      val catalogExists = Files.exists(Paths.get(catalogRoot, "catalog.json"))
+      sc.setJobDescription("preprocess: catalog read")
+      val existing =
+        if (catalogExists) StacJsonSink.readItems(spark, catalogRoot)
+        else spark.emptyDataset[StacItem]
+      val (nStored, storedIds, storedThumb) =
+        if (catalogExists) storedItems(existing, opts.name)
+        else (0L, Nil, None)
+      val newIds = targets.map(_.item_id).toSet -- storedIds
 
-    // ---- J2 at the ID level: only inits whose item is not catalogued
-    // yet need their assets' statistics and file info
-    val catalogRoot = s"${opts.dataPath}/stac/${opts.catalogName}"
-    val catalogExists = Files.exists(Paths.get(catalogRoot, "catalog.json"))
-    val existing =
-      if (catalogExists) StacJsonSink.readItems(spark, catalogRoot)
-      else spark.emptyDataset[StacItem]
-    val known =
-      if (!catalogExists) Set.empty[String]
-      else existing.filter(col("collection") === lit(opts.name))
-        .select(col("id")).as[String].collect().toSet
-    val newIds = targets.map(_.item_id).toSet -- known
+      // ---- K1/K2/K3 + A2 + E3: one pass over the output groups
+      // K3: the thumbnail shows the first band (name order) of all inputs
+      sc.setJobDescription("preprocess: write pass")
+      val firstBand = targets.flatMap(_.vars).minOption.getOrElse("")
+      val groups = planGroups(targets, newIds, firstBand, opts)
+      val reports = if (groups.isEmpty) Array.empty[GroupResult]
+        else writeGroups(spark, tidy, groups, firstBand, crs, opts)
+      val nSlices = reports.count(r => r.lead < 0 && r.wrote).toLong
 
-    // ---- K1/K2/K3 + A2 + E3: one pass over the output groups
-    // K3: the thumbnail shows the first band (name order) of all inputs
-    val firstBand = targets.flatMap(_.vars).minOption.getOrElse("")
-    val groups = planGroups(targets, newIds, firstBand, opts)
-    val reports = if (groups.isEmpty) Array.empty[GroupResult]
-      else writeGroups(spark, tidy, groups, firstBand, crs, opts)
-    val nSlices = reports.count(r => r.lead < 0 && r.wrote).toLong
+      // ---- E1/E2/E3/J6: the new items, assembled on the driver
+      val newItems = assembleItems(spark,
+        targets.filter(t => newIds(t.item_id)), reports.toSeq, geoBbox,
+        geometry, hemisphere, opts)
 
-    // ---- item assembly + J2 get-or-create vs the existing catalog
-    val toWrite =
-      if (newIds.isEmpty) existing
-      else {
-        val newInits = inits.filter(col("item_id").isin(newIds.toSeq: _*))
-        val stats = reports.toSeq.flatMap(r => r.bands.map(b =>
-          (r.path, r.timeIdx, r.lead, b.variable, b.min, b.max, b.mean,
-            b.stddev, b.validPercent)))
-          .toDF("path", "time_idx", "leadtime_idx", "variable", "stat_min",
-            "stat_max", "stat_mean", "stat_stddev", "valid_percent")
-        val files = reports.toSeq.flatMap(_.files)
-          .toDF("href", "fsize", "fchecksum")
-        // ---- E1/E2: asset rows (netcdf + per-leadtime cog + thumbnail)
-        val assets = assetRows(newInits, stats, step, unit, opts)
-        // ---- E3/J6: size + blockwise multihash of the files on disk
-        val enriched = enrichFileInfo(assets, files)
-        val items = buildItems(spark, newInits, enriched, geoBbox,
-          geometry, hemisphere, opts)
+      // ---- J1/A4: collection merge, then K4 catalog write
+      // W3 completion — promote the FIRST item's thumbnail to the
+      // collection (ref generator.py:798-803, 944-957), elected among the
+      // run's collection by (datetime, id) so the election is
+      // deterministic; mergeCollections keeps an already-stored
+      // collection thumbnail over this incoming one
+      val promotedThumb = (storedThumb ++ newItems.flatMap(it =>
+          it.assets.find(_.key == "thumbnail").map(Thumb(it.datetime, it.id, _))))
+        .minByOption(t => (t.datetime, t.id)).map(_.asset)
+      val incomingColl = StacCollection(
+        id = opts.name, title = opts.name,
+        description = // ref generator.py:654
+          s"${opts.name.capitalize.replace("_", " ").replace("-", " ")} collection",
+        license = opts.license, bbox = geoBbox,
+        temporal_start = targets.flatMap(t => Option(t.datetime)).minOption.orNull,
+        temporal_end = targets.flatMap(t => Option(t.end_time)).maxOption.orNull,
+        assets = promotedThumb.toSeq,
+        extra = if (hemisphere.nonEmpty) Map("custom:hemisphere" -> hemisphere)
+                else Map.empty)
+      sc.setJobDescription("preprocess: catalog read")
+      val collections =
+        if (catalogExists)
+          StacOps.mergeCollections(
+            StacJsonSink.readCollections(spark, catalogRoot),
+            Seq(incomingColl).toDS()).collect().toSeq
+        else Seq(incomingColl)
+
+      // J2 get-or-create vs the existing catalog (the new ids already
+      // exclude the collection's stored ones)
+      val toWrite =
+        if (!catalogExists) newItems.toDS()
+        else if (newItems.isEmpty) existing
         // unionByName, never positional union: the two sides originate
-        // from different plans (join output vs JSON scan) whose column
+        // from different plans (local rows vs JSON scan) whose column
         // orders are not guaranteed to agree.
-        // persisted: THREE actions consume this relation (the thumbnail
-        // promotion's ordered head, the item count, and the catalog
-        // write) and each would otherwise replay the item assembly.
-        // Unpersisted with the other caches.
-        StacOps.getOrCreateItems(existing, items)
+        else StacOps.getOrCreateItems(existing, newItems.toDS())
           .unionByName(existing)
-          .persist()
-      }
+      sc.setJobDescription("preprocess: catalog write")
+      StacJsonSink.write(catalogRoot,
+        StacCatalog(opts.catalogName, s"${opts.catalogName} STAC catalog",
+          collections.map(_.id)),
+        collections, toWrite)
+      tidy.unpersist()
+      Result(catalogRoot, nStored + newItems.size, nSlices)
+    }
 
-    // ---- J1/A4: collection merge, then K4 catalog write
-    val extent = inits.agg(
-      min(Scalars.datetimeToStr(col("ref_time"))),
-      max(Scalars.datetimeToStr(col("end_time")))).head()
-    // W3 completion — promote the FIRST item's thumbnail to the
-    // collection (ref generator.py:798-803, 944-957): one-row limit
-    // collected, ordered by (datetime, id) so the election is
-    // deterministic; mergeCollections keeps an already-stored
-    // collection thumbnail over this incoming one
-    val promotedThumb = toWrite
-      .select(col("datetime"), col("id"), explode(col("assets")).as("a"))
-      .filter(col("a.key") === "thumbnail")
-      .orderBy(col("datetime"), col("id"))
-      .limit(1)
-      .select(col("a.*")).as[graft.model.StacAsset]
-      .collect().headOption
-    val incomingColl = StacCollection(
-      id = opts.name, title = opts.name,
-      description = // ref generator.py:654
-        s"${opts.name.capitalize.replace("_", " ").replace("-", " ")} collection",
-      license = opts.license, bbox = geoBbox,
-      temporal_start = extent.getString(0), temporal_end = extent.getString(1),
-      assets = promotedThumb.toSeq,
-      extra = if (hemisphere.nonEmpty) Map("custom:hemisphere" -> hemisphere)
-              else Map.empty)
-    val collections =
-      if (catalogExists)
-        StacOps.mergeCollections(
-          StacJsonSink.readCollections(spark, catalogRoot),
-          Seq(incomingColl).toDS()).collect().toSeq
-      else Seq(incomingColl)
-
-    val nItems = toWrite.count()
-    StacJsonSink.write(catalogRoot,
-      StacCatalog(opts.catalogName, s"${opts.catalogName} STAC catalog",
-        collections.map(_.id)),
-      collections, toWrite)
-    man.unpersist(); tidy.unpersist(); inits.unpersist()
-    toWrite.unpersist() // no-op on the fast path (toWrite eq existing)
-    Result(catalogRoot, nItems, nSlices)
+  /** Runs `body`, then restores the caller's job description, also when
+    * `body` throws: the pipelines label their jobs by section.
+    */
+  private[pipeline] def restoringJobDescription[A](spark: SparkSession)(
+      body: => A): A = {
+    val caller = spark.sparkContext.getLocalProperty("spark.job.description")
+    try body finally spark.sparkContext.setJobDescription(caller)
   }
 
   /** Output file path relative to the data dir, under
@@ -279,17 +248,64 @@ object Preprocess {
                       ext: String) =
     concat(lit(s"$kind/$collection/"), col("date_str"), lit("/"), file, lit(ext))
 
-  private def validTime(step: Double, unit: String) =
-    Scalars.calendarAdd(col("ref_time"), lit(unit), col("leadtime_idx") * step)
-
-  private def cogId(step: Double, unit: String) =
-    Scalars.cogItemId(col("item_id"), validTime(step, unit))
+  /** The output manifest: ONE aggregate of the tidy scan per (file,
+    * init), exploded to one row per leadtime. A row carries its init's
+    * projected bbox and every id, path, time string and title its item
+    * needs (F5/F6), all from [[Scalars]], evaluated in this one action.
+    */
+  private def outputManifest(tidy: DataFrame, tScale: Long,
+                             tBase: java.time.Instant, step: Double,
+                             unit: String, opts: Options): DataFrame = {
+    val refTime = col("ref_time")
+    val validTime = col("valid_time")
+    tidy
+      .groupBy(col("path"), col("time_idx"), col("time"))
+      .agg(first(col("xs")).as("xs"),
+        collect_set(struct(col("leadtime_idx"), col("variable"))).as("lv"),
+        min(array_min(col("xs"))).as("x_min"),
+        max(array_max(col("xs"))).as("x_max"),
+        min(col("y")).as("y_min"), max(col("y")).as("y_max"))
+      .withColumn("leads", array_sort(array_distinct(
+        transform(col("lv"), _.getField("leadtime_idx")))))
+      .withColumn("leadtime_idx", explode(col("leads")))
+      // the variables present at this leadtime
+      .withColumn("vars", transform(
+        filter(col("lv"), _.getField("leadtime_idx") === col("leadtime_idx")),
+        _.getField("variable")))
+      .withColumn("ref_time", timestamp_millis(
+        (col("time") * tScale).cast("long") + lit(tBase.toEpochMilli)))
+      .withColumn("item_id", Scalars.itemId(refTime))
+      .withColumn("end_time", Scalars.calendarAdd(refTime, lit(unit),
+        (size(col("leads")) - 1) * step))
+      .withColumn("valid_time", Scalars.calendarAdd(refTime, lit(unit),
+        col("leadtime_idx") * step))
+      .withColumn("date_str", Scalars.fmtDate(refTime))
+      .select(col("path"), col("time_idx"), col("time"), col("leadtime_idx"),
+        col("item_id"), col("xs"), col("vars"),
+        relPath("netcdf", opts.name, Scalars.formatTime(refTime), ".nc")
+          .as("nc"),
+        relPath("cogs", opts.name, col("item_id"), ".jpg").as("jpg"),
+        relPath("cogs", opts.name,
+          Scalars.cogItemId(col("item_id"), validTime), ".tif").as("tif"),
+        Scalars.datetimeToStr(refTime).as("datetime"),
+        Scalars.datetimeToStr(col("end_time")).as("end_time"),
+        size(col("leads")).cast("string").as("nleadtime"),
+        concat(lit("Full forecast netCDF from "), Scalars.fmtSpace(refTime))
+          .as("nc_title"),
+        Scalars.datetimeToStr(validTime).as("valid_time"),
+        concat(lit("Forecast for "), Scalars.fmtSpace(validTime))
+          .as("cog_title"),
+        col("x_min"), col("x_max"), col("y_min"), col("y_max"))
+  }
 
   /** One (file, init, leadtime) row of the output manifest. */
   private[pipeline] final case class Target(
       path: String, time_idx: Int, time: Double, leadtime_idx: Int,
       item_id: String, xs: Seq[Double], vars: Seq[String], nc: String,
-      jpg: String, tif: String)
+      jpg: String, tif: String, datetime: String, end_time: String,
+      nleadtime: String, nc_title: String, valid_time: String,
+      cog_title: String, x_min: Double, x_max: Double, y_min: Double,
+      y_max: Double)
 
   /** One output group = one write task: an init's netCDF slice
     * (`lead` -1) or one (init, leadtime) COG, whose leadtime-0 group
@@ -307,9 +323,11 @@ object Preprocess {
 
   private[pipeline] final case class FileInfo(
       href: String, size: Long, checksum: String)
+  /** One band's statistics, named as in `forecast:bands`. */
   private[pipeline] final case class BandStat(
-      variable: String, min: Option[Double], max: Option[Double],
-      mean: Option[Double], stddev: Option[Double], validPercent: Option[Double])
+      variable: String, stat_min: Option[Double], stat_max: Option[Double],
+      stat_mean: Option[Double], stat_stddev: Option[Double],
+      valid_percent: Option[Double])
   /** What a write task reports: whether it wrote its main output, the
     * size and multihash of every output on disk, and (COG groups) the
     * band statistics in variable order.
@@ -515,11 +533,11 @@ object Preprocess {
       vlines.foreach(l => Array.copy(l.values, 0, grid(l.yIdx), 0, xs.length))
       def stat(o: Option[Double]) = o.getOrElse(Double.NaN)
       CogWriter.Band(vname, Map(
-        "STATISTICS_MINIMUM" -> stat(s.min),
-        "STATISTICS_MAXIMUM" -> stat(s.max),
-        "STATISTICS_MEAN" -> stat(s.mean),
-        "STATISTICS_STDDEV" -> stat(s.stddev),
-        "STATISTICS_VALID_PERCENT" -> stat(s.validPercent))) -> grid
+        "STATISTICS_MINIMUM" -> stat(s.stat_min),
+        "STATISTICS_MAXIMUM" -> stat(s.stat_max),
+        "STATISTICS_MEAN" -> stat(s.stat_mean),
+        "STATISTICS_STDDEV" -> stat(s.stat_stddev),
+        "STATISTICS_VALID_PERCENT" -> stat(s.valid_percent))) -> grid
     }
     // optional EPSG:4326 warp before the write (ref
     // generator.py:1006-1007; default off)
@@ -552,101 +570,75 @@ object Preprocess {
     CogWriter.write(outBands, cogOpts)
   }
 
-  /** E1/E2: per-item asset rows as a DataFrame of (item_id, asset struct). */
-  private def assetRows(inits: DataFrame, stats: DataFrame, step: Double,
-                        unit: String, opts: Options): DataFrame = {
-    val emptyExtra = map().cast("map<string,string>")
-    val ncAsset = inits.select(col("item_id"), struct(
-      lit("netcdf").as("key"),
-      concat(lit("./"), col("nc")).as("href"),
-      lit("application/x-netcdf").as("media_type"),
-      concat(lit("Full forecast netCDF from "),
-        Scalars.fmtSpace(col("ref_time"))).as("title"),
-      typedLit(Seq("data")).as("roles"),
-      lit(null).cast("string").as("checksum"), lit(-1L).as("size"),
-      map(
-        lit("forecast:reference_time"), Scalars.datetimeToStr(col("ref_time")),
-        lit("forecast:end_time"), Scalars.datetimeToStr(col("end_time")),
-        lit("forecast:leadtime_length"), col("nleadtime").cast("string"))
-        .as("extra")).as("asset"))
-    val thumbAsset = inits.select(col("item_id"), struct(
-      lit("thumbnail").as("key"),
-      concat(lit("./"), col("jpg")).as("href"),
-      lit("image/jpeg").as("media_type"),
-      lit("Thumbnail").as("title"),
-      typedLit(Seq("thumbnail")).as("roles"),
-      lit(null).cast("string").as("checksum"), lit(-1L).as("size"),
-      emptyExtra.as("extra")).as("asset"))
-    // E2: per-leadtime COG asset with embedded band statistics
-    val perLead = stats
-      .groupBy(col("path"), col("time_idx"), col("leadtime_idx"))
-      .agg(sort_array(collect_list(struct(
-        col("variable"), col("stat_min"), col("stat_max"), col("stat_mean"),
-        col("stat_stddev"), col("valid_percent")))).as("bands"))
-      .join(inits, Seq("path", "time_idx"))
-      .withColumn("valid_time", validTime(step, unit))
-    val cogAsset = perLead.select(col("item_id"), struct(
-      concat(lit("cog_lead_"), col("leadtime_idx").cast("string")).as("key"),
-      concat(lit("./"), relPath("cogs", opts.name, cogId(step, unit), ".tif"))
-        .as("href"),
-      lit("image/tiff; application=geotiff; profile=cloud-optimized")
-        .as("media_type"),
-      concat(lit("Forecast for "), Scalars.fmtSpace(col("valid_time")))
-        .as("title"),
-      typedLit(Seq("data")).as("roles"),
-      lit(null).cast("string").as("checksum"), lit(-1L).as("size"),
-      map(
-        lit("custom:leadtime"), col("leadtime_idx").cast("string"),
-        lit("custom:valid_time"), Scalars.datetimeToStr(col("valid_time")),
-        lit("forecast:bands"), to_json(col("bands"))).as("extra")).as("asset"))
-    ncAsset.unionByName(thumbAsset).unionByName(cogAsset)
+  private[pipeline] final case class Thumb(datetime: String, id: String,
+                                           asset: StacAsset)
+
+  /** What the run needs of the stored items, in one action, which keeps
+    * them a Dataset: their number (every collection), the ids of the
+    * run's collection, and its first thumbnail by (datetime, id) (W3).
+    */
+  private def storedItems(existing: Dataset[StacItem], name: String)
+      : (Long, Seq[String], Option[Thumb]) = {
+    import existing.sparkSession.implicits._
+    val mine = col("collection") === lit(name)
+    val thumb = get(filter(col("assets"), _.getField("key") === "thumbnail"),
+      lit(0))
+    existing.agg(
+        count(lit(1)),
+        collect_list(when(mine, col("id"))),
+        min_by(struct(col("datetime"), col("id"), thumb.as("asset")),
+          when(mine && thumb.isNotNull, struct(col("datetime"), col("id")))))
+      .as[(Long, Seq[String], Option[Thumb])].head()
   }
 
-  /** E3/J6: fills each asset's size and blockwise digest-of-digest
-    * multihash (F14) from the file info the write tasks reported, by
-    * href. Assets whose file does not exist (stacOnly) keep null
-    * checksum / -1 size.
+  /** E1/E2/E3/J6 on the driver: one item per new init, from its output
+    * manifest rows and the write tasks' reports. Each asset carries the
+    * size and multihash its task reported for its file, or null / -1
+    * when the file does not exist (stacOnly); a COG asset carries its
+    * band statistics.
     */
-  private def enrichFileInfo(assets: DataFrame, files: DataFrame): DataFrame =
-    assets
-      .select(col("item_id"), col("asset.*"))
-      .join(files, Seq("href"), "left")
-      .select(col("item_id"), struct(
-        col("key"), col("href"), col("media_type"), col("title"), col("roles"),
-        coalesce(col("fchecksum"), col("checksum")).as("checksum"),
-        coalesce(col("fsize"), col("size")).as("size"),
-        col("extra")).as("asset"))
-
-  private def buildItems(spark: SparkSession, inits: DataFrame,
-                         assets: DataFrame, geoBbox: Seq[Double],
-                         geometry: String, hemisphere: String,
-                         opts: Options) = {
+  private def assembleItems(spark: SparkSession, targets: Seq[Target],
+                            reports: Seq[GroupResult], geoBbox: Seq[Double],
+                            geometry: String, hemisphere: String,
+                            opts: Options): Seq[StacItem] = {
     import spark.implicits._
-    val base = map(
-      lit("forecast:reference_time"), Scalars.datetimeToStr(col("ref_time")),
-      lit("forecast:end_time"), Scalars.datetimeToStr(col("end_time")),
-      lit("forecast:leadtime_length"), col("nleadtime").cast("string"))
-    val props =
-      if (hemisphere.isEmpty) base
-      else map_concat(base, map(lit("custom:hemisphere"), lit(hemisphere)))
-    // comparator array_sort: structs holding a MAP have no natural
-    // ordering, but the asset key alone is a deterministic sort
-    val byKey = (l: org.apache.spark.sql.Column, r: org.apache.spark.sql.Column) =>
-      when(l.getField("key") < r.getField("key"), -1)
-        .when(l.getField("key") > r.getField("key"), 1).otherwise(0)
-    inits
-      .join(assets.groupBy(col("item_id"))
-        .agg(array_sort(collect_list(col("asset")), byKey).as("assets")),
-        Seq("item_id"))
-      .select(
-        col("item_id").as("id"),
-        lit(opts.name).as("collection"),
-        lit(geometry).as("geometry"),
-        typedLit(geoBbox).as("bbox"),
-        Scalars.datetimeToStr(col("ref_time")).as("datetime"),
-        props.as("properties"),
-        col("assets"))
-      .as[StacItem]
+    val files = reports.flatMap(_.files).map(f => f.href -> f).toMap
+    def asset(key: String, rel: String, mediaType: String, title: String,
+              role: String, extra: Map[String, String]) = {
+      val f = files.get(s"./$rel")
+      StacAsset(key, s"./$rel", mediaType, title, Seq(role),
+        f.map(_.checksum).orNull, f.fold(-1L)(_.size), extra)
+    }
+    // E2: `forecast:bands` is Spark's own to_json of a COG's statistics,
+    // a projection of local rows the optimizer folds on the driver (no job)
+    val cogs = reports.filter(_.bands.nonEmpty)
+    val bands = cogs.map(r => (r.path, r.timeIdx, r.lead)).zip(cogs.map(_.bands)
+      .toDF("bands").select(to_json(col("bands"))).as[String].collect()).toMap
+    targets.groupBy(t => (t.path, t.time_idx)).toSeq.sortBy(_._1).map {
+      case (init, rows) =>
+        val ls = rows.sortBy(_.leadtime_idx)
+        val t = ls.head
+        val forecast = Map(
+          "forecast:reference_time" -> t.datetime,
+          "forecast:end_time" -> t.end_time,
+          "forecast:leadtime_length" -> t.nleadtime)
+        // E2: per-leadtime COG asset with embedded band statistics
+        val cogAssets = ls.flatMap(l =>
+          bands.get((init._1, init._2, l.leadtime_idx)).map(json =>
+            asset(s"cog_lead_${l.leadtime_idx}", l.tif,
+              "image/tiff; application=geotiff; profile=cloud-optimized",
+              l.cog_title, "data", Map(
+                "custom:leadtime" -> l.leadtime_idx.toString,
+                "custom:valid_time" -> l.valid_time,
+                "forecast:bands" -> json))))
+        StacItem(t.item_id, opts.name, geometry, geoBbox, t.datetime,
+          if (hemisphere.isEmpty) forecast
+          else forecast + ("custom:hemisphere" -> hemisphere),
+          asset("netcdf", t.nc, "application/x-netcdf", t.nc_title, "data",
+            forecast) +:
+          asset("thumbnail", t.jpg, "image/jpeg", "Thumbnail", "thumbnail",
+            Map.empty) +: cogAssets)
+    }
   }
 }
 

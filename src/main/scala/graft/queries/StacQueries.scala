@@ -21,7 +21,7 @@ object StacQueries {
     * property block, composed from the same scalar functions the sinks
     * use.
     */
-  val assetRows = QueryDef("q43_asset_rows",
+  val netcdfAssets = QueryDef("q43_asset_rows",
     """SELECT
       |  'forecast_init_' || strftime(o_orderdate, '%Y-%m-%dT%H-%M-%SZ') AS item_id,
       |  'model_' || (o_custkey % 3) AS collection,
@@ -118,5 +118,5 @@ object StacQueries {
     }
   }
 
-  val all: Seq[QueryDef] = Seq(assetRows, roundTrip)
+  val all: Seq[QueryDef] = Seq(netcdfAssets, roundTrip)
 }

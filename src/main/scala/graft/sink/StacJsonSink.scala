@@ -16,7 +16,9 @@ import graft.model.{StacCatalog, StacCollection, StacItem, StacAsset}
   *
   * Scale split: the catalog/collection SKELETON is tiny and written on
   * the driver, but ITEM documents are written from the executors via
-  * `foreachPartition` — the item set never collects. JSON is
+  * `foreachPartition` — stored items never collect; a run's new items
+  * are built on the driver from the output manifest it already
+  * collects. JSON is
   * deterministic (fixed field order, sorted map keys) so golden-file
   * comparison and save→rescan→identical round-trips are exact.
   * (Local-fs writes here; the foreachPartition writer is where an HDFS/

@@ -3,14 +3,18 @@ package graft
 import java.nio.file.Files
 import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
-import org.apache.spark.scheduler.{SparkListener, SparkListenerStageCompleted, StageInfo}
-import graft.pipeline.Preprocess
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+  SparkListenerStageCompleted, StageInfo}
+import graft.pipeline.{ConfigMismatchException, Ingest, Preprocess}
 import graft.source.NetCdfFixture
 
 /** The preprocess write stage runs one task per output group: each init's
   * netCDF slice and each (init, leadtime) COG (the leadtime-0 task also
   * writes the thumbnail). AQE partition coalescing or a hash collision
   * that packed two groups into one task would show as fewer tasks.
+  *
+  * The whole run has a job budget, and every job it submits names its
+  * section in the job description.
   */
 class PreprocessBalanceSpec extends SparkSpec {
 
@@ -34,5 +38,78 @@ class PreprocessBalanceSpec extends SparkSpec {
       while (writeStages.isEmpty && System.nanoTime() < deadline) Thread.sleep(20)
       assert(writeStages.map(_.numTasks) === Seq(2 + 2 * 3))
     } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  private val Caller = "balance: caller"
+
+  /** The descriptions of the jobs `body` submits, run under the
+    * description [[Caller]]. Listener events arrive asynchronously but
+    * in order, so a marker job after `body` closes the list exactly.
+    */
+  private def jobsOf(body: => Unit): Seq[String] = {
+    val sc = spark.sparkContext
+    val marker = "balance: marker"
+    val seen = new ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        seen.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .getOrElse(""))
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobDescription(Caller)
+      body
+      assert(sc.getLocalProperty("spark.job.description") === Caller,
+        "the caller's job description is back")
+      sc.setJobDescription(marker)
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
+      while (!seen.contains(marker) && System.nanoTime() < deadline)
+        Thread.sleep(10)
+      val jobs = seen.asScala.toSeq
+      assert(jobs.contains(marker), "listener never saw the marker job")
+      jobs.takeWhile(_ != marker)
+    } finally {
+      sc.setJobDescription(null)
+      sc.removeSparkListener(listener)
+    }
+  }
+
+  private val PreprocessLabels = Set("manifest", "output manifest",
+    "write pass", "catalog read", "catalog write").map("preprocess: " + _)
+  private val IngestLabels = Set("ingest: catalog read", "ingest: load")
+
+  test("job budget: a cold run submits <= 8 jobs, an idempotent re-run " +
+    "no more than before; every job is labelled by its section") {
+    val work = Files.createTempDirectory("graft-budget")
+    val glob = NetCdfFixture.writeFiles(work.resolve("input"), n = 2)
+    val opts = Preprocess.Options(
+      name = "sic_north", dataPath = work.resolve("data").toString)
+    var root = ""
+    val cold = jobsOf { root = Preprocess.run(spark, glob, opts).catalogRoot }
+    val rerun = jobsOf(Preprocess.run(spark, glob, opts))
+    assert(cold.size <= 8, cold)
+    // 25 and 22 jobs when the items were assembled by DataFrame joins
+    assert(rerun.size <= 22, rerun)
+    (cold ++ rerun).foreach(d => assert(PreprocessLabels(d), d))
+
+    val ingest = jobsOf(Ingest.run(spark, root,
+      new Ingest.DryRunClient(Set.empty, Set.empty)))
+    assert(ingest.nonEmpty)
+    ingest.foreach(d => assert(IngestLabels(d), d))
+  }
+
+  test("a run that throws still restores the caller's job description") {
+    val work = Files.createTempDirectory("graft-budget-throw")
+    val glob = NetCdfFixture.writeFiles(work.resolve("input"), n = 1)
+    val opts = Preprocess.Options(
+      name = "sic_north", dataPath = work.resolve("data").toString)
+    Preprocess.run(spark, glob, opts)
+    jobsOf(intercept[ConfigMismatchException](
+      Preprocess.run(spark, glob, opts.copy(forecastFrequency = "6hours"))))
+    jobsOf(intercept[Exception](Ingest.run(spark,
+      work.resolve("no-catalog").toString,
+      new Ingest.DryRunClient(Set.empty, Set.empty))))
   }
 }

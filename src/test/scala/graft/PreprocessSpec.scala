@@ -254,4 +254,47 @@ class PreprocessSpec extends SparkSpec {
     assert(cog.extra("forecast:bands").contains(
       """{"variable":"sic_stddev","valid_percent":0.0}"""))
   }
+
+  /** md5 of every file under `root`, by path relative to it. */
+  private def md5Tree(root: String): Map[String, String] = {
+    val r = Paths.get(root)
+    Files.walk(r).iterator().asScala.filter(Files.isRegularFile(_)).map { p =>
+      r.relativize(p).toString -> MessageDigest.getInstance("MD5")
+        .digest(Files.readAllBytes(p)).map("%02x".format(_)).mkString
+    }.toMap
+  }
+
+  test("golden bytes: every STAC JSON file of the 2-file fixture, after a " +
+    "cold run and after an idempotent re-run") {
+    val item = "sic_north/forecast_init_2025-01-0%1$dT00-00-00Z/" +
+      "forecast_init_2025-01-0%1$dT00-00-00Z.json"
+    val golden = Map(
+      "catalog.json" -> "393bad8192f8fa13a94a69a8a07f0a80",
+      "sic_north/collection.json" -> "a10a806ec4d622bc21cc71539bf5b030",
+      item.format(1) -> "6b235bb7cccdd823526038f66d845a26",
+      item.format(2) -> "138e6ed37d630153115aac10f24846a4")
+    val (_, glob, opts) = freshRun()
+    val root = Preprocess.run(spark, glob, opts).catalogRoot
+    assert(md5Tree(root) === golden)
+    Preprocess.run(spark, glob, opts)
+    assert(md5Tree(root) === golden)
+  }
+
+  test("W3: the collection thumbnail is elected among the run's own " +
+    "collection only") {
+    val work = Files.createTempDirectory("graft-pre-two")
+    val globA = NetCdfFixture.writeFiles(work.resolve("a"), n = 2)
+    val dirB = Files.createDirectories(work.resolve("b"))
+    Files.copy(work.resolve("a/forecast_01.nc"), dirB.resolve("forecast_01.nc"))
+    val data = work.resolve("data").toString
+    Preprocess.run(spark, globA, Preprocess.Options(name = "sic_a", dataPath = data))
+    val res = Preprocess.run(spark, s"$dirB/*.nc",
+      Preprocess.Options(name = "sic_b", dataPath = data))
+    val thumbs = StacJsonSink.readCollections(spark, res.catalogRoot).collect()
+      .map(c => c.id -> c.assets.filter(_.key == "thumbnail").map(_.href)).toMap
+    assert(thumbs("sic_a") ===
+      Seq("./cogs/sic_a/2025-01-01/forecast_init_2025-01-01T00-00-00Z.jpg"))
+    assert(thumbs("sic_b") ===
+      Seq("./cogs/sic_b/2025-01-02/forecast_init_2025-01-02T00-00-00Z.jpg"))
+  }
 }
