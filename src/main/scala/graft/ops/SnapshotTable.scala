@@ -403,27 +403,29 @@ object SnapshotTable {
     * part of the schema, and queries that forget a partition column
     * still prune.
     *
-    * Two storage forms, chosen by [[isLegacy]]:
-    *  - the original single-field LONG-source form keeps its compact
-    *    manifest encoding (`part_source/part_transform/part_param` +
-    *    long `part_values`) and every legacy code path;
-    *  - TYPED and/or MULTI-COLUMN specs record `part_sources/
-    *    part_transforms/part_params/part_dtypes` plus per-file
-    *    encoded-string tuples ([[PartKeys]]).
+    * One storage form for every spec, whatever its field count or
+    * source types: the manifest records `part_sources/
+    * part_transforms/part_params/part_dtypes` plus per-file
+    * encoded-string tuples ([[PartKeys]]), and every commit, scan and
+    * rewrite path handles the tuple. A single BIGINT field is one
+    * [[PartKeys]] field with value dtype `long`.
     */
   final case class PartSpec(fields: Seq[PartField]) {
     require(fields.nonEmpty, "partition spec needs at least one field")
     require(fields.map(_.source).distinct.length == fields.length,
       s"partition spec repeats a source column: ${fields.map(_.source)}")
 
-    /** The single-field LONG-source form every pre-typed code path
-      * (and manifest encoding) was built around. */
-    def isLegacy: Boolean = fields.lengthCompare(1) == 0 &&
-      fields.head.dtype == "long" &&
-      Seq("identity", "truncate", "bucket").contains(fields.head.transform)
+    /** The one-BIGINT-field shape the long-keyed APIs
+      * ([[appendPartitioned]]'s range/key probes, [[overwriteWhere]],
+      * [[deletePartitionRange]]) take: their bounds are source LONGs,
+      * so they need exactly one field over a BIGINT source. A shape
+      * test only — storage is the same [[PartKeys]] for every spec.
+      */
+    def singleLong: Boolean =
+      fields.lengthCompare(1) == 0 && fields.head.dtype == "long"
 
-    private def legacy: PartField = {
-      require(isLegacy,
+    private def longField: PartField = {
+      require(singleLong,
         s"this path supports only single-column BIGINT partition " +
           s"specs, got $describe")
       fields.head
@@ -435,27 +437,25 @@ object SnapshotTable {
       case t => s"$t(${f.source})"
     }).mkString("(", ", ", ")")
 
-    // ---- legacy single-LONG accessors (loud on typed specs)
-    def source: String = legacy.source
-    def transform: String = legacy.transform
-    def param: Long = legacy.param
-    def monotone: Boolean = legacy.monotone
-    def apply(x: Long): Long = legacy.applyKey(x).asInstanceOf[Long]
-    def column: org.apache.spark.sql.Column = legacy.column
+    // ---- single-BIGINT accessors (loud on any other shape)
+    def source: String = longField.source
+    def transform: String = longField.transform
+    def param: Long = longField.param
+    def monotone: Boolean = longField.monotone
+    def apply(x: Long): Long = longField.applyKey(x).asInstanceOf[Long]
   }
 
   object PartSpec {
-    /** The legacy single-column BIGINT spec — the public constructor
-      * every pre-typed caller uses. */
+    /** The single-column BIGINT spec. */
     def apply(source: String, transform: String, param: Long): PartSpec =
       PartSpec(Seq(PartField(source, transform, param, "long")))
   }
 
-  /** Per-file partition-value tuples of a TYPED spec: one encoded
-    * string per field per file, flattened file-major. Decoded
-    * comparable keys materialize lazily ONCE per instance (versions
-    * are cached per (path, version); re-parsing per plan would be
-    * O(files × fields) string work per query at scale).
+  /** Per-file partition-value tuples: one encoded string per field
+    * per file, flattened file-major. Decoded comparable keys
+    * materialize lazily ONCE per instance (versions are cached per
+    * (path, version); re-parsing per plan would be O(files × fields)
+    * string work per query at scale).
     */
   final case class PartKeys(valueDtypes: IndexedSeq[String],
                             flat: IndexedSeq[String]) {
@@ -478,6 +478,15 @@ object SnapshotTable {
     @transient lazy val keys: IndexedSeq[Any] =
       flat.indices.map(x =>
         TypedBounds.keyOfEncoded(valueDtypes(x % nFields), flat(x)))
+
+    /** Per-file values of a single LONG-valued field — what the
+      * long-keyed APIs of a [[PartSpec.singleLong]] spec compare. */
+    @transient lazy val longs: IndexedSeq[Long] = {
+      require(valueDtypes == IndexedSeq("long"),
+        s"partition values of dtype(s) ${valueDtypes.mkString(", ")} " +
+          "are not one LONG per file")
+      keys.map(_.asInstanceOf[Long])
+    }
 
     def slice(keepIdx: Seq[Int]): PartKeys =
       PartKeys(valueDtypes,
@@ -514,7 +523,6 @@ object SnapshotTable {
                            bloom: Option[BloomConf] = None,
                            txns: Map[String, Long] = Map.empty,
                            part: Option[PartSpec] = None,
-                           partValues: Option[Seq[Long]] = None,
                            committedMs: Long = 0L,
                            op: String = "",
                            dvFiles: Seq[String] = Seq.empty,
@@ -536,9 +544,8 @@ object SnapshotTable {
                            // decode / union coercion)
                            widenedTypes: Seq[(Long, String)] = Seq.empty,
                            segRefs: Option[Seq[SegRef]] = None,
-                           // per-file tuples of a TYPED spec (exactly
-                           // one of partValues/partKeys is set when
-                           // part is, by part.isLegacy)
+                           // per-file partition tuples: set exactly
+                           // when `part` is, for every spec shape
                            partKeys: Option[PartKeys] = None,
                            // bloom indexes beyond the first: `bloom`
                            // keeps the compact single-column encoding
@@ -587,14 +594,13 @@ object SnapshotTable {
   private final case class Segment(files: Seq[String], rows: Seq[Long],
                                    bytes: Seq[Long],
                                    epochs: Option[Seq[Long]],
-                                   partValues: Option[Seq[Long]],
                                    statsMin: Option[Seq[Long]],
                                    statsMax: Option[Seq[Long]],
                                    csMins: Seq[Seq[String]],
                                    csMaxs: Seq[Seq[String]],
                                    csHas: Seq[Seq[Boolean]],
                                    csExact: Seq[Seq[Boolean]],
-                                   // typed-spec tuples, flattened
+                                   // partition tuples, flattened
                                    // file-major (nFields from the
                                    // header's spec)
                                    partKeys: Option[Seq[String]] = None,
@@ -757,7 +763,7 @@ object SnapshotTable {
     }.getOrElse(Seq.empty)
     Segment(strs("files"), longs("file_rows").getOrElse(Seq.empty),
       longs("file_bytes").getOrElse(Seq.empty),
-      longs("file_epochs"), longs("part_values"),
+      longs("file_epochs"),
       longs("stats_min"), longs("stats_max"),
       nested("cs_mins", _.asText()), nested("cs_maxs", _.asText()),
       nested("cs_has", _.asBoolean()), nested("cs_exact", _.asBoolean()),
@@ -816,7 +822,6 @@ object SnapshotTable {
     lArr("file_rows", seg.rows)
     lArr("file_bytes", seg.bytes)
     seg.epochs.foreach(lArr("file_epochs", _))
-    seg.partValues.foreach(lArr("part_values", _))
     seg.partKeys.foreach(qArr("part_keys", _))
     seg.statsMin.foreach(lArr("stats_min", _))
     seg.statsMax.foreach(lArr("stats_max", _))
@@ -1099,12 +1104,16 @@ object SnapshotTable {
       if (has("txn_writers"))
         strsOf("txn_writers").zip(longs("txn_batches").get).toMap
       else Map.empty[String, Long]
+    // the removed single-BIGINT encoding is never read as
+    // "unpartitioned": pruning and purity would silently vanish
+    if (has("part_source"))
+      throw new IllegalStateException(
+        s"snapshot table $path v$v records its partition spec in the " +
+          "removed single-BIGINT form (part_source/part_values) — " +
+          "re-create the table")
     val part =
-      if (has("part_source"))
-        Some(PartSpec(jStr("part_source"), jStr("part_transform"),
-          jLong("part_param")))
-      else if (has("part_sources")) {
-        // TYPED / multi-column form: four parallel field arrays
+      if (has("part_sources")) {
+        // four parallel field arrays
         val srcs = strsOf("part_sources")
         val trs = strsOf("part_transforms")
         val ps = longs("part_params").get
@@ -1166,22 +1175,14 @@ object SnapshotTable {
           s"v$v carries field-id schema but a segment lacks file_epochs")
         e
       } else longs("file_epochs")
-    val legacyPart = part.exists(_.isLegacy)
-    val partValues =
-      if (seg.isDefined) {
-        val pv = catOpt(_.partValues)
-        require(!legacyPart || pv.isDefined,
-          s"v$v is hidden-partitioned but a segment lacks part_values")
-        pv
-      } else longs("part_values")
-    val partKeys: Option[PartKeys] = part.filterNot(_.isLegacy).map { sp =>
+    val partKeys: Option[PartKeys] = part.map { sp =>
       val vdts = sp.fields.map(_.valueDtype).toIndexedSeq
       val nF = vdts.length
       if (seg.isDefined) {
         // per-segment flat tuples, liveIdx selecting whole FILE groups
         val flat = segLive.iterator.flatMap { case (sg, li) =>
           val ks = sg.partKeys.getOrElse(throw new IllegalStateException(
-            s"v$v is typed-partitioned but a segment lacks part_keys"))
+            s"v$v is hidden-partitioned but a segment lacks part_keys"))
             .toIndexedSeq
           li.iterator.flatMap(i =>
             (0 until nF).map(j => ks(i * nF + j)))
@@ -1194,7 +1195,7 @@ object SnapshotTable {
       jLong("rows"), stats,
       if (seg.isDefined) Some(cat(_.rows)) else longs("file_rows"),
       if (seg.isDefined) Some(cat(_.bytes)) else longs("file_bytes"),
-      bloom, txns, part, partValues,
+      bloom, txns, part,
       if (has("committed_ms")) jLong("committed_ms") else 0L,
       if (has("op")) jStr("op") else "",
       if (has("dv_files")) strsOf("dv_files") else Seq.empty,
@@ -1270,7 +1271,6 @@ object SnapshotTable {
                              bloom: Option[BloomConf],
                              txns: Map[String, Long] = Map.empty,
                              part: Option[PartSpec] = None,
-                             partValues: Option[Seq[Long]] = None,
                              op: String = "",
                              dvFiles: Seq[String] = Seq.empty,
                              dvRows: Long = 0L,
@@ -1291,29 +1291,22 @@ object SnapshotTable {
                              // drop them from the successor manifest
                              bloomsExtra: Seq[BloomConf]): String = {
     val (tpath, baseOpt) = seg
-    // exactly one storage form per spec shape, checked HERE so any
-    // commit path that forgot to thread the typed tuples fails loudly
-    // at render, not as a silent unpartitioned manifest
-    part.foreach { p =>
-      if (p.isLegacy)
-        require(partValues.isDefined && partKeys.isEmpty,
-          "legacy partition spec needs long part_values (not part_keys)")
-      else
-        require(partKeys.isDefined && partValues.isEmpty,
-          s"typed partition spec ${p.describe} needs per-file " +
-            "part_keys (not long part_values)")
-    }
+    // checked HERE so any commit path that forgot to thread the
+    // tuples fails loudly at render, not as a silent unpartitioned
+    // manifest
+    require(part.isDefined == partKeys.isDefined,
+      s"partition spec ${part.map(_.describe)} and per-file part_keys " +
+        "must come together")
     val segmented = tpath.nonEmpty && files.nonEmpty &&
       (baseOpt.exists(_.segRefs.exists(_.nonEmpty)) ||
         files.length >= segThreshold)
     if (!segmented)
       renderInline(v, files, rows, bytes, stats, bloom, txns, part,
-        partValues, op, dvFiles, dvRows, schema, colStats, partKeys,
-        bloomsExtra)
+        op, dvFiles, dvRows, schema, colStats, partKeys, bloomsExtra)
     else
       renderSegmented(tpath, baseOpt, v, files, rows, bytes, stats,
-        bloom, txns, part, partValues, op, dvFiles, dvRows, schema,
-        colStats, partKeys, bloomsExtra)
+        bloom, txns, part, op, dvFiles, dvRows, schema, colStats,
+        partKeys, bloomsExtra)
   }
 
   /** Spec-visible counter of append-shape identity-carry commits —
@@ -1335,7 +1328,6 @@ object SnapshotTable {
                               bloom: Option[BloomConf],
                               txns: Map[String, Long],
                               part: Option[PartSpec],
-                              partValues0: Option[Seq[Long]],
                               op: String, dvFiles: Seq[String],
                               dvRows: Long, schema: Option[SchemaMeta],
                               colStats0: Seq[ColStats],
@@ -1352,7 +1344,6 @@ object SnapshotTable {
     val bytes = bytes0.toIndexedSeq
     val stats = stats0.map(st =>
       Stats(st.col, st.mins.toIndexedSeq, st.maxs.toIndexedSeq))
-    val partValues = partValues0.map(_.toIndexedSeq)
     // toIndexedSeq is identity on the commit paths' CatSeqs, so the
     // append-shape identity proof survives this normalization
     val colStats = colStats0.map(cs => ColStats(cs.col, cs.dtype,
@@ -1367,14 +1358,8 @@ object SnapshotTable {
       st.maxs.length == files.length,
       s"layout stats carry ${st.mins.length} bounds for " +
         s"${files.length} files"))
-    part.foreach { p =>
-      if (p.isLegacy)
-        require(partValues.exists(_.length == files.length),
-          "partitioned manifest without per-file partition values")
-      else
-        require(partKeys.exists(_.nFiles == files.length),
-          "typed-partitioned manifest without per-file partition keys")
-    }
+    part.foreach(_ => require(partKeys.exists(_.nFiles == files.length),
+      "partitioned manifest without per-file partition keys"))
     schema.foreach(sm => require(sm.fileEpochs.length == files.length,
       s"schema meta carries ${sm.fileEpochs.length} epochs for " +
         s"${files.length} files"))
@@ -1408,7 +1393,6 @@ object SnapshotTable {
             stats.isDefined == base.stats.isDefined &&
               part.isDefined == base.part.isDefined &&
               partKeys.isDefined == base.partKeys.isDefined &&
-              partValues.isDefined == base.partValues.isDefined &&
               epochs.isDefined == base.fileEpochs.isDefined &&
               colStats.length == base.colStats.length
           val ok = shapeOk &&
@@ -1418,8 +1402,6 @@ object SnapshotTable {
             stats.forall(st => base.stats.exists(bs =>
               extendsBase(st.mins, bs.mins) &&
                 extendsBase(st.maxs, bs.maxs))) &&
-            partValues.forall(pv =>
-              base.partValues.exists(extendsBase(pv, _))) &&
             partKeys.forall(pk => base.partKeys.exists(bp =>
               extendsBase(pk.flat, bp.flat))) &&
             epochs.forall(e =>
@@ -1481,7 +1463,6 @@ object SnapshotTable {
             stats.isDefined == base.stats.isDefined &&
               part.isDefined == base.part.isDefined &&
               partKeys.isDefined == base.partKeys.isDefined &&
-              partValues.isDefined == base.partValues.isDefined &&
               epochs.isDefined == base.fileEpochs.isDefined &&
               colStats.length == base.colStats.length
           if (pairs.isEmpty || !ascending || !shapeOk) None
@@ -1498,7 +1479,6 @@ object SnapshotTable {
               rows(i) == bRows(p) && bytes(i) == bBytes(p) &&
                 stats.forall(st => st.mins(i) == base.stats.get.mins(p) &&
                   st.maxs(i) == base.stats.get.maxs(p)) &&
-                partValues.forall(pv => pv(i) == base.partValues.get(p)) &&
                 partKeys.forall(pk =>
                   pk.row(i) == base.partKeys.get.row(p)) &&
                 epochs.forall(e => e(i) == base.fileEpochs.get(p)) &&
@@ -1566,7 +1546,7 @@ object SnapshotTable {
       val idx = idx0.toIndexedSeq
       Segment(
         idx.map(files), idx.map(rows), idx.map(bytes),
-        epochs.map(e => idx.map(e)), partValues.map(p => idx.map(p)),
+        epochs.map(e => idx.map(e)),
         stats.map(st => idx.map(st.mins)),
         stats.map(st => idx.map(st.maxs)),
         colStats.map(cs => idx.map(cs.mins)),
@@ -1755,22 +1735,7 @@ object SnapshotTable {
           .mkString("[", ",", "]")
       }
     }
-    part.foreach { p =>
-      if (p.isLegacy) {
-        fields += "part_source" -> Json.quote(p.source)
-        fields += "part_transform" -> Json.quote(p.transform)
-        fields += "part_param" -> p.param.toString
-      } else {
-        fields += "part_sources" -> p.fields.map(f => Json.quote(f.source))
-          .mkString("[", ",", "]")
-        fields += "part_transforms" -> p.fields
-          .map(f => Json.quote(f.transform)).mkString("[", ",", "]")
-        fields += "part_params" -> p.fields.map(_.param)
-          .mkString("[", ",", "]")
-        fields += "part_dtypes" -> p.fields.map(f => Json.quote(f.dtype))
-          .mkString("[", ",", "]")
-      }
-    }
+    part.foreach(fields ++= specFields(_))
     if (colStats.nonEmpty) {
       fields += "cs_cols" -> colStats.map(c => Json.quote(c.col))
         .mkString("[", ",", "]")
@@ -1780,12 +1745,22 @@ object SnapshotTable {
     Json.obj(fields)
   }
 
+  /** A partition spec's JSON fields — four parallel per-field arrays,
+    * shared by manifests and the CREATE TABLE marker. */
+  private[graft] def specFields(p: PartSpec): Seq[(String, String)] = Seq(
+    "part_sources" -> p.fields.map(f => Json.quote(f.source))
+      .mkString("[", ",", "]"),
+    "part_transforms" -> p.fields.map(f => Json.quote(f.transform))
+      .mkString("[", ",", "]"),
+    "part_params" -> p.fields.map(_.param).mkString("[", ",", "]"),
+    "part_dtypes" -> p.fields.map(f => Json.quote(f.dtype))
+      .mkString("[", ",", "]"))
+
   private def renderInline(v: Long, files: Seq[String], rows: Seq[Long],
                            bytes: Seq[Long], stats: Option[Stats],
                            bloom: Option[BloomConf],
                            txns: Map[String, Long] = Map.empty,
                            part: Option[PartSpec] = None,
-                           partValues: Option[Seq[Long]] = None,
                            op: String = "",
                            dvFiles: Seq[String] = Seq.empty,
                            dvRows: Long = 0L,
@@ -1864,30 +1839,13 @@ object SnapshotTable {
       }
     }
     part.foreach { p =>
-      if (p.isLegacy) {
-        fields += "part_source" -> Json.quote(p.source)
-        fields += "part_transform" -> Json.quote(p.transform)
-        fields += "part_param" -> p.param.toString
-        fields += "part_values" ->
-          partValues.getOrElse(throw new IllegalStateException(
-            "partitioned manifest without per-file partition values"))
-            .mkString("[", ",", "]")
-      } else {
-        val pk = partKeys.getOrElse(throw new IllegalStateException(
-          "typed-partitioned manifest without per-file partition keys"))
-        require(pk.nFiles == files.length,
-          s"${pk.nFiles} partition tuples for ${files.length} files")
-        fields += "part_sources" -> p.fields.map(f => Json.quote(f.source))
-          .mkString("[", ",", "]")
-        fields += "part_transforms" -> p.fields
-          .map(f => Json.quote(f.transform)).mkString("[", ",", "]")
-        fields += "part_params" -> p.fields.map(_.param)
-          .mkString("[", ",", "]")
-        fields += "part_dtypes" -> p.fields.map(f => Json.quote(f.dtype))
-          .mkString("[", ",", "]")
-        fields += "part_keys" -> pk.flat.map(Json.quote)
-          .mkString("[", ",", "]")
-      }
+      val pk = partKeys.getOrElse(throw new IllegalStateException(
+        "partitioned manifest without per-file partition keys"))
+      require(pk.nFiles == files.length,
+        s"${pk.nFiles} partition tuples for ${files.length} files")
+      fields ++= specFields(p)
+      fields += "part_keys" -> pk.flat.map(Json.quote)
+        .mkString("[", ",", "]")
     }
     if (colStats.nonEmpty) {
       colStats.foreach { cs =>
@@ -2296,7 +2254,7 @@ object SnapshotTable {
     val v = prev + 1
     commitExclusive(path, v, renderManifest(v, ver.files, rowsOf(ver),
       bytesOf(ver), ver.stats, ver.bloom, ver.txns, ver.part,
-      ver.partValues, op = "ANALYZE",
+      op = "ANALYZE",
       dvFiles = ver.dvFiles, dvRows = ver.dvRows,
       schema = carryMeta(ver, ver.files.indices, 0), colStats = cs,
       seg = path -> Some(ver), partKeys = ver.partKeys,
@@ -2435,7 +2393,7 @@ object SnapshotTable {
                                        statMinMax: Option[(Seq[Long], Seq[Long])],
                                        bloomCol: Option[String],
                                        txn: Option[(String, Long)],
-                                       part: Option[(PartSpec, BatchParts)] = None,
+                                       part: Option[(PartSpec, PartKeys)] = None,
                                        op: String = "APPEND",
                                        statsCols: Seq[String] = Seq.empty,
                                        // typed bounds tracked INSIDE
@@ -2447,11 +2405,9 @@ object SnapshotTable {
       : Long = {
     require(statsCol.isEmpty == statMinMax.isEmpty,
       "per-file stats must be tracked exactly when a stats column is set")
-    part.foreach { case (sp, pv) =>
-      require(pv.length == files.length,
-        s"${pv.length} partition values for ${files.length} files")
-      require(sp.isLegacy == pv.longs.isDefined,
-        s"partition-value form mismatch: spec ${sp.describe} vs $pv")
+    part.foreach { case (_, pk) =>
+      require(pk.nFiles == files.length,
+        s"${pk.nFiles} partition tuples for ${files.length} files")
     }
     def committedAt(base: Version): Boolean = txn.exists { case (w, b) =>
       base.txns.get(w).exists(_ >= b)
@@ -2509,17 +2465,14 @@ object SnapshotTable {
             statMinMax.get._2))),
         bloomConf.orElse(base.bloom), base.txns ++ txn.toMap,
         part = part.map(_._1),
-        partValues = part.flatMap { case (sp, bp) =>
-          extendParts(sp, base, base.files.indices, bp)._1
-        },
         op = op,
         dvFiles = base.dvFiles, dvRows = base.dvRows,
         schema = appendMeta(base, path, batchCols, files.length),
         colStats = colStatsWith(base, base.files.indices,
           retryCs(spark, base, files, colSpecs, batchCs)),
         seg = path -> Some(base),
-        partKeys = part.flatMap { case (sp, bp) =>
-          extendParts(sp, base, base.files.indices, bp)._2
+        partKeys = part.map { case (sp, pk) =>
+          extendParts(sp, base, base.files.indices, pk)
         },
         bloomsExtra =
           if (bloomConf.isDefined) bloomExtraConfs
@@ -2666,11 +2619,10 @@ object SnapshotTable {
       val manifest = renderManifest(v, Seq.empty, Seq.empty, Seq.empty,
         base.stats.map(st => Stats(st.col, Seq.empty, Seq.empty)),
         base.bloom, base.txns, base.part,
-        base.part.filter(_.isLegacy).map(_ => Seq.empty),
         op = "TRUNCATE", schema = meta,
         colStats = base.colStats.map(_.slice(Seq.empty)),
         seg = path -> Some(base),
-        partKeys = base.part.filterNot(_.isLegacy).map(PartKeys.empty),
+        partKeys = base.part.map(PartKeys.empty),
         bloomsExtra = base.bloomsExtra)
       try { commitExclusive(path, v, manifest); return v }
       catch {
@@ -2754,7 +2706,7 @@ object SnapshotTable {
                             newFiles: Seq[String], newRows: Seq[Long],
                             newBytes: Seq[Long],
                             newStats: Option[(Seq[Long], Seq[Long])],
-                            newParts: Option[BatchParts],
+                            newParts: Option[PartKeys],
                             newColStats: Seq[ColStats], op: String,
                             extraTxn: Map[String, Long],
                             interleavedOk: (Version, Seq[Int]) => Boolean,
@@ -2770,10 +2722,6 @@ object SnapshotTable {
     require(base.part.isEmpty == newParts.isEmpty,
       "a partitioned base needs partition values for every new file " +
         "(and an unpartitioned one none)")
-    base.part.foreach(sp => require(
-      sp.isLegacy == newParts.get.longs.isDefined,
-      s"partition-value form mismatch: spec ${sp.describe} vs " +
-        s"${newParts.get}"))
     var cur = base
     var attempts = 0
     while (true) {
@@ -2796,8 +2744,6 @@ object SnapshotTable {
         cur.bloom, extraTxn.foldLeft(cur.txns) { case (m, (w, b)) =>
           m.updated(w, math.max(b, m.getOrElse(w, Long.MinValue)))
         }, part = cur.part,
-        partValues = cur.part.flatMap(sp =>
-          extendParts(sp, cur, keepIdx, newParts.get)._1),
         // DVs carry (r20): kept files still need theirs; rows the
         // caller's rewrite materialized (`dvApplied`) leave the
         // live-delete count. Dropping the files here instead would
@@ -2807,8 +2753,8 @@ object SnapshotTable {
         schema = carryMeta(cur, keepIdx, newFiles.length),
         colStats = colStatsWith(cur, keepIdx, newColStats),
         seg = path -> Some(cur),
-        partKeys = cur.part.flatMap(sp =>
-          extendParts(sp, cur, keepIdx, newParts.get)._2),
+        partKeys = cur.part.map(sp =>
+          extendParts(sp, cur, keepIdx, newParts.get)),
         bloomsExtra = cur.bloomsExtra)
       try { commitExclusive(path, v, manifest); return v }
       catch {
@@ -2852,7 +2798,7 @@ object SnapshotTable {
                                          newRows: Seq[Long],
                                          newBytes: Seq[Long],
                                          newStats: Option[(Seq[Long], Seq[Long])],
-                                         newParts: Option[BatchParts],
+                                         newParts: Option[PartKeys],
                                          newColStats: Seq[ColStats],
                                          op: String,
                                          interleavedOk: (Version, Seq[Int]) => Boolean)
@@ -2862,23 +2808,6 @@ object SnapshotTable {
       extraTxn = Map.empty, interleavedOk = interleavedOk)
 
   // ------------------------------------------------- hidden partitioning
-
-  /** Per-file facts for a batch written with `partitionBy("__p")`: the
-    * standard [[Batch]] plus each file's partition value, parsed from
-    * its `__p=v` path segment — the value never lands in file payloads,
-    * so deriving it is pure path arithmetic, no extra read.
-    */
-  private def partitionedBatchFacts(spark: SparkSession, batchDir: String,
-                                    statsCol: Option[String])
-      : (Batch, Seq[Long]) = {
-    val batch = dirBatchFacts(spark, batchDir, statsCol)
-    val partRe = "__p=(-?\\d+)".r
-    def partOf(f: String): Long =
-      partRe.findFirstMatchIn(f).map(_.group(1).toLong).getOrElse(
-        throw new IllegalStateException(
-          s"partitioned batch file without a __p= segment: $f"))
-    (batch, batch.files.map(partOf))
-  }
 
   /** The shared per-file facts of a `partitionBy`-written batch (rows,
     * stats bounds, sizes), partition-form-agnostic — the caller parses
@@ -2896,7 +2825,7 @@ object SnapshotTable {
       .collect().sortBy(_.getString(0)) // O(batch files) metadata
     // key by path RELATIVE to the batch dir, never by base filename:
     // Spark's dynamic-partition writer reuses one task's base name
-    // (part-NNNNN-<uuid>.c000…) across different __p= directories, so
+    // (part-NNNNN-<uuid>.c000…) across different __pK= directories, so
     // filename keys collide and commit the wrong file_bytes
     val bio = io(batchDir)
     val batchRoot = bio.canon(batchDir)
@@ -2917,22 +2846,13 @@ object SnapshotTable {
       perFile.map(_.getLong(3)).toSeq)
   }
 
-  // ------------------------- typed-spec batch plumbing (multi/typed)
-
-  /** Per-file partition values of one freshly-written batch, in the
-    * storage form the spec dictates (exactly one side set).
-    */
-  private[graft] final case class BatchParts(longs: Option[Seq[Long]],
-                                             keys: Option[PartKeys]) {
-    def length: Int = longs.map(_.length).getOrElse(keys.get.nFiles)
-  }
+  // -------------------------------------- partitioned batch plumbing
 
   /** The derived hidden-partition columns `df` is routed and
-    * `partitionBy`-written under: legacy = one LONG `__p` (dir names
-    * byte-identical to the pre-typed layout); typed = one path-safe
-    * STRING per field — `"k" + hex(UTF8(encoded value))`, pure
-    * `[kA-F0-9]`, so Spark's partition-path escaping never fires and
-    * [[typedBatchFacts]] parses values back with no unescaping rules.
+    * `partitionBy`-written under: one path-safe STRING per field —
+    * `"k" + hex(UTF8(encoded value))`, pure `[kA-F0-9]`, so Spark's
+    * partition-path escaping never fires and [[partBatchFacts]]
+    * parses values back with no unescaping rules.
     * A NULL source value yields a NULL derived column, which lands in
     * the `__HIVE_DEFAULT_PARTITION__` directory and fails the parse
     * LOUDLY — hidden partitioning routes by value and rejects NULL
@@ -2940,8 +2860,7 @@ object SnapshotTable {
     */
   private def partDerivedCols(spec: PartSpec)
       : Seq[(String, org.apache.spark.sql.Column)] =
-    if (spec.isLegacy) Seq("__p" -> spec.column)
-    else spec.fields.zipWithIndex.map { case (f, k) =>
+    spec.fields.zipWithIndex.map { case (f, k) =>
       s"__p$k" -> concat(lit("k"),
         hex(encode(f.column.cast("string"), "UTF-8")))
     }
@@ -2986,8 +2905,8 @@ object SnapshotTable {
   /** [[dirBatchFacts]] + per-field partition tuples parsed from each
     * file's `__p0=…/__p1=…` path segments.
     */
-  private def typedBatchFacts(spark: SparkSession, batchDir: String,
-                              statsCol: Option[String], spec: PartSpec)
+  private def partBatchFacts(spark: SparkSession, batchDir: String,
+                             statsCol: Option[String], spec: PartSpec)
       : (Batch, PartKeys) = {
     val batch = dirBatchFacts(spark, batchDir, statsCol)
     val res = spec.fields.indices.map(k => (s"__p$k=([^/]+)").r)
@@ -3002,7 +2921,7 @@ object SnapshotTable {
     (batch, PartKeys(spec.fields.map(_.valueDtype).toIndexedSeq, flat))
   }
 
-  /** Route + write one partitioned batch under `spec` (either form):
+  /** Route + write one partitioned batch under `spec`:
     * one shuffle on the derived value(s) so each partition tuple lands
     * in one task, `partitionBy` on the derived dirs so every data file
     * holds exactly one tuple, sorted by the stats column within
@@ -3011,7 +2930,7 @@ object SnapshotTable {
   private def writePartitionedBatch(df: DataFrame, batchDir: String,
                                     spec: PartSpec,
                                     statsCol: Option[String])
-      : (Batch, BatchParts) = {
+      : (Batch, PartKeys) = {
     requireRoutable(df, spec)
     val derived = partDerivedCols(spec)
     val pcols = derived.map { case (n, _) => col(n) }
@@ -3028,38 +2947,23 @@ object SnapshotTable {
     val spark = df.sparkSession
     // an all-empty input lands no parquet at all — empty facts, the
     // caller decides what an empty batch means (truncate, carry, …)
-    if (!hasParquet(batchDir)) {
-      val batch = Batch(Seq.empty, Seq.empty, Seq.empty, Seq.empty,
-        Seq.empty)
-      if (spec.isLegacy) (batch, BatchParts(Some(Seq.empty), None))
-      else (batch, BatchParts(None, Some(PartKeys.empty(spec))))
-    } else if (spec.isLegacy) {
-      val (batch, pvals) = partitionedBatchFacts(spark, batchDir, statsCol)
-      (batch, BatchParts(Some(pvals), None))
-    } else {
-      val (batch, pkeys) = typedBatchFacts(spark, batchDir, statsCol, spec)
-      (batch, BatchParts(None, Some(pkeys)))
-    }
+    if (!hasParquet(batchDir))
+      (Batch(Seq.empty, Seq.empty, Seq.empty, Seq.empty, Seq.empty),
+        PartKeys.empty(spec))
+    else partBatchFacts(spark, batchDir, statsCol, spec)
   }
 
-  /** Carry a partitioned base's per-file values and extend with one
-    * batch — the (partValues, partKeys) pair every partitioned commit
-    * hands to [[renderManifest]].
+  /** Carry a partitioned base's per-file tuples and extend with one
+    * batch — the part_keys every partitioned commit hands to
+    * [[renderManifest]].
     */
   private def extendParts(spec: PartSpec, base: Version, keepIdx: Seq[Int],
-                          fresh: BatchParts)
-      : (Option[Seq[Long]], Option[PartKeys]) =
-    if (spec.isLegacy) {
-      val kept = base.partValues.map(pv =>
-        if (keepIdx == pv.indices) pv else keepIdx.map(pv))
-        .getOrElse(Seq.empty)
-      (Some(CatSeq.cat2(kept, fresh.longs.get.toIndexedSeq)), None)
-    } else {
-      val kept = base.partKeys.map(pk =>
-        if (keepIdx == (0 until pk.nFiles)) pk else pk.slice(keepIdx))
-        .getOrElse(PartKeys.empty(spec))
-      (None, Some(kept ++ fresh.keys.get))
-    }
+                          fresh: PartKeys): PartKeys = {
+    val kept = base.partKeys.map(pk =>
+      if (keepIdx == (0 until pk.nFiles)) pk else pk.slice(keepIdx))
+      .getOrElse(PartKeys.empty(spec))
+    kept ++ fresh
+  }
 
   /** Commit `df` as the next version of a HIDDEN-partitioned table:
     * rows are shuffled once on the derived partition value(s) (so
@@ -3067,11 +2971,10 @@ object SnapshotTable {
     * data file holds exactly one tuple — which is what makes manifest
     * pruning on the recorded per-file value EXACT, not just tight.
     * The derived values are dropped by the writer (they live in the
-    * `__p=v` / `__p0=…/__p1=…` directory names and the manifest
-    * only); scans of leaf files never see them. Works for BOTH spec
-    * forms — the legacy single-LONG spec and typed/multi-column
-    * [[PartField]] lists (days/months over DATE/TIMESTAMP, string
-    * identity/truncate/bucket). `statsCol` additionally records
+    * `__p0=…/__p1=…` directory names and the manifest only); scans of
+    * leaf files never see them. Works for every [[PartField]] list —
+    * a single BIGINT field, days/months over DATE/TIMESTAMP, string
+    * identity/truncate/bucket, several fields. `statsCol` additionally records
     * per-file min/max of a DATA column for second-level pruning
     * inside partitions (files are sorted by it within each
     * partition).
@@ -3135,8 +3038,7 @@ object SnapshotTable {
         s"bloom columns changed mid-table (was " +
           s"${base.bloomConfs.map(_.col)}, got $bloomCol)")
       val v = prev + 1
-      val (pvNew, pkNew) =
-        extendParts(spec, base, base.files.indices, bparts)
+      val pkNew = extendParts(spec, base, base.files.indices, bparts)
       val manifest = renderManifest(v,
         CatSeq.cat2(base.files, batch.files),
         CatSeq.cat2(rowsOf(base), batch.rows),
@@ -3149,13 +3051,13 @@ object SnapshotTable {
               batch.maxs))
         },
         bloomConf.orElse(base.bloom), base.txns ++ txn.toMap,
-        Some(spec), pvNew,
+        Some(spec),
         op = "APPEND", dvFiles = base.dvFiles, dvRows = base.dvRows,
         schema = appendMeta(base, path, batchCols, batch.files.length),
         colStats = colStatsWith(base, base.files.indices,
           retryCs(spark, base, batch.files, colSpecs, batchCs)),
         seg = path -> Some(base),
-        partKeys = pkNew,
+        partKeys = Some(pkNew),
         bloomsExtra =
           if (bloomConf.isDefined) bloomExtraConfs
           else base.bloomsExtra)
@@ -3219,16 +3121,10 @@ object SnapshotTable {
     val statsCol = ver0.stats.map(_.col)
     // the new batch, laid out exactly like a partitioned append
     val batchDir = s"$path/files/batch-${nonce()}"
-    val withP = df.withColumn("__p", spec.column)
-    val laidOut = statsCol match {
-      case Some(c) => withP.repartition(col("__p"))
-        .sortWithinPartitions(col("__p"), col(c))
-      case None => withP.repartition(col("__p"))
-    }
-    laidOut.write.mode("errorifexists").partitionBy("__p").parquet(batchDir)
+    val (batch, bparts) = writePartitionedBatch(df, batchDir, spec, statsCol)
     // an EMPTY replacement is a legitimate "clear this range" backfill:
     // the commit below is then the pure metadata-only partition drop
-    val emptyBatch = !hasParquet(batchDir)
+    val emptyBatch = batch.files.isEmpty
     if (!emptyBatch) {
       // the replaceWhere contract: every incoming row inside the range
       val range = spark.read.parquet(batchDir)
@@ -3242,10 +3138,6 @@ object SnapshotTable {
             "replace; widen the predicate or filter the input")
       enforceConstraints(spark, path, batchDir)
     } else io(batchDir).deleteDir(batchDir)
-    val (batch, pvals) =
-      if (emptyBatch) (Batch(Seq.empty, Seq.empty, Seq.empty, Seq.empty,
-        Seq.empty), Seq.empty[Long])
-      else partitionedBatchFacts(spark, batchDir, statsCol)
     val batchCols =
       if (emptyBatch) Seq.empty[String]
       else spark.read.parquet(batch.files.head).schema.fieldNames.toSeq
@@ -3269,7 +3161,7 @@ object SnapshotTable {
           s"REPLACE WHERE batch carries new column(s) $unknown — " +
             "evolve the schema with an append first")
       }
-      val pv = ver.partValues.get
+      val pv = ver.partKeys.get.longs
       val keepIdx = ver.files.indices
         .filterNot(i => pv(i) >= plo && pv(i) <= phi)
       require(keepIdx.nonEmpty || batch.files.nonEmpty,
@@ -3285,11 +3177,12 @@ object SnapshotTable {
         ver.stats.map(st => Stats(st.col,
           keepIdx.map(st.mins) ++ batch.mins,
           keepIdx.map(st.maxs) ++ batch.maxs)),
-        ver.bloom, ver.txns ++ txn.toMap, Some(spec),
-        Some(keepIdx.map(pv) ++ pvals), op = "OVERWRITE",
+        ver.bloom, ver.txns ++ txn.toMap, Some(spec), op = "OVERWRITE",
         schema = carryMeta(ver, keepIdx, batch.files.length),
         colStats = colStatsWith(ver, keepIdx, batchCs),
-        seg = path -> Some(ver), bloomsExtra = ver.bloomsExtra)
+        seg = path -> Some(ver),
+        partKeys = Some(extendParts(spec, ver, keepIdx, bparts)),
+        bloomsExtra = ver.bloomsExtra)
       try { commitExclusive(path, v, manifest); return v }
       catch {
         case _: FileAlreadyExistsException =>
@@ -3351,15 +3244,15 @@ object SnapshotTable {
             "the schema with an append first")
       }
       val v = prev + 1
-      val (pvNew, pkNew) = extendParts(spec, ver, Seq.empty, bparts)
       val manifest = renderManifest(v, batch.files, batch.rows,
         batch.bytes,
         statsCol.map(c => Stats(c, batch.mins, batch.maxs)),
-        ver.bloom, ver.txns ++ txn.toMap, Some(spec), pvNew,
+        ver.bloom, ver.txns ++ txn.toMap, Some(spec),
         op = "OVERWRITE",
         schema = carryMeta(ver, Seq.empty, batch.files.length),
         colStats = colStatsWith(ver, Seq.empty, batchCs),
-        seg = path -> Some(ver), partKeys = pkNew,
+        seg = path -> Some(ver),
+        partKeys = Some(extendParts(spec, ver, Seq.empty, bparts)),
         bloomsExtra = ver.bloomsExtra)
       try { commitExclusive(path, v, manifest); return v }
       catch {
@@ -3388,19 +3281,15 @@ object SnapshotTable {
                                             bytes: Seq[Long],
                                             statMins: Seq[Long],
                                             statMaxs: Seq[Long],
-                                            parts: BatchParts,
+                                            parts: PartKeys,
                                             txn: Option[(String, Long)] = None,
                                             trackedCs: Option[Seq[ColStats]] = None)
       : Long = {
     var attempts = 0
     var bloomWritten = false
-    // the replaced set: exactly the partition tuples the batch landed
-    // in (either storage form)
-    val replacedLong: Set[Long] = parts.longs.map(_.toSet)
-      .getOrElse(Set.empty)
-    val replacedTyped: Set[IndexedSeq[String]] = parts.keys
-      .map(pk => (0 until pk.nFiles).map(pk.row).toSet)
-      .getOrElse(Set.empty)
+    // the replaced set: exactly the partition tuples the batch landed in
+    val replaced: Set[IndexedSeq[String]] =
+      (0 until parts.nFiles).map(parts.row).toSet
     // new files' typed bounds: writer-tracked when they cover the
     // pre-commit declaration, else computed ONCE here (the in-loop
     // colStatsWith fails loudly if the layout changes)
@@ -3425,18 +3314,11 @@ object SnapshotTable {
         ver.bloomConfs.foreach(writeBloomRows(spark, path, files, _))
         bloomWritten = true
       }
-      val keepIdx =
-        if (spec.isLegacy) {
-          val pv = ver.partValues.get
-          ver.files.indices.filterNot(i => replacedLong(pv(i)))
-        } else {
-          val pk = ver.partKeys.get
-          ver.files.indices.filterNot(i => replacedTyped(pk.row(i)))
-        }
+      val pk = ver.partKeys.get
+      val keepIdx = ver.files.indices.filterNot(i => replaced(pk.row(i)))
       val baseRows = rowsOf(ver)
       val baseBytes = bytesOf(ver)
       val v = prev + 1
-      val (pvNew, pkNew) = extendParts(spec, ver, keepIdx, parts)
       val manifest = renderManifest(v,
         keepIdx.map(ver.files) ++ files,
         keepIdx.map(baseRows) ++ rows,
@@ -3444,11 +3326,11 @@ object SnapshotTable {
         ver.stats.map(st => Stats(st.col,
           keepIdx.map(st.mins) ++ statMins,
           keepIdx.map(st.maxs) ++ statMaxs)),
-        ver.bloom, ver.txns ++ txn.toMap, Some(spec),
-        pvNew, op = "OVERWRITE",
+        ver.bloom, ver.txns ++ txn.toMap, Some(spec), op = "OVERWRITE",
         schema = carryMeta(ver, keepIdx, files.length),
         colStats = colStatsWith(ver, keepIdx, freshCs),
-        seg = path -> Some(ver), partKeys = pkNew,
+        seg = path -> Some(ver),
+        partKeys = Some(extendParts(spec, ver, keepIdx, parts)),
         bloomsExtra = ver.bloomsExtra)
       try { commitExclusive(path, v, manifest); return v }
       catch {
@@ -3477,7 +3359,7 @@ object SnapshotTable {
     require(spec.monotone,
       s"${spec.transform} does not preserve order — range predicates " +
         "cannot prune bucket partitions; use scanPartitionKeys")
-    val pv = ver.partValues.get
+    val pv = ver.partKeys.get.longs
     val (plo, phi) = (spec(lo), spec(hi))
     val hit = ver.files.indices
       .filter(i => pv(i) >= plo && pv(i) <= phi)
@@ -3501,7 +3383,7 @@ object SnapshotTable {
     val spec = ver.part.getOrElse(throw new IllegalArgumentException(
       s"version $version is not hidden-partitioned — appendPartitioned"))
     val want = keys.map(spec(_)).toSet
-    val pv = ver.partValues.get
+    val pv = ver.partKeys.get.longs
     val hit = ver.files.indices.filter(i => want(pv(i)))
     val df =
       if (hit.isEmpty) emptyRelation(spark, path, ver)
@@ -3581,11 +3463,9 @@ object SnapshotTable {
       case _ => return None
     }
     if (probes.isEmpty) return None
-    def tupleKey(i: Int, j: Int): Any =
-      if (sp.isLegacy) ver.partValues.get(i)
-      else ver.partKeys.get.key(i, j)
+    val pk = ver.partKeys.get
     val dropIdx = ver.files.indices.filter(i =>
-      probes.forall { case (j, want) => want.contains(tupleKey(i, j)) })
+      probes.forall { case (j, want) => want.contains(pk.key(i, j)) })
     val rows = rowsOf(ver)
     val dropped = dropIdx.map(rows).sum
     if (dropIdx.isEmpty) return Some((prev, 0L)) // no partition matches
@@ -3599,11 +3479,10 @@ object SnapshotTable {
       ver.stats.map(st =>
         Stats(st.col, keepIdx.map(st.mins), keepIdx.map(st.maxs))),
       ver.bloom, ver.txns, ver.part,
-      ver.partValues.map(pv => keepIdx.map(pv)),
       op = "DELETE", schema = carryMeta(ver, keepIdx, 0),
       colStats = ver.colStats.map(_.slice(keepIdx)),
       seg = path -> Some(ver),
-      partKeys = ver.partKeys.map(_.slice(keepIdx)),
+      partKeys = Some(pk.slice(keepIdx)),
       bloomsExtra = ver.bloomsExtra))
     Some((v, dropped))
   }
@@ -3629,7 +3508,8 @@ object SnapshotTable {
           "deleteStatsRange for sub-partition ranges")
     // identity partitions hold one value each: any range is aligned
     val (plo, phi) = (spec(lo), spec(hi))
-    val pv = ver.partValues.get
+    val pk = ver.partKeys.get
+    val pv = pk.longs
     val keepIdx = ver.files.indices
       .filterNot(i => pv(i) >= plo && pv(i) <= phi)
     require(keepIdx.nonEmpty,
@@ -3642,10 +3522,11 @@ object SnapshotTable {
       keepIdx.map(ver.files), keepIdx.map(rows), keepIdx.map(bytes),
       ver.stats.map(st =>
         Stats(st.col, keepIdx.map(st.mins), keepIdx.map(st.maxs))),
-      ver.bloom, ver.txns, Some(spec), Some(keepIdx.map(pv)),
+      ver.bloom, ver.txns, Some(spec),
       op = "DELETE", schema = carryMeta(ver, keepIdx, 0),
       colStats = ver.colStats.map(_.slice(keepIdx)),
-      seg = path -> Some(ver), bloomsExtra = ver.bloomsExtra))
+      seg = path -> Some(ver), partKeys = Some(pk.slice(keepIdx)),
+      bloomsExtra = ver.bloomsExtra))
     (v, ver.files.length - keepIdx.length, ver.files.length)
   }
 
@@ -4134,7 +4015,7 @@ object SnapshotTable {
     commitExclusive(path, v, renderManifest(v, ver.files,
       rowsOf(ver),
       bytesOf(ver),
-      ver.stats, ver.bloom, ver.txns, ver.part, ver.partValues,
+      ver.stats, ver.bloom, ver.txns, ver.part,
       op = "DELETE",
       dvFiles = allDv, dvRows = allDvRows,
       schema = carryMeta(ver, ver.files.indices, 0),
@@ -4196,14 +4077,15 @@ object SnapshotTable {
     val bytes = bytesOf(ver)
     val v = prev + 1
     ver.part match {
-      case Some(spec) if !spec.isLegacy =>
-        // typed/multi-column layout: the shared batch writer re-routes
-        // survivors partition-pure under the spec
+      case Some(spec) =>
+        // partitioned layout: the shared batch writer re-derives the
+        // hidden value(s) so the rewritten survivors stay partition-
+        // pure; every row of every hit file may be DV-dead, and the
+        // write then lands no parquet — carry only the kept files
         val (batch, bparts) =
           writePartitionedBatch(survivors, batchDir, spec, statsCol)
         if (batch.files.isEmpty) io(batchDir).deleteDir(batchDir)
         else ver.bloomConfs.foreach(writeBloomRows(spark, path, batch.files, _))
-        val (pvNew, pkNew) = extendParts(spec, ver, keepIdx, bparts)
         commitExclusive(path, v, renderManifest(v,
           keepIdx.map(ver.files) ++ batch.files,
           keepIdx.map(rows) ++ batch.rows,
@@ -4211,53 +4093,13 @@ object SnapshotTable {
           ver.stats.map(st => Stats(st.col,
             keepIdx.map(st.mins) ++ batch.mins,
             keepIdx.map(st.maxs) ++ batch.maxs)),
-          ver.bloom, ver.txns, Some(spec), pvNew, op = "OPTIMIZE",
+          ver.bloom, ver.txns, Some(spec), op = "OPTIMIZE",
           schema = carryMeta(ver, keepIdx, batch.files.length),
           colStats = colStatsWith(ver, keepIdx,
             computeColStats(spark, batch.files, colSpecsOf(ver))),
-          seg = path -> Some(ver), partKeys = pkNew,
+          seg = path -> Some(ver),
+          partKeys = Some(extendParts(spec, ver, keepIdx, bparts)),
           bloomsExtra = ver.bloomsExtra))
-        CompactResult(v, ver.files.length,
-          keepIdx.length + batch.files.length, hitIdx.length)
-      case Some(spec) =>
-        // partitioned layout: re-derive the hidden value so the
-        // rewritten survivors stay partition-pure (DV-hit files are
-        // partition-pure already, so this is a routing no-op for rows
-        // — it exists so the WRITE lands in the right dirs)
-        val withP = survivors.withColumn("__p", spec.column)
-        val laidOut = statsCol match {
-          case Some(c) => withP
-            .repartitionByRange(math.max(hitIdx.length / 2, 1),
-              col("__p"), col(c))
-            .sortWithinPartitions(col("__p"), col(c))
-          case None => withP.repartition(col("__p"))
-        }
-        laidOut.write.mode("errorifexists").partitionBy("__p")
-          .parquet(batchDir)
-        // every row of every hit file may be DV-dead: the write then
-        // lands no parquet at all — carry only the kept files
-        val (batch, pvals) =
-          if (!hasParquet(batchDir)) {
-            io(batchDir).deleteDir(batchDir)
-            (Batch(Seq.empty, Seq.empty, Seq.empty, Seq.empty, Seq.empty),
-              Seq.empty[Long])
-          } else partitionedBatchFacts(spark, batchDir, statsCol)
-        if (batch.files.nonEmpty)
-          ver.bloomConfs.foreach(writeBloomRows(spark, path, batch.files, _))
-        val pv = ver.partValues.get
-        commitExclusive(path, v, renderManifest(v,
-          keepIdx.map(ver.files) ++ batch.files,
-          keepIdx.map(rows) ++ batch.rows,
-          keepIdx.map(bytes) ++ batch.bytes,
-          ver.stats.map(st => Stats(st.col,
-            keepIdx.map(st.mins) ++ batch.mins,
-            keepIdx.map(st.maxs) ++ batch.maxs)),
-          ver.bloom, ver.txns, Some(spec),
-          Some(keepIdx.map(pv) ++ pvals), op = "OPTIMIZE",
-          schema = carryMeta(ver, keepIdx, batch.files.length),
-          colStats = colStatsWith(ver, keepIdx,
-            computeColStats(spark, batch.files, colSpecsOf(ver))),
-      seg = path -> Some(ver), bloomsExtra = ver.bloomsExtra))
         CompactResult(v, ver.files.length,
           keepIdx.length + batch.files.length, hitIdx.length)
       case None =>
@@ -4410,8 +4252,9 @@ object SnapshotTable {
     * next-fit per partition (ordered by the stats min when the table
     * has a stats layout, file name otherwise), single-file bins and
     * all-large bins carry by reference (the same convergence rule as
-    * [[compact]]), and the rewrite re-derives `__p` from the source
-    * column so the output files are partition-pure by construction —
+    * [[compact]]), and the rewrite re-derives the hidden value(s) from
+    * the source columns so the output files are partition-pure by
+    * construction —
     * partition pruning survives, which is the property [[compact]]'s
     * guard exists to protect. One read+write of exactly the
     * under-sized files; plan cost O(manifest). Create-exclusive
@@ -4428,11 +4271,9 @@ object SnapshotTable {
     val spec = ver.part.getOrElse(throw new IllegalArgumentException(
       "compactPartitioned needs hidden partitioning — use compact"))
     requireUniform(ver, "compactPartitioned")
-    // partition identity per file, either spec form — bins never
-    // cross a tuple, so compaction preserves partition purity
-    val tupleOf: Int => Any =
-      if (spec.isLegacy) { val pv = ver.partValues.get; i => pv(i) }
-      else { val pk = ver.partKeys.get; i => pk.row(i) }
+    // partition identity per file — bins never cross a tuple, so
+    // compaction preserves partition purity
+    val pk = ver.partKeys.get
     val rows = ver.fileRows.getOrElse(throw new IllegalArgumentException(
       "manifest lacks per-file rows — recommit with this version"))
     val bytes = ver.fileBytes.getOrElse(throw new IllegalArgumentException(
@@ -4446,7 +4287,7 @@ object SnapshotTable {
     }
     val binOf = scala.collection.mutable.Map.empty[String, Long]
     var rewriteBins = 0L
-    ver.files.indices.groupBy(tupleOf).toSeq
+    ver.files.indices.groupBy(pk.row).toSeq
       .sortBy(_._1.toString).foreach { case (_, idxs) =>
       val ordered = idxs.sortBy(orderKey)
       // next-fit: cut a bin when adding the file would overflow target
@@ -4491,18 +4332,9 @@ object SnapshotTable {
       .write.mode("errorifexists")
       .partitionBy(derived.map(_._1): _*).parquet(batchDir)
     val (batch, bparts) =
-      if (spec.isLegacy) {
-        val (b, pvals) =
-          partitionedBatchFacts(spark, batchDir, ver.stats.map(_.col))
-        (b, BatchParts(Some(pvals), None))
-      } else {
-        val (b, pkeys) =
-          typedBatchFacts(spark, batchDir, ver.stats.map(_.col), spec)
-        (b, BatchParts(None, Some(pkeys)))
-      }
+      partBatchFacts(spark, batchDir, ver.stats.map(_.col), spec)
     ver.bloomConfs.foreach(writeBloomRows(spark, path, batch.files, _))
     val v = prev + 1
-    val (pvNew, pkNew) = extendParts(spec, ver, keepIdx, bparts)
     commitExclusive(path, v, renderManifest(v,
       keepIdx.map(ver.files) ++ batch.files,
       keepIdx.map(rows) ++ batch.rows,
@@ -4510,14 +4342,14 @@ object SnapshotTable {
       ver.stats.map(st => Stats(st.col,
         keepIdx.map(st.mins) ++ batch.mins,
         keepIdx.map(st.maxs) ++ batch.maxs)),
-      ver.bloom, ver.txns, Some(spec),
-      pvNew, op = "OPTIMIZE",
+      ver.bloom, ver.txns, Some(spec), op = "OPTIMIZE",
       dvFiles = ver.dvFiles, dvRows = ver.dvRows -
         dvRowsTargeting(spark, ver, rewriteFiles.map(canonFile).toSet),
       schema = carryMeta(ver, keepIdx, batch.files.length),
       colStats = colStatsWith(ver, keepIdx,
         computeColStats(spark, batch.files, colSpecsOf(ver))),
-      seg = path -> Some(ver), partKeys = pkNew,
+      seg = path -> Some(ver),
+      partKeys = Some(extendParts(spec, ver, keepIdx, bparts)),
       bloomsExtra = ver.bloomsExtra))
     CompactResult(v, ver.files.length,
       keepIdx.length + batch.files.length, rewriteFiles.length)
@@ -4641,27 +4473,19 @@ object SnapshotTable {
       .write.mode("errorifexists")
       .partitionBy(derived.map(_._1): _*).parquet(batchDir)
     val (batch, bparts) =
-      if (spec.isLegacy) {
-        val (b, pvals) =
-          partitionedBatchFacts(spark, batchDir, Some(clusterCol))
-        (b, BatchParts(Some(pvals), None))
-      } else {
-        val (b, pkeys) =
-          typedBatchFacts(spark, batchDir, Some(clusterCol), spec)
-        (b, BatchParts(None, Some(pkeys)))
-      }
+      partBatchFacts(spark, batchDir, Some(clusterCol), spec)
     ver.bloomConfs.foreach(writeBloomRows(spark, path, batch.files, _))
     val v = prev + 1
-    val (pvNew, pkNew) = extendParts(spec, ver, Seq.empty, bparts)
     commitExclusive(path, v, renderManifest(v, batch.files, batch.rows,
       batch.bytes,
       Some(Stats(clusterCol, batch.mins, batch.maxs)),
-      ver.bloom, ver.txns, Some(spec), pvNew,
+      ver.bloom, ver.txns, Some(spec),
       op = "OPTIMIZE",
       schema = carryMeta(ver, Seq.empty, batch.files.length),
       colStats = colStatsWith(ver, Seq.empty,
         computeColStats(spark, batch.files, colSpecsOf(ver))),
-      seg = path -> Some(ver), partKeys = pkNew,
+      seg = path -> Some(ver),
+      partKeys = Some(extendParts(spec, ver, Seq.empty, bparts)),
       bloomsExtra = ver.bloomsExtra))
     ReclusterResult(v, ver.files.length, batch.files.length)
   }
@@ -4788,25 +4612,30 @@ object SnapshotTable {
 
   /** MERGE INTO for hidden-partitioned tables — the upsert a
     * partitioned CDC sink actually needs. Candidate files prune by the
-    * update rows' PARTITION VALUES (derived from the source column on
-    * the small side, O(distinct partitions) driver metadata), and the
-    * rewrite re-derives `__p` so outputs stay partition-pure — an
-    * update whose source value changed simply lands in its new
+    * update rows' partition TUPLES (every field's transform over its
+    * source, derived on the small side — O(distinct tuples) driver
+    * metadata — and compared against the manifest's per-file tuples),
+    * and the rewrite routes partition-pure via [[writePartitionedBatch]]
+    * — an update whose source value changed simply lands in its new
     * partition.
     *
     * The cross-partition-move hazard is handled, not assumed away:
-    * when the merge key is NOT the partition source, a key's existing
-    * row may live in a partition the update's own value doesn't cover
-    * — rewriting only value-covered partitions would DUPLICATE the
-    * key. Three regimes: key == source (moves impossible — the key
-    * determines the partition, value-pruning is exact); a bloom index
-    * on the key (probe ALL files for the update keys, union the hits
-    * into the candidate set — the old row's file is rewritten and the
-    * key anti-joined out, wherever it lives, for the price of a
-    * metadata probe); neither → fail loudly naming the hazard rather
-    * than silently duplicating. Updates too large to probe (>100k)
-    * fall back to rewriting every partition — correct, just unpruned.
-    * Same txn-id replay dedupe and CHECK-constraint gate as [[merge]].
+    * tuple pruning alone is sound only when EVERY field derives from
+    * the merge key (a key's old row then provably lives in a tuple the
+    * updates cover). Otherwise a bloom index on the key closes it:
+    * probe ALL files for the update keys (probe values canonicalize
+    * per [[BloomIndex.canonProbe]], so string/date/timestamp/decimal
+    * keys all work) and union the hits into the candidate set — the
+    * old row's file is rewritten and the key anti-joined out, wherever
+    * it lives, for the price of a metadata probe. Neither → fail
+    * loudly naming the hazard rather than silently duplicating. An
+    * incomplete index, an untranslatable probe value or updates too
+    * large to probe (>100k) fall back to rewriting every file —
+    * correct, just unpruned. Hit files read through the DV anti-join;
+    * the commit extends tuples/typed stats through the same
+    * [[extendParts]]/[[colStatsWith]] carry every partitioned commit
+    * uses. Same txn-id replay dedupe and CHECK-constraint gate as
+    * [[merge]].
     */
   def mergePartitioned(spark: SparkSession, path: String,
                        updates: DataFrame, keyCol: String,
@@ -4821,155 +4650,24 @@ object SnapshotTable {
     val spec = ver.part.getOrElse(throw new IllegalArgumentException(
       "mergePartitioned needs hidden partitioning — use merge"))
     requireUniform(ver, "mergePartitioned")
-    if (!spec.isLegacy)
-      return mergeTypedPartitioned(spark, path, prev, ver, spec,
-        updates, keyCol, txn)
-    val pv = ver.partValues.get
-    val tableCols = spark.read.parquet(ver.files.head).limit(0).columns
-    require(updates.columns.sorted.sameElements(tableCols.sorted),
-      s"updates schema ${updates.columns.toSeq} must match table " +
-        s"columns ${tableCols.toSeq}")
-    require(updates.columns.contains(keyCol) &&
-        updates.columns.contains(spec.source),
-      s"updates must carry $keyCol and the partition source ${spec.source}")
-    // the partition transform and the bloom probe both hash LONGs:
-    // xxhash64 is type-dependent, so an IntegerType source would
-    // mis-bucket partition values and mis-route rewritten rows
-    require(updates.schema(spec.source).dataType ==
-        org.apache.spark.sql.types.LongType,
-      s"updates' partition source ${spec.source} must be LONG (was " +
-        s"${updates.schema(spec.source).dataType}) — the driver probe " +
-        "mirror and the executor hash must agree on input width")
-    import spark.implicits._
-    val u = updates.agg(count(lit(1)), count_distinct(col(keyCol)))
-      .collect().head
-    val nUpd = u.getLong(0)
-    require(nUpd > 0, "empty update batch")
-    require(u.getLong(1) == nUpd,
-      s"merge keys must be unique: $nUpd rows, ${u.getLong(1)} keys")
-    val updParts = updates
-      .select(spec.column.as("__p")).distinct().as[Long].collect().toSet
-    val partHit = ver.files.indices.filter(i => updParts(pv(i)))
-    val hitIdx: Seq[Int] =
-      if (keyCol == spec.source) partHit
-      else if (nUpd > 100000) ver.files.indices // unprunable: all files
-      else ver.bloom.filter(_.col == keyCol) match {
-        case Some(_) =>
-          require(updates.schema(keyCol).dataType ==
-              org.apache.spark.sql.types.LongType,
-            s"merge key $keyCol must be LONG in updates (was " +
-              s"${updates.schema(keyCol).dataType}) — the bloom index " +
-              "hashes longs; a lossy cast would miss existing rows")
-          val keys = updates.select(col(keyCol).cast("long"))
-            .distinct().as[Long].collect().toSeq
-          val visible = ver.files.toDF("file")
-          val idx = spark.read.schema(BloomIndex.indexSchema)
-            .option("recursiveFileLookup", "true")
-            .json(bloomIdxDir(path))
-            .filter(col("col") === ver.bloom.get.col)
-            .join(broadcast(visible), "file")
-          val (hitFiles, total) = BloomIndex.probeFiles(idx, keys)
-          // completeness: a live file with NO bloom rows (an append
-          // that omitted bloomCol still carries base.bloom) is never
-          // probed, and a moved key whose old row lives there would be
-          // silently duplicated — the hazard this method exists to
-          // close. Fall back to rewriting every file: correct, just
-          // unpruned.
-          if (total != ver.files.length) ver.files.indices
-          else {
-            val hs = hitFiles.toSet
-            (partHit ++ ver.files.indices.filter(i => hs(ver.files(i))))
-              .distinct.sorted
-          }
-        case None => throw new IllegalArgumentException(
-          s"mergePartitioned on key '$keyCol' != partition source " +
-            s"'${spec.source}' needs a bloom index on the key: without " +
-            "one, a key whose row lives outside the updates' partition " +
-            "values would be silently duplicated")
+    // the partition sources and the merge key must keep the table's
+    // types in the updates: transforms and bloom probes hash by type
+    val tableSchema = spark.read.parquet(ver.files.head).schema
+    def dtName(dt: org.apache.spark.sql.types.DataType): String =
+      TypedBounds.dtypeOf(dt).getOrElse(dt.simpleString).toUpperCase
+    (spec.fields.map(_.source) :+ keyCol).distinct
+      .filter(c => updates.columns.contains(c) &&
+        tableSchema.fieldNames.contains(c))
+      .foreach { c =>
+        val (have, want) = (updates.schema(c).dataType,
+          tableSchema(c).dataType)
+        require(have == want,
+          s"updates' $c must be ${dtName(want)} like the table (was " +
+            s"${dtName(have)}) — partition transforms and bloom probes " +
+            "hash by type")
       }
-    val keepIdx = ver.files.indices.filterNot(hitIdx.contains)
-    val rows = rowsOf(ver)
-    val bytes = bytesOf(ver)
-    val hitRows = hitIdx.map(rows).sum
-    // DV-aware (r20): hit files read through the same deletion-vector
-    // anti-join every scan applies, so a rewrite cannot resurrect
-    // MOR-deleted rows; kept files' DV rows carry in the manifest and
-    // the rewritten files' DV rows go INERT (their target path no
-    // longer appears in the file list — the anti-join matches
-    // nothing), purged by the next materialize. Manifest per-file row
-    // counts are PHYSICAL, so the matched arithmetic subtracts the
-    // DV rows that targeted the hit files.
-    val dvHitRows: Long = dvRowsTargeting(spark, ver,
-      hitIdx.map(i => canonFile(ver.files(i))).toSet)
-    val newData =
-      if (hitIdx.isEmpty) updates.select(tableCols.map(col): _*)
-      else applyDv(spark,
-          spark.read.parquet(hitIdx.map(ver.files): _*), ver)
-        .join(updates.select(col(keyCol)), Seq(keyCol), "left_anti")
-        .select(tableCols.map(col): _*)
-        .unionByName(updates.select(tableCols.map(col): _*))
-    val batchDir = s"$path/files/batch-${nonce()}"
-    val withP = newData.withColumn("__p", spec.column)
-    val laidOut = ver.stats match {
-      case Some(st) => withP
-        .repartitionByRange(math.max(hitIdx.length, 1),
-          col("__p"), col(st.col))
-        .sortWithinPartitions(col("__p"), col(st.col))
-      case None => withP.repartition(col("__p"))
-    }
-    laidOut.write.mode("errorifexists").partitionBy("__p").parquet(batchDir)
-    enforceConstraints(spark, path, batchDir)
-    val (batch, pvalsB) =
-      partitionedBatchFacts(spark, batchDir, ver.stats.map(_.col))
-    ver.bloomConfs.foreach(writeBloomRows(spark, path, batch.files, _))
-    val v = prev + 1
-    commitExclusive(path, v, renderManifest(v,
-      keepIdx.map(ver.files) ++ batch.files,
-      keepIdx.map(rows) ++ batch.rows,
-      keepIdx.map(bytes) ++ batch.bytes,
-      ver.stats.map(st => Stats(st.col,
-        keepIdx.map(st.mins) ++ batch.mins,
-        keepIdx.map(st.maxs) ++ batch.maxs)),
-      ver.bloom, ver.txns ++ txn.toMap, Some(spec),
-      Some(keepIdx.map(pv) ++ pvalsB), op = "MERGE",
-      // DVs carry for the kept files; the rewritten files' DV rows
-      // went INERT, so the live-delete count shrinks by exactly the
-      // rows the rewrite materialized (the manifest's logical rows
-      // is physical − dvRows — a stale count would double-drop them)
-      dvFiles = ver.dvFiles, dvRows = ver.dvRows - dvHitRows,
-      schema = carryMeta(ver, keepIdx, batch.files.length),
-      colStats = colStatsWith(ver, keepIdx,
-        computeColStats(spark, batch.files, colSpecsOf(ver))),
-      seg = path -> Some(ver), bloomsExtra = ver.bloomsExtra))
-    val matched = hitRows - dvHitRows + nUpd - batch.rows.sum
-    MergeResult(v, hitIdx.length, ver.files.length, matched, nUpd - matched)
-  }
-
-  /** [[mergePartitioned]] for TYPED / MULTI-COLUMN specs (r20 — the
-    * API path past the legacy single-BIGINT form): same contract,
-    * generalized planes. Partition pruning compares the updates'
-    * derived TUPLES (every field's transform over its source) against
-    * the manifest's per-file tuples; tuple pruning alone is sound
-    * only when EVERY field derives from the merge key (a key's old
-    * row then provably lives in a tuple the updates cover) —
-    * otherwise a TYPED bloom on the key closes the moved-key hazard
-    * (probe values canonicalize per [[BloomIndex.canonProbe]], so
-    * string/date/timestamp/decimal keys all work), with the
-    * complete-index and complete-translation guards degrading to the
-    * full rewrite, never to a silent duplicate. Hit files read
-    * through the DV anti-join; the rewrite routes partition-pure via
-    * [[writePartitionedBatch]] and the commit extends tuples/typed
-    * stats through the same [[extendParts]]/[[colStatsWith]] carry
-    * every partitioned commit uses.
-    */
-  private def mergeTypedPartitioned(spark: SparkSession, path: String,
-                                    prev: Long, ver: Version,
-                                    spec: PartSpec, updates: DataFrame,
-                                    keyCol: String,
-                                    txn: Option[(String, Long)])
-      : MergeResult = {
     requireRoutable(updates, spec)
-    val tableCols = spark.read.parquet(ver.files.head).limit(0).columns
+    val tableCols = tableSchema.fieldNames
     require(updates.columns.sorted.sameElements(tableCols.sorted),
       s"updates schema ${updates.columns.toSeq} must match table " +
         s"columns ${tableCols.toSeq}")
@@ -5050,7 +4748,6 @@ object SnapshotTable {
       spec, ver.stats.map(_.col))
     enforceConstraints(spark, path, batchDir)
     ver.bloomConfs.foreach(writeBloomRows(spark, path, batch.files, _))
-    val (pvN, pkN) = extendParts(spec, ver, keepIdx, bparts)
     val v = prev + 1
     commitExclusive(path, v, renderManifest(v,
       keepIdx.map(ver.files) ++ batch.files,
@@ -5059,12 +4756,16 @@ object SnapshotTable {
       ver.stats.map(st => Stats(st.col,
         keepIdx.map(st.mins) ++ batch.mins,
         keepIdx.map(st.maxs) ++ batch.maxs)),
-      ver.bloom, ver.txns ++ txn.toMap, Some(spec), pvN, op = "MERGE",
+      ver.bloom, ver.txns ++ txn.toMap, Some(spec), op = "MERGE",
+      // DVs carry for the kept files; the rewritten files' DV rows
+      // went INERT, so the live-delete count shrinks by exactly the
+      // rows the rewrite materialized
       dvFiles = ver.dvFiles, dvRows = ver.dvRows - dvHitRows,
       schema = carryMeta(ver, keepIdx, batch.files.length),
       colStats = colStatsWith(ver, keepIdx,
         computeColStats(spark, batch.files, colSpecsOf(ver))),
-      seg = path -> Some(ver), partKeys = pkN,
+      seg = path -> Some(ver),
+      partKeys = Some(extendParts(spec, ver, keepIdx, bparts)),
       bloomsExtra = ver.bloomsExtra))
     val matched = hitRows - dvHitRows + nUpd - batch.rows.sum
     MergeResult(v, hitIdx.length, ver.files.length, matched,
@@ -5113,7 +4814,7 @@ object SnapshotTable {
       ver.txns,
       ver.part.map(p => PartSpec(p.fields.map(f =>
         if (f.source == oldName) f.copy(source = newName) else f))),
-      ver.partValues, op = "ALTER",
+      op = "ALTER",
       dvFiles = ver.dvFiles, dvRows = ver.dvRows,
       schema = Some(SchemaMeta(ids, newNames, ver.fileEpochs.get, e,
         ver.droppedIds, ver.schemaMaxId, altered = true,
@@ -5202,7 +4903,7 @@ object SnapshotTable {
     val v = prev + 1
     commitExclusive(path, v, renderManifest(v, ver.files, rowsOf(ver),
       bytesOf(ver), ver.stats, ver.bloom, ver.txns, ver.part,
-      ver.partValues, op = "ALTER",
+      op = "ALTER",
       dvFiles = ver.dvFiles, dvRows = ver.dvRows,
       schema = Some(SchemaMeta(ids, names, ver.fileEpochs.get, e,
         ver.droppedIds, ver.schemaMaxId, altered = true,
@@ -5251,7 +4952,7 @@ object SnapshotTable {
     val v = prev + 1
     commitExclusive(path, v, renderManifest(v, ver.files, rowsOf(ver),
       bytesOf(ver),
-      ver.stats, ver.bloom, ver.txns, ver.part, ver.partValues,
+      ver.stats, ver.bloom, ver.txns, ver.part,
       bloomsExtra = ver.bloomsExtra,
       op = "ALTER", dvFiles = ver.dvFiles, dvRows = ver.dvRows,
       schema = Some(SchemaMeta(ids.patch(i, Nil, 1),
@@ -5299,7 +5000,7 @@ object SnapshotTable {
     val v = prev + 1
     commitExclusive(path, v, renderManifest(v, ver.files, rowsOf(ver),
       bytesOf(ver),
-      ver.stats, ver.bloom, ver.txns, ver.part, ver.partValues,
+      ver.stats, ver.bloom, ver.txns, ver.part,
       bloomsExtra = ver.bloomsExtra,
       op = "ALTER", dvFiles = ver.dvFiles, dvRows = ver.dvRows,
       schema = Some(SchemaMeta(ids :+ newId, names :+ name,
@@ -5372,27 +5073,19 @@ object SnapshotTable {
       widened = ver.widenedTypes))
     ver.part match {
       case Some(spec) =>
-        val withP = data.withColumn("__p", spec.column)
-        val laidOut = statsCol match {
-          case Some(c) => withP
-            .repartitionByRange(nOut, col("__p"), col(c))
-            .sortWithinPartitions(col("__p"), col(c))
-          case None => withP.repartition(col("__p"))
-        }
-        laidOut.write.mode("errorifexists").partitionBy("__p")
-          .parquet(batchDir)
-        val (batch, pvals) =
-          partitionedBatchFacts(spark, batchDir, statsCol)
+        val (batch, bparts) =
+          writePartitionedBatch(data, batchDir, spec, statsCol)
         ver.bloomConfs.foreach(writeBloomRows(spark, path, batch.files, _))
         commitExclusive(path, v, renderManifest(v, batch.files,
           batch.rows, batch.bytes,
           statsCol.map(c => Stats(c, batch.mins, batch.maxs)),
-          ver.bloom, ver.txns, Some(spec), Some(pvals),
+          ver.bloom, ver.txns, Some(spec),
           bloomsExtra = ver.bloomsExtra,
           op = "OPTIMIZE", schema = uniformMeta(batch.files.length),
           colStats = colStatsWith(ver, Seq.empty,
             computeColStats(spark, batch.files, colSpecsOf(ver))),
-      seg = path -> Some(ver)))
+          seg = path -> Some(ver),
+          partKeys = Some(extendParts(spec, ver, Seq.empty, bparts))))
         CompactResult(v, ver.files.length, batch.files.length,
           ver.files.length)
       case None =>
@@ -5823,8 +5516,6 @@ object SnapshotTable {
     val colStats = mainV.colStats.zip(stageV.colStats).map {
       case (a, b) => a.slice(keptIdx) ++ b.slice(addedIdx)
     }
-    val partValues = mainV.partValues.map(pv =>
-      keptIdx.map(pv) ++ addedIdx.map(stageV.partValues.get))
     val partKeys = mainV.partKeys.map(pk =>
       pk.slice(keptIdx) ++ stageV.partKeys.get.slice(addedIdx))
     val schema = mainV.schemaIds.map(ids =>
@@ -5847,7 +5538,7 @@ object SnapshotTable {
       // version number is just the next free slot in the linear log
       val v = latestVersion(path) + 1
       val manifest = renderManifest(v, files, rows, bytes, stats,
-        mainV.bloom, txns, part = mainV.part, partValues = partValues,
+        mainV.bloom, txns, part = mainV.part,
         op = s"publish:$from", dvFiles = mainV.dvFiles ++ dvAdd,
         dvRows = mainV.dvRows + (stageV.dvRows - parentV.dvRows),
         schema = schema, colStats = colStats,
@@ -5974,7 +5665,7 @@ object SnapshotTable {
     commitExclusive(dstPath, 1, renderManifest(1, src.files,
       rowsOf(src),
       bytesOf(src),
-      src.stats, None, Map.empty, src.part, src.partValues,
+      src.stats, None, Map.empty, src.part,
       op = "CLONE", dvFiles = src.dvFiles, dvRows = src.dvRows,
       schema = carryMeta(src, src.files.indices, 0),
       colStats = src.colStats,
@@ -6040,7 +5731,7 @@ object SnapshotTable {
       val manifest = renderManifest(prev + 1, src.files,
         rowsOf(src),
         bytesOf(src),
-        src.stats, src.bloom, base.txns, src.part, src.partValues,
+        src.stats, src.bloom, base.txns, src.part,
         op = "RESTORE", dvFiles = src.dvFiles, dvRows = src.dvRows,
         // the id fence NEVER regresses: a restore past a column add
         // must not let a later append recycle the rolled-back id —
@@ -6134,7 +5825,7 @@ object SnapshotTable {
           tio.delete(e.path)
           deleted += 1
           // mark every ancestor up to the data root: partitioned
-          // batches nest files under __p=v dirs, and the emptied-dir
+          // batches nest files under __pK=… dirs, and the emptied-dir
           // pass below lists only batch-level dirs
           var anc = parentOf(canon)
           while (anc != null && anc != rootCanon &&

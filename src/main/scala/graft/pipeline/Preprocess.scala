@@ -60,10 +60,6 @@ object Preprocess {
       stacOnly: Boolean = false,
       overwrite: Boolean = false,
       compress: Boolean = true,   // DEFLATE default on (ref generator.py:620)
-      // K1 slice format: "netcdf4" = HDF5 + shuffle + deflate-9, the
-      // reference's output envelope (generator.py:969-977, zlib=True
-      // complevel=9); "classic" = uncompressed CDF-1
-      ncFormat: String = "netcdf4",
       // K2: warp COGs to EPSG:4326 before writing (ref reproject flag,
       // generator.py:826,1006-1007 — default OFF there too)
       reproject: Boolean = false)
@@ -213,21 +209,14 @@ object Preprocess {
             Seq(incomingColl).toDS()).collect().toSeq
         else Seq(incomingColl)
 
-      // J2 get-or-create vs the existing catalog (the new ids already
-      // exclude the collection's stored ones)
-      val toWrite =
-        if (!catalogExists) newItems.toDS()
-        else if (newItems.isEmpty) existing
-        // unionByName, never positional union: the two sides originate
-        // from different plans (local rows vs JSON scan) whose column
-        // orders are not guaranteed to agree.
-        else StacOps.getOrCreateItems(existing, newItems.toDS())
-          .unionByName(existing)
+      // J2 get-or-create: the new ids already exclude the collection's
+      // stored ones, so only the new items are written — stored item
+      // files stay as they are
       sc.setJobDescription("preprocess: catalog write")
       StacJsonSink.write(catalogRoot,
         StacCatalog(opts.catalogName, s"${opts.catalogName} STAC catalog",
           collections.map(_.id)),
-        collections, toWrite)
+        collections, newItems.toDS())
       tidy.unpersist()
       Result(catalogRoot, nStored + newItems.size, nSlices)
     }
@@ -242,16 +231,26 @@ object Preprocess {
   }
 
   /** Output file path relative to the data dir, under
-    * `<kind>/<collection>/<date>/`; the asset href is `./` + this path.
+    * `<kind>/<collection>/<date>/`; the asset href is `./` + this path
+    * ([[assetHref]]).
     */
   private def relPath(kind: String, collection: String, file: Column,
                       ext: String) =
     concat(lit(s"$kind/$collection/"), col("date_str"), lit("/"), file, lit(ext))
 
+  /** F8: the published href of an output at data-dir path `rel` — `./`
+    * + `rel`, rewritten onto the file server when one is configured.
+    */
+  private def assetHref(rel: Column, opts: Options): Column = {
+    val local = concat(lit("./"), rel)
+    opts.fileServerUrl.fold(local)(Scalars.hrefRewrite(local, _))
+  }
+
   /** The output manifest: ONE aggregate of the tidy scan per (file,
     * init), exploded to one row per leadtime. A row carries its init's
-    * projected bbox and every id, path, time string and title its item
-    * needs (F5/F6), all from [[Scalars]], evaluated in this one action.
+    * projected bbox and every id, path, href, time string and title its
+    * item needs (F5/F6/F8), all from [[Scalars]], evaluated in this one
+    * action.
     */
   private def outputManifest(tidy: DataFrame, tScale: Long,
                              tBase: java.time.Instant, step: Double,
@@ -280,13 +279,16 @@ object Preprocess {
       .withColumn("valid_time", Scalars.calendarAdd(refTime, lit(unit),
         col("leadtime_idx") * step))
       .withColumn("date_str", Scalars.fmtDate(refTime))
+      .withColumn("nc",
+        relPath("netcdf", opts.name, Scalars.formatTime(refTime), ".nc"))
+      .withColumn("jpg", relPath("cogs", opts.name, col("item_id"), ".jpg"))
+      .withColumn("tif", relPath("cogs", opts.name,
+        Scalars.cogItemId(col("item_id"), validTime), ".tif"))
       .select(col("path"), col("time_idx"), col("time"), col("leadtime_idx"),
-        col("item_id"), col("xs"), col("vars"),
-        relPath("netcdf", opts.name, Scalars.formatTime(refTime), ".nc")
-          .as("nc"),
-        relPath("cogs", opts.name, col("item_id"), ".jpg").as("jpg"),
-        relPath("cogs", opts.name,
-          Scalars.cogItemId(col("item_id"), validTime), ".tif").as("tif"),
+        col("item_id"), col("xs"), col("vars"), col("nc"), col("jpg"),
+        col("tif"), assetHref(col("nc"), opts).as("nc_href"),
+        assetHref(col("jpg"), opts).as("jpg_href"),
+        assetHref(col("tif"), opts).as("tif_href"),
         Scalars.datetimeToStr(refTime).as("datetime"),
         Scalars.datetimeToStr(col("end_time")).as("end_time"),
         size(col("leads")).cast("string").as("nleadtime"),
@@ -302,7 +304,8 @@ object Preprocess {
   private[pipeline] final case class Target(
       path: String, time_idx: Int, time: Double, leadtime_idx: Int,
       item_id: String, xs: Seq[Double], vars: Seq[String], nc: String,
-      jpg: String, tif: String, datetime: String, end_time: String,
+      jpg: String, tif: String, nc_href: String, jpg_href: String,
+      tif_href: String, datetime: String, end_time: String,
       nleadtime: String, nc_title: String, valid_time: String,
       cog_title: String, x_min: Double, x_max: Double, y_min: Double,
       y_max: Double)
@@ -435,7 +438,7 @@ object Preprocess {
                          epsg: Int, opts: Options): GroupResult =
     if (g.lead < 0) {
       val (wrote, info) = emit(g.file, g.withData, opts)(
-        sliceBytes(g, lines, opts.ncFormat))
+        sliceBytes(g, lines))
       GroupResult(g.path, g.timeIdx, g.lead, wrote, info.toSeq, Nil)
     } else {
       // A2: each band's scanlines in y order through the vec_stats fold
@@ -481,8 +484,7 @@ object Preprocess {
   /** K1: one .nc per (file, init) holding every band's slice (P8 skip in
     * [[emit]]; ref generator.py:906-909 analogue for netCDF).
     */
-  private def sliceBytes(g: OutGroup, lines: Seq[Scanline],
-                         ncFormat: String): Array[Byte] = {
+  private def sliceBytes(g: OutGroup, lines: Seq[Scanline]): Array[Byte] = {
     val xs = g.xs
     val ys = lines.map(l => l.yIdx -> l.y).distinct.sortBy(_._1).map(_._2).toArray
     val ls = lines.map(l => l.lead -> l.leadtime).distinct.sortBy(_._1)
@@ -507,11 +509,8 @@ object Preprocess {
     val dims = Seq("time" -> 1, "yc" -> ys.length, "xc" -> xs.length,
       "leadtime" -> ls.length)
     // K1 parity: the reference writes netCDF-4 with zlib level 9
-    // (generator.py:969-977); classic CDF-1 stays available for
-    // consumers without HDF5 readers
-    if (ncFormat == "netcdf4")
-      graft.source.Hdf5Write.write(dims, Seq(), coordVars ++ vars)
-    else NetCdf.write(dims, Seq(), coordVars ++ vars)
+    // (generator.py:969-977)
+    graft.source.Hdf5Write.write(dims, Seq(), coordVars ++ vars)
   }
 
   /** K2: one multiband COG per (file, init, leadtime), all bands with
@@ -594,8 +593,8 @@ object Preprocess {
   /** E1/E2/E3/J6 on the driver: one item per new init, from its output
     * manifest rows and the write tasks' reports. Each asset carries the
     * size and multihash its task reported for its file, or null / -1
-    * when the file does not exist (stacOnly); a COG asset carries its
-    * band statistics.
+    * when the file does not exist (stacOnly), and its published href
+    * (F8); a COG asset carries its band statistics.
     */
   private def assembleItems(spark: SparkSession, targets: Seq[Target],
                             reports: Seq[GroupResult], geoBbox: Seq[Double],
@@ -603,10 +602,10 @@ object Preprocess {
                             opts: Options): Seq[StacItem] = {
     import spark.implicits._
     val files = reports.flatMap(_.files).map(f => f.href -> f).toMap
-    def asset(key: String, rel: String, mediaType: String, title: String,
-              role: String, extra: Map[String, String]) = {
+    def asset(key: String, rel: String, href: String, mediaType: String,
+              title: String, role: String, extra: Map[String, String]) = {
       val f = files.get(s"./$rel")
-      StacAsset(key, s"./$rel", mediaType, title, Seq(role),
+      StacAsset(key, href, mediaType, title, Seq(role),
         f.map(_.checksum).orNull, f.fold(-1L)(_.size), extra)
     }
     // E2: `forecast:bands` is Spark's own to_json of a COG's statistics,
@@ -625,7 +624,7 @@ object Preprocess {
         // E2: per-leadtime COG asset with embedded band statistics
         val cogAssets = ls.flatMap(l =>
           bands.get((init._1, init._2, l.leadtime_idx)).map(json =>
-            asset(s"cog_lead_${l.leadtime_idx}", l.tif,
+            asset(s"cog_lead_${l.leadtime_idx}", l.tif, l.tif_href,
               "image/tiff; application=geotiff; profile=cloud-optimized",
               l.cog_title, "data", Map(
                 "custom:leadtime" -> l.leadtime_idx.toString,
@@ -634,10 +633,10 @@ object Preprocess {
         StacItem(t.item_id, opts.name, geometry, geoBbox, t.datetime,
           if (hemisphere.isEmpty) forecast
           else forecast + ("custom:hemisphere" -> hemisphere),
-          asset("netcdf", t.nc, "application/x-netcdf", t.nc_title, "data",
-            forecast) +:
-          asset("thumbnail", t.jpg, "image/jpeg", "Thumbnail", "thumbnail",
-            Map.empty) +: cogAssets)
+          asset("netcdf", t.nc, t.nc_href, "application/x-netcdf",
+            t.nc_title, "data", forecast) +:
+          asset("thumbnail", t.jpg, t.jpg_href, "image/jpeg", "Thumbnail",
+            "thumbnail", Map.empty) +: cogAssets)
     }
   }
 }

@@ -2267,7 +2267,7 @@ object Relational {
         require(v2.op == "OVERWRITE", s"expected OVERWRITE, got ${v2.op}")
         // zero-copy delete half: every outside-range v1 file carried
         // BY REFERENCE; every in-range v1 file gone
-        val pv1 = v1.partValues.get
+        val pv1 = v1.partKeys.get.longs
         val v2set = v2.files.toSet
         v1.files.indices.foreach { i =>
           val inRange = pv1(i) >= 9632 / 32 && pv1(i) < 9760 / 32
@@ -2339,7 +2339,7 @@ object Relational {
         SnapshotTable.latestVersion(path))
       require(ver.op == "MERGE" && ver.part.exists(_.transform == "bucket"),
         s"expected a MERGE on the bucket layout, got ${ver.op}/${ver.part}")
-      require(ver.partValues.exists(_.length == ver.files.length),
+      require(ver.partKeys.exists(_.nFiles == ver.files.length),
         "rewritten files must carry their partition values")
       val after = s.sql("SELECT count(*) AS n, CAST(sum(qty_u) AS BIGINT)" +
         " AS q FROM graft_q195.q195.li").collect().head

@@ -29,15 +29,18 @@ object NetCdfSource {
   def findCoord(names: Seq[String], candidates: Seq[String]): Option[String] =
     candidates.find(names.contains)
 
-  /** Resolve a comma-joined glob to concrete file paths (driver-side,
-    * Hadoop FileSystem — works on local disk, HDFS, object stores). A
-    * pattern matching nothing FAILS (a typo'd path must not read as an
-    * empty dataset); a matched directory expands to its visible files
-    * (the listing binaryFile used to do).
+  /** Resolve path patterns to concrete file paths (driver-side, Hadoop
+    * FileSystem — works on local disk, HDFS, object stores), for both
+    * netCDF readers: this object's glob scans and
+    * `spark.read.format("netcdf")`. A pattern matching nothing FAILS (a
+    * typo'd path must not read as an empty dataset); a matched
+    * directory expands to its visible files (the listing binaryFile
+    * used to do).
     */
-  private def resolveGlob(spark: SparkSession, glob: String): Seq[String] = {
+  private[graft] def resolvePaths(spark: SparkSession,
+                                  patterns: Seq[String]): Seq[String] = {
     val conf = spark.sessionState.newHadoopConf()
-    glob.split(",").toSeq.flatMap { p =>
+    patterns.flatMap { p =>
       val hp = new org.apache.hadoop.fs.Path(p)
       val fs = hp.getFileSystem(conf)
       val matches = Option(fs.globStatus(hp)).map(_.toSeq).getOrElse(Seq.empty)
@@ -61,7 +64,7 @@ object NetCdfSource {
       spark: SparkSession, glob: String)(
       f: (String, GridFile) => IterableOnce[T]) = {
     import spark.implicits._
-    val paths = resolveGlob(spark, glob)
+    val paths = resolvePaths(spark, glob.split(",").toSeq)
     val par = math.max(1, math.min(paths.size, spark.sparkContext.defaultParallelism))
     // session Hadoop conf rides to the tasks (spark.hadoop.* —
     // object-store credentials etc.); a bare executor-side

@@ -611,8 +611,9 @@ private[v2] final class GraftMetaTable(kind: String, path: String)
       StructField("bytes", LongType),
       StructField("stats_min", LongType),
       StructField("stats_max", LongType),
+      // single-BIGINT specs: the LONG value (partition_key stays
+      // NULL); every other spec: the rendered tuple (partition NULL)
       StructField("partition", LongType),
-      // typed/multi specs: the rendered tuple (partition stays NULL)
       StructField("partition_key", StringType)))
     case "partitions" => StructType(Seq(
       StructField("partition", LongType),
@@ -656,6 +657,7 @@ private[v2] final class GraftMetaTable(kind: String, path: String)
           }
       case "files" =>
         val ver = SnapshotTable.readVersion(spark, path, latest)
+        val long = ver.part.exists(_.singleLong)
         ver.files.indices.map { i =>
           Array[Any](
             org.apache.spark.unsafe.types.UTF8String
@@ -664,38 +666,35 @@ private[v2] final class GraftMetaTable(kind: String, path: String)
             ver.fileBytes.map(b => Long.box(b(i))).orNull,
             ver.stats.map(st => Long.box(st.mins(i))).orNull,
             ver.stats.map(st => Long.box(st.maxs(i))).orNull,
-            ver.partValues.map(pv => Long.box(pv(i))).orNull,
-            ver.partKeys.map(pk =>
+            ver.partKeys.filter(_ => long).map(pk => Long.box(pk.longs(i)))
+              .orNull,
+            ver.partKeys.filter(_ => !long).map(pk =>
               org.apache.spark.unsafe.types.UTF8String.fromString(
                 GraftMetaTable.keyLabel(ver.part.get, pk.row(i))))
               .orNull)
         }
       case "partitions" =>
         val ver = SnapshotTable.readVersion(spark, path, latest)
-        require(ver.partValues.isDefined || ver.partKeys.isDefined,
-          s"$path is not hidden-partitioned — t.partitions needs a " +
-            "partition transform; t.files inventories plain tables")
-        ver.partValues match {
-          case Some(pv) =>
-            pv.indices.groupBy(pv).toSeq.sortBy(_._1)
-              .map { case (p, idx) =>
-                Array[Any](p, null, idx.length.toLong,
-                  ver.fileRows.map(r => Long.box(idx.map(r).sum)).orNull,
-                  ver.fileBytes.map(b => Long.box(idx.map(b).sum)).orNull)
-              }
-          case None =>
-            val pk = ver.partKeys.get
-            (0 until pk.nFiles).groupBy(pk.row).toSeq
-              .sortBy(t => GraftMetaTable.keyLabel(ver.part.get, t._1))
-              .map { case (row, idx) =>
-                Array[Any](null,
-                  org.apache.spark.unsafe.types.UTF8String.fromString(
-                    GraftMetaTable.keyLabel(ver.part.get, row)),
-                  idx.length.toLong,
-                  ver.fileRows.map(r => Long.box(idx.map(r).sum)).orNull,
-                  ver.fileBytes.map(b => Long.box(idx.map(b).sum)).orNull)
-              }
-        }
+        val (sp, pk) = ver.part.zip(ver.partKeys).getOrElse(
+          throw new IllegalArgumentException(
+            s"$path is not hidden-partitioned — t.partitions needs a " +
+              "partition transform; t.files inventories plain tables"))
+        def totals(idx: Seq[Int]): Seq[Any] = Seq(idx.length.toLong,
+          ver.fileRows.map(r => Long.box(idx.map(r).sum)).orNull,
+          ver.fileBytes.map(b => Long.box(idx.map(b).sum)).orNull)
+        if (sp.singleLong)
+          pk.longs.indices.groupBy(pk.longs).toSeq.sortBy(_._1)
+            .map { case (p, idx) => (Seq[Any](p, null) ++ totals(idx)).toArray }
+        else
+          (0 until pk.nFiles).groupBy(pk.row).toSeq
+            .map { case (row, idx) =>
+              (GraftMetaTable.keyLabel(sp, row), idx) }
+            .sortBy(_._1)
+            .map { case (label, idx) =>
+              (Seq[Any](null,
+                org.apache.spark.unsafe.types.UTF8String.fromString(label)) ++
+                totals(idx)).toArray
+            }
       case "refs" =>
         // branches/tags (r19): the write-audit-publish surface,
         // inspectable from SQL — empty when none were created

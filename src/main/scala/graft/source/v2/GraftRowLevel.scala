@@ -330,21 +330,15 @@ private[v2] object GraftWriteUtil {
             if (k < f.csKmv.length) f.csKmv(k) else ""))
     }
 
-  /** The per-file partition values of a written batch, in the storage
-    * form the spec dictates.
-    */
+  /** The per-file partition tuples of a written batch. */
   def batchParts(p: SnapshotTable.PartSpec, written: Seq[GraftFileFact])
-      : SnapshotTable.BatchParts =
-    if (p.isLegacy)
-      SnapshotTable.BatchParts(Some(written.map(_.part)), None)
-    else {
-      written.foreach(f => require(f.partKey.length == p.fields.length,
-        s"file ${f.file} carries ${f.partKey.length} partition keys " +
-          s"for ${p.fields.length} fields"))
-      SnapshotTable.BatchParts(None, Some(SnapshotTable.PartKeys(
-        p.fields.map(_.valueDtype).toIndexedSeq,
-        written.iterator.flatMap(_.partKey).toIndexedSeq)))
-    }
+      : SnapshotTable.PartKeys = {
+    written.foreach(f => require(f.partKey.length == p.fields.length,
+      s"file ${f.file} carries ${f.partKey.length} partition keys " +
+        s"for ${p.fields.length} fields"))
+    SnapshotTable.PartKeys(p.fields.map(_.valueDtype).toIndexedSeq,
+      written.iterator.flatMap(_.partKey).toIndexedSeq)
+  }
 
   /** Best-effort cleanup of staged (never-referenced) files. */
   def deleteStaged(conf: org.apache.hadoop.conf.Configuration,
@@ -480,16 +474,15 @@ private[v2] final class GraftBatchWrite(
 }
 
 /** Per-file facts a rewrite task commits: row count, stats [min, max]
-  * (valid only when `statSeen`), the file's hidden partition value —
-  * `part` for a legacy single-LONG spec (0 when unpartitioned),
-  * `partKey` (the encoded tuple) for typed/multi specs — and `cs`,
+  * (valid only when `statSeen`), the file's hidden partition tuple
+  * `partKey` (encoded, empty when unpartitioned) — and `cs`,
   * the TYPED multi-column bounds (encoded min, encoded max, has,
   * exact) per declared stats column, tracked INSIDE the write task so
   * the commit never re-reads the batch it just wrote.
   */
 private[v2] final case class GraftFileFact(
     file: String, rows: Long, statMin: Long, statMax: Long,
-    statSeen: Boolean, part: Long, partKey: Seq[String] = Seq.empty,
+    statSeen: Boolean, partKey: Seq[String] = Seq.empty,
     cs: Seq[(String, String, Boolean, Boolean)] = Seq.empty,
     csNulls: Seq[Long] = Seq.empty,
     csKmv: Seq[String] = Seq.empty)
@@ -520,9 +513,8 @@ private[v2] final class GraftRowWriterFactory(
       import org.apache.spark.sql.execution.datasources.parquet.ParquetWriteSupport
 
       /** Open writer + running facts for one partition value. `key`
-        * is the slot's pool key: the Long partition value for a
-        * legacy spec, the List of per-field keys for a typed one, 0L
-        * when unpartitioned.
+        * is the slot's pool key: the List of per-field keys, 0L when
+        * unpartitioned.
         */
       final class Slot(val key: Any) {
         val file: String = {
@@ -566,7 +558,6 @@ private[v2] final class GraftRowWriterFactory(
           if (mn == Long.MaxValue) 0L else mn,
           if (mx == Long.MinValue) 0L else mx,
           statSeen = mn != Long.MaxValue,
-          part = key match { case l: Long => l; case _ => 0L },
           partKey = key match {
             case ks: List[_] =>
               val fs = partIdx.get._2.fields
@@ -611,15 +602,8 @@ private[v2] final class GraftRowWriterFactory(
 
       override def write(record: InternalRow): Unit = {
         val p: Any = partIdx match {
-          case Some((idxs, spec)) if spec.isLegacy =>
-            if (record.isNullAt(idxs.head))
-              throw new IllegalArgumentException(
-                s"partition source ${spec.source} is NULL — hidden " +
-                  "partitioning routes by value and cannot place a " +
-                  "NULL row")
-            spec(record.getLong(idxs.head))
           case Some((idxs, spec)) =>
-            // typed/multi spec: per-field physical read + transform
+            // per-field physical read + transform
             val fs = spec.fields
             val keys = new Array[Any](fs.length)
             var k = 0

@@ -125,22 +125,7 @@ object GraftTableSource {
   private def renderMarker(m: Marker): String = {
     val fields = scala.collection.mutable.ArrayBuffer(
       "schema_ddl" -> graft.Json.quote(m.schema.toDDL))
-    m.part.foreach { p =>
-      if (p.isLegacy) {
-        fields += "part_source" -> graft.Json.quote(p.source)
-        fields += "part_transform" -> graft.Json.quote(p.transform)
-        fields += "part_param" -> p.param.toString
-      } else {
-        fields += "part_sources" -> p.fields
-          .map(f => graft.Json.quote(f.source)).mkString("[", ",", "]")
-        fields += "part_transforms" -> p.fields
-          .map(f => graft.Json.quote(f.transform)).mkString("[", ",", "]")
-        fields += "part_params" -> p.fields.map(_.param)
-          .mkString("[", ",", "]")
-        fields += "part_dtypes" -> p.fields
-          .map(f => graft.Json.quote(f.dtype)).mkString("[", ",", "]")
-      }
-    }
+    m.part.foreach(fields ++= SnapshotTable.specFields(_))
     m.statsCol.foreach(c => fields += "stats_col" -> graft.Json.quote(c))
     m.bloomCol.foreach(c => fields += "bloom_col" -> graft.Json.quote(c))
     if (m.statsCols.nonEmpty)
@@ -160,11 +145,15 @@ object GraftTableSource {
     if (!graft.ops.TableIo.forPath(path).exists(p)) return None
     val df = SparkSession.active.read.json(p)
     val r = df.collect().head
+    // the removed single-BIGINT encoding is never read as
+    // "unpartitioned": the first append would silently drop the layout
+    if (df.columns.contains("part_source"))
+      throw new IllegalStateException(
+        s"snapshot table $path: log/table.json records its partition " +
+          "spec in the removed single-BIGINT form (part_source) — " +
+          "re-create the table")
     val part =
-      if (df.columns.contains("part_source"))
-        Some(SnapshotTable.PartSpec(r.getAs[String]("part_source"),
-          r.getAs[String]("part_transform"), r.getAs[Long]("part_param")))
-      else if (df.columns.contains("part_sources")) {
+      if (df.columns.contains("part_sources")) {
         val srcs = r.getAs[scala.collection.Seq[String]]("part_sources")
         val trs = r.getAs[scala.collection.Seq[String]]("part_transforms")
         val ps = r.getAs[scala.collection.Seq[Long]]("part_params")
@@ -386,9 +375,6 @@ object GraftTableSource {
       keep = keep.filter(i => vs.exists(v => mins(i) <= v && maxs(i) >= v))
 
     val statCol = ver.stats.map(_.col)
-    // the legacy single-LONG pass below; typed/multi specs prune in
-    // their own pass further down
-    val partCol = ver.part.filter(_.isLegacy).map(_.source)
     // canonicalized comparison (TableIo.canon via canonFile): `file:`
     // vs `file://` vs plain forms of the same path must all match
     def fileNameSet(vs: Seq[Any]): Set[String] =
@@ -431,48 +417,6 @@ object GraftTableSource {
         if (ls.length == vs.length)
           pruneIn(ver.stats.get.mins, ver.stats.get.maxs, ls)
 
-      // hidden partitioning: push the predicate through the transform
-      case EqualTo(c, v) if partCol.contains(c) =>
-        longOf(v).foreach { l =>
-          val want = ver.part.get(l)
-          val pv = ver.partValues.get
-          keep = keep.filter(i => pv(i) == want)
-        }
-      case In(c, vs) if partCol.contains(c) =>
-        val ls = vs.toSeq.flatMap(longOf)
-        if (ls.length == vs.length) {
-          val want = ls.map(ver.part.get.apply).toSet
-          val pv = ver.partValues.get
-          keep = keep.filter(i => want(pv(i)))
-        }
-      case GreaterThanOrEqual(c, v)
-          if partCol.contains(c) && ver.part.get.monotone =>
-        longOf(v).foreach { l =>
-          val plo = ver.part.get(l)
-          val pv = ver.partValues.get
-          keep = keep.filter(i => pv(i) >= plo)
-        }
-      case LessThanOrEqual(c, v)
-          if partCol.contains(c) && ver.part.get.monotone =>
-        longOf(v).foreach { l =>
-          val phi = ver.part.get(l)
-          val pv = ver.partValues.get
-          keep = keep.filter(i => pv(i) <= phi)
-        }
-      case GreaterThan(c, v)
-          if partCol.contains(c) && ver.part.get.monotone =>
-        longOf(v).foreach { l =>
-          val plo = ver.part.get(l + 1)
-          val pv = ver.partValues.get
-          keep = keep.filter(i => pv(i) >= plo)
-        }
-      case LessThan(c, v)
-          if partCol.contains(c) && ver.part.get.monotone =>
-        longOf(v).foreach { l =>
-          val phi = ver.part.get(l - 1)
-          val pv = ver.partValues.get
-          keep = keep.filter(i => pv(i) <= phi)
-        }
       case _ => ()
     }
 
@@ -546,26 +490,37 @@ object GraftTableSource {
       }
     }
 
-    // TYPED hidden partitioning ([[SnapshotTable.PartField]]): a
-    // predicate on any SOURCE column pushes through that field's
-    // transform and compares against the per-file recorded tuple.
-    // Partition values are EXACT (partition-pure files), so equality
-    // and IN prune exactly; ranges prune on monotone transforms; and
-    // IS NULL prunes EVERYTHING — every partitioned write path
-    // rejects NULL sources, so no file can hold one.
-    ver.part.filterNot(_.isLegacy).foreach { sp =>
+    // hidden partitioning ([[SnapshotTable.PartField]]): a predicate
+    // on any SOURCE column pushes through that field's transform and
+    // compares against the per-file recorded tuple. Partition values
+    // are EXACT (partition-pure files), so equality and IN prune
+    // exactly; ranges prune on monotone transforms; and IS NULL
+    // prunes EVERYTHING — every partitioned write path rejects NULL
+    // sources, so no file can hold one.
+    ver.part.foreach { sp =>
       import graft.ops.TypedBounds
       val pk = ver.partKeys.getOrElse(throw new IllegalStateException(
-        s"typed-partitioned version lacks partition keys"))
+        s"hidden-partitioned version lacks partition keys"))
       val fieldOf: Map[String, (SnapshotTable.PartField, Int)] =
         sp.fields.zipWithIndex
           .map { case (f, j) => f.source -> (f, j) }.toMap
       def cmpAt(f: SnapshotTable.PartField, j: Int, i: Int,
                 probe: Any): Int =
         TypedBounds.compare(f.valueDtype, pk.key(i, j), probe)
-      def rangePrune(c: String, v: Any, isLo: Boolean): Unit =
+      // a strict bound over an INTEGRAL source first steps to the next
+      // source value (x > v ⇔ x ≥ v + 1); an overflowing step keeps
+      // the inclusive bound, which is merely conservative
+      def rangePrune(c: String, v: Any, isLo: Boolean,
+                     strict: Boolean): Unit =
         fieldOf.get(c).filter(_._1.monotone).foreach { case (f, j) =>
-          TypedBounds.keyOfValue(f.dtype, v).foreach { k =>
+          TypedBounds.keyOfValue(f.dtype, v).foreach { k0 =>
+            val k = k0 match {
+              case l: Long if strict &&
+                  Seq("int", "long", "date").contains(f.dtype) =>
+                if (isLo) { if (l < Long.MaxValue) l + 1 else l }
+                else if (l > Long.MinValue) l - 1 else l
+              case _ => k0
+            }
             val p = f.applyKey(k)
             keep = keep.filter(i =>
               if (isLo) cmpAt(f, j, i, p) >= 0 else cmpAt(f, j, i, p) <= 0)
@@ -586,14 +541,16 @@ object GraftTableSource {
             val want = ks.map(f.applyKey).toSet
             keep = keep.filter(i => want.contains(pk.key(i, j)))
           }
-        // strict bounds stay conservative through the transform: the
-        // file's partition value must be ≥/≤ the PROBE's partition
-        // value (several source values share one), the exact
-        // predicate rides along as the residual
-        case GreaterThan(c, v) => rangePrune(c, v, isLo = true)
-        case GreaterThanOrEqual(c, v) => rangePrune(c, v, isLo = true)
-        case LessThan(c, v) => rangePrune(c, v, isLo = false)
-        case LessThanOrEqual(c, v) => rangePrune(c, v, isLo = false)
+        // bounds prune through the transform: the file's partition
+        // value must be ≥/≤ the PROBE's partition value (several
+        // source values share one), the exact predicate rides along
+        // as the residual
+        case GreaterThan(c, v) => rangePrune(c, v, isLo = true, strict = true)
+        case GreaterThanOrEqual(c, v) =>
+          rangePrune(c, v, isLo = true, strict = false)
+        case LessThan(c, v) => rangePrune(c, v, isLo = false, strict = true)
+        case LessThanOrEqual(c, v) =>
+          rangePrune(c, v, isLo = false, strict = false)
         case IsNull(c) if fieldOf.contains(c) =>
           keep = IndexedSeq.empty
         case _ => ()
@@ -882,7 +839,8 @@ private[v2] final class GraftWriteBuilder(
             if (latest > 0)
               SnapshotTable.readVersion(SparkSession.active, path, latest).part
             else GraftTableSource.readMarker(path).flatMap(_.part)
-          spec.exists(sp => sp.isLegacy && sp.source == c && sp.monotone &&
+          // one monotone LONG field whose source the range predicates
+          spec.exists(sp => sp.singleLong && sp.source == c && sp.monotone &&
             (sp.transform != "truncate" ||
               (Math.floorMod(lo, sp.param) == 0 &&
                 Math.floorMod(hi + 1, sp.param) == 0)))
@@ -1449,18 +1407,12 @@ private[v2] final class GraftScan(val res: GraftTableSource.Resolved,
         // bucket/truncate/days/… resolve only for tables loaded
         // through GraftCatalog, whose FunctionCatalog carries the
         // transform arithmetic — elsewhere Spark simply falls back to
-        // unknown partitioning, which is always sound). Works for
-        // BOTH spec forms: the per-file key tuples ride on the input
-        // partitions ([[KeyedFilePartition]]).
+        // unknown partitioning, which is always sound). The per-file
+        // key tuples ride on the input partitions
+        // ([[KeyedFilePartition]]).
         val keys = GraftWriteUtil.transformExprs(p).toArray
-        val nTuples =
-          if (p.isLegacy) {
-            val pv = res.ver.partValues.get
-            keptFiles().map(pv).distinct.length
-          } else {
-            val pk = res.ver.partKeys.get
-            keptFiles().map(pk.row).distinct.length
-          }
+        val pk = res.ver.partKeys.get
+        val nTuples = keptFiles().map(pk.row).distinct.length
         new org.apache.spark.sql.connector.read.partitioning
           .KeyGroupedPartitioning(keys, nTuples)
       case _ =>
@@ -1666,23 +1618,21 @@ private[v2] final class GraftScan(val res: GraftTableSource.Resolved,
     // KeyGroupedPartitioning (all partition sources projected)
     val keyed = limit.isEmpty && res.ver.part.exists(p =>
       p.fields.forall(f => required.fieldNames.contains(f.source)))
-    def keyValsOf(i: Int): Seq[Any] = res.ver.part.get match {
-      case p if p.isLegacy => Seq(res.ver.partValues.get(i))
-      case p =>
-        val pk = res.ver.partKeys.get
-        p.fields.zipWithIndex.map { case (f, j) =>
-          // decoded key → the key expression's PHYSICAL shape
-          f.valueDtype match {
-            case "int" | "date" => pk.key(i, j).asInstanceOf[Long].toInt
-            case "string" => org.apache.spark.unsafe.types.UTF8String
-              .fromString(pk.key(i, j).asInstanceOf[String])
-            case d if graft.ops.TypedBounds.isDecimal(d) =>
-              val (dp, ds) = graft.ops.TypedBounds.decimalOf(d).get
-              org.apache.spark.sql.types.Decimal.createUnsafe(
-                pk.key(i, j).asInstanceOf[Long], dp, ds)
-            case _ => pk.key(i, j) // long-backed ordinals
-          }
+    def keyValsOf(i: Int): Seq[Any] = {
+      val pk = res.ver.partKeys.get
+      res.ver.part.get.fields.zipWithIndex.map { case (f, j) =>
+        // decoded key → the key expression's PHYSICAL shape
+        f.valueDtype match {
+          case "int" | "date" => pk.key(i, j).asInstanceOf[Long].toInt
+          case "string" => org.apache.spark.unsafe.types.UTF8String
+            .fromString(pk.key(i, j).asInstanceOf[String])
+          case d if graft.ops.TypedBounds.isDecimal(d) =>
+            val (dp, ds) = graft.ops.TypedBounds.decimalOf(d).get
+            org.apache.spark.sql.types.Decimal.createUnsafe(
+              pk.key(i, j).asInstanceOf[Long], dp, ds)
+          case _ => pk.key(i, j) // long-backed ordinals
         }
+      }
     }
     // the pushed + runtime predicates, re-checked by Spark above the
     // scan, also drive parquet's ROW-GROUP statistics filtering inside

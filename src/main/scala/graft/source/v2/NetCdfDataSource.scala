@@ -60,20 +60,17 @@ object NetCdfDataSource {
     .add("y_idx", IntegerType).add("y", DoubleType)
     .add("xs", ArrayType(DoubleType)).add("values", ArrayType(DoubleType))
 
+  /** The reader's `path`/`paths` options, resolved to files by the one
+    * netCDF path resolver ([[graft.source.NetCdfSource.resolvePaths]]).
+    */
   def resolvePaths(props: Map[String, String]): Seq[String] = {
     val raw = props.get("paths")
       .map(p => p.stripPrefix("[").stripSuffix("]").split(",").toSeq
         .map(_.trim.stripPrefix("\"").stripSuffix("\"")))
       .orElse(props.get("path").map(Seq(_)))
       .getOrElse(throw new IllegalArgumentException("netcdf: no path given"))
-    val conf = org.apache.spark.sql.SparkSession.active
-      .sessionState.newHadoopConf()
-    raw.flatMap { p =>
-      val hp = new HPath(p)
-      val fs = hp.getFileSystem(conf)
-      Option(fs.globStatus(hp)).map(_.toSeq).getOrElse(Seq.empty)
-        .filter(_.isFile).map(_.getPath.toString)
-    }.sorted
+    graft.source.NetCdfSource.resolvePaths(
+      org.apache.spark.sql.SparkSession.active, raw)
   }
 }
 

@@ -353,7 +353,7 @@ class GraftCatalogSpec extends SparkSpec {
     def assertPurity(): Unit = {
       val ver = SnapshotTable.readVersion(spark, p,
         SnapshotTable.latestVersion(p))
-      val pv = ver.partValues.get
+      val pv = ver.partKeys.get.longs
       ver.files.zipWithIndex.foreach { case (f, i) =>
         val vals = spark.read.parquet(f).select("k").as[Long]
           .collect().map(spec(_)).distinct
@@ -478,7 +478,7 @@ class GraftCatalogSpec extends SparkSpec {
     assert(v2.op === "OVERWRITE")
     // the delete half was metadata: every outside-range v1 file is in
     // v2 BY REFERENCE (same path, no rewrite)
-    val pv1 = v1.partValues.get
+    val pv1 = v1.partKeys.get.longs
     val outside = v1.files.indices
       .filter(i => pv1(i) < 2 || pv1(i) >= 4).map(v1.files).toSet
     assert(outside.forall(v2.files.contains),
@@ -547,7 +547,7 @@ class GraftCatalogSpec extends SparkSpec {
       .head.getLong(0) === (0L until 20L).sum)
     val v2 = SnapshotTable.readVersion(spark, p, 2)
     assert(v2.op === "OVERWRITE")
-    val pv1 = v1.partValues.get
+    val pv1 = v1.partKeys.get.longs
     val v2set = v2.files.toSet
     v1.files.indices.foreach { i =>
       val touched = pv1(i) == 2L || pv1(i) == 7L
@@ -569,7 +569,7 @@ class GraftCatalogSpec extends SparkSpec {
     val v3 = SnapshotTable.readVersion(spark, p,
       SnapshotTable.latestVersion(p))
     assert(v3.op === "OVERWRITE" && v3.part.isDefined &&
-      v3.partValues.exists(_.length == v3.files.length))
+      v3.partKeys.exists(_.longs.length == v3.files.length))
     val (dr, ds) = withScan(
       spark.sql("SELECT count(*) FROM graft.db.dyn WHERE d < 10"))
     assert(dr.getLong(0) === 10)
@@ -625,11 +625,11 @@ class GraftCatalogSpec extends SparkSpec {
     val ver = SnapshotTable.readVersion(spark, p,
       SnapshotTable.latestVersion(p))
     assert(ver.part.exists(_.transform == "bucket") &&
-      ver.partValues.exists(_.length == ver.files.length))
+      ver.partKeys.exists(_.longs.length == ver.files.length))
     assert(ver.txns.keys.exists(_.startsWith("stream-")))
     // partition purity, file by file
     val spec = ver.part.get
-    val pv = ver.partValues.get
+    val pv = ver.partKeys.get.longs
     ver.files.zipWithIndex.foreach { case (f, i) =>
       val vals = spark.read.parquet(f).select("k").as[Long]
         .collect().map(spec(_)).distinct

@@ -349,7 +349,7 @@ class GraftTableSourceSpec extends SparkSpec {
     val over = SnapshotTable.readVersion(spark, p2, 2)
     assert(over.op === "OVERWRITE" && over.rows === 10 &&
       over.part.exists(_.transform == "truncate") &&
-      over.partValues.exists(_.forall(_ === 0L)))
+      over.partKeys.exists(_.longs.forall(_ === 0L)))
     assert(spark.read.format("graft_table").option("path", p2).load()
       .count() === 10)
     // prior version still travels

@@ -20,6 +20,21 @@ class NetCdfV2Spec extends SparkSpec {
     assert(df.count() === 2 * 2 * 1 * 3 * 8)
   }
 
+  test("format(\"netcdf\") resolves paths like the glob source: a path " +
+    "matching nothing fails, a directory expands to its files") {
+    val missing = Files.createTempDirectory("graft-v2-none")
+      .resolve("nope-*.nc").toString
+    val e = intercept[IllegalArgumentException] {
+      spark.read.format("netcdf").load(missing).count()
+    }
+    assert(e.getMessage.contains("does not exist"), e.getMessage)
+    val dir = glob.substring(0, glob.lastIndexOf('/'))
+    assert(spark.read.format("netcdf").load(dir).count() ===
+      spark.read.format("netcdf").load(glob).count())
+    assert(spark.read.format("netcdf").load(dir)
+      .select("path").distinct().count() === 2)
+  }
+
   test("full-decode parity with the mapPartitions source") {
     val v2 = spark.read.format("netcdf").load(glob)
       .select(col("variable"), col("time_idx"), col("leadtime_idx"),

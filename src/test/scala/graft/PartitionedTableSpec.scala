@@ -41,12 +41,13 @@ class PartitionedTableSpec extends SparkSpec {
       (0L until 1000L).toDF("x"), path, spec)
     val ver = SnapshotTable.readVersion(spark, path, 1)
     assert(ver.part === Some(spec))
-    assert(ver.partValues.get.sorted === (0L to 9L))
+    assert(ver.partKeys.get.longs.sorted === (0L to 9L))
     assert(ver.files.length === 10) // one file per partition value
     val (df, read, total) = SnapshotTable.scanPartitionRange(
       spark, path, 1, 250, 449)
     assert(total === 10 && read === 3) // partitions 2, 3, 4
-    assert(!df.columns.contains("__p")) // hidden: not in the schema
+    // hidden: no derived column reaches the schema
+    assert(!df.columns.exists(_.startsWith("__p")))
     assert(df.count() === 200)
     assert(df.agg(sum("x")).head.getLong(0) === (250L to 449L).sum)
   }
@@ -59,7 +60,7 @@ class PartitionedTableSpec extends SparkSpec {
     SnapshotTable.appendPartitioned(
       (1L to 400L).toDF("k"), path, spec)
     val ver = SnapshotTable.readVersion(spark, path, 1)
-    ver.files.zip(ver.partValues.get).foreach { case (f, pv) =>
+    ver.files.zip(ver.partKeys.get.longs).foreach { case (f, pv) =>
       val vals = spark.read.parquet(f).select("k")
         .collect().map(r => spec(r.getLong(0))).distinct
       assert(vals.toSeq === Seq(pv), s"file $f mixes partition values")
@@ -115,7 +116,7 @@ class PartitionedTableSpec extends SparkSpec {
       Seq.tabulate(300)(i => (i.toLong % 6, i.toLong)).toDF("g", "v"),
       path, spec)
     val ver = SnapshotTable.readVersion(spark, path, 1)
-    assert(ver.partValues.get.sorted === (0L to 5L))
+    assert(ver.partKeys.get.longs.sorted === (0L to 5L))
     val (_, dropped, _) =
       SnapshotTable.deletePartitionRange(spark, path, 2, 3)
     assert(dropped === 2)
@@ -131,7 +132,7 @@ class PartitionedTableSpec extends SparkSpec {
     SnapshotTable.appendPartitioned((0L until 200L).toDF("x"), path, spec)
     SnapshotTable.appendPartitioned((200L until 300L).toDF("x"), path, spec)
     val ver = SnapshotTable.readVersion(spark, path, 2)
-    assert(ver.files.length === 3 && ver.partValues.get.length === 3)
+    assert(ver.files.length === 3 && ver.partKeys.get.longs.length === 3)
     val (_, read, total) =
       SnapshotTable.scanPartitionRange(spark, path, 2, 100, 299)
     assert(total === 3 && read === 2)
@@ -163,9 +164,9 @@ class PartitionedTableSpec extends SparkSpec {
       path, spec, statsCol = Some("d"))
     val ver = SnapshotTable.readVersion(spark, path, 1)
     val st = ver.stats.get
-    ver.partValues.get.indices.foreach { i =>
-      assert(st.mins(i) >= ver.partValues.get(i) * 1000 &&
-        st.maxs(i) < (ver.partValues.get(i) + 1) * 1000)
+    ver.partKeys.get.longs.indices.foreach { i =>
+      assert(st.mins(i) >= ver.partKeys.get.longs(i) * 1000 &&
+        st.maxs(i) < (ver.partKeys.get.longs(i) + 1) * 1000)
     }
   }
 
@@ -184,9 +185,9 @@ class PartitionedTableSpec extends SparkSpec {
     assert(res.version === 4 && res.rewritten === 9)
     val v2 = SnapshotTable.readVersion(spark, path, 4)
     assert(v2.files.length === 3) // one file per partition value
-    assert(v2.partValues.get.sorted === Seq(0L, 1L, 2L))
+    assert(v2.partKeys.get.longs.sorted === Seq(0L, 1L, 2L))
     // partition purity: every row of every file maps to its value
-    v2.files.zip(v2.partValues.get).foreach { case (f, p) =>
+    v2.files.zip(v2.partKeys.get.longs).foreach { case (f, p) =>
       assert(spark.read.parquet(f).select("x").collect()
         .forall(r => spec(r.getLong(0)) == p))
     }
@@ -242,9 +243,9 @@ class PartitionedTableSpec extends SparkSpec {
       SnapshotTable.scanPartitionRange(spark, path, 2, 240L, 260L)
     assert(read < total)
     assert(probe.filter(col("k") === 5L).count() === 1)
-    // partition purity survives: every file's __p dir matches its rows
+    // partition purity survives: every file's __p0 dir matches its rows
     val ver = SnapshotTable.readVersion(spark, path, 2)
-    assert(ver.partValues.get.length === ver.files.length)
+    assert(ver.partKeys.get.longs.length === ver.files.length)
   }
 
   test("mergePartitioned without a key bloom fails loudly when the key " +
@@ -291,7 +292,7 @@ class PartitionedTableSpec extends SparkSpec {
     assert(res.rewritten === 2, s"expected partitions 1,2 rewritten: $res")
     val v3 = SnapshotTable.readVersion(spark, path, 3)
     assert(v3.dvFiles.isEmpty && v3.rows === 299)
-    assert(v3.partValues.get.length === v3.files.length)
+    assert(v3.partKeys.get.longs.length === v3.files.length)
     val (probe3, read3, total3) =
       SnapshotTable.scanPartitionRange(spark, path, 3, 100L, 299L)
     assert(read3 < total3 && probe3.count() === 99)
@@ -315,6 +316,42 @@ class PartitionedTableSpec extends SparkSpec {
     assert(v2 === 2)
   }
 
+  test("a manifest or CREATE TABLE marker in the removed single-BIGINT " +
+      "encoding fails loudly, naming the table, instead of reading as " +
+      "unpartitioned") {
+    import spark.implicits._
+    val path = freshPath()
+    SnapshotTable.appendPartitioned((0L until 20L).toDF("x"), path,
+      PartSpec("x", "truncate", 10))
+    val ver = SnapshotTable.readVersion(spark, path, 1)
+    def q(s: String) = "\"" + s + "\""
+    // the same version, re-encoded in the pre-unification form
+    Files.writeString(Paths.get(path, "log", "v1.json"),
+      s"""{"version":1,"op":"APPEND","committed_ms":1,"rows":20,""" +
+        s""""files":${ver.files.map(q).mkString("[", ",", "]")},""" +
+        s""""file_rows":${ver.fileRows.get.mkString("[", ",", "]")},""" +
+        s""""file_bytes":${ver.fileBytes.get.mkString("[", ",", "]")},""" +
+        s""""part_source":"x","part_transform":"truncate",""" +
+        s""""part_param":10,"part_values":""" +
+        s"""${ver.partKeys.get.longs.mkString("[", ",", "]")}}""")
+    val e = intercept[IllegalStateException] {
+      SnapshotTable.readVersion(spark, path, 1)
+    }
+    assert(e.getMessage.contains(path) &&
+      e.getMessage.contains("part_source"), e.getMessage)
+    // the CREATE TABLE marker of a never-written table
+    val fresh = freshPath()
+    Files.createDirectories(Paths.get(fresh, "log"))
+    Files.writeString(Paths.get(fresh, "log", "table.json"),
+      """{"schema_ddl":"x BIGINT","part_source":"x",""" +
+        """"part_transform":"identity","part_param":0}""")
+    val m = intercept[IllegalStateException] {
+      graft.source.v2.GraftTableSource.readMarker(fresh)
+    }
+    assert(m.getMessage.contains(fresh) &&
+      m.getMessage.contains("part_source"), m.getMessage)
+  }
+
   test("vacuum sweeps an unreferenced partitioned batch including its " +
       "nested partition dirs") {
     import spark.implicits._
@@ -323,7 +360,8 @@ class PartitionedTableSpec extends SparkSpec {
     SnapshotTable.appendPartitioned((0L until 200L).toDF("x"), path, spec)
     // fake an aborted partitioned append: a durable nested batch no
     // manifest references
-    val orphan = Paths.get(path, "files", "batch-orphan", "__p=9")
+    // `__p0=k39` = partition value "9" in the batch layout's hex form
+    val orphan = Paths.get(path, "files", "batch-orphan", "__p0=k39")
     Files.createDirectories(orphan)
     val donor = parquetLeaves(path).head
     Files.copy(donor, orphan.resolve("part-orphan.parquet"))
@@ -340,7 +378,7 @@ class PartitionedTableSpec extends SparkSpec {
     val path = freshPath()
     val spec = PartSpec("x", "truncate", 10)
     // 40 partition values over ≤32 shuffle partitions: some task MUST
-    // write ≥2 __p= dirs, reusing its part-file base name across them
+    // write ≥2 __p0= dirs, reusing its part-file base name across them
     // — a filename-keyed size map would collide and record wrong
     // bytes. Skewed partition sizes (partition p holds p+1 rows) make
     // any collision visible as a size mismatch.
@@ -466,7 +504,7 @@ class PartitionedTableSpec extends SparkSpec {
       "partitioned compaction resurrected MOR-deleted rows")
     // purity + pruning survive
     val ver = SnapshotTable.readVersion(spark, path, res.version)
-    assert(ver.partValues.get.length === ver.files.length)
+    assert(ver.partKeys.get.longs.length === ver.files.length)
     val (probe, read, total) =
       SnapshotTable.scanPartitionRange(spark, path, res.version,
         0L, 99L)
@@ -494,7 +532,7 @@ class PartitionedTableSpec extends SparkSpec {
     assert(scan.count() === 400 - 40)
     assert(scan.filter(col("v") % 20 === 0).count() === 0,
       "the rewrite resurrected MOR-deleted rows")
-    assert(v3.partValues.get.length === v3.files.length)
+    assert(v3.partKeys.get.longs.length === v3.files.length)
     // row-preserving in LOGICAL content: empty change feed
     assert(SnapshotTable.changes(spark, path, 2, r.version).count()
       === 0)

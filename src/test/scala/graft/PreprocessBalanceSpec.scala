@@ -90,8 +90,9 @@ class PreprocessBalanceSpec extends SparkSpec {
     val cold = jobsOf { root = Preprocess.run(spark, glob, opts).catalogRoot }
     val rerun = jobsOf(Preprocess.run(spark, glob, opts))
     assert(cold.size <= 8, cold)
-    // 25 and 22 jobs when the items were assembled by DataFrame joins
-    assert(rerun.size <= 22, rerun)
+    // 25 and 22 jobs when the items were assembled by DataFrame joins;
+    // a re-run writes no stored item back (its catalog write job is empty)
+    assert(rerun.size <= 9, rerun)
     (cold ++ rerun).foreach(d => assert(PreprocessLabels(d), d))
 
     val ingest = jobsOf(Ingest.run(spark, root,

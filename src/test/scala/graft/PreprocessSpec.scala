@@ -145,6 +145,26 @@ class PreprocessSpec extends SparkSpec {
     assert(secondItems === firstItems)
   }
 
+  test("re-run writes only new STAC items: stored item files stay " +
+    "untouched") {
+    val (work, _, opts) = freshRun()
+    // day 1 alone, then both days: the second run adds one item
+    val dir1 = Files.createDirectories(work.resolve("day1"))
+    Files.copy(work.resolve("input/forecast_00.nc"),
+      dir1.resolve("forecast_00.nc"))
+    val first = Preprocess.run(spark, s"$dir1/*.nc", opts)
+    val stored = Files.walk(Paths.get(first.catalogRoot)).iterator().asScala
+      .filter(p => Files.isRegularFile(p) &&
+        p.getFileName.toString.startsWith("forecast_init_")).toSeq
+    assert(stored.length === 1)
+    backdate(stored)
+    val second = Preprocess.run(spark, s"${work.resolve("input")}/*.nc", opts)
+    assert(first.nItems === 1 && second.nItems === 2)
+    stored.foreach(p =>
+      assert(Files.getLastModifiedTime(p).toMillis === 0L, s"$p rewritten"))
+    assert(StacJsonSink.readItems(spark, second.catalogRoot).count() === 2)
+  }
+
   test("config drift aborts the run before any work (J5)") {
     val (_, glob, opts) = freshRun()
     Preprocess.run(spark, glob, opts)
@@ -278,6 +298,28 @@ class PreprocessSpec extends SparkSpec {
     assert(md5Tree(root) === golden)
     Preprocess.run(spark, glob, opts)
     assert(md5Tree(root) === golden)
+  }
+
+  test("F8: with a file server URL, new items' asset hrefs and the " +
+    "promoted collection thumbnail point at the server") {
+    val (_, glob, opts0) = freshRun(prefix = "graft-pre-href")
+    val server = "https://files.example.org/data"
+    val opts = opts0.copy(fileServerUrl = Some(server))
+    val res = Preprocess.run(spark, glob, opts)
+    val assets = StacJsonSink.readItems(spark, res.catalogRoot).collect()
+      .toSeq.flatMap(_.assets)
+    assert(assets.length === 10) // 2 items × (netcdf + thumbnail + 3 COGs)
+    // the rewrite changes the published href only: each asset is still
+    // sized from the local file the href's path names
+    assets.foreach { a =>
+      assert(a.href.startsWith(server + "/"), a.href)
+      val local = Paths.get(opts.dataPath, a.href.stripPrefix(server + "/"))
+      assert(Files.exists(local) && a.size === Files.size(local), a.href)
+    }
+    val coll = StacJsonSink.readCollections(spark, res.catalogRoot)
+      .collect().find(_.id == "sic_north").get
+    assert(coll.assets.map(_.href) === Seq(server +
+      "/cogs/sic_north/2025-01-01/forecast_init_2025-01-01T00-00-00Z.jpg"))
   }
 
   test("W3: the collection thumbnail is elected among the run's own " +

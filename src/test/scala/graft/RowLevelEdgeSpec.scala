@@ -101,12 +101,12 @@ class RowLevelEdgeSpec extends SparkSpec {
     val ver = SnapshotTable.readVersion(spark, dst,
       SnapshotTable.latestVersion(dst))
     // the capped pool rolled MULTIPLE files for at least one value
-    val perValue = ver.partValues.get.groupBy(identity)
+    val perValue = ver.partKeys.get.longs.groupBy(identity)
       .view.mapValues(_.size).toMap
     assert(perValue.exists(_._2 > 1),
       s"expected eviction to roll extra files per value: $perValue")
     // partition purity: every file holds exactly its recorded value
-    ver.files.zip(ver.partValues.get).foreach { case (f, pv) =>
+    ver.files.zip(ver.partKeys.get.longs).foreach { case (f, pv) =>
       val distinct = spark.read.parquet(f).select("p").distinct().collect()
       assert(distinct.length === 1 && distinct.head.getLong(0) === pv,
         s"file $f is not partition-pure for value $pv")

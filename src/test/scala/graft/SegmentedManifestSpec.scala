@@ -109,6 +109,53 @@ class SegmentedManifestSpec extends SparkSpec {
     }
   }
 
+  test("a single-BIGINT spec commits per-file part_keys and no long " +
+      "part_values, in inline and in segmented manifests") {
+    import spark.implicits._
+    val spec = SnapshotTable.PartSpec("p", "truncate", 10L)
+    val data = (0L until 40L).map(i => (i, i * 2)).toDF("p", "v")
+    def noLongForm(json: String): Unit = {
+      assert(!json.contains("\"part_values\"") &&
+        !json.contains("\"part_source\"") &&
+        !json.contains("\"part_transform\"") &&
+        !json.contains("\"part_param\""), json)
+    }
+    // inline: the header carries the spec and the tuples
+    val inline = freshPath()
+    SnapshotTable.appendPartitioned(data, inline, spec)
+    val h1 = headerText(inline, 1)
+    noLongForm(h1)
+    assert(h1.contains("\"part_sources\":[\"p\"]") &&
+      h1.contains("\"part_dtypes\":[\"long\"]") &&
+      h1.contains("\"part_keys\":["), h1)
+    val v1 = SnapshotTable.readVersion(spark, inline, 1)
+    assert(v1.segRefs.isEmpty)
+    assert(v1.partKeys.get.valueDtypes === IndexedSeq("long"))
+    assert(v1.partKeys.get.longs.sorted === Seq(0L, 1L, 2L, 3L))
+    // segmented: the header carries the spec, each segment the tuples
+    withSegConf(2) {
+      val seg = freshPath()
+      SnapshotTable.appendPartitioned(data, seg, spec)
+      val h = headerText(seg, 1)
+      noLongForm(h)
+      assert(h.contains("\"part_sources\":[\"p\"]") &&
+        !h.contains("\"part_keys\""), h)
+      val segs = segNames(seg)
+      assert(segs.nonEmpty)
+      segs.foreach { n =>
+        val js = Files.readString(Paths.get(seg, "log", n))
+        noLongForm(js)
+        assert(js.contains("\"part_keys\":["), js)
+      }
+      val sv = SnapshotTable.readVersion(spark, seg, 1)
+      assert(sv.segRefs.exists(_.nonEmpty))
+      assert(sv.partKeys.get.longs.sorted === Seq(0L, 1L, 2L, 3L))
+      val (probe, read, total) =
+        SnapshotTable.scanPartitionRange(spark, seg, 1, 10L, 19L)
+      assert(read === 1 && total === 4 && probe.count() === 10)
+    }
+  }
+
   test("hidden-partitioned + typed-stats table stays fully functional " +
       "segmented: partition pruning, typed pruning, REPLACE WHERE") {
     withSegConf(3) {
@@ -121,7 +168,7 @@ class SegmentedManifestSpec extends SparkSpec {
         statsCol = Some("k"), statsCols = Seq("name"))
       val v1 = SnapshotTable.readVersion(spark, path, 1)
       assert(v1.segRefs.exists(_.nonEmpty))
-      assert(v1.partValues.get.length === v1.files.length)
+      assert(v1.partKeys.get.longs.length === v1.files.length)
       assert(v1.colStats.head.mins.length === v1.files.length)
       val t = spark.read.format("graft_table").option("path", path).load()
       assert(t.filter(col("p") === 3).count() === 50)

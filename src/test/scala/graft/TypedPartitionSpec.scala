@@ -59,8 +59,9 @@ class TypedPartitionSpec extends SparkSpec {
 
     val ver = SnapshotTable.readVersion(spark, path, 1)
     assert(ver.part === Some(spec))
-    assert(ver.partValues.isEmpty, "typed spec must not store longs")
     val pk = ver.partKeys.get
+    assert(pk.valueDtypes === spec.fields.map(_.valueDtype),
+      "one encoded key per field, in each field's value dtype")
     assert(pk.nFiles === ver.files.length && pk.nFields === 2)
 
     // partition purity on BOTH dimensions, file by file, and the
@@ -205,7 +206,7 @@ class TypedPartitionSpec extends SparkSpec {
              concat('f', id % 5), id FROM range(300)""")
     val p = s"$root/db/tp"
     val v1 = SnapshotTable.readVersion(spark, p, 1)
-    assert(v1.part.exists(sp => !sp.isLegacy && sp.fields.map(_.transform)
+    assert(v1.part.exists(sp => !sp.singleLong && sp.fields.map(_.transform)
       === Seq("days", "bucket")))
     assert(v1.partKeys.exists(_.nFiles == v1.files.length))
 
@@ -342,7 +343,7 @@ class TypedPartitionSpec extends SparkSpec {
     val p = s"$root/db/tsink"
     val ver = SnapshotTable.readVersion(spark, p,
       SnapshotTable.latestVersion(p))
-    assert(ver.part.exists(!_.isLegacy))
+    assert(ver.part.exists(!_.singleLong))
     val pk = ver.partKeys.get
     assert(pk.nFiles === ver.files.length)
     // purity: each streamed file holds one (day, user) tuple matching
@@ -480,7 +481,7 @@ class TypedPartitionSpec extends SparkSpec {
     // deleting EVERY remaining day routes to the zero-file truncate
     spark.sql("DROP TABLE graft_tp.db.dd")
 
-    // legacy identity specs take the same fast path
+    // single-BIGINT identity specs take the same fast path
     spark.sql("""CREATE TABLE graft_tp.db.li (k BIGINT, v BIGINT)
       PARTITIONED BY (k)""")
     spark.sql("INSERT INTO graft_tp.db.li SELECT id % 5, id " +
@@ -695,7 +696,7 @@ class TypedPartitionSpec extends SparkSpec {
     // an aligned tile equals the px/py box
     assert(nz ===
       df.filter(col("px") <= 63 && col("py") <= 63).count())
-    // legacy single-LONG specs take the same path
+    // single-BIGINT specs take the same path
     val lp = freshPath()
     val ldf = (0 until 1000).map { i =>
       (i.toLong % 4, i.toLong, (i.toLong * 2654435761L) % 1024)
@@ -706,7 +707,7 @@ class TypedPartitionSpec extends SparkSpec {
     assert(lr.filesAfter > 0)
     assert(scanPath(lp).count() === 1000)
     assert(SnapshotTable.readVersion(spark, lp, lr.version)
-      .partValues.get.toSet === Set(0L, 1L, 2L, 3L))
+      .partKeys.get.longs.toSet === Set(0L, 1L, 2L, 3L))
   }
 
   test("mergePartitioned on a TYPED days×bucket spec (API path, r20): " +
@@ -781,5 +782,41 @@ class TypedPartitionSpec extends SparkSpec {
         Seq(("userXXX", 0L)).toDF("name", "v"), "v")
     }
     assert(e.getMessage.contains("bloom"))
+  }
+
+  test("materializeSchema rewrites a multi-column typed layout " +
+      "partition-pure after a rename") {
+    import spark.implicits._
+    val path = freshPath()
+    val spec = PartSpec(Seq(
+      PartField("d", "days", 0L, "date"),
+      PartField("tag", "bucket", 4L, "string")))
+    val df = (0L until 200L).map { i =>
+      (i, s"2024-03-${(i % 4) + 10}", s"tag-${i % 7}")
+    }.toDF("v", "ds", "tag")
+      .withColumn("d", to_date(col("ds"))).drop("ds")
+    SnapshotTable.appendPartitioned(df, path, spec)
+    SnapshotTable.renameColumn(spark, path, "v", "val")
+    val res = SnapshotTable.materializeSchema(spark, path)
+    val ver = SnapshotTable.readVersion(spark, path, res.version)
+    assert(!ver.needsResolve && ver.part === Some(spec))
+    val pk = ver.partKeys.get
+    assert(pk.nFiles === ver.files.length)
+    ver.files.zipWithIndex.foreach { case (f, i) =>
+      val tuples = spark.read.parquet(f)
+        .select(datediff(col("d"), to_date(lit("1970-01-01"))), col("tag"))
+        .collect().map(r => IndexedSeq(
+          spec.fields.head.encodeKey(
+            spec.fields.head.applyKey(r.getInt(0).toLong)),
+          spec.fields(1).encodeKey(spec.fields(1).applyKey(r.getString(1)))))
+        .distinct
+      assert(tuples.toSeq === Seq(pk.row(i)), s"file $f is not tuple-pure")
+    }
+    val t = scanPath(path)
+    assert(t.count() === 200 && t.columns.contains("val"))
+    assert(t.agg(sum("val")).head.getLong(0) === (0L until 200L).sum)
+    val (n, sc) = ScanMetrics.rowCount(
+      t.filter(col("d") === lit("2024-03-11").cast("date")))
+    assert(n === 50 && sc.filesPlanned < sc.filesTotal)
   }
 }
