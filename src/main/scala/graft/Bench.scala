@@ -245,18 +245,20 @@ object Bench {
     // overwriting the working file), falling back to the newest
     // BENCH_r*.json wrapper tail when git or the sidecar is unavailable.
     // Ratio-gated (≥1.25× raw and canary-normalized, prev ≥0.2 s) to
-    // keep noise-scale wobble out.
-    val dirs = Seq(new java.io.File("."), new java.io.File("/root/repo"))
-    val committedFull: Option[(String, String)] = dirs.flatMap { d =>
-      try {
+    // keep noise-scale wobble out. Baselines and sidecars come from the
+    // working directory only: a run from an exported copy (no .git) reads
+    // and writes that copy, never another checkout.
+    val cwd = new java.io.File(".")
+    val committedFull: Option[(String, String)] =
+      if (!new java.io.File(cwd, ".git").exists()) None
+      else try {
         val txt = scala.sys.process.Process(
-          Seq("git", "-C", d.getPath, "show", "HEAD:bench_full.json")).!!
+          Seq("git", "-C", cwd.getPath, "show", "HEAD:bench_full.json")).!!
         if (txt.contains("\"queries\"")) Some("bench_full.json@HEAD" -> txt)
         else None
       } catch { case _: Exception => None }
-    }.headOption
     val prev = committedFull.orElse {
-      dirs.flatMap(d => Option(d.listFiles()).toSeq.flatten)
+      Option(cwd.listFiles()).toSeq.flatten
         .filter(f => f.getName.matches("BENCH_r\\d+\\.json"))
         .sortBy(_.getName).lastOption
         .map(f => f.getName -> java.nio.file.Files.readString(f.toPath))
@@ -275,8 +277,7 @@ object Bench {
     // direct `queries` access reads bench_full.json instead;
     // bench_history.jsonl accumulates one line per run for trend tools.
     try {
-      val dir = dirs.find(d => new java.io.File(d, ".git").exists())
-        .map(_.toPath).getOrElse(java.nio.file.Path.of("."))
+      val dir = cwd.toPath
       val fullPath = dir.resolve("bench_full.json")
       val existing =
         if (java.nio.file.Files.exists(fullPath))

@@ -10,8 +10,9 @@ import org.apache.spark.sql.functions._
   * similarity alone under-merges: A~B and B~C must land A, B, C in one
   * dup cluster even when A~C was never a candidate pair).
   *
-  * Each round is two hash shuffles (neighbor-min aggregation + label
-  * join) and converges in O(component diameter) rounds. Near-dup
+  * Each round is one hash shuffle (a vertex's own row and its
+  * neighbours' label messages meet in one grouped min, Pregel-style)
+  * and converges in O(component diameter) rounds. Near-dup
   * clusters are shallow (diameter a handful), which makes propagation
   * the right tool here; for adversarial web-scale graphs with long
   * chains, [[runStarContraction]] implements the two-phase
@@ -88,40 +89,43 @@ object ConnectedComponents {
     */
   private def propagate(edges: DataFrame, maxIter: Int,
                         numPartitions: Int): Option[DataFrame] = {
-    // partitioned by DST — the key the per-round neighbor-min join uses
-    // — so the edge relation is shuffled ONCE here instead of once per
-    // round (r20 partitioned by src and re-exchanged every iteration)
-    val sym = edges.select(col("src"), col("dst"))
+    // One row per vertex: (v, distinct neighbour list, label). Round 1 is
+    // folded into initialization: label(v) = min(v, N(v)) is exactly what
+    // one propagation round over identity labels computes. On the shallow
+    // star-shaped clusters that dominate dedup graphs this IS the
+    // fixpoint, leaving a single detection round.
+    var state = edges.select(col("src"), col("dst"))
       .unionByName(edges.select(col("dst").as("src"), col("src").as("dst")))
-      .distinct().repartition(numPartitions, col("dst")).persist()
-    // round 1 folded into initialization: label(v) = min(v, N(v)) is
-    // exactly what one propagation round over identity labels computes,
-    // and the symmetric edge list is already grouped by dst, so this is
-    // one exchange-free aggregate instead of a join+agg+join round. On
-    // the shallow star-shaped clusters that dominate dedup graphs this
-    // IS the fixpoint, leaving a single detection round.
-    var labels = sym.groupBy(col("dst"))
-      .agg(least(col("dst"), min(col("src"))).as("label"))
-      .select(col("dst").as("node"), col("label"))
+      .repartition(numPartitions, col("src"))
+      .groupBy(col("src").as("v"))
+      .agg(array_distinct(collect_list(col("dst"))).as("nbrs"))
+      .withColumn("label", least(col("v"), array_min(col("nbrs"))))
       .localCheckpoint()
+    val noNbrs = lit(null).cast(state.schema("nbrs").dataType)
+    val noLabel = lit(null).cast(state.schema("label").dataType)
     var changed = 1L
     var i = 0
     while (changed > 0 && i < maxIter) {
-      val nbrMin = sym
-        .join(labels.select(col("node").as("dst"), col("label")), "dst")
-        .groupBy(col("src")).agg(min(col("label")).as("nbr_label"))
-      val next = labels
-        .join(nbrMin.withColumnRenamed("src", "node"), Seq("node"), "left")
-        .select(col("node"), col("label"),
-          least(col("label"), coalesce(col("nbr_label"), col("label")))
-            .as("next_label"))
+      // every vertex sends its label to its neighbours; its own row
+      // carries the neighbour list and the old label into the same
+      // aggregate, so a round is one shuffle
+      val own = state.select(col("v"), col("nbrs"), col("label"),
+        col("label").as("old"))
+      val msgs = state.select(explode(col("nbrs")).as("v"), noNbrs.as("nbrs"),
+        col("label"), noLabel.as("old"))
+      state = own.unionByName(msgs)
+        .repartition(numPartitions, col("v"))
+        .groupBy(col("v"))
+        .agg(flatten(collect_list(col("nbrs"))).as("nbrs"),
+          min(col("label")).as("label"), min(col("old")).as("old"))
         .localCheckpoint()
-      changed = next.filter(col("next_label") < col("label")).count()
-      labels = next.select(col("node"), col("next_label").as("label"))
+      // a one-stage count over the checkpoint: Dataset.count plans an
+      // aggregate exchange, one more job per round
+      changed = state.filter(col("label") < col("old")).rdd.count()
       i += 1
     }
-    sym.unpersist()
-    if (changed == 0) Some(labels.withColumnRenamed("label", "component"))
+    if (changed == 0)
+      Some(state.select(col("v").as("node"), col("label").as("component")))
     else None
   }
 

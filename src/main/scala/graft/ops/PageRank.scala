@@ -3,9 +3,8 @@ package graft.ops
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Fixed-iteration PageRank over an edge DataFrame — the iterative
-  * join-aggregate workload (one O(E) shuffle per iteration), expressed
-  * so the result is EXACTLY reproducible by any SQL engine:
+/** Fixed-iteration PageRank over an edge DataFrame, expressed so the
+  * result is EXACTLY reproducible by any SQL engine:
   *
   *   pr_0(v)    = scale
   *   pr_{i+1}(v) = base + (num · Σ_{u→v} (pr_i(u) div d(u))) div den
@@ -13,16 +12,20 @@ import org.apache.spark.sql.functions._
   * with base = scale·(den−num)/den — all integer arithmetic, every
   * division truncating, so no float accumulation order can perturb the
   * hash (same discipline as the climatology query q110). num/den = the
-  * damping factor (17/20 = 0.85).
+  * damping factor (17/20 = 0.85). d(u) counts u's out-edges with
+  * duplicates.
   *
-  * Scale shape: contributions are edges ⋈ ranks ⋈ degrees on `src` —
-  * three relations pre-partitioned by the same key, one shuffle per
-  * iteration for the dst-side re-aggregation. Nothing is cached or
-  * checkpointed: the result is a lazy plan, and callers are expected to
-  * run ONE action on it (each further action recomputes every
-  * iteration). For hundreds of iterations the accumulated lineage needs
-  * `localCheckpoint` every ~20 steps. Nodes without in-edges keep the
-  * bare teleport term via the left join against the node set.
+  * Scale shape: a vertex-centric superstep (Pregel, Malewicz et al.,
+  * SIGMOD 2010) over one state relation `(v, dsts, pr)` — one row per
+  * vertex, `dsts` its out-neighbour list. Each round explodes `dsts`
+  * into `pr div size(dsts)` messages, unions them with every vertex's
+  * own row (which carries `dsts` forward) and combines both in ONE
+  * grouped aggregate: one shuffle per round, no joins. The new state
+  * goes behind an eager `localCheckpoint()`, so every round plans one
+  * exchange over a checkpoint scan instead of a plan that re-embeds
+  * the edge relation per round. Vertices without in-edges keep the
+  * bare teleport term through their own row; vertices without
+  * out-edges enter in round 1 through the messages they receive.
   */
 object PageRank {
 
@@ -31,36 +34,21 @@ object PageRank {
     require(iterations >= 1 && num > 0 && den > num,
       "need iterations >= 1 and a damping fraction num/den < 1")
     val base = scale * (den - num) / den
-    // One lazy chained plan for a bounded iteration count: the unrolled
-    // plan re-embeds the edge/degree/node subtrees per round, but they
-    // canonicalize equal, so exchange reuse computes each once per
-    // action — measured FASTER at sf0.1 (3.0 s) than both an eager
-    // per-round localCheckpoint loop (4.0 s: per-job scheduling plus
-    // the O(E) checkpoint materialization tax) and a persist() of the
-    // edge relation (5.6 s: the action's first stages race the
-    // unpopulated cache and each recomputes the edge distinct). For
-    // hundreds of iterations the lineage/planning cost takes over —
-    // switch to localCheckpoint every ~20 rounds there.
-    val deg = edges.groupBy("src").agg(count(lit(1)).as("d"))
-    // one distinct over the unioned endpoints (previously three:
-    // a distinct per side plus a distinct over their union)
-    val nodes = edges.select(col("src").as("v"))
-      .unionAll(edges.select(col("dst").as("v"))).distinct()
-    var ranks = nodes.withColumn("pr", lit(scale))
+    // collect_list keeps duplicate edges, so size(dsts) = d(u)
+    var state = edges.groupBy(col("src").as("v"))
+      .agg(collect_list(col("dst")).as("dsts"))
+      .withColumn("pr", lit(scale))
+    val noDsts = lit(null).cast(state.schema("dsts").dataType)
     for (_ <- 0 until iterations) {
-      // fold the static degree into the rank side first (two small
-      // same-key relations), so the O(E) edge relation joins ONCE per
-      // iteration instead of twice — pr div d commutes with the fan-out
-      val rankd = ranks.withColumnRenamed("v", "src").join(deg, "src")
-        .select(col("src"), expr("pr div d").as("c"))
-      val contribs = edges.join(rankd, "src")
-        .groupBy(col("dst").as("v")).agg(sum("c").as("s"))
-      ranks = nodes.join(contribs, Seq("v"), "left")
-        .select(col("v"),
-          (lit(base) + expr(s"($num * coalesce(s, 0L)) div $den")).as("pr"))
+      val own = state.select(col("v"), col("dsts"), lit(0L).as("c"))
+      val msgs = state.select(explode(col("dsts")).as("v"), noDsts.as("dsts"),
+        expr("pr div size(dsts)").as("c"))
+      state = own.unionByName(msgs).groupBy(col("v"))
+        .agg(flatten(collect_list(col("dsts"))).as("dsts"), sum("c").as("s"))
+        .select(col("v"), col("dsts"),
+          (lit(base) + expr(s"($num * s) div $den")).as("pr"))
+        .localCheckpoint()
     }
-    // a lazy plan, not materialized ranks: callers run one action on
-    // it; one that needs several should persist or checkpoint it first
-    ranks
+    state.select(col("v"), col("pr"))
   }
 }

@@ -211,12 +211,14 @@ object Preprocess {
 
       // J2 get-or-create: the new ids already exclude the collection's
       // stored ones, so only the new items are written — stored item
-      // files stay as they are
+      // files stay as they are, and a run with no new item submits no
+      // item-write job
       sc.setJobDescription("preprocess: catalog write")
-      StacJsonSink.write(catalogRoot,
-        StacCatalog(opts.catalogName, s"${opts.catalogName} STAC catalog",
-          collections.map(_.id)),
-        collections, newItems.toDS())
+      val catalog = StacCatalog(opts.catalogName,
+        s"${opts.catalogName} STAC catalog", collections.map(_.id))
+      if (newItems.isEmpty)
+        StacJsonSink.writeSkeleton(catalogRoot, catalog, collections)
+      else StacJsonSink.write(catalogRoot, catalog, collections, newItems.toDS())
       tidy.unpersist()
       Result(catalogRoot, nStored + newItems.size, nSlices)
     }

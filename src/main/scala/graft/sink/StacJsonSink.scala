@@ -30,6 +30,21 @@ object StacJsonSink {
 
   def write(root: String, catalog: StacCatalog,
             collections: Seq[StacCollection], items: Dataset[StacItem]): Unit = {
+    writeSkeleton(root, catalog, collections)
+    // A named serializable class, not a lambda: Spark's ClosureCleaner
+    // resolves indylambda capturing-class bytes via classloader resource
+    // lookup, which intermittently fails under repeated invocation on a
+    // plain-classpath JVM ("capturingClassReader is null"); a top-level
+    // Function1 class sidesteps that path entirely.
+    items.foreachPartition(new ItemPartitionWriter(root))
+  }
+
+  /** The part of [[write]] that needs no Spark job: catalog.json and
+    * each collection.json, no item. For a run with no new item, which
+    * would otherwise submit a job over an empty Dataset.
+    */
+  def writeSkeleton(root: String, catalog: StacCatalog,
+                    collections: Seq[StacCollection]): Unit = {
     Files.createDirectories(Paths.get(root))
     Files.writeString(Paths.get(root, "catalog.json"), catalogJson(catalog))
     collections.foreach { c =>
@@ -37,12 +52,6 @@ object StacJsonSink {
       Files.createDirectories(dir)
       Files.writeString(dir.resolve("collection.json"), collectionJson(c))
     }
-    // A named serializable class, not a lambda: Spark's ClosureCleaner
-    // resolves indylambda capturing-class bytes via classloader resource
-    // lookup, which intermittently fails under repeated invocation on a
-    // plain-classpath JVM ("capturingClassReader is null"); a top-level
-    // Function1 class sidesteps that path entirely.
-    items.foreachPartition(new ItemPartitionWriter(root))
   }
 
   private final class ItemPartitionWriter(root: String)

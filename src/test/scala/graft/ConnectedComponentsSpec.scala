@@ -1,10 +1,12 @@
 package graft
 
+import org.apache.spark.sql.types.IntegerType
 import graft.ops.ConnectedComponents
 
 /** Min-label propagation on known graphs: chains (the case pairwise
-  * dedup misses), separate components, and a star — every node must
-  * land on its component's minimum id.
+  * dedup misses), separate components, a star, self-loops and repeated
+  * edges — every node must land on its component's minimum id, in the
+  * input's vertex type.
   */
 class ConnectedComponentsSpec extends SparkSpec {
   import spark.implicits._
@@ -22,6 +24,29 @@ class ConnectedComponentsSpec extends SparkSpec {
       20L -> 20L, 21L -> 20L,
       30L -> 30L, 31L -> 30L, 32L -> 30L, 33L -> 30L)
     assert(got === expected)
+  }
+
+  test("self-loops, duplicate and reversed edges change nothing") {
+    val edges = Seq(
+      (7L, 7L),                          // a lone self-loop: {7} -> 7
+      (5L, 3L), (5L, 3L), (3L, 5L),      // duplicate and reversed
+      (3L, 9L), (9L, 9L)                 // a self-loop inside a component
+    ).toDF("src", "dst")
+    val expected = Map(7L -> 7L, 3L -> 3L, 5L -> 3L, 9L -> 3L)
+    assert(ConnectedComponents.run(edges).as[(Long, Long)].collect().toMap
+      === expected)
+    val (df, algo) = ConnectedComponents.componentsChosen(edges)
+    assert(algo === "propagation")
+    assert(df.as[(Long, Long)].collect().toMap === expected)
+  }
+
+  test("Int vertex ids come back as Int") {
+    val edges = Seq((4, 2), (2, 6), (8, 9)).toDF("src", "dst")
+    val out = ConnectedComponents.components(edges)
+    assert(out.schema.map(f => f.name -> f.dataType) ===
+      Seq("node" -> IntegerType, "component" -> IntegerType))
+    assert(out.as[(Int, Int)].collect().toMap ===
+      Map(2 -> 2, 4 -> 2, 6 -> 2, 8 -> 8, 9 -> 8))
   }
 
   test("long path converges within the diameter bound") {

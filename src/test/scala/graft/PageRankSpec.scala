@@ -1,11 +1,14 @@
 package graft
 
+import org.apache.spark.sql.types.{IntegerType, LongType}
 import graft.ops.PageRank
 
 /** Fixed-iteration integer PageRank: hand-computed two-iteration
   * values on a 3-node graph (including a dangling node and a node
-  * whose rank is pure teleport + one in-edge), plus determinism across
-  * partitionings. Cross-engine recurrence parity is q115's oracle.
+  * whose rank is pure teleport + one in-edge), a multigraph against a
+  * plain-Scala reference of the recurrence, the vertex type kept, plus
+  * determinism across partitionings. Cross-engine recurrence parity is
+  * q115's oracle.
   */
 class PageRankSpec extends SparkSpec {
 
@@ -42,6 +45,43 @@ class PageRankSpec extends SparkSpec {
     val many = PageRank.run(pairs.toDF("src", "dst").repartition(13), 3)
       .as[(Long, Long)].collect().toSorted
     assert(one.toSeq === many.toSeq)
+  }
+
+  /** The integer recurrence in plain Scala: every node starts at 1e6,
+    * d(u) counts u's out-edges with duplicates, and a node without
+    * in-edges gets the bare teleport term.
+    */
+  private def reference(edges: Seq[(Long, Long)], iterations: Int): Map[Long, Long] = {
+    val nodes = edges.flatMap { case (a, b) => Seq(a, b) }.distinct
+    val deg = edges.groupMapReduce(_._1)(_ => 1L)(_ + _)
+    var pr = nodes.map(_ -> 1000000L).toMap
+    for (_ <- 1 to iterations) {
+      val s = edges.groupMapReduce(_._2) { case (u, _) => pr(u) / deg(u) }(_ + _)
+      pr = nodes.map(v => v -> (150000L + 17L * s.getOrElse(v, 0L) / 20)).toMap
+    }
+    pr
+  }
+
+  test("a directed multigraph matches the plain-Scala recurrence for 1-4 iterations") {
+    val edges = Seq(
+      (1L, 2L), (1L, 2L), // duplicate edge: d(1) = 3
+      (1L, 3L), (2L, 3L), (3L, 1L),
+      (2L, 2L),           // self-loop
+      (4L, 1L),           // 4: src only
+      (3L, 5L))           // 5: dst only
+    val df = edges.toDF("src", "dst")
+    for (k <- 1 to 4)
+      assert(PageRank.run(df, k).as[(Long, Long)].collect().toMap ===
+        reference(edges, k), s"iteration $k")
+  }
+
+  test("Int vertex ids come back as Int") {
+    val edges = Seq((1, 2), (2, 1), (2, 3)).toDF("src", "dst")
+    val out = PageRank.run(edges, 2)
+    assert(out.schema.map(f => f.name -> f.dataType) ===
+      Seq("v" -> IntegerType, "pr" -> LongType))
+    assert(out.as[(Int, Long)].collect().toMap.map { case (v, p) => v.toLong -> p } ===
+      reference(Seq((1L, 2L), (2L, 1L), (2L, 3L)), 2))
   }
 
   private implicit class SortOps(a: Array[(Long, Long)]) {

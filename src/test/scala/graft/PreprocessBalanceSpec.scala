@@ -3,7 +3,7 @@ package graft
 import java.nio.file.Files
 import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
+import org.apache.spark.scheduler.{SparkListener,
   SparkListenerStageCompleted, StageInfo}
 import graft.pipeline.{ConfigMismatchException, Ingest, Preprocess}
 import graft.source.NetCdfFixture
@@ -43,37 +43,12 @@ class PreprocessBalanceSpec extends SparkSpec {
   private val Caller = "balance: caller"
 
   /** The descriptions of the jobs `body` submits, run under the
-    * description [[Caller]]. Listener events arrive asynchronously but
-    * in order, so a marker job after `body` closes the list exactly.
+    * description [[Caller]], which `body` must leave in place.
     */
-  private def jobsOf(body: => Unit): Seq[String] = {
-    val sc = spark.sparkContext
-    val marker = "balance: marker"
-    val seen = new ConcurrentLinkedQueue[String]()
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        seen.add(Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse(""))
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setJobDescription(Caller)
-      body
-      assert(sc.getLocalProperty("spark.job.description") === Caller,
-        "the caller's job description is back")
-      sc.setJobDescription(marker)
-      sc.parallelize(Seq(1), 1).count()
-      val deadline = System.nanoTime() + 60L * 1000 * 1000 * 1000
-      while (!seen.contains(marker) && System.nanoTime() < deadline)
-        Thread.sleep(10)
-      val jobs = seen.asScala.toSeq
-      assert(jobs.contains(marker), "listener never saw the marker job")
-      jobs.takeWhile(_ != marker)
-    } finally {
-      sc.setJobDescription(null)
-      sc.removeSparkListener(listener)
-    }
+  private def callerJobs(body: => Unit): Seq[String] = jobsOf(Caller) {
+    body
+    assert(spark.sparkContext.getLocalProperty("spark.job.description") ===
+      Caller, "the caller's job description is back")
   }
 
   private val PreprocessLabels = Set("manifest", "output manifest",
@@ -87,15 +62,16 @@ class PreprocessBalanceSpec extends SparkSpec {
     val opts = Preprocess.Options(
       name = "sic_north", dataPath = work.resolve("data").toString)
     var root = ""
-    val cold = jobsOf { root = Preprocess.run(spark, glob, opts).catalogRoot }
-    val rerun = jobsOf(Preprocess.run(spark, glob, opts))
+    val cold = callerJobs { root = Preprocess.run(spark, glob, opts).catalogRoot }
+    val rerun = callerJobs(Preprocess.run(spark, glob, opts))
     assert(cold.size <= 8, cold)
     // 25 and 22 jobs when the items were assembled by DataFrame joins;
-    // a re-run writes no stored item back (its catalog write job is empty)
-    assert(rerun.size <= 9, rerun)
+    // a re-run has no new item, so it submits no catalog-write job
+    assert(rerun.size <= 8, rerun)
+    assert(!rerun.contains("preprocess: catalog write"), rerun)
     (cold ++ rerun).foreach(d => assert(PreprocessLabels(d), d))
 
-    val ingest = jobsOf(Ingest.run(spark, root,
+    val ingest = callerJobs(Ingest.run(spark, root,
       new Ingest.DryRunClient(Set.empty, Set.empty)))
     assert(ingest.nonEmpty)
     ingest.foreach(d => assert(IngestLabels(d), d))
@@ -107,9 +83,9 @@ class PreprocessBalanceSpec extends SparkSpec {
     val opts = Preprocess.Options(
       name = "sic_north", dataPath = work.resolve("data").toString)
     Preprocess.run(spark, glob, opts)
-    jobsOf(intercept[ConfigMismatchException](
+    callerJobs(intercept[ConfigMismatchException](
       Preprocess.run(spark, glob, opts.copy(forecastFrequency = "6hours"))))
-    jobsOf(intercept[Exception](Ingest.run(spark,
+    callerJobs(intercept[Exception](Ingest.run(spark,
       work.resolve("no-catalog").toString,
       new Ingest.DryRunClient(Set.empty, Set.empty))))
   }
