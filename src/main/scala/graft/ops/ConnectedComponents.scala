@@ -60,7 +60,9 @@ object ConnectedComponents {
                        propagationBudget: Int = 12): (DataFrame, String) = {
     val cached = edges.select(col("src"), col("dst")).persist()
     try {
-      val parts = numPartitions.getOrElse(derivePartitions(cached.count()))
+      // rdd.count fills the cache and counts in one job; Dataset.count
+      // runs the cache fill, a map stage and its result as three
+      val parts = numPartitions.getOrElse(derivePartitions(cached.rdd.count()))
       propagate(cached, propagationBudget, parts) match {
         case Some(labels) => (labels, "propagation")
         case None =>
@@ -71,14 +73,14 @@ object ConnectedComponents {
 
   /** @param edges undirected edge list with `src`/`dst` columns
     * @param numPartitions parallelism of the per-round shuffles; derived
-    *   from the edge count (one `count()` over `edges`) when None
+    *   from the edge count (one `rdd.count()` over `edges`) when None
     * @return (node, component) — component = min node id reachable
     */
   def run(edges: DataFrame, maxIter: Int = 25,
           numPartitions: Option[Int] = None): DataFrame = {
     val cached = edges.select(col("src"), col("dst")).persist()
     try {
-      val parts = numPartitions.getOrElse(derivePartitions(cached.count()))
+      val parts = numPartitions.getOrElse(derivePartitions(cached.rdd.count()))
       propagate(cached, maxIter, parts).getOrElse(throw new IllegalStateException(
         s"label propagation not converged in $maxIter rounds"))
     } finally cached.unpersist()
@@ -149,7 +151,7 @@ object ConnectedComponents {
         least(col("src"), col("dst")).as("dst"))
       .distinct()
     val cached = edges.select(col("src"), col("dst")).persist()
-    val parts = numPartitions.getOrElse(derivePartitions(cached.count()))
+    val parts = numPartitions.getOrElse(derivePartitions(cached.rdd.count()))
     var e = canon(cached)
       .repartition(parts, col("src"))
       .localCheckpoint()

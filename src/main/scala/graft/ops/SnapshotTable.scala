@@ -514,13 +514,15 @@ object SnapshotTable {
     * `log/schema-e{E}.json`); `fileEpochs` — per file, the epoch it was
     * written under; `droppedIds` — ids dropped since the table was last
     * physically uniform. Absent on pre-upgrade tables (everything
-    * degrades to the name-based behavior).
+    * degrades to the name-based behavior). `blooms` — every declared
+    * bloom index in declaration order, one per column of the `bloomCol`
+    * list (manifest arrays `bloom_cols`/`bloom_expecteds`/`bloom_fpps`).
     */
   final case class Version(version: Long, files: Seq[String], rows: Long,
                            stats: Option[Stats] = None,
                            fileRows: Option[Seq[Long]] = None,
                            fileBytes: Option[Seq[Long]] = None,
-                           bloom: Option[BloomConf] = None,
+                           blooms: Seq[BloomConf] = Seq.empty,
                            txns: Map[String, Long] = Map.empty,
                            part: Option[PartSpec] = None,
                            committedMs: Long = 0L,
@@ -546,15 +548,7 @@ object SnapshotTable {
                            segRefs: Option[Seq[SegRef]] = None,
                            // per-file partition tuples: set exactly
                            // when `part` is, for every spec shape
-                           partKeys: Option[PartKeys] = None,
-                           // bloom indexes beyond the first: `bloom`
-                           // keeps the compact single-column encoding
-                           // (and every legacy path), extras are
-                           // additive — consumers use [[bloomConfs]]
-                           bloomsExtra: Seq[BloomConf] = Seq.empty) {
-
-    /** Every declared bloom index, primary first. */
-    def bloomConfs: Seq[BloomConf] = bloom.toSeq ++ bloomsExtra
+                           partKeys: Option[PartKeys] = None) {
 
     /** True when a raw name-based read of this version's files would
       * mis-merge: a rename or drop has happened since the table was
@@ -1084,21 +1078,21 @@ object SnapshotTable {
           Some(Stats(jStr("stats_col"),
             longs("stats_min").get, longs("stats_max").get))
       } else None
-    val bloom =
-      if (has("bloom_col"))
-        Some(BloomConf(jStr("bloom_col"), jLong("bloom_expected"),
-          if (has("bloom_fpp")) root.get("bloom_fpp").asDouble()
-          else 0.01))
-      else None
-    val bloomsExtra =
-      if (has("bloom_cols_extra")) {
-        val cols = strsOf("bloom_cols_extra")
-        val exps = longs("bloom_expecteds_extra").get
-        val fpps = {
-          val a = root.get("bloom_fpps_extra")
-          (0 until a.size).map(a.get(_).asDouble())
-        }
-        cols.indices.map(i => BloomConf(cols(i), exps(i), fpps(i)))
+    // the removed first-column-plus-extras encoding is never read as
+    // "no index": merges and probes would silently stop pruning
+    val oldBloomKeys = Seq("bloom_col", "bloom_cols_extra").filter(has)
+    if (oldBloomKeys.nonEmpty)
+      throw new IllegalStateException(
+        s"snapshot table $path v$v records its bloom indexes in the " +
+          s"removed first-column form (${oldBloomKeys.mkString("/")}) — " +
+          "re-create the table")
+    val blooms =
+      if (has("bloom_cols")) {
+        val cols = strsOf("bloom_cols")
+        val exps = longs("bloom_expecteds").get
+        val fpps = root.get("bloom_fpps")
+        cols.indices.map(i =>
+          BloomConf(cols(i), exps(i), fpps.get(i).asDouble()))
       } else Seq.empty[BloomConf]
     val txns =
       if (has("txn_writers"))
@@ -1195,7 +1189,7 @@ object SnapshotTable {
       jLong("rows"), stats,
       if (seg.isDefined) Some(cat(_.rows)) else longs("file_rows"),
       if (seg.isDefined) Some(cat(_.bytes)) else longs("file_bytes"),
-      bloom, txns, part,
+      blooms, txns, part,
       if (has("committed_ms")) jLong("committed_ms") else 0L,
       if (has("op")) jStr("op") else "",
       if (has("dv_files")) strsOf("dv_files") else Seq.empty,
@@ -1218,8 +1212,7 @@ object SnapshotTable {
             .zip(strsOf("schema_widened_types"))
         else Seq.empty,
       segRefs = seg.map(_._1),
-      partKeys = partKeys,
-      bloomsExtra = bloomsExtra)
+      partKeys = partKeys)
   }
 
   // ------------------------------------------------------------ commit
@@ -1268,7 +1261,10 @@ object SnapshotTable {
     */
   private def renderManifest(v: Long, files: Seq[String], rows: Seq[Long],
                              bytes: Seq[Long], stats: Option[Stats],
-                             bloom: Option[BloomConf],
+                             // NO default: a path that forgot the bloom
+                             // indexes would silently drop them from
+                             // the successor manifest
+                             blooms: Seq[BloomConf],
                              txns: Map[String, Long] = Map.empty,
                              part: Option[PartSpec] = None,
                              op: String = "",
@@ -1285,11 +1281,7 @@ object SnapshotTable {
                              // or O(Δ) commits silently degrade to
                              // O(table) inline rewrites at scale
                              seg: (String, Option[Version]),
-                             partKeys: Option[PartKeys] = None,
-                             // NO default: a path that forgot the
-                             // extra bloom indexes would silently
-                             // drop them from the successor manifest
-                             bloomsExtra: Seq[BloomConf]): String = {
+                             partKeys: Option[PartKeys] = None): String = {
     val (tpath, baseOpt) = seg
     // checked HERE so any commit path that forgot to thread the
     // tuples fails loudly at render, not as a silent unpartitioned
@@ -1301,12 +1293,12 @@ object SnapshotTable {
       (baseOpt.exists(_.segRefs.exists(_.nonEmpty)) ||
         files.length >= segThreshold)
     if (!segmented)
-      renderInline(v, files, rows, bytes, stats, bloom, txns, part,
-        op, dvFiles, dvRows, schema, colStats, partKeys, bloomsExtra)
+      renderInline(v, files, rows, bytes, stats, blooms, txns, part,
+        op, dvFiles, dvRows, schema, colStats, partKeys)
     else
       renderSegmented(tpath, baseOpt, v, files, rows, bytes, stats,
-        bloom, txns, part, op, dvFiles, dvRows, schema, colStats,
-        partKeys, bloomsExtra)
+        blooms, txns, part, op, dvFiles, dvRows, schema, colStats,
+        partKeys)
   }
 
   /** Spec-visible counter of append-shape identity-carry commits —
@@ -1325,14 +1317,13 @@ object SnapshotTable {
                               v: Long, files0: Seq[String],
                               rows0: Seq[Long], bytes0: Seq[Long],
                               stats0: Option[Stats],
-                              bloom: Option[BloomConf],
+                              blooms: Seq[BloomConf],
                               txns: Map[String, Long],
                               part: Option[PartSpec],
                               op: String, dvFiles: Seq[String],
                               dvRows: Long, schema: Option[SchemaMeta],
                               colStats0: Seq[ColStats],
-                              partKeys: Option[PartKeys] = None,
-                              bloomsExtra: Seq[BloomConf] = Seq.empty)
+                              partKeys: Option[PartKeys] = None)
       : String = {
     // EVERY positional array gets indexed per element below (carry
     // verification, fresh-segment extraction) — commit paths build
@@ -1687,19 +1678,7 @@ object SnapshotTable {
       "seg_drops" -> finalRefs.map(rf =>
         Json.quote(rf.drops.mkString(","))).mkString("[", ",", "]"))
     stats.foreach(st => fields += "stats_col" -> Json.quote(st.col))
-    bloom.foreach { bc =>
-      fields += "bloom_col" -> Json.quote(bc.col)
-      fields += "bloom_expected" -> bc.expectedPerFile.toString
-      fields += "bloom_fpp" -> bc.fpp.toString
-    }
-    if (bloomsExtra.nonEmpty) {
-      fields += "bloom_cols_extra" -> bloomsExtra
-        .map(b => Json.quote(b.col)).mkString("[", ",", "]")
-      fields += "bloom_expecteds_extra" -> bloomsExtra
-        .map(_.expectedPerFile).mkString("[", ",", "]")
-      fields += "bloom_fpps_extra" -> bloomsExtra
-        .map(_.fpp).mkString("[", ",", "]")
-    }
+    fields ++= bloomFields(blooms)
     if (txns.nonEmpty) {
       val ts = txns.toSeq.sortBy(_._1)
       fields += "txn_writers" -> ts.map(t => Json.quote(t._1))
@@ -1756,9 +1735,21 @@ object SnapshotTable {
     "part_dtypes" -> p.fields.map(f => Json.quote(f.dtype))
       .mkString("[", ",", "]"))
 
+  /** The bloom declaration's JSON fields — three parallel per-index
+    * arrays, shared by the inline and segmented forms; none when the
+    * table declares no index. */
+  private def bloomFields(blooms: Seq[BloomConf]): Seq[(String, String)] =
+    if (blooms.isEmpty) Seq.empty
+    else Seq(
+      "bloom_cols" -> blooms.map(b => Json.quote(b.col))
+        .mkString("[", ",", "]"),
+      "bloom_expecteds" -> blooms.map(_.expectedPerFile)
+        .mkString("[", ",", "]"),
+      "bloom_fpps" -> blooms.map(_.fpp).mkString("[", ",", "]"))
+
   private def renderInline(v: Long, files: Seq[String], rows: Seq[Long],
                            bytes: Seq[Long], stats: Option[Stats],
-                           bloom: Option[BloomConf],
+                           blooms: Seq[BloomConf],
                            txns: Map[String, Long] = Map.empty,
                            part: Option[PartSpec] = None,
                            op: String = "",
@@ -1766,8 +1757,7 @@ object SnapshotTable {
                            dvRows: Long = 0L,
                            schema: Option[SchemaMeta] = None,
                            colStats: Seq[ColStats],
-                           partKeys: Option[PartKeys] = None,
-                           bloomsExtra: Seq[BloomConf] = Seq.empty)
+                           partKeys: Option[PartKeys] = None)
       : String = {
     val fields = scala.collection.mutable.ArrayBuffer(
       "version" -> v.toString,
@@ -1785,19 +1775,7 @@ object SnapshotTable {
       fields += "stats_min" -> st.mins.mkString("[", ",", "]")
       fields += "stats_max" -> st.maxs.mkString("[", ",", "]")
     }
-    bloom.foreach { bc =>
-      fields += "bloom_col" -> Json.quote(bc.col)
-      fields += "bloom_expected" -> bc.expectedPerFile.toString
-      fields += "bloom_fpp" -> bc.fpp.toString
-    }
-    if (bloomsExtra.nonEmpty) {
-      fields += "bloom_cols_extra" -> bloomsExtra
-        .map(b => Json.quote(b.col)).mkString("[", ",", "]")
-      fields += "bloom_expecteds_extra" -> bloomsExtra
-        .map(_.expectedPerFile).mkString("[", ",", "]")
-      fields += "bloom_fpps_extra" -> bloomsExtra
-        .map(_.fpp).mkString("[", ",", "]")
-    }
+    fields ++= bloomFields(blooms)
     if (txns.nonEmpty) {
       // sorted for byte-deterministic manifests
       val ts = txns.toSeq.sortBy(_._1)
@@ -2008,29 +1986,27 @@ object SnapshotTable {
       perFile.map(_.getLong(3)).toSeq)
   }
 
-  /** Build and persist bloom-index rows for a batch's files (metadata
-    * beside the data, one JSON dir per batch; probes read the union
-    * and restrict to the manifest's file list).
-    */
   /** A bloom declaration names one column or a comma-separated LIST
-    * ('doc_id' / 'doc_id,url'): the first keeps the compact
-    * single-column manifest encoding (and every legacy path), the
-    * rest ride as [[Version.bloomsExtra]] — each column gets its own
-    * per-file filters, maintained by the same write paths.
+    * ('doc_id' / 'doc_id,url'), parsed to [[Version.blooms]] in
+    * declaration order — each column gets its own per-file filters,
+    * maintained by the same write paths. Empty = no declaration.
     */
-  private def splitBloomDecl(bloomCol: Option[String], expected: Long,
-                             fpp: Double)
-      : (Option[BloomConf], Seq[BloomConf]) = {
+  private def parseBloomDecl(bloomCol: Option[String], expected: Long,
+                             fpp: Double): Seq[BloomConf] = {
     val cols = bloomCol.toSeq
       .flatMap(_.split(',').map(_.trim).filter(_.nonEmpty))
     require(cols.distinct.length == cols.length,
       s"duplicate bloom columns in ${cols.mkString(", ")}")
-    (cols.headOption.map(BloomConf(_, expected, fpp)),
-      cols.drop(1).map(BloomConf(_, expected, fpp)))
+    cols.map(BloomConf(_, expected, fpp))
   }
 
-  private def writeBloomRows(spark: SparkSession, path: String,
-                             files: Seq[String], bc: BloomConf): Unit =
+  /** Build and persist bloom-index rows for a batch's files (metadata
+    * beside the data, one JSON dir per batch; probes read the union
+    * and restrict to the manifest's file list).
+    */
+  private[graft] def writeBloomRows(spark: SparkSession, path: String,
+                                    files: Seq[String], bc: BloomConf)
+      : Unit =
     BloomIndex.buildRows(spark, files, bc.col, bc.expectedPerFile,
         fpp = bc.fpp)
       .coalesce(1)
@@ -2253,12 +2229,11 @@ object SnapshotTable {
     val cs = computeColStats(spark, ver.files, specs)
     val v = prev + 1
     commitExclusive(path, v, renderManifest(v, ver.files, rowsOf(ver),
-      bytesOf(ver), ver.stats, ver.bloom, ver.txns, ver.part,
+      bytesOf(ver), ver.stats, ver.blooms, ver.txns, ver.part,
       op = "ANALYZE",
       dvFiles = ver.dvFiles, dvRows = ver.dvRows,
       schema = carryMeta(ver, ver.files.indices, 0), colStats = cs,
-      seg = path -> Some(ver), partKeys = ver.partKeys,
-      bloomsExtra = ver.bloomsExtra))
+      seg = path -> Some(ver), partKeys = ver.partKeys))
     v
   }
 
@@ -2318,10 +2293,8 @@ object SnapshotTable {
     // WRITTEN schema, not df's: what readers will actually observe
     val batchCols = spark.read.parquet(batch.files.head)
       .schema.fieldNames.toSeq
-    val (bloomConf, bloomExtraConfs) =
-      splitBloomDecl(bloomCol, bloomExpectedPerFile, bloomFpp)
-    (bloomConf.toSeq ++ bloomExtraConfs)
-      .foreach(writeBloomRows(spark, path, batch.files, _))
+    val decl = parseBloomDecl(bloomCol, bloomExpectedPerFile, bloomFpp)
+    decl.foreach(writeBloomRows(spark, path, batch.files, _))
     var attempts = 0
     while (true) {
       val prev = latestVersion(path)
@@ -2338,10 +2311,9 @@ object SnapshotTable {
           base.stats.exists(_.col == statsColEff.get),
         s"stats column changed mid-table (was ${base.stats.map(_.col)})")
       require(bloomCol.isEmpty || base.files.isEmpty ||
-          base.bloomConfs.map(_.col) ==
-            (bloomConf.toSeq ++ bloomExtraConfs).map(_.col),
+          base.blooms.map(_.col) == decl.map(_.col),
         s"bloom columns changed mid-table (was " +
-          s"${base.bloomConfs.map(_.col)}, got $bloomCol)")
+          s"${base.blooms.map(_.col)}, got $bloomCol)")
       val v = prev + 1
       val manifest = renderManifest(v,
         CatSeq.cat2(base.files, batch.files),
@@ -2354,16 +2326,13 @@ object SnapshotTable {
             CatSeq.cat2(base.stats.map(_.maxs).getOrElse(Seq.empty),
               batch.maxs))
         },
-        bloomConf.orElse(base.bloom),
+        if (decl.nonEmpty) decl else base.blooms,
         base.txns ++ txn.toMap, op = "APPEND",
         dvFiles = base.dvFiles, dvRows = base.dvRows,
         schema = appendMeta(base, path, batchCols, batch.files.length),
         colStats = colStatsWith(base, base.files.indices,
           retryCs(spark, base, batch.files, colSpecs, batchCs)),
-        seg = path -> Some(base),
-        bloomsExtra =
-          if (bloomConf.isDefined) bloomExtraConfs
-          else base.bloomsExtra)
+        seg = path -> Some(base))
       try { commitExclusive(path, v, manifest); return v }
       catch {
         case _: FileAlreadyExistsException =>
@@ -2427,12 +2396,10 @@ object SnapshotTable {
       case Some(cs) if cs.map(c => (c.col, c.dtype)) == colSpecs => cs
       case _ => computeColStats(spark, files, colSpecs)
     }
-    val (bloomConf, bloomExtraConfs) = splitBloomDecl(bloomCol, -1L, 0.01)
-    val bloomEff =
-      if (bloomConf.isDefined) bloomConf.toSeq ++ bloomExtraConfs
-      else preBase.bloomConfs
+    val decl = parseBloomDecl(bloomCol, -1L, 0.01)
     if (files.nonEmpty)
-      bloomEff.foreach(writeBloomRows(spark, path, files, _))
+      (if (decl.nonEmpty) decl else preBase.blooms)
+        .foreach(writeBloomRows(spark, path, files, _))
     var attempts = 0
     while (true) {
       val prev = latestVersion(path)
@@ -2463,7 +2430,7 @@ object SnapshotTable {
             statMinMax.get._1),
           CatSeq.cat2(base.stats.map(_.maxs).getOrElse(Seq.empty),
             statMinMax.get._2))),
-        bloomConf.orElse(base.bloom), base.txns ++ txn.toMap,
+        if (decl.nonEmpty) decl else base.blooms, base.txns ++ txn.toMap,
         part = part.map(_._1),
         op = op,
         dvFiles = base.dvFiles, dvRows = base.dvRows,
@@ -2473,10 +2440,7 @@ object SnapshotTable {
         seg = path -> Some(base),
         partKeys = part.map { case (sp, pk) =>
           extendParts(sp, base, base.files.indices, pk)
-        },
-        bloomsExtra =
-          if (bloomConf.isDefined) bloomExtraConfs
-          else base.bloomsExtra)
+        })
       try { commitExclusive(path, v, manifest); return v }
       catch {
         case _: FileAlreadyExistsException =>
@@ -2538,10 +2502,8 @@ object SnapshotTable {
       if (statsCols.isEmpty) Seq.empty
       else computeColStats(spark, batch.files,
         deriveColSpecs(spark, batch.files, statsCols))
-    val (bloomConf, bloomExtraConfs) =
-      splitBloomDecl(bloomCol, bloomExpectedPerFile, bloomFpp)
-    (bloomConf.toSeq ++ bloomExtraConfs)
-      .foreach(writeBloomRows(spark, path, batch.files, _))
+    val decl = parseBloomDecl(bloomCol, bloomExpectedPerFile, bloomFpp)
+    decl.foreach(writeBloomRows(spark, path, batch.files, _))
     var attempts = 0
     while (true) {
       val prev = latestVersion(path)
@@ -2577,9 +2539,9 @@ object SnapshotTable {
       val manifest = renderManifest(v, batch.files, batch.rows,
         batch.bytes,
         statsCol.map(c => Stats(c, batch.mins, batch.maxs)),
-        bloomConf, base.txns ++ txn.toMap, op = "OVERWRITE",
+        decl, base.txns ++ txn.toMap, op = "OVERWRITE",
         schema = meta, colStats = batchCs,
-        seg = path -> Some(base), bloomsExtra = bloomExtraConfs)
+        seg = path -> Some(base))
       try { commitExclusive(path, v, manifest); return v }
       catch {
         case _: FileAlreadyExistsException =>
@@ -2618,12 +2580,11 @@ object SnapshotTable {
       // indexing — dropping it would silently end range pruning
       val manifest = renderManifest(v, Seq.empty, Seq.empty, Seq.empty,
         base.stats.map(st => Stats(st.col, Seq.empty, Seq.empty)),
-        base.bloom, base.txns, base.part,
+        base.blooms, base.txns, base.part,
         op = "TRUNCATE", schema = meta,
         colStats = base.colStats.map(_.slice(Seq.empty)),
         seg = path -> Some(base),
-        partKeys = base.part.map(PartKeys.empty),
-        bloomsExtra = base.bloomsExtra)
+        partKeys = base.part.map(PartKeys.empty))
       try { commitExclusive(path, v, manifest); return v }
       catch {
         case _: FileAlreadyExistsException =>
@@ -2672,7 +2633,7 @@ object SnapshotTable {
       fail("changed the stats layout")
     if (colSpecsOf(latest) != colSpecsOf(base))
       fail("changed the typed-stats layout")
-    if (latest.bloom != base.bloom) fail("changed the bloom layout")
+    if (latest.blooms != base.blooms) fail("changed the bloom layout")
     if (latest.schemaIds != base.schemaIds ||
         latest.schemaNames != base.schemaNames ||
         latest.epoch != base.epoch ||
@@ -2741,7 +2702,7 @@ object SnapshotTable {
         // winner that already advanced this writer's watermark must
         // not regress it, or a crash-recovery replay of the newer
         // batch would re-apply it (exactly-once breaks)
-        cur.bloom, extraTxn.foldLeft(cur.txns) { case (m, (w, b)) =>
+        cur.blooms, extraTxn.foldLeft(cur.txns) { case (m, (w, b)) =>
           m.updated(w, math.max(b, m.getOrElse(w, Long.MinValue)))
         }, part = cur.part,
         // DVs carry (r20): kept files still need theirs; rows the
@@ -2754,8 +2715,7 @@ object SnapshotTable {
         colStats = colStatsWith(cur, keepIdx, newColStats),
         seg = path -> Some(cur),
         partKeys = cur.part.map(sp =>
-          extendParts(sp, cur, keepIdx, newParts.get)),
-        bloomsExtra = cur.bloomsExtra)
+          extendParts(sp, cur, keepIdx, newParts.get)))
       try { commitExclusive(path, v, manifest); return v }
       catch {
         case e: FileAlreadyExistsException =>
@@ -3016,10 +2976,8 @@ object SnapshotTable {
     val colSpecs = colSpecsForAppend(spark, preBase, statsCols,
       batch.files)
     val batchCs = computeColStats(spark, batch.files, colSpecs)
-    val (bloomConf, bloomExtraConfs) =
-      splitBloomDecl(bloomCol, bloomExpectedPerFile, bloomFpp)
-    (bloomConf.toSeq ++ bloomExtraConfs)
-      .foreach(writeBloomRows(spark, path, batch.files, _))
+    val decl = parseBloomDecl(bloomCol, bloomExpectedPerFile, bloomFpp)
+    decl.foreach(writeBloomRows(spark, path, batch.files, _))
     var attempts = 0
     while (true) {
       val prev = latestVersion(path)
@@ -3033,10 +2991,9 @@ object SnapshotTable {
           base.stats.exists(_.col == statsColEff.get),
         s"stats column changed mid-table (was ${base.stats.map(_.col)})")
       require(bloomCol.isEmpty || base.files.isEmpty ||
-          base.bloomConfs.map(_.col) ==
-            (bloomConf.toSeq ++ bloomExtraConfs).map(_.col),
+          base.blooms.map(_.col) == decl.map(_.col),
         s"bloom columns changed mid-table (was " +
-          s"${base.bloomConfs.map(_.col)}, got $bloomCol)")
+          s"${base.blooms.map(_.col)}, got $bloomCol)")
       val v = prev + 1
       val pkNew = extendParts(spec, base, base.files.indices, bparts)
       val manifest = renderManifest(v,
@@ -3050,17 +3007,14 @@ object SnapshotTable {
             CatSeq.cat2(base.stats.map(_.maxs).getOrElse(Seq.empty),
               batch.maxs))
         },
-        bloomConf.orElse(base.bloom), base.txns ++ txn.toMap,
+        if (decl.nonEmpty) decl else base.blooms, base.txns ++ txn.toMap,
         Some(spec),
         op = "APPEND", dvFiles = base.dvFiles, dvRows = base.dvRows,
         schema = appendMeta(base, path, batchCols, batch.files.length),
         colStats = colStatsWith(base, base.files.indices,
           retryCs(spark, base, batch.files, colSpecs, batchCs)),
         seg = path -> Some(base),
-        partKeys = Some(pkNew),
-        bloomsExtra =
-          if (bloomConf.isDefined) bloomExtraConfs
-          else base.bloomsExtra)
+        partKeys = Some(pkNew))
       try { commitExclusive(path, v, manifest); return v }
       catch {
         case _: FileAlreadyExistsException =>
@@ -3142,7 +3096,7 @@ object SnapshotTable {
       if (emptyBatch) Seq.empty[String]
       else spark.read.parquet(batch.files.head).schema.fieldNames.toSeq
     if (!emptyBatch)
-      ver0.bloomConfs.foreach(writeBloomRows(spark, path, batch.files, _))
+      ver0.blooms.foreach(writeBloomRows(spark, path, batch.files, _))
     val batchCs = computeColStats(spark, batch.files, colSpecsOf(ver0))
     val (plo, phi) = (spec(lo), spec(hi))
     var attempts = 0
@@ -3177,12 +3131,11 @@ object SnapshotTable {
         ver.stats.map(st => Stats(st.col,
           keepIdx.map(st.mins) ++ batch.mins,
           keepIdx.map(st.maxs) ++ batch.maxs)),
-        ver.bloom, ver.txns ++ txn.toMap, Some(spec), op = "OVERWRITE",
+        ver.blooms, ver.txns ++ txn.toMap, Some(spec), op = "OVERWRITE",
         schema = carryMeta(ver, keepIdx, batch.files.length),
         colStats = colStatsWith(ver, keepIdx, batchCs),
         seg = path -> Some(ver),
-        partKeys = Some(extendParts(spec, ver, keepIdx, bparts)),
-        bloomsExtra = ver.bloomsExtra)
+        partKeys = Some(extendParts(spec, ver, keepIdx, bparts)))
       try { commitExclusive(path, v, manifest); return v }
       catch {
         case _: FileAlreadyExistsException =>
@@ -3228,7 +3181,7 @@ object SnapshotTable {
     enforceConstraints(spark, path, batchDir)
     val batchCols = spark.read.parquet(batch.files.head)
       .schema.fieldNames.toSeq
-    ver0.bloomConfs.foreach(writeBloomRows(spark, path, batch.files, _))
+    ver0.blooms.foreach(writeBloomRows(spark, path, batch.files, _))
     val batchCs = computeColStats(spark, batch.files, colSpecsOf(ver0))
     var attempts = 0
     while (true) {
@@ -3247,13 +3200,12 @@ object SnapshotTable {
       val manifest = renderManifest(v, batch.files, batch.rows,
         batch.bytes,
         statsCol.map(c => Stats(c, batch.mins, batch.maxs)),
-        ver.bloom, ver.txns ++ txn.toMap, Some(spec),
+        ver.blooms, ver.txns ++ txn.toMap, Some(spec),
         op = "OVERWRITE",
         schema = carryMeta(ver, Seq.empty, batch.files.length),
         colStats = colStatsWith(ver, Seq.empty, batchCs),
         seg = path -> Some(ver),
-        partKeys = Some(extendParts(spec, ver, Seq.empty, bparts)),
-        bloomsExtra = ver.bloomsExtra)
+        partKeys = Some(extendParts(spec, ver, Seq.empty, bparts)))
       try { commitExclusive(path, v, manifest); return v }
       catch {
         case _: FileAlreadyExistsException =>
@@ -3311,7 +3263,7 @@ object SnapshotTable {
         s"table layout changed under the overwrite (part=${ver.part}, " +
           s"dv=${ver.dvFiles.length}) — re-run against the new base")
       if (!bloomWritten) {
-        ver.bloomConfs.foreach(writeBloomRows(spark, path, files, _))
+        ver.blooms.foreach(writeBloomRows(spark, path, files, _))
         bloomWritten = true
       }
       val pk = ver.partKeys.get
@@ -3326,12 +3278,11 @@ object SnapshotTable {
         ver.stats.map(st => Stats(st.col,
           keepIdx.map(st.mins) ++ statMins,
           keepIdx.map(st.maxs) ++ statMaxs)),
-        ver.bloom, ver.txns ++ txn.toMap, Some(spec), op = "OVERWRITE",
+        ver.blooms, ver.txns ++ txn.toMap, Some(spec), op = "OVERWRITE",
         schema = carryMeta(ver, keepIdx, files.length),
         colStats = colStatsWith(ver, keepIdx, freshCs),
         seg = path -> Some(ver),
-        partKeys = Some(extendParts(spec, ver, keepIdx, parts)),
-        bloomsExtra = ver.bloomsExtra)
+        partKeys = Some(extendParts(spec, ver, keepIdx, parts)))
       try { commitExclusive(path, v, manifest); return v }
       catch {
         case _: FileAlreadyExistsException =>
@@ -3478,12 +3429,11 @@ object SnapshotTable {
       keepIdx.map(ver.files), keepIdx.map(rows), keepIdx.map(bytes),
       ver.stats.map(st =>
         Stats(st.col, keepIdx.map(st.mins), keepIdx.map(st.maxs))),
-      ver.bloom, ver.txns, ver.part,
+      ver.blooms, ver.txns, ver.part,
       op = "DELETE", schema = carryMeta(ver, keepIdx, 0),
       colStats = ver.colStats.map(_.slice(keepIdx)),
       seg = path -> Some(ver),
-      partKeys = Some(pk.slice(keepIdx)),
-      bloomsExtra = ver.bloomsExtra))
+      partKeys = Some(pk.slice(keepIdx))))
     Some((v, dropped))
   }
 
@@ -3522,11 +3472,10 @@ object SnapshotTable {
       keepIdx.map(ver.files), keepIdx.map(rows), keepIdx.map(bytes),
       ver.stats.map(st =>
         Stats(st.col, keepIdx.map(st.mins), keepIdx.map(st.maxs))),
-      ver.bloom, ver.txns, Some(spec),
+      ver.blooms, ver.txns, Some(spec),
       op = "DELETE", schema = carryMeta(ver, keepIdx, 0),
       colStats = ver.colStats.map(_.slice(keepIdx)),
-      seg = path -> Some(ver), partKeys = Some(pk.slice(keepIdx)),
-      bloomsExtra = ver.bloomsExtra))
+      seg = path -> Some(ver), partKeys = Some(pk.slice(keepIdx))))
     (v, ver.files.length - keepIdx.length, ver.files.length)
   }
 
@@ -3783,8 +3732,9 @@ object SnapshotTable {
         s"bloom probe value $v (${v.getClass.getName}) has no " +
           "canonical bloom encoding")))
     val ver = readVersion(spark, path, version)
-    val bc = ver.bloom.getOrElse(throw new IllegalArgumentException(
-      s"version $version carries no bloom index — append with bloomCol"))
+    val bc = ver.blooms.headOption.getOrElse(
+      throw new IllegalArgumentException(
+        s"version $version carries no bloom index — append with bloomCol"))
     import spark.implicits._
     // restrict the index union (rows for every batch ever written) to
     // THIS version's manifest: a broadcast semi-join on file name —
@@ -3851,10 +3801,10 @@ object SnapshotTable {
       commitExclusive(path, v, renderManifest(v, ver.files,
         rowsOf(ver),
         bytesOf(ver),
-        Some(st), ver.bloom, ver.txns, op = "DELETE",
+        Some(st), ver.blooms, ver.txns, op = "DELETE",
         schema = carryMeta(ver, ver.files.indices, 0),
         colStats = ver.colStats,
-      seg = path -> Some(ver), bloomsExtra = ver.bloomsExtra))
+      seg = path -> Some(ver)))
       return (v, 0, ver.files.length)
     }
     val hitFiles = hitIdx.map(ver.files)
@@ -3872,7 +3822,7 @@ object SnapshotTable {
     // empty rewrite dir (only row-less part files) rather than leaving
     // it for vacuum, and the new manifest is just the carried set
     if (batch.files.nonEmpty)
-      ver.bloomConfs.foreach(writeBloomRows(spark, path, batch.files, _))
+      ver.blooms.foreach(writeBloomRows(spark, path, batch.files, _))
     else io(batchDir).deleteDir(batchDir)
     require(keepIdx.nonEmpty || batch.files.nonEmpty,
       "delete covers every row of every file — a zero-file version is " +
@@ -4015,13 +3965,12 @@ object SnapshotTable {
     commitExclusive(path, v, renderManifest(v, ver.files,
       rowsOf(ver),
       bytesOf(ver),
-      ver.stats, ver.bloom, ver.txns, ver.part,
+      ver.stats, ver.blooms, ver.txns, ver.part,
       op = "DELETE",
       dvFiles = allDv, dvRows = allDvRows,
       schema = carryMeta(ver, ver.files.indices, 0),
       colStats = ver.colStats,
-      seg = path -> Some(ver), partKeys = ver.partKeys,
-      bloomsExtra = ver.bloomsExtra))
+      seg = path -> Some(ver), partKeys = ver.partKeys))
     // maintenance hook: when a [[DvPolicy]] is set and this commit
     // pushed the table past either threshold, fold the DVs into a
     // rewrite NOW — the caller's returned version is the materialized
@@ -4085,7 +4034,7 @@ object SnapshotTable {
         val (batch, bparts) =
           writePartitionedBatch(survivors, batchDir, spec, statsCol)
         if (batch.files.isEmpty) io(batchDir).deleteDir(batchDir)
-        else ver.bloomConfs.foreach(writeBloomRows(spark, path, batch.files, _))
+        else ver.blooms.foreach(writeBloomRows(spark, path, batch.files, _))
         commitExclusive(path, v, renderManifest(v,
           keepIdx.map(ver.files) ++ batch.files,
           keepIdx.map(rows) ++ batch.rows,
@@ -4093,13 +4042,12 @@ object SnapshotTable {
           ver.stats.map(st => Stats(st.col,
             keepIdx.map(st.mins) ++ batch.mins,
             keepIdx.map(st.maxs) ++ batch.maxs)),
-          ver.bloom, ver.txns, Some(spec), op = "OPTIMIZE",
+          ver.blooms, ver.txns, Some(spec), op = "OPTIMIZE",
           schema = carryMeta(ver, keepIdx, batch.files.length),
           colStats = colStatsWith(ver, keepIdx,
             computeColStats(spark, batch.files, colSpecsOf(ver))),
           seg = path -> Some(ver),
-          partKeys = Some(extendParts(spec, ver, keepIdx, bparts)),
-          bloomsExtra = ver.bloomsExtra))
+          partKeys = Some(extendParts(spec, ver, keepIdx, bparts))))
         CompactResult(v, ver.files.length,
           keepIdx.length + batch.files.length, hitIdx.length)
       case None =>
@@ -4113,7 +4061,7 @@ object SnapshotTable {
         laidOut.write.mode("errorifexists").parquet(batchDir)
         val batch = batchFacts(spark, batchDir, statsCol)
         if (batch.files.nonEmpty)
-          ver.bloomConfs.foreach(writeBloomRows(spark, path, batch.files, _))
+          ver.blooms.foreach(writeBloomRows(spark, path, batch.files, _))
         else io(batchDir).deleteDir(batchDir)
         commitExclusive(path, v, renderManifest(v,
           keepIdx.map(ver.files) ++ batch.files,
@@ -4122,11 +4070,11 @@ object SnapshotTable {
           ver.stats.map(st => Stats(st.col,
             keepIdx.map(st.mins) ++ batch.mins,
             keepIdx.map(st.maxs) ++ batch.maxs)),
-          ver.bloom, ver.txns, op = "OPTIMIZE",
+          ver.blooms, ver.txns, op = "OPTIMIZE",
           schema = carryMeta(ver, keepIdx, batch.files.length),
           colStats = colStatsWith(ver, keepIdx,
             computeColStats(spark, batch.files, colSpecsOf(ver))),
-      seg = path -> Some(ver), bloomsExtra = ver.bloomsExtra))
+      seg = path -> Some(ver)))
         CompactResult(v, ver.files.length,
           keepIdx.length + batch.files.length, hitIdx.length)
     }
@@ -4230,7 +4178,7 @@ object SnapshotTable {
       .drop("__file", "__bin")
       .write.mode("errorifexists").parquet(batchDir)
     val batch = batchFacts(spark, batchDir, Some(st.col))
-    ver.bloomConfs.foreach(writeBloomRows(spark, path, batch.files, _))
+    ver.blooms.foreach(writeBloomRows(spark, path, batch.files, _))
     // OCC: compaction is predicate-free — ANY interleaved append
     // rebases (the new files simply are not compacted this pass)
     val rewriteCanon = rewriteFiles.map(canonFile).toSet
@@ -4333,7 +4281,7 @@ object SnapshotTable {
       .partitionBy(derived.map(_._1): _*).parquet(batchDir)
     val (batch, bparts) =
       partBatchFacts(spark, batchDir, ver.stats.map(_.col), spec)
-    ver.bloomConfs.foreach(writeBloomRows(spark, path, batch.files, _))
+    ver.blooms.foreach(writeBloomRows(spark, path, batch.files, _))
     val v = prev + 1
     commitExclusive(path, v, renderManifest(v,
       keepIdx.map(ver.files) ++ batch.files,
@@ -4342,15 +4290,14 @@ object SnapshotTable {
       ver.stats.map(st => Stats(st.col,
         keepIdx.map(st.mins) ++ batch.mins,
         keepIdx.map(st.maxs) ++ batch.maxs)),
-      ver.bloom, ver.txns, Some(spec), op = "OPTIMIZE",
+      ver.blooms, ver.txns, Some(spec), op = "OPTIMIZE",
       dvFiles = ver.dvFiles, dvRows = ver.dvRows -
         dvRowsTargeting(spark, ver, rewriteFiles.map(canonFile).toSet),
       schema = carryMeta(ver, keepIdx, batch.files.length),
       colStats = colStatsWith(ver, keepIdx,
         computeColStats(spark, batch.files, colSpecsOf(ver))),
       seg = path -> Some(ver),
-      partKeys = Some(extendParts(spec, ver, keepIdx, bparts)),
-      bloomsExtra = ver.bloomsExtra))
+      partKeys = Some(extendParts(spec, ver, keepIdx, bparts))))
     CompactResult(v, ver.files.length,
       keepIdx.length + batch.files.length, rewriteFiles.length)
   }
@@ -4408,12 +4355,12 @@ object SnapshotTable {
       .sortWithinPartitions(clusterCol)
       .write.mode("errorifexists").parquet(batchDir)
     val batch = batchFacts(spark, batchDir, Some(clusterCol))
-    ver.bloomConfs.foreach(writeBloomRows(spark, path, batch.files, _))
+    ver.blooms.foreach(writeBloomRows(spark, path, batch.files, _))
     val v = prev + 1
     commitExclusive(path, v, renderManifest(v, batch.files, batch.rows,
       batch.bytes,
       Some(Stats(clusterCol, batch.mins, batch.maxs)),
-      ver.bloom, ver.txns, bloomsExtra = ver.bloomsExtra,
+      ver.blooms, ver.txns,
       op = "OPTIMIZE",
       schema = carryMeta(ver, Seq.empty, batch.files.length),
       colStats = colStatsWith(ver, Seq.empty,
@@ -4474,23 +4421,53 @@ object SnapshotTable {
       .partitionBy(derived.map(_._1): _*).parquet(batchDir)
     val (batch, bparts) =
       partBatchFacts(spark, batchDir, Some(clusterCol), spec)
-    ver.bloomConfs.foreach(writeBloomRows(spark, path, batch.files, _))
+    ver.blooms.foreach(writeBloomRows(spark, path, batch.files, _))
     val v = prev + 1
     commitExclusive(path, v, renderManifest(v, batch.files, batch.rows,
       batch.bytes,
       Some(Stats(clusterCol, batch.mins, batch.maxs)),
-      ver.bloom, ver.txns, Some(spec),
+      ver.blooms, ver.txns, Some(spec),
       op = "OPTIMIZE",
       schema = carryMeta(ver, Seq.empty, batch.files.length),
       colStats = colStatsWith(ver, Seq.empty,
         computeColStats(spark, batch.files, colSpecsOf(ver))),
       seg = path -> Some(ver),
-      partKeys = Some(extendParts(spec, ver, Seq.empty, bparts)),
-      bloomsExtra = ver.bloomsExtra))
+      partKeys = Some(extendParts(spec, ver, Seq.empty, bparts))))
     ReclusterResult(v, ver.files.length, batch.files.length)
   }
 
   // ------------------------------------------------------------- merge
+
+  /** The `candidates` (file indexes of `ver`) whose bloom on `bc.col`
+    * might hold one of the `updates`' keys — the merge refinement.
+    * Keys probe at the TABLE's column type, canonicalized as the build
+    * side encodes them ([[BloomIndex.canonProbe]]). None = the index
+    * cannot prune: a key with no canonical encoding, or a candidate
+    * without index rows (a commit that did not declare the index wrote
+    * it) that might hold a key's old row.
+    */
+  private def bloomKeyHits(spark: SparkSession, path: String, ver: Version,
+                           bc: BloomConf,
+                           keyType: org.apache.spark.sql.types.DataType,
+                           candidates: Seq[Int], updates: DataFrame)
+      : Option[Seq[Int]] = {
+    import spark.implicits._
+    val canon = updates.select(col(bc.col).cast(keyType)).distinct()
+      .collect().map(r => BloomIndex.canonProbe(r.get(0)))
+    if (canon.exists(_.isEmpty)) return None
+    val idx = spark.read.schema(BloomIndex.indexSchema)
+      .option("recursiveFileLookup", "true")
+      .json(bloomIdxDir(path))
+      .filter(col("col") === bc.col)
+      .join(broadcast(candidates.map(ver.files).toDF("file")), "file")
+    val (hitFiles, total) =
+      BloomIndex.probeFilesTyped(idx, canon.map(_.get).toSeq)
+    if (total != candidates.length) None
+    else {
+      val hs = hitFiles.toSet
+      Some(candidates.filter(i => hs(ver.files(i))))
+    }
+  }
 
   final case class MergeResult(version: Long, filesRewritten: Int,
                                filesTotal: Int, rowsMatched: Long,
@@ -4560,22 +4537,16 @@ object SnapshotTable {
     val (lo, hi) = (u.getLong(2), u.getLong(3))
     val statsHit = ver.files.indices.filter(i =>
       st.maxs(i) >= lo && st.mins(i) <= hi)
-    val hitIdx = ver.bloom.filter(_.col == keyCol) match {
-      case Some(_) if statsHit.nonEmpty && nUpd <= 100000 =>
-        val keys = updates.select(col(keyCol).cast("long"))
-          .distinct().as[Long].collect().toSeq
-        val visible = statsHit.map(ver.files).toDF("file")
-        val idx = spark.read.schema(BloomIndex.indexSchema)
-          .option("recursiveFileLookup", "true")
-          .json(bloomIdxDir(path)).filter(col("col") === keyCol)
-          .join(broadcast(visible), "file")
-        val (hitFiles, _) = BloomIndex.probeFiles(idx, keys)
-        val hs = hitFiles.toSet
-        statsHit.filter(i => hs(ver.files(i)))
+    val tableSchema = spark.read.parquet(ver.files.head).schema
+    val hitIdx = ver.blooms.find(_.col == keyCol) match {
+      case Some(bc) if statsHit.nonEmpty && nUpd <= 100000 =>
+        bloomKeyHits(spark, path, ver, bc, tableSchema(keyCol).dataType,
+          statsHit, updates)
+          .getOrElse(statsHit)
       case _ => statsHit
     }
     val keepIdx = ver.files.indices.filterNot(hitIdx.contains)
-    val tableCols = spark.read.parquet(ver.files.head).limit(0).columns
+    val tableCols = tableSchema.fieldNames
     require(updates.columns.sorted.sameElements(tableCols.sorted),
       s"updates schema ${updates.columns.toSeq} must match table " +
         s"columns ${tableCols.toSeq}")
@@ -4594,7 +4565,7 @@ object SnapshotTable {
       .write.mode("errorifexists").parquet(batchDir)
     enforceConstraints(spark, path, batchDir)
     val batch = batchFacts(spark, batchDir, Some(st.col))
-    ver.bloomConfs.foreach(writeBloomRows(spark, path, batch.files, _))
+    ver.blooms.foreach(writeBloomRows(spark, path, batch.files, _))
     // OCC: interleaved files provably outside the update batch's
     // layout range [lo, hi] cannot hold a row any update key locates
     // (the merge contract addresses rows by key but LOCATES them by
@@ -4698,30 +4669,12 @@ object SnapshotTable {
     val hitIdx: Seq[Int] =
       if (keyDetermines) partHit
       else if (nUpd > 100000) ver.files.indices // unprunable: all files
-      else ver.bloomConfs.find(_.col == keyCol) match {
+      else ver.blooms.find(_.col == keyCol) match {
         case Some(bc) =>
-          import spark.implicits._
-          val canon = updates.select(col(keyCol)).distinct()
-            .collect().map(r => BloomIndex.canonProbe(r.get(0)))
-          if (canon.exists(_.isEmpty)) ver.files.indices
-          else {
-            val visible = ver.files.toDF("file")
-            val idx = spark.read.schema(BloomIndex.indexSchema)
-              .option("recursiveFileLookup", "true")
-              .json(bloomIdxDir(path))
-              .filter(col("col") === bc.col)
-              .join(broadcast(visible), "file")
-            val (hitFiles, total) =
-              BloomIndex.probeFilesTyped(idx, canon.map(_.get).toSeq)
-            // completeness: an unindexed live file might hold a moved
-            // key's old row — full rewrite, correct just unpruned
-            if (total != ver.files.length) ver.files.indices
-            else {
-              val hs = hitFiles.toSet
-              (partHit ++ ver.files.indices.filter(i =>
-                hs(ver.files(i)))).distinct.sorted
-            }
-          }
+          bloomKeyHits(spark, path, ver, bc, tableSchema(keyCol).dataType,
+            ver.files.indices, updates)
+            .map(hits => (partHit ++ hits).distinct.sorted)
+            .getOrElse(ver.files.indices)
         case None => throw new IllegalArgumentException(
           s"mergePartitioned on key '$keyCol' needs either every " +
             s"partition field sourced from it (spec: ${spec.describe}) " +
@@ -4747,7 +4700,7 @@ object SnapshotTable {
     val (batch, bparts) = writePartitionedBatch(newData, batchDir,
       spec, ver.stats.map(_.col))
     enforceConstraints(spark, path, batchDir)
-    ver.bloomConfs.foreach(writeBloomRows(spark, path, batch.files, _))
+    ver.blooms.foreach(writeBloomRows(spark, path, batch.files, _))
     val v = prev + 1
     commitExclusive(path, v, renderManifest(v,
       keepIdx.map(ver.files) ++ batch.files,
@@ -4756,7 +4709,7 @@ object SnapshotTable {
       ver.stats.map(st => Stats(st.col,
         keepIdx.map(st.mins) ++ batch.mins,
         keepIdx.map(st.maxs) ++ batch.maxs)),
-      ver.bloom, ver.txns ++ txn.toMap, Some(spec), op = "MERGE",
+      ver.blooms, ver.txns ++ txn.toMap, Some(spec), op = "MERGE",
       // DVs carry for the kept files; the rewritten files' DV rows
       // went INERT, so the live-delete count shrinks by exactly the
       // rows the rewrite materialized
@@ -4765,8 +4718,7 @@ object SnapshotTable {
       colStats = colStatsWith(ver, keepIdx,
         computeColStats(spark, batch.files, colSpecsOf(ver))),
       seg = path -> Some(ver),
-      partKeys = Some(extendParts(spec, ver, keepIdx, bparts)),
-      bloomsExtra = ver.bloomsExtra))
+      partKeys = Some(extendParts(spec, ver, keepIdx, bparts))))
     val matched = hitRows - dvHitRows + nUpd - batch.rows.sum
     MergeResult(v, hitIdx.length, ver.files.length, matched,
       nUpd - matched)
@@ -4809,7 +4761,7 @@ object SnapshotTable {
       bytesOf(ver),
       ver.stats.map(st =>
         if (st.col == oldName) st.copy(col = newName) else st),
-      ver.bloom.map(bc =>
+      ver.blooms.map(bc =>
         if (bc.col == oldName) bc.copy(col = newName) else bc),
       ver.txns,
       ver.part.map(p => PartSpec(p.fields.map(f =>
@@ -4822,9 +4774,7 @@ object SnapshotTable {
       colStats = ver.colStats.map(cs =>
         if (cs.col == oldName) cs.copy(col = newName) else cs),
       seg = path -> Some(ver),
-      partKeys = ver.partKeys,
-      bloomsExtra = ver.bloomsExtra.map(bc =>
-        if (bc.col == oldName) bc.copy(col = newName) else bc)))
+      partKeys = ver.partKeys))
     v
   }
 
@@ -4902,7 +4852,7 @@ object SnapshotTable {
     writeEpochFile(path, e, ids, names)
     val v = prev + 1
     commitExclusive(path, v, renderManifest(v, ver.files, rowsOf(ver),
-      bytesOf(ver), ver.stats, ver.bloom, ver.txns, ver.part,
+      bytesOf(ver), ver.stats, ver.blooms, ver.txns, ver.part,
       op = "ALTER",
       dvFiles = ver.dvFiles, dvRows = ver.dvRows,
       schema = Some(SchemaMeta(ids, names, ver.fileEpochs.get, e,
@@ -4913,8 +4863,7 @@ object SnapshotTable {
       colStats = ver.colStats.map(cs =>
         if (cs.col == name && cs.dtype == from) cs.copy(dtype = to)
         else cs),
-      seg = path -> Some(ver), partKeys = ver.partKeys,
-      bloomsExtra = ver.bloomsExtra))
+      seg = path -> Some(ver), partKeys = ver.partKeys))
     v
   }
 
@@ -4942,7 +4891,7 @@ object SnapshotTable {
     require(!ver.stats.exists(_.col == name),
       s"$name is the stats layout column — pruning depends on it; " +
         "recluster to another layout first")
-    require(!ver.bloomConfs.exists(_.col == name),
+    require(!ver.blooms.exists(_.col == name),
       s"$name is a bloom index column — key probes depend on it")
     require(!ver.part.exists(_.fields.exists(_.source == name)),
       s"$name is a hidden-partitioning source — routing depends on it")
@@ -4952,8 +4901,7 @@ object SnapshotTable {
     val v = prev + 1
     commitExclusive(path, v, renderManifest(v, ver.files, rowsOf(ver),
       bytesOf(ver),
-      ver.stats, ver.bloom, ver.txns, ver.part,
-      bloomsExtra = ver.bloomsExtra,
+      ver.stats, ver.blooms, ver.txns, ver.part,
       op = "ALTER", dvFiles = ver.dvFiles, dvRows = ver.dvRows,
       schema = Some(SchemaMeta(ids.patch(i, Nil, 1),
         names.patch(i, Nil, 1), ver.fileEpochs.get, ver.epoch,
@@ -5000,8 +4948,7 @@ object SnapshotTable {
     val v = prev + 1
     commitExclusive(path, v, renderManifest(v, ver.files, rowsOf(ver),
       bytesOf(ver),
-      ver.stats, ver.bloom, ver.txns, ver.part,
-      bloomsExtra = ver.bloomsExtra,
+      ver.stats, ver.blooms, ver.txns, ver.part,
       op = "ALTER", dvFiles = ver.dvFiles, dvRows = ver.dvRows,
       schema = Some(SchemaMeta(ids :+ newId, names :+ name,
         ver.fileEpochs.get, e, ver.droppedIds, newId,
@@ -5075,12 +5022,11 @@ object SnapshotTable {
       case Some(spec) =>
         val (batch, bparts) =
           writePartitionedBatch(data, batchDir, spec, statsCol)
-        ver.bloomConfs.foreach(writeBloomRows(spark, path, batch.files, _))
+        ver.blooms.foreach(writeBloomRows(spark, path, batch.files, _))
         commitExclusive(path, v, renderManifest(v, batch.files,
           batch.rows, batch.bytes,
           statsCol.map(c => Stats(c, batch.mins, batch.maxs)),
-          ver.bloom, ver.txns, Some(spec),
-          bloomsExtra = ver.bloomsExtra,
+          ver.blooms, ver.txns, Some(spec),
           op = "OPTIMIZE", schema = uniformMeta(batch.files.length),
           colStats = colStatsWith(ver, Seq.empty,
             computeColStats(spark, batch.files, colSpecsOf(ver))),
@@ -5096,11 +5042,11 @@ object SnapshotTable {
         }
         laidOut.write.mode("errorifexists").parquet(batchDir)
         val batch = batchFacts(spark, batchDir, statsCol)
-        ver.bloomConfs.foreach(writeBloomRows(spark, path, batch.files, _))
+        ver.blooms.foreach(writeBloomRows(spark, path, batch.files, _))
         commitExclusive(path, v, renderManifest(v, batch.files,
           batch.rows, batch.bytes,
           statsCol.map(c => Stats(c, batch.mins, batch.maxs)),
-          ver.bloom, ver.txns, bloomsExtra = ver.bloomsExtra,
+          ver.blooms, ver.txns,
           op = "OPTIMIZE",
           schema = uniformMeta(batch.files.length),
           colStats = colStatsWith(ver, Seq.empty,
@@ -5448,7 +5394,7 @@ object SnapshotTable {
         conflict(s"stats layout changed $rel")
       if (colSpecsOf(a) != colSpecsOf(b))
         conflict(s"typed-stats layout changed $rel")
-      if (a.bloomConfs != b.bloomConfs)
+      if (a.blooms != b.blooms)
         conflict(s"bloom layout changed $rel")
       if (a.schemaIds != b.schemaIds || a.schemaNames != b.schemaNames ||
           a.epoch != b.epoch || a.schemaAltered != b.schemaAltered ||
@@ -5538,12 +5484,11 @@ object SnapshotTable {
       // version number is just the next free slot in the linear log
       val v = latestVersion(path) + 1
       val manifest = renderManifest(v, files, rows, bytes, stats,
-        mainV.bloom, txns, part = mainV.part,
+        mainV.blooms, txns, part = mainV.part,
         op = s"publish:$from", dvFiles = mainV.dvFiles ++ dvAdd,
         dvRows = mainV.dvRows + (stageV.dvRows - parentV.dvRows),
         schema = schema, colStats = colStats,
-        seg = path -> Some(mainV), partKeys = partKeys,
-        bloomsExtra = mainV.bloomsExtra)
+        seg = path -> Some(mainV), partKeys = partKeys)
       try { commitExclusive(path, v, manifest); committed = v }
       catch {
         case _: FileAlreadyExistsException =>
@@ -5665,12 +5610,11 @@ object SnapshotTable {
     commitExclusive(dstPath, 1, renderManifest(1, src.files,
       rowsOf(src),
       bytesOf(src),
-      src.stats, None, Map.empty, src.part,
+      src.stats, Seq.empty, Map.empty, src.part,
       op = "CLONE", dvFiles = src.dvFiles, dvRows = src.dvRows,
       schema = carryMeta(src, src.files.indices, 0),
       colStats = src.colStats,
-      seg = dstPath -> None, partKeys = src.partKeys,
-      bloomsExtra = Seq.empty))
+      seg = dstPath -> None, partKeys = src.partKeys))
     // the clone's readers resolve naming epochs against ITS OWN log:
     // copy every epoch table the referenced files could need
     io(srcPath).listNames(logDir(srcPath))
@@ -5731,7 +5675,7 @@ object SnapshotTable {
       val manifest = renderManifest(prev + 1, src.files,
         rowsOf(src),
         bytesOf(src),
-        src.stats, src.bloom, base.txns, src.part,
+        src.stats, src.blooms, base.txns, src.part,
         op = "RESTORE", dvFiles = src.dvFiles, dvRows = src.dvRows,
         // the id fence NEVER regresses: a restore past a column add
         // must not let a later append recycle the rolled-back id —
@@ -5740,8 +5684,7 @@ object SnapshotTable {
           .map(sm => sm.copy(
             maxId = math.max(sm.maxId, base.schemaMaxId))),
         colStats = src.colStats,
-        seg = path -> Some(src), partKeys = src.partKeys,
-        bloomsExtra = src.bloomsExtra)
+        seg = path -> Some(src), partKeys = src.partKeys)
       try { commitExclusive(path, prev + 1, manifest); return prev + 1 }
       catch {
         case _: FileAlreadyExistsException =>

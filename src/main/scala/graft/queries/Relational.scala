@@ -4043,7 +4043,7 @@ object Relational {
   /** q203 — MULTI-COLUMN bloom indexes on the snapshot table: the
     * bloom declaration is a column LIST ('okey,luid'), each column
     * getting its own per-file filters maintained by the same write
-    * paths ([[graft.ops.SnapshotTable.Version.bloomsExtra]]) — the
+    * paths ([[graft.ops.SnapshotTable.Version.blooms]]) — the
     * doc_id + url shape of the curation flagship, where BOTH
     * high-cardinality keys arrive in archive order and neither is
     * the layout column. The table is date-laid-out, min/max stats
@@ -4090,8 +4090,8 @@ object Relational {
       }) { (s, d) =>
       val ver = SnapshotTable.readVersion(s, path,
         SnapshotTable.latestVersion(path))
-      require(ver.bloomConfs.map(_.col) == Seq("okey", "luid"),
-        s"expected two bloom indexes, manifest has ${ver.bloomConfs}")
+      require(ver.blooms.map(_.col) == Seq("okey", "luid"),
+        s"expected two bloom indexes, manifest has ${ver.blooms}")
       val t = s.read.format("graft_table").option("path", path).load()
       val (Array(ok), Seq(Files(p1, t1))) = ScanMetrics.collect(
         t.filter(col("okey").isin(1L, 2L, 3L))

@@ -433,14 +433,9 @@ private[v2] final class GraftBatchWrite(
     // lands on; rebaseTarget rejects a changed stats layout)
     val freshCs = GraftWriteUtil.colStatsFromFacts(
       SnapshotTable.colSpecsOf(base), written)
-    base.bloomConfs.foreach { bc =>
-      if (written.nonEmpty)
-        graft.ops.BloomIndex.buildRows(spark, written.map(_.file),
-            bc.col, bc.expectedPerFile, fpp = bc.fpp)
-          .coalesce(1).write.mode("errorifexists")
-          .json(s"$path/bloomidx/idx-${java.util.UUID.randomUUID()
-            .toString.take(12)}")
-    }
+    if (written.nonEmpty)
+      base.blooms.foreach(
+        SnapshotTable.writeBloomRows(spark, path, written.map(_.file), _))
     // OCC-rebase proof for interleaved files: the scan's STATIC
     // predicates through the same manifest pruning a scan would use —
     // a file the stats/partition/bloom metadata proves unmatched is

@@ -560,7 +560,7 @@ object GraftTableSource {
     // bloom probe: equality/IN on ANY indexed column refines whatever
     // stats/partitions kept (membership tested in executors; only the
     // complete-index case is trusted per column, mirroring scanKeysAt)
-    ver.bloomConfs.foreach { bc =>
+    ver.blooms.foreach { bc =>
       // typed: probe values keep their source kind (string/date/
       // timestamp/integral), canonicalized per BloomIndex.canonProbe
       // to the encoding the build side put. Only a COMPLETE
@@ -877,7 +877,7 @@ private[v2] final class GraftWriteBuilder(
             .orElse(marker.flatMap(_.statsCol))
             .filter(data.columns.contains)
           val bloomCol = props.get("bloom_col")
-            .orElse(base.map(_.bloomConfs.map(_.col))
+            .orElse(base.map(_.blooms.map(_.col))
               .filter(_.nonEmpty).map(_.mkString(",")))
             .orElse(marker.flatMap(_.bloomCol))
             .filter(_.split(',').map(_.trim)
@@ -1035,7 +1035,7 @@ private[v2] final class GraftStreamingWrite(
     .orElse(marker.flatMap(_.statsCol))
     .filter(schema.fieldNames.contains)
   private val bloomCol = props.get("bloom_col")
-    .orElse(base.map(_.bloomConfs.map(_.col))
+    .orElse(base.map(_.blooms.map(_.col))
       .filter(_.nonEmpty).map(_.mkString(",")))
     .orElse(marker.flatMap(_.bloomCol))
     .filter(_.split(',').map(_.trim)
@@ -1190,7 +1190,7 @@ private[v2] class GraftScanBuilder(res: GraftTableSource.Resolved)
   override def pushFilters(filters: Array[Filter]): Array[Filter] = {
     val prunable = (res.ver.stats.map(_.col)
       ++ res.ver.part.toSeq.flatMap(_.fields.map(_.source))
-      ++ res.ver.bloomConfs.map(_.col)).toSet ++
+      ++ res.ver.blooms.map(_.col)).toSet ++
       res.ver.colStats.map(_.col)
     // columns without a manifest index still benefit: predicates on
     // any row-group-translatable type ride to parquet's statistics
@@ -1548,7 +1548,7 @@ private[v2] final class GraftScan(val res: GraftTableSource.Resolved,
   override def filterAttributes()
       : Array[org.apache.spark.sql.connector.expressions.NamedReference] = {
     val cols = ((res.ver.stats.map(_.col)).toSeq
-      ++ res.ver.bloomConfs.map(_.col)
+      ++ res.ver.blooms.map(_.col)
       ++ res.ver.part.toSeq.flatMap(_.fields.map(_.source))
       ++ res.ver.colStats.map(_.col)).distinct
     // advertise ONLY columns this scan OUTPUTS (the pruned schema):

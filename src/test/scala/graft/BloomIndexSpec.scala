@@ -110,7 +110,7 @@ class BloomIndexSpec extends SparkSpec {
       FROM range(4000)""")
     val p = s"$r/db/t"
     val v1 = SnapshotTable.readVersion(spark, p, 1)
-    assert(v1.bloomConfs.map(_.col) === Seq("okey", "pkey"))
+    assert(v1.blooms.map(_.col) === Seq("okey", "pkey"))
 
     def prunedCount(cond: String): (Long, Int, Int) = {
       val (r, sc) = withScan(spark.sql(
@@ -148,7 +148,7 @@ class BloomIndexSpec extends SparkSpec {
     spark.sql("ALTER TABLE graft_mb.db.t RENAME COLUMN pkey TO part_k")
     val vr = SnapshotTable.readVersion(spark, p,
       SnapshotTable.latestVersion(p))
-    assert(vr.bloomConfs.map(_.col) === Seq("okey", "part_k"))
+    assert(vr.blooms.map(_.col) === Seq("okey", "part_k"))
     spark.sql("DROP TABLE graft_mb.db.t")
   }
 }

@@ -741,7 +741,7 @@ class GraftCatalogSpec extends SparkSpec {
     val ver = SnapshotTable.readVersion(spark, p, 1)
     assert(ver.part.exists(sp =>
       sp.source == "key" && sp.transform == "identity"))
-    assert(ver.bloom.exists(_.col == "b"))
+    assert(ver.blooms.headOption.exists(_.col == "b"))
     spark.sql("DROP TABLE graft.db.m")
 
     // an unsupported partition source type rejects at CREATE (typed

@@ -261,7 +261,7 @@ class GraftTableSourceSpec extends SparkSpec {
       .option("path", path).option("write_partitions", "2").save()
     val ver = SnapshotTable.readVersion(spark, path, 2)
     assert(ver.stats.exists(_.col == "k") && ver.stats.get.mins.length === 6)
-    assert(ver.bloom.exists(_.col == "v"))
+    assert(ver.blooms.headOption.exists(_.col == "v"))
     val df = spark.read.format("graft_table").option("path", path).load()
     assert(df.count() === 150)
     assert(df.agg(sum("v")).head.getLong(0) === (1L to 150L).map(_ * 2).sum)

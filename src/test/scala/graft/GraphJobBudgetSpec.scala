@@ -40,6 +40,6 @@ class GraphJobBudgetSpec extends SparkSpec {
       n = ConnectedComponents.components(edges).count()
     }
     assert(n === 41)
-    assert(jobs.size <= 10, jobs)
+    assert(jobs.size <= 8, jobs)
   }
 }

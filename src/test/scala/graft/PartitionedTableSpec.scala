@@ -408,7 +408,7 @@ class PartitionedTableSpec extends SparkSpec {
       (1L to 10L).map(i => (i, 1L)).toDF("id", "day"), path, spec,
       bloomCol = Some("id"))
     // second append OMITS bloomCol: allowed, the manifest still carries
-    // base.bloom, but the new file has no index rows
+    // base.blooms, but the new file has no index rows
     SnapshotTable.appendPartitioned(
       (11L to 20L).map(i => (i, 2L)).toDF("id", "day"), path, spec)
     val before = SnapshotTable.readVersion(spark, path, 2)

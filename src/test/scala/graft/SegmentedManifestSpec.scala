@@ -156,6 +156,57 @@ class SegmentedManifestSpec extends SparkSpec {
     }
   }
 
+  test("a two-column bloom declaration commits one list encoding " +
+      "(bloom_cols/bloom_expecteds/bloom_fpps), inline and segmented") {
+    def listForm(json: String): Unit = {
+      assert(json.contains("\"bloom_cols\":[\"k\",\"x\"]") &&
+        json.contains("\"bloom_expecteds\":[-1,-1]") &&
+        json.contains("\"bloom_fpps\":[0.01,0.01]"), json)
+      assert(!json.contains("\"bloom_col\"") &&
+        !json.contains("\"bloom_expected\"") &&
+        !json.contains("\"bloom_fpp\"") &&
+        !json.contains("_extra\""), json)
+    }
+    val want = Seq(SnapshotTable.BloomConf("k", -1L),
+      SnapshotTable.BloomConf("x", -1L))
+    val inline = freshPath()
+    SnapshotTable.append(df(0, 100), inline, 2, statsCol = Some("k"),
+      bloomCol = Some("k, x"))
+    listForm(headerText(inline, 1))
+    val v1 = SnapshotTable.readVersion(spark, inline, 1)
+    assert(v1.segRefs.isEmpty && v1.blooms === want)
+    withSegConf(3) {
+      val seg = freshPath()
+      SnapshotTable.append(df(0, 200), seg, 4, statsCol = Some("k"),
+        bloomCol = Some("k,x"))
+      listForm(headerText(seg, 1))
+      val sv = SnapshotTable.readVersion(spark, seg, 1)
+      assert(sv.segRefs.exists(_.nonEmpty) && sv.blooms === want)
+      // a later commit that declares nothing carries the list whole
+      SnapshotTable.deleteStatsRange(spark, seg, 0, 9)
+      listForm(headerText(seg, 2))
+      assert(SnapshotTable.readVersion(spark, seg, 2).blooms === want)
+    }
+  }
+
+  test("a manifest in the removed first-column bloom form (bloom_col) " +
+      "fails loudly, naming the table") {
+    val path = freshPath()
+    SnapshotTable.append(df(0, 20), path, 1, bloomCol = Some("k"))
+    val h = headerText(path, 1)
+    assert(h.contains("\"bloom_cols\":"), h)
+    // the same version, re-encoded in the pre-unification form
+    Files.writeString(Paths.get(path, "log", "v1.json"),
+      h.replace("\"bloom_cols\":[\"k\"]", "\"bloom_col\":\"k\"")
+        .replace("\"bloom_expecteds\":[-1]", "\"bloom_expected\":-1")
+        .replace("\"bloom_fpps\":[0.01]", "\"bloom_fpp\":0.01"))
+    val e = intercept[IllegalStateException] {
+      SnapshotTable.readVersion(spark, path, 1)
+    }
+    assert(e.getMessage.contains(path) &&
+      e.getMessage.contains("bloom_col"), e.getMessage)
+  }
+
   test("hidden-partitioned + typed-stats table stays fully functional " +
       "segmented: partition pruning, typed pruning, REPLACE WHERE") {
     withSegConf(3) {

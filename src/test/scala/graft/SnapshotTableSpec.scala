@@ -612,6 +612,64 @@ class SnapshotTableSpec extends SparkSpec {
     assert(e.getMessage.contains("unique"))
   }
 
+  test("merge keyed on the SECOND column of a bloom list is bloom-" +
+    "refined: fewer files rewrite than the stats hit") {
+    import spark.implicits._
+    val path = freshPath()
+    // day = k: the update batch's day range [100, 900] stats-hits most
+    // files, while keys 100 and 900 live in two of them
+    val base = (0L until 1000L).map(k => (k * 10 + 1, k, k))
+      .toDF("a", "k", "day")
+    SnapshotTable.append(base, path, 8, statsCol = Some("day"),
+      bloomCol = Some("a,k"))
+    val ver = SnapshotTable.readVersion(spark, path, 1)
+    assert(ver.blooms.map(_.col) === Seq("a", "k"))
+    val st = ver.stats.get
+    val statsHit = ver.files.indices
+      .count(i => st.maxs(i) >= 100 && st.mins(i) <= 900)
+    assert(statsHit > 2, s"stats hit only $statsHit files")
+    val ups = Seq((-1L, 100L, 100L), (-2L, 900L, 900L)).toDF("a", "k", "day")
+    val res = SnapshotTable.merge(spark, path, ups, "k")
+    assert(res.filesRewritten < statsHit,
+      s"merge rewrote ${res.filesRewritten} of $statsHit stats-hit files")
+    assert(res.rowsMatched === 2 && res.rowsInserted === 0)
+    val (s2, _, rows2) = SnapshotTable.scanAt(spark, path, 2)
+    assert(rows2 === 1000 && s2.count() === 1000)
+    assert(s2.filter(col("a") < 0).select("k").as[Long].collect().sorted
+      === Array(100L, 900L))
+  }
+
+  test("merge trusts the bloom only over indexed files and probes keys " +
+    "in the index's encoding") {
+    import spark.implicits._
+    // an append that declares no bloom leaves its file unindexed: the
+    // key living there must be replaced, not duplicated
+    val path = freshPath()
+    SnapshotTable.append((0L until 400L).map(k => (k, k, 0L))
+      .toDF("k", "day", "payload"), path, 4, statsCol = Some("day"),
+      bloomCol = Some("k"))
+    SnapshotTable.append((400L until 500L).map(k => (k, k, 0L))
+      .toDF("k", "day", "payload"), path, 1, statsCol = Some("day"))
+    SnapshotTable.merge(spark, path,
+      Seq((10L, 10L, 1L), (450L, 450L, 1L)).toDF("k", "day", "payload"), "k")
+    val (s3, _, _) = SnapshotTable.scanAt(spark, path, 3)
+    assert(s3.count() === 500)
+    assert(s3.filter(col("k") === 450).select("payload").as[Long]
+      .collect().toSeq === Seq(1L))
+    // a TIMESTAMP key: the bloom holds epoch micros, so must the probe
+    val ts = freshPath()
+    def tsRows(lo: Long, hi: Long, payload: Long) = spark.range(lo, hi)
+      .select(timestamp_seconds(col("id")).as("t"), col("id").as("day"),
+        lit(payload).as("payload"))
+    SnapshotTable.append(tsRows(0, 400, 0L), ts, 4, statsCol = Some("day"),
+      bloomCol = Some("t"))
+    SnapshotTable.merge(spark, ts, tsRows(100, 101, 1L), "t")
+    val (t2, _, _) = SnapshotTable.scanAt(spark, ts, 2)
+    assert(t2.count() === 400)
+    assert(t2.filter(col("day") === 100).select("payload").as[Long]
+      .collect().toSeq === Seq(1L))
+  }
+
   test("expire drops old versions' manifests and exactly their " +
     "unreferenced files; retained versions read unchanged") {
     import spark.implicits._
