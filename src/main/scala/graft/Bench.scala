@@ -1,5 +1,9 @@
 package graft
 
+import java.lang.management.ManagementFactory
+import scala.jdk.CollectionConverters._
+import org.apache.spark.metrics.source.CodegenMetrics
+
 /** Benchmark entry point (A8 — the grand-totals harness).
   * Each query's `setup` runs once, untimed (its seconds go to stderr
   * only), then one warmup pass (JVM/codegen startup absorbed)
@@ -14,6 +18,13 @@ package graft
   * Emits ONE JSON line with per-query median seconds; a failed query is
   * recorded as `-1` in `queries`, listed in `failed`, and flips the exit
   * code to 1 — failures must never masquerade as timings.
+  *
+  * Every `[bench]` stderr line also carries the number of classes the run
+  * compiled (Janino, the `CodegenMetrics` compile count). After the
+  * warm-up a query should compile nothing: the codegen class cache
+  * (`GraftSession`) holds the suite's working set, so a timed pass that
+  * compiles is listed at the end as a recompile. Compile counts stay out
+  * of the JSON line, where `parsePrevTimes` would read them as timings.
   */
 object Bench {
 
@@ -123,18 +134,25 @@ object Bench {
     val spark = GraftSession.build(cpus)
     val defs = SparkEntry.defs
 
-    def runOnce(name: String): Either[String, Double] = {
+    // classes compiled so far in this JVM; queries run one at a time, so
+    // the delta around a run is that run's count
+    def compiled(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+
+    def runOnce(name: String): (Either[String, Double], Long) = {
       val t0 = System.nanoTime()
+      val c0 = compiled()
       try {
         defs(name).fn(spark, sfDir)
           .write.format("noop").mode("overwrite").save()
         val took = (System.nanoTime() - t0) / 1e9
-        System.err.println(f"[bench] $name%-24s ${took}%8.2f s")
-        Right(took)
+        val n = compiled() - c0
+        System.err.println(f"[bench] $name%-24s ${took}%8.2f s $n%5d compiled")
+        (Right(took), n)
       } catch {
         case e: Throwable =>
           System.err.println(s"[bench] $name FAILED: ${e.getMessage}")
-          Left(Option(e.getMessage).getOrElse(e.getClass.getName).take(200))
+          (Left(Option(e.getMessage).getOrElse(e.getClass.getName).take(200)),
+            compiled() - c0)
       } finally {
         // r21 measurement fix: drop the query's registered in-query
         // caches after the action, so no cache outlives its query —
@@ -162,10 +180,13 @@ object Bench {
     // parsePrevTimes would read any "q…":number pair as a timing.
     def setUp(name: String): Option[String] = {
       val t0 = System.nanoTime()
+      val c0 = compiled()
       try {
         defs(name).setup(spark, sfDir)
         val took = (System.nanoTime() - t0) / 1e9
-        System.err.println(f"[bench] $name%-24s ${took}%8.2f s setup")
+        val n = compiled() - c0
+        System.err.println(
+          f"[bench] $name%-24s ${took}%8.2f s $n%5d compiled setup")
         None
       } catch {
         case e: Throwable =>
@@ -173,16 +194,32 @@ object Bench {
           Some(Option(e.getMessage).getOrElse(e.getClass.getName).take(200))
       } finally GraftSession.sweepCaches(spark)
     }
+    val c0 = compiled()
     val setupFailed: Map[String, String] =
       names.flatMap(n => setUp(n).map(n -> _)).toMap
     val runnable = names.filterNot(setupFailed.contains)
-    runnable.foreach(runOnce) // warmup: absorb JVM/codegen/IO-cache startup
+    val setupCompiled = compiled() - c0
+    // warmup: absorb JVM/codegen/IO-cache startup
+    val warmCompiled = runnable.map(runOnce(_)._2).sum
 
     // Interleave iterations (pass 1 of all queries, then pass 2, ...) so a
     // multi-minute environmental stall cannot poison all samples of one
     // query; the median then discards it.
-    val samples: Seq[Seq[(String, Either[String, Double])]] =
+    val passes: Seq[Seq[(String, (Either[String, Double], Long))]] =
       (1 to iterations).map(_ => runnable.map(n => n -> runOnce(n)))
+    val samples: Seq[Seq[(String, Either[String, Double])]] =
+      passes.map(_.map { case (n, (r, _)) => n -> r })
+    val recompiles = for {
+      (pass, i) <- passes.zipWithIndex
+      (n, (_, c)) <- pass if c > 0
+    } yield s"$n (pass ${i + 1}: $c)"
+    System.err.println(s"[bench] classes compiled: setup $setupCompiled, " +
+      s"warm-up $warmCompiled, timed passes " +
+      passes.map(_.map(_._2._2).sum).mkString(" + ") +
+      s"; total ${compiled() - c0}")
+    if (recompiles.nonEmpty)
+      System.err.println(
+        s"[bench] timed passes that compiled: ${recompiles.mkString(", ")}")
     val results: Seq[(String, Either[String, Double])] = names.map { n =>
       val runs = setupFailed.get(n).map(Left(_)).toSeq ++
         samples.flatMap(_.find(_._1 == n).map(_._2))
@@ -294,6 +331,16 @@ object Bench {
         line + "\n", java.nio.file.StandardOpenOption.CREATE,
         java.nio.file.StandardOpenOption.APPEND)
     } catch { case _: java.io.IOException => () } // read-only cwd: skip
+    // what the suite leaves resident: the codegen cache's classes live in
+    // Metaspace, so a cache sized past the working set shows up here
+    System.gc()
+    val mb = 1L << 20
+    val heapMb = ManagementFactory.getMemoryMXBean.getHeapMemoryUsage.getUsed / mb
+    val metaMb = ManagementFactory.getMemoryPoolMXBeans.asScala
+      .find(_.getName == "Metaspace").map(_.getUsage.getUsed / mb)
+      .getOrElse(-1L)
+    System.err.println(
+      s"[bench] after a full GC: heap used $heapMb MB, Metaspace used $metaMb MB")
     spark.stop()
     if (nFail > 0) sys.exit(1)
   }

@@ -21,7 +21,12 @@ import org.apache.spark.sql.SparkSession
   *     (reference generator.py:716-717);
   *   - shuffle partitions sized to the local core count, not the 200
   *     default (on a real cluster this would be set per-job to match
-  *     executor cores × nodes).
+  *     executor cores × nodes);
+  *   - a codegen class cache that holds the suite's working set, so each
+  *     generated class is compiled once per JVM. `graft.Bench` prints
+  *     the classes each run compiled; after the warm-up a query should
+  *     compile none (BASELINE.md, "Compile census", lists the few that
+  *     do and why).
   */
 object GraftSession {
   def build(cpus: String): SparkSession = {
@@ -65,6 +70,27 @@ object GraftSession {
       // q172 1.9→1.5 s at local[32], neutral on the non-cached suite.
       .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning",
         "true")
+      // Compiled generated classes live in a JVM-wide LRU keyed by their
+      // source, Spark default 100 entries. The query_mix trio
+      // (q115/q126/q68) alone compiles 121 at sf0.001 on local[4], so the
+      // LRU cycled and every later pass recompiled 87-89 of them in
+      // Janino; with this cache a later pass compiles 0 (94 -> 0 per run
+      // on perfbench's query_mix tables, where Janino took about a
+      // quarter of executor-thread samples). Census (BASELINE.md): one
+      // pass of all 215 queries at sf0.001 compiles 2,622 distinct
+      // classes, plus 135 that a later pass compiles afresh; 4096 covers
+      // both with headroom. The cache
+      // holds classes, never data: after that census a full GC leaves
+      // 256 MB of heap and 252 MB of Metaspace in use, against 175 and
+      // 233 MB at the default size, which recompiled 2,892 classes on
+      // the census's timed pass.
+      .config("spark.sql.codegen.cache.maxEntries", "4096")
+      // Keep the whole-stage stage id out of the generated class name:
+      // AQE numbers stages in the order they materialize, which varies
+      // from run to run, so the same pipeline under a new id was a new
+      // cache key and compiled again. The id stays in the plan and in
+      // the source comment.
+      .config("spark.sql.codegen.useIdInClassName", "false")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

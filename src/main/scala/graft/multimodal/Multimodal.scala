@@ -2,7 +2,7 @@ package graft.multimodal
 
 import java.awt.image.BufferedImage
 import javax.imageio.ImageIO
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 

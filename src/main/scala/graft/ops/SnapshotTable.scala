@@ -1265,12 +1265,12 @@ object SnapshotTable {
                              // indexes would silently drop them from
                              // the successor manifest
                              blooms: Seq[BloomConf],
-                             txns: Map[String, Long] = Map.empty,
+                             txns: Map[String, Long],
                              part: Option[PartSpec] = None,
-                             op: String = "",
+                             op: String,
                              dvFiles: Seq[String] = Seq.empty,
                              dvRows: Long = 0L,
-                             schema: Option[SchemaMeta] = None,
+                             schema: Option[SchemaMeta],
                              // NO default: every commit path must say
                              // what happens to the typed stats — a
                              // defaulted Seq.empty would silently drop
@@ -1323,7 +1323,7 @@ object SnapshotTable {
                               op: String, dvFiles: Seq[String],
                               dvRows: Long, schema: Option[SchemaMeta],
                               colStats0: Seq[ColStats],
-                              partKeys: Option[PartKeys] = None)
+                              partKeys: Option[PartKeys])
       : String = {
     // EVERY positional array gets indexed per element below (carry
     // verification, fresh-segment extraction) — commit paths build
@@ -1750,14 +1750,14 @@ object SnapshotTable {
   private def renderInline(v: Long, files: Seq[String], rows: Seq[Long],
                            bytes: Seq[Long], stats: Option[Stats],
                            blooms: Seq[BloomConf],
-                           txns: Map[String, Long] = Map.empty,
-                           part: Option[PartSpec] = None,
-                           op: String = "",
-                           dvFiles: Seq[String] = Seq.empty,
-                           dvRows: Long = 0L,
-                           schema: Option[SchemaMeta] = None,
+                           txns: Map[String, Long],
+                           part: Option[PartSpec],
+                           op: String,
+                           dvFiles: Seq[String],
+                           dvRows: Long,
+                           schema: Option[SchemaMeta],
                            colStats: Seq[ColStats],
-                           partKeys: Option[PartKeys] = None)
+                           partKeys: Option[PartKeys])
       : String = {
     val fields = scala.collection.mutable.ArrayBuffer(
       "version" -> v.toString,
@@ -3795,7 +3795,6 @@ object SnapshotTable {
       st.maxs(i) >= lo && st.mins(i) <= hi)
     val keepIdx = ver.files.indices.filterNot(hitIdx.contains)
     val v = prev + 1
-    def carried(xs: Seq[Long]): Seq[Long] = keepIdx.map(xs)
     if (hitIdx.isEmpty) {
       // nothing intersects: the new version is the old file list
       commitExclusive(path, v, renderManifest(v, ver.files,
@@ -4151,11 +4150,9 @@ object SnapshotTable {
     def fileOf(r: Row): String = r.getAs[String]("file")
     // rewrite a bin only when merging buys something: ≥2 files and at
     // least one genuinely under-sized — the convergence rule above
-    val (multi, single) = byBin.partition { case (_, rs) =>
+    val multi = byBin.filter { case (_, rs) =>
       rs.length > 1 && rs.exists(_.getAs[Long]("bytes") < minBytes)
     }
-    val carriedSet = single.flatMap(_._2).map(fileOf).toSet
-    val carriedIdx = ver.files.indices.filter(i => carriedSet(ver.files(i)))
     if (multi.isEmpty) // already compact: nothing to commit
       return CompactResult(prev, ver.files.length, ver.files.length, 0)
     // bin ids re-indexed 0..B-1 in layout order for the shuffle key
@@ -4525,7 +4522,6 @@ object SnapshotTable {
     require(updates.columns.contains(keyCol) &&
         updates.columns.contains(st.col),
       s"updates must carry $keyCol and the layout column ${st.col}")
-    import spark.implicits._
     // small-side facts in ONE aggregate
     val u = updates.agg(count(lit(1)), count_distinct(col(keyCol)),
       min(col(st.col)).cast("long"), max(col(st.col)).cast("long"))
@@ -4545,13 +4541,11 @@ object SnapshotTable {
           .getOrElse(statsHit)
       case _ => statsHit
     }
-    val keepIdx = ver.files.indices.filterNot(hitIdx.contains)
     val tableCols = tableSchema.fieldNames
     require(updates.columns.sorted.sameElements(tableCols.sorted),
       s"updates schema ${updates.columns.toSeq} must match table " +
         s"columns ${tableCols.toSeq}")
     val rows = rowsOf(ver)
-    val bytes = bytesOf(ver)
     val hitRows = hitIdx.map(rows).sum
     val newData =
       if (hitIdx.isEmpty) updates.select(tableCols.map(col): _*)
@@ -5953,7 +5947,6 @@ object SnapshotTable {
     }
     val removed = a.files.filterNot(bSet)
     val added = b.files.filterNot(aSet)
-    import spark.implicits._
     // DV address deltas, restricted to files both versions still list
     // (file-level churn is handled by the DV-aware reads below);
     // canonical form — DV addresses and manifest entries render paths

@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.Dataset
 import org.apache.spark.sql.functions._
 import graft.model.{StacCollection, StacItem}
 

@@ -3,7 +3,6 @@ package graft.pipeline
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
 import java.nio.file.{Files, Path, Paths}
-import scala.jdk.CollectionConverters._
 
 /** S8/S10 — environment/config sourcing and API readiness.
   *

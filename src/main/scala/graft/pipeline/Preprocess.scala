@@ -551,7 +551,7 @@ object Preprocess {
         val warped = graft.functions.Reproject.toGeographic(
           bands.map { case (b, g) => b.name -> g },
           xs, ys.toArray, s"EPSG:$epsg")
-        val byName = bands.map { case (b, g) => b.name -> b }.toMap
+        val byName = bands.map { case (b, _) => b.name -> b }.toMap
         val dLon = warped.lons(1) - warped.lons(0)
         val dLat = warped.lats(0) - warped.lats(1)
         (warped.bands.map { case (n, g) => byName(n) -> g },

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.{QueryDef, Tables}
 import graft.functions.Scalars._
-import graft.model.{StacCatalog, StacCollection, StacItem, StacAsset}
+import graft.model.{StacCatalog, StacCollection, StacItem}
 import graft.ops.StacOps
 import graft.sink.StacJsonSink
 

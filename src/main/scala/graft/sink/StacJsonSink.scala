@@ -1,7 +1,9 @@
 package graft.sink
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.internal.SQLConf
+import org.apache.spark.sql.types.StructType
 import graft.Json
 import graft.model.{StacCatalog, StacCollection, StacItem, StacAsset}
 
@@ -79,6 +81,23 @@ object StacJsonSink {
       .add("extra", MapType(StringType, StringType))
   }
 
+  /** `spark.read.json` of one catalog glob. A read of a single path first
+    * probes it for a file-stream sink's `_spark_metadata` log; on an
+    * unexpanded glob that probe's `getFileStatus` throws, and Spark logs
+    * the FileNotFoundException with its stack trace on every catalog
+    * read. A catalog tree is never sink output, so the probe is off while
+    * the relation resolves (eagerly, inside `json`). The lock keeps two
+    * concurrent catalog reads from restoring the setting out of order.
+    */
+  private def readJson(spark: SparkSession, schema: StructType,
+                       glob: String): DataFrame = this.synchronized {
+    val key = SQLConf.FILESTREAM_SINK_METADATA_IGNORED.key
+    val prior = spark.conf.getOption(key)
+    spark.conf.set(key, "true")
+    try spark.read.schema(schema).option("multiLine", true).json(glob)
+    finally prior.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   def readItems(spark: SparkSession, root: String): Dataset[StacItem] = {
     import spark.implicits._
     import org.apache.spark.sql.functions._
@@ -89,8 +108,7 @@ object StacJsonSink {
       .add("datetime", StringType)
       .add("properties", MapType(StringType, StringType))
       .add("assets", ArrayType(assetSchema))
-    spark.read.schema(schema).option("multiLine", true)
-      .json(s"$root/*/*/*.json")
+    readJson(spark, schema, s"$root/*/*/*.json")
       .withColumn("assets", coalesce(col("assets"),
         array().cast(ArrayType(assetSchema))))
       .withColumn("assets", transform(col("assets"), a =>
@@ -120,8 +138,7 @@ object StacJsonSink {
           .add("interval", ArrayType(ArrayType(StringType)))))
       .add("custom:hemisphere", StringType)
       .add("assets", ArrayType(assetSchema))
-    spark.read.schema(schema).option("multiLine", true)
-      .json(s"$root/*/collection.json")
+    readJson(spark, schema, s"$root/*/collection.json")
       .select(col("id"), col("title"), col("description"), col("license"),
         element_at(col("extent.spatial.bbox"), 1).as("bbox"),
         element_at(element_at(col("extent.temporal.interval"), 1), 1)

@@ -73,7 +73,7 @@ object BloscLz {
           dist = ((in(ip) & 0xFF) << 8) + (in(ip + 1) & 0xFF) + MaxDistance
           ip += 2
         }
-        var ref = op - dist - 1
+        val ref = op - dist - 1
         require(ref >= outOff, s"blosclz: match distance $dist underruns output")
         require(op + mlen <= opEnd, "blosclz: match overruns output")
         var k = 0

@@ -1,7 +1,6 @@
 package graft.source
 
 import java.nio.file.{Files, Path, Paths}
-import scala.jdk.CollectionConverters._
 
 /** S2/S3/P10 — input discovery (ref utils.py:85-119, utils.py:34-44,
   * preprocess.py:49-74): directory → extension-filtered listing, single

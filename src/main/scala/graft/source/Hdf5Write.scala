@@ -445,8 +445,8 @@ object Hdf5Write {
                      halfVars: Set[String],
                      regFilter: Option[String],
                      mkSink: Long => WSink,
-                     eaPageBits: Int = EaPageBits,
-                     sharedDatatype: Boolean = false,
+                     eaPageBits: Int,
+                     sharedDatatype: Boolean,
                      enumVars: Set[String] = Set.empty): Unit = {
     val dimLen = dims.toMap
     require(v4Index == 3 || v4Index == 4 || v4Index == 5,
@@ -1068,7 +1068,7 @@ object Hdf5Write {
       }
     }
     def writeDataspace(b: W, shape: Seq[Int],
-                       unlim: Seq[Boolean] = Seq.empty): Unit = {
+                       unlim: Seq[Boolean]): Unit = {
       val hasMax = unlim.exists(identity)
       val body = 8 + shape.length * 8 + (if (hasMax) shape.length * 8 else 0)
       msgHeader(b, 0x0001, body)
@@ -1080,7 +1080,6 @@ object Hdf5Write {
         b.putLong(if (u) -1L else d.toLong) // −1 = UNLIMITED
       }
     }
-    def writeDoubleType(b: W): Unit = writeFloatType(b, 8)
     /** IEEE float datatype message: float64, or binary16 when elem = 2.
       * With `sharedDatatype`, float64 becomes a SHARED record (message
       * flags bit 1; body = version 3, type 2, committed-type address) —

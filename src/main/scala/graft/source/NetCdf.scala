@@ -78,7 +78,6 @@ object NetCdf {
     val shape = h.shape(v)
     val n = shape.product
     val out = new Array[Double](n)
-    val elemSize = sizeOf(v.ncType)
     val isRec = v.dimIds.nonEmpty && h.dims(v.dimIds.head).isRecord
     if (!isRec) {
       readSlab(bytes, v.begin, v.ncType, n, out, 0)

@@ -1,7 +1,6 @@
 package graft.source
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions.col
 
 /** S1/P1/P2 — NetCDF scan as a Spark source: `binaryFile` file-source →
   * per-task classic-format decode → tidy rows. The decode happens inside

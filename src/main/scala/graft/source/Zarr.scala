@@ -451,7 +451,7 @@ object ZarrCodec {
         val b = ByteBuffer.allocate(vals.length * 2).order(order)
         vals.foreach(v => b.putShort(v.toShort)); b.array()
       case "i1" | "u1" => vals.map(v => v.toInt.toByte)
-      case other => throw new IllegalArgumentException(
+      case _ => throw new IllegalArgumentException(
         s"unsupported zarr dtype $dtype for filter re-encode")
     }
   }
@@ -789,7 +789,7 @@ object ZarrCodec {
           val v = buf.getLong
           if (v == Long.MinValue) Double.NaN else v.toDouble
         }
-      case other => throw new IllegalArgumentException(
+      case _ => throw new IllegalArgumentException(
         s"unsupported zarr dtype $dtype")
     }
   }
@@ -1028,7 +1028,6 @@ object ZarrSource {
     * flattened C-order).
     */
   def read(spark: SparkSession, store: String, array: String): DataFrame = {
-    import spark.implicits._
     val meta = ZarrCodec.readMeta(Paths.get(store)).find(_.name == array)
       .getOrElse(throw new IllegalArgumentException(
         s"no array '$array' in $store"))

@@ -1,7 +1,6 @@
 package graft.source
 
 import java.nio.file.{Files, Path}
-import scala.jdk.CollectionConverters._
 import com.fasterxml.jackson.databind.ObjectMapper
 
 /** S7/F16 — Zarr store probe (ref stac/utils.py:119-133): a zarr store

@@ -1,6 +1,5 @@
 package graft.source.v2
 
-import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.broadcast.Broadcast

@@ -1,6 +1,13 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.ConcurrentLinkedQueue
+import scala.jdk.CollectionConverters._
+import org.apache.logging.log4j.{Level, LogManager}
+import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+import org.apache.logging.log4j.core.appender.AbstractAppender
+import org.apache.logging.log4j.core.config.Property
+import org.apache.spark.sql.internal.SQLConf
 import graft.model.{StacAsset, StacCatalog, StacCollection, StacItem}
 import graft.ops.StacOps
 import graft.sink.StacJsonSink
@@ -99,6 +106,40 @@ class StacSpec extends SparkSpec {
     assert(m.temporal_start === "2025-01-01T00:00:00Z")     // min of both
     assert(m.temporal_end === "2025-01-20T00:00:00Z")       // max of both
     assert(m.bbox === Seq(10.0, 42.0, 30.0, 58.0))          // envelope
+  }
+
+  test("catalog reads log no sink-metadata probe failure and add no job") {
+    val root = Files.createTempDirectory("graft-stac-log").toString
+    // 40 item files: past the 32-path parallel-listing threshold
+    StacJsonSink.write(root, StacCatalog("cat", "d", Seq("c")),
+      Seq(collection("c")), (1 to 40).map(d => item(s"i$d", "c", d % 28 + 1)).toDS())
+    val events = new ConcurrentLinkedQueue[String]()
+    val capture = new AbstractAppender("catalog-read-capture", null, null,
+        true, Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = events.add(
+        s"${e.getLevel} ${e.getLoggerName}: ${e.getMessage.getFormattedMessage}" +
+          Option(e.getThrown).fold("")(t => s" [${t.getClass.getName}]"))
+    }
+    capture.start()
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val rootLogger = ctx.getConfiguration.getRootLogger
+    rootLogger.addAppender(capture, Level.WARN, null)
+    ctx.updateLoggers()
+    val jobs = try jobsOf("catalog read") {
+      assert(StacJsonSink.readItems(spark, root).collect().length === 40)
+      assert(StacJsonSink.readCollections(spark, root).collect().length === 1)
+    } finally {
+      rootLogger.removeAppender(capture.getName)
+      ctx.updateLoggers()
+      capture.stop()
+    }
+    assert(events.isEmpty, events.asScala.mkString("\n"))
+    // the glob's own listing job (40 paths), then one job per collect
+    assert(jobs.size === 3, jobs)
+    assert(jobs.head.startsWith("Listing leaf files"), jobs)
+    // the probe switch is scoped to the read
+    assert(spark.conf.getOption(SQLConf.FILESTREAM_SINK_METADATA_IGNORED.key)
+      .forall(_ == "false"))
   }
 
   test("J1 merge keeps brand-new collections from the incoming side") {

@@ -1,7 +1,11 @@
 #!/bin/bash
 # Run a graft main class directly against compiled classes (skips sbt JVM
 # startup). Usage: tools/run.sh graft.Verify <args...>
+# Runs the classes of the checkout this script sits in, wherever it is
+# called from, against the jars of the Spark installation at SPARK_HOME.
 set -e
+ROOT="$(cd "$(dirname "${BASH_SOURCE[0]}")/.." && pwd)"
+SPARK_JARS="${SPARK_HOME:?set SPARK_HOME to the Spark installation}/jars"
 CLASS="$1"; shift
 ADDOPENS=""
 for p in java.base/java.lang java.base/java.lang.invoke \
@@ -18,5 +22,5 @@ exec java $ADDOPENS \
   -Xmx${SPARK_DRIVER_MEM:-8g} \
   -XX:ReservedCodeCacheSize=1g \
   -XX:+UseCodeCacheFlushing \
-  -cp "/root/repo/target/scala-2.13/classes:/opt/spark/jars/*" \
+  -cp "$ROOT/target/scala-2.13/classes:$SPARK_JARS/*" \
   "$CLASS" "$@"
